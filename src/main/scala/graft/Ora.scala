@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Oracle-stability helpers.
   *
@@ -29,24 +28,13 @@ import org.apache.spark.sql.types.DecimalType
   * (CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)).
   */
 object Ora {
-  private val Dec = DecimalType(38, 6)
-
-  /** r20 opt: the exact-decimal sum rides the codegen'd fixed-point
-    * aggregate ([[graft.functions.FixedPointSum]]) — bit-identical values
-    * (FixedPointSumSpec pins it), ~4x less per-row cost than the stock
-    * decimal Sum (no Double.toString/BigDecimal churn, long-pair buffer).
-    * `spark.graft.fixedsum.enabled=false` restores the stock form (A/B
-    * hatch; both shapes satisfy the same oracle strings).
+  /** Order-independent, engine-exact sum of a double column, computed by
+    * the codegen'd fixed-point aggregate ([[graft.functions.FixedPointSum]]):
+    * bit-identical to the stock `sum(cast(x as decimal(38,6)))` form
+    * (FixedPointSumSpec pins it) at ~4x less per-row cost (no
+    * Double.toString/BigDecimal churn, long-pair buffer).
     */
-  private def fixedSumEnabled: Boolean =
-    try org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.fixedsum.enabled", "true") == "true"
-    catch { case _: Throwable => true }
-
-  /** Order-independent, engine-exact sum of a double column. */
-  def dsum(c: Column): Column =
-    if (fixedSumEnabled) graft.functions.FixedPointSum.fixedSum(c)
-    else sum(c.cast(Dec)).cast("double")
+  def dsum(c: Column): Column = graft.functions.FixedPointSum.fixedSum(c)
 
   /** Order-independent, engine-exact average of a double column. */
   def davg(c: Column): Column = dsum(c) / count(lit(1))

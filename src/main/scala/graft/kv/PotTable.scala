@@ -432,38 +432,39 @@ object PotTable {
     import spark.implicits._
     val bp = new Path(bundlePath)
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-restore")
-    val in = new TarArchiveInputStream(
-      new java.util.zip.GZIPInputStream(fs.open(bp)))
-    try {
-      var e = in.getNextEntry
-      while (e != null) {
-        val name = e.getName
-        val target = tmp.resolve(name).normalize()
-        if (!target.startsWith(tmp))
-          throw new java.io.IOException(
-            s"restore: refusing traversal entry '$name' in $bundlePath")
-        if (e.isDirectory) java.nio.file.Files.createDirectories(target)
-        else {
-          java.nio.file.Files.createDirectories(target.getParent)
-          val os = java.nio.file.Files.newOutputStream(target)
-          try {
-            val buf = new Array[Byte](65536)
-            var n = in.read(buf)
-            while (n >= 0) { os.write(buf, 0, n); n = in.read(buf) }
-          } finally os.close()
+    val rows = graft.Scratch.withDir("graft-restore") { dir =>
+      val tmp = java.nio.file.Paths.get(dir)
+      val in = new TarArchiveInputStream(
+        new java.util.zip.GZIPInputStream(fs.open(bp)))
+      try {
+        var e = in.getNextEntry
+        while (e != null) {
+          val name = e.getName
+          val target = tmp.resolve(name).normalize()
+          if (!target.startsWith(tmp))
+            throw new java.io.IOException(
+              s"restore: refusing traversal entry '$name' in $bundlePath")
+          if (e.isDirectory) java.nio.file.Files.createDirectories(target)
+          else {
+            java.nio.file.Files.createDirectories(target.getParent)
+            val os = java.nio.file.Files.newOutputStream(target)
+            try {
+              val buf = new Array[Byte](65536)
+              var n = in.read(buf)
+              while (n >= 0) { os.write(buf, 0, n); n = in.read(buf) }
+            } finally os.close()
+          }
+          e = in.getNextEntry
         }
-        e = in.getNextEntry
+      } finally in.close()
+      val manifest = spark.read.parquet(s"$tmp/_manifest")
+        .select($"path", $"generation").as[(String, Long)].collect().sorted
+      manifest.map { case (p, srcGen) =>
+        val t = PotTable(spark, newRoot, p)
+        if (srcGen > 0L) t.upsert(spark.read.parquet(s"$tmp/$p"))
+        (p, srcGen, t.generation)
       }
-    } finally in.close()
-    val manifest = spark.read.parquet(s"$tmp/_manifest")
-      .select($"path", $"generation").as[(String, Long)].collect().sorted
-    val rows = manifest.map { case (p, srcGen) =>
-      val t = PotTable(spark, newRoot, p)
-      if (srcGen > 0L) t.upsert(spark.read.parquet(s"$tmp/$p"))
-      (p, srcGen, t.generation)
     }
-    new scala.reflect.io.Directory(tmp.toFile).deleteRecursively()
     rows.toSeq.toDF("path", "source_generation", "restored_generation")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Ora, Tables}
+import graft.{Ora, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1133,32 +1133,27 @@ object Aggregates {
     * READ, never the answer.
     */
   private[graft] def zorderLayoutBuild(
-      s: SparkSession, d: String): (DataFrame, String) = {
+      s: SparkSession, d: String, root: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-zorder").toString
     val dir = s"$root/zl"
     val base = Tables.lineitem(s, d)
       .select($"l_returnflag", $"l_orderkey",
         pmod($"l_suppkey", lit(256)).cast("long").as("a"),
         pmod($"l_partkey", lit(256)).cast("long").as("b"))
     ZOrderLayout.cluster(base, $"a", $"b", dir)
-    val pruned = ZOrderLayout.readBRange(s, dir, 64, 127)
+    ZOrderLayout.readBRange(s, dir, 64, 127)
       .filter($"b".between(64, 127))
-    (pruned, root)
   }
 
   def zorderLayoutScan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (pruned, root) = zorderLayoutBuild(s, d)
-    val out = pruned.groupBy($"l_returnflag")
-      .agg(count(lit(1)).as("n_rows"),
-        sum($"l_orderkey").as("sum_okey"))
-      .orderBy($"l_returnflag")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root))
-      .deleteRecursively()
-    out
+    Scratch.withDir("graft-zorder") { root =>
+      zorderLayoutBuild(s, d, root).groupBy($"l_returnflag")
+        .agg(count(lit(1)).as("n_rows"),
+          sum($"l_orderkey").as("sum_okey"))
+        .orderBy($"l_returnflag")
+        .localCheckpoint(true)
+    }
   }
 
   val zorderLayoutScanSql: String =

@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.{Ora, Tables}
+import graft.{Ora, Scratch, Tables}
 import graft.functions.Udfs
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Extensibility surface (SURVEY.md §2-B "UDF/UDAF" + typed Dataset + join
@@ -263,6 +263,26 @@ object Extensibility {
       |ORDER BY l_returnflag""".stripMargin
       .replace("__RHOS__", Aggregates.hllRhosCte)
 
+  /** Write the nation rows as two pot objects split by key parity,
+    * `dir/nation_<parity>/data.json`, each a JSON map from `n<key>` to
+    * `doc(row)`; `extra(members)` appends non-document entries to a pot.
+    */
+  private def writeParityPots(dir: String, rows: Array[Row],
+      doc: Row => String, extra: Array[Row] => Seq[String] = _ => Nil): Unit =
+    Seq(0, 1).foreach { par =>
+      val members = rows.filter(_.getInt(0) % 2 == par)
+      val json = (members.map(r => s""""n${r.getInt(0)}": ${doc(r)}""") ++
+        extra(members)).mkString("{", ", ", "}")
+      val pd = java.nio.file.Paths.get(dir, s"nation_$par")
+      java.nio.file.Files.createDirectories(pd)
+      java.nio.file.Files.writeString(pd.resolve("data.json"), json)
+    }
+
+  /** The reference's nation document: id, name and region. */
+  private val idNameRegionDoc: Row => String = r =>
+    s"""{"id": "n${r.getInt(0)}", "name": "${r.getString(1)}", """ +
+      s""""region": ${r.getInt(2)}}"""
+
   /** u10: the DataSource V2 CONNECTOR path ([[graft.sources.PotV2Source]])
     * — pot-format data.json objects read as a first-class V2 table (one
     * InputPartition per pot object, Jackson in the PartitionReader, column
@@ -275,27 +295,20 @@ object Extensibility {
     */
   def dsv2PotRead(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2").toString
-    val rows = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name", $"n_regionkey")
-      .collect() // 25-row dimension: building the migration INPUT artifact
-    def potJson(parity: Int): String =
-      rows.filter(_.getInt(0) % 2 == parity)
-        .map(r => s""""n${r.getInt(0)}": {"id": "n${r.getInt(0)}", """ +
-          s""""name": "${r.getString(1)}", "region": ${r.getInt(2)}}""")
-        .mkString("{", ", ", "}")
-    Seq(0, 1).foreach { par =>
-      val pd = java.nio.file.Paths.get(dir, s"nation_$par")
-      java.nio.file.Files.createDirectories(pd)
-      java.nio.file.Files.writeString(pd.resolve("data.json"), potJson(par))
+    Scratch.withDir("graft-potv2") { dir =>
+      val rows = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name", $"n_regionkey")
+        .collect() // 25-row dimension: building the migration INPUT artifact
+      writeParityPots(dir, rows, idNameRegionDoc)
+      s.read.format(classOf[graft.sources.PotV2Source].getName)
+        .option("path", s"$dir/*/data.json")
+        .load()
+        .select($"key",
+          get_json_object($"doc_json", "$.name").as("name"),
+          get_json_object($"doc_json", "$.region").cast("int").as("region"))
+        .orderBy($"key")
+        .localCheckpoint(true)
     }
-    s.read.format(classOf[graft.sources.PotV2Source].getName)
-      .option("path", s"$dir/*/data.json")
-      .load()
-      .select($"key",
-        get_json_object($"doc_json", "$.name").as("name"),
-        get_json_object($"doc_json", "$.region").cast("int").as("region"))
-      .orderBy($"key")
   }
 
   val dsv2PotReadSql: String =
@@ -349,31 +362,21 @@ object Extensibility {
     */
   def dsv2AggPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2agg").toString
-    val rows = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name", $"n_regionkey")
-      .collect()
-    def potJson(parity: Int): String =
-      rows.filter(_.getInt(0) % 2 == parity)
-        .map(r => s""""n${r.getInt(0)}": {"id": "n${r.getInt(0)}", """ +
-          s""""name": "${r.getString(1)}", "region": ${r.getInt(2)}}""")
-        .mkString("{", ", ", "}")
-    Seq(0, 1).foreach { par =>
-      val pd = java.nio.file.Paths.get(dir, s"nation_$par")
-      java.nio.file.Files.createDirectories(pd)
-      java.nio.file.Files.writeString(pd.resolve("data.json"), potJson(par))
+    Scratch.withDir("graft-potv2agg") { dir =>
+      val rows = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name", $"n_regionkey")
+        .collect()
+      writeParityPots(dir, rows, idNameRegionDoc)
+      s.read.format(classOf[graft.sources.PotV2Source].getName)
+        .option("path", s"$dir/*/data.json")
+        .load()
+        .groupBy($"pot_file")
+        .agg(count(lit(1)).as("n_docs"))
+        .select(regexp_extract($"pot_file", "([^/]+)/data\\.json$", 1).as("pot"),
+          $"n_docs")
+        .orderBy($"pot")
+        .localCheckpoint(true)
     }
-    val result = s.read.format(classOf[graft.sources.PotV2Source].getName)
-      .option("path", s"$dir/*/data.json")
-      .load()
-      .groupBy($"pot_file")
-      .agg(count(lit(1)).as("n_docs"))
-      .select(regexp_extract($"pot_file", "([^/]+)/data\\.json$", 1).as("pot"),
-        $"n_docs")
-      .orderBy($"pot")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    result
   }
 
   val dsv2AggPushdownSql: String =
@@ -398,34 +401,24 @@ object Extensibility {
     */
   def aggMinMaxPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u49").toString
-    val rows = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name", $"n_regionkey").collect()
-    def potJson(parity: Int): String =
-      rows.filter(_.getInt(0) % 2 == parity)
-        .map(r => s""""n${r.getInt(0)}": {"id": "n${r.getInt(0)}", """ +
-          s""""name": "${r.getString(1)}", "region": ${r.getInt(2)}}""")
-        .mkString("{", ", ", "}")
-    Seq(0, 1).foreach { par =>
-      val pd = java.nio.file.Paths.get(dir, s"nation_$par")
-      java.nio.file.Files.createDirectories(pd)
-      java.nio.file.Files.writeString(pd.resolve("data.json"), potJson(par))
+    Scratch.withDir("graft-u49") { dir =>
+      val rows = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name", $"n_regionkey").collect()
+      writeParityPots(dir, rows, idNameRegionDoc)
+      val df = s.read.format(classOf[graft.sources.PotV2Source].getName)
+        .option("path", s"$dir/*/data.json").load()
+      val grouped = df.groupBy($"pot_file")
+        .agg(count(lit(1)).as("n_docs"), min($"key").as("min_key"),
+          max($"key").as("max_key"))
+        .select(
+          regexp_extract($"pot_file", "([^/]+)/data\\.json$", 1).as("pot"),
+          $"n_docs", $"min_key", $"max_key")
+      val global = df.agg(count(lit(1)).as("n_docs"),
+        min($"key").as("min_key"), max($"key").as("max_key"))
+        .select(lit("_all").as("pot"), $"n_docs", $"min_key", $"max_key")
+      grouped.unionByName(global).orderBy($"pot")
+        .localCheckpoint(true)
     }
-    val df = s.read.format(classOf[graft.sources.PotV2Source].getName)
-      .option("path", s"$dir/*/data.json").load()
-    val grouped = df.groupBy($"pot_file")
-      .agg(count(lit(1)).as("n_docs"), min($"key").as("min_key"),
-        max($"key").as("max_key"))
-      .select(
-        regexp_extract($"pot_file", "([^/]+)/data\\.json$", 1).as("pot"),
-        $"n_docs", $"min_key", $"max_key")
-    val global = df.agg(count(lit(1)).as("n_docs"),
-      min($"key").as("min_key"), max($"key").as("max_key"))
-      .select(lit("_all").as("pot"), $"n_docs", $"min_key", $"max_key")
-    val out = grouped.unionByName(global).orderBy($"pot")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val aggMinMaxPushdownSql: String =
@@ -457,26 +450,25 @@ object Extensibility {
     */
   def zoneMapPruning(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u57").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name").collect().toSeq
-    // five pots, range-clustered on zero-padded key (k00-k04 in pot 0, …)
-    (0 to 4).foreach { g =>
-      val rows = nat.filter(r => r.getInt(0) / 5 == g)
-        .map(r => ("", f"k${r.getInt(0)}%02d",
-          s"""{"name": "${r.getString(1)}"}"""))
-      s.createDataFrame(rows).toDF("pot_file", "key", "doc_json")
-        .write.format(fmt).option("path", s"$dir/range_$g/data.json")
-        .mode("overwrite").save()
+    Scratch.withDir("graft-u57") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name").collect().toSeq
+      // five pots, range-clustered on zero-padded key (k00-k04 in pot 0, …)
+      (0 to 4).foreach { g =>
+        val rows = nat.filter(r => r.getInt(0) / 5 == g)
+          .map(r => ("", f"k${r.getInt(0)}%02d",
+            s"""{"name": "${r.getString(1)}"}"""))
+        s.createDataFrame(rows).toDF("pot_file", "key", "doc_json")
+          .write.format(fmt).option("path", s"$dir/range_$g/data.json")
+          .mode("overwrite").save()
+      }
+      s.read.format(fmt).option("path", s"$dir/*/data.json").load()
+        .filter($"key".isin("k03", "k17"))
+        .select($"key", get_json_object($"doc_json", "$.name").as("name"))
+        .orderBy($"key")
+        .localCheckpoint(true)
     }
-    val out = s.read.format(fmt).option("path", s"$dir/*/data.json").load()
-      .filter($"key".isin("k03", "k17"))
-      .select($"key", get_json_object($"doc_json", "$.name").as("name"))
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val zoneMapPruningSql: String =
@@ -503,43 +495,42 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u58").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-    def write(df: org.apache.spark.sql.DataFrame, upd: Int,
-        mode: String): Unit = df.select(lit("").as("pot_file"),
-        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-        to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
-          .as("doc_json"))
-      .write.format(fmt).option("path", pot).mode(mode).save()
-    write(nat, 0, "overwrite")                              // gen 1
-    write(nat.filter($"n_regionkey" === 0), 1, "append")    // gen 2
-    write(nat.filter($"n_regionkey" === 1), 2, "append")    // gen 3 (covering)
-    // a 1-hour window: every body is young — zero reclaimed
-    val keptYoung = s.sql(
-      s"CALL graft_fns.sys.vacuum_pot_retain('$pot', '1.0')")
-      .collect().length.toLong
-    // pinned-generation read INSIDE the window still serves
-    val v1 = s.read.format(fmt).option("path", pot)
-      .option("generation", "1").load()
-      .agg(count(lit(1)).as("n_v1"),
-        sum(get_json_object($"doc_json", "$.upd").cast("long")).as("upd_v1"))
-      .localCheckpoint(true)
-    // zero-hour window: the two below-covering bodies age out
-    val reclaimed = s.sql(
-      s"CALL graft_fns.sys.vacuum_pot_retain('$pot', '0')")
-      .collect().length.toLong
-    val head = s.read.format(fmt).option("path", pot).load()
-      .agg(count(lit(1)).as("n_head"),
-        sum(get_json_object($"doc_json", "$.upd").cast("long"))
-          .as("upd_head"))
-    val out = Seq((keptYoung, reclaimed))
-      .toDF("kept_young_deletes", "reclaimed")
-      .crossJoin(v1).crossJoin(head)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+    Scratch.withDir("graft-u58") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+      def write(df: org.apache.spark.sql.DataFrame, upd: Int,
+          mode: String): Unit = df.select(lit("").as("pot_file"),
+          concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+          to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
+            .as("doc_json"))
+        .write.format(fmt).option("path", pot).mode(mode).save()
+      write(nat, 0, "overwrite")                              // gen 1
+      write(nat.filter($"n_regionkey" === 0), 1, "append")    // gen 2
+      write(nat.filter($"n_regionkey" === 1), 2, "append")    // gen 3 (covering)
+      // a 1-hour window: every body is young — zero reclaimed
+      val keptYoung = s.sql(
+        s"CALL graft_fns.sys.vacuum_pot_retain('$pot', '1.0')")
+        .collect().length.toLong
+      // pinned-generation read INSIDE the window still serves
+      val v1 = s.read.format(fmt).option("path", pot)
+        .option("generation", "1").load()
+        .agg(count(lit(1)).as("n_v1"),
+          sum(get_json_object($"doc_json", "$.upd").cast("long")).as("upd_v1"))
+        .localCheckpoint(true)
+      // zero-hour window: the two below-covering bodies age out
+      val reclaimed = s.sql(
+        s"CALL graft_fns.sys.vacuum_pot_retain('$pot', '0')")
+        .collect().length.toLong
+      val head = s.read.format(fmt).option("path", pot).load()
+        .agg(count(lit(1)).as("n_head"),
+          sum(get_json_object($"doc_json", "$.upd").cast("long"))
+            .as("upd_head"))
+      Seq((keptYoung, reclaimed))
+        .toDF("kept_young_deletes", "reclaimed")
+        .crossJoin(v1).crossJoin(head)
+        .localCheckpoint(true)
+    }
   }
 
   val vacuumRetentionSql: String =
@@ -594,58 +585,57 @@ object Extensibility {
   def stmtHistory(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerStmtHistoryTvf(s)
-    val root = java.nio.file.Files.createTempDirectory("graft-u59").toString
-    val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val nat = Tables.nation(s, d)
-    def insert(upd: Int): Unit = nat.select(lit("").as("pot_file"),
-        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-        to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
-          .as("doc_json"))
-      .write.format(fmt).option("path", root).option("buckets", "4")
-      .mode("append").save()
-    insert(0); insert(1) // two completed multi-bucket statements
-    // a CRASHED statement (intent + staged fragments, nothing committed)
-    // rolled forward -> journals 'complete' with doneTs = recovery time
-    val keys = Seq("ra", "rb", "rc", "rd")
-    val byBucket = keys.groupBy(
-      graft.sources.BucketedPotV2Source.bucketOf(_, 4))
-    val staging = java.nio.file.Paths.get(root, ".staging-u59crash")
-    java.nio.file.Files.createDirectories(staging)
-    val frags = byBucket.map { case (b, ks) =>
-      val f = staging.resolve(s"part-b$b.jsonl")
-      java.nio.file.Files.writeString(f,
-        ks.map(k => s"""{"k":"$k","d":{"v":1}}""").mkString("", "\n", "\n"))
-      b -> Seq((0, f.toString))
+    Scratch.withDir("graft-u59") { root =>
+      val fmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val nat = Tables.nation(s, d)
+      def insert(upd: Int): Unit = nat.select(lit("").as("pot_file"),
+          concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+          to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
+            .as("doc_json"))
+        .write.format(fmt).option("path", root).option("buckets", "4")
+        .mode("append").save()
+      insert(0); insert(1) // two completed multi-bucket statements
+      // a CRASHED statement (intent + staged fragments, nothing committed)
+      // rolled forward -> journals 'complete' with doneTs = recovery time
+      val keys = Seq("ra", "rb", "rc", "rd")
+      val byBucket = keys.groupBy(
+        graft.sources.BucketedPotV2Source.bucketOf(_, 4))
+      val staging = java.nio.file.Paths.get(root, ".staging-u59crash")
+      java.nio.file.Files.createDirectories(staging)
+      val frags = byBucket.map { case (b, ks) =>
+        val f = staging.resolve(s"part-b$b.jsonl")
+        java.nio.file.Files.writeString(f,
+          ks.map(k => s"""{"k":"$k","d":{"v":1}}""").mkString("", "\n", "\n"))
+        b -> Seq((0, f.toString))
+      }
+      val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
+      graft.sources.BucketedStmtLog.begin(root, "u59crash",
+        graft.sources.BucketedStmtLog.intentBody(
+          "insert", "u59crash", truncate = false, Long.MaxValue,
+          byBucket.keys.toSeq.sorted,
+          byBucket.keys.map(b => b -> base.getOrElse(b, 0L)).toMap, frags))
+      graft.sources.BucketedPotV2Source.recoverStatements(root)
+      // a conflict-DROPPED delta barrier (the live MERGE-conflict path):
+      // intent up, then the barrier comes down without completing
+      graft.sources.BucketedStmtLog.begin(root, "u59conflict",
+        graft.sources.BucketedStmtLog.intentBody(
+          "delta", "u59conflict", truncate = false, Long.MaxValue,
+          Seq(0), Map(0 -> 3L), Map.empty))
+      graft.sources.BucketedStmtLog.abort(root, "u59conflict", Seq.empty)
+      // a LIVE young statement — stays open
+      graft.sources.BucketedStmtLog.begin(root, "u59open",
+        graft.sources.BucketedStmtLog.intentBody(
+          "insert", "u59open", truncate = false, Long.MaxValue,
+          Seq(0, 1), Map(0 -> 3L, 1 -> 3L), Map.empty))
+      s.sql(
+        s"""SELECT kind, outcome, COUNT(*) AS n,
+           |  CAST(SUM(CASE WHEN outcome <> 'open' AND done_ms >= ts_ms
+           |    THEN 1 ELSE 0 END) AS BIGINT) AS windows_ordered
+           |FROM graft_stmt_history('$root')
+           |GROUP BY kind, outcome
+           |ORDER BY kind, outcome""".stripMargin)
+        .localCheckpoint(true)
     }
-    val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
-    graft.sources.BucketedStmtLog.begin(root, "u59crash",
-      graft.sources.BucketedStmtLog.intentBody(
-        "insert", "u59crash", truncate = false, Long.MaxValue,
-        byBucket.keys.toSeq.sorted,
-        byBucket.keys.map(b => b -> base.getOrElse(b, 0L)).toMap, frags))
-    graft.sources.BucketedPotV2Source.recoverStatements(root)
-    // a conflict-DROPPED delta barrier (the live MERGE-conflict path):
-    // intent up, then the barrier comes down without completing
-    graft.sources.BucketedStmtLog.begin(root, "u59conflict",
-      graft.sources.BucketedStmtLog.intentBody(
-        "delta", "u59conflict", truncate = false, Long.MaxValue,
-        Seq(0), Map(0 -> 3L), Map.empty))
-    graft.sources.BucketedStmtLog.abort(root, "u59conflict", Seq.empty)
-    // a LIVE young statement — stays open
-    graft.sources.BucketedStmtLog.begin(root, "u59open",
-      graft.sources.BucketedStmtLog.intentBody(
-        "insert", "u59open", truncate = false, Long.MaxValue,
-        Seq(0, 1), Map(0 -> 3L, 1 -> 3L), Map.empty))
-    val out = s.sql(
-      s"""SELECT kind, outcome, COUNT(*) AS n,
-         |  CAST(SUM(CASE WHEN outcome <> 'open' AND done_ms >= ts_ms
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS windows_ordered
-         |FROM graft_stmt_history('$root')
-         |GROUP BY kind, outcome
-         |ORDER BY kind, outcome""".stripMargin)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
   }
 
   val stmtHistorySql: String =
@@ -672,27 +662,26 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val root = java.nio.file.Files.createTempDirectory("graft-u60").toString
-    Tables.nation(s, d).createOrReplaceTempView("u60_nation")
-    val tbl = s"graft_fns.store.`$root`"
-    s.sql(
-      s"""INSERT INTO $tbl
+    Scratch.withDir("graft-u60") { root =>
+      Tables.nation(s, d).createOrReplaceTempView("u60_nation")
+      val tbl = s"graft_fns.store.`$root`"
+      s.sql(
+        s"""INSERT INTO $tbl
          |SELECT '' AS pot_file,
          |  'n' || CAST(n_nationkey AS STRING) AS key,
          |  to_json(named_struct('name', n_name, 'r', n_regionkey))
          |    AS doc_json
          |FROM u60_nation""".stripMargin)
-    s.sql(s"DELETE FROM $tbl WHERE key = 'n7'")
-    s.sql(s"""UPDATE $tbl SET doc_json = '{"name":"MOVED","r":9}' """ +
-      "WHERE key = 'n3'")
-    val out = s.sql(
-      s"""SELECT key, get_json_object(doc_json, '$$.name') AS name,
-         |  CAST(get_json_object(doc_json, '$$.r') AS BIGINT) AS r
-         |FROM $tbl
-         |ORDER BY key""".stripMargin)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
+      s.sql(s"DELETE FROM $tbl WHERE key = 'n7'")
+      s.sql(s"""UPDATE $tbl SET doc_json = '{"name":"MOVED","r":9}' """ +
+        "WHERE key = 'n3'")
+      s.sql(
+        s"""SELECT key, get_json_object(doc_json, '$$.name') AS name,
+           |  CAST(get_json_object(doc_json, '$$.r') AS BIGINT) AS r
+           |FROM $tbl
+           |ORDER BY key""".stripMargin)
+        .localCheckpoint(true)
+    }
   }
 
   val catalogSqlDmlSql: String =
@@ -827,30 +816,29 @@ object Extensibility {
   def fieldStatsInventory(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerFieldStatsTvf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u71").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-    (0 to 4).foreach { g =>
-      nat.filter(floor($"n_nationkey" / 5) === g)
-        .select(lit("").as("pot_file"),
-          concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
-            .as("key"),
-          to_json(struct($"n_name".as("name"),
-            when($"n_regionkey" =!= 2,
-              $"n_nationkey".cast("long") * 1000 + $"n_regionkey")
-              .as("pop"))).as("doc_json"))
-        .write.format(fmt).option("path", s"$dir/range_$g/data.json")
-        .mode("overwrite").save()
+    Scratch.withDir("graft-u71") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+      (0 to 4).foreach { g =>
+        nat.filter(floor($"n_nationkey" / 5) === g)
+          .select(lit("").as("pot_file"),
+            concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
+              .as("key"),
+            to_json(struct($"n_name".as("name"),
+              when($"n_regionkey" =!= 2,
+                $"n_nationkey".cast("long") * 1000 + $"n_regionkey")
+                .as("pop"))).as("doc_json"))
+          .write.format(fmt).option("path", s"$dir/range_$g/data.json")
+          .mode("overwrite").save()
+      }
+      s.sql(
+        s"""SELECT regexp_extract(pot_file, '([^/]+)/data\\\\.json$$', 1)
+           |    AS pot,
+           |  field, t, n, lmin, lmax, smin, smax
+           |FROM graft_pot_fieldstats('$dir/*/data.json')
+           |ORDER BY pot, field""".stripMargin)
+        .localCheckpoint(true)
     }
-    val out = s.sql(
-      s"""SELECT regexp_extract(pot_file, '([^/]+)/data\\\\.json$$', 1)
-         |    AS pot,
-         |  field, t, n, lmin, lmax, smin, smax
-         |FROM graft_pot_fieldstats('$dir/*/data.json')
-         |ORDER BY pot, field""".stripMargin)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val fieldStatsInventorySql: String =
@@ -876,28 +864,27 @@ object Extensibility {
   def zoneMapInventory(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerZoneMapTvf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u61").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name").collect().toSeq
-    (0 to 4).foreach { g =>
-      val rows = nat.filter(r => r.getInt(0) / 5 == g)
-        .map(r => ("", f"k${r.getInt(0)}%02d",
-          s"""{"name": "${r.getString(1)}"}"""))
-      s.createDataFrame(rows).toDF("pot_file", "key", "doc_json")
-        .write.format(fmt).option("path", s"$dir/range_$g/data.json")
-        .mode("overwrite").save()
+    Scratch.withDir("graft-u61") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name").collect().toSeq
+      (0 to 4).foreach { g =>
+        val rows = nat.filter(r => r.getInt(0) / 5 == g)
+          .map(r => ("", f"k${r.getInt(0)}%02d",
+            s"""{"name": "${r.getString(1)}"}"""))
+        s.createDataFrame(rows).toDF("pot_file", "key", "doc_json")
+          .write.format(fmt).option("path", s"$dir/range_$g/data.json")
+          .mode("overwrite").save()
+      }
+      s.sql(
+        s"""SELECT regexp_extract(pot_file, '([^/]+)/data\\\\.json', 1) AS pot,
+           |  head_gen, kmin, kmax,
+           |  CAST(CASE WHEN kmin IS NOT NULL AND kmin <= 'k03'
+           |    AND 'k03' <= kmax THEN 1 ELSE 0 END AS BIGINT) AS covers_k03
+           |FROM graft_pot_zonemaps('$dir/*/data.json')
+           |ORDER BY pot""".stripMargin)
+        .localCheckpoint(true)
     }
-    val out = s.sql(
-      s"""SELECT regexp_extract(pot_file, '([^/]+)/data\\\\.json', 1) AS pot,
-         |  head_gen, kmin, kmax,
-         |  CAST(CASE WHEN kmin IS NOT NULL AND kmin <= 'k03'
-         |    AND 'k03' <= kmax THEN 1 ELSE 0 END AS BIGINT) AS covers_k03
-         |FROM graft_pot_zonemaps('$dir/*/data.json')
-         |ORDER BY pot""".stripMargin)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val zoneMapInventorySql: String =
@@ -937,79 +924,78 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val root = java.nio.file.Files.createTempDirectory("graft-u62").toString
-    val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val nat = Tables.nation(s, d)
-    def write(df: org.apache.spark.sql.DataFrame, upd: Int): Unit = df.select(
-        lit("").as("pot_file"),
-        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-        to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
-          .as("doc_json"))
-      .write.format(fmt).option("path", root).option("buckets", "4")
-      .mode("append").save()
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(graft.kv.HadoopConf.get)
-    def lastMtime: Long = graft.sources.BucketedPotV2Source
-      .existingBuckets(root, 4).map { b =>
-        val commits = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs
-          .Path(graft.sources.BucketedPotV2Source.bucketPot(root, b))
-          .getParent, ".commits")
-        graft.kv.CommitMarker.committedGenerations(fs, commits).map(g =>
-          fs.getFileStatus(new org.apache.hadoop.fs.Path(
-            commits, g.toString)).getModificationTime).max
-      }.max
-    def tailCount: Long = {
-      val cd = new org.apache.hadoop.fs.Path(root, "_stmts/closed")
-      if (fs.exists(cd)) fs.listStatus(cd).count(_.getLen > 0).toLong else 0L
-    }
-    write(nat, 0)                                               // wave 1
-    // a statement window SPANNING a known instant: barrier up with the
-    // wave-1 base vector, wave 2 lands inside it, then the window closes
-    val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
-    graft.sources.BucketedStmtLog.begin(root, "u62span",
-      graft.sources.BucketedStmtLog.intentBody(
-        "insert", "u62span", truncate = false, Long.MaxValue,
-        base.keys.toSeq.sorted, base, Map.empty))
-    write(nat.filter($"n_regionkey" === 0), 1)                 // wave 2
-    val w2 = math.max(lastMtime, System.currentTimeMillis())
-    while (System.currentTimeMillis() <= w2 + 2) Thread.sleep(2)
-    val tIn = System.currentTimeMillis()  // inside u62span's window
-    Thread.sleep(3)
-    graft.sources.BucketedStmtLog.complete(root, "u62span", Seq.empty)
-    def probe(label: String) = s.read.format(fmt)
-      .option("path", root).option("buckets", "4")
-      .option("timestampAsOf", tIn.toString).load()
-      .agg(count(lit(1)).as("n"),
-        sum(get_json_object($"doc_json", "$.upd").cast("long")).as("n_upd"))
-      .select(lit(label).as("probe"), $"n", $"n_upd")
-      .localCheckpoint(true)
-    val tailBefore = tailCount  // wave1 + wave2 + u62span = 3
-    val a = probe("a_pre_ckpt") // window caps -> wave-1 state exactly
-    s.sql(s"CALL graft_fns.sys.vacuum_pot_retain('$root', '1.0')").collect()
-    val tailAfter = tailCount   // folded into the checkpoint marker
-    val b = probe("b_post_ckpt") // identical read through ckpt + tail
-    write(nat, 2)                                               // wave 3
-    val tailWave3 = tailCount   // post-checkpoint statements accrue
-    Thread.sleep(3)
-    // zero-hour retention: windows dropped AND below-covering bodies
-    // vacuumed — the same AS OF must now fail NAMED, never read torn
-    s.sql(s"CALL graft_fns.sys.vacuum_pot_retain('$root', '0')").collect()
-    val droppedNamed =
-      try { probe("c").collect(); 0L }
-      catch {
-        case e: Throwable =>
-          def named(t: Throwable): Boolean = t != null &&
-            (t.isInstanceOf[graft.kv.PotTable.RetentionViolated] ||
-              named(t.getCause))
-          if (named(e)) 1L else throw e
+    Scratch.withDir("graft-u62") { root =>
+      val fmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val nat = Tables.nation(s, d)
+      def write(df: org.apache.spark.sql.DataFrame, upd: Int): Unit = df.select(
+          lit("").as("pot_file"),
+          concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+          to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
+            .as("doc_json"))
+        .write.format(fmt).option("path", root).option("buckets", "4")
+        .mode("append").save()
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(graft.kv.HadoopConf.get)
+      def lastMtime: Long = graft.sources.BucketedPotV2Source
+        .existingBuckets(root, 4).map { b =>
+          val commits = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs
+            .Path(graft.sources.BucketedPotV2Source.bucketPot(root, b))
+            .getParent, ".commits")
+          graft.kv.CommitMarker.committedGenerations(fs, commits).map(g =>
+            fs.getFileStatus(new org.apache.hadoop.fs.Path(
+              commits, g.toString)).getModificationTime).max
+        }.max
+      def tailCount: Long = {
+        val cd = new org.apache.hadoop.fs.Path(root, "_stmts/closed")
+        if (fs.exists(cd)) fs.listStatus(cd).count(_.getLen > 0).toLong else 0L
       }
-    val out = a.unionAll(b)
-      .crossJoin(Seq((tailBefore, tailAfter, tailWave3, droppedNamed))
-        .toDF("tail_before", "tail_after", "tail_wave3", "dropped_named"))
-      .orderBy($"probe")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
+      write(nat, 0)                                               // wave 1
+      // a statement window SPANNING a known instant: barrier up with the
+      // wave-1 base vector, wave 2 lands inside it, then the window closes
+      val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
+      graft.sources.BucketedStmtLog.begin(root, "u62span",
+        graft.sources.BucketedStmtLog.intentBody(
+          "insert", "u62span", truncate = false, Long.MaxValue,
+          base.keys.toSeq.sorted, base, Map.empty))
+      write(nat.filter($"n_regionkey" === 0), 1)                 // wave 2
+      val w2 = math.max(lastMtime, System.currentTimeMillis())
+      while (System.currentTimeMillis() <= w2 + 2) Thread.sleep(2)
+      val tIn = System.currentTimeMillis()  // inside u62span's window
+      Thread.sleep(3)
+      graft.sources.BucketedStmtLog.complete(root, "u62span", Seq.empty)
+      def probe(label: String) = s.read.format(fmt)
+        .option("path", root).option("buckets", "4")
+        .option("timestampAsOf", tIn.toString).load()
+        .agg(count(lit(1)).as("n"),
+          sum(get_json_object($"doc_json", "$.upd").cast("long")).as("n_upd"))
+        .select(lit(label).as("probe"), $"n", $"n_upd")
+        .localCheckpoint(true)
+      val tailBefore = tailCount  // wave1 + wave2 + u62span = 3
+      val a = probe("a_pre_ckpt") // window caps -> wave-1 state exactly
+      s.sql(s"CALL graft_fns.sys.vacuum_pot_retain('$root', '1.0')").collect()
+      val tailAfter = tailCount   // folded into the checkpoint marker
+      val b = probe("b_post_ckpt") // identical read through ckpt + tail
+      write(nat, 2)                                               // wave 3
+      val tailWave3 = tailCount   // post-checkpoint statements accrue
+      Thread.sleep(3)
+      // zero-hour retention: windows dropped AND below-covering bodies
+      // vacuumed — the same AS OF must now fail NAMED, never read torn
+      s.sql(s"CALL graft_fns.sys.vacuum_pot_retain('$root', '0')").collect()
+      val droppedNamed =
+        try { probe("c").collect(); 0L }
+        catch {
+          case e: Throwable =>
+            def named(t: Throwable): Boolean = t != null &&
+              (t.isInstanceOf[graft.kv.PotTable.RetentionViolated] ||
+                named(t.getCause))
+            if (named(e)) 1L else throw e
+        }
+      a.unionAll(b)
+        .crossJoin(Seq((tailBefore, tailAfter, tailWave3, droppedNamed))
+          .toDF("tail_before", "tail_after", "tail_wave3", "dropped_named"))
+        .orderBy($"probe")
+        .localCheckpoint(true)
+    }
   }
 
   val stmtCheckpointSql: String =
@@ -1038,81 +1024,80 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u63").toString
-    val pot = s"$dir/t/data.json"
-    val root = s"$dir/store"
-    val potFmt = classOf[graft.sources.PotV2Source].getName
-    val storeFmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val nat = Tables.nation(s, d)
-    def rows(df: org.apache.spark.sql.DataFrame, upd: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
-        .as("doc_json"))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(graft.kv.HadoopConf.get)
-    def chainMtimes(potPath: String): Seq[Long] = {
-      val commits = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(potPath).getParent, ".commits")
-      graft.kv.CommitMarker.committedGenerations(fs, commits).map(g =>
-        fs.getFileStatus(new org.apache.hadoop.fs.Path(
-          commits, g.toString)).getModificationTime)
-    }
-    // wave 1 on both surfaces
-    rows(nat, 0).write.format(potFmt).option("path", pot)
-      .mode("overwrite").save()
-    rows(nat, 0).write.format(storeFmt).option("path", root)
-      .option("buckets", "4").mode("append").save()
-    val w1 = (chainMtimes(pot) ++ graft.sources.BucketedPotV2Source
-      .existingBuckets(root, 4)
-      .flatMap(b => chainMtimes(
-        graft.sources.BucketedPotV2Source.bucketPot(root, b)))).max
-    while (System.currentTimeMillis() <= w1 + 2) Thread.sleep(2)
-    val tMid = System.currentTimeMillis()
-    Thread.sleep(3)
-    // wave 2 on both surfaces (strictly after tMid)
-    rows(nat.filter($"n_regionkey" === 0), 1).write.format(potFmt)
-      .option("path", pot).mode("append").save()
-    rows(nat.filter($"n_regionkey" === 0), 1).write.format(storeFmt)
-      .option("path", root).option("buckets", "4").mode("append").save()
-    // session TZ is UTC — format tMid as a UTC SQL timestamp literal
-    val tsLit = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.ofEpochMilli(tMid))
-    def probe(label: String, from: String) = s.sql(
-      s"""SELECT '$label' AS probe, CAST(COUNT(*) AS BIGINT) AS n,
-         |  CAST(SUM(CAST(get_json_object(doc_json, '$$.upd') AS BIGINT))
-         |    AS BIGINT) AS n_upd
-         |FROM $from""".stripMargin).localCheckpoint(true)
-    val potV1 = probe("pot_v1", s"graft_fns.pot.`$pot` VERSION AS OF 1")
-    val potV2 = probe("pot_v2", s"graft_fns.pot.`$pot` VERSION AS OF 2")
-    val potTs = probe("pot_ts",
-      s"graft_fns.pot.`$pot` TIMESTAMP AS OF '$tsLit'")
-    val storeTs = probe("store_ts",
-      s"graft_fns.store.`$root` TIMESTAMP AS OF '$tsLit'")
-    def namedFail(sql: String, needle: String): Long =
-      try { s.sql(sql).collect(); 0L }
-      catch {
-        case e: Throwable =>
-          def hit(t: Throwable): Boolean = t != null &&
-            (Option(t.getMessage).exists(_.contains(needle)) ||
-              hit(t.getCause))
-          if (hit(e)) 1L else throw e
+    Scratch.withDir("graft-u63") { dir =>
+      val pot = s"$dir/t/data.json"
+      val root = s"$dir/store"
+      val potFmt = classOf[graft.sources.PotV2Source].getName
+      val storeFmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val nat = Tables.nation(s, d)
+      def rows(df: org.apache.spark.sql.DataFrame, upd: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
+          .as("doc_json"))
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(graft.kv.HadoopConf.get)
+      def chainMtimes(potPath: String): Seq[Long] = {
+        val commits = new org.apache.hadoop.fs.Path(
+          new org.apache.hadoop.fs.Path(potPath).getParent, ".commits")
+        graft.kv.CommitMarker.committedGenerations(fs, commits).map(g =>
+          fs.getFileStatus(new org.apache.hadoop.fs.Path(
+            commits, g.toString)).getModificationTime)
       }
-    val storeVerNamed = namedFail(
-      s"SELECT * FROM graft_fns.store.`$root` VERSION AS OF 1",
-      "no store-wide generation")
-    val uncommittedNamed = namedFail(
-      s"SELECT * FROM graft_fns.pot.`$pot` VERSION AS OF 99",
-      "not committed")
-    val out = potV1.unionAll(potV2).unionAll(potTs).unionAll(storeTs)
-      .crossJoin(Seq((storeVerNamed, uncommittedNamed))
-        .toDF("store_version_named", "uncommitted_named"))
-      .orderBy($"probe")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+      // wave 1 on both surfaces
+      rows(nat, 0).write.format(potFmt).option("path", pot)
+        .mode("overwrite").save()
+      rows(nat, 0).write.format(storeFmt).option("path", root)
+        .option("buckets", "4").mode("append").save()
+      val w1 = (chainMtimes(pot) ++ graft.sources.BucketedPotV2Source
+        .existingBuckets(root, 4)
+        .flatMap(b => chainMtimes(
+          graft.sources.BucketedPotV2Source.bucketPot(root, b)))).max
+      while (System.currentTimeMillis() <= w1 + 2) Thread.sleep(2)
+      val tMid = System.currentTimeMillis()
+      Thread.sleep(3)
+      // wave 2 on both surfaces (strictly after tMid)
+      rows(nat.filter($"n_regionkey" === 0), 1).write.format(potFmt)
+        .option("path", pot).mode("append").save()
+      rows(nat.filter($"n_regionkey" === 0), 1).write.format(storeFmt)
+        .option("path", root).option("buckets", "4").mode("append").save()
+      // session TZ is UTC — format tMid as a UTC SQL timestamp literal
+      val tsLit = java.time.format.DateTimeFormatter
+        .ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
+        .withZone(java.time.ZoneOffset.UTC)
+        .format(java.time.Instant.ofEpochMilli(tMid))
+      def probe(label: String, from: String) = s.sql(
+        s"""SELECT '$label' AS probe, CAST(COUNT(*) AS BIGINT) AS n,
+           |  CAST(SUM(CAST(get_json_object(doc_json, '$$.upd') AS BIGINT))
+           |    AS BIGINT) AS n_upd
+           |FROM $from""".stripMargin).localCheckpoint(true)
+      val potV1 = probe("pot_v1", s"graft_fns.pot.`$pot` VERSION AS OF 1")
+      val potV2 = probe("pot_v2", s"graft_fns.pot.`$pot` VERSION AS OF 2")
+      val potTs = probe("pot_ts",
+        s"graft_fns.pot.`$pot` TIMESTAMP AS OF '$tsLit'")
+      val storeTs = probe("store_ts",
+        s"graft_fns.store.`$root` TIMESTAMP AS OF '$tsLit'")
+      def namedFail(sql: String, needle: String): Long =
+        try { s.sql(sql).collect(); 0L }
+        catch {
+          case e: Throwable =>
+            def hit(t: Throwable): Boolean = t != null &&
+              (Option(t.getMessage).exists(_.contains(needle)) ||
+                hit(t.getCause))
+            if (hit(e)) 1L else throw e
+        }
+      val storeVerNamed = namedFail(
+        s"SELECT * FROM graft_fns.store.`$root` VERSION AS OF 1",
+        "no store-wide generation")
+      val uncommittedNamed = namedFail(
+        s"SELECT * FROM graft_fns.pot.`$pot` VERSION AS OF 99",
+        "not committed")
+      potV1.unionAll(potV2).unionAll(potTs).unionAll(storeTs)
+        .crossJoin(Seq((storeVerNamed, uncommittedNamed))
+          .toDF("store_version_named", "uncommitted_named"))
+        .orderBy($"probe")
+        .localCheckpoint(true)
+    }
   }
 
   val catalogTimeTravelSql: String =
@@ -1147,28 +1132,27 @@ object Extensibility {
     */
   def bucketedZmapPrune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-u64").toString
-    val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val nat = Tables.nation(s, d)
-    nat.select(lit("").as("pot_file"),
-        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-        to_json(struct($"n_name".as("name"))).as("doc_json"))
-      .write.format(fmt).option("path", root).option("buckets", "8")
-      .mode("append").save()
-    // a rare top-of-domain key family: two keys, at most two buckets
-    Seq(("", "zz:a", """{"name": "EDGE_A"}"""),
-        ("", "zz:b", """{"name": "EDGE_B"}"""))
-      .toDF("pot_file", "key", "doc_json")
-      .write.format(fmt).option("path", root).option("buckets", "8")
-      .mode("append").save()
-    val out = s.read.format(fmt).option("path", root).option("buckets", "8")
-      .load()
-      .filter($"key".startsWith("zz"))
-      .select($"key", get_json_object($"doc_json", "$.name").as("name"))
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
+    Scratch.withDir("graft-u64") { root =>
+      val fmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val nat = Tables.nation(s, d)
+      nat.select(lit("").as("pot_file"),
+          concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+          to_json(struct($"n_name".as("name"))).as("doc_json"))
+        .write.format(fmt).option("path", root).option("buckets", "8")
+        .mode("append").save()
+      // a rare top-of-domain key family: two keys, at most two buckets
+      Seq(("", "zz:a", """{"name": "EDGE_A"}"""),
+          ("", "zz:b", """{"name": "EDGE_B"}"""))
+        .toDF("pot_file", "key", "doc_json")
+        .write.format(fmt).option("path", root).option("buckets", "8")
+        .mode("append").save()
+      s.read.format(fmt).option("path", root).option("buckets", "8")
+        .load()
+        .filter($"key".startsWith("zz"))
+        .select($"key", get_json_object($"doc_json", "$.name").as("name"))
+        .orderBy($"key")
+        .localCheckpoint(true)
+    }
   }
 
   val bucketedZmapPruneSql: String =
@@ -1193,35 +1177,34 @@ object Extensibility {
     */
   def shredZmapPrune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u65").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-    // five pots range-clustered on pop = nationkey*1000 (+region), pop
-    // ABSENT for region-2 rows (the u56 null shape — to_json drops nulls)
-    (0 to 4).foreach { g =>
-      nat.filter(floor($"n_nationkey" / 5) === g)
-        .select(lit("").as("pot_file"),
-          concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
-            .as("key"),
-          to_json(struct($"n_name".as("name"),
-            when($"n_regionkey" =!= 2,
-              $"n_nationkey".cast("long") * 1000 + $"n_regionkey")
-              .as("pop"))).as("doc_json"))
-        .write.format(fmt).option("path", s"$dir/range_$g/data.json")
-        .mode("overwrite").save()
+    Scratch.withDir("graft-u65") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+      // five pots range-clustered on pop = nationkey*1000 (+region), pop
+      // ABSENT for region-2 rows (the u56 null shape — to_json drops nulls)
+      (0 to 4).foreach { g =>
+        nat.filter(floor($"n_nationkey" / 5) === g)
+          .select(lit("").as("pot_file"),
+            concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
+              .as("key"),
+            to_json(struct($"n_name".as("name"),
+              when($"n_regionkey" =!= 2,
+                $"n_nationkey".cast("long") * 1000 + $"n_regionkey")
+                .as("pop"))).as("doc_json"))
+          .write.format(fmt).option("path", s"$dir/range_$g/data.json")
+          .mode("overwrite").save()
+      }
+      val df = s.read.format(fmt).option("path", s"$dir/*/data.json")
+        .option("shred",
+          "name=name:string,pop=pop:bigint,ghost=ghost:string").load()
+      val rows = df.filter($"pop" >= 17000L)
+        .select($"key", $"name", $"pop")
+      val ghostRows = df.filter($"ghost".isNotNull).count()
+      rows
+        .crossJoin(Seq(ghostRows).toDF("ghost_rows"))
+        .orderBy($"key")
+        .localCheckpoint(true)
     }
-    val df = s.read.format(fmt).option("path", s"$dir/*/data.json")
-      .option("shred",
-        "name=name:string,pop=pop:bigint,ghost=ghost:string").load()
-    val rows = df.filter($"pop" >= 17000L)
-      .select($"key", $"name", $"pop")
-    val ghostRows = df.filter($"ghost".isNotNull).count()
-    val out = rows
-      .crossJoin(Seq(ghostRows).toDF("ghost_rows"))
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val shredZmapPruneSql: String =
@@ -1247,29 +1230,28 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u66").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-    (0 to 4).foreach { g =>
-      nat.filter(floor($"n_nationkey" / 5) === g)
-        .select(lit("").as("pot_file"),
-          concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
-            .as("key"),
-          to_json(struct($"n_name".as("name"),
-            ($"n_nationkey".cast("long") * 1000 + $"n_regionkey")
-              .as("pop"))).as("doc_json"))
-        .write.format(fmt).option("path", s"$dir/range_$g/data.json")
-        .mode("overwrite").save()
+    Scratch.withDir("graft-u66") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+      (0 to 4).foreach { g =>
+        nat.filter(floor($"n_nationkey" / 5) === g)
+          .select(lit("").as("pot_file"),
+            concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
+              .as("key"),
+            to_json(struct($"n_name".as("name"),
+              ($"n_nationkey".cast("long") * 1000 + $"n_regionkey")
+                .as("pop"))).as("doc_json"))
+          .write.format(fmt).option("path", s"$dir/range_$g/data.json")
+          .mode("overwrite").save()
+      }
+      val tbl = s"graft_fns.pot.`$dir/*/data.json" +
+        "?shred=name=name:string,pop=pop:bigint`"
+      s.sql(
+        s"""SELECT key, name, pop FROM $tbl
+           |WHERE pop < 6000
+           |ORDER BY key""".stripMargin)
+        .localCheckpoint(true)
     }
-    val tbl = s"graft_fns.pot.`$dir/*/data.json" +
-      "?shred=name=name:string,pop=pop:bigint`"
-    val out = s.sql(
-      s"""SELECT key, name, pop FROM $tbl
-         |WHERE pop < 6000
-         |ORDER BY key""".stripMargin)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val catalogShredSql: String =
@@ -1297,28 +1279,27 @@ object Extensibility {
     */
   def topnObjectSkip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u67").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-    (0 to 4).foreach { g =>
-      nat.filter(floor($"n_nationkey" / 5) === g)
-        .select(lit("").as("pot_file"),
-          concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
-            .as("key"),
-          to_json(struct($"n_name".as("name"))).as("doc_json"))
-        .write.format(fmt).option("path", s"$dir/range_$g/data.json")
-        .mode("overwrite").save()
+    Scratch.withDir("graft-u67") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+      (0 to 4).foreach { g =>
+        nat.filter(floor($"n_nationkey" / 5) === g)
+          .select(lit("").as("pot_file"),
+            concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
+              .as("key"),
+            to_json(struct($"n_name".as("name"))).as("doc_json"))
+          .write.format(fmt).option("path", s"$dir/range_$g/data.json")
+          .mode("overwrite").save()
+      }
+      val df = s.read.format(fmt).option("path", s"$dir/*/data.json").load()
+      def probe(d0: org.apache.spark.sql.DataFrame, label: String) =
+        d0.select(lit(label).as("dir"), $"key",
+          get_json_object($"doc_json", "$.name").as("name"))
+      probe(df.orderBy($"key".asc).limit(4), "asc")
+        .unionAll(probe(df.orderBy($"key".desc).limit(4), "desc"))
+        .orderBy($"dir", $"key")
+        .localCheckpoint(true)
     }
-    val df = s.read.format(fmt).option("path", s"$dir/*/data.json").load()
-    def probe(d0: org.apache.spark.sql.DataFrame, label: String) =
-      d0.select(lit(label).as("dir"), $"key",
-        get_json_object($"doc_json", "$.name").as("name"))
-    val out = probe(df.orderBy($"key".asc).limit(4), "asc")
-      .unionAll(probe(df.orderBy($"key".desc).limit(4), "desc"))
-      .orderBy($"dir", $"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val topnObjectSkipSql: String =
@@ -1357,64 +1338,63 @@ object Extensibility {
     */
   def statsOnlyAgg(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u68").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-    (0 to 4).foreach { g =>
-      nat.filter(floor($"n_nationkey" / 5) === g)
-        .select(lit("").as("pot_file"),
-          concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
-            .as("key"),
-          to_json(struct($"n_name".as("name"),
-            when($"n_regionkey" =!= 2,
-              $"n_nationkey".cast("long") * 1000 + $"n_regionkey")
-              .as("pop"))).as("doc_json"))
-        .write.format(fmt).option("path", s"$dir/range_$g/data.json")
-        .mode("overwrite").save()
-    }
-    val df = s.read.format(fmt).option("path", s"$dir/*/data.json")
-      .option("shred", "name=name:string,pop=pop:bigint").load()
-    def agg(src: org.apache.spark.sql.DataFrame) =
-      src.groupBy($"pot_file")
-        .agg(count(lit(1)).as("n_rows"),
-          min($"key").as("min_key"), max($"key").as("max_key"),
-          count($"pop").as("n_pop"),
-          min($"pop").as("min_pop"), max($"pop").as("max_pop"),
-          min($"name").as("min_name"), max($"name").as("max_name"))
-    // leg A: no row-dropping predicate — all five objects stats-only
-    val qa = agg(df)
-    // leg B: pushed key prefix DROPS rows — gate declines, objects open
-    val qb = agg(df.filter($"key".startsWith("k1")))
-    def run(q: org.apache.spark.sql.DataFrame, leg: String)
-        : (Seq[org.apache.spark.sql.Row], Long) = {
-      val rows = q.collect().toSeq
-      // the metric lives on q's OWN executed plan (the r17 rule: a new
-      // QueryExecution never ticks)
-      val m = q.queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2
-          .BatchScanExec => b
-      }.map(_.metrics.get("statsOnlyAggObjects").map(_.value)
-        .getOrElse(0L)).sum
-      (rows, m)
-    }
-    val (ra, ma) = run(qa, "stats")
-    val (rb, mb) = run(qb, "opened")
-    val rowsOut = (ra.map(("stats", ma, _)) ++ rb.map(("opened", mb, _)))
-      .map { case (leg, m, r) =>
-        (leg, m,
-          r.getString(0).replaceAll("^.*/(range_\\d)/data\\.json$", "$1"),
-          r.getLong(1), r.getString(2), r.getString(3), r.getLong(4),
-          if (r.isNullAt(5)) null else java.lang.Long.valueOf(r.getLong(5)),
-          if (r.isNullAt(6)) null else java.lang.Long.valueOf(r.getLong(6)),
-          r.getString(7), r.getString(8))
+    Scratch.withDir("graft-u68") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+      (0 to 4).foreach { g =>
+        nat.filter(floor($"n_nationkey" / 5) === g)
+          .select(lit("").as("pot_file"),
+            concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
+              .as("key"),
+            to_json(struct($"n_name".as("name"),
+              when($"n_regionkey" =!= 2,
+                $"n_nationkey".cast("long") * 1000 + $"n_regionkey")
+                .as("pop"))).as("doc_json"))
+          .write.format(fmt).option("path", s"$dir/range_$g/data.json")
+          .mode("overwrite").save()
       }
-    val out = rowsOut.toDF("leg", "stats_only", "pot", "n_rows",
-        "min_key", "max_key", "n_pop", "min_pop", "max_pop",
-        "min_name", "max_name")
-      .orderBy($"leg", $"pot")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+      val df = s.read.format(fmt).option("path", s"$dir/*/data.json")
+        .option("shred", "name=name:string,pop=pop:bigint").load()
+      def agg(src: org.apache.spark.sql.DataFrame) =
+        src.groupBy($"pot_file")
+          .agg(count(lit(1)).as("n_rows"),
+            min($"key").as("min_key"), max($"key").as("max_key"),
+            count($"pop").as("n_pop"),
+            min($"pop").as("min_pop"), max($"pop").as("max_pop"),
+            min($"name").as("min_name"), max($"name").as("max_name"))
+      // leg A: no row-dropping predicate — all five objects stats-only
+      val qa = agg(df)
+      // leg B: pushed key prefix DROPS rows — gate declines, objects open
+      val qb = agg(df.filter($"key".startsWith("k1")))
+      def run(q: org.apache.spark.sql.DataFrame, leg: String)
+          : (Seq[org.apache.spark.sql.Row], Long) = {
+        val rows = q.collect().toSeq
+        // the metric lives on q's OWN executed plan (the r17 rule: a new
+        // QueryExecution never ticks)
+        val m = q.queryExecution.executedPlan.collect {
+          case b: org.apache.spark.sql.execution.datasources.v2
+            .BatchScanExec => b
+        }.map(_.metrics.get("statsOnlyAggObjects").map(_.value)
+          .getOrElse(0L)).sum
+        (rows, m)
+      }
+      val (ra, ma) = run(qa, "stats")
+      val (rb, mb) = run(qb, "opened")
+      val rowsOut = (ra.map(("stats", ma, _)) ++ rb.map(("opened", mb, _)))
+        .map { case (leg, m, r) =>
+          (leg, m,
+            r.getString(0).replaceAll("^.*/(range_\\d)/data\\.json$", "$1"),
+            r.getLong(1), r.getString(2), r.getString(3), r.getLong(4),
+            if (r.isNullAt(5)) null else java.lang.Long.valueOf(r.getLong(5)),
+            if (r.isNullAt(6)) null else java.lang.Long.valueOf(r.getLong(6)),
+            r.getString(7), r.getString(8))
+        }
+      rowsOut.toDF("leg", "stats_only", "pot", "n_rows",
+          "min_key", "max_key", "n_pop", "min_pop", "max_pop",
+          "min_name", "max_name")
+        .orderBy($"leg", $"pot")
+        .localCheckpoint(true)
+    }
   }
 
   val statsOnlyAggSql: String =
@@ -1470,65 +1450,64 @@ object Extensibility {
     */
   def deltaChainZmapPrune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u69").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name").collect().toSeq
-      .filter(_.getInt(0) < 24)
-    def keyOf(nk: Int): String = f"${('a' + nk / 8).toChar}$nk%02d"
-    def doc(name: String) = s"""{"name": "$name"}"""
-    (0 to 2).foreach { g =>
-      val mine = nat.filter(r => r.getInt(0) / 8 == g)
-      val pot = s"$dir/chain_$g/data.json"
-      // covering snapshot: the first half of the pot's key domain
-      mine.filter(_.getInt(0) % 8 < 4)
-        .map(r => ("", keyOf(r.getInt(0)), doc(r.getString(1))))
-        .toDF("pot_file", "key", "doc_json")
-        .write.format(fmt).option("path", pot).mode("overwrite").save()
-      // one delta epoch upserts the second half — the chain stays
-      // delta-headed (run 1 << compactEvery)
-      val fs = new org.apache.hadoop.fs.Path(pot)
-        .getFileSystem(graft.kv.HadoopConf.get)
-      val staging = new org.apache.hadoop.fs.Path(s"$dir/chain_$g/.stage")
-      fs.mkdirs(staging)
-      val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
-      val out = fs.create(frag, false)
-      try out.write(mine.filter(_.getInt(0) % 8 >= 4)
-        .map(r => s"""{"k": "${keyOf(r.getInt(0))}", """ +
-          s""""d": ${doc(r.getString(1))}}""")
-        .mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      new graft.sources.PotV2Write(pot,
-        graft.sources.PotV2Source.Schema, s"u69e$g", truncateFirst = false)
-        .commitDeltaEpoch(
-          Array(graft.sources.PotFragmentMessage(0, frag.toString)),
-          s"u69e$g", staging)
+    Scratch.withDir("graft-u69") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name").collect().toSeq
+        .filter(_.getInt(0) < 24)
+      def keyOf(nk: Int): String = f"${('a' + nk / 8).toChar}$nk%02d"
+      def doc(name: String) = s"""{"name": "$name"}"""
+      (0 to 2).foreach { g =>
+        val mine = nat.filter(r => r.getInt(0) / 8 == g)
+        val pot = s"$dir/chain_$g/data.json"
+        // covering snapshot: the first half of the pot's key domain
+        mine.filter(_.getInt(0) % 8 < 4)
+          .map(r => ("", keyOf(r.getInt(0)), doc(r.getString(1))))
+          .toDF("pot_file", "key", "doc_json")
+          .write.format(fmt).option("path", pot).mode("overwrite").save()
+        // one delta epoch upserts the second half — the chain stays
+        // delta-headed (run 1 << compactEvery)
+        val fs = new org.apache.hadoop.fs.Path(pot)
+          .getFileSystem(graft.kv.HadoopConf.get)
+        val staging = new org.apache.hadoop.fs.Path(s"$dir/chain_$g/.stage")
+        fs.mkdirs(staging)
+        val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
+        val out = fs.create(frag, false)
+        try out.write(mine.filter(_.getInt(0) % 8 >= 4)
+          .map(r => s"""{"k": "${keyOf(r.getInt(0))}", """ +
+            s""""d": ${doc(r.getString(1))}}""")
+          .mkString("", "\n", "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+        new graft.sources.PotV2Write(pot,
+          graft.sources.PotV2Source.Schema, s"u69e$g", truncateFirst = false)
+          .commitDeltaEpoch(
+            Array(graft.sources.PotFragmentMessage(0, frag.toString)),
+            s"u69e$g", staging)
+      }
+      def probeParts(filters: org.apache.spark.sql.sources.Filter*): Long = {
+        val b = new graft.sources.PotV2ScanBuilder(s"$dir/*/data.json")
+        b.pushFilters(filters.toArray)
+        b.build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]
+          .planInputPartitions().length.toLong
+      }
+      import org.apache.spark.sql.sources.{EqualTo, In, StringStartsWith}
+      val df = s.read.format(fmt).option("path", s"$dir/*/data.json").load()
+      def leg(label: String, parts: Long,
+          src: org.apache.spark.sql.DataFrame) =
+        src.agg(count(lit(1)).as("n_rows"), min($"key").as("min_key"),
+            max($"key").as("max_key"))
+          .select(lit(label).as("leg"), lit(parts).as("parts"),
+            $"n_rows", $"min_key", $"max_key")
+      leg("exact", probeParts(In("key", Array("a02", "a06"))),
+          df.filter($"key".isin("a02", "a06")))
+        .unionByName(leg("miss", probeParts(EqualTo("key", "z99")),
+          df.filter($"key" === "z99")))
+        .unionByName(leg("prefix", probeParts(StringStartsWith("key", "b1")),
+          df.filter($"key".startsWith("b1"))))
+        .orderBy($"leg")
+        .localCheckpoint(true)
     }
-    def probeParts(filters: org.apache.spark.sql.sources.Filter*): Long = {
-      val b = new graft.sources.PotV2ScanBuilder(s"$dir/*/data.json")
-      b.pushFilters(filters.toArray)
-      b.build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]
-        .planInputPartitions().length.toLong
-    }
-    import org.apache.spark.sql.sources.{EqualTo, In, StringStartsWith}
-    val df = s.read.format(fmt).option("path", s"$dir/*/data.json").load()
-    def leg(label: String, parts: Long,
-        src: org.apache.spark.sql.DataFrame) =
-      src.agg(count(lit(1)).as("n_rows"), min($"key").as("min_key"),
-          max($"key").as("max_key"))
-        .select(lit(label).as("leg"), lit(parts).as("parts"),
-          $"n_rows", $"min_key", $"max_key")
-    val out = leg("exact", probeParts(In("key", Array("a02", "a06"))),
-        df.filter($"key".isin("a02", "a06")))
-      .unionByName(leg("miss", probeParts(EqualTo("key", "z99")),
-        df.filter($"key" === "z99")))
-      .unionByName(leg("prefix", probeParts(StringStartsWith("key", "b1")),
-        df.filter($"key".startsWith("b1"))))
-      .orderBy($"leg")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val deltaChainZmapPruneSql: String =
@@ -1569,39 +1548,38 @@ object Extensibility {
     */
   def runtimeKeyPrune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u72").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-    (0 to 4).foreach { g =>
-      nat.filter(floor($"n_nationkey" / 5) === g)
-        .select(lit("").as("pot_file"),
-          concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
-            .as("key"),
-          to_json(struct($"n_name".as("name"))).as("doc_json"))
-        .write.format(fmt).option("path", s"$dir/range_$g/data.json")
-        .mode("overwrite").save()
+    Scratch.withDir("graft-u72") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+      (0 to 4).foreach { g =>
+        nat.filter(floor($"n_nationkey" / 5) === g)
+          .select(lit("").as("pot_file"),
+            concat(lit("k"), lpad($"n_nationkey".cast("string"), 2, "0"))
+              .as("key"),
+            to_json(struct($"n_name".as("name"))).as("doc_json"))
+          .write.format(fmt).option("path", s"$dir/range_$g/data.json")
+          .mode("overwrite").save()
+      }
+      // direct scan contract: the same re-plan a DPP subquery delivers
+      val scan = new graft.sources.PotV2ScanBuilder(s"$dir/*/data.json")
+        .build().asInstanceOf[
+          org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
+      val batch = scan
+        .asInstanceOf[org.apache.spark.sql.connector.read.Batch]
+      val partsStatic = batch.planInputPartitions().length.toLong
+      scan.filter(Array[org.apache.spark.sql.sources.Filter](
+        org.apache.spark.sql.sources.In("key", Array("k03", "k17"))))
+      val partsRuntime = batch.planInputPartitions().length.toLong
+      val df = s.read.format(fmt).option("path", s"$dir/*/data.json").load()
+      val dim = Seq(("k03", 1L), ("k17", 2L)).toDF("dk", "tag")
+      df.join(broadcast(dim), df("key") === dim("dk"))
+        .select($"key", get_json_object($"doc_json", "$.name").as("name"),
+          $"tag")
+        .crossJoin(Seq((partsStatic, partsRuntime))
+          .toDF("parts_static", "parts_runtime"))
+        .orderBy($"key")
+        .localCheckpoint(true)
     }
-    // direct scan contract: the same re-plan a DPP subquery delivers
-    val scan = new graft.sources.PotV2ScanBuilder(s"$dir/*/data.json")
-      .build().asInstanceOf[
-        org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
-    val batch = scan
-      .asInstanceOf[org.apache.spark.sql.connector.read.Batch]
-    val partsStatic = batch.planInputPartitions().length.toLong
-    scan.filter(Array[org.apache.spark.sql.sources.Filter](
-      org.apache.spark.sql.sources.In("key", Array("k03", "k17"))))
-    val partsRuntime = batch.planInputPartitions().length.toLong
-    val df = s.read.format(fmt).option("path", s"$dir/*/data.json").load()
-    val dim = Seq(("k03", 1L), ("k17", 2L)).toDF("dk", "tag")
-    val out = df.join(broadcast(dim), df("key") === dim("dk"))
-      .select($"key", get_json_object($"doc_json", "$.name").as("name"),
-        $"tag")
-      .crossJoin(Seq((partsStatic, partsRuntime))
-        .toDF("parts_static", "parts_runtime"))
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val runtimeKeyPruneSql: String =
@@ -1634,74 +1612,73 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u70").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name").collect().toSeq
-    def keyOf(nk: Int) = f"k$nk%02d"
-    def doc(name: String) = s"""{"name": "$name"}"""
-    def snap(g: Int, nks: Range): String = {
-      val pot = s"$dir/range_$g/data.json"
-      nat.filter(r => nks.contains(r.getInt(0)))
-        .map(r => ("", keyOf(r.getInt(0)), doc(r.getString(1))))
-        .toDF("pot_file", "key", "doc_json")
-        .write.format(fmt).option("path", pot).mode("overwrite").save()
-      pot
-    }
-    snap(0, 0 to 4)                    // sidecar present
-    val p1 = snap(1, 5 to 9)           // sidecar deleted below
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(graft.kv.HadoopConf.get)
-    fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_1"))
-      .map(_.getPath).filter(_.getName.startsWith(".zmap-"))
-      .foreach(z => fs.delete(z, false))
-    val p2 = snap(2, 10 to 12)         // then a delta epoch -> delta head
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/range_2/.st")
-    fs.mkdirs(staging)
-    val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
-    val out0 = fs.create(frag, false)
-    try out0.write(nat.filter(r => (13 to 14).contains(r.getInt(0)))
-      .map(r => s"""{"k": "${keyOf(r.getInt(0))}", """ +
-        s""""d": ${doc(r.getString(1))}}""")
-      .mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out0.close()
-    new graft.sources.PotV2Write(p2, graft.sources.PotV2Source.Schema,
-      "u70e", truncateFirst = false)
-      .commitDeltaEpoch(
-        Array(graft.sources.PotFragmentMessage(0, frag.toString)),
-        "u70e", staging)
-    def parts(k: String): Long = {
-      val b = new graft.sources.PotV2ScanBuilder(s"$dir/*/data.json")
-      b.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("key", k)))
-      b.build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]
-        .planInputPartitions().length.toLong
-    }
-    val partsPre = parts("k20") // outside every domain: only the
-                                // sidecar-less pot must admit
-    val statuses = s.sql(
-      s"CALL graft_fns.sys.ensure_stats('$dir/*/data.json')")
-      .as[String].collect().toSeq.sorted
-      .map { st =>
-        // the pot path itself carries a scheme colon: split on the LAST
-        val i = st.lastIndexOf(':')
-        (st.substring(0, i)
-          .replaceAll("^.*/(range_\\d)/data\\.json$", "$1"),
-          st.substring(i + 1))
+    Scratch.withDir("graft-u70") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name").collect().toSeq
+      def keyOf(nk: Int) = f"k$nk%02d"
+      def doc(name: String) = s"""{"name": "$name"}"""
+      def snap(g: Int, nks: Range): String = {
+        val pot = s"$dir/range_$g/data.json"
+        nat.filter(r => nks.contains(r.getInt(0)))
+          .map(r => ("", keyOf(r.getInt(0)), doc(r.getString(1))))
+          .toDF("pot_file", "key", "doc_json")
+          .write.format(fmt).option("path", pot).mode("overwrite").save()
+        pot
       }
-    val partsPost = parts("k20")
-    val k07 = s.read.format(fmt).option("path", s"$dir/*/data.json").load()
-      .filter($"key" === "k07")
-      .select(get_json_object($"doc_json", "$.name")).as[String]
-      .collect().toSeq
-    val out = statuses.toDF("pot", "status")
-      .crossJoin(Seq((partsPre, partsPost, k07.length.toLong,
-        k07.headOption.orNull))
-        .toDF("parts_pre", "parts_post", "n_k07", "k07_name"))
-      .orderBy($"pot")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+      snap(0, 0 to 4)                    // sidecar present
+      val p1 = snap(1, 5 to 9)           // sidecar deleted below
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(graft.kv.HadoopConf.get)
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_1"))
+        .map(_.getPath).filter(_.getName.startsWith(".zmap-"))
+        .foreach(z => fs.delete(z, false))
+      val p2 = snap(2, 10 to 12)         // then a delta epoch -> delta head
+      val staging = new org.apache.hadoop.fs.Path(s"$dir/range_2/.st")
+      fs.mkdirs(staging)
+      val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
+      val out0 = fs.create(frag, false)
+      try out0.write(nat.filter(r => (13 to 14).contains(r.getInt(0)))
+        .map(r => s"""{"k": "${keyOf(r.getInt(0))}", """ +
+          s""""d": ${doc(r.getString(1))}}""")
+        .mkString("", "\n", "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out0.close()
+      new graft.sources.PotV2Write(p2, graft.sources.PotV2Source.Schema,
+        "u70e", truncateFirst = false)
+        .commitDeltaEpoch(
+          Array(graft.sources.PotFragmentMessage(0, frag.toString)),
+          "u70e", staging)
+      def parts(k: String): Long = {
+        val b = new graft.sources.PotV2ScanBuilder(s"$dir/*/data.json")
+        b.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("key", k)))
+        b.build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]
+          .planInputPartitions().length.toLong
+      }
+      val partsPre = parts("k20") // outside every domain: only the
+                                  // sidecar-less pot must admit
+      val statuses = s.sql(
+        s"CALL graft_fns.sys.ensure_stats('$dir/*/data.json')")
+        .as[String].collect().toSeq.sorted
+        .map { st =>
+          // the pot path itself carries a scheme colon: split on the LAST
+          val i = st.lastIndexOf(':')
+          (st.substring(0, i)
+            .replaceAll("^.*/(range_\\d)/data\\.json$", "$1"),
+            st.substring(i + 1))
+        }
+      val partsPost = parts("k20")
+      val k07 = s.read.format(fmt).option("path", s"$dir/*/data.json").load()
+        .filter($"key" === "k07")
+        .select(get_json_object($"doc_json", "$.name")).as[String]
+        .collect().toSeq
+      statuses.toDF("pot", "status")
+        .crossJoin(Seq((partsPre, partsPost, k07.length.toLong,
+          k07.headOption.orNull))
+          .toDF("parts_pre", "parts_post", "n_k07", "k07_name"))
+        .orderBy($"pot")
+        .localCheckpoint(true)
+    }
   }
 
   val ensureStatsCallSql: String =
@@ -1733,80 +1710,79 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u73").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name").collect().toSeq
-    def keyOf(nk: Int) = f"k$nk%02d"
-    def doc(name: String) = s"""{"name": "$name"}"""
-    def snap(g: Int, nks: Range): String = {
-      val pot = s"$dir/range_$g/data.json"
-      nat.filter(r => nks.contains(r.getInt(0)))
-        .map(r => ("", keyOf(r.getInt(0)), doc(r.getString(1))))
-        .toDF("pot_file", "key", "doc_json")
-        .write.format(fmt).option("path", pot).mode("overwrite").save()
-      pot
+    Scratch.withDir("graft-u73") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name").collect().toSeq
+      def keyOf(nk: Int) = f"k$nk%02d"
+      def doc(name: String) = s"""{"name": "$name"}"""
+      def snap(g: Int, nks: Range): String = {
+        val pot = s"$dir/range_$g/data.json"
+        nat.filter(r => nks.contains(r.getInt(0)))
+          .map(r => ("", keyOf(r.getInt(0)), doc(r.getString(1))))
+          .toDF("pot_file", "key", "doc_json")
+          .write.format(fmt).option("path", pot).mode("overwrite").save()
+        pot
+      }
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(graft.kv.HadoopConf.get)
+      def sidecarsOf(g: Int) =
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_$g"))
+          .map(_.getPath).filter(_.getName.startsWith(".zmap-"))
+      snap(0, 0 to 3)                       // healthy
+      snap(1, 4 to 7)                       // sidecar stripped below
+      sidecarsOf(1).foreach(z => fs.delete(z, false))
+      val p2 = snap(2, 8 to 10)             // + delta epoch: healthy chain
+      val staging = new org.apache.hadoop.fs.Path(s"$dir/range_2/.st")
+      fs.mkdirs(staging)
+      val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
+      val o0 = fs.create(frag, false)
+      try o0.write(nat.filter(r => (11 to 12).contains(r.getInt(0)))
+        .map(r => s"""{"k": "${keyOf(r.getInt(0))}", """ +
+          s""""d": ${doc(r.getString(1))}}""")
+        .mkString("", "\n", "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally o0.close()
+      new graft.sources.PotV2Write(p2, graft.sources.PotV2Source.Schema,
+        "u73e", truncateFirst = false)
+        .commitDeltaEpoch(
+          Array(graft.sources.PotFragmentMessage(0, frag.toString)),
+          "u73e", staging)
+      snap(3, 13 to 15)                     // head ARTIFACT deleted below
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_3"))
+        .map(_.getPath).filter(_.getName.startsWith(".snap-"))
+        .foreach(a => fs.delete(a, false))
+      // legacy: raw object, no commit chain
+      val leg = new org.apache.hadoop.fs.Path(s"$dir/range_4/data.json")
+      fs.mkdirs(leg.getParent)
+      val o1 = fs.create(leg, false)
+      try o1.write("""{"x": {"name": "L"}}"""
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally o1.close()
+      snap(5, 16 to 18)                     // sidecar TORN below
+      sidecarsOf(5).foreach { z =>
+        val o2 = fs.create(z, true)
+        try o2.write("{\"kmi".getBytes(
+          java.nio.charset.StandardCharsets.UTF_8))
+        finally o2.close()
+      }
+      def check(): Map[String, String] =
+        s.sql(s"CALL graft_fns.sys.check_pot('$dir/*/data.json')")
+          .as[String].collect().toSeq.map { st =>
+            val i = st.lastIndexOf(':')
+            (st.substring(0, i)
+              .replaceAll("^.*/(range_\\d)/data\\.json$", "$1"),
+              st.substring(i + 1))
+          }.toMap
+      val before = check()
+      s.sql(s"CALL graft_fns.sys.ensure_stats('$dir/*/data.json')").collect()
+      val after = check()
+      before.toSeq.sortBy(_._1)
+        .map { case (pot, st) => (pot, st, after(pot)) }
+        .toDF("pot", "status_before", "status_after")
+        .orderBy($"pot")
+        .localCheckpoint(true)
     }
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(graft.kv.HadoopConf.get)
-    def sidecarsOf(g: Int) =
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_$g"))
-        .map(_.getPath).filter(_.getName.startsWith(".zmap-"))
-    snap(0, 0 to 3)                       // healthy
-    snap(1, 4 to 7)                       // sidecar stripped below
-    sidecarsOf(1).foreach(z => fs.delete(z, false))
-    val p2 = snap(2, 8 to 10)             // + delta epoch: healthy chain
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/range_2/.st")
-    fs.mkdirs(staging)
-    val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
-    val o0 = fs.create(frag, false)
-    try o0.write(nat.filter(r => (11 to 12).contains(r.getInt(0)))
-      .map(r => s"""{"k": "${keyOf(r.getInt(0))}", """ +
-        s""""d": ${doc(r.getString(1))}}""")
-      .mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally o0.close()
-    new graft.sources.PotV2Write(p2, graft.sources.PotV2Source.Schema,
-      "u73e", truncateFirst = false)
-      .commitDeltaEpoch(
-        Array(graft.sources.PotFragmentMessage(0, frag.toString)),
-        "u73e", staging)
-    snap(3, 13 to 15)                     // head ARTIFACT deleted below
-    fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_3"))
-      .map(_.getPath).filter(_.getName.startsWith(".snap-"))
-      .foreach(a => fs.delete(a, false))
-    // legacy: raw object, no commit chain
-    val leg = new org.apache.hadoop.fs.Path(s"$dir/range_4/data.json")
-    fs.mkdirs(leg.getParent)
-    val o1 = fs.create(leg, false)
-    try o1.write("""{"x": {"name": "L"}}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally o1.close()
-    snap(5, 16 to 18)                     // sidecar TORN below
-    sidecarsOf(5).foreach { z =>
-      val o2 = fs.create(z, true)
-      try o2.write("{\"kmi".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally o2.close()
-    }
-    def check(): Map[String, String] =
-      s.sql(s"CALL graft_fns.sys.check_pot('$dir/*/data.json')")
-        .as[String].collect().toSeq.map { st =>
-          val i = st.lastIndexOf(':')
-          (st.substring(0, i)
-            .replaceAll("^.*/(range_\\d)/data\\.json$", "$1"),
-            st.substring(i + 1))
-        }.toMap
-    val before = check()
-    s.sql(s"CALL graft_fns.sys.ensure_stats('$dir/*/data.json')").collect()
-    val after = check()
-    val out = before.toSeq.sortBy(_._1)
-      .map { case (pot, st) => (pot, st, after(pot)) }
-      .toDF("pot", "status_before", "status_after")
-      .orderBy($"pot")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val checkPotCallSql: String =
@@ -1846,33 +1822,23 @@ object Extensibility {
     val ss = s.newSession()
     ss.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val dir = java.nio.file.Files.createTempDirectory("graft-u51").toString
-    val rows = Tables.nation(ss, d)
-      .select($"n_nationkey", $"n_name").collect()
-    def potJson(parity: Int): String = {
-      val members = rows.filter(_.getInt(0) % 2 == parity)
-      (members.map(r =>
-        s""""n${r.getInt(0)}": {"name": "${r.getString(1)}"}""") :+
-        s""""_meta": {"n": ${members.length}}""").mkString("{", ", ", "}")
+    Scratch.withDir("graft-u51") { dir =>
+      val rows = Tables.nation(ss, d)
+        .select($"n_nationkey", $"n_name").collect()
+      writeParityPots(dir, rows, r => s"""{"name": "${r.getString(1)}"}""",
+        members => Seq(s""""_meta": {"n": ${members.length}}"""))
+      val df = ss.read.format(classOf[graft.sources.PotV2Source].getName)
+        .option("path", s"$dir/*/data.json").load()
+      val entries = df.filter($"key" =!= "_meta").select($"pot_file", $"key")
+      val manifest = df.filter($"key" === "_meta").select($"pot_file",
+        get_json_object($"doc_json", "$.n").cast("long").as("n_in_file"))
+      entries.join(manifest, "pot_file")
+        .select(
+          regexp_extract($"pot_file", "([^/]+)/data\\.json$", 1).as("pot"),
+          $"key", $"n_in_file")
+        .orderBy($"pot", $"key")
+        .localCheckpoint(true)
     }
-    Seq(0, 1).foreach { par =>
-      val pd = java.nio.file.Paths.get(dir, s"nation_$par")
-      java.nio.file.Files.createDirectories(pd)
-      java.nio.file.Files.writeString(pd.resolve("data.json"), potJson(par))
-    }
-    val df = ss.read.format(classOf[graft.sources.PotV2Source].getName)
-      .option("path", s"$dir/*/data.json").load()
-    val entries = df.filter($"key" =!= "_meta").select($"pot_file", $"key")
-    val manifest = df.filter($"key" === "_meta").select($"pot_file",
-      get_json_object($"doc_json", "$.n").cast("long").as("n_in_file"))
-    val out = entries.join(manifest, "pot_file")
-      .select(
-        regexp_extract($"pot_file", "([^/]+)/data\\.json$", 1).as("pot"),
-        $"key", $"n_in_file")
-      .orderBy($"pot", $"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val storagePartitionedJoinSql: String =
@@ -1910,30 +1876,29 @@ object Extensibility {
       classOf[graft.sources.GraftFunctionCatalog].getName)
     ss.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val dir = java.nio.file.Files.createTempDirectory("graft-u54").toString
-    val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val rows = Tables.nation(ss, d)
-      .select($"n_nationkey", $"n_name", $"n_regionkey").collect().toSeq
-    def write(sub: String, doc: org.apache.spark.sql.Row => String): String = {
-      val root = s"$dir/$sub"
-      val data = rows.map(r => ("", s"n${r.getInt(0)}", doc(r)))
-      ss.createDataFrame(data).toDF("pot_file", "key", "doc_json")
-        .write.format(fmt).option("path", root).option("buckets", "4")
-        .mode("append").save()
-      root
+    Scratch.withDir("graft-u54") { dir =>
+      val fmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val rows = Tables.nation(ss, d)
+        .select($"n_nationkey", $"n_name", $"n_regionkey").collect().toSeq
+      def write(sub: String, doc: org.apache.spark.sql.Row => String): String = {
+        val root = s"$dir/$sub"
+        val data = rows.map(r => ("", s"n${r.getInt(0)}", doc(r)))
+        ss.createDataFrame(data).toDF("pot_file", "key", "doc_json")
+          .write.format(fmt).option("path", root).option("buckets", "4")
+          .mode("append").save()
+        root
+      }
+      val names = write("names", r => s"""{"name": "${r.getString(1)}"}""")
+      val regions = write("regions", r => s"""{"region": ${r.getInt(2)}}""")
+      def readStore(root: String) = ss.read.table(s"graft_fns.store.`$root`")
+      readStore(names).select($"key",
+          get_json_object($"doc_json", "$.name").as("name"))
+        .join(readStore(regions).select($"key",
+          get_json_object($"doc_json", "$.region").cast("long").as("region")),
+          Seq("key"))
+        .orderBy($"key")
+        .localCheckpoint(true)
     }
-    val names = write("names", r => s"""{"name": "${r.getString(1)}"}""")
-    val regions = write("regions", r => s"""{"region": ${r.getInt(2)}}""")
-    def readStore(root: String) = ss.read.table(s"graft_fns.store.`$root`")
-    val out = readStore(names).select($"key",
-        get_json_object($"doc_json", "$.name").as("name"))
-      .join(readStore(regions).select($"key",
-        get_json_object($"doc_json", "$.region").cast("long").as("region")),
-        Seq("key"))
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val bucketedKeySpjSql: String =
@@ -1958,54 +1923,52 @@ object Extensibility {
     */
   def bucketedTimestampAsOf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-u55").toString
-    val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val nat = Tables.nation(s, d)
-    def write(df: org.apache.spark.sql.DataFrame): Unit = df.select(
-        lit("").as("pot_file"),
-        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-        to_json(struct($"n_name".as("name"), $"upd")).as("doc_json"))
-      .write.format(fmt).option("path", root).option("buckets", "4")
-      .mode("append").save()
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(graft.kv.HadoopConf.get)
-    def lastMtime: Long = graft.sources.BucketedPotV2Source
-      .existingBuckets(root, 4).map { b =>
-        val commits = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs
-          .Path(graft.sources.BucketedPotV2Source.bucketPot(root, b))
-          .getParent, ".commits")
-        graft.kv.CommitMarker.committedGenerations(fs, commits).map(g =>
-          fs.getFileStatus(new org.apache.hadoop.fs.Path(
-            commits, g.toString)).getModificationTime).max
-      }.max
-    write(nat.withColumn("upd", lit(0)))                       // wave 1
-    // the v1 instant must postdate wave 1's ENTIRE statement window
-    // (bucket commits AND the barrier's doneTs — an instant between the
-    // commits and complete() correctly replays the live reader's cap and
-    // reads the statement as not-yet-visible), and predate wave 2's
-    // intent: capture it AFTER the write returns, with mtime-granularity
-    // margin on both sides (u46's discipline)
-    val w1 = lastMtime
-    while (System.currentTimeMillis() <= w1 + 2) Thread.sleep(2)
-    val t1 = System.currentTimeMillis()
-    Thread.sleep(3)
-    write(nat.filter($"n_regionkey" === 0).withColumn("upd", lit(1)))
-    val w2 = math.max(lastMtime, System.currentTimeMillis())
-    while (System.currentTimeMillis() <= w2 + 2) Thread.sleep(2)
-    val t2 = System.currentTimeMillis()
-    require(t2 > t1 + 2, s"u55: wave instants not separated ($t1, $t2)")
-    def stateAt(ts: Long, label: String) = s.read.format(fmt)
-      .option("path", root).option("buckets", "4")
-      .option("timestampAsOf", ts.toString).load()
-      .agg(count(lit(1)).as("n"),
-        sum(get_json_object($"doc_json", "$.upd").cast("long")).as("n_upd"))
-      .select(lit(label).as("state"), $"n", $"n_upd")
-    val out = stateAt(t1, "v1").unionAll(stateAt(t2, "head"))
-      .orderBy($"state")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
+    Scratch.withDir("graft-u55") { root =>
+      val fmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val nat = Tables.nation(s, d)
+      def write(df: org.apache.spark.sql.DataFrame): Unit = df.select(
+          lit("").as("pot_file"),
+          concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+          to_json(struct($"n_name".as("name"), $"upd")).as("doc_json"))
+        .write.format(fmt).option("path", root).option("buckets", "4")
+        .mode("append").save()
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(graft.kv.HadoopConf.get)
+      def lastMtime: Long = graft.sources.BucketedPotV2Source
+        .existingBuckets(root, 4).map { b =>
+          val commits = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs
+            .Path(graft.sources.BucketedPotV2Source.bucketPot(root, b))
+            .getParent, ".commits")
+          graft.kv.CommitMarker.committedGenerations(fs, commits).map(g =>
+            fs.getFileStatus(new org.apache.hadoop.fs.Path(
+              commits, g.toString)).getModificationTime).max
+        }.max
+      write(nat.withColumn("upd", lit(0)))                       // wave 1
+      // the v1 instant must postdate wave 1's ENTIRE statement window
+      // (bucket commits AND the barrier's doneTs — an instant between the
+      // commits and complete() correctly replays the live reader's cap and
+      // reads the statement as not-yet-visible), and predate wave 2's
+      // intent: capture it AFTER the write returns, with mtime-granularity
+      // margin on both sides (u46's discipline)
+      val w1 = lastMtime
+      while (System.currentTimeMillis() <= w1 + 2) Thread.sleep(2)
+      val t1 = System.currentTimeMillis()
+      Thread.sleep(3)
+      write(nat.filter($"n_regionkey" === 0).withColumn("upd", lit(1)))
+      val w2 = math.max(lastMtime, System.currentTimeMillis())
+      while (System.currentTimeMillis() <= w2 + 2) Thread.sleep(2)
+      val t2 = System.currentTimeMillis()
+      require(t2 > t1 + 2, s"u55: wave instants not separated ($t1, $t2)")
+      def stateAt(ts: Long, label: String) = s.read.format(fmt)
+        .option("path", root).option("buckets", "4")
+        .option("timestampAsOf", ts.toString).load()
+        .agg(count(lit(1)).as("n"),
+          sum(get_json_object($"doc_json", "$.upd").cast("long")).as("n_upd"))
+        .select(lit(label).as("state"), $"n", $"n_upd")
+      stateAt(t1, "v1").unionAll(stateAt(t2, "head"))
+        .orderBy($"state")
+        .localCheckpoint(true)
+    }
   }
 
   val bucketedTimestampAsOfSql: String =
@@ -2036,38 +1999,29 @@ object Extensibility {
     */
   def aggShredPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u56").toString
-    val rows = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name", $"n_regionkey").collect()
-    def potJson(parity: Int): String =
-      rows.filter(_.getInt(0) % 2 == parity)
-        .map { r =>
-          val pop = if (r.getInt(2) == 2) ""
-            else s""", "pop": ${r.getInt(0) * 1000 + r.getInt(2)}"""
-          s""""n${r.getInt(0)}": {"name": "${r.getString(1)}"$pop}"""
-        }
-        .mkString("{", ", ", "}")
-    Seq(0, 1).foreach { par =>
-      val pd = java.nio.file.Paths.get(dir, s"nation_$par")
-      java.nio.file.Files.createDirectories(pd)
-      java.nio.file.Files.writeString(pd.resolve("data.json"), potJson(par))
+    Scratch.withDir("graft-u56") { dir =>
+      val rows = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name", $"n_regionkey").collect()
+      writeParityPots(dir, rows, { r =>
+        val pop = if (r.getInt(2) == 2) ""
+          else s""", "pop": ${r.getInt(0) * 1000 + r.getInt(2)}"""
+        s"""{"name": "${r.getString(1)}"$pop}"""
+      })
+      val df = s.read.format(classOf[graft.sources.PotV2Source].getName)
+        .option("path", s"$dir/*/data.json")
+        .option("shred", "name=name:string,pop=pop:bigint").load()
+      val grouped = df.groupBy($"pot_file")
+        .agg(count($"pop").as("n_pop"), min($"name").as("min_name"),
+          max($"pop").as("max_pop"))
+        .select(
+          regexp_extract($"pot_file", "([^/]+)/data\\.json$", 1).as("pot"),
+          $"n_pop", $"min_name", $"max_pop")
+      val global = df.agg(count($"pop").as("n_pop"),
+        min($"name").as("min_name"), max($"pop").as("max_pop"))
+        .select(lit("_all").as("pot"), $"n_pop", $"min_name", $"max_pop")
+      grouped.unionByName(global).orderBy($"pot")
+        .localCheckpoint(true)
     }
-    val df = s.read.format(classOf[graft.sources.PotV2Source].getName)
-      .option("path", s"$dir/*/data.json")
-      .option("shred", "name=name:string,pop=pop:bigint").load()
-    val grouped = df.groupBy($"pot_file")
-      .agg(count($"pop").as("n_pop"), min($"name").as("min_name"),
-        max($"pop").as("max_pop"))
-      .select(
-        regexp_extract($"pot_file", "([^/]+)/data\\.json$", 1).as("pot"),
-        $"n_pop", $"min_name", $"max_pop")
-    val global = df.agg(count($"pop").as("n_pop"),
-      min($"name").as("min_name"), max($"pop").as("max_pop"))
-      .select(lit("_all").as("pot"), $"n_pop", $"min_name", $"max_pop")
-    val out = grouped.unionByName(global).orderBy($"pot")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val aggShredPushdownSql: String =
@@ -2138,52 +2092,51 @@ object Extensibility {
   def chainInventory(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotChainTvf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u52").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name", $"n_regionkey").collect().toSeq
-    def doc(name: String) = s"""{"name": "$name"}"""
-    def write(sub: String, rows: Seq[org.apache.spark.sql.Row]): String = {
-      val pot = s"$dir/$sub/data.json"
-      rows.map(r => ("", s"n${r.getInt(0)}", doc(r.getString(1))))
-        .toDF("pot_file", "key", "doc_json")
-        .write.format(fmt).option("path", pot).mode("overwrite").save()
-      pot
+    Scratch.withDir("graft-u52") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name", $"n_regionkey").collect().toSeq
+      def doc(name: String) = s"""{"name": "$name"}"""
+      def write(sub: String, rows: Seq[org.apache.spark.sql.Row]): String = {
+        val pot = s"$dir/$sub/data.json"
+        rows.map(r => ("", s"n${r.getInt(0)}", doc(r.getString(1))))
+          .toDF("pot_file", "key", "doc_json")
+          .write.format(fmt).option("path", pot).mode("overwrite").save()
+        pot
+      }
+      // pot A: snapshot + two delta epochs (u50's chain shape)
+      val potA = write("a", nat)
+      val fsA = new org.apache.hadoop.fs.Path(potA)
+        .getFileSystem(graft.kv.HadoopConf.get)
+      def epoch(tag: String, lines: Seq[String]): Unit = {
+        val staging = new org.apache.hadoop.fs.Path(s"$dir/a/.staging-$tag")
+        fsA.mkdirs(staging)
+        val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
+        val out = fsA.create(frag, false)
+        try out.write(lines.mkString("", "\n", "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+        val w = new graft.sources.PotV2Write(potA,
+          graft.sources.PotV2Source.Schema, tag, truncateFirst = false,
+          graft.sources.PotV2Source.DefaultMaxObjectBytes)
+        w.commitDeltaEpoch(
+          Array(graft.sources.PotFragmentMessage(0, frag.toString)),
+          tag, staging)
+      }
+      epoch("u52e1", nat.filter(_.getInt(2) == 0).map(r =>
+        s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1))}}"""))
+      epoch("u52e2", nat.filter(_.getInt(2) == 1).map(r =>
+        s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1))}}"""))
+      // pot B: one snapshot generation, already compact
+      write("b", nat.filter(_.getInt(2) <= 1))
+      s.sql(
+        s"""SELECT regexp_extract(pot_file, '([^/]+)/data\\\\.json$$', 1)
+           |    AS pot,
+           |  head_gen, covering_gen, dgen_run, needs_compaction
+           |FROM graft_pot_chain('$dir/*/data.json')
+           |ORDER BY pot""".stripMargin)
+        .localCheckpoint(true)
     }
-    // pot A: snapshot + two delta epochs (u50's chain shape)
-    val potA = write("a", nat)
-    val fsA = new org.apache.hadoop.fs.Path(potA)
-      .getFileSystem(graft.kv.HadoopConf.get)
-    def epoch(tag: String, lines: Seq[String]): Unit = {
-      val staging = new org.apache.hadoop.fs.Path(s"$dir/a/.staging-$tag")
-      fsA.mkdirs(staging)
-      val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
-      val out = fsA.create(frag, false)
-      try out.write(lines.mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val w = new graft.sources.PotV2Write(potA,
-        graft.sources.PotV2Source.Schema, tag, truncateFirst = false,
-        graft.sources.PotV2Source.DefaultMaxObjectBytes)
-      w.commitDeltaEpoch(
-        Array(graft.sources.PotFragmentMessage(0, frag.toString)),
-        tag, staging)
-    }
-    epoch("u52e1", nat.filter(_.getInt(2) == 0).map(r =>
-      s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1))}}"""))
-    epoch("u52e2", nat.filter(_.getInt(2) == 1).map(r =>
-      s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1))}}"""))
-    // pot B: one snapshot generation, already compact
-    write("b", nat.filter(_.getInt(2) <= 1))
-    val out = s.sql(
-      s"""SELECT regexp_extract(pot_file, '([^/]+)/data\\\\.json$$', 1)
-         |    AS pot,
-         |  head_gen, covering_gen, dgen_run, needs_compaction
-         |FROM graft_pot_chain('$dir/*/data.json')
-         |ORDER BY pot""".stripMargin)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val chainInventorySql: String =
@@ -2211,26 +2164,25 @@ object Extensibility {
     */
   def listPagination(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u53").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    Tables.nation(s, d).select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"))).as("doc_json"))
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    val pages = (0 until 3).map { p =>
-      s.read.format(fmt).option("path", pot).load()
-        .select($"key").orderBy($"key")
-        .offset(p * 5).limit(5)
-        .withColumn("page", lit(p.toLong))
+    Scratch.withDir("graft-u53") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      Tables.nation(s, d).select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"))).as("doc_json"))
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      val pages = (0 until 3).map { p =>
+        s.read.format(fmt).option("path", pot).load()
+          .select($"key").orderBy($"key")
+          .offset(p * 5).limit(5)
+          .withColumn("page", lit(p.toLong))
+      }
+      pages.reduce(_ unionByName _)
+        .select($"page", $"key")
+        .orderBy($"page", $"key")
+        .localCheckpoint(true)
     }
-    val out = pages.reduce(_ unionByName _)
-      .select($"page", $"key")
-      .orderBy($"page", $"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val listPaginationSql: String =
@@ -2291,28 +2243,18 @@ object Extensibility {
   def sqlTvf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotTvf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2tvf").toString
-    val rows = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name", $"n_regionkey").collect()
-    def potJson(parity: Int): String =
-      rows.filter(_.getInt(0) % 2 == parity)
-        .map(r => s""""n${r.getInt(0)}": {"id": "n${r.getInt(0)}", """ +
-          s""""name": "${r.getString(1)}", "region": ${r.getInt(2)}}""")
-        .mkString("{", ", ", "}")
-    Seq(0, 1).foreach { par =>
-      val pd = java.nio.file.Paths.get(dir, s"nation_$par")
-      java.nio.file.Files.createDirectories(pd)
-      java.nio.file.Files.writeString(pd.resolve("data.json"), potJson(par))
+    Scratch.withDir("graft-potv2tvf") { dir =>
+      val rows = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name", $"n_regionkey").collect()
+      writeParityPots(dir, rows, idNameRegionDoc)
+      s.sql(
+        s"""SELECT key,
+           |  get_json_object(doc_json, '$$.name') AS name,
+           |  CAST(get_json_object(doc_json, '$$.region') AS INT) AS region
+           |FROM graft_pot('$dir/*/data.json')
+           |ORDER BY key""".stripMargin)
+        .localCheckpoint(true)
     }
-    val result = s.sql(
-      s"""SELECT key,
-         |  get_json_object(doc_json, '$$.name') AS name,
-         |  CAST(get_json_object(doc_json, '$$.region') AS INT) AS region
-         |FROM graft_pot('$dir/*/data.json')
-         |ORDER BY key""".stripMargin)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    result
   }
 
   /** Oracle: u10's SQL verbatim — the TVF must be just syntax. */
@@ -2331,32 +2273,31 @@ object Extensibility {
   def sqlTvfTimeTravel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotTvf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2tvt").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    def docs(df: org.apache.spark.sql.DataFrame) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"), $"upd")).as("doc_json"))
-    val nat = Tables.nation(s, d)
-    docs(nat.filter($"n_regionkey" <= 1).withColumn("upd", lit(0)))
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0).withColumn("upd", lit(1)))
-      .write.format(fmt).option("path", pot).mode("append").save()
-    val result = s.sql(
-      s"""SELECT 'v1' AS state, COUNT(*) AS n,
-         |  CAST(SUM(CAST(get_json_object(doc_json, '$$.upd') AS BIGINT))
-         |    AS BIGINT) AS n_upd
-         |FROM graft_pot('$pot', 1)
-         |UNION ALL
-         |SELECT 'head' AS state, COUNT(*) AS n,
-         |  CAST(SUM(CAST(get_json_object(doc_json, '$$.upd') AS BIGINT))
-         |    AS BIGINT) AS n_upd
-         |FROM graft_pot('$pot')
-         |ORDER BY state""".stripMargin)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    result
+    Scratch.withDir("graft-potv2tvt") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      def docs(df: org.apache.spark.sql.DataFrame) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"), $"upd")).as("doc_json"))
+      val nat = Tables.nation(s, d)
+      docs(nat.filter($"n_regionkey" <= 1).withColumn("upd", lit(0)))
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0).withColumn("upd", lit(1)))
+        .write.format(fmt).option("path", pot).mode("append").save()
+      s.sql(
+        s"""SELECT 'v1' AS state, COUNT(*) AS n,
+           |  CAST(SUM(CAST(get_json_object(doc_json, '$$.upd') AS BIGINT))
+           |    AS BIGINT) AS n_upd
+           |FROM graft_pot('$pot', 1)
+           |UNION ALL
+           |SELECT 'head' AS state, COUNT(*) AS n,
+           |  CAST(SUM(CAST(get_json_object(doc_json, '$$.upd') AS BIGINT))
+           |    AS BIGINT) AS n_upd
+           |FROM graft_pot('$pot')
+           |ORDER BY state""".stripMargin)
+        .localCheckpoint(true)
+    }
   }
 
   val sqlTvfTimeTravelSql: String =
@@ -2391,43 +2332,42 @@ object Extensibility {
   def timestampAsOfRead(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotTvf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u46").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    def docs(df: org.apache.spark.sql.DataFrame) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"), $"upd")).as("doc_json"))
-    val nat = Tables.nation(s, d)
-    docs(nat.filter($"n_regionkey" <= 1).withColumn("upd", lit(0)))
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
-    val fs = commits.getFileSystem(graft.kv.HadoopConf.get)
-    def mtime(g: Int): Long = fs.getFileStatus(
-      new org.apache.hadoop.fs.Path(commits, g.toString)).getModificationTime
-    val t1 = mtime(1)
-    // the second commit must carry a strictly later mtime for the
-    // midpoint to exist (local FS mtimes are >= ms-granular)
-    while (System.currentTimeMillis() <= t1 + 2) Thread.sleep(2)
-    docs(nat.filter($"n_regionkey" === 0).withColumn("upd", lit(1)))
-      .write.format(fmt).option("path", pot).mode("append").save()
-    val t2 = mtime(2)
-    require(t2 > t1, s"u46: commit mtimes not strictly ordered ($t1, $t2)")
-    val mid = t1 + (t2 - t1) / 2
-    val result = s.sql(
-      s"""SELECT 'v1' AS state, COUNT(*) AS n,
-         |  CAST(SUM(CAST(get_json_object(doc_json, '$$.upd') AS BIGINT))
-         |    AS BIGINT) AS n_upd
-         |FROM graft_pot('$pot', '$mid')
-         |UNION ALL
-         |SELECT 'head' AS state, COUNT(*) AS n,
-         |  CAST(SUM(CAST(get_json_object(doc_json, '$$.upd') AS BIGINT))
-         |    AS BIGINT) AS n_upd
-         |FROM graft_pot('$pot', '$t2')
-         |ORDER BY state""".stripMargin)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    result
+    Scratch.withDir("graft-u46") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      def docs(df: org.apache.spark.sql.DataFrame) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"), $"upd")).as("doc_json"))
+      val nat = Tables.nation(s, d)
+      docs(nat.filter($"n_regionkey" <= 1).withColumn("upd", lit(0)))
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
+      val fs = commits.getFileSystem(graft.kv.HadoopConf.get)
+      def mtime(g: Int): Long = fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(commits, g.toString)).getModificationTime
+      val t1 = mtime(1)
+      // the second commit must carry a strictly later mtime for the
+      // midpoint to exist (local FS mtimes are >= ms-granular)
+      while (System.currentTimeMillis() <= t1 + 2) Thread.sleep(2)
+      docs(nat.filter($"n_regionkey" === 0).withColumn("upd", lit(1)))
+        .write.format(fmt).option("path", pot).mode("append").save()
+      val t2 = mtime(2)
+      require(t2 > t1, s"u46: commit mtimes not strictly ordered ($t1, $t2)")
+      val mid = t1 + (t2 - t1) / 2
+      s.sql(
+        s"""SELECT 'v1' AS state, COUNT(*) AS n,
+           |  CAST(SUM(CAST(get_json_object(doc_json, '$$.upd') AS BIGINT))
+           |    AS BIGINT) AS n_upd
+           |FROM graft_pot('$pot', '$mid')
+           |UNION ALL
+           |SELECT 'head' AS state, COUNT(*) AS n,
+           |  CAST(SUM(CAST(get_json_object(doc_json, '$$.upd') AS BIGINT))
+           |    AS BIGINT) AS n_upd
+           |FROM graft_pot('$pot', '$t2')
+           |ORDER BY state""".stripMargin)
+        .localCheckpoint(true)
+    }
   }
 
   /** Oracle: u17's verbatim — same two states, different addressing. */
@@ -2449,35 +2389,34 @@ object Extensibility {
     */
   def dsv2PotWrite(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2w").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    def docs(df: org.apache.spark.sql.DataFrame) = df.select(
-      lit("").as("pot_file"), // provenance column: the target path owns it
-      concat(lit("c"), $"c_custkey".cast("string")).as("key"),
-      to_json(struct(
-        $"c_name".as("name"),
-        $"c_nationkey".cast("long").as("nation"),
-        ($"c_acctbal".cast(org.apache.spark.sql.types.DecimalType(38, 2))
-          * 100).cast("long").as("bal_cents"),
-        $"upd")).as("doc_json"))
-    val cust = Tables.customer(s, d)
-    docs(cust.filter($"c_custkey" <= 40).withColumn("upd", lit(0L)))
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    docs(cust.filter($"c_custkey" <= 60 && $"c_custkey" % 3 === 0)
-        .withColumn("upd", lit(1L)))
-      .write.format(fmt).option("path", pot).mode("append").save()
-    val result = s.read.format(fmt).option("path", pot).load()
-      .select($"key",
-        get_json_object($"doc_json", "$.name").as("name"),
-        get_json_object($"doc_json", "$.nation").cast("long").as("nation"),
-        get_json_object($"doc_json", "$.bal_cents").cast("long")
-          .as("bal_cents"),
-        get_json_object($"doc_json", "$.upd").cast("long").as("upd"))
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    result
+    Scratch.withDir("graft-potv2w") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      def docs(df: org.apache.spark.sql.DataFrame) = df.select(
+        lit("").as("pot_file"), // provenance column: the target path owns it
+        concat(lit("c"), $"c_custkey".cast("string")).as("key"),
+        to_json(struct(
+          $"c_name".as("name"),
+          $"c_nationkey".cast("long").as("nation"),
+          ($"c_acctbal".cast(org.apache.spark.sql.types.DecimalType(38, 2))
+            * 100).cast("long").as("bal_cents"),
+          $"upd")).as("doc_json"))
+      val cust = Tables.customer(s, d)
+      docs(cust.filter($"c_custkey" <= 40).withColumn("upd", lit(0L)))
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      docs(cust.filter($"c_custkey" <= 60 && $"c_custkey" % 3 === 0)
+          .withColumn("upd", lit(1L)))
+        .write.format(fmt).option("path", pot).mode("append").save()
+      s.read.format(fmt).option("path", pot).load()
+        .select($"key",
+          get_json_object($"doc_json", "$.name").as("name"),
+          get_json_object($"doc_json", "$.nation").cast("long").as("nation"),
+          get_json_object($"doc_json", "$.bal_cents").cast("long")
+            .as("bal_cents"),
+          get_json_object($"doc_json", "$.upd").cast("long").as("upd"))
+        .orderBy($"key")
+        .localCheckpoint(true)
+    }
   }
 
   val dsv2PotWriteSql: String =
@@ -2510,34 +2449,34 @@ object Extensibility {
     * back through the same catalog table, oracle replays relationally.
     */
   def sqlInsertPot(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2sql").toString
-    val pot = s"$dir/t/data.json"
-    val tbl = "graft_pot_sql_t"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, doc_json STRING) " +
-      s"USING ${classOf[graft.sources.PotV2Source].getName} " +
-      s"OPTIONS (path '$pot')")
-    Tables.nation(s, d).createOrReplaceTempView("graft_u15_nation")
-    s.sql(s"""INSERT INTO $tbl
+    Scratch.withDir("graft-potv2sql") { dir =>
+      val pot = s"$dir/t/data.json"
+      val tbl = "graft_pot_sql_t"
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, doc_json STRING) " +
+        s"USING ${classOf[graft.sources.PotV2Source].getName} " +
+        s"OPTIONS (path '$pot')")
+      Tables.nation(s, d).createOrReplaceTempView("graft_u15_nation")
+      s.sql(s"""INSERT INTO $tbl
              |SELECT '' AS pot_file, concat('n', n_nationkey) AS key,
              |  to_json(named_struct('name', n_name, 'region', n_regionkey,
              |    'upd', 0)) AS doc_json
              |FROM graft_u15_nation""".stripMargin)
-    s.sql(s"""INSERT INTO $tbl
+      s.sql(s"""INSERT INTO $tbl
              |SELECT '' AS pot_file, concat('n', n_nationkey) AS key,
              |  to_json(named_struct('name', n_name, 'region', n_regionkey,
              |    'upd', 1)) AS doc_json
              |FROM graft_u15_nation WHERE n_regionkey = 0""".stripMargin)
-    val out = s.sql(
-      s"""SELECT key,
-         |  get_json_object(doc_json, '$$.name') AS name,
-         |  CAST(get_json_object(doc_json, '$$.region') AS INT) AS region,
-         |  CAST(get_json_object(doc_json, '$$.upd') AS INT) AS upd
-         |FROM $tbl ORDER BY key""".stripMargin).localCheckpoint(true)
-    s.sql(s"DROP TABLE $tbl")
-    s.catalog.dropTempView("graft_u15_nation")
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+      val out = s.sql(
+        s"""SELECT key,
+           |  get_json_object(doc_json, '$$.name') AS name,
+           |  CAST(get_json_object(doc_json, '$$.region') AS INT) AS region,
+           |  CAST(get_json_object(doc_json, '$$.upd') AS INT) AS upd
+           |FROM $tbl ORDER BY key""".stripMargin).localCheckpoint(true)
+      s.sql(s"DROP TABLE $tbl")
+      s.catalog.dropTempView("graft_u15_nation")
+      out
+    }
   }
 
   val sqlInsertPotSql: String =
@@ -2559,33 +2498,32 @@ object Extensibility {
     */
   def potTimeTravel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2tt").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    def docs(df: org.apache.spark.sql.DataFrame) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"),
-        $"n_regionkey".cast("int").as("region"), $"upd")).as("doc_json"))
-    val nat = Tables.nation(s, d)
-    docs(nat.filter($"n_regionkey" <= 1).withColumn("upd", lit(0)))
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0).withColumn("upd", lit(1)))
-      .write.format(fmt).option("path", pot).mode("append").save()
-    def readState(state: String, gen: Option[Long]) = {
-      val r = s.read.format(fmt).option("path", pot)
-      gen.foreach(g => r.option("generation", g.toString))
-      r.load().select(lit(state).as("state"), $"key",
-        get_json_object($"doc_json", "$.name").as("name"),
-        get_json_object($"doc_json", "$.region").cast("int").as("region"),
-        get_json_object($"doc_json", "$.upd").cast("int").as("upd"))
+    Scratch.withDir("graft-potv2tt") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      def docs(df: org.apache.spark.sql.DataFrame) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"),
+          $"n_regionkey".cast("int").as("region"), $"upd")).as("doc_json"))
+      val nat = Tables.nation(s, d)
+      docs(nat.filter($"n_regionkey" <= 1).withColumn("upd", lit(0)))
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0).withColumn("upd", lit(1)))
+        .write.format(fmt).option("path", pot).mode("append").save()
+      def readState(state: String, gen: Option[Long]) = {
+        val r = s.read.format(fmt).option("path", pot)
+        gen.foreach(g => r.option("generation", g.toString))
+        r.load().select(lit(state).as("state"), $"key",
+          get_json_object($"doc_json", "$.name").as("name"),
+          get_json_object($"doc_json", "$.region").cast("int").as("region"),
+          get_json_object($"doc_json", "$.upd").cast("int").as("upd"))
+      }
+      readState("head", None)
+        .unionByName(readState("v1", Some(1L)))
+        .orderBy($"state", $"key")
+        .localCheckpoint(true)
     }
-    val result = readState("head", None)
-      .unionByName(readState("v1", Some(1L)))
-      .orderBy($"state", $"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    result
   }
 
   val potTimeTravelSql: String =
@@ -2621,54 +2559,54 @@ object Extensibility {
     */
   def potGenMetadataCol(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2mdc").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val tbl = "graft_u32_pot"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
-      s"doc_json STRING) USING $fmt OPTIONS (path '$pot')")
-    val nat = Tables.nation(s, d)
-    def docs(df: org.apache.spark.sql.DataFrame, upd: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
-        .as("doc_json"))
-    // gens 1-2: batch snapshots (the second LWW-overlaps region 0)
-    docs(nat, 0)
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0), 1)
-      .write.format(fmt).option("path", pot).mode("append").save()
-    // gens 3-4: streaming DELTA epochs (compactEvery high enough that
-    // neither triggers the snapshot path) over disjoint region slices
-    val write = new graft.sources.PotV2Write(
-      pot, graft.sources.PotV2Source.Schema, "u32-epochs",
-      truncateFirst = false, compactEvery = 1000)
-    val sw = write.toStreaming
-    def epoch(e: Long, rows: Seq[(String, String)]): Unit = {
-      val w = new graft.sources.PotV2WriterFactory(
-        write.epochStagingDir(e).toString, 1, 2).createWriter(0, 0L)
-      rows.foreach { case (k, dj) =>
-        w.write(org.apache.spark.sql.catalyst.InternalRow(
-          org.apache.spark.unsafe.types.UTF8String.fromString(""),
-          org.apache.spark.unsafe.types.UTF8String.fromString(k),
-          org.apache.spark.unsafe.types.UTF8String.fromString(dj)))
+    Scratch.withDir("graft-potv2mdc") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val tbl = "graft_u32_pot"
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
+        s"doc_json STRING) USING $fmt OPTIONS (path '$pot')")
+      val nat = Tables.nation(s, d)
+      def docs(df: org.apache.spark.sql.DataFrame, upd: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
+          .as("doc_json"))
+      // gens 1-2: batch snapshots (the second LWW-overlaps region 0)
+      docs(nat, 0)
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0), 1)
+        .write.format(fmt).option("path", pot).mode("append").save()
+      // gens 3-4: streaming DELTA epochs (compactEvery high enough that
+      // neither triggers the snapshot path) over disjoint region slices
+      val write = new graft.sources.PotV2Write(
+        pot, graft.sources.PotV2Source.Schema, "u32-epochs",
+        truncateFirst = false, compactEvery = 1000)
+      val sw = write.toStreaming
+      def epoch(e: Long, rows: Seq[(String, String)]): Unit = {
+        val w = new graft.sources.PotV2WriterFactory(
+          write.epochStagingDir(e).toString, 1, 2).createWriter(0, 0L)
+        rows.foreach { case (k, dj) =>
+          w.write(org.apache.spark.sql.catalyst.InternalRow(
+            org.apache.spark.unsafe.types.UTF8String.fromString(""),
+            org.apache.spark.unsafe.types.UTF8String.fromString(k),
+            org.apache.spark.unsafe.types.UTF8String.fromString(dj)))
+        }
+        sw.commit(e, Array(w.commit()))
       }
-      sw.commit(e, Array(w.commit()))
+      def slice(region: Int, upd: Int): Seq[(String, String)] =
+        docs(nat.filter($"n_regionkey" === region), upd)
+          .select($"key", $"doc_json").as[(String, String)].collect().toSeq
+          .sortBy(_._1)
+      epoch(1L, slice(1, 2)) // gen 3
+      epoch(2L, slice(2, 3)) // gen 4
+      val out = s.sql(
+        s"""SELECT key, _pot_gen AS gen,
+           |  CAST(get_json_object(doc_json, '$$.upd') AS INT) AS upd
+           |FROM $tbl ORDER BY key""".stripMargin).localCheckpoint(true)
+      s.sql(s"DROP TABLE $tbl")
+      out
     }
-    def slice(region: Int, upd: Int): Seq[(String, String)] =
-      docs(nat.filter($"n_regionkey" === region), upd)
-        .select($"key", $"doc_json").as[(String, String)].collect().toSeq
-        .sortBy(_._1)
-    epoch(1L, slice(1, 2)) // gen 3
-    epoch(2L, slice(2, 3)) // gen 4
-    val out = s.sql(
-      s"""SELECT key, _pot_gen AS gen,
-         |  CAST(get_json_object(doc_json, '$$.upd') AS INT) AS upd
-         |FROM $tbl ORDER BY key""".stripMargin).localCheckpoint(true)
-    s.sql(s"DROP TABLE $tbl")
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val potGenMetadataColSql: String =
@@ -2698,30 +2636,30 @@ object Extensibility {
     * machinery) — PotJsonSpec pins both paths and the tombstone sidecar.
     */
   def sqlDeletePot(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2del").toString
-    val pot = s"$dir/t/data.json"
-    val tbl = "graft_pot_sql_del"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, doc_json STRING) " +
-      s"USING ${classOf[graft.sources.PotV2Source].getName} " +
-      s"OPTIONS (path '$pot')")
-    Tables.nation(s, d).createOrReplaceTempView("graft_u18_nation")
-    s.sql(s"""INSERT INTO $tbl
+    Scratch.withDir("graft-potv2del") { dir =>
+      val pot = s"$dir/t/data.json"
+      val tbl = "graft_pot_sql_del"
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, doc_json STRING) " +
+        s"USING ${classOf[graft.sources.PotV2Source].getName} " +
+        s"OPTIONS (path '$pot')")
+      Tables.nation(s, d).createOrReplaceTempView("graft_u18_nation")
+      s.sql(s"""INSERT INTO $tbl
              |SELECT '' AS pot_file, concat('n', n_nationkey) AS key,
              |  to_json(named_struct('name', n_name, 'region', n_regionkey))
              |    AS doc_json
              |FROM graft_u18_nation""".stripMargin)
-    s.sql(s"DELETE FROM $tbl WHERE key LIKE 'n1%'")
-    s.sql(s"DELETE FROM $tbl WHERE key IN ('n3', 'n8', 'n21')")
-    val out = s.sql(
-      s"""SELECT key,
-         |  get_json_object(doc_json, '$$.name') AS name,
-         |  CAST(get_json_object(doc_json, '$$.region') AS INT) AS region
-         |FROM $tbl ORDER BY key""".stripMargin).localCheckpoint(true)
-    s.sql(s"DROP TABLE $tbl")
-    s.catalog.dropTempView("graft_u18_nation")
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+      s.sql(s"DELETE FROM $tbl WHERE key LIKE 'n1%'")
+      s.sql(s"DELETE FROM $tbl WHERE key IN ('n3', 'n8', 'n21')")
+      val out = s.sql(
+        s"""SELECT key,
+           |  get_json_object(doc_json, '$$.name') AS name,
+           |  CAST(get_json_object(doc_json, '$$.region') AS INT) AS region
+           |FROM $tbl ORDER BY key""".stripMargin).localCheckpoint(true)
+      s.sql(s"DROP TABLE $tbl")
+      s.catalog.dropTempView("graft_u18_nation")
+      out
+    }
   }
 
   val sqlDeletePotSql: String =
@@ -2747,57 +2685,57 @@ object Extensibility {
     * 3/4 inserted, 2 gone, replayed relationally by the oracle.
     */
   def sqlMergePot(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2mrg").toString
-    val pot = s"$dir/t/data.json"
-    val tbl = "graft_pot_sql_m"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, doc_json STRING) " +
-      s"USING ${classOf[graft.sources.PotV2Source].getName} " +
-      s"OPTIONS (path '$pot')")
-    Tables.nation(s, d).createOrReplaceTempView("graft_u19_nation")
-    s.sql(s"""INSERT INTO $tbl
+    Scratch.withDir("graft-potv2mrg") { dir =>
+      val pot = s"$dir/t/data.json"
+      val tbl = "graft_pot_sql_m"
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, doc_json STRING) " +
+        s"USING ${classOf[graft.sources.PotV2Source].getName} " +
+        s"OPTIONS (path '$pot')")
+      Tables.nation(s, d).createOrReplaceTempView("graft_u19_nation")
+      s.sql(s"""INSERT INTO $tbl
              |SELECT '' AS pot_file, concat('n', n_nationkey) AS key,
              |  to_json(named_struct('name', n_name, 'region', n_regionkey,
              |    'v', 0)) AS doc_json
              |FROM graft_u19_nation WHERE n_regionkey <= 2""".stripMargin)
-    // r14: the FULL SCD-sync verb — the source omits nationkey % 3 = 0
-    // rows, so targets it no longer carries flow through the
-    // NOT MATCHED BY SOURCE clauses (delete region 0, re-stamp the rest
-    // v=9) in the SAME one-generation delta as the matched/unmatched
-    // actions
-    s.sql(s"""MERGE INTO $tbl t
-             |USING (
-             |  SELECT '' AS pot_file, concat('n', n_nationkey) AS key,
-             |    to_json(named_struct('name', n_name, 'region', n_regionkey,
-             |      'v', 1)) AS doc_json,
-             |    n_regionkey AS region
-             |  FROM graft_u19_nation
-             |  WHERE n_nationkey % 3 <> 0) src
-             |ON t.key = src.key
-             |WHEN MATCHED AND src.region = 2 THEN DELETE
-             |WHEN MATCHED THEN UPDATE SET doc_json = src.doc_json
-             |WHEN NOT MATCHED THEN
-             |  INSERT (pot_file, key, doc_json)
-             |  VALUES (src.pot_file, src.key, src.doc_json)
-             |WHEN NOT MATCHED BY SOURCE
-             |  AND CAST(get_json_object(t.doc_json, '$$.region') AS INT) = 0
-             |  THEN DELETE
-             |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET doc_json =
-             |  to_json(named_struct(
-             |    'name', get_json_object(t.doc_json, '$$.name'),
-             |    'region', CAST(get_json_object(t.doc_json, '$$.region')
-             |      AS INT),
-             |    'v', 9))""".stripMargin)
-    val out = s.sql(
-      s"""SELECT key,
-         |  get_json_object(doc_json, '$$.name') AS name,
-         |  CAST(get_json_object(doc_json, '$$.region') AS INT) AS region,
-         |  CAST(get_json_object(doc_json, '$$.v') AS INT) AS v
-         |FROM $tbl ORDER BY key""".stripMargin).localCheckpoint(true)
-    s.sql(s"DROP TABLE $tbl")
-    s.catalog.dropTempView("graft_u19_nation")
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+      // r14: the FULL SCD-sync verb — the source omits nationkey % 3 = 0
+      // rows, so targets it no longer carries flow through the
+      // NOT MATCHED BY SOURCE clauses (delete region 0, re-stamp the rest
+      // v=9) in the SAME one-generation delta as the matched/unmatched
+      // actions
+      s.sql(s"""MERGE INTO $tbl t
+               |USING (
+               |  SELECT '' AS pot_file, concat('n', n_nationkey) AS key,
+               |    to_json(named_struct('name', n_name, 'region', n_regionkey,
+               |      'v', 1)) AS doc_json,
+               |    n_regionkey AS region
+               |  FROM graft_u19_nation
+               |  WHERE n_nationkey % 3 <> 0) src
+               |ON t.key = src.key
+               |WHEN MATCHED AND src.region = 2 THEN DELETE
+               |WHEN MATCHED THEN UPDATE SET doc_json = src.doc_json
+               |WHEN NOT MATCHED THEN
+               |  INSERT (pot_file, key, doc_json)
+               |  VALUES (src.pot_file, src.key, src.doc_json)
+               |WHEN NOT MATCHED BY SOURCE
+               |  AND CAST(get_json_object(t.doc_json, '$$.region') AS INT) = 0
+               |  THEN DELETE
+               |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET doc_json =
+               |  to_json(named_struct(
+               |    'name', get_json_object(t.doc_json, '$$.name'),
+               |    'region', CAST(get_json_object(t.doc_json, '$$.region')
+               |      AS INT),
+               |    'v', 9))""".stripMargin)
+      val out = s.sql(
+        s"""SELECT key,
+           |  get_json_object(doc_json, '$$.name') AS name,
+           |  CAST(get_json_object(doc_json, '$$.region') AS INT) AS region,
+           |  CAST(get_json_object(doc_json, '$$.v') AS INT) AS v
+           |FROM $tbl ORDER BY key""".stripMargin).localCheckpoint(true)
+      s.sql(s"DROP TABLE $tbl")
+      s.catalog.dropTempView("graft_u19_nation")
+      out
+    }
   }
 
   val sqlMergePotSql: String =
@@ -2863,36 +2801,35 @@ object Extensibility {
   def sqlPotChanges(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotChangesTvf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-potv2chg").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    def docs(df: DataFrame, v: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
-      to_json(struct(col("n_name").as("name"), lit(v).as("v")))
-        .as("doc_json"))
-    val nat = Tables.nation(s, d)
-    // the st19 history: broad v0, a v1 update wave, a truncate rewrite
-    // dropping odd region-0 keys — so the range after gen 1 carries
-    // upserts AND tombstones
-    docs(nat.filter($"n_regionkey" <= 1), 0)
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0), 1)
-      .write.format(fmt).option("path", pot).mode("append").save()
-    docs(nat.filter($"n_regionkey" === 1 ||
-        ($"n_regionkey" === 0 && $"n_nationkey" % 2 === 0)), 2)
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    val out = s.sql(
-      s"""SELECT CAST(regexp_extract(pot_file, '@([0-9]+)$$', 1) AS INT)
-         |    AS gen,
-         |  key,
-         |  get_json_object(doc_json, '$$.name') AS name,
-         |  CAST(get_json_object(doc_json, '$$.v') AS INT) AS v,
-         |  (doc_json = 'null') AS deleted
-         |FROM graft_pot_changes('$pot', 1)
-         |ORDER BY gen, key""".stripMargin).localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+    Scratch.withDir("graft-potv2chg") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      def docs(df: DataFrame, v: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
+        to_json(struct(col("n_name").as("name"), lit(v).as("v")))
+          .as("doc_json"))
+      val nat = Tables.nation(s, d)
+      // the st19 history: broad v0, a v1 update wave, a truncate rewrite
+      // dropping odd region-0 keys — so the range after gen 1 carries
+      // upserts AND tombstones
+      docs(nat.filter($"n_regionkey" <= 1), 0)
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0), 1)
+        .write.format(fmt).option("path", pot).mode("append").save()
+      docs(nat.filter($"n_regionkey" === 1 ||
+          ($"n_regionkey" === 0 && $"n_nationkey" % 2 === 0)), 2)
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      s.sql(
+        s"""SELECT CAST(regexp_extract(pot_file, '@([0-9]+)$$', 1) AS INT)
+           |    AS gen,
+           |  key,
+           |  get_json_object(doc_json, '$$.name') AS name,
+           |  CAST(get_json_object(doc_json, '$$.v') AS INT) AS v,
+           |  (doc_json = 'null') AS deleted
+           |FROM graft_pot_changes('$pot', 1)
+           |ORDER BY gen, key""".stripMargin).localCheckpoint(true)
+    }
   }
 
   val sqlPotChangesSql: String =
@@ -3021,25 +2958,23 @@ object Extensibility {
   def sqlBucketedPot(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerBucketedPotTvf(s)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bpot-tvf").toString
-    val t = new graft.kv.BucketedPotTable(s, root, "cust_tvf", 8)
-    val base = Tables.customer(s, d)
-      .filter($"c_custkey" <= 200)
-      .select($"c_custkey".cast("string").as("key"),
-        $"c_mktsegment", $"c_nationkey")
-    t.upsert(base)
-    t.upsert(base.filter($"key".cast("bigint") % 5 === 0)
-      .withColumn("c_mktsegment", lit("MOVED")))
-    t.remove((0 to 200).filter(_ % 9 == 0).map(_.toString))
-    val out = s.sql(
-      s"""SELECT c_mktsegment, COUNT(*) AS n_keys,
-         |  SUM(CAST(c_nationkey AS BIGINT)) AS sum_nation
-         |FROM graft_bucketed_pot('$root', 'cust_tvf')
-         |GROUP BY c_mktsegment
-         |ORDER BY c_mktsegment""".stripMargin).localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
+    Scratch.withDir("graft-bpot-tvf") { root =>
+      val t = new graft.kv.BucketedPotTable(s, root, "cust_tvf", 8)
+      val base = Tables.customer(s, d)
+        .filter($"c_custkey" <= 200)
+        .select($"c_custkey".cast("string").as("key"),
+          $"c_mktsegment", $"c_nationkey")
+      t.upsert(base)
+      t.upsert(base.filter($"key".cast("bigint") % 5 === 0)
+        .withColumn("c_mktsegment", lit("MOVED")))
+      t.remove((0 to 200).filter(_ % 9 == 0).map(_.toString))
+      s.sql(
+        s"""SELECT c_mktsegment, COUNT(*) AS n_keys,
+           |  SUM(CAST(c_nationkey AS BIGINT)) AS sum_nation
+           |FROM graft_bucketed_pot('$root', 'cust_tvf')
+           |GROUP BY c_mktsegment
+           |ORDER BY c_mktsegment""".stripMargin).localCheckpoint(true)
+    }
   }
 
   val sqlBucketedPotSql: String =
@@ -3068,27 +3003,25 @@ object Extensibility {
   def sqlBucketedTimeTravel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerBucketedPotTvf(s)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bpot-tt").toString
-    val t = new graft.kv.BucketedPotTable(s, root, "cust_tt", 8)
-    val base = Tables.customer(s, d)
-      .filter($"c_custkey" <= 150)
-      .select($"c_custkey".cast("string").as("key"), $"c_mktsegment")
-    t.upsert(base)
-    t.upsert(base.filter($"key".cast("long") % 3 === 0)
-      .withColumn("c_mktsegment", lit("MOVED")))
-    t.removeWhere($"key".cast("long") % 7 === 0)
-    def at(g: Int, state: String) =
-      s"""SELECT '$state' AS state, c_mktsegment
-         |FROM graft_bucketed_pot('$root', 'cust_tt', 8, $g)""".stripMargin
-    val out = s.sql(
-      s"""SELECT state, c_mktsegment, COUNT(*) AS n
-         |FROM (${at(1, "g1")} UNION ALL ${at(2, "g2")}
-         |      UNION ALL ${at(3, "head")}) u
-         |GROUP BY state, c_mktsegment
-         |ORDER BY state, c_mktsegment""".stripMargin).localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
+    Scratch.withDir("graft-bpot-tt") { root =>
+      val t = new graft.kv.BucketedPotTable(s, root, "cust_tt", 8)
+      val base = Tables.customer(s, d)
+        .filter($"c_custkey" <= 150)
+        .select($"c_custkey".cast("string").as("key"), $"c_mktsegment")
+      t.upsert(base)
+      t.upsert(base.filter($"key".cast("long") % 3 === 0)
+        .withColumn("c_mktsegment", lit("MOVED")))
+      t.removeWhere($"key".cast("long") % 7 === 0)
+      def at(g: Int, state: String) =
+        s"""SELECT '$state' AS state, c_mktsegment
+           |FROM graft_bucketed_pot('$root', 'cust_tt', 8, $g)""".stripMargin
+      s.sql(
+        s"""SELECT state, c_mktsegment, COUNT(*) AS n
+           |FROM (${at(1, "g1")} UNION ALL ${at(2, "g2")}
+           |      UNION ALL ${at(3, "head")}) u
+           |GROUP BY state, c_mktsegment
+           |ORDER BY state, c_mktsegment""".stripMargin).localCheckpoint(true)
+    }
   }
 
   val sqlBucketedTimeTravelSql: String =
@@ -3162,30 +3095,28 @@ object Extensibility {
 
   def sqlPotHistory(s: SparkSession, d: String): DataFrame = {
     registerPotHistoryTvf(s)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-potv2hist").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    import s.implicits._
-    def docs(df: DataFrame, v: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
-      to_json(struct(col("n_name").as("name"), lit(v).as("v")))
-        .as("doc_json"))
-    val nat = Tables.nation(s, d)
-    docs(nat.filter($"n_regionkey" <= 1), 0)
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0), 1)
-      .write.format(fmt).option("path", pot).mode("append").save()
-    docs(nat.filter($"n_regionkey" === 1 ||
-        ($"n_regionkey" === 0 && $"n_nationkey" % 2 === 0)), 2)
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    val out = s.sql(
-      s"""SELECT gen, kind, upserts, deletes
-         |FROM graft_pot_history('$pot')
-         |ORDER BY gen""".stripMargin).localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+    Scratch.withDir("graft-potv2hist") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      import s.implicits._
+      def docs(df: DataFrame, v: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
+        to_json(struct(col("n_name").as("name"), lit(v).as("v")))
+          .as("doc_json"))
+      val nat = Tables.nation(s, d)
+      docs(nat.filter($"n_regionkey" <= 1), 0)
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0), 1)
+        .write.format(fmt).option("path", pot).mode("append").save()
+      docs(nat.filter($"n_regionkey" === 1 ||
+          ($"n_regionkey" === 0 && $"n_nationkey" % 2 === 0)), 2)
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      s.sql(
+        s"""SELECT gen, kind, upserts, deletes
+           |FROM graft_pot_history('$pot')
+           |ORDER BY gen""".stripMargin).localCheckpoint(true)
+    }
   }
 
   val sqlPotHistorySql: String =
@@ -3225,42 +3156,40 @@ object Extensibility {
   def sqlPotChangesVector(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotChangesTvf(s)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-potv2vec").toString
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    def docs(df: DataFrame, v: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
-      to_json(struct(col("n_name").as("name"), lit(v).as("v")))
-        .as("doc_json"))
-    def put(pot: String, df: DataFrame, v: Int, mode: String): Unit =
-      docs(df, v).write.format(fmt)
-        .option("path", s"$dir/pots/$pot/data.json").mode(mode).save()
-    val nat = Tables.nation(s, d)
-    put("p1", nat.filter($"n_regionkey" === 0), 0, "overwrite")
-    put("p1", nat.filter($"n_regionkey" === 0 && $"n_nationkey" % 2 === 0),
-      1, "append")
-    put("p2", nat.filter($"n_regionkey" === 1), 0, "overwrite")
-    put("p3", nat.filter($"n_regionkey" === 2), 0, "overwrite")
-    put("p3", nat.filter($"n_regionkey" === 2 && $"n_nationkey" % 3 === 0),
-      1, "overwrite")
-    put("p3", nat.filter($"n_regionkey" === 2 && $"n_nationkey" % 3 === 1),
-      2, "append")
-    // the consumer's checkpoint: p1/p2 consumed through generation 1,
-    // p3 never seen — exactly a resumed st18 vector
-    val vec = graft.sources.PotMultiGenOffset(Map(
-      s"$dir/pots/p1/data.json" -> 1L,
-      s"$dir/pots/p2/data.json" -> 1L)).json
-    val out = s.sql(
-      s"""SELECT regexp_extract(pot_file, 'pots/(p[0-9]+)/', 1) AS pot,
-         |  CAST(regexp_extract(pot_file, '@([0-9]+)$$', 1) AS INT) AS gen,
-         |  key,
-         |  CAST(get_json_object(doc_json, '$$.v') AS INT) AS v,
-         |  (doc_json = 'null') AS deleted
-         |FROM graft_pot_changes('$dir/pots/*/data.json', '$vec')
-         |ORDER BY pot, gen, key""".stripMargin).localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+    Scratch.withDir("graft-potv2vec") { dir =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      def docs(df: DataFrame, v: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
+        to_json(struct(col("n_name").as("name"), lit(v).as("v")))
+          .as("doc_json"))
+      def put(pot: String, df: DataFrame, v: Int, mode: String): Unit =
+        docs(df, v).write.format(fmt)
+          .option("path", s"$dir/pots/$pot/data.json").mode(mode).save()
+      val nat = Tables.nation(s, d)
+      put("p1", nat.filter($"n_regionkey" === 0), 0, "overwrite")
+      put("p1", nat.filter($"n_regionkey" === 0 && $"n_nationkey" % 2 === 0),
+        1, "append")
+      put("p2", nat.filter($"n_regionkey" === 1), 0, "overwrite")
+      put("p3", nat.filter($"n_regionkey" === 2), 0, "overwrite")
+      put("p3", nat.filter($"n_regionkey" === 2 && $"n_nationkey" % 3 === 0),
+        1, "overwrite")
+      put("p3", nat.filter($"n_regionkey" === 2 && $"n_nationkey" % 3 === 1),
+        2, "append")
+      // the consumer's checkpoint: p1/p2 consumed through generation 1,
+      // p3 never seen — exactly a resumed st18 vector
+      val vec = graft.sources.PotMultiGenOffset(Map(
+        s"$dir/pots/p1/data.json" -> 1L,
+        s"$dir/pots/p2/data.json" -> 1L)).json
+      s.sql(
+        s"""SELECT regexp_extract(pot_file, 'pots/(p[0-9]+)/', 1) AS pot,
+           |  CAST(regexp_extract(pot_file, '@([0-9]+)$$', 1) AS INT) AS gen,
+           |  key,
+           |  CAST(get_json_object(doc_json, '$$.v') AS INT) AS v,
+           |  (doc_json = 'null') AS deleted
+           |FROM graft_pot_changes('$dir/pots/*/data.json', '$vec')
+           |ORDER BY pot, gen, key""".stripMargin).localCheckpoint(true)
+    }
   }
 
   val sqlPotChangesVectorSql: String =
@@ -3307,59 +3236,58 @@ object Extensibility {
     */
   def sqlBucketedWrite(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bpot-sql").toString
-    val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val tbl = "graft_u22_bpot"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
-      s"doc_json STRING) USING $fmt OPTIONS (path '$root', buckets '8')")
-    Tables.customer(s, d).filter($"c_custkey" <= 240)
-      .select($"c_custkey".cast("long").as("c"),
-        $"c_mktsegment".as("seg"), $"c_nationkey".cast("int").as("nat"))
-      .createOrReplaceTempView("u22_base")
-    s.sql(s"""INSERT INTO $tbl
+    Scratch.withDir("graft-bpot-sql") { root =>
+      val fmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val tbl = "graft_u22_bpot"
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
+        s"doc_json STRING) USING $fmt OPTIONS (path '$root', buckets '8')")
+      Tables.customer(s, d).filter($"c_custkey" <= 240)
+        .select($"c_custkey".cast("long").as("c"),
+          $"c_mktsegment".as("seg"), $"c_nationkey".cast("int").as("nat"))
+        .createOrReplaceTempView("u22_base")
+      s.sql(s"""INSERT INTO $tbl
       SELECT '' AS pot_file, concat('c', CAST(c AS STRING)) AS key,
         to_json(named_struct('seg', seg, 'nat', nat)) AS doc_json
       FROM u22_base""")
-    s.sql(s"""INSERT INTO $tbl
+      s.sql(s"""INSERT INTO $tbl
       SELECT '', concat('c', CAST(c AS STRING)),
         to_json(named_struct('seg', 'MOVED', 'nat', nat))
       FROM u22_base WHERE c % 7 = 0""")
-    val mergeSql =
-      s"""MERGE INTO $tbl t USING (
-         |  SELECT concat('c', CAST(c AS STRING)) AS key, 'd' AS op,
-         |    CAST(NULL AS STRING) AS doc
-         |  FROM u22_base WHERE c % 11 = 0
-         |  UNION ALL
-         |  SELECT concat('c', CAST(c AS STRING)), 'u',
-         |    to_json(named_struct('seg', 'UPD', 'nat', nat + 100))
-         |  FROM u22_base WHERE c % 11 = 1
-         |  UNION ALL
-         |  SELECT concat('x', CAST(c AS STRING)), 'i',
-         |    to_json(named_struct('seg', 'NEW', 'nat', 0))
-         |  FROM u22_base WHERE c % 50 = 0
-         |) s ON t.key = s.key
-         |WHEN MATCHED AND s.op = 'd' THEN DELETE
-         |WHEN MATCHED AND s.op = 'u' THEN UPDATE SET doc_json = s.doc
-         |WHEN NOT MATCHED AND s.op = 'i' THEN
-         |  INSERT (pot_file, key, doc_json) VALUES ('', s.key, s.doc)"""
-        .stripMargin
-    s.sql(mergeSql)
-    val delKeys = (1 to 240).filter(_ % 13 == 0)
-      .map(c => s"'c$c'").mkString(", ")
-    s.sql(s"DELETE FROM $tbl WHERE key IN ($delKeys)")
-    val out = s.sql(
-      s"""SELECT get_json_object(doc_json, '$$.seg') AS seg,
-         |  COUNT(*) AS n_keys,
-         |  SUM(CAST(get_json_object(doc_json, '$$.nat') AS BIGINT))
-         |    AS sum_nat
-         |FROM $tbl
-         |GROUP BY get_json_object(doc_json, '$$.seg')
-         |ORDER BY seg""".stripMargin).localCheckpoint(true)
-    s.sql(s"DROP TABLE $tbl")
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
+      val mergeSql =
+        s"""MERGE INTO $tbl t USING (
+           |  SELECT concat('c', CAST(c AS STRING)) AS key, 'd' AS op,
+           |    CAST(NULL AS STRING) AS doc
+           |  FROM u22_base WHERE c % 11 = 0
+           |  UNION ALL
+           |  SELECT concat('c', CAST(c AS STRING)), 'u',
+           |    to_json(named_struct('seg', 'UPD', 'nat', nat + 100))
+           |  FROM u22_base WHERE c % 11 = 1
+           |  UNION ALL
+           |  SELECT concat('x', CAST(c AS STRING)), 'i',
+           |    to_json(named_struct('seg', 'NEW', 'nat', 0))
+           |  FROM u22_base WHERE c % 50 = 0
+           |) s ON t.key = s.key
+           |WHEN MATCHED AND s.op = 'd' THEN DELETE
+           |WHEN MATCHED AND s.op = 'u' THEN UPDATE SET doc_json = s.doc
+           |WHEN NOT MATCHED AND s.op = 'i' THEN
+           |  INSERT (pot_file, key, doc_json) VALUES ('', s.key, s.doc)"""
+          .stripMargin
+      s.sql(mergeSql)
+      val delKeys = (1 to 240).filter(_ % 13 == 0)
+        .map(c => s"'c$c'").mkString(", ")
+      s.sql(s"DELETE FROM $tbl WHERE key IN ($delKeys)")
+      val out = s.sql(
+        s"""SELECT get_json_object(doc_json, '$$.seg') AS seg,
+           |  COUNT(*) AS n_keys,
+           |  SUM(CAST(get_json_object(doc_json, '$$.nat') AS BIGINT))
+           |    AS sum_nat
+           |FROM $tbl
+           |GROUP BY get_json_object(doc_json, '$$.seg')
+           |ORDER BY seg""".stripMargin).localCheckpoint(true)
+      s.sql(s"DROP TABLE $tbl")
+      out
+    }
   }
 
   val sqlBucketedWriteSql: String =
@@ -3397,38 +3325,37 @@ object Extensibility {
   def sqlBucketedChanges(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotChangesTvf(s)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bpot-cdc").toString
-    val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val tbl = "graft_u26_bpot"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
-      s"doc_json STRING) USING $fmt OPTIONS (path '$root', buckets '8')")
-    Tables.customer(s, d).filter($"c_custkey" <= 200)
-      .select($"c_custkey".cast("long").as("c"),
-        $"c_nationkey".cast("int").as("nat"))
-      .createOrReplaceTempView("u26_base")
-    s.sql(s"""INSERT INTO $tbl
+    Scratch.withDir("graft-bpot-cdc") { root =>
+      val fmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val tbl = "graft_u26_bpot"
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
+        s"doc_json STRING) USING $fmt OPTIONS (path '$root', buckets '8')")
+      Tables.customer(s, d).filter($"c_custkey" <= 200)
+        .select($"c_custkey".cast("long").as("c"),
+          $"c_nationkey".cast("int").as("nat"))
+        .createOrReplaceTempView("u26_base")
+      s.sql(s"""INSERT INTO $tbl
       SELECT '' AS pot_file, concat('c', CAST(c AS STRING)) AS key,
         to_json(named_struct('nat', nat, 'v', 0)) AS doc_json
       FROM u26_base""")
-    s.sql(s"""INSERT INTO $tbl
+      s.sql(s"""INSERT INTO $tbl
       SELECT '', concat('c', CAST(c AS STRING)),
         to_json(named_struct('nat', nat, 'v', 1))
       FROM u26_base WHERE c % 7 = 0""")
-    val delKeys = (1 to 200).filter(_ % 13 == 0)
-      .map(c => s"'c$c'").mkString(", ")
-    s.sql(s"DELETE FROM $tbl WHERE key IN ($delKeys)")
-    val out = s.sql(
-      s"""SELECT key, CAST(COUNT(*) AS BIGINT) AS n_events,
-         |  MAX(CASE WHEN doc_json = 'null' THEN TRUE ELSE FALSE END)
-         |    AS deleted
-         |FROM graft_pot_changes('$root/_b=*/data.json', 0)
-         |GROUP BY key
-         |ORDER BY key""".stripMargin).localCheckpoint(true)
-    s.sql(s"DROP TABLE $tbl")
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
+      val delKeys = (1 to 200).filter(_ % 13 == 0)
+        .map(c => s"'c$c'").mkString(", ")
+      s.sql(s"DELETE FROM $tbl WHERE key IN ($delKeys)")
+      val out = s.sql(
+        s"""SELECT key, CAST(COUNT(*) AS BIGINT) AS n_events,
+           |  MAX(CASE WHEN doc_json = 'null' THEN TRUE ELSE FALSE END)
+           |    AS deleted
+           |FROM graft_pot_changes('$root/_b=*/data.json', 0)
+           |GROUP BY key
+           |ORDER BY key""".stripMargin).localCheckpoint(true)
+      s.sql(s"DROP TABLE $tbl")
+      out
+    }
   }
 
   val sqlBucketedChangesSql: String =
@@ -3454,10 +3381,8 @@ object Extensibility {
     * off the nation table (the pot holds `{"name": n_name}` per nation).
     */
   private[graft] def statsBroadcastBuild(
-      s: SparkSession, d: String): (DataFrame, String) = {
+      s: SparkSession, d: String, dir: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-potstats").toString
     Tables.nation(s, d)
       .select(lit("").as("pot_file"),
         concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
@@ -3468,22 +3393,19 @@ object Extensibility {
       .option("path", s"$dir/nation/data.json").load()
       .select($"key",
         get_json_object($"doc_json", "$.name").as("n_name"))
-    val joined = Tables.customer(s, d)
+    Tables.customer(s, d)
       .withColumn("key", concat(lit("n"), $"c_nationkey".cast("string")))
       .join(pot, "key") // NO broadcast() hint — stats must plan it
       .groupBy($"n_name")
       .agg(count(lit(1)).as("n_cust"),
         sum($"c_custkey".cast("bigint")).as("sum_cust"))
       .orderBy($"n_name")
-    (joined, dir)
   }
 
-  def statsBroadcastJoin(s: SparkSession, d: String): DataFrame = {
-    val (joined, dir) = statsBroadcastBuild(s, d)
-    val out = joined.localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
-  }
+  def statsBroadcastJoin(s: SparkSession, d: String): DataFrame =
+    Scratch.withDir("graft-potstats") { dir =>
+      statsBroadcastBuild(s, d, dir).localCheckpoint(true)
+    }
 
   val statsBroadcastJoinSql: String =
     """SELECT n.n_name AS n_name, CAST(COUNT(*) AS BIGINT) AS n_cust,
@@ -3505,31 +3427,29 @@ object Extensibility {
   def sqlTopNPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotTvf(s)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-pottopn").toString
-    Tables.customer(s, d).filter($"c_custkey" <= 200)
-      .select(lit("").as("pot_file"),
-        concat(lit("c"), lpad($"c_custkey".cast("string"), 3, "0"))
-          .as("key"),
-        to_json(struct($"c_custkey".cast("long").as("v"))).as("doc_json"))
-      .write.format(classOf[graft.sources.PotV2Source].getName)
-      .option("path", s"$dir/cust/data.json").mode("overwrite").save()
-    val out = s.sql(
-      s"""SELECT dir, key, v FROM (
-         |  SELECT 'asc' AS dir, key,
-         |    CAST(get_json_object(doc_json, '$$.v') AS BIGINT) AS v
-         |  FROM graft_pot('$dir/cust/data.json')
-         |  ORDER BY key LIMIT 10
-         |) UNION ALL
-         |SELECT dir, key, v FROM (
-         |  SELECT 'desc' AS dir, key,
-         |    CAST(get_json_object(doc_json, '$$.v') AS BIGINT) AS v
-         |  FROM graft_pot('$dir/cust/data.json')
-         |  ORDER BY key DESC LIMIT 7
-         |)
-         |ORDER BY dir, key""".stripMargin).localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+    Scratch.withDir("graft-pottopn") { dir =>
+      Tables.customer(s, d).filter($"c_custkey" <= 200)
+        .select(lit("").as("pot_file"),
+          concat(lit("c"), lpad($"c_custkey".cast("string"), 3, "0"))
+            .as("key"),
+          to_json(struct($"c_custkey".cast("long").as("v"))).as("doc_json"))
+        .write.format(classOf[graft.sources.PotV2Source].getName)
+        .option("path", s"$dir/cust/data.json").mode("overwrite").save()
+      s.sql(
+        s"""SELECT dir, key, v FROM (
+           |  SELECT 'asc' AS dir, key,
+           |    CAST(get_json_object(doc_json, '$$.v') AS BIGINT) AS v
+           |  FROM graft_pot('$dir/cust/data.json')
+           |  ORDER BY key LIMIT 10
+           |) UNION ALL
+           |SELECT dir, key, v FROM (
+           |  SELECT 'desc' AS dir, key,
+           |    CAST(get_json_object(doc_json, '$$.v') AS BIGINT) AS v
+           |  FROM graft_pot('$dir/cust/data.json')
+           |  ORDER BY key DESC LIMIT 7
+           |)
+           |ORDER BY dir, key""".stripMargin).localCheckpoint(true)
+    }
   }
 
   val sqlTopNPushdownSql: String =
@@ -3790,21 +3710,20 @@ object Extensibility {
     */
   def sqlBucketedSample(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-u43").toString
-    val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-    Tables.nation(s, d).select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"))).as("doc_json"))
-      .write.format(fmt).option("path", root).option("buckets", "4")
-      .mode("append").save()
-    val out = s.read.format(fmt).option("path", root)
-      .option("buckets", "4").load()
-      .sample(withReplacement = false, 0.4, seed = 3L)
-      .select($"key", get_json_object($"doc_json", "$.name").as("name"))
-      .orderBy($"key").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
+    Scratch.withDir("graft-u43") { root =>
+      val fmt = classOf[graft.sources.BucketedPotV2Source].getName
+      Tables.nation(s, d).select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"))).as("doc_json"))
+        .write.format(fmt).option("path", root).option("buckets", "4")
+        .mode("append").save()
+      s.read.format(fmt).option("path", root)
+        .option("buckets", "4").load()
+        .sample(withReplacement = false, 0.4, seed = 3L)
+        .select($"key", get_json_object($"doc_json", "$.name").as("name"))
+        .orderBy($"key").localCheckpoint(true)
+    }
   }
 
   /** Same admitted set as u41 (the fold is layout-independent).
@@ -3834,52 +3753,51 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u42").toString
-    val src = s"$dir/src/data.json"
-    val dst = s"$dir/dst/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-    def docs(df: org.apache.spark.sql.DataFrame, upd: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
-        .as("doc_json"))
-    // source: gen 1 (all nations), gen 2 (region 0 LWW-updated)
-    docs(nat, 0)
-      .write.format(fmt).option("path", src).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0), 1)
-      .write.format(fmt).option("path", src).mode("append").save()
-    // collect() pins execution order: the clone must exist before the
-    // divergent write below (CALL is a command, but explicit beats
-    // relying on eager command semantics)
-    val nClonedGens = s.sql(
-      s"CALL graft_fns.sys.clone_pot('$src', '$dst')").collect().length
-    val cloned = Seq(nClonedGens.toLong).toDF("n_cloned_gens")
-    // divergence: a write on the CLONE must not touch the source
-    docs(nat.filter($"n_regionkey" === 1), 2)
-      .write.format(fmt).option("path", dst).mode("append").save()
-    def upds(pot: String, gen: Option[Long]) = {
-      val r = s.read.format(fmt).option("path", pot)
-      gen.foreach(g => r.option("generation", g.toString))
-      r.load().agg(count(lit(1)).as("n"),
-        sum(get_json_object($"doc_json", "$.upd").cast("long")).as("upd_sum"))
+    Scratch.withDir("graft-u42") { dir =>
+      val src = s"$dir/src/data.json"
+      val dst = s"$dir/dst/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+      def docs(df: org.apache.spark.sql.DataFrame, upd: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
+          .as("doc_json"))
+      // source: gen 1 (all nations), gen 2 (region 0 LWW-updated)
+      docs(nat, 0)
+        .write.format(fmt).option("path", src).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0), 1)
+        .write.format(fmt).option("path", src).mode("append").save()
+      // collect() pins execution order: the clone must exist before the
+      // divergent write below (CALL is a command, but explicit beats
+      // relying on eager command semantics)
+      val nClonedGens = s.sql(
+        s"CALL graft_fns.sys.clone_pot('$src', '$dst')").collect().length
+      val cloned = Seq(nClonedGens.toLong).toDF("n_cloned_gens")
+      // divergence: a write on the CLONE must not touch the source
+      docs(nat.filter($"n_regionkey" === 1), 2)
+        .write.format(fmt).option("path", dst).mode("append").save()
+      def upds(pot: String, gen: Option[Long]) = {
+        val r = s.read.format(fmt).option("path", pot)
+        gen.foreach(g => r.option("generation", g.toString))
+        r.load().agg(count(lit(1)).as("n"),
+          sum(get_json_object($"doc_json", "$.upd").cast("long")).as("upd_sum"))
+      }
+      val srcHead = upds(src, None)
+        .select($"n".as("src_n"), $"upd_sum".as("src_upds"))
+      val dstHead = upds(dst, None)
+        .select($"n".as("dst_n"), $"upd_sum".as("dst_upds"))
+      // time travel THROUGH the shared marker: clone gen 1 = source gen 1
+      val dstV1 = upds(dst, Some(1L))
+        .select($"n".as("dst_v1_n"), $"upd_sum".as("dst_v1_upds"))
+      // ownership guard: the clone's vacuum reclaims NOTHING (its
+      // pre-covering bodies are all borrowed source artifacts)
+      val vacuumed = s.sql(s"CALL graft_fns.sys.vacuum_pot('$dst')")
+        .agg(count(lit(1)).as("n_vacuumed"))
+      cloned.crossJoin(srcHead).crossJoin(dstHead)
+        .crossJoin(dstV1).crossJoin(vacuumed)
+        .localCheckpoint(true)
     }
-    val srcHead = upds(src, None)
-      .select($"n".as("src_n"), $"upd_sum".as("src_upds"))
-    val dstHead = upds(dst, None)
-      .select($"n".as("dst_n"), $"upd_sum".as("dst_upds"))
-    // time travel THROUGH the shared marker: clone gen 1 = source gen 1
-    val dstV1 = upds(dst, Some(1L))
-      .select($"n".as("dst_v1_n"), $"upd_sum".as("dst_v1_upds"))
-    // ownership guard: the clone's vacuum reclaims NOTHING (its
-    // pre-covering bodies are all borrowed source artifacts)
-    val vacuumed = s.sql(s"CALL graft_fns.sys.vacuum_pot('$dst')")
-      .agg(count(lit(1)).as("n_vacuumed"))
-    val out = cloned.crossJoin(srcHead).crossJoin(dstHead)
-      .crossJoin(dstV1).crossJoin(vacuumed)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val sqlShallowCloneSql: String =
@@ -3920,48 +3838,47 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u47").toString
-    val srcRoot = s"$dir/src"
-    val dstRoot = s"$dir/dst"
-    val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val nat = Tables.nation(s, d)
-    def docs(df: org.apache.spark.sql.DataFrame, upd: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
-        .as("doc_json"))
-    def write(df: org.apache.spark.sql.DataFrame, root: String): Unit =
-      df.write.format(fmt).option("path", root).option("buckets", "4")
-        .mode("append").save()
-    write(docs(nat, 0), srcRoot)
-    write(docs(nat.filter($"n_regionkey" === 0), 1), srcRoot)
-    val nCloned = s.sql(
-      s"CALL graft_fns.sys.clone_pot('$srcRoot', '$dstRoot')")
-      .collect().length
-    // divergence: a write on the CLONE must not touch the source
-    write(docs(nat.filter($"n_regionkey" === 1), 2), dstRoot)
-    def state(root: String) = s.read.format(fmt).option("path", root)
-      .option("buckets", "4").load()
-      .agg(count(lit(1)).as("n"),
-        sum(get_json_object($"doc_json", "$.upd").cast("long")).as("upds"))
-    val srcHead = state(srcRoot)
-      .select($"n".as("src_n"), $"upds".as("src_upds"))
-    val dstHead = state(dstRoot)
-      .select($"n".as("dst_n"), $"upds".as("dst_upds"))
-    // ownership guard PER BUCKET: the clone's vacuums reclaim nothing
-    val nVacuumed = (0 until 4).map { b =>
-      s.sql(s"CALL graft_fns.sys.vacuum_pot('" +
-        graft.sources.BucketedPotV2Source.bucketPot(dstRoot, b) +
-        "')").collect().length
-    }.sum
-    val out = Seq((nCloned.toLong, nVacuumed.toLong))
-      .toDF("n_cloned_markers", "n_vacuumed")
-      .crossJoin(srcHead).crossJoin(dstHead)
-      .select($"n_cloned_markers", $"src_n", $"src_upds",
-        $"dst_n", $"dst_upds", $"n_vacuumed")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+    Scratch.withDir("graft-u47") { dir =>
+      val srcRoot = s"$dir/src"
+      val dstRoot = s"$dir/dst"
+      val fmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val nat = Tables.nation(s, d)
+      def docs(df: org.apache.spark.sql.DataFrame, upd: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
+          .as("doc_json"))
+      def write(df: org.apache.spark.sql.DataFrame, root: String): Unit =
+        df.write.format(fmt).option("path", root).option("buckets", "4")
+          .mode("append").save()
+      write(docs(nat, 0), srcRoot)
+      write(docs(nat.filter($"n_regionkey" === 0), 1), srcRoot)
+      val nCloned = s.sql(
+        s"CALL graft_fns.sys.clone_pot('$srcRoot', '$dstRoot')")
+        .collect().length
+      // divergence: a write on the CLONE must not touch the source
+      write(docs(nat.filter($"n_regionkey" === 1), 2), dstRoot)
+      def state(root: String) = s.read.format(fmt).option("path", root)
+        .option("buckets", "4").load()
+        .agg(count(lit(1)).as("n"),
+          sum(get_json_object($"doc_json", "$.upd").cast("long")).as("upds"))
+      val srcHead = state(srcRoot)
+        .select($"n".as("src_n"), $"upds".as("src_upds"))
+      val dstHead = state(dstRoot)
+        .select($"n".as("dst_n"), $"upds".as("dst_upds"))
+      // ownership guard PER BUCKET: the clone's vacuums reclaim nothing
+      val nVacuumed = (0 until 4).map { b =>
+        s.sql(s"CALL graft_fns.sys.vacuum_pot('" +
+          graft.sources.BucketedPotV2Source.bucketPot(dstRoot, b) +
+          "')").collect().length
+      }.sum
+      Seq((nCloned.toLong, nVacuumed.toLong))
+        .toDF("n_cloned_markers", "n_vacuumed")
+        .crossJoin(srcHead).crossJoin(dstHead)
+        .select($"n_cloned_markers", $"src_n", $"src_upds",
+          $"dst_n", $"dst_upds", $"n_vacuumed")
+        .localCheckpoint(true)
+    }
   }
 
   val bucketedCloneSql: String =
@@ -3996,44 +3913,43 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u48").toString
-    val store = s"$dir/zstore"
-    val t = graft.kv.BucketedPotTable(s, dir, "zstore", 4)
-    val nat = Tables.nation(s, d)
-    t.upsert(nat.select(
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      $"n_nationkey".cast("long").as("a"),
-      pmod($"n_nationkey" * 37, lit(256)).cast("long").as("b")))
-    val dims = "a:a;b:b"
-    def call(sql: String): Seq[String] =
-      s.sql(sql).collect().map(_.getString(0)).toSeq
-    val clustered = call(
-      s"CALL graft_fns.sys.cluster_pot('$store', '$dims')")
-    val freshProbe = call(
-      s"CALL graft_fns.sys.ensure_clustered('$store', '$dims')")
-    val n1 = t.readClustered("a", 5, 12).count()
-    // divergent write: five new keys land a in [100, 104] — the layout
-    // is now STALE and ensure_clustered must rebuild it
-    t.upsert(nat.filter($"n_nationkey" < 5).select(
-      concat(lit("x"), $"n_nationkey".cast("string")).as("key"),
-      ($"n_nationkey" + 100).cast("long").as("a"),
-      pmod(($"n_nationkey" + 100) * 37, lit(256)).cast("long").as("b")))
-    val reclustered = call(
-      s"CALL graft_fns.sys.ensure_clustered('$store', '$dims')")
-    val n2 = t.readClustered("a", 100, 104).count()
-    val vacuumed = call(s"CALL graft_fns.sys.vacuum_layouts('$store')")
-    val out = Seq((
-      if (clustered == Seq("layout_gen=1")) 1L else 0L,
-      if (freshProbe == Seq("fresh")) 1L else 0L,
-      n1,
-      if (reclustered == Seq("layout_gen=2")) 1L else 0L,
-      n2,
-      vacuumed.length.toLong))
-      .toDF("clustered_v1", "fresh_noop", "pruned_a5_12",
-        "reclustered_v2", "pruned_new", "n_layouts_vacuumed")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+    Scratch.withDir("graft-u48") { dir =>
+      val store = s"$dir/zstore"
+      val t = graft.kv.BucketedPotTable(s, dir, "zstore", 4)
+      val nat = Tables.nation(s, d)
+      t.upsert(nat.select(
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        $"n_nationkey".cast("long").as("a"),
+        pmod($"n_nationkey" * 37, lit(256)).cast("long").as("b")))
+      val dims = "a:a;b:b"
+      def call(sql: String): Seq[String] =
+        s.sql(sql).collect().map(_.getString(0)).toSeq
+      val clustered = call(
+        s"CALL graft_fns.sys.cluster_pot('$store', '$dims')")
+      val freshProbe = call(
+        s"CALL graft_fns.sys.ensure_clustered('$store', '$dims')")
+      val n1 = t.readClustered("a", 5, 12).count()
+      // divergent write: five new keys land a in [100, 104] — the layout
+      // is now STALE and ensure_clustered must rebuild it
+      t.upsert(nat.filter($"n_nationkey" < 5).select(
+        concat(lit("x"), $"n_nationkey".cast("string")).as("key"),
+        ($"n_nationkey" + 100).cast("long").as("a"),
+        pmod(($"n_nationkey" + 100) * 37, lit(256)).cast("long").as("b")))
+      val reclustered = call(
+        s"CALL graft_fns.sys.ensure_clustered('$store', '$dims')")
+      val n2 = t.readClustered("a", 100, 104).count()
+      val vacuumed = call(s"CALL graft_fns.sys.vacuum_layouts('$store')")
+      Seq((
+        if (clustered == Seq("layout_gen=1")) 1L else 0L,
+        if (freshProbe == Seq("fresh")) 1L else 0L,
+        n1,
+        if (reclustered == Seq("layout_gen=2")) 1L else 0L,
+        n2,
+        vacuumed.length.toLong))
+        .toDF("clustered_v1", "fresh_noop", "pruned_a5_12",
+          "reclustered_v2", "pruned_new", "n_layouts_vacuumed")
+        .localCheckpoint(true)
+    }
   }
 
   val zorderMaintenanceSql: String =
@@ -4069,76 +3985,75 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u50").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-      .select($"n_nationkey", $"n_name", $"n_regionkey").collect().toSeq
-    def doc(name: String, upd: Int) = s"""{"name": "$name", "upd": $upd}"""
-    // gen 1: full snapshot through the batch write
-    nat.map(r => ("", s"n${r.getInt(0)}", doc(r.getString(1), 0)))
-      .toDF("pot_file", "key", "doc_json")
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    // gens 2-3: hand-staged DELTA epochs through the streaming commit
-    // path (dgen artifacts — the chain shape compaction exists for)
-    val fs = new org.apache.hadoop.fs.Path(pot)
-      .getFileSystem(graft.kv.HadoopConf.get)
-    def epoch(tag: String, lines: Seq[String]): Unit = {
-      val staging = new org.apache.hadoop.fs.Path(s"$dir/t/.staging-$tag")
-      fs.mkdirs(staging)
-      val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
-      val out = fs.create(frag, false)
-      try out.write(lines.mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val w = new graft.sources.PotV2Write(pot,
-        graft.sources.PotV2Source.Schema, tag, truncateFirst = false,
-        graft.sources.PotV2Source.DefaultMaxObjectBytes)
-      w.commitDeltaEpoch(
-        Array(graft.sources.PotFragmentMessage(0, frag.toString)),
-        tag, staging)
+    Scratch.withDir("graft-u50") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+        .select($"n_nationkey", $"n_name", $"n_regionkey").collect().toSeq
+      def doc(name: String, upd: Int) = s"""{"name": "$name", "upd": $upd}"""
+      // gen 1: full snapshot through the batch write
+      nat.map(r => ("", s"n${r.getInt(0)}", doc(r.getString(1), 0)))
+        .toDF("pot_file", "key", "doc_json")
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      // gens 2-3: hand-staged DELTA epochs through the streaming commit
+      // path (dgen artifacts — the chain shape compaction exists for)
+      val fs = new org.apache.hadoop.fs.Path(pot)
+        .getFileSystem(graft.kv.HadoopConf.get)
+      def epoch(tag: String, lines: Seq[String]): Unit = {
+        val staging = new org.apache.hadoop.fs.Path(s"$dir/t/.staging-$tag")
+        fs.mkdirs(staging)
+        val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
+        val out = fs.create(frag, false)
+        try out.write(lines.mkString("", "\n", "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+        val w = new graft.sources.PotV2Write(pot,
+          graft.sources.PotV2Source.Schema, tag, truncateFirst = false,
+          graft.sources.PotV2Source.DefaultMaxObjectBytes)
+        w.commitDeltaEpoch(
+          Array(graft.sources.PotFragmentMessage(0, frag.toString)),
+          tag, staging)
+      }
+      epoch("u50e1", nat.filter(_.getInt(2) == 0).map(r =>
+        s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1), 1)}}"""))
+      epoch("u50e2", nat.filter(_.getInt(2) == 1).map(r =>
+        s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1), 2)}}""") :+
+        """{"k": "n7", "d": null}""")
+      val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
+      val gensBefore = graft.kv.CommitMarker.committedGenerations(fs, commits)
+      val headDgenBefore = graft.sources.PotChain.isDgen(
+        graft.sources.PotChain.artifactOf(fs, commits, gensBefore.max))
+      def state(gen: Option[Long]) = {
+        val r = s.read.format(fmt).option("path", pot)
+        gen.foreach(g => r.option("generation", g.toString))
+        r.load()
+      }
+      // MATERIALIZED before the CALL — a lazy frame would fold the
+      // post-compact chain and read one provenance value instead of three
+      val pgenBefore = state(None)
+        .select(col(graft.sources.PotV2Source.PotGenCol).as("pg"))
+        .agg(countDistinct($"pg").as("pgen_distinct_before"))
+        .localCheckpoint(true)
+      val folds = s.sql(s"CALL graft_fns.sys.compact_pot('$pot')")
+        .collect().length
+      def sums(df: org.apache.spark.sql.DataFrame) = df.agg(
+        count(lit(1)).as("n"),
+        sum(get_json_object($"doc_json", "$.upd").cast("long")).as("upd"))
+      val after = sums(state(None))
+        .select($"n".as("n_after"), $"upd".as("upd_after"))
+      val v3 = sums(state(Some(3L)))
+        .select($"n".as("n_v3"), $"upd".as("upd_v3"))
+      val pgenAfter = state(None)
+        .select(col(graft.sources.PotV2Source.PotGenCol).as("pg"))
+        .agg(countDistinct($"pg").as("pgen_distinct_after"),
+          max($"pg").as("pgen_head"))
+      Seq((gensBefore.length.toLong,
+        if (headDgenBefore) 1L else 0L, folds.toLong))
+        .toDF("n_gens_before", "head_dgen_before", "n_folds")
+        .crossJoin(pgenBefore).crossJoin(after).crossJoin(v3)
+        .crossJoin(pgenAfter)
+        .localCheckpoint(true)
     }
-    epoch("u50e1", nat.filter(_.getInt(2) == 0).map(r =>
-      s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1), 1)}}"""))
-    epoch("u50e2", nat.filter(_.getInt(2) == 1).map(r =>
-      s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1), 2)}}""") :+
-      """{"k": "n7", "d": null}""")
-    val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
-    val gensBefore = graft.kv.CommitMarker.committedGenerations(fs, commits)
-    val headDgenBefore = graft.sources.PotChain.isDgen(
-      graft.sources.PotChain.artifactOf(fs, commits, gensBefore.max))
-    def state(gen: Option[Long]) = {
-      val r = s.read.format(fmt).option("path", pot)
-      gen.foreach(g => r.option("generation", g.toString))
-      r.load()
-    }
-    // MATERIALIZED before the CALL — a lazy frame would fold the
-    // post-compact chain and read one provenance value instead of three
-    val pgenBefore = state(None)
-      .select(col(graft.sources.PotV2Source.PotGenCol).as("pg"))
-      .agg(countDistinct($"pg").as("pgen_distinct_before"))
-      .localCheckpoint(true)
-    val folds = s.sql(s"CALL graft_fns.sys.compact_pot('$pot')")
-      .collect().length
-    def sums(df: org.apache.spark.sql.DataFrame) = df.agg(
-      count(lit(1)).as("n"),
-      sum(get_json_object($"doc_json", "$.upd").cast("long")).as("upd"))
-    val after = sums(state(None))
-      .select($"n".as("n_after"), $"upd".as("upd_after"))
-    val v3 = sums(state(Some(3L)))
-      .select($"n".as("n_v3"), $"upd".as("upd_v3"))
-    val pgenAfter = state(None)
-      .select(col(graft.sources.PotV2Source.PotGenCol).as("pg"))
-      .agg(countDistinct($"pg").as("pgen_distinct_after"),
-        max($"pg").as("pgen_head"))
-    val out = Seq((gensBefore.length.toLong,
-      if (headDgenBefore) 1L else 0L, folds.toLong))
-      .toDF("n_gens_before", "head_dgen_before", "n_folds")
-      .crossJoin(pgenBefore).crossJoin(after).crossJoin(v3)
-      .crossJoin(pgenAfter)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
   }
 
   val compactPotVerbSql: String =
@@ -4178,25 +4093,25 @@ object Extensibility {
     */
   def sqlTableSample(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u41").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val tbl = "graft_u41_pot"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
-      s"doc_json STRING) USING $fmt OPTIONS (path '$pot')")
-    Tables.nation(s, d).select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"))).as("doc_json"))
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    val out = s.sql(
-      s"""SELECT key, get_json_object(doc_json, '$$.name') AS name
-         |FROM $tbl TABLESAMPLE (40 PERCENT)
-         |ORDER BY key""".stripMargin).localCheckpoint(true)
-    s.sql(s"DROP TABLE $tbl")
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+    Scratch.withDir("graft-u41") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val tbl = "graft_u41_pot"
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
+        s"doc_json STRING) USING $fmt OPTIONS (path '$pot')")
+      Tables.nation(s, d).select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"))).as("doc_json"))
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      val out = s.sql(
+        s"""SELECT key, get_json_object(doc_json, '$$.name') AS name
+           |FROM $tbl TABLESAMPLE (40 PERCENT)
+           |ORDER BY key""".stripMargin).localCheckpoint(true)
+      s.sql(s"DROP TABLE $tbl")
+      out
+    }
   }
 
   val sqlTableSampleSql: String =
@@ -4230,23 +4145,22 @@ object Extensibility {
     */
   def docFieldPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-u45").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    Tables.customer(s, d).select(
-      lit("").as("pot_file"),
-      concat(lit("c"), $"c_custkey".cast("string")).as("key"),
-      to_json(struct($"c_mktsegment".as("seg"),
-        $"c_nationkey".cast("long").as("nat"))).as("doc_json"))
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    val out = s.read.format(fmt).option("path", pot)
-      .option("shred", "seg:string,nat:bigint").load()
-      .filter($"seg" === "BUILDING" && $"nat" >= 10)
-      .select($"key", $"nat")
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+    Scratch.withDir("graft-u45") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      Tables.customer(s, d).select(
+        lit("").as("pot_file"),
+        concat(lit("c"), $"c_custkey".cast("string")).as("key"),
+        to_json(struct($"c_mktsegment".as("seg"),
+          $"c_nationkey".cast("long").as("nat"))).as("doc_json"))
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      s.read.format(fmt).option("path", pot)
+        .option("shred", "seg:string,nat:bigint").load()
+        .filter($"seg" === "BUILDING" && $"nat" >= 10)
+        .select($"key", $"nat")
+        .orderBy($"key")
+        .localCheckpoint(true)
+    }
   }
 
   val docFieldPushdownSql: String =
@@ -4420,38 +4334,37 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-u36").toString
-    val pot = s"$dir/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-    def docs(df: org.apache.spark.sql.DataFrame, upd: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
-      to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
-        .as("doc_json"))
-    docs(nat, 0)
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0), 1)
-      .write.format(fmt).option("path", pot).mode("append").save()
-    // the CALL: gen 1's snapshot body is below the covering snapshot
-    // (gen 2) — exactly one body reclaimed, chain + state intact
-    val deleted = s.sql(s"CALL graft_fns.sys.vacuum_pot('$pot')")
-      .agg(count(lit(1)).as("n_deleted"),
-        sum(when($"deleted_path".rlike("\\.snap-.*\\.json$"), 1L)
-          .otherwise(0L)).as("n_snap_bodies"))
-    val recovered = s.sql(
-      s"CALL graft_fns.sys.recover_statements('$dir/clean-store')")
-      .agg(count(lit(1)).as("n_recovered"))
-    val after = s.read.format(fmt).option("path", pot).load()
-      .agg(count(lit(1)).as("n_rows_after"),
-        sum(when(get_json_object($"doc_json", "$.upd") === "1", 1L)
-          .otherwise(0L)).as("n_upd"))
-    val out = deleted.crossJoin(recovered).crossJoin(after)
-      .select($"n_deleted", $"n_snap_bodies", $"n_recovered",
-        $"n_rows_after", $"n_upd")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    out
+    Scratch.withDir("graft-u36") { dir =>
+      val pot = s"$dir/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+      def docs(df: org.apache.spark.sql.DataFrame, upd: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), $"n_nationkey".cast("string")).as("key"),
+        to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
+          .as("doc_json"))
+      docs(nat, 0)
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0), 1)
+        .write.format(fmt).option("path", pot).mode("append").save()
+      // the CALL: gen 1's snapshot body is below the covering snapshot
+      // (gen 2) — exactly one body reclaimed, chain + state intact
+      val deleted = s.sql(s"CALL graft_fns.sys.vacuum_pot('$pot')")
+        .agg(count(lit(1)).as("n_deleted"),
+          sum(when($"deleted_path".rlike("\\.snap-.*\\.json$"), 1L)
+            .otherwise(0L)).as("n_snap_bodies"))
+      val recovered = s.sql(
+        s"CALL graft_fns.sys.recover_statements('$dir/clean-store')")
+        .agg(count(lit(1)).as("n_recovered"))
+      val after = s.read.format(fmt).option("path", pot).load()
+        .agg(count(lit(1)).as("n_rows_after"),
+          sum(when(get_json_object($"doc_json", "$.upd") === "1", 1L)
+            .otherwise(0L)).as("n_upd"))
+      deleted.crossJoin(recovered).crossJoin(after)
+        .select($"n_deleted", $"n_snap_bodies", $"n_recovered",
+          $"n_rows_after", $"n_upd")
+        .localCheckpoint(true)
+    }
   }
 
   val sqlStoredProcedureSql: String =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.kv.PotTable
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -166,13 +166,13 @@ object Kv {
     */
   def snapshotOp(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pot").toString
-    val pot = PotTable(s, root, "nation_pot")
-    val docs = Tables.nation(s, d)
-      .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey")
-    pot.upsert(docs)
-    pot.snapshot(s"$root/_export")
+    Scratch.withDir("graft-pot") { root =>
+      val pot = PotTable(s, root, "nation_pot")
+      val docs = Tables.nation(s, d)
+        .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey")
+      pot.upsert(docs)
+      pot.snapshot(s"$root/_export")
+    }
   }
 
   /** kv11: A7 ROUND-TRIP — snapshot/bundle then restore into a fresh
@@ -187,26 +187,23 @@ object Kv {
     */
   def snapshotRestore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pot-sr").toString
-    val pot = PotTable(s, root, "nation_pot")
-    val docs = Tables.nation(s, d)
-      .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey")
-    pot.upsert(docs) // generation 1
-    val upd = docs.filter($"key".cast("int") % 5 === 0)
-      .withColumn("n_regionkey", $"n_regionkey" + 100)
-    pot.upsert(upd) // generation 2 — the state the snapshot must carry
-    PotTable.snapshotAll(s, root, s"$root/_export")
-    val root2 = java.nio.file.Files
-      .createTempDirectory("graft-pot-sr2").toString
-    PotTable.restore(s, s"$root/_export/bundle.tar.gz", root2)
-    val result = PotTable(s, root2, "nation_pot").get()
-      .select($"key".cast("int").as("key"), $"n_name", $"n_regionkey")
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    new scala.reflect.io.Directory(new java.io.File(root2)).deleteRecursively()
-    result
+    Scratch.withDir("graft-pot-sr") { root =>
+      val pot = PotTable(s, root, "nation_pot")
+      val docs = Tables.nation(s, d)
+        .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey")
+      pot.upsert(docs) // generation 1
+      val upd = docs.filter($"key".cast("int") % 5 === 0)
+        .withColumn("n_regionkey", $"n_regionkey" + 100)
+      pot.upsert(upd) // generation 2 — the state the snapshot must carry
+      PotTable.snapshotAll(s, root, s"$root/_export")
+      Scratch.withDir("graft-pot-sr2") { root2 =>
+        PotTable.restore(s, s"$root/_export/bundle.tar.gz", root2)
+        PotTable(s, root2, "nation_pot").get()
+          .select($"key".cast("int").as("key"), $"n_name", $"n_regionkey")
+          .orderBy($"key")
+          .localCheckpoint(true)
+      }
+    }
   }
 
   val snapshotRestoreSql: String =
@@ -230,22 +227,20 @@ object Kv {
     */
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pot-evo").toString
-    val pot = PotTable(s, root, "nation_evo")
-    val n = Tables.nation(s, d)
-    pot.upsert(n.select($"n_nationkey".cast("string").as("key"), $"n_name"))
-    pot.upsert(n.filter($"n_nationkey" % 3 === 0)
-      .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey"))
-    pot.upsert(n.filter($"n_nationkey" % 6 === 0)
-      .select($"n_nationkey".cast("string").as("key"),
-        concat($"n_name", lit("!")).as("n_name")))
-    val result = pot.get()
-      .select($"key".cast("int").as("key"), $"n_name", $"n_regionkey")
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-pot-evo") { root =>
+      val pot = PotTable(s, root, "nation_evo")
+      val n = Tables.nation(s, d)
+      pot.upsert(n.select($"n_nationkey".cast("string").as("key"), $"n_name"))
+      pot.upsert(n.filter($"n_nationkey" % 3 === 0)
+        .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey"))
+      pot.upsert(n.filter($"n_nationkey" % 6 === 0)
+        .select($"n_nationkey".cast("string").as("key"),
+          concat($"n_name", lit("!")).as("n_name")))
+      pot.get()
+        .select($"key".cast("int").as("key"), $"n_name", $"n_regionkey")
+        .orderBy($"key")
+        .localCheckpoint(true)
+    }
   }
 
   val schemaEvolutionSql: String =
@@ -398,23 +393,21 @@ object Kv {
     */
   def reshard(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bpot-rs").toString
-    val t = new graft.kv.BucketedPotTable(s, root, "cust_rs", 4)
-    val base = Tables.customer(s, d)
-      .filter($"c_custkey" <= 300)
-      .select($"c_custkey".cast("string").as("key"),
-        $"c_mktsegment", $"c_nationkey")
-    t.upsert(base)
-    t.upsert(base.filter($"key".cast("bigint") % 7 === 0)
-      .withColumn("c_mktsegment", lit("UPDATED")))
-    val wide = t.reshardTo(16)
-    val result = wide.get()
-      .select($"key".cast("bigint").as("key"), $"c_mktsegment", $"c_nationkey")
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-bpot-rs") { root =>
+      val t = new graft.kv.BucketedPotTable(s, root, "cust_rs", 4)
+      val base = Tables.customer(s, d)
+        .filter($"c_custkey" <= 300)
+        .select($"c_custkey".cast("string").as("key"),
+          $"c_mktsegment", $"c_nationkey")
+      t.upsert(base)
+      t.upsert(base.filter($"key".cast("bigint") % 7 === 0)
+        .withColumn("c_mktsegment", lit("UPDATED")))
+      val wide = t.reshardTo(16)
+      wide.get()
+        .select($"key".cast("bigint").as("key"), $"c_mktsegment", $"c_nationkey")
+        .orderBy($"key")
+        .localCheckpoint(true)
+    }
   }
 
   val reshardSql: String =
@@ -436,35 +429,33 @@ object Kv {
     */
   def storageReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pot-report").toString
-    val alpha = PotTable(s, root, "alpha")
-    alpha.upsert(Tables.nation(s, d)
-      .select($"n_nationkey".cast("string").as("key"), $"n_name"))
-    alpha.upsert(Tables.nation(s, d).filter($"n_nationkey" % 5 === 0)
-      .select($"n_nationkey".cast("string").as("key"),
-        concat($"n_name", lit("+")).as("n_name")))
-    val beta = PotTable(s, root, "beta")
-    beta.upsert(Tables.region(s, d)
-      .select($"r_regionkey".cast("string").as("key"), $"r_name"))
-    val gamma = PotTable(s, root, "gamma")
-    val cust = Tables.customer(s, d).filter($"c_custkey" <= 100)
-      .select($"c_custkey".cast("string").as("key"), $"c_mktsegment")
-    gamma.upsert(cust)
-    gamma.remove(cust.filter($"key".cast("bigint") % 9 === 0)
-      .select($"key").as[String].collect().toSeq)
-    gamma.upsert(cust.filter($"key".cast("bigint") % 50 === 0)
-      .select(concat(lit("x"), $"key").as("key"), $"c_mktsegment"))
-    val rows = Seq(("alpha", alpha), ("beta", beta), ("gamma", gamma))
-      .map { case (name, pot) =>
-        pot.get().agg(count(lit(1)).as("n_live"))
-          .select(lit(name).as("pot"),
-            lit(pot.generation).as("n_generations"), $"n_live")
-      }
-    val result = rows.reduce(_ unionByName _)
-      .orderBy($"pot").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-pot-report") { root =>
+      val alpha = PotTable(s, root, "alpha")
+      alpha.upsert(Tables.nation(s, d)
+        .select($"n_nationkey".cast("string").as("key"), $"n_name"))
+      alpha.upsert(Tables.nation(s, d).filter($"n_nationkey" % 5 === 0)
+        .select($"n_nationkey".cast("string").as("key"),
+          concat($"n_name", lit("+")).as("n_name")))
+      val beta = PotTable(s, root, "beta")
+      beta.upsert(Tables.region(s, d)
+        .select($"r_regionkey".cast("string").as("key"), $"r_name"))
+      val gamma = PotTable(s, root, "gamma")
+      val cust = Tables.customer(s, d).filter($"c_custkey" <= 100)
+        .select($"c_custkey".cast("string").as("key"), $"c_mktsegment")
+      gamma.upsert(cust)
+      gamma.remove(cust.filter($"key".cast("bigint") % 9 === 0)
+        .select($"key").as[String].collect().toSeq)
+      gamma.upsert(cust.filter($"key".cast("bigint") % 50 === 0)
+        .select(concat(lit("x"), $"key").as("key"), $"c_mktsegment"))
+      val rows = Seq(("alpha", alpha), ("beta", beta), ("gamma", gamma))
+        .map { case (name, pot) =>
+          pot.get().agg(count(lit(1)).as("n_live"))
+            .select(lit(name).as("pot"),
+              lit(pot.generation).as("n_generations"), $"n_live")
+        }
+      rows.reduce(_ unionByName _)
+        .orderBy($"pot").localCheckpoint(true)
+    }
   }
 
   val storageReportSql: String =
@@ -561,31 +552,29 @@ object Kv {
     */
   def timeTravel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pot-tt").toString
-    val pot = PotTable(s, root, "cust_pot")
-    val base = Tables.customer(s, d)
-      .select($"c_custkey".cast("string").as("key"),
-        $"c_acctbal", $"c_mktsegment")
-    pot.upsert(base) // generation 1
-    val updates = base.filter($"key".cast("bigint") % 10 === 0)
-      .withColumn("c_acctbal", $"c_acctbal" + 1000.0)
-      .withColumn("c_mktsegment", lit("UPDATED"))
-    pot.upsert(updates) // generation 2 (LWW merge)
-    val g1 = pot.getAt(1L)
-      .select($"key", $"c_acctbal".as("bal_g1"))
-    val cur = pot.get()
-      .select($"key", $"c_acctbal".as("bal_g2"), $"c_mktsegment".as("seg_g2"))
-    // Materialize (lineage cut) before deleting the run's temp store:
-    // repeated invocations must not grow tmpdir (st1's pattern).
-    val result = g1.join(cur, Seq("key"))
-      .filter($"bal_g1" =!= $"bal_g2")
-      .select($"key".cast("bigint").as("key"),
-        $"bal_g1", $"bal_g2", $"seg_g2")
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-pot-tt") { root =>
+      val pot = PotTable(s, root, "cust_pot")
+      val base = Tables.customer(s, d)
+        .select($"c_custkey".cast("string").as("key"),
+          $"c_acctbal", $"c_mktsegment")
+      pot.upsert(base) // generation 1
+      val updates = base.filter($"key".cast("bigint") % 10 === 0)
+        .withColumn("c_acctbal", $"c_acctbal" + 1000.0)
+        .withColumn("c_mktsegment", lit("UPDATED"))
+      pot.upsert(updates) // generation 2 (LWW merge)
+      val g1 = pot.getAt(1L)
+        .select($"key", $"c_acctbal".as("bal_g1"))
+      val cur = pot.get()
+        .select($"key", $"c_acctbal".as("bal_g2"), $"c_mktsegment".as("seg_g2"))
+      // Materialize (lineage cut) before deleting the run's temp store:
+      // repeated invocations must not grow tmpdir (st1's pattern).
+      g1.join(cur, Seq("key"))
+        .filter($"bal_g1" =!= $"bal_g2")
+        .select($"key".cast("bigint").as("key"),
+          $"bal_g1", $"bal_g2", $"seg_g2")
+        .orderBy($"key")
+        .localCheckpoint(true)
+    }
   }
 
   val timeTravelSql: String =
@@ -607,26 +596,24 @@ object Kv {
     */
   def bucketedScan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bpot-q").toString
-    val t = new graft.kv.BucketedPotTable(s, root, "cust_bpot", 16)
-    val base = Tables.customer(s, d)
-      .filter($"c_custkey" <= 300)
-      .select($"c_custkey".cast("string").as("key"),
-        $"c_mktsegment", $"c_nationkey")
-    t.upsert(base) // gen 1: base load
-    t.upsert(base.filter($"key".cast("bigint") % 7 === 0)
-      .withColumn("c_mktsegment", lit("UPDATED"))) // gen 2: LWW wave
-    t.remove((0 to 300).filter(_ % 13 == 0).map(_.toString)) // gen 3
-    t.compact() // gen 4: fold the chain
-    val result = t.get()
-      .groupBy($"c_mktsegment")
-      .agg(count(lit(1)).as("n_keys"),
-        sum($"c_nationkey".cast("bigint")).as("sum_nation"))
-      .orderBy($"c_mktsegment")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-bpot-q") { root =>
+      val t = new graft.kv.BucketedPotTable(s, root, "cust_bpot", 16)
+      val base = Tables.customer(s, d)
+        .filter($"c_custkey" <= 300)
+        .select($"c_custkey".cast("string").as("key"),
+          $"c_mktsegment", $"c_nationkey")
+      t.upsert(base) // gen 1: base load
+      t.upsert(base.filter($"key".cast("bigint") % 7 === 0)
+        .withColumn("c_mktsegment", lit("UPDATED"))) // gen 2: LWW wave
+      t.remove((0 to 300).filter(_ % 13 == 0).map(_.toString)) // gen 3
+      t.compact() // gen 4: fold the chain
+      t.get()
+        .groupBy($"c_mktsegment")
+        .agg(count(lit(1)).as("n_keys"),
+          sum($"c_nationkey".cast("bigint")).as("sum_nation"))
+        .orderBy($"c_mktsegment")
+        .localCheckpoint(true)
+    }
   }
 
   val bucketedScanSql: String =
@@ -656,24 +643,22 @@ object Kv {
     */
   def pointGet(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bpot-pg").toString
-    val t = new graft.kv.BucketedPotTable(s, root, "cust_pg", 16)
-    val base = Tables.customer(s, d)
-      .filter($"c_custkey" <= 300)
-      .select($"c_custkey".cast("string").as("key"),
-        $"c_mktsegment", $"c_nationkey")
-    t.upsert(base) // gen 1: base load
-    t.upsert(base.filter($"key".cast("bigint") % 7 === 0)
-      .withColumn("c_mktsegment", lit("UPDATED"))) // gen 2: LWW wave
-    t.remove(Seq("260")) // gen 3: one key gone
-    val result = Seq("42", "137", "260").map(t.get(_))
-      .reduce(_ unionByName _)
-      .select($"key", $"c_mktsegment", $"c_nationkey")
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-bpot-pg") { root =>
+      val t = new graft.kv.BucketedPotTable(s, root, "cust_pg", 16)
+      val base = Tables.customer(s, d)
+        .filter($"c_custkey" <= 300)
+        .select($"c_custkey".cast("string").as("key"),
+          $"c_mktsegment", $"c_nationkey")
+      t.upsert(base) // gen 1: base load
+      t.upsert(base.filter($"key".cast("bigint") % 7 === 0)
+        .withColumn("c_mktsegment", lit("UPDATED"))) // gen 2: LWW wave
+      t.remove(Seq("260")) // gen 3: one key gone
+      Seq("42", "137", "260").map(t.get(_))
+        .reduce(_ unionByName _)
+        .select($"key", $"c_mktsegment", $"c_nationkey")
+        .orderBy($"key")
+        .localCheckpoint(true)
+    }
   }
 
   val pointGetSql: String =
@@ -696,23 +681,21 @@ object Kv {
     */
   def secondaryIndex(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ixpot").toString
-    val ip = new graft.kv.IndexedPot(s, root, "cust")
-    val base = Tables.customer(s, d)
-      .filter($"c_custkey" <= 300)
-      .select($"c_custkey".cast("string").as("key"),
-        $"c_mktsegment".as("fval"), $"c_nationkey")
-    ip.upsert(base)
-    ip.upsert(base.filter($"key".cast("bigint") % 7 === 0)
-      .withColumn("fval", lit("MOVED")))
-    val result = Seq("MOVED", "BUILDING").map(ip.lookup)
-      .reduce(_ unionByName _)
-      .select($"fval", $"key", $"c_nationkey")
-      .orderBy($"fval", $"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-ixpot") { root =>
+      val ip = new graft.kv.IndexedPot(s, root, "cust")
+      val base = Tables.customer(s, d)
+        .filter($"c_custkey" <= 300)
+        .select($"c_custkey".cast("string").as("key"),
+          $"c_mktsegment".as("fval"), $"c_nationkey")
+      ip.upsert(base)
+      ip.upsert(base.filter($"key".cast("bigint") % 7 === 0)
+        .withColumn("fval", lit("MOVED")))
+      Seq("MOVED", "BUILDING").map(ip.lookup)
+        .reduce(_ unionByName _)
+        .select($"fval", $"key", $"c_nationkey")
+        .orderBy($"fval", $"key")
+        .localCheckpoint(true)
+    }
   }
 
   val secondaryIndexSql: String =
@@ -744,23 +727,21 @@ object Kv {
     */
   def ttlExpiry(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pot-ttl").toString
-    val pot = PotTable(s, root, "cust_ttl")
-    val docs = Tables.customer(s, d)
-      .select($"c_custkey".cast("string").as("key"), $"c_name",
-        ($"c_custkey" % 11).cast("int").as("exp_day"))
-    pot.upsert(docs) // gen 1: every doc with its initial lease
-    pot.upsert(docs.filter($"key".cast("long") % 4 === 0)
-      .withColumn("exp_day", ($"exp_day" + 11).cast("int"))) // gen 2: renewals
-    pot.removeWhere($"exp_day" < 5) // gen 3: the sweep, one atomic
-    // generation — fully distributed (r14: the expired keys are never
-    // materialized on the driver; the predicate is the rewrite)
-    val result = pot.get()
-      .select($"key".cast("long").as("key"), $"c_name", $"exp_day")
-      .orderBy($"key").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-pot-ttl") { root =>
+      val pot = PotTable(s, root, "cust_ttl")
+      val docs = Tables.customer(s, d)
+        .select($"c_custkey".cast("string").as("key"), $"c_name",
+          ($"c_custkey" % 11).cast("int").as("exp_day"))
+      pot.upsert(docs) // gen 1: every doc with its initial lease
+      pot.upsert(docs.filter($"key".cast("long") % 4 === 0)
+        .withColumn("exp_day", ($"exp_day" + 11).cast("int"))) // gen 2: renewals
+      pot.removeWhere($"exp_day" < 5) // gen 3: the sweep, one atomic
+      // generation — fully distributed (r14: the expired keys are never
+      // materialized on the driver; the predicate is the rewrite)
+      pot.get()
+        .select($"key".cast("long").as("key"), $"c_name", $"exp_day")
+        .orderBy($"key").localCheckpoint(true)
+    }
   }
 
   /** kv20: the TTL sweep at BUCKETED-store scale — kv19's lifecycle
@@ -774,24 +755,22 @@ object Kv {
     */
   def bucketedTtl(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bpot-ttl").toString
-    val pot = graft.kv.BucketedPotTable(s, root, "cust_bttl", 16)
-    val docs = Tables.customer(s, d).select(
-      $"c_custkey".cast("string").as("key"),
-      $"c_nationkey".cast("int").as("nat"),
-      ($"c_custkey" % 13).cast("int").as("exp_day"))
-    pot.upsert(docs) // gen 1: initial leases
-    pot.upsert(docs.filter($"key".cast("long") % 5 === 0)
-      .withColumn("exp_day", ($"exp_day" + 13).cast("int"))) // gen 2
-    pot.removeWhere($"exp_day" < 6) // gen 3: distributed sweep
-    val result = pot.get()
-      .groupBy($"exp_day")
-      .agg(count(lit(1)).as("n"),
-        sum($"nat".cast("long")).as("sum_nat"))
-      .orderBy($"exp_day").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-bpot-ttl") { root =>
+      val pot = graft.kv.BucketedPotTable(s, root, "cust_bttl", 16)
+      val docs = Tables.customer(s, d).select(
+        $"c_custkey".cast("string").as("key"),
+        $"c_nationkey".cast("int").as("nat"),
+        ($"c_custkey" % 13).cast("int").as("exp_day"))
+      pot.upsert(docs) // gen 1: initial leases
+      pot.upsert(docs.filter($"key".cast("long") % 5 === 0)
+        .withColumn("exp_day", ($"exp_day" + 13).cast("int"))) // gen 2
+      pot.removeWhere($"exp_day" < 6) // gen 3: distributed sweep
+      pot.get()
+        .groupBy($"exp_day")
+        .agg(count(lit(1)).as("n"),
+          sum($"nat".cast("long")).as("sum_nat"))
+        .orderBy($"exp_day").localCheckpoint(true)
+    }
   }
 
   val bucketedTtlSql: String =
@@ -832,34 +811,33 @@ object Kv {
     */
   def bucketedRestore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bpot-rb").toString
-    val pot = graft.kv.BucketedPotTable(s, root, "cust_rb", 8)
-    val base = Tables.customer(s, d)
-      .filter($"c_custkey" <= 300)
-      .select($"c_custkey".cast("string").as("key"),
-        $"c_mktsegment", $"c_nationkey".cast("int").as("nat"))
-    pot.upsert(base) // gen 1
-    pot.upsert(base.filter($"key".cast("long") % 4 === 0)
-      .withColumn("c_mktsegment", lit("MOVED"))) // gen 2: the good state
-    pot.removeWhere($"key".cast("long") % 6 === 0) // gen 3: bad sweep
-    pot.upsert(base.filter($"key".cast("long") % 50 === 0)
-      .select(concat(lit("junk-"), $"key").as("key"),
-        lit("BAD").as("c_mktsegment"), lit(-1).as("nat"))) // gen 4: junk
-    // rollback to gen 2, forward-moving
-    val good = pot.getAt(2L).select($"key", $"c_mktsegment", $"nat")
-    pot.upsert(good) // gen 5: restore overwritten/removed keys
-    val extras = pot.get().select($"key")
-      .join(good.select($"key"), Seq("key"), "left_anti")
-      .as[String].collect().toSeq.sorted // incident-sized, not table-sized
-    pot.remove(extras) // gen 6: drop the bad deploy's own writes
-    val result = pot.get()
-      .select($"key".cast("long").as("key"), $"c_mktsegment", $"nat")
-      .orderBy($"key").localCheckpoint(true)
-    require(pot.generation == 6L,
-      s"rollback must preserve history: expected head 6, got ${pot.generation}")
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-bpot-rb") { root =>
+      val pot = graft.kv.BucketedPotTable(s, root, "cust_rb", 8)
+      val base = Tables.customer(s, d)
+        .filter($"c_custkey" <= 300)
+        .select($"c_custkey".cast("string").as("key"),
+          $"c_mktsegment", $"c_nationkey".cast("int").as("nat"))
+      pot.upsert(base) // gen 1
+      pot.upsert(base.filter($"key".cast("long") % 4 === 0)
+        .withColumn("c_mktsegment", lit("MOVED"))) // gen 2: the good state
+      pot.removeWhere($"key".cast("long") % 6 === 0) // gen 3: bad sweep
+      pot.upsert(base.filter($"key".cast("long") % 50 === 0)
+        .select(concat(lit("junk-"), $"key").as("key"),
+          lit("BAD").as("c_mktsegment"), lit(-1).as("nat"))) // gen 4: junk
+      // rollback to gen 2, forward-moving
+      val good = pot.getAt(2L).select($"key", $"c_mktsegment", $"nat")
+      pot.upsert(good) // gen 5: restore overwritten/removed keys
+      val extras = pot.get().select($"key")
+        .join(good.select($"key"), Seq("key"), "left_anti")
+        .as[String].collect().toSeq.sorted // incident-sized, not table-sized
+      pot.remove(extras) // gen 6: drop the bad deploy's own writes
+      val result = pot.get()
+        .select($"key".cast("long").as("key"), $"c_mktsegment", $"nat")
+        .orderBy($"key").localCheckpoint(true)
+      require(pot.generation == 6L,
+        s"rollback must preserve history: expected head 6, got ${pot.generation}")
+      result
+    }
   }
 
   val bucketedRestoreSql: String =
@@ -935,36 +913,34 @@ object Kv {
     */
   def txnCommit(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pot-txn").toString
-    val txn = new graft.kv.PotTxn(s, root)
-    val nat = Tables.nation(s, d)
-      .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey")
-    val reg = Tables.region(s, d)
-      .select($"r_regionkey".cast("string").as("key"), $"r_name")
-    txn.commitAll(Seq("nation_pot" -> nat, "region_pot" -> reg))
-    PotTable(s, root, "nation_pot").upsert(
-      nat.filter($"key".cast("int") % 2 === 0)
-        .withColumn("n_regionkey", $"n_regionkey" + 100))
-    txn.commitAll(Seq(
-      "nation_pot" -> nat.filter($"key".cast("int") % 3 === 0)
-        .withColumn("n_regionkey", $"n_regionkey" + 1000),
-      "region_pot" -> reg.filter($"key".cast("int") >= 3)
-        .withColumn("r_name", concat(lit("x"), $"r_name"))))
-    txn.prepare(Seq("region_pot" -> reg.filter($"key".cast("int") === 0)
-      .withColumn("r_name", lit("recovered"))))
-    txn.recover()
-    val natOut = PotTable(s, root, "nation_pot").get()
-      .select(lit("nation_pot").as("pot"), $"key".cast("int").as("key"),
-        concat($"n_name", lit(":"), $"n_regionkey".cast("string")).as("payload"))
-    val regOut = PotTable(s, root, "region_pot").get()
-      .select(lit("region_pot").as("pot"), $"key".cast("int").as("key"),
-        $"r_name".as("payload"))
-    val result = natOut.unionByName(regOut)
-      .orderBy($"pot", $"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
+    Scratch.withDir("graft-pot-txn") { root =>
+      val txn = new graft.kv.PotTxn(s, root)
+      val nat = Tables.nation(s, d)
+        .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey")
+      val reg = Tables.region(s, d)
+        .select($"r_regionkey".cast("string").as("key"), $"r_name")
+      txn.commitAll(Seq("nation_pot" -> nat, "region_pot" -> reg))
+      PotTable(s, root, "nation_pot").upsert(
+        nat.filter($"key".cast("int") % 2 === 0)
+          .withColumn("n_regionkey", $"n_regionkey" + 100))
+      txn.commitAll(Seq(
+        "nation_pot" -> nat.filter($"key".cast("int") % 3 === 0)
+          .withColumn("n_regionkey", $"n_regionkey" + 1000),
+        "region_pot" -> reg.filter($"key".cast("int") >= 3)
+          .withColumn("r_name", concat(lit("x"), $"r_name"))))
+      txn.prepare(Seq("region_pot" -> reg.filter($"key".cast("int") === 0)
+        .withColumn("r_name", lit("recovered"))))
+      txn.recover()
+      val natOut = PotTable(s, root, "nation_pot").get()
+        .select(lit("nation_pot").as("pot"), $"key".cast("int").as("key"),
+          concat($"n_name", lit(":"), $"n_regionkey".cast("string")).as("payload"))
+      val regOut = PotTable(s, root, "region_pot").get()
+        .select(lit("region_pot").as("pot"), $"key".cast("int").as("key"),
+          $"r_name".as("payload"))
+      natOut.unionByName(regOut)
+        .orderBy($"pot", $"key")
+        .localCheckpoint(true)
+    }
   }
 
   /** kv18: cross-pot CONSISTENT SNAPSHOT READ at a txn frontier —
@@ -982,41 +958,39 @@ object Kv {
     */
   def txnSnapshotRead(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pot-txnsnap").toString
-    val txn = new graft.kv.PotTxn(s, root)
-    val nat = Tables.nation(s, d)
-      .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey")
-    val reg = Tables.region(s, d)
-      .select($"r_regionkey".cast("string").as("key"), $"r_name")
-    txn.commitAll(Seq("nation_pot" -> nat, "region_pot" -> reg))
-    // independent single-pot writer between txns: invisible at frontier 2
-    PotTable(s, root, "nation_pot").upsert(
-      nat.filter($"key".cast("int") % 2 === 0)
-        .withColumn("n_regionkey", $"n_regionkey" + 100))
-    val n2 = txn.commitAll(Seq(
-      "region_pot" -> reg.filter($"key".cast("int") >= 3)
-        .withColumn("r_name", concat(lit("x"), $"r_name"))))
-    val n3 = txn.commitAll(Seq(
-      "nation_pot" -> nat.filter($"key".cast("int") % 3 === 0)
-        .withColumn("n_regionkey", $"n_regionkey" + 1000)))
-    def emit(state: String, snap: Map[String, org.apache.spark.sql.DataFrame]) = {
-      val n0 = snap("nation_pot")
-        .select(lit(state).as("state"), lit("nation_pot").as("pot"),
-          $"key".cast("int").as("key"),
-          concat($"n_name", lit(":"), $"n_regionkey".cast("string"))
-            .as("payload"))
-      val r0 = snap("region_pot")
-        .select(lit(state).as("state"), lit("region_pot").as("pot"),
-          $"key".cast("int").as("key"), $"r_name".as("payload"))
-      n0.unionByName(r0)
+    Scratch.withDir("graft-pot-txnsnap") { root =>
+      val txn = new graft.kv.PotTxn(s, root)
+      val nat = Tables.nation(s, d)
+        .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey")
+      val reg = Tables.region(s, d)
+        .select($"r_regionkey".cast("string").as("key"), $"r_name")
+      txn.commitAll(Seq("nation_pot" -> nat, "region_pot" -> reg))
+      // independent single-pot writer between txns: invisible at frontier 2
+      PotTable(s, root, "nation_pot").upsert(
+        nat.filter($"key".cast("int") % 2 === 0)
+          .withColumn("n_regionkey", $"n_regionkey" + 100))
+      val n2 = txn.commitAll(Seq(
+        "region_pot" -> reg.filter($"key".cast("int") >= 3)
+          .withColumn("r_name", concat(lit("x"), $"r_name"))))
+      val n3 = txn.commitAll(Seq(
+        "nation_pot" -> nat.filter($"key".cast("int") % 3 === 0)
+          .withColumn("n_regionkey", $"n_regionkey" + 1000)))
+      def emit(state: String, snap: Map[String, org.apache.spark.sql.DataFrame]) = {
+        val n0 = snap("nation_pot")
+          .select(lit(state).as("state"), lit("nation_pot").as("pot"),
+            $"key".cast("int").as("key"),
+            concat($"n_name", lit(":"), $"n_regionkey".cast("string"))
+              .as("payload"))
+        val r0 = snap("region_pot")
+          .select(lit(state).as("state"), lit("region_pot").as("pot"),
+            $"key".cast("int").as("key"), $"r_name".as("payload"))
+        n0.unionByName(r0)
+      }
+      emit("f2", txn.snapshotAt(n2))
+        .unionByName(emit("f3", txn.snapshotAt(n3)))
+        .orderBy($"state", $"pot", $"key")
+        .localCheckpoint(true)
     }
-    val result = emit("f2", txn.snapshotAt(n2))
-      .unionByName(emit("f3", txn.snapshotAt(n3)))
-      .orderBy($"state", $"pot", $"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   lazy val txnSnapshotReadSql: String =

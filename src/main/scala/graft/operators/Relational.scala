@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Ora, Tables}
+import graft.{Ora, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -207,24 +207,22 @@ object Relational {
     */
   def multiformatUnion(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-formats").toString
-    val li = Tables.lineitem(s, d)
-      .select($"l_orderkey", $"l_linenumber", $"l_quantity", $"l_returnflag")
-    li.filter($"l_linenumber" % 3 === 0)
-      .write.option("header", "true").csv(s"$dir/csv")
-    li.filter($"l_linenumber" % 3 === 1).write.json(s"$dir/json")
-    li.filter($"l_linenumber" % 3 === 2).write.orc(s"$dir/orc")
-    val schema = li.schema
-    val back = s.read.option("header", "true").schema(schema).csv(s"$dir/csv")
-      .unionByName(s.read.schema(schema).json(s"$dir/json"))
-      .unionByName(s.read.schema(schema).orc(s"$dir/orc"))
-    val result = back.groupBy($"l_returnflag")
-      .agg(count(lit(1)).as("n"), Ora.dsum($"l_quantity").as("sum_qty"))
-      .orderBy($"l_returnflag")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-    result
+    Scratch.withDir("graft-formats") { dir =>
+      val li = Tables.lineitem(s, d)
+        .select($"l_orderkey", $"l_linenumber", $"l_quantity", $"l_returnflag")
+      li.filter($"l_linenumber" % 3 === 0)
+        .write.option("header", "true").csv(s"$dir/csv")
+      li.filter($"l_linenumber" % 3 === 1).write.json(s"$dir/json")
+      li.filter($"l_linenumber" % 3 === 2).write.orc(s"$dir/orc")
+      val schema = li.schema
+      val back = s.read.option("header", "true").schema(schema).csv(s"$dir/csv")
+        .unionByName(s.read.schema(schema).json(s"$dir/json"))
+        .unionByName(s.read.schema(schema).orc(s"$dir/orc"))
+      back.groupBy($"l_returnflag")
+        .agg(count(lit(1)).as("n"), Ora.dsum($"l_quantity").as("sum_qty"))
+        .orderBy($"l_returnflag")
+        .localCheckpoint(true)
+    }
   }
 
   val multiformatUnionSql: String =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -120,22 +120,6 @@ object StreamingQueries {
   private val streamDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Run-scoped scratch dir for a bounded streaming run's sink + checkpoint,
-    * RAM-backed (/dev/shm) when available: these dirs are deleted as soon as
-    * the run's result is materialized, so durability buys nothing, and the
-    * checkpoint WAL + state-store commit + sink-manifest fsync traffic is a
-    * measurable slice of the per-query floor on disk-backed /tmp. A
-    * PRODUCTION stream's checkpoint must of course live on durable shared
-    * storage — this choice is scoped to delete-after-run verification
-    * streams the same way the temp dirs themselves are.
-    */
-  private def runScratchDir(prefix: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite)
-      java.nio.file.Files.createTempDirectory(shm.toPath, prefix).toString
-    else java.nio.file.Files.createTempDirectory(prefix).toString
-  }
-
   private def fixtureStreamDir(d: String, table: String): String =
     streamDirs.getOrElseUpdate(s"$d#$table", {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-$table-stream")
@@ -200,16 +184,16 @@ object StreamingQueries {
     * roughly `st_machinery_sec + real operator work`.
     */
   def machineryProbe(s: SparkSession, d: String): Unit = {
-    val root = runScratchDir("graft-stprobe")
-    withStreamRunConf(s) {
-      val q = eventsStream(s, d).writeStream
-        .option("checkpointLocation", s"$root/chk")
-        .foreachBatch { (b: DataFrame, _: Long) => b.isEmpty; () }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-stprobe", ram = true) { root =>
+      withStreamRunConf(s) {
+        val q = eventsStream(s, d).writeStream
+          .option("checkpointLocation", s"$root/chk")
+          .foreachBatch { (b: DataFrame, _: Long) => b.isEmpty; () }
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }
 
   /** st1: streaming exact-dedup on (user_id, event_type) within the
@@ -219,29 +203,28 @@ object StreamingQueries {
     */
   def streamDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = runScratchDir("graft-st1")
-    withStreamRunConf(s) {
-      val q = eventsStream(s, d)
-        .withWatermark("ts", "30 minutes")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .select($"user_id", $"event_type")
-        .writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st1", ram = true) { out =>
+      withStreamRunConf(s) {
+        val q = eventsStream(s, d)
+          .withWatermark("ts", "30 minutes")
+          .dropDuplicatesWithinWatermark("user_id", "event_type")
+          .select($"user_id", $"event_type")
+          .writeStream
+          .format("parquet")
+          .option("path", s"$out/data")
+          .option("checkpointLocation", s"$out/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      // Materialize off the sink (distributed blocks, lineage cut), then
+      // delete the run's sink + checkpoint dirs: repeated invocations must
+      // not grow tmpdir. Production keeps both, of course — the temp dirs
+      // exist only because this entry drives a bounded stream to completion.
+      s.read.parquet(s"$out/data")
+        .orderBy($"user_id", $"event_type").localCheckpoint(true)
     }
-    // Materialize off the sink (distributed blocks, lineage cut), then
-    // delete the run's sink + checkpoint dirs: repeated invocations must
-    // not grow tmpdir. Production keeps both, of course — the temp dirs
-    // exist only because this entry drives a bounded stream to completion.
-    val result = s.read.parquet(s"$out/data")
-      .orderBy($"user_id", $"event_type").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
-    result
   }
 
   val streamDedupSql: String =
@@ -255,18 +238,18 @@ object StreamingQueries {
   def streamTumbling(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val table = "st2_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val chk = runScratchDir("graft-st2")
-    withStreamRunConf(s) {
-      val q = EventStreams.tumblingCounts(eventsStream(s, d))
-        .select(unix_timestamp($"w_start").as("w_start"), $"event_type", $"n")
-        .writeStream.format("memory").queryName(table)
-        .option("checkpointLocation", s"$chk/chk")
-        .outputMode("complete")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st2", ram = true) { chk =>
+      withStreamRunConf(s) {
+        val q = EventStreams.tumblingCounts(eventsStream(s, d))
+          .select(unix_timestamp($"w_start").as("w_start"), $"event_type", $"n")
+          .writeStream.format("memory").queryName(table)
+          .option("checkpointLocation", s"$chk/chk")
+          .outputMode("complete")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
-    new scala.reflect.io.Directory(new java.io.File(chk)).deleteRecursively()
     // Materialize off the memory sink, then drop its temp view so repeated
     // invocations don't accumulate sink state in the driver.
     val result = s.table(table)
@@ -294,20 +277,20 @@ object StreamingQueries {
     val cust = graft.Tables.customer(s, d)
       .select($"c_custkey", $"c_mktsegment")
     val table = "st3_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val chk = runScratchDir("graft-st3")
-    withStreamRunConf(s) {
-      val q = eventsStream(s, d)
-        .join(broadcast(cust), $"user_id" === $"c_custkey")
-        .groupBy($"c_mktsegment", $"event_type")
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(table)
-        .option("checkpointLocation", s"$chk/chk")
-        .outputMode("complete")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st3", ram = true) { chk =>
+      withStreamRunConf(s) {
+        val q = eventsStream(s, d)
+          .join(broadcast(cust), $"user_id" === $"c_custkey")
+          .groupBy($"c_mktsegment", $"event_type")
+          .agg(count(lit(1)).as("n"))
+          .writeStream.format("memory").queryName(table)
+          .option("checkpointLocation", s"$chk/chk")
+          .outputMode("complete")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
-    new scala.reflect.io.Directory(new java.io.File(chk)).deleteRecursively()
     val result = s.table(table)
       .orderBy($"c_mktsegment", $"event_type").localCheckpoint(true)
     s.catalog.dropTempView(table)
@@ -340,29 +323,28 @@ object StreamingQueries {
     val purchases = ev.filter($"event_type" === "purchase")
       .select($"event_id".as("purchase_id"), $"user_id".as("p_user"), $"ts".as("p_ts"))
       .withWatermark("p_ts", "2 hours")
-    val out = runScratchDir("graft-st4")
-    // Stream-stream join state cost is per partition PER JOIN SIDE (4x
-    // stores per batch); inner-join matches emit eagerly, so the no-data
-    // watermark-advance batch would only re-commit them for zero rows.
-    withStreamRunConf(s) {
-      val q = clicks.join(purchases,
-          $"c_user" === $"p_user" &&
-          $"p_ts" >= $"c_ts" &&
-          $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"))
-        .select($"click_id", $"purchase_id")
-        .writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st4", ram = true) { out =>
+      // Stream-stream join state cost is per partition PER JOIN SIDE (4x
+      // stores per batch); inner-join matches emit eagerly, so the no-data
+      // watermark-advance batch would only re-commit them for zero rows.
+      withStreamRunConf(s) {
+        val q = clicks.join(purchases,
+            $"c_user" === $"p_user" &&
+            $"p_ts" >= $"c_ts" &&
+            $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"))
+          .select($"click_id", $"purchase_id")
+          .writeStream
+          .format("parquet")
+          .option("path", s"$out/data")
+          .option("checkpointLocation", s"$out/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read.parquet(s"$out/data")
+        .orderBy($"click_id", $"purchase_id").localCheckpoint(true)
     }
-    val result = s.read.parquet(s"$out/data")
-      .orderBy($"click_id", $"purchase_id").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
-    result
   }
 
   val streamClickAttributionSql: String =
@@ -397,28 +379,27 @@ object StreamingQueries {
     val purchases = ev.filter($"event_type" === "purchase")
       .select($"event_id".as("purchase_id"), $"user_id".as("p_user"), $"ts".as("p_ts"))
       .withWatermark("p_ts", "2 hours")
-    val out = runScratchDir("graft-st11")
-    withStreamRunConf(s, skipNoData = false) {
-      val q = clicks.join(purchases,
-          $"c_user" === $"p_user" &&
-          $"p_ts" >= $"c_ts" &&
-          $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"),
-          "left_outer")
-        .select($"click_id", $"purchase_id")
-        .writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st11", ram = true) { out =>
+      withStreamRunConf(s, skipNoData = false) {
+        val q = clicks.join(purchases,
+            $"c_user" === $"p_user" &&
+            $"p_ts" >= $"c_ts" &&
+            $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"),
+            "left_outer")
+          .select($"click_id", $"purchase_id")
+          .writeStream
+          .format("parquet")
+          .option("path", s"$out/data")
+          .option("checkpointLocation", s"$out/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read.parquet(s"$out/data")
+        .orderBy($"click_id".asc, $"purchase_id".asc_nulls_first)
+        .localCheckpoint(true)
     }
-    val result = s.read.parquet(s"$out/data")
-      .orderBy($"click_id".asc, $"purchase_id".asc_nulls_first)
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
-    result
   }
 
   val streamAttributionOuterSql: String =
@@ -517,25 +498,24 @@ object StreamingQueries {
     val ev = eventsStream(s, d)
       .withWatermark("ts", "0 seconds")
       .select($"user_id", $"ts", unix_micros($"ts").as("ts_us")).as[SessEvent]
-    val out = runScratchDir("graft-st5")
-    // skipNoData = false: the trailing sessions' event-time timeouts fire
-    // in the (no-data) batch AFTER the watermark advances — disabling it
-    // would silently drop every timeout-closed session
-    withStreamRunConf(s, skipNoData = false) {
-      val q = sessionize(ev)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st5", ram = true) { out =>
+      // skipNoData = false: the trailing sessions' event-time timeouts fire
+      // in the (no-data) batch AFTER the watermark advances — disabling it
+      // would silently drop every timeout-closed session
+      withStreamRunConf(s, skipNoData = false) {
+        val q = sessionize(ev)
+          .writeStream
+          .format("parquet")
+          .option("path", s"$out/data")
+          .option("checkpointLocation", s"$out/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read.parquet(s"$out/data")
+        .orderBy($"user_id", $"sess_start").localCheckpoint(true)
     }
-    val result = s.read.parquet(s"$out/data")
-      .orderBy($"user_id", $"sess_start").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
-    result
   }
 
   /** Oracle: q34's gaps-and-islands sessionization, restricted to CLOSED
@@ -637,26 +617,25 @@ object StreamingQueries {
       case (df, (bs, b)) =>
         df.join(broadcast(bs), col(s"sig$b") === col(s"csig$b"), "left")
     }
-    val out = runScratchDir(tag)
-    withStreamRunConf(s) {
-      val q = flagged
-        .select($"doc_id",
-          coalesce($"e", lit(false)).as("exact_dup"),
-          coalesce($"m0" || $"m1" || $"m2" || $"m3", lit(false)).as("near_dup"))
-        .withColumn("keep", !$"exact_dup" && !$"near_dup")
-        .writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir(tag, ram = true) { out =>
+      withStreamRunConf(s) {
+        val q = flagged
+          .select($"doc_id",
+            coalesce($"e", lit(false)).as("exact_dup"),
+            coalesce($"m0" || $"m1" || $"m2" || $"m3", lit(false)).as("near_dup"))
+          .withColumn("keep", !$"exact_dup" && !$"near_dup")
+          .writeStream
+          .format("parquet")
+          .option("path", s"$out/data")
+          .option("checkpointLocation", s"$out/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read.parquet(s"$out/data")
+        .orderBy($"doc_id").localCheckpoint(true)
     }
-    val result = s.read.parquet(s"$out/data")
-      .orderBy($"doc_id").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
-    result
   }
 
   /** st7: STREAMING semantic matching — new embeddings (the `vec_id % 5 ==
@@ -723,25 +702,24 @@ object StreamingQueries {
       .select($"vec_id".as("q_id"), $"embedding",
         explode(array(bandCols(s): _*)).as("bs"))
       .select($"q_id", $"embedding", $"bs.band".as("band"), $"bs.sig".as("sig"))
-    val out = runScratchDir("graft-st7")
-    withStreamRunConf(s) {
-      val q = stream.join(broadcast(capped), Seq("band", "sig"))
-        .select($"q_id", $"m_id", $"band",
-          graft.functions.VectorFunctions.dot($"embedding", $"m_emb").as("cos"))
-        .filter($"cos" >= 0.45)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st7", ram = true) { out =>
+      withStreamRunConf(s) {
+        val q = stream.join(broadcast(capped), Seq("band", "sig"))
+          .select($"q_id", $"m_id", $"band",
+            graft.functions.VectorFunctions.dot($"embedding", $"m_emb").as("cos"))
+          .filter($"cos" >= 0.45)
+          .writeStream
+          .format("parquet")
+          .option("path", s"$out/data")
+          .option("checkpointLocation", s"$out/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read.parquet(s"$out/data")
+        .orderBy($"q_id", $"m_id", $"band").localCheckpoint(true)
     }
-    val result = s.read.parquet(s"$out/data")
-      .orderBy($"q_id", $"m_id", $"band").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
-    result
   }
 
   /** Oracle: d7's band derivation at rest, restricted to stream×corpus
@@ -787,24 +765,24 @@ object StreamingQueries {
   def streamLatest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val table = "st8_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val chk = runScratchDir("graft-st8")
-    withStreamRunConf(s) {
-      val q = eventsStream(s, d)
-        .select($"user_id",
-          struct(unix_micros($"ts").as("ts_us"), $"event_id", $"event_type")
-            .as("rec"))
-        .groupBy($"user_id")
-        .agg(max($"rec").as("m"))
-        .select($"user_id", $"m.ts_us".as("last_ts_us"),
-          $"m.event_id".as("last_event_id"), $"m.event_type".as("last_type"))
-        .writeStream.format("memory").queryName(table)
-        .option("checkpointLocation", s"$chk/chk")
-        .outputMode("complete")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st8", ram = true) { chk =>
+      withStreamRunConf(s) {
+        val q = eventsStream(s, d)
+          .select($"user_id",
+            struct(unix_micros($"ts").as("ts_us"), $"event_id", $"event_type")
+              .as("rec"))
+          .groupBy($"user_id")
+          .agg(max($"rec").as("m"))
+          .select($"user_id", $"m.ts_us".as("last_ts_us"),
+            $"m.event_id".as("last_event_id"), $"m.event_type".as("last_type"))
+          .writeStream.format("memory").queryName(table)
+          .option("checkpointLocation", s"$chk/chk")
+          .outputMode("complete")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
-    new scala.reflect.io.Directory(new java.io.File(chk)).deleteRecursively()
     val result = s.table(table)
       .orderBy($"user_id").localCheckpoint(true)
     s.catalog.dropTempView(table)
@@ -877,57 +855,55 @@ object StreamingQueries {
   def streamAdditiveCounts(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val stage = waveStageDir(s, d)
-    val potRoot = java.nio.file.Files
-      .createTempDirectory("graft-st12-pot").toString
-    val pot = graft.kv.PotTable(s, potRoot, "counts")
-    val meta = graft.kv.PotTable(s, potRoot, "counts_meta")
-    def appliedUpTo(): Long =
-      if (meta.generation == 0L) -1L
-      else meta.get().select(max($"batch_id")).as[Long].collect().head
-    def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id <= appliedUpTo()) return // replay fence (idempotent apply)
-      val delta = batch.groupBy($"user_id".cast("string").as("key"))
-        .agg(count(lit(1)).as("n"))
-      if (delta.isEmpty) return
-      val merged =
-        if (pot.generation == 0L) delta
-        else pot.get().select($"key", $"n").unionByName(delta)
-          .groupBy($"key").agg(sum($"n").as("n"))
-      // r20 opt: `merged` IS the complete next state (old ∪ delta summed),
-      // so upsert's read-old + window-LWW pass is the identity on it —
-      // replace commits the same rows at the same generation without the
-      // second read/merge (KvSpec pins replace ≡ upsert for full batches)
-      pot.replace(merged)
-      meta.upsert(Seq(("applied", id)).toDF("key", "batch_id"))
-      ()
+    Scratch.withDir("graft-st12-pot") { potRoot =>
+      val pot = graft.kv.PotTable(s, potRoot, "counts")
+      val meta = graft.kv.PotTable(s, potRoot, "counts_meta")
+      def appliedUpTo(): Long =
+        if (meta.generation == 0L) -1L
+        else meta.get().select(max($"batch_id")).as[Long].collect().head
+      def applyBatch(batch: DataFrame, id: Long): Unit = {
+        if (id <= appliedUpTo()) return // replay fence (idempotent apply)
+        val delta = batch.groupBy($"user_id".cast("string").as("key"))
+          .agg(count(lit(1)).as("n"))
+        if (delta.isEmpty) return
+        val merged =
+          if (pot.generation == 0L) delta
+          else pot.get().select($"key", $"n").unionByName(delta)
+            .groupBy($"key").agg(sum($"n").as("n"))
+        // r20 opt: `merged` IS the complete next state (old ∪ delta summed),
+        // so upsert's read-old + window-LWW pass is the identity on it —
+        // replace commits the same rows at the same generation without the
+        // second read/merge (KvSpec pins replace ≡ upsert for full batches)
+        pot.replace(merged)
+        meta.upsert(Seq(("applied", id)).toDF("key", "batch_id"))
+        ()
+      }
+      Scratch.withDir("graft-st12", ram = true) { chk =>
+        withStreamRunConf(s) {
+          val q = s.readStream
+            .schema("event_id BIGINT, user_id BIGINT")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(stage)
+            .writeStream
+            .option("checkpointLocation", s"$chk/chk")
+            .foreachBatch(applyBatch _)
+            .start()
+          q.processAllAvailable()
+          q.stop()
+        }
+      }
+      // simulate a checkpoint-recovery redelivery of the final wave: the
+      // fence must swallow it or every wave-2 user double-counts
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      applyBatch(
+        s.read.schema("event_id BIGINT, user_id BIGINT")
+          .parquet(s"$stage/wave2.parquet"), appliedUpTo())
+      pot.get()
+        .select($"key".cast("bigint").as("user_id"), $"n",
+          lit(pot.generation).as("n_generations"))
+        .orderBy($"user_id")
+        .localCheckpoint(true)
     }
-    val chk = runScratchDir("graft-st12")
-    withStreamRunConf(s) {
-      val q = s.readStream
-        .schema("event_id BIGINT, user_id BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .writeStream
-        .option("checkpointLocation", s"$chk/chk")
-        .foreachBatch(applyBatch _)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    // simulate a checkpoint-recovery redelivery of the final wave: the
-    // fence must swallow it or every wave-2 user double-counts
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    applyBatch(
-      s.read.schema("event_id BIGINT, user_id BIGINT")
-        .parquet(s"$stage/wave2.parquet"), appliedUpTo())
-    val result = pot.get()
-      .select($"key".cast("bigint").as("user_id"), $"n",
-        lit(pot.generation).as("n_generations"))
-      .orderBy($"user_id")
-      .localCheckpoint(true)
-    Seq(potRoot, chk).foreach(p =>
-      new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively())
-    result
   }
 
   /** Oracle: total per-user counts (what additive merge must land on —
@@ -945,42 +921,39 @@ object StreamingQueries {
   def streamPotIngest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val stage = waveStageDir(s, d)
-    val potRoot = java.nio.file.Files
-      .createTempDirectory("graft-st9-pot").toString
-    val pot = graft.kv.PotTable(s, potRoot, "ingest")
-    val chk = runScratchDir("graft-st9")
-    withStreamRunConf(s) {
-      val q = s.readStream
-        .schema("event_id BIGINT, user_id BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .writeStream
-        .option("checkpointLocation", s"$chk/chk")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val stats = batch
-            .groupBy($"user_id".cast("string").as("key"))
-            .agg(count(lit(1)).as("n"), max($"event_id").as("last_id"))
-          // Guard against no-data batches: an empty upsert would burn a
-          // generation and shift the time-travel handle.
-          if (!stats.isEmpty) { pot.upsert(stats); () }
+    Scratch.withDir("graft-st9-pot") { potRoot =>
+      val pot = graft.kv.PotTable(s, potRoot, "ingest")
+      Scratch.withDir("graft-st9", ram = true) { chk =>
+        withStreamRunConf(s) {
+          val q = s.readStream
+            .schema("event_id BIGINT, user_id BIGINT")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(stage)
+            .writeStream
+            .option("checkpointLocation", s"$chk/chk")
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              val stats = batch
+                .groupBy($"user_id".cast("string").as("key"))
+                .agg(count(lit(1)).as("n"), max($"event_id").as("last_id"))
+              // Guard against no-data batches: an empty upsert would burn a
+              // generation and shift the time-travel handle.
+              if (!stats.isEmpty) { pot.upsert(stats); () }
+            }
+            .start()
+          q.processAllAvailable()
+          q.stop()
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+      }
+      val g1 = pot.getAt(1L)
+        .select($"key", $"n".as("n_g1"), $"last_id".as("last_g1"))
+      val cur = pot.get()
+        .select($"key", $"n".as("n_cur"), $"last_id".as("last_cur"))
+      g1.join(cur, Seq("key"))
+        .select($"key".cast("bigint").as("key"),
+          $"n_g1", $"last_g1", $"n_cur", $"last_cur")
+        .orderBy($"key")
+        .localCheckpoint(true)
     }
-    val g1 = pot.getAt(1L)
-      .select($"key", $"n".as("n_g1"), $"last_id".as("last_g1"))
-    val cur = pot.get()
-      .select($"key", $"n".as("n_cur"), $"last_id".as("last_cur"))
-    val result = g1.join(cur, Seq("key"))
-      .select($"key".cast("bigint").as("key"),
-        $"n_g1", $"last_g1", $"n_cur", $"last_cur")
-      .orderBy($"key")
-      .localCheckpoint(true)
-    // stage is cached per fixture (waveStageDir) and deliberately kept
-    Seq(potRoot, chk).foreach(p =>
-      new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively())
-    result
   }
 
   /** Oracle replay: wave stats per (user, residue); current = the user's
@@ -1025,27 +998,27 @@ object StreamingQueries {
   def streamRollup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val table = "st13_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val chk = runScratchDir("graft-st13")
-    // skipNoData = false: both layers emit in the no-data batch after the
-    // watermark jumps to the max event time (st5's timeout discipline).
-    withStreamRunConf(s, skipNoData = false) {
-      val sub = eventsStream(s, d)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window($"ts", "15 minutes").as("w15"), $"event_type")
-        .agg(count(lit(1)).as("n15"))
-      val q = sub
-        .groupBy(window(window_time($"w15"), "1 hour").as("wh"), $"event_type")
-        .agg(sum($"n15").as("n_events"), count(lit(1)).as("n_subwindows"))
-        .select(unix_timestamp($"wh.start").as("hour_s"), $"event_type",
-          $"n_events", $"n_subwindows")
-        .writeStream.format("memory").queryName(table)
-        .option("checkpointLocation", s"$chk/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st13", ram = true) { chk =>
+      // skipNoData = false: both layers emit in the no-data batch after the
+      // watermark jumps to the max event time (st5's timeout discipline).
+      withStreamRunConf(s, skipNoData = false) {
+        val sub = eventsStream(s, d)
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window($"ts", "15 minutes").as("w15"), $"event_type")
+          .agg(count(lit(1)).as("n15"))
+        val q = sub
+          .groupBy(window(window_time($"w15"), "1 hour").as("wh"), $"event_type")
+          .agg(sum($"n15").as("n_events"), count(lit(1)).as("n_subwindows"))
+          .select(unix_timestamp($"wh.start").as("hour_s"), $"event_type",
+            $"n_events", $"n_subwindows")
+          .writeStream.format("memory").queryName(table)
+          .option("checkpointLocation", s"$chk/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
     }
-    new scala.reflect.io.Directory(new java.io.File(chk)).deleteRecursively()
     val result = s.table(table)
       .orderBy($"hour_s", $"event_type").localCheckpoint(true)
     s.catalog.dropTempView(table)
@@ -1092,31 +1065,30 @@ object StreamingQueries {
   def streamAnnIngest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = graft.Tables.embeddings(s, d)
-    val root = runScratchDir("graft-st14")
-    val base = new org.apache.hadoop.fs.Path(s"$root/idx")
-    withStreamRunConf(s) {
-      val q = s.readStream.schema(emb.schema)
-        .parquet(fixtureStreamDir(d, "embeddings"))
-        .writeStream
-        .option("checkpointLocation", s"$root/chk")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!batch.isEmpty)
-            // scope = hash of the checkpoint root: stable across restarts
-            // of THIS query (replay still adopts), distinct for any other
-            // query appending to the same index base
-            graft.operators.Similarity
-              .appendEmbeddingBatch(s, base, batch, batchId,
-                scope = "q" + org.apache.commons.codec.digest.DigestUtils
-                  .md5Hex(s"$root/chk").take(8))
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st14", ram = true) { root =>
+      val base = new org.apache.hadoop.fs.Path(s"$root/idx")
+      withStreamRunConf(s) {
+        val q = s.readStream.schema(emb.schema)
+          .parquet(fixtureStreamDir(d, "embeddings"))
+          .writeStream
+          .option("checkpointLocation", s"$root/chk")
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            if (!batch.isEmpty)
+              // scope = hash of the checkpoint root: stable across restarts
+              // of THIS query (replay still adopts), distinct for any other
+              // query appending to the same index base
+              graft.operators.Similarity
+                .appendEmbeddingBatch(s, base, batch, batchId,
+                  scope = "q" + org.apache.commons.codec.digest.DigestUtils
+                    .md5Hex(s"$root/chk").take(8))
+          }
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      graft.operators.Similarity
+        .annLookupOverGenerations(s, d, base).localCheckpoint(true)
     }
-    val result = graft.operators.Similarity
-      .annLookupOverGenerations(s, d, base).localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   /** st15: STREAMING QUALITY ROUTER with a dead-letter queue — the ingest
@@ -1138,43 +1110,42 @@ object StreamingQueries {
   def streamDlqRouter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = graft.Tables.documents(s, d)
-    val root = runScratchDir("graft-st15")
-    val txn = new graft.kv.PotTxn(s, s"$root/wh")
-    withStreamRunConf(s) {
-      val q = s.readStream.schema(docs.schema)
-        .parquet(fixtureStreamDir(d, "documents"))
-        .withColumn("n_words", size(split($"text", " ")))
-        .withColumn("reason",
-          when($"n_words" < 30, "too_short")
-            .when($"n_words" > 4000, "too_long")
-            .when(!$"text".rlike("[A-Za-z]"), "no_letters"))
-        .writeStream
-        .option("checkpointLocation", s"$root/chk")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val acc = batch.filter(col("reason").isNull)
-              .select(col("doc_id").cast("string").as("key"),
-                col("lang"), col("n_words"))
-            val rej = batch.filter(col("reason").isNotNull)
-              .select(col("doc_id").cast("string").as("key"), col("reason"))
-            txn.commitAll(Seq("accepted" -> acc, "rejected" -> rej))
-            ()
+    Scratch.withDir("graft-st15", ram = true) { root =>
+      val txn = new graft.kv.PotTxn(s, s"$root/wh")
+      withStreamRunConf(s) {
+        val q = s.readStream.schema(docs.schema)
+          .parquet(fixtureStreamDir(d, "documents"))
+          .withColumn("n_words", size(split($"text", " ")))
+          .withColumn("reason",
+            when($"n_words" < 30, "too_short")
+              .when($"n_words" > 4000, "too_long")
+              .when(!$"text".rlike("[A-Za-z]"), "no_letters"))
+          .writeStream
+          .option("checkpointLocation", s"$root/chk")
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            if (!batch.isEmpty) {
+              val acc = batch.filter(col("reason").isNull)
+                .select(col("doc_id").cast("string").as("key"),
+                  col("lang"), col("n_words"))
+              val rej = batch.filter(col("reason").isNotNull)
+                .select(col("doc_id").cast("string").as("key"), col("reason"))
+              txn.commitAll(Seq("accepted" -> acc, "rejected" -> rej))
+              ()
+            }
           }
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      val acc = graft.kv.PotTable(s, s"$root/wh", "accepted").get()
+        .agg(count(lit(1)).as("n"))
+        .select(lit("accepted").as("route"), lit("-").as("reason"), $"n")
+      val rej = graft.kv.PotTable(s, s"$root/wh", "rejected").get()
+        .groupBy($"reason").agg(count(lit(1)).as("n"))
+        .select(lit("rejected").as("route"), $"reason", $"n")
+      acc.unionByName(rej)
+        .orderBy($"route", $"reason").localCheckpoint(true)
     }
-    val acc = graft.kv.PotTable(s, s"$root/wh", "accepted").get()
-      .agg(count(lit(1)).as("n"))
-      .select(lit("accepted").as("route"), lit("-").as("reason"), $"n")
-    val rej = graft.kv.PotTable(s, s"$root/wh", "rejected").get()
-      .groupBy($"reason").agg(count(lit(1)).as("n"))
-      .select(lit("rejected").as("route"), $"reason", $"n")
-    val result = acc.unionByName(rej)
-      .orderBy($"route", $"reason").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   val streamDlqRouterSql: String =
@@ -1213,35 +1184,34 @@ object StreamingQueries {
     */
   def streamPotSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = runScratchDir("graft-st16")
-    val pot = s"$root/pot/t/data.json"
-    withStreamRunConf(s) {
-      val q = eventsStream(s, d)
-        .filter(col("event_id") % 97 === 0)
-        .select(lit("").as("pot_file"),
-          concat(lit("e"), col("event_id").cast("string")).as("key"),
-          to_json(struct(col("event_type").as("et"),
-            col("value").as("v"))).as("doc_json"))
-        .writeStream
+    Scratch.withDir("graft-st16", ram = true) { root =>
+      val pot = s"$root/pot/t/data.json"
+      withStreamRunConf(s) {
+        val q = eventsStream(s, d)
+          .filter(col("event_id") % 97 === 0)
+          .select(lit("").as("pot_file"),
+            concat(lit("e"), col("event_id").cast("string")).as("key"),
+            to_json(struct(col("event_type").as("et"),
+              col("value").as("v"))).as("doc_json"))
+          .writeStream
+          .format(classOf[graft.sources.PotV2Source].getName)
+          .option("path", pot)
+          .option("checkpointLocation", s"$root/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read
         .format(classOf[graft.sources.PotV2Source].getName)
-        .option("path", pot)
-        .option("checkpointLocation", s"$root/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .option("path", pot).load()
+        .select(get_json_object($"doc_json", "$.et").as("event_type"),
+          get_json_object($"doc_json", "$.v").cast("double").as("v"))
+        .groupBy($"event_type")
+        .agg(count(lit(1)).as("n"), min($"v").as("vmin"), max($"v").as("vmax"))
+        .orderBy($"event_type")
+        .localCheckpoint(true)
     }
-    val result = s.read
-      .format(classOf[graft.sources.PotV2Source].getName)
-      .option("path", pot).load()
-      .select(get_json_object($"doc_json", "$.et").as("event_type"),
-        get_json_object($"doc_json", "$.v").cast("double").as("v"))
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n"), min($"v").as("vmin"), max($"v").as("vmax"))
-      .orderBy($"event_type")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   val streamPotSinkSql: String =
@@ -1268,38 +1238,37 @@ object StreamingQueries {
     */
   def streamPotSource(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = runScratchDir("graft-st17")
-    val pot = s"$root/pot/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    def docs(df: DataFrame, v: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
-      to_json(struct(col("n_name").as("name"), lit(v).as("v")))
-        .as("doc_json"))
-    val nat = graft.Tables.nation(s, d)
-    docs(nat.filter($"n_regionkey" <= 1), 0)
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0), 1)
-      .write.format(fmt).option("path", pot).mode("append").save()
-    docs(nat.filter($"n_regionkey" === 1), 2)
-      .write.format(fmt).option("path", pot).mode("append").save()
-    val feed = s"$root/feed"
-    withStreamRunConf(s) {
-      val q = s.readStream.format(fmt).option("path", pot).load()
-        .writeStream.format("parquet")
-        .option("path", feed)
-        .option("checkpointLocation", s"$root/chk")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st17", ram = true) { root =>
+      val pot = s"$root/pot/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      def docs(df: DataFrame, v: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
+        to_json(struct(col("n_name").as("name"), lit(v).as("v")))
+          .as("doc_json"))
+      val nat = graft.Tables.nation(s, d)
+      docs(nat.filter($"n_regionkey" <= 1), 0)
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0), 1)
+        .write.format(fmt).option("path", pot).mode("append").save()
+      docs(nat.filter($"n_regionkey" === 1), 2)
+        .write.format(fmt).option("path", pot).mode("append").save()
+      val feed = s"$root/feed"
+      withStreamRunConf(s) {
+        val q = s.readStream.format(fmt).option("path", pot).load()
+          .writeStream.format("parquet")
+          .option("path", feed)
+          .option("checkpointLocation", s"$root/chk")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read.parquet(feed)
+        .select($"key",
+          get_json_object($"doc_json", "$.v").cast("int").as("v"))
+        .orderBy($"key", $"v")
+        .localCheckpoint(true)
     }
-    val result = s.read.parquet(feed)
-      .select($"key",
-        get_json_object($"doc_json", "$.v").cast("int").as("v"))
-      .orderBy($"key", $"v")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   val streamPotSourceSql: String =
@@ -1328,43 +1297,42 @@ object StreamingQueries {
     */
   def streamRateLimitedFeed(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = runScratchDir("graft-st27")
-    val pot = s"$root/pot/t/data.json"
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    def docs(df: DataFrame, v: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
-      to_json(struct(col("n_name").as("name"), lit(v).as("v")))
-        .as("doc_json"))
-    val nat = graft.Tables.nation(s, d)
-    docs(nat.filter($"n_regionkey" <= 1), 0)
-      .write.format(fmt).option("path", pot).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0), 1)
-      .write.format(fmt).option("path", pot).mode("append").save()
-    docs(nat.filter($"n_regionkey" === 1), 2)
-      .write.format(fmt).option("path", pot).mode("append").save()
-    val feed = s"$root/feed"
-    var dataBatches = 0
-    withStreamRunConf(s) {
-      val q = s.readStream.format(fmt).option("path", pot)
-        .option("maxGenerationsPerTrigger", "1").load()
-        .writeStream.format("parquet")
-        .option("path", feed)
-        .option("checkpointLocation", s"$root/chk")
-        .start()
-      q.processAllAvailable()
-      dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      q.stop()
+    Scratch.withDir("graft-st27", ram = true) { root =>
+      val pot = s"$root/pot/t/data.json"
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      def docs(df: DataFrame, v: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
+        to_json(struct(col("n_name").as("name"), lit(v).as("v")))
+          .as("doc_json"))
+      val nat = graft.Tables.nation(s, d)
+      docs(nat.filter($"n_regionkey" <= 1), 0)
+        .write.format(fmt).option("path", pot).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0), 1)
+        .write.format(fmt).option("path", pot).mode("append").save()
+      docs(nat.filter($"n_regionkey" === 1), 2)
+        .write.format(fmt).option("path", pot).mode("append").save()
+      val feed = s"$root/feed"
+      var dataBatches = 0
+      withStreamRunConf(s) {
+        val q = s.readStream.format(fmt).option("path", pot)
+          .option("maxGenerationsPerTrigger", "1").load()
+          .writeStream.format("parquet")
+          .option("path", feed)
+          .option("checkpointLocation", s"$root/chk")
+          .start()
+        q.processAllAvailable()
+        dataBatches = q.recentProgress.count(_.numInputRows > 0)
+        q.stop()
+      }
+      val rows = s.read.parquet(feed)
+        .select($"key",
+          get_json_object($"doc_json", "$.v").cast("int").as("v"))
+      rows
+        .unionByName(Seq(("_batches", dataBatches)).toDF("key", "v"))
+        .orderBy($"key", $"v")
+        .localCheckpoint(true)
     }
-    val rows = s.read.parquet(feed)
-      .select($"key",
-        get_json_object($"doc_json", "$.v").cast("int").as("v"))
-    val result = rows
-      .unionByName(Seq(("_batches", dataBatches)).toDF("key", "v"))
-      .orderBy($"key", $"v")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   val streamRateLimitedFeedSql: String =
@@ -1397,47 +1365,46 @@ object StreamingQueries {
     */
   def streamPotRateLimitedFeed(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = runScratchDir("graft-st28")
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    def docs(df: DataFrame, v: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
-      to_json(struct(col("n_name").as("name"), lit(v).as("v")))
-        .as("doc_json"))
-    val nat = graft.Tables.nation(s, d)
-    def pot(sub: String) = s"$root/pots/$sub/data.json"
-    // pot a: 2-generation backlog; pots b, c: 1 each — 3 backlogged pots
-    docs(nat.filter($"n_regionkey" === 0), 0)
-      .write.format(fmt).option("path", pot("a")).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0), 1)
-      .write.format(fmt).option("path", pot("a")).mode("append").save()
-    docs(nat.filter($"n_regionkey" === 1), 2)
-      .write.format(fmt).option("path", pot("b")).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 2), 3)
-      .write.format(fmt).option("path", pot("c")).mode("overwrite").save()
-    val feed = s"$root/feed"
-    var dataBatches = 0
-    withStreamRunConf(s) {
-      val q = s.readStream.format(fmt)
-        .option("path", s"$root/pots/*/data.json")
-        .option("maxPotsPerTrigger", "1").load()
-        .writeStream.format("parquet")
-        .option("path", feed)
-        .option("checkpointLocation", s"$root/chk")
-        .start()
-      q.processAllAvailable()
-      dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      q.stop()
+    Scratch.withDir("graft-st28", ram = true) { root =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      def docs(df: DataFrame, v: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
+        to_json(struct(col("n_name").as("name"), lit(v).as("v")))
+          .as("doc_json"))
+      val nat = graft.Tables.nation(s, d)
+      def pot(sub: String) = s"$root/pots/$sub/data.json"
+      // pot a: 2-generation backlog; pots b, c: 1 each — 3 backlogged pots
+      docs(nat.filter($"n_regionkey" === 0), 0)
+        .write.format(fmt).option("path", pot("a")).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0), 1)
+        .write.format(fmt).option("path", pot("a")).mode("append").save()
+      docs(nat.filter($"n_regionkey" === 1), 2)
+        .write.format(fmt).option("path", pot("b")).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 2), 3)
+        .write.format(fmt).option("path", pot("c")).mode("overwrite").save()
+      val feed = s"$root/feed"
+      var dataBatches = 0
+      withStreamRunConf(s) {
+        val q = s.readStream.format(fmt)
+          .option("path", s"$root/pots/*/data.json")
+          .option("maxPotsPerTrigger", "1").load()
+          .writeStream.format("parquet")
+          .option("path", feed)
+          .option("checkpointLocation", s"$root/chk")
+          .start()
+        q.processAllAvailable()
+        dataBatches = q.recentProgress.count(_.numInputRows > 0)
+        q.stop()
+      }
+      val rows = s.read.parquet(feed)
+        .select(regexp_extract($"pot_file", "pots/([^/]+)/", 1).as("pot"),
+          $"key", get_json_object($"doc_json", "$.v").cast("int").as("v"))
+      rows
+        .unionByName(Seq(("_batches", "", dataBatches)).toDF("pot", "key", "v"))
+        .orderBy($"pot", $"key", $"v")
+        .localCheckpoint(true)
     }
-    val rows = s.read.parquet(feed)
-      .select(regexp_extract($"pot_file", "pots/([^/]+)/", 1).as("pot"),
-        $"key", get_json_object($"doc_json", "$.v").cast("int").as("v"))
-    val result = rows
-      .unionByName(Seq(("_batches", "", dataBatches)).toDF("pot", "key", "v"))
-      .orderBy($"pot", $"key", $"v")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   val streamPotRateLimitedFeedSql: String =
@@ -1472,46 +1439,45 @@ object StreamingQueries {
     */
   def streamMultiPotSource(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = runScratchDir("graft-st18")
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    def docs(df: DataFrame, v: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
-      to_json(struct(col("n_name").as("name"), lit(v).as("v")))
-        .as("doc_json"))
-    def put(pot: String, df: DataFrame, v: Int, mode: String): Unit =
-      docs(df, v).write.format(fmt)
-        .option("path", s"$root/pots/$pot/data.json").mode(mode).save()
-    val nat = graft.Tables.nation(s, d)
-    val r0 = nat.filter($"n_regionkey" === 0)
-    val r1 = nat.filter($"n_regionkey" === 1)
-    // interleaved: a1, b1, a2 (append upserts), b2 (truncate → tombstones)
-    put("a", r0, 0, "overwrite")
-    put("b", r1, 0, "overwrite")
-    put("a", r0.filter($"n_nationkey" % 2 === 0), 1, "append")
-    put("b", r1.filter($"n_nationkey" % 2 === 1), 1, "overwrite")
-    val feed = s"$root/feed"
-    withStreamRunConf(s) {
-      val q = s.readStream.format(fmt)
-        .option("path", s"$root/pots/*/data.json").load()
-        .writeStream.format("parquet")
-        .option("path", feed)
-        .option("checkpointLocation", s"$root/chk")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st18", ram = true) { root =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      def docs(df: DataFrame, v: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
+        to_json(struct(col("n_name").as("name"), lit(v).as("v")))
+          .as("doc_json"))
+      def put(pot: String, df: DataFrame, v: Int, mode: String): Unit =
+        docs(df, v).write.format(fmt)
+          .option("path", s"$root/pots/$pot/data.json").mode(mode).save()
+      val nat = graft.Tables.nation(s, d)
+      val r0 = nat.filter($"n_regionkey" === 0)
+      val r1 = nat.filter($"n_regionkey" === 1)
+      // interleaved: a1, b1, a2 (append upserts), b2 (truncate → tombstones)
+      put("a", r0, 0, "overwrite")
+      put("b", r1, 0, "overwrite")
+      put("a", r0.filter($"n_nationkey" % 2 === 0), 1, "append")
+      put("b", r1.filter($"n_nationkey" % 2 === 1), 1, "overwrite")
+      val feed = s"$root/feed"
+      withStreamRunConf(s) {
+        val q = s.readStream.format(fmt)
+          .option("path", s"$root/pots/*/data.json").load()
+          .writeStream.format("parquet")
+          .option("path", feed)
+          .option("checkpointLocation", s"$root/chk")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read.parquet(feed)
+        .select(
+          regexp_extract($"pot_file", "/(a|b)/data\\.json@", 1).as("pot"),
+          $"key",
+          when($"doc_json" === "null", -1)
+            .otherwise(get_json_object($"doc_json", "$.v").cast("int"))
+            .as("v"))
+        .orderBy($"pot", $"key", $"v")
+        .localCheckpoint(true)
     }
-    val result = s.read.parquet(feed)
-      .select(
-        regexp_extract($"pot_file", "/(a|b)/data\\.json@", 1).as("pot"),
-        $"key",
-        when($"doc_json" === "null", -1)
-          .otherwise(get_json_object($"doc_json", "$.v").cast("int"))
-          .as("v"))
-      .orderBy($"pot", $"key", $"v")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   val streamMultiPotSourceSql: String =
@@ -1546,48 +1512,47 @@ object StreamingQueries {
     */
   def streamCdcMirror(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = runScratchDir("graft-st19")
-    val fmt = classOf[graft.sources.PotV2Source].getName
-    val potA = s"$root/a/data.json"
-    val potB = s"$root/b/data.json"
-    def docs(df: DataFrame, v: Int) = df.select(
-      lit("").as("pot_file"),
-      concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
-      to_json(struct(col("n_name").as("name"), lit(v).as("v")))
-        .as("doc_json"))
-    val nat = graft.Tables.nation(s, d)
-    // A's history: broad v0, a v1 update wave, then a truncate rewrite
-    // that keeps region 1 + even-key region 0 at v2 (odd region-0 keys
-    // are DROPPED → tombstones in the feed)
-    docs(nat.filter($"n_regionkey" <= 1), 0)
-      .write.format(fmt).option("path", potA).mode("overwrite").save()
-    docs(nat.filter($"n_regionkey" === 0), 1)
-      .write.format(fmt).option("path", potA).mode("append").save()
-    docs(nat.filter($"n_regionkey" === 1 ||
-        ($"n_regionkey" === 0 && $"n_nationkey" % 2 === 0)), 2)
-      .write.format(fmt).option("path", potA).mode("overwrite").save()
-    withStreamRunConf(s) {
-      val q = s.readStream.format(fmt).option("path", potA).load()
-        .select($"pot_file", $"key",
-          when($"doc_json" === "null", lit("""{"__del__":true}"""))
-            .otherwise($"doc_json").as("doc_json"))
-        .writeStream.format(fmt)
-        .option("path", potB)
-        .option("checkpointLocation", s"$root/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st19", ram = true) { root =>
+      val fmt = classOf[graft.sources.PotV2Source].getName
+      val potA = s"$root/a/data.json"
+      val potB = s"$root/b/data.json"
+      def docs(df: DataFrame, v: Int) = df.select(
+        lit("").as("pot_file"),
+        concat(lit("n"), col("n_nationkey").cast("string")).as("key"),
+        to_json(struct(col("n_name").as("name"), lit(v).as("v")))
+          .as("doc_json"))
+      val nat = graft.Tables.nation(s, d)
+      // A's history: broad v0, a v1 update wave, then a truncate rewrite
+      // that keeps region 1 + even-key region 0 at v2 (odd region-0 keys
+      // are DROPPED → tombstones in the feed)
+      docs(nat.filter($"n_regionkey" <= 1), 0)
+        .write.format(fmt).option("path", potA).mode("overwrite").save()
+      docs(nat.filter($"n_regionkey" === 0), 1)
+        .write.format(fmt).option("path", potA).mode("append").save()
+      docs(nat.filter($"n_regionkey" === 1 ||
+          ($"n_regionkey" === 0 && $"n_nationkey" % 2 === 0)), 2)
+        .write.format(fmt).option("path", potA).mode("overwrite").save()
+      withStreamRunConf(s) {
+        val q = s.readStream.format(fmt).option("path", potA).load()
+          .select($"pot_file", $"key",
+            when($"doc_json" === "null", lit("""{"__del__":true}"""))
+              .otherwise($"doc_json").as("doc_json"))
+          .writeStream.format(fmt)
+          .option("path", potB)
+          .option("checkpointLocation", s"$root/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read.format(fmt).option("path", potB).load()
+        .filter(get_json_object($"doc_json", "$.__del__").isNull)
+        .select($"key",
+          get_json_object($"doc_json", "$.name").as("name"),
+          get_json_object($"doc_json", "$.v").cast("int").as("v"))
+        .orderBy($"key")
+        .localCheckpoint(true)
     }
-    val result = s.read.format(fmt).option("path", potB).load()
-      .filter(get_json_object($"doc_json", "$.__del__").isNull)
-      .select($"key",
-        get_json_object($"doc_json", "$.name").as("name"),
-        get_json_object($"doc_json", "$.v").cast("int").as("v"))
-      .orderBy($"key")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   val streamCdcMirrorSql: String =
@@ -1612,36 +1577,35 @@ object StreamingQueries {
     */
   def streamBucketedSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = runScratchDir("graft-st20")
-    val store = s"$root/store"
-    val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-    withStreamRunConf(s) {
-      val q = eventsStream(s, d)
-        .filter(col("event_id") % 41 === 0)
-        .select(lit("").as("pot_file"),
-          concat(lit("e"), col("event_id").cast("string")).as("key"),
-          to_json(struct(col("event_type").as("et"),
-            col("value").as("v"))).as("doc_json"))
-        .writeStream
-        .format(fmt)
-        .option("path", store)
-        .option("buckets", "8")
-        .option("checkpointLocation", s"$root/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st20", ram = true) { root =>
+      val store = s"$root/store"
+      val fmt = classOf[graft.sources.BucketedPotV2Source].getName
+      withStreamRunConf(s) {
+        val q = eventsStream(s, d)
+          .filter(col("event_id") % 41 === 0)
+          .select(lit("").as("pot_file"),
+            concat(lit("e"), col("event_id").cast("string")).as("key"),
+            to_json(struct(col("event_type").as("et"),
+              col("value").as("v"))).as("doc_json"))
+          .writeStream
+          .format(fmt)
+          .option("path", store)
+          .option("buckets", "8")
+          .option("checkpointLocation", s"$root/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read.format(fmt)
+        .option("path", store).option("buckets", "8").load()
+        .select(get_json_object($"doc_json", "$.et").as("event_type"),
+          get_json_object($"doc_json", "$.v").cast("double").as("v"))
+        .groupBy($"event_type")
+        .agg(count(lit(1)).as("n"), min($"v").as("vmin"), max($"v").as("vmax"))
+        .orderBy($"event_type")
+        .localCheckpoint(true)
     }
-    val result = s.read.format(fmt)
-      .option("path", store).option("buckets", "8").load()
-      .select(get_json_object($"doc_json", "$.et").as("event_type"),
-        get_json_object($"doc_json", "$.v").cast("double").as("v"))
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n"), min($"v").as("vmin"), max($"v").as("vmax"))
-      .orderBy($"event_type")
-      .localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   val streamBucketedSinkSql: String =
@@ -1666,47 +1630,47 @@ object StreamingQueries {
     */
   def streamBucketedCdc(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = runScratchDir("graft-st21")
-    val store = s"$root/store"
-    val bfmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val pfmt = classOf[graft.sources.PotV2Source].getName
-    val tbl = "graft_st21_bpot"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
-      s"doc_json STRING) USING $bfmt OPTIONS (path '$store', buckets '8')")
-    Tables.nation(s, d).createOrReplaceTempView("graft_st21_nation")
-    s.sql(s"""INSERT INTO $tbl
-             |SELECT '' AS pot_file, concat('n', n_nationkey) AS key,
-             |  to_json(named_struct('region', n_regionkey, 'v', 0))
-             |    AS doc_json
-             |FROM graft_st21_nation WHERE n_regionkey <= 2""".stripMargin)
-    s.sql(s"""INSERT INTO $tbl
-             |SELECT '', concat('n', n_nationkey),
-             |  to_json(named_struct('region', n_regionkey, 'v', 1))
-             |FROM graft_st21_nation WHERE n_regionkey = 0""".stripMargin)
-    s.sql(s"""DELETE FROM $tbl
-             |WHERE get_json_object(doc_json, '$$.region') = '2'"""
-      .stripMargin)
-    val feed = s"$root/feed"
-    withStreamRunConf(s) {
-      val q = s.readStream.format(pfmt)
-        .option("path", s"$store/_b=*/data.json").load()
-        .writeStream.format("parquet").option("path", feed)
-        .option("checkpointLocation", s"$root/chk").start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st21", ram = true) { root =>
+      val store = s"$root/store"
+      val bfmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val pfmt = classOf[graft.sources.PotV2Source].getName
+      val tbl = "graft_st21_bpot"
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      s.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
+        s"doc_json STRING) USING $bfmt OPTIONS (path '$store', buckets '8')")
+      Tables.nation(s, d).createOrReplaceTempView("graft_st21_nation")
+      s.sql(s"""INSERT INTO $tbl
+               |SELECT '' AS pot_file, concat('n', n_nationkey) AS key,
+               |  to_json(named_struct('region', n_regionkey, 'v', 0))
+               |    AS doc_json
+               |FROM graft_st21_nation WHERE n_regionkey <= 2""".stripMargin)
+      s.sql(s"""INSERT INTO $tbl
+               |SELECT '', concat('n', n_nationkey),
+               |  to_json(named_struct('region', n_regionkey, 'v', 1))
+               |FROM graft_st21_nation WHERE n_regionkey = 0""".stripMargin)
+      s.sql(s"""DELETE FROM $tbl
+               |WHERE get_json_object(doc_json, '$$.region') = '2'"""
+        .stripMargin)
+      val feed = s"$root/feed"
+      withStreamRunConf(s) {
+        val q = s.readStream.format(pfmt)
+          .option("path", s"$store/_b=*/data.json").load()
+          .writeStream.format("parquet").option("path", feed)
+          .option("checkpointLocation", s"$root/chk").start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      val result = s.read.parquet(feed)
+        .select($"key",
+          coalesce(get_json_object($"doc_json", "$.v").cast("int"), lit(-1))
+            .as("v"),
+          ($"doc_json" === "null").as("deleted"))
+        .orderBy($"key", $"deleted", $"v")
+        .localCheckpoint(true)
+      s.sql(s"DROP TABLE $tbl")
+      s.catalog.dropTempView("graft_st21_nation")
+      result
     }
-    val result = s.read.parquet(feed)
-      .select($"key",
-        coalesce(get_json_object($"doc_json", "$.v").cast("int"), lit(-1))
-          .as("v"),
-        ($"doc_json" === "null").as("deleted"))
-      .orderBy($"key", $"deleted", $"v")
-      .localCheckpoint(true)
-    s.sql(s"DROP TABLE $tbl")
-    s.catalog.dropTempView("graft_st21_nation")
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    result
   }
 
   val streamBucketedCdcSql: String =
@@ -1780,12 +1744,11 @@ object StreamingQueries {
     */
   def streamTransformWithState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = runScratchDir("graft-st24")
-    runMilestoneStream(s, d, out)
-    val result = s.read.parquet(s"$out/data")
-      .orderBy($"user_id", $"milestone").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
-    result
+    Scratch.withDir("graft-st24", ram = true) { out =>
+      runMilestoneStream(s, d, out)
+      s.read.parquet(s"$out/data")
+        .orderBy($"user_id", $"milestone").localCheckpoint(true)
+    }
   }
 
   /** The st24 stream run (shared with st25, which re-opens its RocksDB
@@ -1847,7 +1810,6 @@ object StreamingQueries {
     import s.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val table = "st26_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val chk = runScratchDir("graft-st26")
     // the 2% harness slice, split by a second modulus into the waves
     val slice = graft.Tables.events(s, d)
       .filter($"event_id" % 50 === 0)
@@ -1857,33 +1819,34 @@ object StreamingQueries {
     val b2 = slice.filter(r => (r._1 / 50) % 7 == 0)
     val flushTus = slice.map(_._2).max + 2L * 24 * 3600 * 1000000
     var dropped = 0L
-    // no-data batches ON (st5's exception rule): Spark filters late
-    // events with the PREVIOUS batch's watermark (the late/eviction
-    // split of SPARK-40925), so the wave-1 watermark reaches wave 2's
-    // late filter only through the intervening no-data batch — skipping
-    // them would admit every late row and the audit would read zero
-    withStreamRunConf(s, skipNoData = false) {
-      val mem = MemoryStream[(Long, Long)](
-        implicitly[org.apache.spark.sql.Encoder[(Long, Long)]], s.sqlContext)
-      val q = mem.toDF().toDF("event_id", "tus")
-        .select(timestamp_micros($"tus").as("ts"))
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window($"ts", "15 minutes"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp($"window.start").as("w_start"), $"n")
-        .writeStream.format("memory").queryName(table)
-        .option("checkpointLocation", s"$chk/chk")
-        .outputMode("append")
-        .start()
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-      mem.addData(Seq((-1L, flushTus))); q.processAllAvailable()
-      dropped = q.recentProgress.toSeq
-        .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
-        .map(_.numRowsDroppedByWatermark).sum
-      q.stop()
+    Scratch.withDir("graft-st26", ram = true) { chk =>
+      // no-data batches ON (st5's exception rule): Spark filters late
+      // events with the PREVIOUS batch's watermark (the late/eviction
+      // split of SPARK-40925), so the wave-1 watermark reaches wave 2's
+      // late filter only through the intervening no-data batch — skipping
+      // them would admit every late row and the audit would read zero
+      withStreamRunConf(s, skipNoData = false) {
+        val mem = MemoryStream[(Long, Long)](
+          implicitly[org.apache.spark.sql.Encoder[(Long, Long)]], s.sqlContext)
+        val q = mem.toDF().toDF("event_id", "tus")
+          .select(timestamp_micros($"tus").as("ts"))
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window($"ts", "15 minutes"))
+          .agg(count(lit(1)).as("n"))
+          .select(unix_timestamp($"window.start").as("w_start"), $"n")
+          .writeStream.format("memory").queryName(table)
+          .option("checkpointLocation", s"$chk/chk")
+          .outputMode("append")
+          .start()
+        mem.addData(b1); q.processAllAvailable()
+        mem.addData(b2); q.processAllAvailable()
+        mem.addData(Seq((-1L, flushTus))); q.processAllAvailable()
+        dropped = q.recentProgress.toSeq
+          .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
+          .map(_.numRowsDroppedByWatermark).sum
+        q.stop()
+      }
     }
-    new scala.reflect.io.Directory(new java.io.File(chk)).deleteRecursively()
     val audit = Seq((-1L, dropped)).toDF("w_start", "n")
     val result = s.table(table).select($"w_start", $"n")
       .unionByName(audit)
@@ -1933,18 +1896,17 @@ object StreamingQueries {
     */
   def streamStateStoreReader(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = runScratchDir("graft-st25")
-    runMilestoneStream(s, d, out)
-    val state = s.read.format("statestore")
-      .option("path", s"$out/chk")
-      .option("stateVarName", "totals")
-      .load()
-    val result = state
-      .select($"key.value".as("user_id"), $"value.cnt".as("n_events"),
-        $"value.sumK".as("sum_k"))
-      .orderBy($"user_id").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
-    result
+    Scratch.withDir("graft-st25", ram = true) { out =>
+      runMilestoneStream(s, d, out)
+      val state = s.read.format("statestore")
+        .option("path", s"$out/chk")
+        .option("stateVarName", "totals")
+        .load()
+      state
+        .select($"key.value".as("user_id"), $"value.cnt".as("n_events"),
+          $"value.sumK".as("sum_k"))
+        .orderBy($"user_id").localCheckpoint(true)
+    }
   }
 
   val streamStateStoreReaderSql: String =
@@ -1981,22 +1943,21 @@ object StreamingQueries {
         ($"doc_id" % graft.operators.TextAnalysis.PackShards).as("shard"),
         size(split($"text", " ")).as("n"))
       .as[PackDoc]
-    val out = runScratchDir("graft-st23")
-    withStreamRunConf(s) {
-      val q = packStream(docs)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    Scratch.withDir("graft-st23", ram = true) { out =>
+      withStreamRunConf(s) {
+        val q = packStream(docs)
+          .writeStream
+          .format("parquet")
+          .option("path", s"$out/data")
+          .option("checkpointLocation", s"$out/chk")
+          .outputMode("append")
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      s.read.parquet(s"$out/data")
+        .orderBy($"shard", $"bin").localCheckpoint(true)
     }
-    val result = s.read.parquet(s"$out/data")
-      .orderBy($"shard", $"bin").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
-    result
   }
 
   val streamPackingSql: String =
@@ -2034,99 +1995,98 @@ object StreamingQueries {
   def streamStmtConsistentCdc(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val root = runScratchDir("graft-st22")
-    val store = s"$root/store"
-    val bfmt = classOf[graft.sources.BucketedPotV2Source].getName
-    val pfmt = classOf[graft.sources.PotV2Source].getName
-    val nat = Tables.nation(s, d)
-    // statement A (completed multi-bucket INSERT): regions <= 1 at v0
-    nat.filter($"n_regionkey" <= 1).select(lit("").as("pot_file"),
-        concat(lit("n"), $"n_nationkey").as("key"),
-        to_json(struct($"n_regionkey".as("r"), lit(0).as("v")))
-          .as("doc_json"))
-      .write.format(bfmt).option("path", store).option("buckets", "8")
-      .mode("append").save()
-    // statement B, CRASHED mid-apply: intent published, fragments staged
-    // for every touched bucket, exactly the FIRST bucket's chain
-    // committed (the prefix a naive CDC consumer would leak)
-    val bKeys = nat.filter($"n_regionkey" === 0)
-      .select(concat(lit("n"), $"n_nationkey").as("key"))
-      .as[String].collect().sorted.toSeq
-    val byBucket = bKeys.groupBy(
-      graft.sources.BucketedPotV2Source.bucketOf(_, 8))
-    val staging = new java.io.File(s"$store/.staging-st22b")
-    staging.mkdirs()
-    val frags = byBucket.map { case (b, ks) =>
-      val f = new java.io.File(staging, s"part-b$b.jsonl")
-      java.nio.file.Files.writeString(f.toPath,
-        ks.map(k => s"""{"k":"$k","d":{"r":0,"v":1}}""")
-          .mkString("", "\n", "\n"))
-      b -> Seq((0, f.toString))
-    }
-    val base = graft.sources.BucketedPotV2Source.headVector(store, 8)
-    graft.sources.BucketedStmtLog.begin(store, "st22-crashed",
-      graft.sources.BucketedStmtLog.intentBody("insert", "st22-crashed",
-        truncate = false, Long.MaxValue, byBucket.keys.toSeq.sorted,
-        byBucket.keys.map(b => b -> base.getOrElse(b, 0L)).toMap, frags))
-    val b0 = byBucket.keys.min
-    new graft.sources.PotV2Write(
-      graft.sources.BucketedPotV2Source.bucketPot(store, b0),
-      graft.sources.PotV2Source.Schema, s"st22-crashed-b$b0",
-      truncateFirst = false)
-      .commitEntries(
-        Array(graft.sources.PotFragmentMessage(0, frags(b0).head._2)),
-        truncate = false, snapTag = Some("qst22cras"),
-        retryOnConflict = true,
-        staging = new org.apache.hadoop.fs.Path(store, ".scratch-b0"))
-    // ---- the consumer (the BucketedStmtLog recipe) ----
-    def appliedView(phase: String): DataFrame = {
-      val fs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      // statement-tag dimension: (bucket, generation) -> artifact stem
-      // tag. Bounded metadata (buckets x generations markers).
-      val TagRe = "^\\.(?:snap|dgen)-(q[0-9a-z]+)-".r
-      val tagRows = (0 until 8).flatMap { b =>
-        val pot = new org.apache.hadoop.fs.Path(
-          graft.sources.BucketedPotV2Source.bucketPot(store, b))
-        val commits = new org.apache.hadoop.fs.Path(pot.getParent, ".commits")
-        graft.kv.CommitMarker.committedGenerations(fs, commits).map { g =>
-          val stem = new org.apache.hadoop.fs.Path(
-            graft.sources.PotChain.artifactOf(fs, commits, g)).getName
-          (b, g, TagRe.findFirstMatchIn(stem).map(_.group(1)).getOrElse(""))
-        }
+    Scratch.withDir("graft-st22", ram = true) { root =>
+      val store = s"$root/store"
+      val bfmt = classOf[graft.sources.BucketedPotV2Source].getName
+      val pfmt = classOf[graft.sources.PotV2Source].getName
+      val nat = Tables.nation(s, d)
+      // statement A (completed multi-bucket INSERT): regions <= 1 at v0
+      nat.filter($"n_regionkey" <= 1).select(lit("").as("pot_file"),
+          concat(lit("n"), $"n_nationkey").as("key"),
+          to_json(struct($"n_regionkey".as("r"), lit(0).as("v")))
+            .as("doc_json"))
+        .write.format(bfmt).option("path", store).option("buckets", "8")
+        .mode("append").save()
+      // statement B, CRASHED mid-apply: intent published, fragments staged
+      // for every touched bucket, exactly the FIRST bucket's chain
+      // committed (the prefix a naive CDC consumer would leak)
+      val bKeys = nat.filter($"n_regionkey" === 0)
+        .select(concat(lit("n"), $"n_nationkey").as("key"))
+        .as[String].collect().sorted.toSeq
+      val byBucket = bKeys.groupBy(
+        graft.sources.BucketedPotV2Source.bucketOf(_, 8))
+      val staging = new java.io.File(s"$store/.staging-st22b")
+      staging.mkdirs()
+      val frags = byBucket.map { case (b, ks) =>
+        val f = new java.io.File(staging, s"part-b$b.jsonl")
+        java.nio.file.Files.writeString(f.toPath,
+          ks.map(k => s"""{"k":"$k","d":{"r":0,"v":1}}""")
+            .mkString("", "\n", "\n"))
+        b -> Seq((0, f.toString))
       }
-      // HOLD set: tags of statements whose barrier is still up
-      val openTags = graft.sources.BucketedStmtLog.openStatements(store)
-        .map { case (qid, _) => "q" + qid.replace("-", "").take(8) }
-      val tags = tagRows.toDF("b", "gen", "tag")
-        .withColumn("held",
-          if (openTags.isEmpty) lit(false) else $"tag".isin(openTags: _*))
-      val feed = s.read.format(pfmt)
-        .option("path", s"$store/_b=*/data.json")
-        .option("changesFromVector", "{}").load()
-        .select(
-          regexp_extract($"pot_file", "_b=([0-9]+)/", 1).cast("int")
-            .as("b"),
-          regexp_extract($"pot_file", "@([0-9]+)$", 1).cast("long")
-            .as("gen"),
-          $"key", $"doc_json")
-      val wnd = Window.partitionBy($"key").orderBy($"gen".desc)
-      feed.join(broadcast(tags), Seq("b", "gen"))
-        .filter(!$"held") // the recipe: open statements' deltas wait
-        .withColumn("rn", row_number().over(wnd))
-        .filter($"rn" === 1 && $"doc_json" =!= "null")
-        .select(lit(phase).as("phase"), $"key",
-          get_json_object($"doc_json", "$.v").cast("int").as("v"))
+      val base = graft.sources.BucketedPotV2Source.headVector(store, 8)
+      graft.sources.BucketedStmtLog.begin(store, "st22-crashed",
+        graft.sources.BucketedStmtLog.intentBody("insert", "st22-crashed",
+          truncate = false, Long.MaxValue, byBucket.keys.toSeq.sorted,
+          byBucket.keys.map(b => b -> base.getOrElse(b, 0L)).toMap, frags))
+      val b0 = byBucket.keys.min
+      new graft.sources.PotV2Write(
+        graft.sources.BucketedPotV2Source.bucketPot(store, b0),
+        graft.sources.PotV2Source.Schema, s"st22-crashed-b$b0",
+        truncateFirst = false)
+        .commitEntries(
+          Array(graft.sources.PotFragmentMessage(0, frags(b0).head._2)),
+          truncate = false, snapTag = Some("qst22cras"),
+          retryOnConflict = true,
+          staging = new org.apache.hadoop.fs.Path(store, ".scratch-b0"))
+      // ---- the consumer (the BucketedStmtLog recipe) ----
+      def appliedView(phase: String): DataFrame = {
+        val fs = new org.apache.hadoop.fs.Path(store)
+          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        // statement-tag dimension: (bucket, generation) -> artifact stem
+        // tag. Bounded metadata (buckets x generations markers).
+        val TagRe = "^\\.(?:snap|dgen)-(q[0-9a-z]+)-".r
+        val tagRows = (0 until 8).flatMap { b =>
+          val pot = new org.apache.hadoop.fs.Path(
+            graft.sources.BucketedPotV2Source.bucketPot(store, b))
+          val commits = new org.apache.hadoop.fs.Path(pot.getParent, ".commits")
+          graft.kv.CommitMarker.committedGenerations(fs, commits).map { g =>
+            val stem = new org.apache.hadoop.fs.Path(
+              graft.sources.PotChain.artifactOf(fs, commits, g)).getName
+            (b, g, TagRe.findFirstMatchIn(stem).map(_.group(1)).getOrElse(""))
+          }
+        }
+        // HOLD set: tags of statements whose barrier is still up
+        val openTags = graft.sources.BucketedStmtLog.openStatements(store)
+          .map { case (qid, _) => "q" + qid.replace("-", "").take(8) }
+        val tags = tagRows.toDF("b", "gen", "tag")
+          .withColumn("held",
+            if (openTags.isEmpty) lit(false) else $"tag".isin(openTags: _*))
+        val feed = s.read.format(pfmt)
+          .option("path", s"$store/_b=*/data.json")
+          .option("changesFromVector", "{}").load()
+          .select(
+            regexp_extract($"pot_file", "_b=([0-9]+)/", 1).cast("int")
+              .as("b"),
+            regexp_extract($"pot_file", "@([0-9]+)$", 1).cast("long")
+              .as("gen"),
+            $"key", $"doc_json")
+        val wnd = Window.partitionBy($"key").orderBy($"gen".desc)
+        feed.join(broadcast(tags), Seq("b", "gen"))
+          .filter(!$"held") // the recipe: open statements' deltas wait
+          .withColumn("rn", row_number().over(wnd))
+          .filter($"rn" === 1 && $"doc_json" =!= "null")
+          .select(lit(phase).as("phase"), $"key",
+            get_json_object($"doc_json", "$.v").cast("int").as("v"))
+      }
+      // phase 1 materialized BEFORE recovery: the crashed statement's
+      // committed-prefix bucket exists in the feed but is HELD
+      val held = appliedView("1_held").localCheckpoint(true)
+      graft.sources.BucketedPotV2Source.recoverStatements(store)
+      val released = appliedView("2_released").localCheckpoint(true)
+      held.unionByName(released)
+        .orderBy($"phase", $"key").localCheckpoint(true)
     }
-    // phase 1 materialized BEFORE recovery: the crashed statement's
-    // committed-prefix bucket exists in the feed but is HELD
-    val held = appliedView("1_held").localCheckpoint(true)
-    graft.sources.BucketedPotV2Source.recoverStatements(store)
-    val released = appliedView("2_released").localCheckpoint(true)
-    val out = held.unionByName(released)
-      .orderBy($"phase", $"key").localCheckpoint(true)
-    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
-    out
   }
 
   val streamStmtConsistentCdcSql: String =

@@ -139,16 +139,4 @@ class FixedPointSumSpec extends AnyFunSuite {
       assert(java.lang.Double.doubleToRawLongBits(got(k)) ===
         java.lang.Double.doubleToRawLongBits(w), s"k=$k")
   }
-
-  test("conf hatch: spark.graft.fixedsum.enabled=false restores the stock plan") {
-    spark.conf.set("spark.graft.fixedsum.enabled", "false")
-    try {
-      val plan = Tables.lineitem(spark, sf)
-        .agg(Ora.dsum($"l_quantity")).queryExecution.analyzed.toString
-      assert(!plan.contains("fixed_point_sum"), plan)
-    } finally spark.conf.unset("spark.graft.fixedsum.enabled")
-    val plan2 = Tables.lineitem(spark, sf)
-      .agg(Ora.dsum($"l_quantity")).queryExecution.analyzed.toString
-    assert(plan2.contains("fixed_point_sum"), plan2)
-  }
 }

@@ -15,9 +15,9 @@ class PlanAuditSpec extends AnyFunSuite {
   test("u27 stats-driven broadcast: the pot dim is the broadcast BUILD side with no hint (r15)") {
     // the query is hint-free; the only way the pot side broadcasts is the
     // connector's SupportsReportStatistics sizeInBytes report
-    val (joined, dir) =
-      graft.operators.Extensibility.statsBroadcastBuild(spark, sf)
-    try {
+    Scratch.withDir("graft-potstats") { dir =>
+      val joined =
+        graft.operators.Extensibility.statsBroadcastBuild(spark, sf, dir)
       import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
       import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
       val plan = joined.queryExecution.executedPlan match {
@@ -33,8 +33,7 @@ class PlanAuditSpec extends AnyFunSuite {
       }
       assert(build.toString.contains("PotV2Scan"),
         s"the pot relation is not the broadcast build side:\n$plan")
-    } finally new scala.reflect.io.Directory(new java.io.File(dir))
-      .deleteRecursively()
+    }
   }
 
   test("s32 kNN fallback join: cohort-local equi-joins; the one NLJ is the broadcast-probe price tag (r15)") {
@@ -51,9 +50,9 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q84 z-order layout: the secondary-dimension read opens 8 of 32 buckets via partition pruning (r15)") {
-    val (pruned, root) =
-      graft.operators.Aggregates.zorderLayoutBuild(spark, sf)
-    try {
+    Scratch.withDir("graft-zorder") { root =>
+      val pruned =
+        graft.operators.Aggregates.zorderLayoutBuild(spark, sf, root)
       // the derived bucket set is a literal PARTITION filter, resolved
       // at file listing — q83's predicted fraction made physical
       val plan0 = pruned.queryExecution.executedPlan
@@ -78,8 +77,7 @@ class PlanAuditSpec extends AnyFunSuite {
         .count(f => f.getFileName.toString.startsWith("part-"))
       assert(opened * 2 <= full,
         s"z-order pruning opened $opened of $full files")
-    } finally new scala.reflect.io.Directory(new java.io.File(root))
-      .deleteRecursively()
+    }
   }
 
   test("q85 persisted store z-order: both dims' range reads prune at file listing across separate queries (r16)") {
