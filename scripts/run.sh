@@ -1,6 +1,8 @@
 #!/usr/bin/env bash
 # Run a graft main (graft.Verify / graft.Bench) against the compiled classes
 # without sbt startup overhead. Usage: scripts/run.sh graft.Verify <args...>
+# Per-query profile (Spark jobs, stages, driver gaps, FS calls per layer):
+#   python3 perfbench/run.py --workload olap --seed 1 --seconds 15 --trace 1
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""

@@ -11,10 +11,11 @@ import org.apache.spark.sql.SparkSession
   * per-query numbers.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
+  /** The one session the mains and the test suites share: `local[cpus]`,
+    * `cpus` shuffle partitions, UTC, log level WARN.
+    */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -30,13 +31,14 @@ object Bench {
       // so a torn staged dir that never wins a marker is simply invisible.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.ui.enabled", "false")
-    // ad-hoc A/B overrides: SPARK_GRAFT_CONF="k=v;k=v" (applied last, wins)
-    val spark = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     // Warmup: exercise codegen + parquet reader once, untimed. The ANN
     // index build is ingest cost, not query cost — warm it so s2 times the

@@ -51,7 +51,7 @@ final class BucketedPotTable(
     */
   private lazy val buckets: Int = BucketMeta.resolve(
     fs, new Path(dir), Some(nBuckets).filter(_ > 0),
-    storeLive = fs.exists(new Path(s"$dir/_commits")))
+    storeLive = fs.exists(commits))
 
   /** Stamp the modulus before any mutation routes rows by it (idempotent;
     * a CAS race between same-count creators is adoption).
@@ -61,19 +61,18 @@ final class BucketedPotTable(
 
   private def bucketCol = pmod(xxhash64($"key"), lit(buckets.toLong)).cast("int")
 
-  def generation: Long =
-    CommitMarker.committedGenerations(fs, new Path(s"$dir/_commits"))
-      .foldLeft(0L)(math.max)
+  private def commits = new Path(s"$dir/_commits")
 
-  private def markerPath(gen: Long) = new Path(s"$dir/_commits/$gen")
+  def generation: Long = CommitMarker.head(fs, commits)
 
-  private def isCommitted(gen: Long): Boolean =
-    fs.exists(markerPath(gen)) && fs.getFileStatus(markerPath(gen)).getLen > 0
+  private def markerPath(gen: Long) = new Path(commits, gen.toString)
 
-  /** Manifest lines `bucket:stagedPath`; an empty path is a tombstone. */
-  private def readManifest(gen: Long): Map[Int, String] =
-    CommitMarker.read(fs, markerPath(gen))
-      .split("\n").filter(_.nonEmpty).map { line =>
+  /** Manifest lines `bucket:stagedPath` of committed generation `gen`
+    * (empty if absent or a husk); an empty path is a tombstone.
+    */
+  private def manifestAt(gen: Long): Map[Int, String] =
+    CommitMarker.bodyAt(fs, commits, gen).toSeq
+      .flatMap(_.split("\n")).filter(_.nonEmpty).map { line =>
         val i = line.indexOf(':')
         line.take(i).toInt -> line.drop(i + 1)
       }.toMap
@@ -84,7 +83,7 @@ final class BucketedPotTable(
     */
   private def resolve(gen: Long): Map[Int, String] =
     (1L to gen).foldLeft(Map.empty[Int, String]) { (acc, g) =>
-      if (isCommitted(g)) acc ++ readManifest(g) else acc
+      acc ++ manifestAt(g)
     }.filter(_._2.nonEmpty)
 
   /** Full snapshot read at the current generation: one multi-path parquet
@@ -105,7 +104,8 @@ final class BucketedPotTable(
     * fallback.
     */
   def getAt(gen: Long): DataFrame = {
-    require(gen >= 1L && gen <= generation && isCommitted(gen),
+    require(gen >= 1L && gen <= generation &&
+        CommitMarker.bodyAt(fs, commits, gen).isDefined,
       s"bucketed pot $path: generation $gen is not committed " +
         s"(head is $generation) — never a stale/empty fallback")
     val m = resolve(gen)
@@ -315,7 +315,7 @@ final class BucketedPotTable(
 
   /** Admin recovery for a wedged generation — see [[PotTable.repair]]. */
   def repair(): Seq[Long] =
-    CommitMarker.repair(fs, new Path(s"$dir/_commits"))
+    CommitMarker.repair(fs, commits)
 
   // ===================== persisted z-order layout (r16) ==================
   // q84 proved the z-order mechanism on a per-query temp dir; this is the
@@ -343,8 +343,7 @@ final class BucketedPotTable(
     require(dims.length >= 2, "cluster needs at least two dimensions")
     val srcGen = generation
     require(srcGen >= 1L, s"bucketed pot $path: nothing to cluster")
-    val layoutGen = CommitMarker
-      .committedGenerations(fs, zorderCommits).foldLeft(0L)(math.max) + 1
+    val layoutGen = CommitMarker.head(fs, zorderCommits) + 1
     val staged =
       s"$dir/_zorder/data/g${layoutGen}_${java.util.UUID.randomUUID()}"
     val named = dims.foldLeft(get()) { case (df, (n, c)) =>
@@ -373,9 +372,9 @@ final class BucketedPotTable(
 
   /** The latest published layout: (dataDir, srcGen, bucketBits, dims). */
   private def resolveLayout(): Option[(String, Long, Int, Seq[String])] = {
-    val gens = CommitMarker.committedGenerations(fs, zorderCommits)
-    if (gens.isEmpty) return None
-    val body = CommitMarker.read(fs, new Path(zorderCommits, gens.max.toString))
+    val head = CommitMarker.head(fs, zorderCommits)
+    if (head == 0L) return None
+    val body = CommitMarker.read(fs, new Path(zorderCommits, head.toString))
     val lines = body.split("\n", 2)
     val j = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(lines(1))
@@ -398,8 +397,10 @@ final class BucketedPotTable(
   def vacuumLayouts(retain: Int = 1): Seq[String] = {
     val dataRoot = new Path(s"$dir/_zorder/data")
     if (!fs.exists(dataRoot)) return Seq.empty
+    // head is read BEFORE the listing: a layout committed after this
+    // point is above `head`, so it is kept as in-flight either way
+    val head = CommitMarker.head(fs, zorderCommits)
     val gens = CommitMarker.committedGenerations(fs, zorderCommits)
-    val head = gens.foldLeft(0L)(math.max)
     val keep = gens.sorted.reverse.take(math.max(retain, 1)).map { g =>
       val body = CommitMarker.read(fs, new Path(zorderCommits, g.toString))
       new Path(body.split("\n", 2)(0)).getName
@@ -450,8 +451,7 @@ final class BucketedPotTable(
     * test hook for asserting partition-scoped (not whole-table) rewrite.
     */
   def bucketsWrittenAt(gen: Long): Seq[Int] =
-    if (isCommitted(gen)) readManifest(gen).keys.toSeq.sorted
-    else Seq.empty
+    manifestAt(gen).keys.toSeq.sorted
 
   /** Online reshard: rewrite the table's current state into a NEW bucketed
     * table (same root, `path` = this table's path + the suffix) with a

@@ -42,6 +42,22 @@ private[graft] object CommitMarker {
         st.getPath.getName.forall(_.isDigit) && st.getLen > 0)
       .map(_.getPath.getName.toLong)
 
+  /** The chain head: the highest committed generation under `commits`,
+    * 0 when there is none (every chain numbers its first commit 1). The
+    * one place readers and writers ask "which generation is current".
+    */
+  def head(fs: FileSystem, commits: Path): Long =
+    committedGenerations(fs, commits).foldLeft(0L)(math.max)
+
+  /** Body of generation `gen`'s marker; None if absent or a husk. */
+  def bodyAt(fs: FileSystem, commits: Path, gen: Long): Option[String] = {
+    val marker = new Path(commits, gen.toString)
+    try {
+      if (fs.getFileStatus(marker).getLen > 0) Some(read(fs, marker))
+      else None // zero-length husk: a crashed publisher, not a commit
+    } catch { case _: FileNotFoundException => None }
+  }
+
   def read(fs: FileSystem, marker: Path): String = {
     val in = fs.open(marker)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString

@@ -46,11 +46,10 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     * (reference returns an empty map for absent paths, server.go:316-331).
     * Zero-length crash husks are not commits — see [[CommitMarker]].
     */
-  def generation: Long =
-    CommitMarker.committedGenerations(fs, new Path(s"$dir/_commits"))
-      .foldLeft(0L)(math.max)
+  def generation: Long = CommitMarker.head(fs, commits)
 
-  private def markerPath(gen: Long) = new Path(s"$dir/_commits/$gen")
+  private def commits = new Path(s"$dir/_commits")
+  private def markerPath(gen: Long) = new Path(commits, gen.toString)
 
   private def readMarker(gen: Long): String =
     CommitMarker.read(fs, markerPath(gen)).trim
@@ -176,10 +175,13 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     * present in `docs`, so `docs` wins per key and the merged state ==
     * `docs`. KvSpec pins the equivalence. NOT for partial batches —
     * absent keys are DROPPED (that is the semantics: replace).
+    * `expectedGen` is the generation the caller built `docs` from: if
+    * another commit landed since, this throws [[PotTable.CommitConflict]]
+    * instead of overwriting it.
     */
-  def replace(docs: DataFrame): Long = {
+  def replace(docs: DataFrame, expectedGen: Long): Long = {
     val stamped = docs.withColumn("_modified", current_timestamp())
-    commit(stamped, generation)
+    commit(stamped, expectedGen)
   }
 
   /** Conditional write (WithNoRewrite + WithRewriteGeneration,
@@ -242,7 +244,7 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     * Caller guarantees no writer is live. Returns repaired generations.
     */
   def repair(): Seq[Long] =
-    CommitMarker.repair(fs, new Path(s"$dir/_commits"))
+    CommitMarker.repair(fs, commits)
 
   /** Snapshot/export (Zip, server.go:550-614): materialize the current
     * version to an export directory. Returns the manifest.
@@ -269,8 +271,8 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     // compare by the uuid-unique staged dir NAME to sidestep scheme/prefix
     // differences between marker content and FileStatus paths
     val keep = ((math.max(1L, gen - retainGenerations)) to gen)
-      .filter(g => fs.exists(markerPath(g)))
-      .map(g => new Path(readMarker(g)).getName).toSet
+      .flatMap(g => CommitMarker.bodyAt(fs, commits, g))
+      .map(b => new Path(b.trim).getName).toSet
     val StagedGen = "^g(\\d+)_.*".r
     fs.listStatus(dataRoot).foreach { st =>
       val name = st.getPath.getName

@@ -62,8 +62,7 @@ final class PotTxn(spark: SparkSession, root: String) {
     fs.mkdirs(commitsDir)
     val pots = batches.map(_._1)
     val body = (id +: pots).mkString("\n")
-    var n = CommitMarker.committedGenerations(fs, commitsDir)
-      .foldLeft(0L)(math.max) + 1
+    var n = CommitMarker.head(fs, commitsDir) + 1
     var committed = false
     while (!committed) {
       try { CommitMarker.publish(fs, new Path(commitsDir, n.toString), body)
@@ -157,8 +156,7 @@ final class PotTxn(spark: SparkSession, root: String) {
   private def gcDir = new Path(s"$root/_txns/_gc")
 
   /** Highest committed GC watermark (0 = never GC'd). */
-  def gcWatermark: Long =
-    CommitMarker.committedGenerations(fs, gcDir).foldLeft(0L)(math.max)
+  def gcWatermark: Long = CommitMarker.head(fs, gcDir)
 
   /** Frontier GC — the retention half of the txn log (kv18's frontier
     * reads would otherwise pin every applied marker and stage dir
@@ -179,8 +177,7 @@ final class PotTxn(spark: SparkSession, root: String) {
     // committed txns land at t <= w — frontier()'s `t > w` filter would
     // then silently exclude their applied coordinates from every future
     // frontier/snapshotAt (committed effects invisible to pinned reads)
-    val head = CommitMarker.committedGenerations(fs, commitsDir)
-      .foldLeft(0L)(math.max)
+    val head = CommitMarker.head(fs, commitsDir)
     require(w <= head,
       s"gcBelow($w): watermark cannot pass the committed txn head $head — " +
         "a future txn would be numbered at or below the watermark and " +

@@ -143,12 +143,6 @@ object AnnIndex {
     centsDf.coalesce(1).write.mode("overwrite").parquet(s"$out/_centroids")
   }
 
-  /** Build-once, marker-arbitrated index location (see the class note).
-    * Optimistic: concurrent cold-start builders may each build once; the
-    * marker CAS picks one winner, losers delete their orphan and adopt the
-    * winner's pointer — the duplicate work is bounded to the cold-start
-    * race, and no reader ever waits on a crashed builder.
-    */
   /** Content-addressed index root under java.io.tmpdir for fixture `d`.
     * `private[graft]`: [[graft.streaming.DedupIndex]] keys its appendable
     * generations off the same scheme.
@@ -161,29 +155,16 @@ object AnnIndex {
       s"$prefix-$key-v2")
   }
 
+  /** Build-once, marker-arbitrated index location (see the class note).
+    * Optimistic: concurrent cold-start builders may each build once; the
+    * marker CAS picks one winner, losers delete their orphan and adopt the
+    * winner's pointer — the duplicate work is bounded to the cold-start
+    * race, and no reader ever waits on a crashed builder.
+    */
   private[graft] def locateIndex(
       s: SparkSession, d: String, prefix: String)(
       build: (SparkSession, String, String) => Unit): String =
     ensureGeneration(s, indexBase(prefix, d), 1L)(out => build(s, d, out))
-
-  /** Commit-or-adopt one index GENERATION under `base` — the core of the
-    * stage-then-publish protocol, shared by the build-once indexes
-    * (generation 1 only) and the incrementally-maintained one
-    * ([[locateIncremental]], where each appended delta is the next
-    * generation's marker). Returns the committed data dir for `gen`,
-    * building (and racing to publish) if absent.
-    */
-  /** Committed data dir for `gen`'s marker, None if absent or a husk. */
-  private def committedAt(
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path, gen: Long): Option[String] = {
-    val marker = new org.apache.hadoop.fs.Path(base, s"commits/$gen")
-    try {
-      if (fs.getFileStatus(marker).getLen > 0)
-        Some(graft.kv.CommitMarker.read(fs, marker))
-      else None // zero-length husk: a crashed publisher, not a commit
-    } catch { case _: java.io.FileNotFoundException => None }
-  }
 
   /** All committed generations under `base`, ascending. Generations are
     * dense from 1 (ensureGeneration publishes N+1 only after N exists), so
@@ -193,20 +174,31 @@ object AnnIndex {
       s: SparkSession,
       base: org.apache.hadoop.fs.Path): Seq[(Long, String)] = {
     val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val commits = new org.apache.hadoop.fs.Path(base, "commits")
     Iterator.from(1)
-      .map(g => (g.toLong, committedAt(fs, base, g.toLong)))
+      .map(g =>
+        (g.toLong, graft.kv.CommitMarker.bodyAt(fs, commits, g.toLong)))
       .takeWhile(_._2.isDefined)
       .map { case (g, dir) => (g, dir.get) }
       .toSeq
   }
 
+  /** Commit-or-adopt one index GENERATION under `base` — the core of the
+    * stage-then-publish protocol, shared by the build-once indexes
+    * (generation 1 only) and the incrementally-maintained one
+    * ([[locateIncremental]], where each appended delta is the next
+    * generation's marker). Returns the committed data dir for `gen`,
+    * building (and racing to publish) if absent.
+    */
   private[graft] def ensureGeneration(
       s: SparkSession, base: org.apache.hadoop.fs.Path, gen: Long)(
       build: String => Unit): String = {
     import org.apache.hadoop.fs.Path
     val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val marker = new Path(base, s"commits/$gen")
-    def committed: Option[String] = committedAt(fs, base, gen)
+    val commits = new Path(base, "commits")
+    val marker = new Path(commits, gen.toString)
+    def committed: Option[String] =
+      graft.kv.CommitMarker.bodyAt(fs, commits, gen)
     committed.getOrElse {
       val staging = new Path(base, s"data-${java.util.UUID.randomUUID()}")
       build(staging.toString)
@@ -276,6 +268,7 @@ object AnnIndex {
       committedGenerations(s, base).find(_._2.contains(s"data-$t-")))
     if (adopted.isDefined) return adopted.get
     val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val commits = new Path(base, "commits")
     val staging = new Path(base,
       s"data-${tag.fold("")(_ + "-")}${java.util.UUID.randomUUID()}")
     // target generation read BEFORE the (long) build: any commit that
@@ -284,7 +277,7 @@ object AnnIndex {
     build(staging.toString)
     val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
     while (true) {
-      val marker = new Path(base, s"commits/$gen")
+      val marker = new Path(commits, gen.toString)
       try {
         graft.kv.CommitMarker.publish(fs, marker, staging.toString)
         return (gen, staging.toString)
@@ -295,7 +288,7 @@ object AnnIndex {
             throw new IllegalStateException(
               s"append marker $marker: repeated incomplete commits")
         case _: graft.kv.PotTable.CommitConflict =>
-          committedAt(fs, base, gen) match {
+          graft.kv.CommitMarker.bodyAt(fs, commits, gen) match {
             case Some(_) => gen += 1 // someone else's commit; ours is next
             case None =>             // husk whose reclaim is in flight
               if (System.nanoTime() > deadline)

@@ -728,11 +728,9 @@ object Extensibility {
           .filter(_.isFile).map(_.getPath).map { pot =>
             val commits = new org.apache.hadoop.fs.Path(
               pot.getParent, ".commits")
-            val gens = graft.kv.CommitMarker
-              .committedGenerations(fs, commits)
-            if (gens.isEmpty) (pot.toString, 0L, null: String, null: String)
+            val head = graft.kv.CommitMarker.head(fs, commits)
+            if (head == 0L) (pot.toString, 0L, null: String, null: String)
             else {
-              val head = gens.max
               val body = graft.sources.PotChain.artifactOf(fs, commits, head)
               graft.sources.PotChain.zmapRange(fs, body) match {
                 case Some((mn, mx)) => (pot.toString, head, mn, mx)
@@ -782,15 +780,13 @@ object Extensibility {
           .filter(_.isFile).map(_.getPath).flatMap { pot =>
             val commits = new org.apache.hadoop.fs.Path(
               pot.getParent, ".commits")
-            val gens = graft.kv.CommitMarker
-              .committedGenerations(fs, commits)
+            val head = graft.kv.CommitMarker.head(fs, commits)
             val none = Seq((pot.toString, null: String, null: String,
               null: java.lang.Long, null: java.lang.Long,
               null: java.lang.Long, null: String, null: String))
-            if (gens.isEmpty) none
+            if (head == 0L) none
             else {
-              val body = graft.sources.PotChain.artifactOf(fs, commits,
-                gens.max)
+              val body = graft.sources.PotChain.artifactOf(fs, commits, head)
               val stats = graft.sources.PotChain.zmapStats(fs, body)
               stats.fields match {
                 case Some(fm) if fm.nonEmpty =>
@@ -2073,11 +2069,9 @@ object Extensibility {
           .filter(_.isFile).map(_.getPath).map { pot =>
             val commits = new org.apache.hadoop.fs.Path(
               pot.getParent, ".commits")
-            val gens = graft.kv.CommitMarker
-              .committedGenerations(fs, commits)
-            if (gens.isEmpty) (pot.toString, 0L, 0L, 0L, 0L)
+            val head = graft.kv.CommitMarker.head(fs, commits)
+            if (head == 0L) (pot.toString, 0L, 0L, 0L, 0L)
             else {
-              val head = gens.max
               val (snap, dgens) =
                 graft.sources.PotChain.chainRun(fs, commits, head)
               val covering = head - dgens.length
@@ -4020,9 +4014,10 @@ object Extensibility {
         s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1), 2)}}""") :+
         """{"k": "n7", "d": null}""")
       val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
-      val gensBefore = graft.kv.CommitMarker.committedGenerations(fs, commits)
+      // a fresh chain numbered 1, 2, 3: the head IS the generation count
+      val headBefore = graft.kv.CommitMarker.head(fs, commits)
       val headDgenBefore = graft.sources.PotChain.isDgen(
-        graft.sources.PotChain.artifactOf(fs, commits, gensBefore.max))
+        graft.sources.PotChain.artifactOf(fs, commits, headBefore))
       def state(gen: Option[Long]) = {
         val r = s.read.format(fmt).option("path", pot)
         gen.foreach(g => r.option("generation", g.toString))
@@ -4047,7 +4042,7 @@ object Extensibility {
         .select(col(graft.sources.PotV2Source.PotGenCol).as("pg"))
         .agg(countDistinct($"pg").as("pgen_distinct_after"),
           max($"pg").as("pgen_head"))
-      Seq((gensBefore.length.toLong,
+      Seq((headBefore,
         if (headDgenBefore) 1L else 0L, folds.toLong))
         .toDF("n_gens_before", "head_dgen_before", "n_folds")
         .crossJoin(pgenBefore).crossJoin(after).crossJoin(v3)

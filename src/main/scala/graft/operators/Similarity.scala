@@ -1817,28 +1817,15 @@ object Similarity {
   /** The s38 NAVIGABLE-GRAPH index build: bucket-local top-[[NswGraphK]]
     * neighbors by integer dot (s28's graph at degree 8, scored in s5's
     * int8 domain so the oracle replays it exactly), PUBLISHED once per
-    * fixture dir via the CommitMarker CAS — stage a uuid parquet dir,
-    * CAS `commits/1` to its path, losers adopt the winner and delete
-    * their staging (the AnnIndex discipline; Bench warms it, so the
-    * serving path reads a persisted artifact, exactly like a production
-    * vector store). */
+    * fixture dir through [[AnnIndex.ensureGeneration]] — racing builders
+    * stage identical bytes, one wins `commits/1`, losers adopt it (Bench
+    * warms it, so the serving path reads a persisted artifact, exactly
+    * like a production vector store). */
   private[graft] def publishedNswGraph(s: SparkSession, d: String): String = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val root = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(sys.props("java.io.tmpdir")),
-      s"graft-nsw-$tag-v1")
-    val fs = root.getFileSystem(graft.kv.HadoopConf.get)
-    val commits = new org.apache.hadoop.fs.Path(root, "commits")
-    def committed: Option[String] =
-      if (graft.kv.CommitMarker.committedGenerations(fs, commits)
-          .contains(1L))
-        Some(graft.kv.CommitMarker.read(fs,
-          new org.apache.hadoop.fs.Path(commits, "1")))
-      else None
-    committed.getOrElse {
+    val root = AnnIndex.indexBase("graft-nsw", d)
+    AnnIndex.ensureGeneration(s, root, 1L) { out =>
       val corpus = Tables.embeddings(s, d)
         .filter($"vec_id" % 101 =!= 7)
         .select($"vec_id", int8Code.as("code"), sigCol($"embedding").as("sig"))
@@ -1851,18 +1838,7 @@ object Similarity {
         .withColumn("rk", row_number().over(w))
         .filter($"rk" <= NswGraphK)
         .select($"node", $"nbr")
-      val staged = new org.apache.hadoop.fs.Path(
-        root, s"data-${java.util.UUID.randomUUID()}")
-      adj.write.mode("overwrite").parquet(staged.toString)
-      try {
-        graft.kv.CommitMarker.publish(fs,
-          new org.apache.hadoop.fs.Path(commits, "1"), staged.toString)
-        staged.toString
-      } catch {
-        case _: graft.kv.PotTable.CommitConflict =>
-          fs.delete(staged, true)
-          committed.get
-      }
+      adj.write.mode("overwrite").parquet(out)
     }
   }
 
@@ -2079,7 +2055,7 @@ object Similarity {
     * the duplicate). Append-only compromise, stated: reverse edges grow
     * an old node's degree past K until a re-cluster compacts the graph
     * — bounded by arrivals-per-bucket, never by corpus. Both
-    * generations publish via the CommitMarker CAS (content
+    * generations publish through [[AnnIndex.ensureGeneration]] (content
     * deterministic, losers adopt); the walk and the price tag are
     * s38's serving path verbatim over the unioned adjacency, so the
     * oracle replays base + delta + reverse edges and the identical
@@ -2089,35 +2065,10 @@ object Similarity {
       : Seq[String] = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val root = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(sys.props("java.io.tmpdir")),
-      s"graft-nswi-$tag-v1")
-    val fs = root.getFileSystem(graft.kv.HadoopConf.get)
-    val commits = new org.apache.hadoop.fs.Path(root, "commits")
-    def committed(g: Long): Option[String] =
-      if (graft.kv.CommitMarker.committedGenerations(fs, commits)
-          .contains(g))
-        Some(graft.kv.CommitMarker.read(fs,
-          new org.apache.hadoop.fs.Path(commits, g.toString)))
-      else None
+    val root = AnnIndex.indexBase("graft-nswi", d)
     def publish(g: Long, df: => DataFrame): String =
-      committed(g).getOrElse {
-        val staged = new org.apache.hadoop.fs.Path(
-          root, s"data-g$g-${java.util.UUID.randomUUID()}")
-        df.write.mode("overwrite").parquet(staged.toString)
-        try {
-          graft.kv.CommitMarker.publish(fs,
-            new org.apache.hadoop.fs.Path(commits, g.toString),
-            staged.toString)
-          staged.toString
-        } catch {
-          case _: graft.kv.PotTable.CommitConflict =>
-            fs.delete(staged, true)
-            committed(g).get
-        }
-      }
+      AnnIndex.ensureGeneration(s, root, g)(
+        df.write.mode("overwrite").parquet(_))
     val corpus = Tables.embeddings(s, d)
       .filter($"vec_id" % 101 =!= 7)
       .select($"vec_id", int8Code.as("code"), sigCol($"embedding").as("sig"))
@@ -2258,13 +2209,15 @@ object Similarity {
 
   /** s40: DELETE + FOLD for the navigable graph (r19 — the lifecycle gap
     * the r18 verdict named: the LSH index had tombstones + recluster,
-    * the NSW chain was append-only). The graph chain's marker bodies now
-    * carry a KIND prefix: `edges:<path>` (adjacency generation),
-    * `tomb:<path>` (a tombstone generation — one `node` column naming
-    * the deleted vectors), `fold:<path>` (a rebuild over survivors that
-    * RESETS the chain state — s29's content-addressed recluster
-    * discipline: the fold content is deterministic from the survivor
-    * set, so racing folders stage identical bytes and losers adopt).
+    * the NSW chain was append-only). Each graph generation has a KIND,
+    * fixed by its number and attached to the committed dir on read:
+    * `edges:<path>` (1, adjacency generation), `tomb:<path>` (2, a
+    * tombstone generation — one `node` column naming the deleted
+    * vectors), `fold:<path>` (3, a rebuild over survivors that RESETS
+    * the chain state — s29's content-addressed recluster discipline:
+    * the fold content is deterministic from the survivor set, so racing
+    * folders stage identical bytes and losers adopt). Marker bodies stay
+    * bare dirs, published through [[AnnIndex.ensureGeneration]].
     * Readers walk generations ascending: edges accumulate, tombs mask
     * (an edge with EITHER endpoint dead is unreachable — the walk can
     * neither enter nor leave a dead node), a fold resets edges and
@@ -2281,35 +2234,10 @@ object Similarity {
       : Seq[String] = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val root = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(sys.props("java.io.tmpdir")),
-      s"graft-nswd-$tag-v1")
-    val fs = root.getFileSystem(graft.kv.HadoopConf.get)
-    val commits = new org.apache.hadoop.fs.Path(root, "commits")
-    def committed(g: Long): Option[String] =
-      if (graft.kv.CommitMarker.committedGenerations(fs, commits)
-          .contains(g))
-        Some(graft.kv.CommitMarker.read(fs,
-          new org.apache.hadoop.fs.Path(commits, g.toString)))
-      else None
+    val root = AnnIndex.indexBase("graft-nswd", d)
     def publish(g: Long, kind: String, df: => DataFrame): String =
-      committed(g).getOrElse {
-        val staged = new org.apache.hadoop.fs.Path(
-          root, s"data-g$g-${java.util.UUID.randomUUID()}")
-        df.write.mode("overwrite").parquet(staged.toString)
-        try {
-          graft.kv.CommitMarker.publish(fs,
-            new org.apache.hadoop.fs.Path(commits, g.toString),
-            s"$kind:$staged")
-          s"$kind:$staged"
-        } catch {
-          case _: graft.kv.PotTable.CommitConflict =>
-            fs.delete(staged, true)
-            committed(g).get
-        }
-      }
+      s"$kind:" + AnnIndex.ensureGeneration(s, root, g)(
+        df.write.mode("overwrite").parquet(_))
     val corpus = Tables.embeddings(s, d)
       .filter($"vec_id" % 101 =!= 7)
       .select($"vec_id", int8Code.as("code"), sigCol($"embedding").as("sig"))

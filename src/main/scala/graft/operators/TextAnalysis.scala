@@ -1172,7 +1172,7 @@ object TextAnalysis {
     * fixture dir in-process AND (r16) PUBLISHED as a persistent
     * artifact: the trained merge table is a tokenizer's durable output,
     * so it round-trips through a CommitMarker-CAS'd generation under a
-    * content-addressed tmpdir root (the AnnIndex persistence discipline
+    * content-addressed tmpdir root ([[AnnIndex.ensureGeneration]]
     * applied to the tokenizer — the fixture file's length+mtime is in
     * the key, so a driver regen can never serve stale rules). A second
     * PROCESS encodes (t22) by opening the artifact instead of re-running
@@ -1208,26 +1208,16 @@ object TextAnalysis {
     }.toSeq.sortBy(_._1)
   }
 
-  /** Open the published merge table, or train and publish it. */
+  /** Open the published merge table, or train and publish it. The
+    * committed body is the jsonl rules FILE itself (not a dir). */
   private[graft] def bpeTrainPersistent(s: SparkSession, d: String)
       : Seq[(Int, String, String, Long, Long)] = {
     val base = bpeArtifactBase(d)
     val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(base, "commits/1")
-    def fromArtifact(): Option[Seq[(Int, String, String, Long, Long)]] =
-      try {
-        if (fs.getFileStatus(marker).getLen > 0)
-          Some(bpeRulesFromJson(graft.kv.CommitMarker.read(
-            fs, new org.apache.hadoop.fs.Path(
-              graft.kv.CommitMarker.read(fs, marker)))))
-        else None // husk
-      } catch { case _: java.io.FileNotFoundException => None }
-    fromArtifact().getOrElse {
+    val rulesFile = AnnIndex.ensureGeneration(s, base, 1L) { staged =>
       val rules = bpeTrainUncached(s, d)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val staged = new org.apache.hadoop.fs.Path(
-        base, s"rules-${java.util.UUID.randomUUID()}.jsonl")
-      val out = fs.create(staged, false)
+      val out = fs.create(new org.apache.hadoop.fs.Path(staged), false)
       try out.write(rules.map { case (r, a, b, n, t) =>
         val o = mapper.createObjectNode()
         o.put("r", r); o.put("a", a); o.put("b", b)
@@ -1236,16 +1226,9 @@ object TextAnalysis {
       }.mkString("", "\n", "\n").getBytes(
         java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
-      try {
-        graft.kv.CommitMarker.publish(fs, marker, staged.toString)
-        rules
-      } catch {
-        case _: graft.kv.PotTable.CommitConflict =>
-          // lost the publish race: adopt the winner's (identical) rules
-          fs.delete(staged, false)
-          fromArtifact().getOrElse(rules)
-      }
     }
+    bpeRulesFromJson(graft.kv.CommitMarker.read(
+      fs, new org.apache.hadoop.fs.Path(rulesFile)))
   }
 
   private def bpeTrain(s: SparkSession, d: String)

@@ -140,7 +140,7 @@ object BucketedPotV2Source {
     val fs = new Path(root).getFileSystem(graft.kv.HadoopConf.get)
     existingBuckets(root, n).map { b =>
       val commits = new Path(new Path(bucketPot(root, b)).getParent, ".commits")
-      b -> (graft.kv.CommitMarker.committedGenerations(fs, commits) :+ 0L).max
+      b -> graft.kv.CommitMarker.head(fs, commits)
     }.toMap
   }
 

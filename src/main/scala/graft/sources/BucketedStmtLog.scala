@@ -378,7 +378,7 @@ private[graft] object BucketedStmtLog {
 
   /** Latest checkpoint epoch (0 = none). */
   private def ckptEpoch(fs: FileSystem, root: String): Long =
-    (graft.kv.CommitMarker.committedGenerations(fs, ckptDir(root)) :+ 0L).max
+    graft.kv.CommitMarker.head(fs, ckptDir(root))
 
   /** The checkpoint's retained windows + its total dropped count. */
   private def readCkpt(fs: FileSystem, root: String, epoch: Long)

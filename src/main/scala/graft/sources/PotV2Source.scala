@@ -308,8 +308,7 @@ object PotV2Source {
     // but the fence makes the serialization — and the audit horizon —
     // explicit, and is the hook concurrent maintenance tools key on)
     val fence = new Path(dir, ".vacuum")
-    val epoch = (graft.kv.CommitMarker
-      .committedGenerations(fs, fence) :+ 0L).max + 1
+    val epoch = graft.kv.CommitMarker.head(fs, fence) + 1
     try graft.kv.CommitMarker.publish(
       fs, new Path(fence, epoch.toString), s"fence@head=${gens.last}")
     catch {
@@ -377,10 +376,9 @@ object PotV2Source {
     Option(fs.globStatus(new Path(glob))).map(_.toSeq).getOrElse(Seq.empty)
       .filter(_.isFile).map(_.getPath).map { pot =>
         val commits = new Path(pot.getParent, ".commits")
-        val gens = graft.kv.CommitMarker.committedGenerations(fs, commits)
-        if (gens.isEmpty) s"$pot:legacy"
+        val head = graft.kv.CommitMarker.head(fs, commits)
+        if (head == 0L) s"$pot:legacy"
         else {
-          val head = gens.max
           val body = PotChain.artifactOf(fs, commits, head)
           if (body == null) s"$pot:legacy"
           else if (PotChain.isDgen(body)) s"$pot:delta_head"
@@ -441,11 +439,10 @@ object PotV2Source {
     Option(fs.globStatus(new Path(glob))).map(_.toSeq).getOrElse(Seq.empty)
       .filter(_.isFile).map(_.getPath).map { pot =>
         val commits = new Path(pot.getParent, ".commits")
-        val gens = graft.kv.CommitMarker.committedGenerations(fs, commits)
+        val head = graft.kv.CommitMarker.head(fs, commits)
         val status: String =
-          if (gens.isEmpty) "legacy"
+          if (head == 0L) "legacy"
           else {
-            val head = gens.max
             val body =
               try PotChain.artifactOf(fs, commits, head)
               catch { case scala.util.control.NonFatal(_) => null }
@@ -494,9 +491,8 @@ object PotV2Source {
       s"compactPot: one pot object, not a glob: $pot")
     val dir = new Path(pot).getParent
     val commits = new Path(dir, ".commits")
-    val gens = graft.kv.CommitMarker.committedGenerations(fs, commits)
-    if (gens.isEmpty) return None
-    val head = gens.max
+    val head = graft.kv.CommitMarker.head(fs, commits)
+    if (head == 0L) return None
     if (PotChain.isSnap(PotChain.artifactOf(fs, commits, head))) return None
     val qid = s"compact-${java.util.UUID.randomUUID()}"
     val w = new PotV2Write(pot, Schema, qid, truncateFirst = false,
@@ -2055,11 +2051,10 @@ private[graft] class PotV2Scan(
       require(!path.exists(c => "*?[{".contains(c)),
         s"PotV2Source: generation reads need ONE pot object, not a glob: $path")
       val commits = new Path(p.getParent, ".commits")
-      val marker = new Path(commits, g.toString)
-      require(graft.kv.CommitMarker.committedGenerations(fs, commits)
-          .contains(g),
-        s"PotV2Source: generation $g is not committed under $commits")
-      val body = graft.kv.CommitMarker.read(fs, marker)
+      val body = graft.kv.CommitMarker.bodyAt(fs, commits, g)
+        .getOrElse(throw new IllegalArgumentException(
+          "requirement failed: PotV2Source: generation " +
+            s"$g is not committed under $commits"))
       // retention guard (the PotTable.getAt contract brought to the SQL
       // path): a pinned generation whose needed bodies were vacuumed
       // fails loudly and NAMED at planning — never a raw executor
@@ -2126,8 +2121,7 @@ private[graft] class PotV2Scan(
         // stays the data.json path either way.
         val dir = new Path(f).getParent
         val commits = new Path(dir, ".commits")
-        val head = (graft.kv.CommitMarker
-          .committedGenerations(fs, commits) :+ 0L).max
+        val head = graft.kv.CommitMarker.head(fs, commits)
         val eff = caps.get(f).fold(head)(c => math.min(head, c))
         if (eff < head) {
           if (eff <= 0L) None
@@ -2268,8 +2262,7 @@ private[graft] class PotV2Scan(
               PotV2Filters.accepts(pushed, "pot_file", st.getPath.toString))
             .map { st =>
               val commits = new Path(st.getPath.getParent, ".commits")
-              val head = (graft.kv.CommitMarker
-                .committedGenerations(fs, commits) :+ 0L).max
+              val head = graft.kv.CommitMarker.head(fs, commits)
               val b = if (head > 0 &&
                   PotChain.isDgen(PotChain.artifactOf(fs, commits, head)))
                 foldBytes(commits, head)
@@ -3412,12 +3405,9 @@ private[graft] object PotV2Write {
   def latestSnapshot(
       fs: org.apache.hadoop.fs.FileSystem,
       commits: Path): Option[(Long, String)] = {
-    val gens = graft.kv.CommitMarker.committedGenerations(fs, commits)
-    if (gens.isEmpty) None
-    else {
-      val g = gens.max
-      Some((g, graft.kv.CommitMarker.read(fs, new Path(commits, g.toString))))
-    }
+    val g = graft.kv.CommitMarker.head(fs, commits)
+    if (g == 0L) None
+    else Some((g, graft.kv.CommitMarker.read(fs, new Path(commits, g.toString))))
   }
 
   /** Latest committed generation whose artifact is a FULL snapshot (the
@@ -3567,10 +3557,8 @@ private[graft] class PotChangesScan(
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(path)
     val fs = p.getFileSystem(graft.kv.HadoopConf.get)
-    def headOf(pot: Path): Long = {
-      val commits = new Path(pot.getParent, ".commits")
-      (graft.kv.CommitMarker.committedGenerations(fs, commits) :+ 0L).max
-    }
+    def headOf(pot: Path): Long =
+      graft.kv.CommitMarker.head(fs, new Path(pot.getParent, ".commits"))
     vector match {
       case Some(vec) =>
         // per-pot from-vector: qualified keys (matching globStatus and
@@ -3849,8 +3837,7 @@ private[graft] class PotV2MicroBatchStream(
   private def fs = new Path(path).getFileSystem(graft.kv.HadoopConf.get)
   private def commits = new Path(new Path(path).getParent, ".commits")
 
-  private def head: Long = (graft.kv.CommitMarker
-    .committedGenerations(fs, commits) :+ 0L).max
+  private def head: Long = graft.kv.CommitMarker.head(fs, commits)
 
   override def initialOffset(): Offset = PotGenOffset(0L)
   override def latestOffset(): Offset = PotGenOffset(head)
@@ -3961,8 +3948,7 @@ private[graft] class PotV2MultiPotStream(glob: String, required: StructType,
   override def latestOffset(): Offset = {
     val observed = pots().map { p =>
       val commits = new Path(p.getParent, ".commits")
-      p.toString ->
-        (graft.kv.CommitMarker.committedGenerations(fs, commits) :+ 0L).max
+      p.toString -> graft.kv.CommitMarker.head(fs, commits)
     }.toMap
     // Chain-regression guard: the monotone-chain assumption this vector
     // rests on is ASSERTED here, not assumed. A pot that is PRESENT in the

@@ -866,15 +866,17 @@ object StreamingQueries {
         val delta = batch.groupBy($"user_id".cast("string").as("key"))
           .agg(count(lit(1)).as("n"))
         if (delta.isEmpty) return
+        val g = pot.generation
         val merged =
-          if (pot.generation == 0L) delta
-          else pot.get().select($"key", $"n").unionByName(delta)
+          if (g == 0L) delta
+          else pot.getAt(g).select($"key", $"n").unionByName(delta)
             .groupBy($"key").agg(sum($"n").as("n"))
         // r20 opt: `merged` IS the complete next state (old ∪ delta summed),
         // so upsert's read-old + window-LWW pass is the identity on it —
         // replace commits the same rows at the same generation without the
-        // second read/merge (KvSpec pins replace ≡ upsert for full batches)
-        pot.replace(merged)
+        // second read/merge (KvSpec pins replace ≡ upsert for full batches);
+        // pinned to `g`, a commit that landed since the read conflicts
+        pot.replace(merged, g)
         meta.upsert(Seq(("applied", id)).toDF("key", "batch_id"))
         ()
       }

@@ -377,4 +377,36 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(first === second)
     assert(builds.get() === 1)
   }
+
+  test("two concurrent NSW graph publishers adopt one committed root; one data dir remains") {
+    // private fixture copy: the artifact root is keyed by the fixture dir
+    val dir = java.nio.file.Files.createTempDirectory("graft-nswpub")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf/embeddings.parquet"),
+      dir.resolve("embeddings.parquet"))
+    val d = dir.toString
+    val base = AnnIndex.indexBase("graft-nsw", d)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 to 2).map { _ =>
+      new Thread(() =>
+        try results.add(operators.Similarity.publishedNswGraph(spark, d))
+        catch { case e: Throwable => errors.add(e) })
+    }
+    try {
+      threads.foreach(_.start())
+      threads.foreach(_.join(180000))
+      assert(errors.isEmpty, s"publisher failed: ${errors.peek()}")
+      val Seq(r1, r2) = results.toArray(Array.empty[String]).toSeq
+      assert(r1 === r2, s"publishers disagree on the committed root: $r1 vs $r2")
+      assert(new Path(r1).getParent.toString === base.toString)
+      assert(spark.read.parquet(r1).count() > 0)
+      val dataDirs = fsFor(base).listStatus(base)
+        .filter(_.getPath.getName.startsWith("data-"))
+      assert(dataDirs.length === 1, s"orphan staging dir left: ${dataDirs.toSeq}")
+    } finally {
+      fsFor(base).delete(base, true)
+      new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+    }
+  }
 }

@@ -129,6 +129,17 @@ class KvSpec extends AnyFunSuite {
     assert(pot.generation === 1L)
     assert(pot.get().select("key", "v").as[(String, Int)].collect().toMap
       === Map("a" -> 1))
+    val commits = new org.apache.hadoop.fs.Path(s"$root/t/_commits")
+    assert(graft.kv.CommitMarker.head(fs, commits) === 1L)
+    assert(graft.kv.CommitMarker.bodyAt(fs, commits, 2L) === None)
+    assert(graft.kv.CommitMarker.bodyAt(fs, commits, 1L).isDefined)
+    // a reclaim file, even a non-empty one, is never a generation
+    val reclaim = new org.apache.hadoop.fs.Path(commits, "2.reclaim")
+    val out = fs.create(reclaim, false)
+    try out.write("x".getBytes("UTF-8")) finally out.close()
+    assert(graft.kv.CommitMarker.head(fs, commits) === 1L)
+    // planted for the check only: a real reclaimer creates it itself
+    fs.delete(reclaim, false)
 
     // the next writer reclaims the husk instead of being wedged forever
     pot.upsert(Seq(("b", 2)).toDF("key", "v"))
@@ -628,6 +639,21 @@ class KvSpec extends AnyFunSuite {
     new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }
 
+  test("replace at a stale base generation conflicts instead of dropping a concurrent commit") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.upsert(Seq(("a", 1L)).toDF("key", "n"))
+    // the caller reads its base, then another writer's commit lands
+    val g = pot.generation
+    val merged = pot.getAt(g).select($"key", ($"n" + 1).as("n"))
+    pot.upsert(Seq(("b", 2L)).toDF("key", "n"))
+    intercept[PotTable.CommitConflict](pot.replace(merged, g))
+    assert(pot.generation === g + 1)
+    assert(pot.get().select("key", "n").as[(String, Long)].collect().toMap
+      === Map("a" -> 1L, "b" -> 2L))
+    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
+  }
+
   test("replace == upsert for a batch covering every surviving key (r20 fast path)") {
     import spark.implicits._
     def state(p: graft.kv.PotTable) = p.get()
@@ -641,11 +667,11 @@ class KvSpec extends AnyFunSuite {
     // the additive-counter shape: the next batch contains EVERY key
     val w2 = Seq(("k1", 5L), ("k2", 2L), ("k3", 7L)).toDF("key", "n")
     a.upsert(w2)
-    b.replace(w2)
+    b.replace(w2, b.generation)
     assert(state(a) === state(b), "replace diverged from upsert on a covering batch")
     assert(a.generation === b.generation, "replace burned a different generation count")
     // and replace IS a replace: a key absent from the batch is dropped
-    b.replace(Seq(("k1", 9L)).toDF("key", "n"))
+    b.replace(Seq(("k1", 9L)).toDF("key", "n"), b.generation)
     assert(state(b) === Map("k1" -> 9L))
     Seq(rootA, rootB).foreach(p =>
       new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively())

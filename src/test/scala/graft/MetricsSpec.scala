@@ -54,10 +54,11 @@ class MetricsSpec extends AnyFunSuite {
       hist.keySet.contains("lock_ms_le_10000") &&
       hist.keySet.contains("lock_ms_gt_10000"), hist.toString)
     // engine-level: listener classifies the remove's rewrite as a write;
-    // callbacks fire async, so poll like the first test
+    // callbacks fire async, so poll like the first test — for the read as
+    // well, whose callback arrives after the remove's write
     val deadline = System.currentTimeMillis() + 10000
-    while (m.writes.sum() < 3 && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
+    while ((m.writes.sum() < 3 || m.reads.sum() < 1) &&
+      System.currentTimeMillis() < deadline) Thread.sleep(50)
     assert(m.snapshot("pot_writes") >= 3L, m.snapshot.toString)
     assert(m.snapshot("pot_reads") >= 1L, m.snapshot.toString)
   }

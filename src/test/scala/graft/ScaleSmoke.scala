@@ -186,13 +186,7 @@ object ScaleSmoke {
     // optional 3rd arg: reuse an existing replica dir (skip replication —
     // re-measuring after a noisy first pass shouldn't pay the write again)
     val reuse = args.drop(2).headOption
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session("32")
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
 
