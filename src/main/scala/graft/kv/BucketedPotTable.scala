@@ -1,9 +1,9 @@
 package graft.kv
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Bucketed pot: the 100 TB evolution of [[PotTable]].
   *
@@ -22,11 +22,19 @@ import org.apache.spark.sql.functions._
   *     |buckets| serial jobs;
   *   - the commit marker `_commits/<N>` contains the manifest
   *     `bucket:stagedPath` per line; a bucket emptied by a remove gets a
-  *     TOMBSTONE line `bucket:` so the overlay drops it;
+  *     TOMBSTONE line `bucket:` so the overlay drops it. One more line,
+  *     `schema:<json>`, holds the table schema after generation N (the
+  *     previous one widened by what N staged, `_b` excluded, every field
+  *     nullable as the parquet reader returns it);
   *   - readers resolve bucket i at generation G by overlaying manifests
-  *     1..G in order — the latest entry per bucket wins. Marker committed
-  *     (non-empty) => its staged dirs are complete; a losing writer deletes
-  *     only its own staging and can never clobber published data.
+  *     1..G in order — the latest entry per bucket wins, and the latest
+  *     schema line is the table's — then open the bucket dirs with that
+  *     schema, so no schema-inference job runs and a bucket staged before
+  *     a column was added reads null there. Manifests without a schema
+  *     line (stores written before it was recorded) read with inference.
+  *     Marker committed (non-empty) => its staged dirs are complete; a
+  *     losing writer deletes only its own staging and can never clobber
+  *     published data.
   *
   * `compact()` rewrites every live bucket at one generation (the
   * Spark-for-compaction role the north star assigns); `vacuum()` deletes
@@ -67,33 +75,61 @@ final class BucketedPotTable(
 
   private def markerPath(gen: Long) = new Path(commits, gen.toString)
 
-  /** Manifest lines `bucket:stagedPath` of committed generation `gen`
-    * (empty if absent or a husk); an empty path is a tombstone.
-    */
-  private def manifestAt(gen: Long): Map[Int, String] =
-    CommitMarker.bodyAt(fs, commits, gen).toSeq
-      .flatMap(_.split("\n")).filter(_.nonEmpty).map { line =>
-        val i = line.indexOf(':')
-        line.take(i).toInt -> line.drop(i + 1)
-      }.toMap
+  private val SchemaTag = "schema:"
 
-  /** bucket -> staged path as of `gen` (manifest overlay, oldest first;
-    * tombstoned buckets dropped after the overlay so a later tombstone
-    * shadows an earlier write).
+  /** Committed generation `gen`'s manifest (empty if absent or a husk):
+    * `bucket:stagedPath` lines, where an empty path is a tombstone, and
+    * the `schema:` line's JSON if there is one.
     */
-  private def resolve(gen: Long): Map[Int, String] =
-    (1L to gen).foldLeft(Map.empty[Int, String]) { (acc, g) =>
-      acc ++ manifestAt(g)
-    }.filter(_._2.nonEmpty)
+  private def manifestAt(gen: Long): (Map[Int, String], Option[String]) = {
+    val (schema, entries) = CommitMarker.bodyAt(fs, commits, gen).toSeq
+      .flatMap(_.split("\n")).filter(_.nonEmpty)
+      .partition(_.startsWith(SchemaTag))
+    (entries.map { line =>
+      val i = line.indexOf(':')
+      line.take(i).toInt -> line.drop(i + 1)
+    }.toMap, schema.lastOption.map(_.stripPrefix(SchemaTag)))
+  }
+
+  /** The table as of generation `gen`: its live bucket dirs and schema. */
+  private final class View(val dirs: Map[Int, String], val schema: Option[StructType]) {
+    def read(paths: Seq[String]): DataFrame = PotTable.scan(spark, schema, paths)
+
+    /** One multi-path scan over every live bucket dir. */
+    def all: DataFrame =
+      if (dirs.isEmpty) spark.emptyDataFrame else read(dirs.values.toSeq.sorted)
+  }
+
+  /** The view at `gen`: bucket -> staged path by manifest overlay (oldest
+    * first; tombstoned buckets dropped after the overlay so a later
+    * tombstone shadows an earlier write), and the latest recorded schema —
+    * both from the one walk over manifests 1..gen.
+    */
+  private def resolve(gen: Long): View = {
+    val (dirs, schema) = (1L to gen)
+      .foldLeft((Map.empty[Int, String], Option.empty[String])) {
+        case ((acc, s), g) =>
+          val (m, gs) = manifestAt(g)
+          (acc ++ m, gs.orElse(s))
+      }
+    new View(dirs.filter(_._2.nonEmpty), schema.map(PotTable.parseSchema))
+  }
+
+  /** The view a writer extends. A store written before schemas were
+    * recorded gets its schema merged from every live bucket once, so the
+    * first recorded schema keeps columns that only untouched buckets hold.
+    */
+  private def resolveForWrite(gen: Long): View = {
+    val v = resolve(gen)
+    if (v.schema.isDefined || v.dirs.isEmpty) v
+    else new View(v.dirs, Some(spark.read.option("mergeSchema", "true")
+      .parquet(v.dirs.values.toSeq.sorted: _*).schema))
+  }
 
   /** Full snapshot read at the current generation: one multi-path parquet
     * scan over every live bucket dir — read-parallel, no union overhead.
     */
-  def get(): DataFrame = {
-    val m = resolve(generation)
-    if (m.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(m.values.toSeq.sorted: _*)
-  }
+  def get(): DataFrame = resolve(generation).all
 
   /** TIME TRAVEL read (r14): the table's state at manifest generation
     * `gen` — the manifest overlay stops at `gen`, so the scan opens
@@ -108,9 +144,7 @@ final class BucketedPotTable(
         CommitMarker.bodyAt(fs, commits, gen).isDefined,
       s"bucketed pot $path: generation $gen is not committed " +
         s"(head is $generation) — never a stale/empty fallback")
-    val m = resolve(gen)
-    if (m.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(m.values.toSeq.sorted: _*)
+    resolve(gen).all
   }
 
   /** Point read: resolve `key`'s bucket driver-side (same xxhash64/pmod
@@ -123,14 +157,11 @@ final class BucketedPotTable(
     */
   def get(key: String): DataFrame = {
     import spark.implicits.StringToColumn
-    val m = resolve(generation)
-    if (m.isEmpty) return spark.emptyDataFrame
-    m.get(bucketOf(key)) match {
-      case Some(dir) =>
-        spark.read.parquet(dir).filter($"key" === key)
-      case None =>
-        spark.read.parquet(m.values.toSeq.sorted: _*)
-          .filter(org.apache.spark.sql.functions.lit(false))
+    val v = resolve(generation)
+    if (v.dirs.isEmpty) return spark.emptyDataFrame
+    v.dirs.get(bucketOf(key)) match {
+      case Some(dir) => v.read(Seq(dir)).filter($"key" === key)
+      case None      => v.all.filter(lit(false))
     }
   }
 
@@ -145,23 +176,26 @@ final class BucketedPotTable(
     (((h % buckets) + buckets) % buckets).toInt
   }
 
-  private def stageRoot(gen: Long): String =
-    s"$dir/data/g${gen}_${java.util.UUID.randomUUID()}"
-
-  /** Publish `stagedRoot`'s `_b=<i>` children as generation `expected`+1:
-    * manifest entries for every touched bucket, tombstones for touched
-    * buckets the staging job emptied (partitionBy writes no dir for them).
+  /** Stage `df` (it carries `_b` and every table column) under a
+    * writer-unique root, one `_b=<i>` child per touched bucket, and publish
+    * it as generation `expected`+1: manifest entries for every touched
+    * bucket, tombstones for touched buckets the staging job emptied
+    * (partitionBy writes no dir for them), and `df`'s schema as the table's.
     */
   private def commitStaged(
-      stagedRoot: String, touched: Seq[Int], expectedGen: Long): Long = {
+      df: DataFrame, touched: Seq[Int], expectedGen: Long): Long = {
     val next = expectedGen + 1
+    val stagedRoot = s"$dir/data/g${next}_${java.util.UUID.randomUUID()}"
+    df.repartition(touched.length, $"_b")
+      .write.partitionBy("_b").mode("errorifexists").parquet(stagedRoot)
     val written = fs.listStatus(new Path(stagedRoot)).toSeq
       .map(_.getPath.getName)
       .filter(_.startsWith("_b="))
       .map(_.stripPrefix("_b=").toInt).toSet
-    val body = touched.sorted
-      .map(b => if (written(b)) s"$b:$stagedRoot/_b=$b" else s"$b:")
-      .mkString("\n")
+    val schema = PotTable.readSchema(StructType(df.schema.filter(_.name != "_b")))
+    val body = (touched.sorted
+      .map(b => if (written(b)) s"$b:$stagedRoot/_b=$b" else s"$b:") :+
+      s"$SchemaTag${schema.json}").mkString("\n")
     fs.mkdirs(markerPath(next).getParent)
     // A12: time the publish CAS like PotTable.commit (lock-hold analogue)
     val t0 = System.nanoTime()
@@ -176,43 +210,34 @@ final class BucketedPotTable(
       .foreach(_.recordLockMs((System.nanoTime() - t0) / 1000000L))
   }
 
-  /** Read the current content of `buckets`, `_b` recomputed from the key
-    * (deterministic), as one multi-path scan.
+  /** Read the content of `buckets` in view `v`, `_b` recomputed from the
+    * key (deterministic), as one multi-path scan; with no live bucket among
+    * them, an empty frame with the table's schema.
     */
-  private def readBuckets(current: Map[Int, String], buckets: Seq[Int]): DataFrame =
-    spark.read.parquet(buckets.flatMap(current.get): _*)
-      .withColumn("_b", bucketCol)
+  private def readBuckets(v: View, buckets: Seq[Int]): DataFrame = {
+    val paths = buckets.flatMap(v.dirs.get)
+    if (paths.isEmpty) spark.createDataFrame(
+      java.util.List.of[Row](), v.schema.getOrElse(new StructType()))
+    else v.read(paths).withColumn("_b", bucketCol)
+  }
 
   /** Partition-scoped upsert: last-writer-wins merge, but ONLY the buckets
     * containing incoming keys are staged (one job) and republished. Returns
-    * the new generation (unchanged generation for an empty batch).
+    * the new generation (unchanged generation for an empty batch). A batch
+    * adding a column widens the table: untouched buckets read null there.
     */
   def upsert(docs: DataFrame): Long = {
     stampMeta()
     val gen = generation
-    val current = resolve(gen)
+    val v = resolveForWrite(gen)
     val stamped = docs
       .withColumn("_modified", current_timestamp())
       .withColumn("_b", bucketCol)
     // bucket IDs only — bounded by nBuckets, not by data size
     val touched = stamped.select($"_b").distinct().as[Int].collect().sorted.toSeq
     if (touched.isEmpty) return gen // empty batch: no-op, don't burn a generation
-    val incoming = stamped.withColumn("_src", lit(1))
-    val existing = touched.filter(current.contains)
-    val merged =
-      if (existing.isEmpty) incoming.drop("_src")
-      else {
-        val old = readBuckets(current, existing).withColumn("_src", lit(0))
-        val w = Window.partitionBy($"key").orderBy($"_src".desc)
-        incoming.unionByName(old)
-          .withColumn("_rn", row_number().over(w))
-          .filter($"_rn" === 1)
-          .drop("_rn", "_src")
-      }
-    val staged = stageRoot(gen + 1)
-    merged.repartition(touched.length, $"_b")
-      .write.partitionBy("_b").mode("errorifexists").parquet(staged)
-    commitStaged(staged, touched, gen)
+    commitStaged(
+      PotTable.lastWriterWins(stamped, readBuckets(v, touched)), touched, gen)
   }
 
   /** Multi-key delete — again only touched, existing buckets restage (one
@@ -223,17 +248,14 @@ final class BucketedPotTable(
     stampMeta()
     val gen = generation
     if (gen == 0L) return 0L
-    val current = resolve(gen)
+    val v = resolveForWrite(gen)
     val keysDf = keys.toDF("key").withColumn("_b", bucketCol)
     val touched = keysDf.select($"_b").distinct().as[Int].collect().sorted
-      .filter(current.contains).toSeq
+      .filter(v.dirs.contains).toSeq
     if (touched.isEmpty) return gen // nothing to delete: no-op
-    val remaining = readBuckets(current, touched)
-      .join(broadcast(keysDf.select($"key")), Seq("key"), "left_anti")
-    val staged = stageRoot(gen + 1)
-    remaining.repartition(touched.length, $"_b")
-      .write.partitionBy("_b").mode("errorifexists").parquet(staged)
-    commitStaged(staged, touched, gen)
+    commitStaged(readBuckets(v, touched)
+      .join(broadcast(keysDf.select($"key")), Seq("key"), "left_anti"),
+      touched, gen)
   }
 
   /** Predicate remove (r14): delete every document matching `pred`,
@@ -248,9 +270,9 @@ final class BucketedPotTable(
     stampMeta()
     val gen = generation
     if (gen == 0L) return 0L
-    val current = resolve(gen)
-    if (current.isEmpty) return gen
-    val touched = spark.read.parquet(current.values.toSeq.sorted: _*)
+    val v = resolveForWrite(gen)
+    if (v.dirs.isEmpty) return gen
+    val touched = v.all
       .filter(pred).withColumn("_b", bucketCol)
       .select($"_b").distinct().as[Int].collect().sorted.toSeq
     if (touched.isEmpty) return gen // nothing matches: no-op
@@ -258,11 +280,8 @@ final class BucketedPotTable(
     // then independent of bucket co-residency — a NULL-pred row in a touched
     // bucket survives the restage, matching the filter(pred) touch detection
     // (NULL = not matching) and SQL DELETE semantics.
-    val remaining = readBuckets(current, touched).filter(!coalesce(pred, lit(false)))
-    val staged = stageRoot(gen + 1)
-    remaining.repartition(touched.length, $"_b")
-      .write.partitionBy("_b").mode("errorifexists").parquet(staged)
-    commitStaged(staged, touched, gen)
+    commitStaged(readBuckets(v, touched).filter(!coalesce(pred, lit(false))),
+      touched, gen)
   }
 
   /** Compaction: restage every live bucket at one generation (one job),
@@ -274,14 +293,10 @@ final class BucketedPotTable(
     stampMeta()
     val gen = generation
     if (gen == 0L) return 0L
-    val current = resolve(gen)
-    if (current.isEmpty) return gen // fully-emptied table: nothing to compact
-    val live = current.keys.toSeq.sorted
-    val staged = stageRoot(gen + 1)
-    readBuckets(current, live)
-      .repartition(live.length, $"_b")
-      .write.partitionBy("_b").mode("errorifexists").parquet(staged)
-    commitStaged(staged, live, gen)
+    val v = resolveForWrite(gen)
+    if (v.dirs.isEmpty) return gen // fully-emptied table: nothing to compact
+    val live = v.dirs.keys.toSeq.sorted
+    commitStaged(readBuckets(v, live), live, gen)
   }
 
   /** Delete staged roots unreferenced by the manifests of the last
@@ -300,7 +315,7 @@ final class BucketedPotTable(
       if (hp.getName.startsWith("_b=")) hp.getParent.getName else hp.getName
     }
     val keep = (math.max(0L, gen - retainGenerations) to gen)
-      .flatMap(g => resolve(g).values)
+      .flatMap(g => resolve(g).dirs.values)
       .map(topSegment).toSet
     val StagedGen = "^g(\\d+)_.*".r
     fs.listStatus(dataRoot).foreach { st =>
@@ -451,7 +466,7 @@ final class BucketedPotTable(
     * test hook for asserting partition-scoped (not whole-table) rewrite.
     */
   def bucketsWrittenAt(gen: Long): Seq[Int] =
-    manifestAt(gen).keys.toSeq.sorted
+    manifestAt(gen)._1.keys.toSeq.sorted
 
   /** Online reshard: rewrite the table's current state into a NEW bucketed
     * table (same root, `path` = this table's path + the suffix) with a

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Pot-parity table layer: the reference's whole semantics re-expressed as
   * Spark dataflow over versioned parquet directories.
@@ -18,12 +19,17 @@ import org.apache.spark.sql.functions._
   *      `data/g<N>_<uuid>/` (no two writers ever touch the same files);
   *   2. it then attempts `FileSystem.create(_commits/<N>, overwrite=false)` —
   *      an atomic create-new, exactly pot's `.potlock` DoesNotExist
-  *      precondition (server.go:676) — writing the staged path as the
-  *      marker's content;
+  *      precondition (server.go:676) — the marker body is two lines: the
+  *      staged path, then the staged data's schema as JSON (the schema the
+  *      parquet reader returns: every field nullable, nested ones too);
   *   3. marker exists => its staged data is complete (written before), so
-  *      readers resolve generation N by reading the marker. A LOSING writer
-  *      only ever deletes its own staged directory — it can never clobber
-  *      the winner's published data.
+  *      readers resolve generation N by reading the marker, and open the
+  *      staged data with the recorded schema — no schema-inference job, the
+  *      way Delta readers take the table schema from the log's `metaData`
+  *      action. A marker holding only the path (stores written before the
+  *      schema was recorded) reads with inference. A LOSING writer only
+  *      ever deletes its own staged directory — it can never clobber the
+  *      winner's published data.
   *
   * Losing a commit race throws [[PotTable.CommitConflict]] — pot's 412/423.
   *
@@ -51,15 +57,26 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
   private def commits = new Path(s"$dir/_commits")
   private def markerPath(gen: Long) = new Path(commits, gen.toString)
 
-  private def readMarker(gen: Long): String =
-    CommitMarker.read(fs, markerPath(gen)).trim
+  /** Committed generation `gen` (empty at 0), opened with the schema its
+    * marker records. With `retained`, a generation whose staged data was
+    * vacuumed fails with [[PotTable.RetentionViolated]].
+    */
+  private def read(gen: Long, retained: Boolean = false): DataFrame =
+    if (gen == 0L) spark.emptyDataFrame
+    else {
+      val (staged, schema) =
+        PotTable.parseMarker(CommitMarker.read(fs, markerPath(gen)))
+      if (retained && !fs.exists(new Path(staged)))
+        throw new PotTable.RetentionViolated(
+          s"pot $path generation $gen: staged data was vacuumed — the " +
+            "retention window has passed this generation; pin vacuum's " +
+            "retainGenerations above the oldest generation readers still " +
+            s"need (current head is $generation)")
+      PotTable.scan(spark, schema, Seq(staged))
+    }
 
   /** Get == full-path scan of the current generation's staged data. */
-  def get(): DataFrame = {
-    val gen = generation
-    if (gen == 0L) spark.emptyDataFrame
-    else spark.read.parquet(readMarker(gen))
-  }
+  def get(): DataFrame = read(generation)
 
   /** Read a SPECIFIC committed generation (time travel). Works for any
     * generation whose staged data a vacuum retention window still holds
@@ -69,18 +86,7 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     * [[PotTable.RetentionViolated]] — loud and named, never Spark's bare
     * path-not-found (r13: the frontier-GC retention contract).
     */
-  def getAt(gen: Long): DataFrame =
-    if (gen == 0L) spark.emptyDataFrame
-    else {
-      val staged = readMarker(gen)
-      if (!fs.exists(new Path(staged)))
-        throw new PotTable.RetentionViolated(
-          s"pot $path generation $gen: staged data was vacuumed — the " +
-            "retention window has passed this generation; pin vacuum's " +
-            "retainGenerations above the oldest generation readers still " +
-            s"need (current head is $generation)")
-      spark.read.parquet(staged)
-    }
+  def getAt(gen: Long): DataFrame = read(gen, retained = true)
 
   /** Change feed between two committed generations (CDC): one row per key
     * whose document was added, removed, or changed from `fromGen` to
@@ -112,8 +118,9 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
       .select($"key", $"change")
   }
 
-  /** Stage `df` under a unique path, then atomically publish it as
-    * generation `expectedGen`+1 iff no other writer got there first.
+  /** Stage `df` under a unique path, then atomically publish it (path and
+    * schema) as generation `expectedGen`+1 iff no other writer got there
+    * first.
     */
   private def commit(df: DataFrame, expectedGen: Long): Long = {
     val next = expectedGen + 1
@@ -125,7 +132,8 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     // records elapsed ms unconditionally via defer, conflict or not)
     val t0 = System.nanoTime()
     try {
-      CommitMarker.publish(fs, markerPath(next), staged)
+      CommitMarker.publish(fs, markerPath(next),
+        s"$staged\n${PotTable.readSchema(df.schema).json}")
       next
     } catch {
       case e: CommitConflict =>
@@ -135,9 +143,10 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
       .foreach(_.recordLockMs((System.nanoTime() - t0) / 1000000L))
   }
 
-  /** Last-writer-wins merge of `docs` into the current map by `key` at the
-    * given base generation (server.go:385-393). One shuffle by key; new rows
-    * win over old via source-priority window dedup.
+  /** Last-writer-wins merge of `docs` into the map at the given base
+    * generation by `key` (server.go:385-393), at every generation including
+    * the first: a pot holds one document per key, so a batch repeating a
+    * key commits one of its rows.
     *
     * SCHEMA EVOLVES across generations (`allowMissingColumns`): the
     * reference's documents are schema-free JSON maps — a doc simply may or
@@ -146,22 +155,9 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     * there), and a batch missing a column leaves nulls for its OWN rows
     * (LWW replaces the whole document, pot-style; it does not column-merge).
     */
-  private def upsertAt(docs: DataFrame, gen: Long): Long = {
-    val stamped = docs
-      .withColumn("_modified", current_timestamp())
-      .withColumn("_src", lit(1))
-    val merged =
-      if (gen == 0L) stamped.drop("_src")
-      else {
-        val old = get().withColumn("_src", lit(0))
-        val w = Window.partitionBy($"key").orderBy($"_src".desc)
-        stamped.unionByName(old, allowMissingColumns = true)
-          .withColumn("_rn", row_number().over(w))
-          .filter($"_rn" === 1)
-          .drop("_rn", "_src")
-      }
-    commit(merged, gen)
-  }
+  private def upsertAt(docs: DataFrame, gen: Long): Long =
+    commit(PotTable.lastWriterWins(
+      docs.withColumn("_modified", current_timestamp()), read(gen)), gen)
 
   /** Upsert (Create/batch-Create, server.go:272-423). */
   def upsert(docs: DataFrame): Long = upsertAt(docs, generation)
@@ -197,7 +193,7 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     val gen = generation
     if (gen != 0L && callerGeneration != gen) {
       val nowMs = System.currentTimeMillis()
-      val conflicts = get()
+      val conflicts = read(gen)
         .join(docs.select($"key"), Seq("key"), "left_semi")
         .filter(unix_millis($"_modified") + leaseMs > nowMs)
         .limit(1).count()
@@ -219,7 +215,7 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     val gen = generation
     if (gen == 0L) return 0L
     val keysDf = keys.toDF("key")
-    commit(get().join(broadcast(keysDf), Seq("key"), "left_anti"), gen)
+    commit(read(gen).join(broadcast(keysDf), Seq("key"), "left_anti"), gen)
   }
 
   /** Predicate remove (r14 — the distributed sweep): delete every
@@ -236,7 +232,7 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     // SQL DELETE semantics: delete only rows where pred IS TRUE. A row whose
     // predicate evaluates to NULL must SURVIVE (`!pred` alone is NULL there,
     // which filter() drops — silent deletion).
-    commit(get().filter(!coalesce(pred, lit(false))), gen)
+    commit(read(gen).filter(!coalesce(pred, lit(false))), gen)
   }
 
   /** Admin recovery for a generation wedged by a crashed writer AND a
@@ -251,7 +247,7 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     */
   def snapshot(outDir: String): DataFrame = {
     val gen = generation
-    if (gen > 0L) get().write.mode("overwrite").parquet(s"$outDir/$path")
+    if (gen > 0L) read(gen).write.mode("overwrite").parquet(s"$outDir/$path")
     Seq((path, gen)).toDF("path", "generation")
   }
 
@@ -272,7 +268,7 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     // differences between marker content and FileStatus paths
     val keep = ((math.max(1L, gen - retainGenerations)) to gen)
       .flatMap(g => CommitMarker.bodyAt(fs, commits, g))
-      .map(b => new Path(b.trim).getName).toSet
+      .map(b => new Path(PotTable.parseMarker(b)._1).getName).toSet
     val StagedGen = "^g(\\d+)_.*".r
     fs.listStatus(dataRoot).foreach { st =>
       val name = st.getPath.getName
@@ -314,6 +310,56 @@ object PotTable {
 
   def apply(spark: SparkSession, root: String, path: String): PotTable =
     new PotTable(spark, root, path)
+
+  /** A marker body's staged path and recorded schema (None for a body
+    * holding only the path).
+    */
+  private[kv] def parseMarker(body: String): (String, Option[StructType]) = {
+    val lines = body.trim.split("\n", 2)
+    (lines(0).trim,
+      lines.lift(1).map(_.trim).filter(_.nonEmpty).map(parseSchema))
+  }
+
+  private[kv] def parseSchema(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  /** The schema `spark.read.parquet` returns for data written with
+    * `schema`: every field nullable, nested ones included (Spark's own
+    * `asNullable` is internal).
+    */
+  private[kv] def readSchema(schema: StructType): StructType =
+    nullable(schema).asInstanceOf[StructType]
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Parquet scan of `paths`: with a known schema Spark plans it without
+    * the schema-inference job; without one it infers, as before schemas
+    * were recorded.
+    */
+  private[kv] def scan(spark: SparkSession, schema: Option[StructType],
+      paths: Seq[String]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+
+  /** Last-writer-wins by `key`: one row per key, rows of `incoming` over
+    * rows of `old`. One shuffle by key; the union widens the schema
+    * (`allowMissingColumns`). Which of several `incoming` rows for one key
+    * survives is unspecified.
+    */
+  private[kv] def lastWriterWins(incoming: DataFrame, old: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("key")).orderBy(col("_src").desc)
+    incoming.withColumn("_src", lit(1))
+      .unionByName(old.withColumn("_src", lit(0)), allowMissingColumns = true)
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1)
+      .drop("_rn", "_src")
+  }
 
   /** Whole-warehouse snapshot (A7 parity — reference Zip archives the whole
     * bucket, server.go:550-614, re-triggered per write,

@@ -669,4 +669,134 @@ class BucketedPotSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSeq
     assert(again.forall(_.endsWith(":present")), s"second pass: $again")
   }
+
+  private def fsOf(root: String) = new org.apache.hadoop.fs.Path(root)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Generation `g`'s manifest lines. */
+  private def manifestLines(root: String, g: Long): Seq[String] =
+    graft.kv.CommitMarker.bodyAt(fsOf(root),
+      new org.apache.hadoop.fs.Path(s"$root/t/_commits"), g).get.split("\n").toSeq
+
+  private def recordedSchema(root: String, g: Long)
+      : Option[org.apache.spark.sql.types.StructType] =
+    manifestLines(root, g).find(_.startsWith("schema:")).map(l =>
+      org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("schema:"))
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+
+  test("upsert evolves schema: a new column widens the table, untouched buckets read null") {
+    val root = tmpRoot()
+    val pot = BucketedPotTable(spark, root, "t", nBuckets = 4)
+    pot.upsert((1 to 20).map(i => (s"k$i", i)).toDF("key", "v"))
+    // gen 2 adds column w to one key's bucket only
+    pot.upsert(Seq(("k1", 10, "x")).toDF("key", "v", "w"))
+    assert(pot.bucketsWrittenAt(2L).size === 1)
+    val g2 = pot.get().select($"key", $"v", $"w").as[(String, Int, Option[String])]
+      .collect().map { case (k, v, w) => k -> ((v, w)) }.toMap
+    assert(g2 === (1 to 20).map(i => s"k$i" -> ((i, None))).toMap
+      + ("k1" -> ((10, Some("x")))))
+    val untouched = (2 to 20).map(i => s"k$i")
+      .find(k => !pot.get(k).isEmpty && pot.get(k).columns.contains("w")).get
+    assert(pot.get(untouched).select("w").as[Option[String]].collect().toSeq
+      === Seq(None))
+    // whole-document LWW: the narrow re-write drops k1's w
+    pot.upsert(Seq(("k1", 100)).toDF("key", "v"))
+    assert(pot.get("k1").select($"v", $"w").as[(Int, Option[String])]
+      .collect().toSeq === Seq((100, None)))
+    // time travel: generation 1 still has the narrow schema
+    assert(!pot.getAt(1L).schema.fieldNames.contains("w"))
+  }
+
+  test("upsert keeps one row per key at every generation, the first included") {
+    val root = tmpRoot()
+    val pot = BucketedPotTable(spark, root, "t", nBuckets = 16)
+    pot.upsert(Seq(("k", 1), ("k", 2), ("j", 3)).toDF("key", "v"))
+    val first = pot.get().select("key", "v").as[(String, Int)].collect()
+    assert(first.map(_._1).sorted.toSeq === Seq("j", "k"))
+    assert(Set(1, 2).contains(first.toMap.apply("k")))
+    // duplicates landing in buckets no generation has written yet
+    val dups = (1 to 8).map(i => s"d$i")
+    pot.upsert((dups ++ dups).map(k => (k, 5)).toDF("key", "v"))
+    assert(pot.get().select("key").as[String].collect().sorted.toSeq
+      === (Seq("j", "k") ++ dups).sorted)
+  }
+
+  test("every writer records the table schema the parquet reader returns for its staged data") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val root = tmpRoot()
+    val pot = BucketedPotTable(spark, root, "t", nBuckets = 4)
+    val rich = (1 to 12).map(i =>
+      (s"k$i", s"$i.250", java.sql.Timestamp.valueOf(s"2024-01-${10 + i} 03:04:05"),
+        Seq(i, 2), Map("x" -> i), (i, Seq(("c", i.toLong)))))
+      .toDF("key", "d", "ts", "arr", "m", "st")
+      .withColumn("d", col("d").cast("decimal(12,3)"))
+      .withColumn("n", lit(5))
+    pot.upsert(rich)                                                    // gen 1
+    pot.upsert(Seq(("k1", "x")).toDF("key", "w"))                       // gen 2, widens
+    pot.remove(Seq("k2", "k3"))                                         // gen 3
+    pot.removeWhere(col("key") === "k4")                                // gen 4
+    pot.compact()                                                       // gen 5
+    assert(pot.generation === 5L)
+    (1L to 5L).foreach { g =>
+      val staged = manifestLines(root, g).filterNot(_.startsWith("schema:"))
+        .map(l => l.drop(l.indexOf(':') + 1)).find(_.nonEmpty).get
+      val stagedRoot = new org.apache.hadoop.fs.Path(staged).getParent.toString
+      val inferred = spark.read.parquet(stagedRoot).drop("_b").schema
+      assert(recordedSchema(root, g) === Some(inferred), s"generation $g")
+      assert(pot.getAt(g).schema === inferred, s"generation $g")
+    }
+    assert(recordedSchema(root, 2L).get.fieldNames.toSet ===
+      (rich.columns.toSet + "w" + "_modified"))
+    val cols = rich.columns.toSeq.map(col)
+    assert(pot.getAt(1L).select(cols: _*).collect().toSet === rich.collect().toSet)
+    // k1's whole document was replaced by gen 2's (key, w) row
+    assert(pot.get().filter(col("key") =!= "k1").select(cols: _*).collect().toSet
+      === rich.filter(!col("key").isin("k1", "k2", "k3", "k4")).collect().toSet)
+    assert(pot.get("k1").select($"w", $"d").as[(String, Option[BigDecimal])]
+      .collect().toSeq === Seq(("x", None)))
+  }
+
+  test("get, getAt and point get of a committed generation launch no Spark job") {
+    val root = tmpRoot()
+    val pot = BucketedPotTable(spark, root, "t", nBuckets = 4)
+    pot.upsert((1 to 20).map(i => (s"k$i", i)).toDF("key", "v"))
+    pot.upsert(Seq(("k1", 10)).toDF("key", "v"))
+    val (all, allJobs) = jobsDuring(pot.get())
+    val (first, firstJobs) = jobsDuring(pot.getAt(1L))
+    val (point, pointJobs) = jobsDuring(pot.get("k1"))
+    assert((allJobs, firstJobs, pointJobs) === ((0, 0, 0)))
+    assert(all.select("key", "v").as[(String, Int)].collect().toMap ===
+      (1 to 20).map(i => s"k$i" -> i).toMap + ("k1" -> 10))
+    assert(first.count() === 20L)
+    assert(point.select("v").as[Int].collect().toSeq === Seq(10))
+  }
+
+  test("manifests without a schema line (older stores) still read; the next write records the merged schema") {
+    val root = tmpRoot()
+    val pot = BucketedPotTable(spark, root, "t", nBuckets = 4)
+    pot.upsert((1 to 20).map(i => (s"k$i", i)).toDF("key", "v"))
+    pot.upsert(Seq(("k1", 10, "x")).toDF("key", "v", "w"))
+    val fs = fsOf(root)
+    (1L to 2L).foreach { g =>
+      val marker = new org.apache.hadoop.fs.Path(s"$root/t/_commits/$g")
+      val body = manifestLines(root, g).filterNot(_.startsWith("schema:"))
+      fs.delete(marker, false)
+      graft.kv.CommitMarker.publish(fs, marker, body.mkString("\n"))
+      assert(recordedSchema(root, g) === None)
+    }
+    val k1Bucket = pot.bucketsWrittenAt(2L).head
+    assert(pot.get().select("key", "v").as[(String, Int)].collect().toMap ===
+      (1 to 20).map(i => s"k$i" -> i).toMap + ("k1" -> 10))
+    assert(pot.get("k1").select("w").as[String].collect().toSeq === Seq("x"))
+    // a write to another bucket: w, held only by k1's bucket, stays
+    val other = (2 to 20).map(i => s"k$i").find { k =>
+      pot.upsert(Seq((k, 0)).toDF("key", "v"))
+      pot.bucketsWrittenAt(pot.generation) != Seq(k1Bucket)
+    }.get
+    assert(recordedSchema(root, pot.generation).get.fieldNames.contains("w"))
+    val state = pot.get().select($"key", $"w").as[(String, Option[String])]
+      .collect().toMap
+    assert(state("k1") === Some("x"))
+    assert(state(other) === None)
+  }
 }

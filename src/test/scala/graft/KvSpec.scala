@@ -676,4 +676,111 @@ class KvSpec extends AnyFunSuite {
     Seq(rootA, rootB).foreach(p =>
       new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively())
   }
+
+  private def fsOf(root: String) = new org.apache.hadoop.fs.Path(root)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Generation `g`'s marker body: the staged path, and the schema line if
+    * there is one.
+    */
+  private def markerAt(root: String, g: Long)
+      : (String, Option[org.apache.spark.sql.types.StructType]) = {
+    val body = graft.kv.CommitMarker.bodyAt(fsOf(root),
+      new org.apache.hadoop.fs.Path(s"$root/t/_commits"), g).get
+    val lines = body.split("\n", 2)
+    (lines(0), lines.lift(1).map(org.apache.spark.sql.types.DataType.fromJson(_)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]))
+  }
+
+  test("every writer records the schema the parquet reader returns for its staged data") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    // decimal, timestamp, array, map and a struct whose nested fields are
+    // non-nullable as written (tuple primitives; `n` is a non-null literal)
+    val rich = Seq(
+      ("a", "1.250", java.sql.Timestamp.valueOf("2024-01-02 03:04:05"),
+        Seq(1, 2), Map("x" -> 1), (7, Seq(("c", 1L)))),
+      ("b", "2.500", java.sql.Timestamp.valueOf("2024-05-06 07:08:09"),
+        Seq(3), Map("y" -> 2), (8, Seq.empty[(String, Long)])))
+      .toDF("key", "d", "ts", "arr", "m", "st")
+      .withColumn("d", col("d").cast("decimal(12,3)"))
+      .withColumn("n", lit(5))
+    assert(!rich.schema("n").nullable)
+    pot.upsert(rich)                                               // gen 1
+    pot.upsert(rich.filter(col("key") === "a").withColumn("w", lit("x"))) // widen
+    pot.upsert(Seq(("b", 9)).toDF("key", "n"))                     // narrow batch
+    pot.conditionalUpsert(Seq(("c", 1)).toDF("key", "n"), 0L, pot.generation)
+    pot.replace(Seq(("a", 1), ("b", 2), ("c", 3)).toDF("key", "n"), pot.generation)
+    pot.remove(Seq("a"))
+    pot.removeWhere(col("key") === "b")
+    assert(pot.generation === 7L)
+    (1L to 7L).foreach { g =>
+      val (staged, schema) = markerAt(root, g)
+      val inferred = spark.read.parquet(staged).schema
+      assert(schema === Some(inferred), s"generation $g")
+      assert(pot.getAt(g).schema === inferred, s"generation $g")
+    }
+    assert(markerAt(root, 2L)._2.get.fieldNames.contains("w"))
+    assert(!markerAt(root, 5L)._2.get.fieldNames.contains("d"))
+    val cols = rich.columns.toSeq.map(col)
+    assert(pot.getAt(1L).select(cols: _*).collect().toSet ===
+      rich.collect().toSet)
+    assert(pot.get().select("key", "n").as[(String, Int)].collect().toSeq
+      === Seq("c" -> 3))
+  }
+
+  test("get and getAt of a committed generation launch no Spark job") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.upsert(Seq(("a", 1), ("b", 2)).toDF("key", "v"))
+    pot.upsert(Seq(("a", 10)).toDF("key", "v"))
+    val (head, headJobs) = jobsDuring(pot.get())
+    val (first, firstJobs) = jobsDuring(pot.getAt(1L))
+    assert(headJobs === 0)
+    assert(firstJobs === 0)
+    assert(head.select("key", "v").as[(String, Int)].collect().toMap
+      === Map("a" -> 10, "b" -> 2))
+    assert(first.select("key", "v").as[(String, Int)].collect().toMap
+      === Map("a" -> 1, "b" -> 2))
+  }
+
+  test("a marker holding only the staged path (older stores) still reads; the next write records the schema") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.upsert(Seq(("a", 1), ("b", 2)).toDF("key", "v"))
+    pot.upsert(Seq(("a", 10)).toDF("key", "v"))
+    val fs = fsOf(root)
+    (1L to 2L).foreach { g =>
+      val marker = new org.apache.hadoop.fs.Path(s"$root/t/_commits/$g")
+      val staged = markerAt(root, g)._1
+      fs.delete(marker, false)
+      graft.kv.CommitMarker.publish(fs, marker, staged)
+      assert(markerAt(root, g) === ((staged, None)))
+    }
+    assert(pot.get().select("key", "v").as[(String, Int)].collect().toMap
+      === Map("a" -> 10, "b" -> 2))
+    assert(pot.getAt(1L).select("key", "v").as[(String, Int)].collect().toMap
+      === Map("a" -> 1, "b" -> 2))
+    pot.upsert(Seq(("c", 3)).toDF("key", "v"))
+    assert(markerAt(root, 3L)._2.exists(_.fieldNames.contains("v")))
+    // vacuum reads the older bodies' path as its keep set
+    pot.vacuum(retainGenerations = 1)
+    assert(pot.getAt(2L).select("key", "v").as[(String, Int)].collect().toMap
+      === Map("a" -> 10, "b" -> 2))
+    assert(pot.get().select("key", "v").as[(String, Int)].collect().toMap
+      === Map("a" -> 10, "b" -> 2, "c" -> 3))
+  }
+
+  test("upsert keeps one row per key at every generation, the first included") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.upsert(Seq(("k", 1), ("k", 2), ("j", 3)).toDF("key", "v"))
+    val first = pot.get().select("key", "v").as[(String, Int)].collect()
+    assert(first.map(_._1).sorted.toSeq === Seq("j", "k"))
+    assert(Set(1, 2).contains(first.toMap.apply("k")))
+    pot.upsert(Seq(("z", 9), ("z", 9)).toDF("key", "v"))
+    assert(pot.get().select("key").as[String].collect().sorted.toSeq
+      === Seq("j", "k", "z"))
+  }
 }

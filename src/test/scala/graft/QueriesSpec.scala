@@ -8,6 +8,42 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = Bench.session("4")
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the number of Spark jobs it launched on this
+    * thread. Jobs are matched by a job group set for the call; a fence job
+    * run afterwards in the same group bounds the count, because the
+    * listener bus delivers job starts in order.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val fence = "fence"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == group))
+          seen.add(p.flatMap(x => Option(x.getProperty("spark.job.description")))
+            .getOrElse(""))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "")
+      val r = body
+      sc.setJobDescription(fence)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.contains(fence) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(fence), "fence job never reached the listener")
+      import scala.jdk.CollectionConverters._
+      (r, seen.asScala.takeWhile(_ != fence).size)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 /** Every declared query runs, has the advertised shape, and (where the
