@@ -19,9 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *      `data/g<N>_<uuid>/` (no two writers ever touch the same files);
   *   2. it then attempts `FileSystem.create(_commits/<N>, overwrite=false)` —
   *      an atomic create-new, exactly pot's `.potlock` DoesNotExist
-  *      precondition (server.go:676) — the marker body is two lines: the
-  *      staged path, then the staged data's schema as JSON (the schema the
-  *      parquet reader returns: every field nullable, nested ones too);
+  *      precondition (server.go:676) — the marker body's first two lines
+  *      are the staged path, then the staged data's schema as JSON (the
+  *      schema the parquet reader returns: every field nullable, nested
+  *      ones too), and `txn` lines may follow (below);
   *   3. marker exists => its staged data is complete (written before), so
   *      readers resolve generation N by reading the marker, and open the
   *      staged data with the recorded schema — no schema-inference job, the
@@ -30,6 +31,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *      schema was recorded) reads with inference. A LOSING writer only
   *      ever deletes its own staged directory — it can never clobber the
   *      winner's published data.
+  *
+  * Application transactions (Delta's `txn` action): a [[replace]] may
+  * stamp an `(appId, version)` pair into the commit it makes, as a
+  * `txn:<appId>:<version>` line after the schema line. Every commit copies
+  * its parent marker's `txn` lines forward, replacing only its own appId's,
+  * so the head marker holds the latest version of every app — the way a
+  * Delta checkpoint keeps the latest `txn` per appId. An idempotent writer
+  * (st12's micro-batches) reads its last applied version with
+  * [[txnVersion]] — one marker read, no Spark job — and commits the data
+  * and the new version in ONE generation, so no crash can separate them.
   *
   * Losing a commit race throws [[PotTable.CommitConflict]] — pot's 412/423.
   *
@@ -57,23 +68,32 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
   private def commits = new Path(s"$dir/_commits")
   private def markerPath(gen: Long) = new Path(commits, gen.toString)
 
+  /** Generation `gen`'s parsed marker; the empty pot's at 0. */
+  private def marker(gen: Long): PotTable.Marker =
+    if (gen == 0L) PotTable.Marker("", None, Map.empty)
+    else PotTable.parseMarker(CommitMarker.read(fs, markerPath(gen)))
+
   /** Committed generation `gen` (empty at 0), opened with the schema its
-    * marker records. With `retained`, a generation whose staged data was
-    * vacuumed fails with [[PotTable.RetentionViolated]].
+    * marker records, and the `txn` versions that marker carries. With
+    * `retained`, a generation whose staged data was vacuumed fails with
+    * [[PotTable.RetentionViolated]].
     */
-  private def read(gen: Long, retained: Boolean = false): DataFrame =
-    if (gen == 0L) spark.emptyDataFrame
+  private def state(gen: Long, retained: Boolean = false)
+      : (DataFrame, Map[String, Long]) =
+    if (gen == 0L) (spark.emptyDataFrame, Map.empty)
     else {
-      val (staged, schema) =
-        PotTable.parseMarker(CommitMarker.read(fs, markerPath(gen)))
-      if (retained && !fs.exists(new Path(staged)))
+      val m = marker(gen)
+      if (retained && !fs.exists(new Path(m.staged)))
         throw new PotTable.RetentionViolated(
           s"pot $path generation $gen: staged data was vacuumed — the " +
             "retention window has passed this generation; pin vacuum's " +
             "retainGenerations above the oldest generation readers still " +
             s"need (current head is $generation)")
-      PotTable.scan(spark, schema, Seq(staged))
+      (PotTable.scan(spark, m.schema, Seq(m.staged)), m.txns)
     }
+
+  private def read(gen: Long, retained: Boolean = false): DataFrame =
+    state(gen, retained)._1
 
   /** Get == full-path scan of the current generation's staged data. */
   def get(): DataFrame = read(generation)
@@ -87,6 +107,12 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     * path-not-found (r13: the frontier-GC retention contract).
     */
   def getAt(gen: Long): DataFrame = read(gen, retained = true)
+
+  /** The version application `appId` last committed with [[replace]], as
+    * recorded in the head marker; None if it never did. One head lookup
+    * and one marker read — no Spark job.
+    */
+  def txnVersion(appId: String): Option[Long] = marker(generation).txns.get(appId)
 
   /** Change feed between two committed generations (CDC): one row per key
     * whose document was added, removed, or changed from `fromGen` to
@@ -118,11 +144,12 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
       .select($"key", $"change")
   }
 
-  /** Stage `df` under a unique path, then atomically publish it (path and
-    * schema) as generation `expectedGen`+1 iff no other writer got there
-    * first.
+  /** Stage `df` under a unique path, then atomically publish it (path,
+    * schema and `txns`, the parent's carried forward) as generation
+    * `expectedGen`+1 iff no other writer got there first.
     */
-  private def commit(df: DataFrame, expectedGen: Long): Long = {
+  private def commit(df: DataFrame, expectedGen: Long,
+      txns: Map[String, Long]): Long = {
     val next = expectedGen + 1
     val staged = s"$dir/data/g${next}_${java.util.UUID.randomUUID()}"
     df.write.mode("errorifexists").parquet(staged)
@@ -133,7 +160,9 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     val t0 = System.nanoTime()
     try {
       CommitMarker.publish(fs, markerPath(next),
-        s"$staged\n${PotTable.readSchema(df.schema).json}")
+        (Seq(staged, PotTable.readSchema(df.schema).json) ++
+          txns.toSeq.sorted.map { case (app, v) => s"txn:$app:$v" })
+          .mkString("\n"))
       next
     } catch {
       case e: CommitConflict =>
@@ -155,9 +184,11 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     * there), and a batch missing a column leaves nulls for its OWN rows
     * (LWW replaces the whole document, pot-style; it does not column-merge).
     */
-  private def upsertAt(docs: DataFrame, gen: Long): Long =
+  private def upsertAt(docs: DataFrame, gen: Long): Long = {
+    val (old, txns) = state(gen)
     commit(PotTable.lastWriterWins(
-      docs.withColumn("_modified", current_timestamp()), read(gen)), gen)
+      docs.withColumn("_modified", current_timestamp()), old), gen, txns)
+  }
 
   /** Upsert (Create/batch-Create, server.go:272-423). */
   def upsert(docs: DataFrame): Long = upsertAt(docs, generation)
@@ -174,10 +205,17 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     * `expectedGen` is the generation the caller built `docs` from: if
     * another commit landed since, this throws [[PotTable.CommitConflict]]
     * instead of overwriting it.
+    *
+    * `txn = Some(appId -> version)` records that version for `appId` in
+    * the same commit (Delta's `txn` action); [[txnVersion]] reads it back.
+    * A commit that loses the CAS records nothing.
     */
-  def replace(docs: DataFrame, expectedGen: Long): Long = {
+  def replace(docs: DataFrame, expectedGen: Long,
+      txn: Option[(String, Long)] = None): Long = {
+    txn.foreach { case (app, _) =>
+      require(app.nonEmpty && !app.contains('\n'), s"txn appId '$app'") }
     val stamped = docs.withColumn("_modified", current_timestamp())
-    commit(stamped, expectedGen)
+    commit(stamped, expectedGen, marker(expectedGen).txns ++ txn)
   }
 
   /** Conditional write (WithNoRewrite + WithRewriteGeneration,
@@ -214,8 +252,9 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     graft.Metrics.of(spark).foreach(_.recordRemove())
     val gen = generation
     if (gen == 0L) return 0L
-    val keysDf = keys.toDF("key")
-    commit(read(gen).join(broadcast(keysDf), Seq("key"), "left_anti"), gen)
+    val (old, txns) = state(gen)
+    commit(old.join(broadcast(keys.toDF("key")), Seq("key"), "left_anti"),
+      gen, txns)
   }
 
   /** Predicate remove (r14 — the distributed sweep): delete every
@@ -232,7 +271,8 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     // SQL DELETE semantics: delete only rows where pred IS TRUE. A row whose
     // predicate evaluates to NULL must SURVIVE (`!pred` alone is NULL there,
     // which filter() drops — silent deletion).
-    commit(read(gen).filter(!coalesce(pred, lit(false))), gen)
+    val (old, txns) = state(gen)
+    commit(old.filter(!coalesce(pred, lit(false))), gen, txns)
   }
 
   /** Admin recovery for a generation wedged by a crashed writer AND a
@@ -245,10 +285,17 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
   /** Snapshot/export (Zip, server.go:550-614): materialize the current
     * version to an export directory. Returns the manifest.
     */
-  def snapshot(outDir: String): DataFrame = {
+  def snapshot(outDir: String): DataFrame =
+    Seq((path, exportTo(outDir))).toDF("path", "generation")
+
+  /** Write the current generation to `outDir/<path>`, reading the very
+    * generation it returns (a commit landing meanwhile is not exported
+    * under the older number).
+    */
+  private[kv] def exportTo(outDir: String): Long = {
     val gen = generation
     if (gen > 0L) read(gen).write.mode("overwrite").parquet(s"$outDir/$path")
-    Seq((path, gen)).toDF("path", "generation")
+    gen
   }
 
   /** Delete staged data directories no marker references (lost races,
@@ -268,7 +315,7 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     // differences between marker content and FileStatus paths
     val keep = ((math.max(1L, gen - retainGenerations)) to gen)
       .flatMap(g => CommitMarker.bodyAt(fs, commits, g))
-      .map(b => new Path(PotTable.parseMarker(b)._1).getName).toSet
+      .map(b => new Path(PotTable.parseMarker(b).staged).getName).toSet
     val StagedGen = "^g(\\d+)_.*".r
     fs.listStatus(dataRoot).foreach { st =>
       val name = st.getPath.getName
@@ -311,13 +358,23 @@ object PotTable {
   def apply(spark: SparkSession, root: String, path: String): PotTable =
     new PotTable(spark, root, path)
 
-  /** A marker body's staged path and recorded schema (None for a body
-    * holding only the path).
+  /** A parsed marker body: the staged path, the recorded schema (None in
+    * stores written before it was), and the `txn` versions by appId.
     */
-  private[kv] def parseMarker(body: String): (String, Option[StructType]) = {
-    val lines = body.trim.split("\n", 2)
-    (lines(0).trim,
-      lines.lift(1).map(_.trim).filter(_.nonEmpty).map(parseSchema))
+  private[kv] final case class Marker(staged: String,
+      schema: Option[StructType], txns: Map[String, Long])
+
+  /** Line 1 is the staged path, every `txn:<appId>:<version>` line a txn,
+    * and the remaining line, if any, the schema.
+    */
+  private[kv] def parseMarker(body: String): Marker = {
+    val lines = body.trim.split("\n").map(_.trim)
+    val (txnLines, rest) = lines.drop(1).partition(_.startsWith("txn:"))
+    val txns = txnLines.map { l =>
+      val at = l.lastIndexOf(':')
+      l.substring(4, at) -> l.substring(at + 1).toLong
+    }.toMap
+    Marker(lines(0), rest.find(_.nonEmpty).map(parseSchema), txns)
   }
 
   private[kv] def parseSchema(json: String): StructType =
@@ -372,13 +429,9 @@ object PotTable {
     */
   def snapshotAll(spark: SparkSession, root: String, outDir: String): DataFrame = {
     import spark.implicits._
-    val rows = listPaths(spark, root).map { p =>
-      val t = PotTable(spark, root, p)
-      val gen = t.generation
-      if (gen > 0L) t.get().write.mode("overwrite").parquet(s"$outDir/$p")
-      (p, gen)
-    }
-    val manifest = rows.toDF("path", "generation")
+    val manifest = listPaths(spark, root)
+      .map(p => (p, PotTable(spark, root, p).exportTo(outDir)))
+      .toDF("path", "generation")
     manifest.coalesce(1).write.mode("overwrite").parquet(s"$outDir/_manifest")
     bundle(spark, outDir)
     manifest
@@ -509,8 +562,9 @@ object PotTable {
         .select($"path", $"generation").as[(String, Long)].collect().sorted
       manifest.map { case (p, srcGen) =>
         val t = PotTable(spark, newRoot, p)
-        if (srcGen > 0L) t.upsert(spark.read.parquet(s"$tmp/$p"))
-        (p, srcGen, t.generation)
+        (p, srcGen,
+          if (srcGen > 0L) t.upsert(spark.read.parquet(s"$tmp/$p"))
+          else t.generation)
       }
     }
     rows.toSeq.toDF("path", "source_generation", "restored_generation")

@@ -842,44 +842,27 @@ object StreamingQueries {
 
   /** st12: streaming ADDITIVE aggregation into a pot — the running-counter
     * shape st9's LWW upsert cannot express (st9's `n` is the LAST batch's
-    * count; here `n` accumulates across every batch). Each micro-batch
-    * union+re-sums its delta into the pot map through the normal CAS
-    * (one generation per batch), and a BATCH-ID FENCE in a sibling meta
-    * pot makes the apply idempotent: foreachBatch replays (checkpoint
-    * recovery re-delivers the last batch) hit `id <= applied` and
-    * short-circuit — without the fence an additive merge double-counts,
-    * which is exactly why exactly-once counters need more than LWW. The
-    * query PROVES the fence by replaying the final wave after the stream
-    * drains: the emitted counts still hash-match the batch oracle.
+    * count; here `n` accumulates across every batch). Each micro-batch is
+    * ONE commit ([[applyCounts]]): the re-summed counts and the batch id,
+    * recorded as the pot's `txn` version for "st12" (Delta's app-id/version
+    * action), land in the same CAS'd generation. The batch-id fence makes
+    * the apply idempotent: foreachBatch replays (checkpoint recovery
+    * re-delivers the last batch) hit `id <= applied` and short-circuit —
+    * without the fence an additive merge double-counts, which is exactly
+    * why exactly-once counters need more than LWW — and since the fence
+    * and the counts commit together, no crash can land one without the
+    * other. The query PROVES the fence by replaying the final wave after
+    * the stream drains: the emitted counts still hash-match the batch
+    * oracle.
     */
   def streamAdditiveCounts(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val stage = waveStageDir(s, d)
     Scratch.withDir("graft-st12-pot") { potRoot =>
       val pot = graft.kv.PotTable(s, potRoot, "counts")
-      val meta = graft.kv.PotTable(s, potRoot, "counts_meta")
-      def appliedUpTo(): Long =
-        if (meta.generation == 0L) -1L
-        else meta.get().select(max($"batch_id")).as[Long].collect().head
-      def applyBatch(batch: DataFrame, id: Long): Unit = {
-        if (id <= appliedUpTo()) return // replay fence (idempotent apply)
-        val delta = batch.groupBy($"user_id".cast("string").as("key"))
-          .agg(count(lit(1)).as("n"))
-        if (delta.isEmpty) return
-        val g = pot.generation
-        val merged =
-          if (g == 0L) delta
-          else pot.getAt(g).select($"key", $"n").unionByName(delta)
-            .groupBy($"key").agg(sum($"n").as("n"))
-        // r20 opt: `merged` IS the complete next state (old ∪ delta summed),
-        // so upsert's read-old + window-LWW pass is the identity on it —
-        // replace commits the same rows at the same generation without the
-        // second read/merge (KvSpec pins replace ≡ upsert for full batches);
-        // pinned to `g`, a commit that landed since the read conflicts
-        pot.replace(merged, g)
-        meta.upsert(Seq(("applied", id)).toDF("key", "batch_id"))
-        ()
-      }
+      def appliedUpTo(): Long = pot.txnVersion("st12").getOrElse(-1L)
+      def applyBatch(batch: DataFrame, id: Long): Unit =
+        applyCounts(pot, "st12")(batch, id)
       Scratch.withDir("graft-st12", ram = true) { chk =>
         withStreamRunConf(s) {
           val q = s.readStream
@@ -906,6 +889,29 @@ object StreamingQueries {
         .orderBy($"user_id")
         .localCheckpoint(true)
     }
+  }
+
+  /** Apply micro-batch `id` (rows with a `user_id`) to the additive
+    * per-user counter `pot`, at most once per `id`: the counts and `id`, as
+    * `appId`'s txn version, commit as one generation, and a batch whose id
+    * the head already records is skipped. The base generation is read
+    * before the fence, so a commit landing in between makes the replace
+    * conflict instead of applying the batch twice. Old counts and the raw
+    * batch, each row counting 1, are summed in one aggregation; the sum
+    * holds every key, so `replace` commits it as the whole next state
+    * without upsert's read-old + LWW pass.
+    */
+  private[graft] def applyCounts(pot: graft.kv.PotTable, appId: String)(
+      batch: DataFrame, id: Long): Unit = {
+    val g = pot.generation
+    if (id <= pot.txnVersion(appId).getOrElse(-1L) || batch.isEmpty) return
+    val ones = batch.select(col("user_id").cast("string").as("key"),
+      lit(1L).as("n"))
+    val rows =
+      if (g == 0L) ones
+      else pot.getAt(g).select("key", "n").unionByName(ones)
+    pot.replace(rows.groupBy("key").agg(sum("n").as("n")), g, Some(appId -> id))
+    ()
   }
 
   /** Oracle: total per-user counts (what additive merge must land on —

@@ -681,13 +681,13 @@ class KvSpec extends AnyFunSuite {
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Generation `g`'s marker body: the staged path, and the schema line if
-    * there is one.
+    * there is one (`txn` lines, if any, follow it).
     */
   private def markerAt(root: String, g: Long)
       : (String, Option[org.apache.spark.sql.types.StructType]) = {
     val body = graft.kv.CommitMarker.bodyAt(fsOf(root),
       new org.apache.hadoop.fs.Path(s"$root/t/_commits"), g).get
-    val lines = body.split("\n", 2)
+    val lines = body.split("\n")
     (lines(0), lines.lift(1).map(org.apache.spark.sql.types.DataType.fromJson(_)
       .asInstanceOf[org.apache.spark.sql.types.StructType]))
   }
@@ -770,6 +770,87 @@ class KvSpec extends AnyFunSuite {
       === Map("a" -> 10, "b" -> 2))
     assert(pot.get().select("key", "v").as[(String, Int)].collect().toMap
       === Map("a" -> 10, "b" -> 2, "c" -> 3))
+  }
+
+  private def counts(p: PotTable): Map[String, Long] =
+    p.get().select("key", "n").as[(String, Long)].collect().toMap
+
+  test("replace records a txn version; txnVersion reads it back with no Spark job") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    assert(pot.txnVersion("app") === None)
+    pot.replace(Seq(("a", 1L)).toDF("key", "n"), 0L, Some("app" -> 0L))
+    pot.replace(Seq(("a", 2L)).toDF("key", "n"), 1L, Some("app" -> 7L))
+    val (v, jobs) = jobsDuring(pot.txnVersion("app"))
+    assert(v === Some(7L))
+    assert(jobs === 0)
+    assert(pot.txnVersion("other") === None)
+    assert(counts(pot) === Map("a" -> 2L))
+    assert(pot.getAt(1L).schema === pot.get().schema)
+  }
+
+  test("txn versions carry forward through upsert, remove, removeWhere and replace; appIds are independent") {
+    import org.apache.spark.sql.functions.col
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.replace(Seq(("a", 1L), ("b", 2L)).toDF("key", "n"), 0L, Some("x" -> 3L))
+    pot.replace(Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("key", "n"), 1L,
+      Some("y" -> 10L))
+    pot.upsert(Seq(("d", 4L)).toDF("key", "n"))
+    pot.remove(Seq("a"))
+    pot.removeWhere(col("key") === "b")
+    pot.conditionalUpsert(Seq(("e", 5L)).toDF("key", "n"), 0L, pot.generation)
+    pot.replace(Seq(("c", 9L)).toDF("key", "n"), pot.generation)
+    assert(pot.generation === 7L)
+    assert(pot.txnVersion("x") === Some(3L))
+    assert(pot.txnVersion("y") === Some(10L))
+    // a later version of one app replaces its own line only
+    pot.replace(Seq(("c", 9L)).toDF("key", "n"), pot.generation, Some("x" -> 4L))
+    assert(pot.txnVersion("x") === Some(4L))
+    assert(pot.txnVersion("y") === Some(10L))
+    assert(counts(pot) === Map("c" -> 9L))
+  }
+
+  test("a replace that loses its CAS leaves the txn version unchanged") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.replace(Seq(("a", 1L)).toDF("key", "n"), 0L, Some("app" -> 1L))
+    val g = pot.generation
+    pot.upsert(Seq(("b", 2L)).toDF("key", "n")) // lands after the caller read g
+    intercept[PotTable.CommitConflict](
+      pot.replace(Seq(("a", 5L)).toDF("key", "n"), g, Some("app" -> 2L)))
+    assert(pot.txnVersion("app") === Some(1L))
+    assert(counts(pot) === Map("a" -> 1L, "b" -> 2L))
+  }
+
+  test("markers of one or two lines (older stores) carry no txn version") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.upsert(Seq(("a", 1L)).toDF("key", "n"))
+    assert(pot.txnVersion("app") === None) // path and schema lines
+    val fs = fsOf(root)
+    val marker = new org.apache.hadoop.fs.Path(s"$root/t/_commits/1")
+    val staged = markerAt(root, 1L)._1
+    fs.delete(marker, false)
+    graft.kv.CommitMarker.publish(fs, marker, staged)
+    assert(pot.txnVersion("app") === None) // path only
+    assert(counts(pot) === Map("a" -> 1L))
+    pot.replace(Seq(("a", 2L)).toDF("key", "n"), 1L, Some("app" -> 0L))
+    assert(pot.txnVersion("app") === Some(0L))
+  }
+
+  test("vacuum keeps the staged data of markers that carry txn lines") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    (0L to 2L).foreach(v =>
+      pot.replace(Seq(("a", v)).toDF("key", "n"), v, Some("app" -> v)))
+    pot.vacuum(retainGenerations = 1)
+    def dataDirs = new java.io.File(s"$root/t/data").listFiles()
+      .map(_.getName).filter(_.startsWith("g")).toSet
+    assert(dataDirs === Set(2L, 3L).map(g => new java.io.File(markerAt(root, g)._1).getName))
+    assert(pot.getAt(2L).select("n").as[Long].collect().toSeq === Seq(1L))
+    assert(counts(pot) === Map("a" -> 2L))
+    assert(pot.txnVersion("app") === Some(2L))
   }
 
   test("upsert keeps one row per key at every generation, the first included") {

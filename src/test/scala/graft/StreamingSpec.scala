@@ -444,6 +444,66 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  private def counterState(pot: graft.kv.PotTable) = {
+    import spark.implicits._
+    (pot.get().select("key", "n").as[(String, Long)].collect().toMap,
+      pot.generation, pot.txnVersion("st12"))
+  }
+
+  test("st12 fence: a replayed batch id leaves the counts and the generation unchanged") {
+    import spark.implicits._
+    Scratch.withDir("graft-st12-fence") { root =>
+      val pot = graft.kv.PotTable(spark, root, "counts")
+      val apply = graft.streaming.StreamingQueries.applyCounts(pot, "st12") _
+      val b0 = Seq(1L, 1L, 2L).toDF("user_id")
+      val b1 = Seq(2L, 3L).toDF("user_id")
+      apply(b0, 0L)
+      apply(b1, 1L)
+      val want = (Map("1" -> 2L, "2" -> 2L, "3" -> 1L), 2L, Some(1L))
+      assert(counterState(pot) === want)
+      apply(b1, 1L) // checkpoint recovery redelivers the last batch
+      apply(b0, 0L)
+      assert(counterState(pot) === want)
+    }
+  }
+
+  test("st12 fence: a batch whose commit landed before its caller died is not re-applied on restart") {
+    import spark.implicits._
+    Scratch.withDir("graft-st12-crash") { root =>
+      val src = s"$root/src"
+      Seq(Seq(1L, 1L, 2L), Seq(2L, 3L)).zipWithIndex.foreach { case (ids, k) =>
+        ids.toDF("user_id").coalesce(1).write.parquet(s"$root/w$k")
+        val part = new java.io.File(s"$root/w$k").listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        val f = new java.io.File(s"$src/b$k.parquet")
+        f.getParentFile.mkdirs()
+        java.nio.file.Files.move(part.toPath, f.toPath)
+        f.setLastModified(10000L * (k + 1)) // batch order = file order
+      }
+      val pot = graft.kv.PotTable(spark, root, "counts")
+      val died = new java.util.concurrent.atomic.AtomicBoolean(false)
+      def run(): Unit = {
+        val q = spark.readStream.schema("user_id BIGINT")
+          .option("maxFilesPerTrigger", "1").parquet(src)
+          .writeStream.option("checkpointLocation", s"$root/chk")
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+            graft.streaming.StreamingQueries.applyCounts(pot, "st12")(batch, id)
+            // the commit of batch 1 has landed; the sink dies before the
+            // stream records the batch as done
+            if (id == 1L && !died.getAndSet(true))
+              throw new IllegalStateException("sink died after its commit")
+          }
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+      val want = (Map("1" -> 2L, "2" -> 2L, "3" -> 1L), 2L, Some(1L))
+      assert(counterState(pot) === want)
+      run() // restart: the stream re-runs batch 1 from its offset log
+      assert(counterState(pot) === want)
+    }
+  }
+
   test("st23 packing stream: open bin carries across micro-batches, " +
     "closes on overflow, trailing bin never emits (r16)") {
     import spark.implicits._
