@@ -588,8 +588,9 @@ object Aggregates {
     *
     * Scale: equi-width is one partial-aggregating groupBy (bin count is
     * value-bounded). The exact NTILE goes through [[DistRank]]'s
-    * distributed rank (price-range buckets + broadcast offsets) — exact
-    * same values as a flat window, no single-partition stage.
+    * distributed rank ((price, orderkey) range partitions + per-partition
+    * offsets) — exact same values as a flat window, no single-partition
+    * stage.
     */
   def histograms(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -1,432 +1,97 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.NumericType
 
 /** Exact global ROW_NUMBER / NTILE without a single-partition window.
   *
   * `Window.orderBy(...)` with no partition key moves the whole relation
-  * into ONE task — fixture-correct, 100 TB-fatal. This generalizes p14's
-  * distributed rank ([[Pipeline.epochShuffleOf]]'s hash-prefix bucketing)
-  * to arbitrary sort keys: bucket rows by a MONOTONE function of the
-  * leading sort column, rank inside each bucket in parallel (one
-  * partitioned window), and add each bucket's cumulative row offset back.
-  * Because the bucket is monotone w.r.t. the sort order,
-  * `global rank = bucket offset + local rank` holds EXACTLY — the output
-  * is bit-identical to a flat ROW_NUMBER / NTILE, so the DuckDB oracles
-  * of every query that switches constructions stay untouched.
+  * into ONE task — fixture-correct, 100 TB-fatal. Here Spark's own range
+  * partitioner carries the global order instead (`RDD.zipWithIndex`'s
+  * recipe in DataFrame form): `repartitionByRange` on the full sort order,
+  * a sort within each partition, a `monotonically_increasing_id` tag
+  * (partition index in the high bits, position within the partition in the
+  * low 33), and then `rank = offset(partition) + position + 1`, where the
+  * offsets are running sums of the partitions' actual row counts — one
+  * bounded collect, spliced into the plan as a literal array, so the rank
+  * needs no window, no join and no broadcast.
   *
-  * The bucket assignment is SKEW-AWARE (r13; the r12 verdict's one `weak`
-  * mark was the uniform split collapsing under tied/peaked keys). Three
-  * exact, deterministic, bounded pre-passes build it:
+  * WHY IT IS EXACT. The range partitioner orders its partitions by the same
+  * `SortOrder` the sort uses (ASC = nulls first, DESC = nulls last) and
+  * sends equal keys to one partition, so every row of partition p precedes
+  * every row of partition p+1. The sampler's boundaries decide parallelism
+  * only, never values: the offsets are counted, not estimated. A heavy
+  * leading value still spreads, because the sampler sees the tie-break
+  * columns too, whatever their type. As for any ROW_NUMBER, the output is
+  * exact only when the full key (`leading` plus `ties`) is unique; rows
+  * tied on the full key take an arbitrary order among themselves.
   *
-  *   1. exact min/max of the leading value (1 row) and counts over a
-  *      uniform [[Buckets]]-way range split (<= 256 rows collected);
-  *   2. coarse buckets holding more than 2N/[[Buckets]] rows are REFINED:
-  *      their value sub-range is split [[SubN]]-ways by the same closed
-  *      formula (no new statistics needed — the sub-bucket is pure
-  *      arithmetic on the frozen lo/hi literals), then counted once more;
-  *   3. composite buckets still overfull after refinement can only be
-  *      dense or TIED mass; an exact drill on just those slices collects
-  *      the heavy values (count > N/[[Buckets]] — at most 255 of them by
-  *      pigeonhole), and each heavy value's rows are sub-split [[TieK]]
-  *      ways by a monotone bucket of the first tie-break column. Numeric
-  *      ties split on their value range; STRING ties (r14) split on a
-  *      monotone first-7-bytes encoding — UTF-8 bytes zero-padded to a
-  *      fixed width read as an unsigned integer, which orders exactly
-  *      like Spark's byte-wise string comparison. The data-derived
-  *      [tlo, thi] range cancels any shared key prefix, and one bounded
-  *      REFINEMENT pass (count per tie bucket, overfull ones sub-split
-  *      [[TieSub]] ways by the same closed formula) zooms into clustered
-  *      encodings — ASCII digit suffixes, peaked numeric ties. Deeply
-  *      hierarchical multi-cluster keys beyond TieK*TieSub resolution
-  *      degrade in PARALLELISM only, never correctness: the encoding is
-  *      monotone unconditionally. Other tie types keep one sub-bucket.
-  *      (The drill, tie min/max and tie counts are exact aggregates over
-  *      the overfull slice, never samples.)
+  * STAGING. The tagged rows are pinned with `localCheckpoint`, so the
+  * counts and the caller's downstream read the same rows: the upstream
+  * runs twice (the sampler's job and the shuffle), never more. A local
+  * checkpoint lives in executor storage and is NOT fault-tolerant — at
+  * cluster scale, losing an executor kills the query instead of recomputing
+  * the lineage (on `local[n]` the executor is the driver). How such frames
+  * are staged on a cluster belongs to one policy for every
+  * `localCheckpoint` site in the engine, not to an option here.
   *
-  * Every pre-pass is an exact deterministic aggregate with a bounded
-  * collect (the KMeans bounded-collect pattern), so the frozen literals
-  * are identical however many times the plan is replayed — no sampling,
-  * no recompute divergence.
-  *
-  * PRE-PASS INPUT (r19 optimization round): every pre-pass collect used
-  * to re-run the CALLER'S WHOLE UPSTREAM PIPELINE — 3-6 full recomputes
-  * of, e.g., t23's LM-scoring subtree, one per driver-side job (guide
-  * §1.2: don't compute things you throw away). The pre-passes only need
-  * the leading value and the first tie column, so they now run against a
-  * NARROW PROJECTION of exactly those columns, materialized once via
-  * `localCheckpoint` (two narrow columns per row — bytes-bounded, never
-  * the caller's payload). The frozen literals are identical (same values,
-  * same exact aggregates), so the emitted bucket expression — and every
-  * oracle — is unchanged; only the number of upstream executions drops.
-  *
-  * NULL leading values get a dedicated terminal bucket matching Spark's
-  * sort-order contract (ASC = nulls first, DESC = nulls last), so a
-  * nullable rank column can never NPE the counts pass.
-  *
-  * NTILE(k) is then pure arithmetic on the global rank with ANSI bucket
-  * sizes — the first `N mod k` buckets get one extra row — matching
-  * Spark's and DuckDB's NTILE exactly.
+  * NTILE(k) is pure arithmetic on the global rank with ANSI bucket sizes —
+  * the first `N mod k` buckets get one extra row — matching Spark's and
+  * DuckDB's NTILE exactly.
   */
 object DistRank {
-  /** Ranking parallelism: enough buckets to keep a 1000-executor shuffle
-    * wide, few enough that the counts pre-pass stays a trivial collect. */
-  val Buckets = 256
+  private val Id = "__drk_id"
+  private val Rank = "__drk_rank"
+  /** `monotonically_increasing_id` keeps the position in the low 33 bits. */
+  private val PosBits = 33
+  private val PosMask = (1L << PosBits) - 1L
 
-  /** Refinement width for overfull coarse buckets (peaked-but-distinct
-    * mass): each flagged coarse bucket splits into SubN sub-ranges. */
-  val SubN = 256
-
-  /** Per-heavy-value tie sub-buckets (tied mass): rows sharing one heavy
-    * leading value spread over TieK buckets keyed by the tie column. */
-  val TieK = 64
-
-  /** Refinement width for overfull TIE buckets (r14): tie encodings that
-    * cluster — ASCII digit suffixes use 10 of 256 byte values, numeric
-    * ties can peak — leave most of the [tlo, thi] range empty, so one
-    * linear split collapses; overfull tie buckets sub-split TieSub ways
-    * by the same closed formula on their exact sub-range, up to
-    * [[MaxTieDepth]] levels (one bounded count pass per level, only
-    * while overfull buckets remain). */
-  val TieSub = 64
-
-  /** Tie refinement depth cap: TieK * TieSub^MaxTieDepth = 64^4 ≈ 16.7M
-    * resolution over the tie range — three zoom levels, each engaged
-    * only when the previous level still has overfull buckets. */
-  val MaxTieDepth = 3
-
-  /** Width of one heavy value's tie-bucket id space (the deepest
-    * possible refinement): TieK * TieSub^MaxTieDepth. */
-  private val TieWidth =
-    TieK.toLong * math.pow(TieSub.toDouble, MaxTieDepth.toDouble).toLong
-
-  /** Strictly above the largest heavy-segment part id
-    * (255*(TieWidth+1)+TieWidth < 2^33), so composite*PartCap + part
-    * nests (max core 65536*2^33 = 2^49 — long-safe). */
-  private val PartCap = 1L << 33
-  private val MaxComposite = Buckets.toLong * SubN - 1L
-  private val MaxId = (MaxComposite + 1L) * PartCap
-
-  /** Exact per-bucket counts — a bounded collect (nulls already mapped
-    * to a real bucket id by the caller). */
-  private def bucketCounts(df: DataFrame, b: Column): Seq[(Long, Long)] =
-    df.groupBy(b.as("__drk_cb")).agg(count(lit(1)).as("__drk_cn"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-
-  /** The skew-aware monotone bucket, computed against a pre-materialized
-    * narrow stats frame and returned as a BUILDER from (leading, tie)
-    * columns so the same frozen-literal expression can be applied both
-    * to the narrow frame (offset counts) and to the caller's frame
-    * (final output) without re-running any pre-pass. */
-  private def skewBucketBuilder(narrow: DataFrame, tieType:
-      Option[org.apache.spark.sql.types.DataType], desc: Boolean)
-      : (Column, Option[Column]) => Column = {
-    val lN = col("__drk_l").cast("double")
-    val tNRaw = col("__drk_t")
-    val r0 = narrow.agg(min(lN), max(lN)).head()
-    val (lo, hi) =
-      if (r0.isNullAt(0)) (0.0, 0.0) else (r0.getDouble(0), r0.getDouble(1))
-    val span = hi - lo
-    def coarseOf(vd: Column): Column =
-      if (span <= 0) lit(0L)
-      else least(lit(Buckets - 1L),
-        greatest(lit(0L), floor((vd - lit(lo)) / lit(span) * Buckets)))
-    def coarseSafeOf(vd: Column): Column =
-      when(vd.isNull, lit(0L)).otherwise(coarseOf(vd))
-    val c1 = bucketCounts(narrow, coarseSafeOf(lN))
-    val n = c1.map(_._2).sum
-    val t = math.max(n / Buckets, 1L)
-    val splits: Seq[Long] =
-      if (span <= 0) Nil else c1.filter(_._2 > 2 * t).map(_._1)
-    def subOf(vd: Column): Column =
-      if (splits.isEmpty) lit(0L)
-      else when(coarseOf(vd).isInCollection(splits),
-        least(lit(SubN - 1L), greatest(lit(0L),
-          floor(((vd - lit(lo)) / lit(span) * Buckets - coarseOf(vd)) * SubN))))
-        .otherwise(lit(0L))
-    def compositeOf(vd: Column): Column =
-      coarseSafeOf(vd) * SubN + when(vd.isNull, 0L).otherwise(subOf(vd))
-    val c2 =
-      if (splits.isEmpty) c1.map { case (b, cn) => (b * SubN, cn) }
-      else bucketCounts(narrow, compositeOf(lN))
-    val overfull = c2.filter(_._2 > 4 * t).map(_._1)
-    val heavy: Seq[Double] =
-      if (overfull.isEmpty) Nil
-      else narrow
-        .filter(compositeOf(lN).isInCollection(overfull) && lN.isNotNull)
-        .groupBy(lN.as("__drk_v")).agg(count(lit(1)).as("__drk_cn"))
-        .filter(col("__drk_cn") > t)
-        .select(col("__drk_v")).collect().map(_.getDouble(0)).toSeq.sorted
-    // Tie sub-split: the encoding is a pure function of the tie column;
-    // build it once as a Column=>Column so narrow stats and caller output
-    // evaluate structurally identical expressions over the same frozen
-    // literals.
-    val tieEncOf: Option[Column => Column] = tieType.flatMap {
-      case _: NumericType => Some((tc: Column) => tc.cast("double"))
-      case org.apache.spark.sql.types.StringType =>
-        // monotone first-7-bytes encoding (r14 — closes the r13
-        // verdict's latent collapse for STRING tie columns): the
-        // UTF-8 bytes zero-padded to a fixed 7-byte width read as
-        // an unsigned big-endian integer. Spark's string order IS
-        // byte-wise unsigned UTF-8 order, and fixed-width padding
-        // keeps prefixes below their extensions, so the encoding
-        // is monotone non-decreasing w.r.t. the tie sort — all the
-        // split needs (strings tied through 7 bytes collapse to
-        // one sub-bucket, exactly like equal numerics). 7 bytes =
-        // 14 hex digits < 2^56, double-exact through the cast.
-        Some((tc: Column) => conv(hex(call_function("rpad",
-          encode(tc, "UTF-8"), lit(7),
-          lit(Array[Byte](0)))), 16, 10).cast("double"))
-      case _ => None
-    }
-    val partOf: (Column, Option[Column]) => Column =
-      if (heavy.isEmpty) (_, _) => lit(0L)
-      else {
-        val m = heavy.size.toLong
-        val tieSubOf: Column => Column = tieEncOf match {
-          case Some(enc) =>
-            val heavyRows = narrow.filter(lN.isInCollection(heavy))
-            val tdN = enc(tNRaw)
-            val r1 = heavyRows
-              .agg(min(tdN).cast("double"), max(tdN).cast("double")).head()
-            val (tlo, thi) =
-              if (r1.isNullAt(0)) (0.0, 0.0)
-              else (r1.getDouble(0), r1.getDouble(1))
-            if (thi <= tlo) _ => lit(0L)
-            else {
-              def fracOf(td: Column): Column = (td - lit(tlo)) / lit(thi - tlo)
-              // level 0: uniform TieK split. Deeper levels SELECTIVELY
-              // refine overfull buckets on their exact sub-range (tracked
-              // driver-side) — each level is one bounded exact count pass
-              // (<= nonempty tie buckets rows) + a when-chain over the
-              // split ids, engaged only while overfull buckets remain.
-              // Clustered encodings (digit suffixes) zoom open; a bucket
-              // whose range has collapsed to a point stops splitting.
-              var tbOf: Column => Column = td => coalesce(
-                least(lit(TieK - 1L),
-                  greatest(lit(0L), floor(fracOf(td) * TieK))), lit(0L))
-              var ranges: Map[Long, (Double, Double)] =
-                (0 until TieK).map(i => i.toLong ->
-                  (i.toDouble / TieK, (i + 1).toDouble / TieK)).toMap
-              var depth = 0
-              var done = false
-              while (depth < MaxTieDepth && !done) {
-                val tc = bucketCounts(heavyRows, tbOf(tdN))
-                val hn = tc.map(_._2).sum
-                val tThresh = 2L * math.max(hn / TieK, 1L)
-                val tsplits = tc.filter { case (id, cn) =>
-                  cn > tThresh && ranges.get(id).exists {
-                    case (lo0, hi0) => hi0 - lo0 > 1e-12 }
-                }.map(_._1)
-                if (tsplits.isEmpty) done = true
-                else {
-                  val prevOf = tbOf
-                  val frozenRanges = ranges
-                  tbOf = td => {
-                    val prev = prevOf(td)
-                    val base = prev * TieSub
-                    tsplits.foldLeft(base) { (acc, id) =>
-                      val (lo0, hi0) = frozenRanges(id)
-                      when(prev === id, base + coalesce(
-                        least(lit(TieSub - 1L), greatest(lit(0L),
-                          floor((fracOf(td) - lit(lo0)) / lit(hi0 - lo0)
-                            * TieSub))),
-                        lit(0L)))
-                        .otherwise(acc)
-                    }
-                  }
-                  ranges = ranges.iterator.flatMap { case (id, (lo0, hi0)) =>
-                    if (tsplits.contains(id))
-                      (0 until TieSub).map { k =>
-                        (id * TieSub + k) ->
-                          (lo0 + (hi0 - lo0) * k / TieSub,
-                            lo0 + (hi0 - lo0) * (k + 1) / TieSub)
-                      }
-                    else Iterator.single((id * TieSub) -> (lo0, hi0))
-                  }.toMap
-                  depth += 1
-                }
-              }
-              // normalize to the fixed TieWidth id space so ids from
-              // different stop-depths stay monotone together
-              var scale = 1L
-              (depth until MaxTieDepth).foreach(_ => scale *= TieSub)
-              val frozenTbOf = tbOf
-              val frozenScale = scale
-              td => frozenTbOf(td) * frozenScale
-            }
-          case None => _ => lit(0L)
-        }
-        (vd, tdOpt) => {
-          val arr = array(heavy.map(lit): _*)
-          val less = size(filter(arr, x => x < vd)).cast("long")
-          val isH = array_contains(arr, vd)
-          val j =
-            if (desc) lit(m) - less - when(isH, 1L).otherwise(0L) else less
-          val tieSub = (tieEncOf, tdOpt) match {
-            case (Some(enc), Some(tc)) => tieSubOf(enc(tc))
-            case _ => lit(0L)
-          }
-          when(isH, j * (TieWidth + 1L) + 1L + tieSub)
-            .otherwise(j * (TieWidth + 1L))
-        }
-      }
-    (leading: Column, tie: Option[Column]) => {
-      val vd = leading.cast("double")
-      val comp =
-        if (desc) lit(MaxComposite) - compositeOf(vd) else compositeOf(vd)
-      val core = comp * PartCap + partOf(vd, tie)
-      when(leading.isNull, lit(if (desc) MaxId + 1L else -1L)).otherwise(core)
-    }
+  /** `df` plus `__drk_rank` (1-based global BIGINT row number over
+    * `order`), and the row count. */
+  private def ranked(df: DataFrame, order: Seq[Column]): (DataFrame, Long) = {
+    val tagged = df.repartitionByRange(order: _*)
+      .sortWithinPartitions(order: _*)
+      .withColumn(Id, monotonically_increasing_id())
+      .localCheckpoint(true)
+    // a partition's largest id is (index << 33) + its row count - 1
+    val counts = tagged.select(col(Id)).as(Encoders.scalaLong)
+      .mapPartitions(_.maxOption.iterator)(Encoders.scalaLong)
+      .collect()
+      .map(id => (id >>> PosBits).toInt -> ((id & PosMask) + 1L)).toMap
+    // cum(p) = rows in partitions before p; cum.last = all rows
+    val cum = (0 until (if (counts.isEmpty) 0 else counts.keys.max + 1))
+      .scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L))
+    val rank = element_at(lit(cum.init.toArray),
+      shiftrightunsigned(col(Id), PosBits).cast("int") + 1) +
+      col(Id).bitwiseAND(PosMask) + 1L
+    (tagged.withColumn(Rank, rank).drop(Id), cum.last)
   }
 
-  /** The narrow stats frame: exactly (leading, first tie) projected and
-    * materialized once, so every bounded pre-pass collect reads it
-    * instead of re-running the caller's upstream pipeline.
-    *
-    * FAILURE MODE (r20, stated per the r19 verdict): `localCheckpoint`
-    * pins blocks to executor storage and is NOT fault-tolerant — on a
-    * cluster, losing an executor mid-query kills the query instead of
-    * recomputing the lineage. On `local[n]` (the bench contract) the
-    * executor IS the driver, so the trade (vs 3-6 full upstream
-    * recomputes) is strictly right. Cluster deployments can set
-    * `spark.graft.rank.reliableCheckpoint=true` to route the narrow
-    * frame through a RELIABLE `checkpoint` (requires
-    * `SparkContext.setCheckpointDir`); values are identical either way
-    * (same exact aggregates over the same rows — PropertySpec pins the
-    * bit-equality contract independent of the staging mode). */
-  private def narrowOf(df: DataFrame, leading: Column,
-      ties: Seq[Column]): (DataFrame, Option[org.apache.spark.sql.types.DataType]) = {
-    val tieHead = ties.headOption
-    val cols = leading.as("__drk_l") +:
-      tieHead.map(_.as("__drk_t")).toSeq
-    val proj = df.select(cols: _*)
-    val narrow = if (reliableCheckpoint(df)) proj.checkpoint(true)
-      else proj.localCheckpoint(true)
-    (narrow, tieHead.map(_ => narrow.schema.apply("__drk_t").dataType))
-  }
+  private def orderOf(leading: Column, desc: Boolean,
+      ties: Seq[Column]): Seq[Column] =
+    (if (desc) leading.desc else leading.asc) +: ties
 
-  private def reliableCheckpoint(df: DataFrame): Boolean =
-    df.sparkSession.conf
-      .getOption("spark.graft.rank.reliableCheckpoint").contains("true")
-
-  /** Drop the narrow frame's pinned blocks as soon as the last pre-pass
-    * collect has read them (r19 ADVICE: across a 362-query bench session
-    * the per-call checkpoints were reclaimed only by ContextCleaner on
-    * GC). Reliable checkpoints live in the checkpoint dir and are left
-    * to their own lifecycle. Best-effort: the blocks are correct either
-    * way, this is storage-pressure hygiene only. */
-  private def releaseNarrow(narrow: DataFrame): Unit =
-    if (!reliableCheckpoint(narrow)) {
-      try narrow.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(false)
-        case _ => ()
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-
-  /** Skew-aware monotone bucket over (`leading` asc/desc, `ties`).
-    * Exposed package-private so PropertySpec can assert the SHAPE
-    * (bucket spread under planted skew), not just the values. */
-  private[graft] def skewBucket(df: DataFrame, leading: Column,
-      desc: Boolean, ties: Seq[Column]): Column = {
-    val (narrow, tieType) = narrowOf(df, leading, ties)
-    val out = skewBucketBuilder(narrow, tieType, desc)(leading, ties.headOption)
-    releaseNarrow(narrow) // builder pre-passes all ran eagerly above
-    out
-  }
-
-  /** Core: adds `__drk_rank` (1-based global BIGINT row number over
-    * `order`) given the bucket column (monotone non-decreasing w.r.t.
-    * `order`) applied to `df`, with the per-bucket offset counts
-    * computed from `countsFrame` grouped by `countsBucket` — the narrow
-    * stats frame whenever the caller has one (same bucket values by
-    * construction, far cheaper to re-scan). */
-  private def rankedWith(df: DataFrame, bucket: Column,
-      countsFrame: DataFrame, countsBucket: Column,
-      order: Seq[Column]): (DataFrame, Long) = {
-    val s = df.sparkSession
-    import s.implicits._
-    val counts = countsFrame
-      .groupBy(countsBucket.as("__drk_b")).agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offRows = counts.toSeq.map { case (b, n) =>
-      val off = acc; acc += n; (b, off)
-    }
-    val offsets = offRows.toDF("__drk_b", "__drk_off")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"__drk_b").orderBy(order: _*)
-    // LEFT join + loud fail (r19 ADVICE): rankedWith's contract is that
-    // `countsFrame`'s bucket domain covers the output frame's bucket
-    // values (rankedAuto guarantees it by construction — shared builder
-    // over the same checkpointed rows). An inner join would silently
-    // DROP rows and shift every later rank on a future caller's
-    // mismatch; a missing offset now raises by name instead.
-    val out = df.withColumn("__drk_b", bucket)
-      .withColumn("__drk_r", row_number().over(w).cast("long"))
-      .join(broadcast(offsets), Seq("__drk_b"), "left")
-      .withColumn("__drk_rank",
-        when($"__drk_off".isNull, raise_error(concat(
-          lit("DistRank: bucket "), $"__drk_b",
-          lit(" absent from the counts frame — counts/output row-set" +
-            " invariant violated"))).cast("long"))
-          .otherwise($"__drk_off" + $"__drk_r"))
-      .drop("__drk_b", "__drk_off", "__drk_r")
-    (out, acc)
-  }
-
-  /** Ranked over a self-derived skew bucket: ONE narrow materialization
-    * feeds the bucket pre-passes AND the offset counts. */
-  private def rankedAuto(df: DataFrame, leading: Column, desc: Boolean,
-      ties: Seq[Column], order: Seq[Column]): (DataFrame, Long) = {
-    val (narrow, tieType) = narrowOf(df, leading, ties)
-    val builder = skewBucketBuilder(narrow, tieType, desc)
-    val bucketOut = builder(leading, ties.headOption)
-    val bucketNarrow = builder(col("__drk_l"),
-      ties.headOption.map(_ => col("__drk_t")))
-    val out = rankedWith(df, bucketOut, narrow, bucketNarrow, order)
-    // every pre-pass collect (incl. rankedWith's offset counts) has run;
-    // the returned plan holds only frozen literals + broadcast offsets
-    releaseNarrow(narrow)
-    out
-  }
-
-  /** Global row_number named `out` (BIGINT) over a caller-supplied
-    * monotone bucket — for composite sort keys whose leading columns
-    * admit a direct monotone encoding (p17's (stage, hex-coin prefix)). */
-  def withRowNumberBucketed(df: DataFrame, bucket: Column, out: String,
-      order: Seq[Column]): DataFrame =
-    rankedWith(df, bucket, df, bucket, order)._1
-      .withColumnRenamed("__drk_rank", out)
-
-  /** Global row_number named `out` (BIGINT) ordered by the numeric
-    * `leading` column (asc, or desc when `desc`) then `ties`. */
+  /** Global row_number named `out` (BIGINT) ordered by `leading` (asc, or
+    * desc when `desc`) then `ties`. */
   def withRowNumber(df: DataFrame, out: String, leading: Column,
-      desc: Boolean, ties: Seq[Column]): DataFrame = {
-    val ord = (if (desc) leading.desc else leading.asc) +: ties
-    rankedAuto(df, leading, desc, ties, ord)._1
-      .withColumnRenamed("__drk_rank", out)
-  }
+      desc: Boolean, ties: Seq[Column]): DataFrame =
+    ranked(df, orderOf(leading, desc, ties))._1.withColumnRenamed(Rank, out)
 
   /** Global NTILE(k) named `out` (INT, matching the builtin's type) over
     * (`leading` asc/desc, `ties`): ANSI sizes via arithmetic on the
     * distributed rank — first N mod k buckets get one extra row. */
   def withNtile(df: DataFrame, k: Int, out: String, leading: Column,
       desc: Boolean, ties: Seq[Column]): DataFrame = {
-    val ord = (if (desc) leading.desc else leading.asc) +: ties
-    val (r, n) = rankedAuto(df, leading, desc, ties, ord)
+    val (r, n) = ranked(df, orderOf(leading, desc, ties))
     val q = n / k
     val rem = n % k
     val cut = rem * (q + 1)
     val tile =
       if (n == 0L) lit(1)
-      else if (rem == 0L) expr(s"(__drk_rank - 1) div $q + 1")
+      else if (rem == 0L) expr(s"($Rank - 1) div $q + 1")
       else expr(
-        s"CASE WHEN __drk_rank <= $cut THEN (__drk_rank - 1) div ${q + 1} + 1 " +
-        s"ELSE $rem + (__drk_rank - $cut - 1) div ${math.max(q, 1L)} + 1 END")
-    r.withColumn(out, tile.cast("int")).drop("__drk_rank")
+        s"CASE WHEN $Rank <= $cut THEN ($Rank - 1) div ${q + 1} + 1 " +
+        s"ELSE $rem + ($Rank - $cut - 1) div ${math.max(q, 1L)} + 1 END")
+    r.withColumn(out, tile.cast("int")).drop(Rank)
   }
 }

@@ -936,13 +936,13 @@ object Pipeline {
     * ascending-score order inside a stage would correlate adjacent batches).
     * Output is the full schedule: position → doc with its stage and score.
     *
-    * Scale: BOTH total orders go through [[DistRank]]'s distributed rank —
-    * the stage NTILE buckets on the score's value range, the position
-    * row_number on the (stage, first-hex-of-coin) composite (monotone in
-    * (stage, coin) because lowercase hex sorts in digit order) — so the
+    * Scale: BOTH total orders go through [[DistRank]]'s distributed rank
+    * — the stage NTILE over (score, doc_id), the position row_number over
+    * (stage, coin, doc_id), each range-partitioned on its full key — so the
     * schedule is bit-identical to the flat-window oracle with no
-    * single-partition stage anywhere. The md5 coin is pure
-    * column-function work, codegen'd, no RNG state.
+    * single-partition stage anywhere. The second rank reads the first's
+    * checkpoint, so the scoring upstream is not re-run. The md5 coin is
+    * pure column-function work, codegen'd, no RNG state.
     */
   def curriculum(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -952,16 +952,10 @@ object Pipeline {
       .withColumn("score", expr("(n_chars * 1000L) div tok"))
       .withColumn("coin",
         substring(md5(concat(lit("cur:"), $"doc_id".cast("string"))), 1, 8))
-    // r19 opt: materialize the staged frame (5 narrow columns) — the
-    // second DistRank pass's offset counts and its final consumption
-    // would otherwise each re-run the first pass's window + join.
     val staged = DistRank.withNtile(docs, 4, "stage",
       $"score", desc = false, Seq($"doc_id"))
-      .localCheckpoint(true)
-    val posBucket = $"stage".cast("long") * 16 +
-      conv(substring($"coin", 1, 1), 16, 10).cast("long")
-    DistRank.withRowNumberBucketed(staged, posBucket, "posl",
-        Seq($"stage", $"coin", $"doc_id"))
+    DistRank.withRowNumber(staged, "posl", $"stage", desc = false,
+        Seq($"coin", $"doc_id"))
       .withColumn("pos", $"posl".cast("int"))
       .select($"pos", $"doc_id", $"stage", $"score", $"coin")
       .orderBy($"pos")
@@ -1045,10 +1039,10 @@ object Pipeline {
     * curve turns "prune at p30?" from a guess into a lookup.
     *
     * Scale: the decile assignment is [[DistRank]]'s distributed NTILE
-    * (score-range buckets, no single-partition window); the cumulative
-    * column is a triangle self-join over the 10-row decile frame — exact
-    * BIGINT sums, so join-order never matters, and the whole plan stays
-    * free of unpartitioned windows.
+    * ((score, doc_id) range partitions, no single-partition window); the
+    * cumulative column is a triangle self-join over the 10-row decile
+    * frame — exact BIGINT sums, so join-order never matters, and the
+    * whole plan stays free of unpartitioned windows.
     */
   def pruneCurve(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -729,10 +729,12 @@ object TextAnalysis {
     val docs = Tables.documents(s, d)
       .select($"doc_id", split($"text", " ").as("w"))
       .withColumn("tok", size($"w").cast("long"))
-    // checkpoint assignment via DistRank's distributed NTILE (doc_id-range
-    // buckets — no single-partition window); both cumulative columns via
-    // one triangle self-join over the 10-row decile frame (exact BIGINT).
-    val cp = DistRank.withNtile(docs, 10, "decile",
+    // checkpoint assignment via DistRank's distributed NTILE (doc_id
+    // range partitions — no single-partition window); DistRank stages its
+    // whole input, so it gets the two columns the deciles need, not the
+    // word arrays. Both cumulative columns via one triangle self-join over
+    // the 10-row decile frame (exact BIGINT).
+    val cp = DistRank.withNtile(docs.select($"doc_id", $"tok"), 10, "decile",
         $"doc_id", desc = false, Nil)
       .groupBy($"decile")
       .agg(max($"doc_id").as("cutoff"), count(lit(1)).as("nd"),
@@ -1139,7 +1141,7 @@ object TextAnalysis {
     * data pipeline runs (Sennrich et al. 2016): N rounds of
     * [distributed pair count → argmax merge rule → map-side re-tokenize],
     * with the merge table as BOUNDED driver state (one 3-column row per
-    * round — the DistRank bounded-pre-pass discipline) and every
+    * round — the KMeans bounded-collect discipline) and every
     * re-tokenization a broadcast-free HOF fold inside codegen:
     * `aggregate(syms, ...)` replaces each leftmost (l,r) adjacency with
     * the merged symbol, greedy left-to-right (a freshly merged symbol
@@ -1530,9 +1532,9 @@ pr$r AS (
     * reported per (source, bucket) as docs + whitespace tokens — the
     * provisioning table the CCNet recipe hands the mixture planner.
     * Scale: the tercile assignment is [[DistRank.withNtile]]'s
-    * distributed NTILE (monotone value-range buckets + broadcast
-    * offsets — bit-identical to a flat window, ANSI sizes, doc_id
-    * tie-break), so the plan has NO unpartitioned window; the doubles
+    * distributed NTILE (range partitions + per-partition offsets —
+    * bit-identical to a flat window, ANSI sizes, doc_id tie-break), so
+    * the plan has NO unpartitioned window; the doubles
     * feeding it are t20's hash-matched exact values, so the oracle's
     * flat NTILE(3) sees identical ordering.
     */
@@ -1540,8 +1542,8 @@ pr$r AS (
     import s.implicits._
     // r19 opt: materialize the (doc_id, surprisal) frame once — it is two
     // narrow columns but its producer is the whole t20 LM-scoring subtree,
-    // which DistRank's stats pass and the final rank consumption would
-    // otherwise each recompute.
+    // which DistRank's range sampler and its shuffle would otherwise each
+    // recompute.
     val scored = bigramSurprisal(s, d)
       .select($"doc_id", $"avg_surprisal")
       .localCheckpoint(true)

@@ -378,15 +378,15 @@ object Windows {
       |FROM runs
       |ORDER BY user_id, vf_us, first_eid""".stripMargin
 
-  /** q78: corpus-wide leaderboard with a STRING tie-break — the r14
-    * DistRank path driven through the driver gate, not just the property
+  /** q78: corpus-wide leaderboard with a STRING tie-break — DistRank's
+    * heavy-tie path driven through the driver gate, not just the property
     * suite: ranking by `c_nationkey` makes EVERY value a heavy tie
     * (sf0.1: ~600 rows per nation), and the tie-break is `c_name` — a
-    * string with a shared "Customer#" prefix and a digit suffix, exactly
-    * the clustered-encoding shape the depth-adaptive tie refinement
-    * exists for. Same global-total-order contract as p17/q66 (flat
-    * ROW_NUMBER in the oracle); the scale path is DistRank's bounded
-    * pre-passes — no unpartitioned window anywhere.
+    * string with a shared "Customer#" prefix and a digit suffix, which the
+    * range partitioner's sample of the full (nation, name, custkey) key
+    * splits within a nation. Same global-total-order contract as p17/q66
+    * (flat ROW_NUMBER in the oracle); the scale path is DistRank's range
+    * partitions — no unpartitioned window anywhere.
     */
   def stringTieRank(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

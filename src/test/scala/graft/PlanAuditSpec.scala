@@ -12,6 +12,23 @@ class PlanAuditSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** `name`'s executed plan, and the plans of the DistRank range shuffles
+    * its construction ran. Each must be free of windows and single-partition
+    * exchanges, and the query must read its ranks from their checkpoints.
+    */
+  private def rankPlans(name: String): (String, Seq[String]) = {
+    val (p, plans) = plansDuring(plan(name))
+    val ranks = plans.filter(r =>
+      r.contains("__drk_id") && r.contains("rangepartitioning"))
+    ranks.foreach { r =>
+      assert(!r.contains("Window") && !r.contains("SinglePartition"),
+        s"$name: a DistRank rank path has a window or a single-partition exchange:\n$r")
+    }
+    assert("Scan ExistingRDD[^\n]*__drk_id".r.findFirstIn(p).isDefined,
+      s"$name does not read its ranks from DistRank's checkpoint:\n$p")
+    (p, ranks)
+  }
+
   test("u27 stats-driven broadcast: the pot dim is the broadcast BUILD side with no hint (r15)") {
     // the query is hint-free; the only way the pot side broadcasts is the
     // connector's SupportsReportStatistics sizeInBytes report
@@ -157,11 +174,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("t23 perplexity split: tercile via DistRank — every Window is bucket-partitioned, none global (r15)") {
-    val p = plan("t23_perplexity_split")
-    val windows = p.linesIterator.filter(_.contains("Window [")).toSeq
-    assert(windows.nonEmpty, s"expected DistRank's bucketed window:\n$p")
-    windows.foreach(l => assert(l.contains("__drk_b"),
-      s"t23 grew an UNPARTITIONED window for the global tercile: $l"))
+    val (p, ranks) = rankPlans("t23_perplexity_split")
+    assert(ranks.size === 1, s"expected one DistRank range shuffle:\n$p")
+    assert(!p.contains("Window ["),
+      s"t23 grew a window over the global tercile:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -370,18 +386,26 @@ class PlanAuditSpec extends AnyFunSuite {
   test("distributed rank: the six former single-partition sorts rank within buckets") {
     // p17/p19/p20/q66/q67/t15 once computed NTILE/row_number through
     // Window.orderBy with no partition key — the whole corpus through one
-    // task. They now go through DistRank (monotone value-range buckets +
-    // broadcast cumulative offsets); this pins the physical shape. The
-    // blanket no-unpartitioned-Window guard over ALL queries lives in
-    // QueriesSpec's per-query loop (one construction per JVM).
-    for (q <- Seq("p17_curriculum", "p19_prune_curve", "p20_repeat_budget",
-        "q66_histograms", "q67_revenue_concentration", "t15_heaps_law")) {
-      val p = plan(q)
-      assert("hashpartitioning\\(__drk_b".r.findFirstIn(p).isDefined,
-        s"$q rank window not partitioned by the DistRank bucket:\n$p")
-      assert(p.contains("BroadcastHashJoin"),
-        s"$q bucket offsets not broadcast:\n$p")
+    // task. They now go through DistRank (range partitions + per-partition
+    // offsets); this pins the physical shape. The blanket
+    // no-unpartitioned-Window guard over ALL queries lives in QueriesSpec's
+    // per-query loop (one construction per JVM).
+    for ((q, n) <- Seq("p17_curriculum" -> 2, "p19_prune_curve" -> 1,
+        "p20_repeat_budget" -> 1, "q66_histograms" -> 1,
+        "q67_revenue_concentration" -> 1, "t15_heaps_law" -> 1)) {
+      val (p, ranks) = rankPlans(q)
+      assert(ranks.size === n, s"$q: expected $n DistRank range shuffle(s):\n$p")
     }
+  }
+
+  test("distributed rank: one withNtile over orders launches at most 5 Spark jobs") {
+    import org.apache.spark.sql.functions.col
+    val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_totalprice"))
+    // sampler, shuffle, checkpoint, partition counts, and the write itself
+    val (_, jobs) = jobsDuring(operators.DistRank
+      .withNtile(o, 7, "t", col("o_totalprice"), desc = false, Seq(col("o_orderkey")))
+      .write.format("noop").mode("overwrite").save())
+    assert(jobs <= 5, s"withNtile launched $jobs Spark jobs")
   }
 
   test("s25 filtered ANN keeps the candidate scan partition-pruned to its probe buckets") {

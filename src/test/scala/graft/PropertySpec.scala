@@ -422,9 +422,10 @@ class PropertySpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    // shapes chosen to stress the bucket math: uniform, one dominant tie
-    // value (all rows same bucket), two far clusters (empty middle
-    // buckets), tiny N < k, negatives, and doubles with sub-ulp spreads
+    // shapes chosen to stress the range split and the offsets: uniform,
+    // one dominant tie value, two far clusters (empty middle ranges), tiny
+    // N < k, negatives, doubles with sub-ulp spreads, one value only, one
+    // row, and no rows
     val shapes: Seq[(String, Seq[(Double, Long)])] = Seq(
       "uniform" -> (1 to 997).map(i => (i * 3.7, i.toLong)),
       "massive-ties" -> (1 to 500).map(i =>
@@ -434,7 +435,10 @@ class PropertySpec extends AnyFunSuite {
       "tiny" -> (1 to 7).map(i => (i * 1.0, i.toLong)),
       "negatives" -> (1 to 400).map(i => ((i - 200) * 0.25, i.toLong)),
       "subulp" -> (1 to 256).map(i =>
-        (1.0 + java.lang.Double.MIN_VALUE * i, i.toLong)))
+        (1.0 + java.lang.Double.MIN_VALUE * i, i.toLong)),
+      "all-equal" -> (1 to 300).map(i => (5.0, i.toLong)),
+      "one-row" -> Seq((1.0, 1L)),
+      "empty" -> Seq.empty[(Double, Long)])
     for ((label, rows) <- shapes; desc <- Seq(false, true)) {
       val df = rows.toDF("v", "id")
       val ord = if (desc) Seq($"v".desc, $"id") else Seq($"v", $"id")
@@ -458,79 +462,86 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: skewBucket sub-splits heavy ties on a STRING tie column — spread AND bit-equality") {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    // the r13 verdict's latent collapse: heavy tied values with a string
-    // first-tie-column fell back to ONE sub-bucket. The monotone
-    // first-7-bytes encoding must spread them — and stay bit-identical
-    // to the flat window. Keys include multi-byte prefixes, shared
-    // prefixes and different lengths (prefix < extension ordering).
-    val rows = (1 to 2000).map { i =>
-      val v = if (i % 10 == 0) i.toDouble else 42.0
-      val key = (i % 7) match {
-        case 0 => f"doc$i%05d"
-        case 1 => f"a$i%06d"
-        case 2 => f"zz$i%04d-tail"
-        case 3 => "p"                   // short key (prefix of case 4)
-        case 4 => f"p$i%05d"
-        case 5 => f"müll$i%04d"         // multi-byte UTF-8
-        case _ => f"$i%07d"
+    // heavy tied values with a string first tie column must still spread
+    // over many range partitions (the sampler sees the tie column) and
+    // stay bit-identical to the flat window. Keys include multi-byte
+    // prefixes, shared prefixes and different lengths (prefix < extension
+    // ordering).
+    withRangeSession { s =>
+      import s.implicits._
+      import org.apache.spark.sql.expressions.Window
+      import org.apache.spark.sql.functions._
+      val rows = (1 to 2000).map { i =>
+        val v = if (i % 10 == 0) i.toDouble else 42.0
+        val key = (i % 7) match {
+          case 0 => f"doc$i%05d"
+          case 1 => f"a$i%06d"
+          case 2 => f"zz$i%04d-tail"
+          case 3 => "p"                   // short key (prefix of case 4)
+          case 4 => f"p$i%05d"
+          case 5 => f"müll$i%04d"         // multi-byte UTF-8
+          case _ => f"$i%07d"
+        }
+        (v, key + f"#$i%05d", i.toLong)   // unique via suffix
       }
-      (v, key + f"#$i%05d", i.toLong)   // unique via suffix
-    }
-    val df = rows.toDF("v", "k", "id")
-    // the production shape: one key family (shared prefix + digits) —
-    // the data-derived [tlo, thi] range cancels the common prefix, so
-    // the linear TieK split resolves the varying digits and spreads
-    val docs = (1 to 2000).map { i =>
-      (if (i % 10 == 0) i.toDouble else 42.0, f"doc$i%05d", i.toLong)
-    }.toDF("v", "k", "id")
-    for (desc <- Seq(false, true)) {
-      val bd = operators.DistRank.skewBucket(docs, $"v", desc, Seq($"k"))
-      val spreadDocs = docs.filter($"v" === 42.0).select(bd.as("b"))
-        .distinct().count()
-      assert(spreadDocs > 32,
-        s"doc-key string ties sit in $spreadDocs bucket(s) (desc=$desc)")
-      // the adversarial multi-family shape: monotonicity (and therefore
-      // bit-equality) must hold regardless of how well the linear range
-      // split spreads heterogeneous clusters
-      val b = operators.DistRank.skewBucket(df, $"v", desc, Seq($"k"))
-      val tiedB = df.filter($"v" === 42.0).select(b.as("b"))
-        .distinct().count()
-      assert(tiedB > 1,
-        s"string-tied rows collapsed to one bucket (desc=$desc)")
-      val ord = if (desc) Seq($"v".desc, $"k") else Seq($"v", $"k")
-      val flat = df.withColumn("rn",
-          row_number().over(Window.orderBy(ord: _*)).cast("long"))
-        .select($"id", $"rn").as[(Long, Long)].collect().toMap
-      val dist = operators.DistRank
-        .withRowNumber(df, "rn", $"v", desc, Seq($"k"))
-        .select($"id", $"rn").as[(Long, Long)].collect().toMap
-      assert(dist === flat, s"string-tie rank diverged (desc=$desc)")
+      val df = rows.toDF("v", "k", "id")
+      // the production shape: one key family (shared prefix + digits)
+      val docs = (1 to 2000).map { i =>
+        (if (i % 10 == 0) i.toDouble else 42.0, f"doc$i%05d", i.toLong)
+      }.toDF("v", "k", "id")
+      for (desc <- Seq(false, true)) {
+        val spreadDocs = tiedPartitions(operators.DistRank
+          .withRowNumber(docs, "rn", $"v", desc, Seq($"k")))
+        assert(spreadDocs >= 3,
+          s"doc-key string ties sit in $spreadDocs partition(s) (desc=$desc)")
+        // the adversarial multi-family shape: the spread AND bit-equality
+        // must hold however heterogeneous the tie keys are
+        val dist = operators.DistRank
+          .withRowNumber(df, "rn", $"v", desc, Seq($"k"))
+        val tiedP = tiedPartitions(dist)
+        assert(tiedP >= 3,
+          s"string-tied rows sit in $tiedP partition(s) (desc=$desc)")
+        val ord = if (desc) Seq($"v".desc, $"k") else Seq($"v", $"k")
+        val flat = df.withColumn("rn",
+            row_number().over(Window.orderBy(ord: _*)).cast("long"))
+          .select($"id", $"rn").as[(Long, Long)].collect().toMap
+        val distRn = dist.select($"id", $"rn").as[(Long, Long)].collect().toMap
+        assert(distRn === flat, s"string-tie rank diverged (desc=$desc)")
+      }
     }
   }
 
   test("property: skewBucket spreads a 90%-one-value distribution across many buckets") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // r12 verdict's one weak mark: uniform range buckets collapse under
-    // tied/peaked leading values. The skew-aware bucket must keep the
-    // distributed rank wide — here 90% of rows share one value, so the
-    // heavy-value drill + tie sub-split has to carry the spread.
-    val rows = (1 to 2000).map(i =>
-      (if (i % 10 == 0) i.toDouble else 42.0, i.toLong))
-    val df = rows.toDF("v", "id")
-    for (desc <- Seq(false, true)) {
-      val b = operators.DistRank.skewBucket(df, $"v", desc, Seq($"id"))
-      val nb = df.select(b.as("b")).distinct().count()
-      assert(nb > 32, s"planted ties collapsed to $nb buckets (desc=$desc)")
-      // tied rows specifically must not share a single bucket
-      val tiedB = df.filter($"v" === 42.0).select(b.as("b"))
-        .distinct().count()
-      assert(tiedB > 32,
-        s"the 1800 tied rows still sit in $tiedB bucket(s) (desc=$desc)")
+    // uniform range buckets collapse under tied/peaked leading values; the
+    // range partitioner samples the full key, so 90% of rows sharing one
+    // value must still spread over several partitions on their tie column
+    withRangeSession { s =>
+      import s.implicits._
+      val df = (1 to 2000).map(i =>
+        (if (i % 10 == 0) i.toDouble else 42.0, i.toLong)).toDF("v", "id")
+      for (desc <- Seq(false, true)) {
+        val tiedP = tiedPartitions(operators.DistRank
+          .withRowNumber(df, "rn", $"v", desc, Seq($"id")))
+        assert(tiedP >= 3,
+          s"the 1800 tied rows still sit in $tiedP partition(s) (desc=$desc)")
+      }
     }
+  }
+
+  /** A session of its own with AQE's partition coalescing off: on the
+    * shared one, a small range shuffle is merged into one partition. */
+  private def withRangeSession(body: org.apache.spark.sql.SparkSession => Unit)
+      : Unit = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    body(s)
+  }
+
+  /** Distinct `spark_partition_id()`s holding the rows tied at v = 42. */
+  private def tiedPartitions(ranked: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.functions._
+    ranked.filter(col("v") === 42.0)
+      .select(spark_partition_id()).distinct().count()
   }
 
   test("property: d20's prefix-filter candidates lose NO true pair vs the brute-force join") {
@@ -1013,30 +1024,5 @@ class PropertySpec extends AnyFunSuite {
       assert(got === want, s"trial=$i: delta-chain pruning changed rows")
     }
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-  }
-
-  test("DistRank reliable-checkpoint staging (spark.graft.rank.reliableCheckpoint) is bit-identical") {
-    import spark.implicits._
-    // the conf only changes how the narrow stats frame is MATERIALIZED
-    // (reliable checkpoint for cluster fault tolerance vs localCheckpoint)
-    // -- the pre-pass aggregates, frozen literals, and therefore every
-    // rank must be identical
-    val rows = (1 to 500).map(i => ((i % 23) * 1.5, i.toLong))
-    val df = rows.toDF("v", "id")
-    val base = operators.DistRank
-      .withRowNumber(df, "rn", $"v", desc = false, Seq($"id"))
-      .select($"id", $"rn").as[(Long, Long)].collect().toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-rank-ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    spark.conf.set("spark.graft.rank.reliableCheckpoint", "true")
-    try {
-      val rel = operators.DistRank
-        .withRowNumber(df, "rn", $"v", desc = false, Seq($"id"))
-        .select($"id", $"rn").as[(Long, Long)].collect().toMap
-      assert(rel === base, "reliable-checkpoint path changed ranks")
-    } finally {
-      spark.conf.unset("spark.graft.rank.reliableCheckpoint")
-      new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
-    }
   }
 }

@@ -10,23 +10,52 @@ object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
 
   /** `body`'s result and the number of Spark jobs it launched on this
-    * thread. Jobs are matched by a job group set for the call; a fence job
-    * run afterwards in the same group bounds the count, because the
-    * listener bus delivers job starts in order.
+    * thread. Jobs are matched by a job group set for the call.
     */
   def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    val (r, seen) = during(body) {
+      case (e: SparkListenerJobStart, group) if Option(e.properties)
+          .exists(_.getProperty("spark.jobGroup.id") == group) => "job"
+    }
+    (r, seen.size)
+  }
+
+  /** `body`'s result and the physical plan (as first planned; AQE may
+    * refine it while running) of every SQL execution started while it ran.
+    */
+  def plansDuring[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    during(body) {
+      case (e: SparkListenerSQLExecutionStart, _) => e.physicalPlanDescription
+    }
+  }
+
+  /** `body`'s result and what `pick` takes from the listener events posted
+    * while it ran (`pick` also gets the job group set for the call). A
+    * fence job run afterwards in the same group bounds the events, because
+    * the listener bus delivers events in order.
+    */
+  private def during[T](body: => T)(
+      pick: PartialFunction[(org.apache.spark.scheduler.SparkListenerEvent, String), String])
+      : (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
     val fence = "fence"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var fenced = false
     val listener = new SparkListener {
+      private def take(e: SparkListenerEvent): Unit =
+        if (!fenced) pick.lift((e, group)).foreach(seen.add)
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val p = Option(e.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id") == group))
-          seen.add(p.flatMap(x => Option(x.getProperty("spark.job.description")))
-            .getOrElse(""))
+        if (p.exists(_.getProperty("spark.jobGroup.id") == group) &&
+            p.exists(_.getProperty("spark.job.description") == fence))
+          fenced = true
+        else take(e)
       }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = take(e)
     }
     sc.addSparkListener(listener)
     try {
@@ -35,10 +64,10 @@ object TestSpark {
       sc.setJobDescription(fence)
       sc.parallelize(Seq(1), 1).count()
       val deadline = System.nanoTime() + 10000000000L
-      while (!seen.contains(fence) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(fence), "fence job never reached the listener")
+      while (!fenced && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(fenced, "fence job never reached the listener")
       import scala.jdk.CollectionConverters._
-      (r, seen.asScala.takeWhile(_ != fence).size)
+      (r, seen.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
