@@ -48,8 +48,11 @@ final class BucketedPotTable(
   import PotTable.CommitConflict
 
   private def dir = s"$root/$path"
+  /** The session's Hadoop conf, taken once per instance; each `fs` call
+    * resolves through Hadoop's FileSystem cache. */
+  private lazy val conf = spark.sessionState.newHadoopConf()
   private def fs: FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(root).getFileSystem(conf)
 
   /** The store's ROUTING MODULUS — self-describing since r15: the stamped
     * `_meta/buckets` marker is authoritative, the constructor count

@@ -56,8 +56,11 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
   import PotTable.CommitConflict
 
   private def dir = s"$root/$path"
+  /** The session's Hadoop conf, taken once per instance; each `fs` call
+    * resolves through Hadoop's FileSystem cache. */
+  private lazy val conf = spark.sessionState.newHadoopConf()
   private def fs: FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(root).getFileSystem(conf)
 
   /** Current committed generation, 0 if the pot doesn't exist yet
     * (reference returns an empty map for absent paths, server.go:316-331).
@@ -458,7 +461,7 @@ object PotTable {
   def bundle(spark: SparkSession, outDir: String): Unit = {
     import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
     val fs = new Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.makeQualified(new Path(outDir))
     // carry the FileStatus from listStatus: one metadata call per file,
     // not two (the per-write auto-snapshot trigger bundles a whole
@@ -532,7 +535,7 @@ object PotTable {
     import org.apache.commons.compress.archivers.tar.TarArchiveInputStream
     import spark.implicits._
     val bp = new Path(bundlePath)
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = bp.getFileSystem(spark.sessionState.newHadoopConf())
     val rows = graft.Scratch.withDir("graft-restore") { dir =>
       val tmp = java.nio.file.Paths.get(dir)
       val in = new TarArchiveInputStream(
@@ -582,7 +585,7 @@ object PotTable {
     // :list route (server_routes.go:66-68)
     graft.Metrics.of(spark).foreach(_.recordList())
     val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(rootPath)) return Seq.empty
     def walk(dir: Path, rel: String): Seq[String] =
       fs.listStatus(dir).toSeq.filter(_.isDirectory).flatMap { st =>

@@ -41,8 +41,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final class PotTxn(spark: SparkSession, root: String) {
 
+  /** The session's Hadoop conf, taken once per instance; each `fs` call
+    * resolves through Hadoop's FileSystem cache. */
+  private lazy val conf = spark.sessionState.newHadoopConf()
   private def fs: FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(root).getFileSystem(conf)
   private def commitsDir = new Path(s"$root/_txns/_commits")
   private def stageDir(id: String) = s"$root/_txns/stage/$id"
   private def appliedMarker(n: Long, pot: String) =

@@ -173,7 +173,7 @@ object AnnIndex {
   private[graft] def committedGenerations(
       s: SparkSession,
       base: org.apache.hadoop.fs.Path): Seq[(Long, String)] = {
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(s.sessionState.newHadoopConf())
     val commits = new org.apache.hadoop.fs.Path(base, "commits")
     Iterator.from(1)
       .map(g =>
@@ -194,7 +194,7 @@ object AnnIndex {
       s: SparkSession, base: org.apache.hadoop.fs.Path, gen: Long)(
       build: String => Unit): String = {
     import org.apache.hadoop.fs.Path
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(s.sessionState.newHadoopConf())
     val commits = new Path(base, "commits")
     val marker = new Path(commits, gen.toString)
     def committed: Option[String] =
@@ -267,7 +267,7 @@ object AnnIndex {
     val adopted = tag.flatMap(t =>
       committedGenerations(s, base).find(_._2.contains(s"data-$t-")))
     if (adopted.isDefined) return adopted.get
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(s.sessionState.newHadoopConf())
     val commits = new Path(base, "commits")
     val staging = new Path(base,
       s"data-${tag.fold("")(_ + "-")}${java.util.UUID.randomUUID()}")
@@ -387,7 +387,7 @@ object AnnIndex {
     */
   private[graft] def headFold(
       s: SparkSession, base: org.apache.hadoop.fs.Path): Option[String] = {
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(s.sessionState.newHadoopConf())
     committedGenerations(s, base).lastOption.map(_._2).filter(dir =>
       isFold(fs, dir) &&
         fs.exists(new org.apache.hadoop.fs.Path(dir, CentroidsSidecar)))
@@ -443,7 +443,7 @@ object AnnIndex {
     */
   private[graft] def readCommitted(
       s: SparkSession, base: org.apache.hadoop.fs.Path): DataFrame = {
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(s.sessionState.newHadoopConf())
     resolveVisible(s, fs, visibleGenerations(fs, committedGenerations(s, base)))
   }
 
@@ -509,7 +509,7 @@ object AnnIndex {
     */
   def compact(
       s: SparkSession, base: org.apache.hadoop.fs.Path): Option[String] = {
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(s.sessionState.newHadoopConf())
     val gens = committedGenerations(s, base)
     require(gens.nonEmpty, s"no committed generations under $base")
     val top = gens.last._1
@@ -567,7 +567,7 @@ object AnnIndex {
       s: SparkSession, base: org.apache.hadoop.fs.Path,
       shiftThreshold: Long): Option[String] = {
     import s.implicits._
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(s.sessionState.newHadoopConf())
     val gens = committedGenerations(s, base)
     require(gens.nonEmpty, s"no committed generations under $base")
     val top = gens.last._1
@@ -674,7 +674,7 @@ object AnnIndex {
   private[graft] def deletePairs(
       s: SparkSession, base: org.apache.hadoop.fs.Path,
       ids: DataFrame): DataFrame = {
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(s.sessionState.newHadoopConf())
     val inserts = visibleGenerations(fs, committedGenerations(s, base))
       .filterNot { case (_, dir) => isTombstone(fs, dir) }
     val allMapped = inserts.nonEmpty && inserts.forall { case (_, dir) =>
@@ -703,7 +703,7 @@ object AnnIndex {
     graft.Tables.spread(rows, col("sigp"))
       .write.partitionBy("sigp").mode("overwrite").parquet(out)
     val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileSystem(s.sessionState.newHadoopConf())
     val f = fs.create(
       new org.apache.hadoop.fs.Path(out, TombstonesSidecar), false)
     try f.write("tombstones".getBytes("UTF-8")) finally f.close()
@@ -750,7 +750,7 @@ object AnnIndex {
     */
   def vacuumFolded(
       s: SparkSession, base: org.apache.hadoop.fs.Path): Seq[Long] = {
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(s.sessionState.newHadoopConf())
     val gens = committedGenerations(s, base)
     gens.filter { case (_, dir) => isFold(fs, dir) }
       .map(_._1).maxOption match {

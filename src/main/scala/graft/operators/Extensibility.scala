@@ -723,7 +723,7 @@ object Extensibility {
         val sess = org.apache.spark.sql.SparkSession.active
         import sess.implicits._
         val p = new org.apache.hadoop.fs.Path(glob)
-        val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+        val fs = p.getFileSystem(sess.sessionState.newHadoopConf())
         val rows = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
           .filter(_.isFile).map(_.getPath).map { pot =>
             val commits = new org.apache.hadoop.fs.Path(
@@ -775,7 +775,7 @@ object Extensibility {
         val sess = org.apache.spark.sql.SparkSession.active
         import sess.implicits._
         val p = new org.apache.hadoop.fs.Path(glob)
-        val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+        val fs = p.getFileSystem(sess.sessionState.newHadoopConf())
         val rows = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
           .filter(_.isFile).map(_.getPath).flatMap { pot =>
             val commits = new org.apache.hadoop.fs.Path(
@@ -931,7 +931,7 @@ object Extensibility {
         .write.format(fmt).option("path", root).option("buckets", "4")
         .mode("append").save()
       val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(graft.kv.HadoopConf.get)
+        .getFileSystem(s.sessionState.newHadoopConf())
       def lastMtime: Long = graft.sources.BucketedPotV2Source
         .existingBuckets(root, 4).map { b =>
           val commits = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs
@@ -1032,7 +1032,7 @@ object Extensibility {
         to_json(struct($"n_name".as("name"), lit(upd).as("upd")))
           .as("doc_json"))
       val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(graft.kv.HadoopConf.get)
+        .getFileSystem(s.sessionState.newHadoopConf())
       def chainMtimes(potPath: String): Seq[Long] = {
         val commits = new org.apache.hadoop.fs.Path(
           new org.apache.hadoop.fs.Path(potPath).getParent, ".commits")
@@ -1464,7 +1464,7 @@ object Extensibility {
         // one delta epoch upserts the second half — the chain stays
         // delta-headed (run 1 << compactEvery)
         val fs = new org.apache.hadoop.fs.Path(pot)
-          .getFileSystem(graft.kv.HadoopConf.get)
+          .getFileSystem(s.sessionState.newHadoopConf())
         val staging = new org.apache.hadoop.fs.Path(s"$dir/chain_$g/.stage")
         fs.mkdirs(staging)
         val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
@@ -1625,7 +1625,7 @@ object Extensibility {
       snap(0, 0 to 4)                    // sidecar present
       val p1 = snap(1, 5 to 9)           // sidecar deleted below
       val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(graft.kv.HadoopConf.get)
+        .getFileSystem(s.sessionState.newHadoopConf())
       fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_1"))
         .map(_.getPath).filter(_.getName.startsWith(".zmap-"))
         .foreach(z => fs.delete(z, false))
@@ -1721,7 +1721,7 @@ object Extensibility {
         pot
       }
       val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(graft.kv.HadoopConf.get)
+        .getFileSystem(s.sessionState.newHadoopConf())
       def sidecarsOf(g: Int) =
         fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_$g"))
           .map(_.getPath).filter(_.getName.startsWith(".zmap-"))
@@ -1929,7 +1929,7 @@ object Extensibility {
         .write.format(fmt).option("path", root).option("buckets", "4")
         .mode("append").save()
       val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(graft.kv.HadoopConf.get)
+        .getFileSystem(s.sessionState.newHadoopConf())
       def lastMtime: Long = graft.sources.BucketedPotV2Source
         .existingBuckets(root, 4).map { b =>
           val commits = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs
@@ -2064,7 +2064,7 @@ object Extensibility {
         val sess = org.apache.spark.sql.SparkSession.active
         import sess.implicits._
         val p = new org.apache.hadoop.fs.Path(glob)
-        val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+        val fs = p.getFileSystem(sess.sessionState.newHadoopConf())
         val rows = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
           .filter(_.isFile).map(_.getPath).map { pot =>
             val commits = new org.apache.hadoop.fs.Path(
@@ -2101,7 +2101,7 @@ object Extensibility {
       // pot A: snapshot + two delta epochs (u50's chain shape)
       val potA = write("a", nat)
       val fsA = new org.apache.hadoop.fs.Path(potA)
-        .getFileSystem(graft.kv.HadoopConf.get)
+        .getFileSystem(s.sessionState.newHadoopConf())
       def epoch(tag: String, lines: Seq[String]): Unit = {
         val staging = new org.apache.hadoop.fs.Path(s"$dir/a/.staging-$tag")
         fsA.mkdirs(staging)
@@ -2337,7 +2337,7 @@ object Extensibility {
       docs(nat.filter($"n_regionkey" <= 1).withColumn("upd", lit(0)))
         .write.format(fmt).option("path", pot).mode("overwrite").save()
       val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
-      val fs = commits.getFileSystem(graft.kv.HadoopConf.get)
+      val fs = commits.getFileSystem(s.sessionState.newHadoopConf())
       def mtime(g: Int): Long = fs.getFileStatus(
         new org.apache.hadoop.fs.Path(commits, g.toString)).getModificationTime
       val t1 = mtime(1)
@@ -2578,8 +2578,7 @@ object Extensibility {
         truncateFirst = false, compactEvery = 1000)
       val sw = write.toStreaming
       def epoch(e: Long, rows: Seq[(String, String)]): Unit = {
-        val w = new graft.sources.PotV2WriterFactory(
-          write.epochStagingDir(e).toString, 1, 2).createWriter(0, 0L)
+        val w = write.writerFactory.createWriter(0, 0L, e)
         rows.foreach { case (k, dj) =>
           w.write(org.apache.spark.sql.catalyst.InternalRow(
             org.apache.spark.unsafe.types.UTF8String.fromString(""),
@@ -3062,7 +3061,7 @@ object Extensibility {
         val spark = org.apache.spark.sql.SparkSession.active
         import spark.implicits._
         val hp = new org.apache.hadoop.fs.Path(path)
-        val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
         val commits = new org.apache.hadoop.fs.Path(hp.getParent, ".commits")
         val kinds = graft.kv.CommitMarker
           .committedGenerations(fs, commits).sorted.map { g =>
@@ -3992,7 +3991,7 @@ object Extensibility {
       // gens 2-3: hand-staged DELTA epochs through the streaming commit
       // path (dgen artifacts — the chain shape compaction exists for)
       val fs = new org.apache.hadoop.fs.Path(pot)
-        .getFileSystem(graft.kv.HadoopConf.get)
+        .getFileSystem(s.sessionState.newHadoopConf())
       def epoch(tag: String, lines: Seq[String]): Unit = {
         val staging = new org.apache.hadoop.fs.Path(s"$dir/t/.staging-$tag")
         fs.mkdirs(staging)

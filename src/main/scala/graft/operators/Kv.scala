@@ -144,7 +144,7 @@ object Kv {
   def listTables(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val rootPath = new Path(d)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = rootPath.getFileSystem(s.sessionState.newHadoopConf())
     val names = fs.listStatus(rootPath)
       .map(_.getPath.getName)
       .filter(_.endsWith(".parquet"))

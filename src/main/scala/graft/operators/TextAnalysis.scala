@@ -1215,7 +1215,7 @@ object TextAnalysis {
   private[graft] def bpeTrainPersistent(s: SparkSession, d: String)
       : Seq[(Int, String, String, Long, Long)] = {
     val base = bpeArtifactBase(d)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(s.sessionState.newHadoopConf())
     val rulesFile = AnnIndex.ensureGeneration(s, base, 1L) { staged =>
       val rules = bpeTrainUncached(s, d)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()

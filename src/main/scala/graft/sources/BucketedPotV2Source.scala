@@ -4,8 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -92,8 +90,9 @@ class BucketedPotV2Source extends TableProvider {
 
 object BucketedPotV2Source {
   /** Driver/task-side twin of BucketedPotTable's bucket function:
-    * xxhash64 (seed 42) pmod n on the UTF-8 key bytes. */
-  def bucketOf(key: String, n: Int): Int = {
+    * xxhash64 (seed 42) pmod n on the UTF-8 key bytes (0 for the
+    * one-bucket plain pot, without hashing). */
+  def bucketOf(key: String, n: Int): Int = if (n == 1) 0 else {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     val h = new XxHash64(Seq(Literal(
       org.apache.spark.unsafe.types.UTF8String.fromString(key),
@@ -103,9 +102,13 @@ object BucketedPotV2Source {
 
   def bucketPot(root: String, b: Int): String = s"$root/_b=$b/data.json"
 
+  /** The store root's FileSystem under the running session's conf. */
+  private def fsOf(root: String): org.apache.hadoop.fs.FileSystem =
+    new Path(root).getFileSystem(PotV2Source.sessionConf())
+
   /** Buckets that currently exist on disk (have a data.json). */
   def existingBuckets(root: String, n: Int): Seq[Int] = {
-    val fs = new Path(root).getFileSystem(graft.kv.HadoopConf.get)
+    val fs = fsOf(root)
     (0 until n).filter(b => fs.exists(new Path(bucketPot(root, b))))
   }
 
@@ -116,7 +119,7 @@ object BucketedPotV2Source {
     */
   def resolveBuckets(root: String, supplied: Option[Int]): Int = {
     val p = new Path(root)
-    val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = fsOf(root)
     graft.kv.BucketMeta.resolve(fs, p, supplied,
       storeLive =
         Option(fs.globStatus(new Path(root, "_b=*"))).exists(_.nonEmpty))
@@ -124,8 +127,7 @@ object BucketedPotV2Source {
 
   /** Stamp the modulus at the write front door (idempotent CAS). */
   def stampBuckets(root: String, n: Int): Unit = {
-    val p = new Path(root)
-    graft.kv.BucketMeta.stamp(p.getFileSystem(graft.kv.HadoopConf.get), p, n)
+    graft.kv.BucketMeta.stamp(fsOf(root), new Path(root), n)
   }
 
   /** Crash recovery: roll every open multi-bucket statement forward from
@@ -137,7 +139,7 @@ object BucketedPotV2Source {
 
   /** Head generation per existing bucket (the row-level ops' pin vector). */
   def headVector(root: String, n: Int): Map[Int, Long] = {
-    val fs = new Path(root).getFileSystem(graft.kv.HadoopConf.get)
+    val fs = fsOf(root)
     existingBuckets(root, n).map { b =>
       val commits = new Path(new Path(bucketPot(root, b)).getParent, ".commits")
       b -> graft.kv.CommitMarker.head(fs, commits)
@@ -159,7 +161,7 @@ object BucketedPotV2Source {
     * first commit fails NAMED at planning, mirroring u46.
     */
   def asOfVector(root: String, n: Int, millis: Long): Map[Int, Long] = {
-    val fs = new Path(root).getFileSystem(graft.kv.HadoopConf.get)
+    val fs = fsOf(root)
     val resolved = existingBuckets(root, n).map { b =>
       val commits =
         new Path(new Path(bucketPot(root, b)).getParent, ".commits")
@@ -228,7 +230,7 @@ object BucketedPotV2Source {
   def cloneBucketedPot(srcRoot: String, dstRoot: String)
       : Seq[(Int, Long)] = {
     val srcP = new Path(srcRoot)
-    val fs = srcP.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = fsOf(srcRoot)
     val n = graft.kv.BucketMeta.stored(fs, srcP).getOrElse(
       throw new IllegalArgumentException(
         s"cloneBucketedPot: $srcRoot has no _meta/buckets stamp — not a " +
@@ -377,7 +379,7 @@ private[sources] class BucketedPotScanBuilder(root: String, nBuckets: Int,
     val p = new Path(BucketedPotV2Source.bucketPot(root, b))
     // qualify like globStatus qualifies matched files, or the string
     // comparison in PotV2Filters.accepts would prune EVERYTHING
-    p.getFileSystem(graft.kv.HadoopConf.get).makeQualified(p).toString
+    p.getFileSystem(conf).makeQualified(p).toString
   }
 
   private def qualifiedBucket(k: String): String =
@@ -440,10 +442,23 @@ private[sources] class BucketedPotWriteBuilder(
   }
 }
 
-/** One fragment per (bucket, task): bucket-routed jsonl staging. */
+/** A [[PotFragmentWriterFactory]] task's fragments, one per touched
+  * bucket (`(bucket, fragment path)`); a plain pot's are all bucket 0. */
 private[graft] case class BucketFragmentsMessage(
     partitionId: Int, fragments: Seq[(Int, String)])
     extends WriterCommitMessage
+
+private[graft] object BucketFragmentsMessage {
+  /** Task messages regrouped per bucket as the per-bucket pot commits
+    * take them; each commit merges in partition order. */
+  def perBucket(messages: Array[WriterCommitMessage])
+      : Map[Int, Seq[PotFragmentMessage]] =
+    messages.toSeq
+      .collect { case m: BucketFragmentsMessage => m }
+      .flatMap(m => m.fragments.map { case (b, f) =>
+        (b, PotFragmentMessage(m.partitionId, f)) })
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+}
 
 private[graft] class BucketedPotWrite(
     root: String, nBuckets: Int, schema: StructType, queryId: String,
@@ -458,7 +473,11 @@ private[graft] class BucketedPotWrite(
   private def stagingDir = new Path(root, s".staging-$queryId")
   private def qid8 = queryId.replace("-", "").take(8)
   private[sources] def stagingBase: String = stagingDir.toString
-  private[sources] def buckets: Int = nBuckets
+  /** The session conf every bucket commit and fragment task resolves
+    * FileSystems from ([[PotV2Source.sessionConf]]). */
+  private[sources] lazy val conf = PotV2Source.sessionConf()
+  private[sources] lazy val writerFactory = new PotFragmentWriterFactory(
+    PotV2Source.broadcastConf(conf), stagingBase, nBuckets, keyIdx, docIdx)
 
   override def toBatch: BatchWrite = this
 
@@ -481,12 +500,8 @@ private[graft] class BucketedPotWrite(
   private[sources] def commitEpoch(
       epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     BucketedPotV2Source.stampBuckets(root, nBuckets)
-    val fs = new Path(root).getFileSystem(graft.kv.HadoopConf.get)
-    val perBucket = messages
-      .collect { case m: BucketFragmentsMessage => m }
-      .flatMap(m => m.fragments.map { case (b, f) =>
-        (b, PotFragmentMessage(m.partitionId, f)) })
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val fs = new Path(root).getFileSystem(conf)
+    val perBucket = BucketFragmentsMessage.perBucket(messages)
     val tag = s"q${qid8}e$epochId"
     val buckets: Seq[Int] =
       if (truncateFirst)
@@ -507,16 +522,15 @@ private[graft] class BucketedPotWrite(
         () => BucketedPotV2Source.headVector(root, nBuckets),
         base => BucketedStmtLog.intentBody(
           "epoch", queryId, truncateFirst, maxObjectBytes, buckets, base,
-          perBucket.view.mapValues(_.toSeq.map(m =>
+          perBucket.view.mapValues(_.map(m =>
             (m.partitionId, m.fragment))).toMap,
           epoch = Some(epochId)), adoptExisting = true)
     }
     buckets.foreach { b =>
       val pot = BucketedPotV2Source.bucketPot(root, b)
       val w = new PotV2Write(pot, PotV2Source.Schema, s"$queryId-b$b",
-        truncateFirst, maxObjectBytes)
-      val msgs = perBucket.getOrElse(b, Array.empty[PotFragmentMessage])
-        .asInstanceOf[Array[WriterCommitMessage]]
+        truncateFirst, maxObjectBytes, conf = conf)
+      val msgs = perBucket.getOrElse(b, Nil).toArray[WriterCommitMessage]
       val staging = new Path(stagingBase + s"-e$epochId", s"done-b$b")
       if (truncateFirst)
         w.commitEntries(msgs, truncate = true, snapTag = Some(tag),
@@ -531,18 +545,12 @@ private[graft] class BucketedPotWrite(
   }
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new BucketedPotWriterFactory(
-      stagingDir.toString, nBuckets, keyIdx, docIdx)
+      info: PhysicalWriteInfo): DataWriterFactory = writerFactory
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     BucketedPotV2Source.stampBuckets(root, nBuckets)
-    val fs = new Path(root).getFileSystem(graft.kv.HadoopConf.get)
-    val perBucket = messages
-      .collect { case m: BucketFragmentsMessage => m }
-      .flatMap(m => m.fragments.map { case (b, f) =>
-        (b, PotFragmentMessage(m.partitionId, f)) })
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val fs = new Path(root).getFileSystem(conf)
+    val perBucket = BucketFragmentsMessage.perBucket(messages)
     // overwrite rewrites EVERY existing bucket (untouched ones to empty);
     // append touches only the buckets with incoming rows
     val buckets: Seq[Int] =
@@ -561,19 +569,18 @@ private[graft] class BucketedPotWrite(
         () => BucketedPotV2Source.headVector(root, nBuckets),
         base => BucketedStmtLog.intentBody(
           "insert", queryId, truncateFirst, maxObjectBytes, buckets, base,
-          perBucket.view.mapValues(_.toSeq.map(m =>
+          perBucket.view.mapValues(_.map(m =>
             (m.partitionId, m.fragment))).toMap))
     }
     buckets.foreach { b =>
       val pot = BucketedPotV2Source.bucketPot(root, b)
       val w = new PotV2Write(pot, PotV2Source.Schema, s"$queryId-b$b",
-        truncateFirst, maxObjectBytes)
+        truncateFirst, maxObjectBytes, conf = conf)
       // statement-tagged (adopt-on-rerun) + retry-on-conflict: concurrent
       // SQL writers serialize per bucket, both land; a re-run statement
       // adopts buckets it already committed
       w.commitEntries(
-        perBucket.getOrElse(b, Array.empty[PotFragmentMessage])
-          .asInstanceOf[Array[WriterCommitMessage]],
+        perBucket.getOrElse(b, Nil).toArray[WriterCommitMessage],
         truncate = truncateFirst, snapTag = Some(s"q${qid8}"),
         retryOnConflict = true,
         staging = new Path(stagingDir, s"done-b$b"))
@@ -582,51 +589,8 @@ private[graft] class BucketedPotWrite(
     else fs.delete(stagingDir, true)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(root).getFileSystem(graft.kv.HadoopConf.get)
-    fs.delete(stagingDir, true)
-  }
-}
-
-private[graft] class BucketedPotWriterFactory(
-    stagingDir: String, nBuckets: Int, keyIdx: Int, docIdx: Int)
-    extends DataWriterFactory {
-  override def createWriter(
-      partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val mapper = new ObjectMapper()
-      private val bufs = scala.collection.mutable.Map
-        .empty[Int, scala.collection.mutable.ArrayBuffer[String]]
-      override def write(row: InternalRow): Unit = {
-        val key = row.getUTF8String(keyIdx).toString
-        val doc = row.getUTF8String(docIdx).toString
-        val node = mapper.readTree(doc)
-        require(node != null && node.isObject,
-          s"doc_json for key '$key' must be a JSON object: $doc")
-        val line = mapper.createObjectNode()
-        line.put("k", key)
-        line.set("d", node)
-        bufs.getOrElseUpdate(
-          BucketedPotV2Source.bucketOf(key, nBuckets),
-          scala.collection.mutable.ArrayBuffer.empty[String]) +=
-          mapper.writeValueAsString(line)
-      }
-      override def commit(): WriterCommitMessage = {
-        val fs = new Path(stagingDir).getFileSystem(graft.kv.HadoopConf.get)
-        val frags = bufs.toSeq.sortBy(_._1).map { case (b, buf) =>
-          val frag = new Path(
-            stagingDir, f"part-b$b%04d-$partitionId%05d-$taskId.jsonl")
-          val out = fs.create(frag, false)
-          try out.write((buf.mkString("\n") + "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          b -> frag.toString
-        }
-        BucketFragmentsMessage(partitionId, frags)
-      }
-      override def abort(): Unit = ()
-      override def close(): Unit = ()
-    }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    stagingDir.getFileSystem(conf).delete(stagingDir, true)
 }
 
 private[graft] class BucketedPotStreamingWrite(write: BucketedPotWrite)
@@ -634,27 +598,15 @@ private[graft] class BucketedPotStreamingWrite(write: BucketedPotWrite)
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new BucketedPotStreamingWriterFactory(
-      write.stagingBase, write.buckets, write.keyIdx, write.docIdx)
+    write.writerFactory
   override def commit(
       epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     write.commitEpoch(epochId, messages)
   override def abort(
       epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val staging = new Path(write.stagingBase + s"-e$epochId")
-    staging.getFileSystem(graft.kv.HadoopConf.get).delete(staging, true)
+    staging.getFileSystem(write.conf).delete(staging, true)
   }
-}
-
-private[graft] class BucketedPotStreamingWriterFactory(
-    stagingBase: String, nBuckets: Int, keyIdx: Int, docIdx: Int)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(
-      partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new BucketedPotWriterFactory(
-      s"$stagingBase-e$epochId", nBuckets, keyIdx, docIdx)
-      .createWriter(partitionId, taskId)
 }
 
 // ===================== row-level ops (MERGE / UPDATE) ====================
@@ -698,8 +650,10 @@ private[sources] class BucketedPinnedScanBuilder(
     override def toBatch: Batch = this
     override def description(): String =
       s"BucketedPotPinnedScan(root=$root, gens=${observed.toSeq.sorted})"
+    private lazy val conf = PotV2Source.sessionConf()
+    private lazy val taskConf = PotV2Source.broadcastConf(conf)
     override def planInputPartitions(): Array[InputPartition] = {
-      val fs = new Path(root).getFileSystem(graft.kv.HadoopConf.get)
+      val fs = new Path(root).getFileSystem(conf)
       observed.toSeq.sorted.flatMap { case (b, g) =>
         val pot = new Path(BucketedPotV2Source.bucketPot(root, b))
         if (g > 0) {
@@ -721,7 +675,7 @@ private[sources] class BucketedPinnedScanBuilder(
       }.toArray
     }
     override def createReaderFactory(): PartitionReaderFactory =
-      new PotV2ReaderFactory(required.fieldNames, Array.empty, None)
+      new PotV2ReaderFactory(taskConf, required.fieldNames, Array.empty, None)
   }
 }
 
@@ -741,22 +695,19 @@ private[graft] class BucketedPotDeltaWrite(
     .map(_.toLong).getOrElse(PotV2Source.DefaultMaxObjectBytes)
 
   private def stagingDir = new Path(root, s".staging-${info.queryId()}")
+  private lazy val conf = PotV2Source.sessionConf()
 
   override def toBatch: DeltaBatchWrite = this
 
   override def createBatchWriterFactory(
       pinfo: PhysicalWriteInfo): DeltaWriterFactory =
-    new BucketedPotDeltaWriterFactory(
+    new PotFragmentWriterFactory(PotV2Source.broadcastConf(conf),
       stagingDir.toString, nBuckets, rowKeyIdx, rowDocIdx, idKeyIdx)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     BucketedPotV2Source.stampBuckets(root, nBuckets)
-    val fs = new Path(root).getFileSystem(graft.kv.HadoopConf.get)
-    val perBucket = messages
-      .collect { case m: BucketFragmentsMessage => m }
-      .flatMap(m => m.fragments.map { case (b, f) =>
-        (b, PotFragmentMessage(m.partitionId, f)) })
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val fs = new Path(root).getFileSystem(conf)
+    val perBucket = BucketFragmentsMessage.perBucket(messages)
     val buckets = perBucket.keys.toSeq.sorted
     val qid8 = info.queryId().replace("-", "").take(8)
     // r15 statement barrier (see BucketedStmtLog): base = the op's pinned
@@ -768,17 +719,18 @@ private[graft] class BucketedPotDeltaWrite(
         BucketedStmtLog.intentBody("delta", info.queryId(),
           truncate = false, ceiling, buckets,
           buckets.map(b => b -> observed.getOrElse(b, 0L)).toMap,
-          perBucket.view.mapValues(_.toSeq.map(m =>
+          perBucket.view.mapValues(_.map(m =>
             (m.partitionId, m.fragment))).toMap))
     try buckets.foreach { b =>
       val pot = BucketedPotV2Source.bucketPot(root, b)
       val w = new PotV2Write(pot, PotV2Source.Schema,
-        s"${info.queryId()}-b$b", truncateFirst = false, ceiling)
+        s"${info.queryId()}-b$b", truncateFirst = false, ceiling,
+        conf = conf)
       // statement-tagged so a crashed statement's recovery adopts the
       // buckets it already committed instead of re-raising its own
       // generation as a conflict
       w.commitEntries(
-        perBucket(b).asInstanceOf[Array[WriterCommitMessage]],
+        perBucket(b).toArray[WriterCommitMessage],
         truncate = false, snapTag = Some(s"q$qid8"),
         retryOnConflict = false,
         staging = new Path(stagingDir, s"done-b$b"),
@@ -795,66 +747,6 @@ private[graft] class BucketedPotDeltaWrite(
     else fs.delete(stagingDir, true)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(root).getFileSystem(graft.kv.HadoopConf.get)
-    fs.delete(stagingDir, true)
-  }
-}
-
-private[graft] class BucketedPotDeltaWriterFactory(
-    stagingDir: String, nBuckets: Int,
-    rowKeyIdx: Int, rowDocIdx: Int, idKeyIdx: Int)
-    extends DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : DeltaWriter[InternalRow] =
-    new DeltaWriter[InternalRow] {
-      private val mapper = new ObjectMapper()
-      private val bufs = scala.collection.mutable.Map
-        .empty[Int, scala.collection.mutable.ArrayBuffer[String]]
-      private def bufOf(key: String) = bufs.getOrElseUpdate(
-        BucketedPotV2Source.bucketOf(key, nBuckets),
-        scala.collection.mutable.ArrayBuffer.empty[String])
-      private def upsert(row: InternalRow): Unit = {
-        val key = row.getUTF8String(rowKeyIdx).toString
-        val doc = row.getUTF8String(rowDocIdx).toString
-        val node = mapper.readTree(doc)
-        require(node != null && node.isObject,
-          s"doc_json for key '$key' must be a JSON object: $doc")
-        val line = mapper.createObjectNode()
-        line.put("k", key)
-        line.set("d", node)
-        bufOf(key) += mapper.writeValueAsString(line)
-      }
-      override def insert(row: InternalRow): Unit = upsert(row)
-      override def update(
-          meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
-        val oldKey = id.getUTF8String(idKeyIdx).toString
-        // a key-reassigning UPDATE moves the doc ACROSS buckets: the old
-        // identity dies in its own bucket's delta
-        if (oldKey != row.getUTF8String(rowKeyIdx).toString)
-          bufOf(oldKey) +=
-            s"""{"k":${mapper.writeValueAsString(oldKey)},"d":null}"""
-        upsert(row)
-      }
-      override def delete(meta: InternalRow, id: InternalRow): Unit = {
-        val key = id.getUTF8String(idKeyIdx).toString
-        bufOf(key) +=
-          s"""{"k":${mapper.writeValueAsString(key)},"d":null}"""
-      }
-      override def commit(): WriterCommitMessage = {
-        val fs = new Path(stagingDir).getFileSystem(graft.kv.HadoopConf.get)
-        val frags = bufs.toSeq.sortBy(_._1).map { case (b, buf) =>
-          val frag = new Path(
-            stagingDir, f"delta-b$b%04d-$partitionId%05d-$taskId.jsonl")
-          val out = fs.create(frag, false)
-          try out.write((buf.mkString("\n") + "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          b -> frag.toString
-        }
-        BucketFragmentsMessage(partitionId, frags)
-      }
-      override def abort(): Unit = ()
-      override def close(): Unit = ()
-    }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    stagingDir.getFileSystem(conf).delete(stagingDir, true)
 }

@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** STATEMENT-ATOMIC multi-bucket DML for the sharded pot store (r15) —
@@ -86,7 +85,7 @@ private[graft] object BucketedStmtLog {
   private def ckptDir(root: String) = new Path(root, "_stmts/ckpt")
 
   private def fsOf(root: String): FileSystem =
-    new Path(root).getFileSystem(graft.kv.HadoopConf.get)
+    new Path(root).getFileSystem(PotV2Source.sessionConf())
 
   /** Build an intent body. `frags` maps bucket -> (partitionId, fragment
     * path); `base` is the touched buckets' head-generation vector at
@@ -633,10 +632,11 @@ private[graft] object BucketedStmtLog {
       def base(b: Int): Long =
         Option(j.get("base").get(b.toString)).map(_.asLong()).getOrElse(0L)
       val stagingRoots = scala.collection.mutable.Set.empty[Path]
+      val conf = PotV2Source.sessionConf()
       buckets.foreach { b =>
         val pot = BucketedPotV2Source.bucketPot(root, b)
         val w = new PotV2Write(pot, PotV2Source.Schema,
-          s"${j.get("qid").asText()}-b$b", truncate, ceiling)
+          s"${j.get("qid").asText()}-b$b", truncate, ceiling, conf = conf)
         val msgs = frags(b)
         msgs.collect { case m: PotFragmentMessage => m }
           .foreach(m => stagingRoots += new Path(m.fragment).getParent)

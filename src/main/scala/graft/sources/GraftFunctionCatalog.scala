@@ -333,7 +333,7 @@ object VacuumPotProcedure extends GraftMaintenanceProcedure(
   "delete pot snapshot bodies below the covering snapshot (CAS-fenced)") {
   override protected def run(arg: String): Seq[String] = {
     val fs = new org.apache.hadoop.fs.Path(arg)
-      .getFileSystem(graft.kv.HadoopConf.get)
+      .getFileSystem(PotV2Source.sessionConf())
     PotV2Source.vacuumSnapshots(fs, arg)
   }
 }
@@ -361,7 +361,7 @@ object EnsureStatsProcedure extends GraftMaintenanceProcedure(
   "backfill missing zone-map sidecars for snapshot-headed pots") {
   override protected def run(arg: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(arg)
-    val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = p.getFileSystem(PotV2Source.sessionConf())
     // a bucketed-store ROOT analyzes every bucket (the u58/u50 front
     // door); a pot path or glob is taken verbatim
     val bucketed = !PotV2Source.isGlob(arg) &&
@@ -388,7 +388,7 @@ object CheckPotProcedure extends GraftMaintenanceProcedure(
     "opened") {
   override protected def run(arg: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(arg)
-    val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = p.getFileSystem(PotV2Source.sessionConf())
     val bucketed = !PotV2Source.isGlob(arg) &&
       graft.kv.BucketMeta.stored(fs, p).isDefined
     if (bucketed) {
@@ -438,7 +438,7 @@ object ClonePotProcedure
     val src = input.getUTF8String(0).toString
     val dst = input.getUTF8String(1).toString
     val fs = new org.apache.hadoop.fs.Path(src)
-      .getFileSystem(graft.kv.HadoopConf.get)
+      .getFileSystem(PotV2Source.sessionConf())
     val bucketed = !PotV2Source.isGlob(src) && graft.kv.BucketMeta
       .stored(fs, new org.apache.hadoop.fs.Path(src)).isDefined
     val cloned: Seq[(String, Long)] =
@@ -576,7 +576,7 @@ object VacuumPotRetainProcedure extends GraftMaintenanceProcedure2(
     require(ms >= 0L,
       s"vacuum_pot_retain: retain_hours must be >= 0, got $hours")
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = p.getFileSystem(PotV2Source.sessionConf())
     val bucketed = !PotV2Source.isGlob(path) &&
       graft.kv.BucketMeta.stored(fs, p).isDefined
     val pots: Seq[String] =
@@ -609,7 +609,7 @@ object CompactPotProcedure extends GraftMaintenanceProcedure(
   "fold delta-headed chains into snapshots (state-identical)") {
   override protected def run(path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = p.getFileSystem(PotV2Source.sessionConf())
     val pots: Seq[String] =
       if (!PotV2Source.isGlob(path) &&
           graft.kv.BucketMeta.stored(fs, p).isDefined) {

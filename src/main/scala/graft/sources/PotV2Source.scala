@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -15,6 +17,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 connector for the reference's native pot storage — one
   * `data.json` object per pot path holding a single JSON map
@@ -136,6 +139,27 @@ object PotV2Source {
     * DELETE) reject globs through this one definition. */
   def isGlob(path: String): Boolean = path.exists(c => "*?[{".contains(c))
 
+  /** The Hadoop conf a pot scan or write resolves its FileSystems from:
+    * the conf of the session planning the query (`spark.hadoop.*` and
+    * session-set `fs.<scheme>.*` included, as for Spark's own file
+    * sources). A table, scan or write takes it once, when first needed
+    * (a copy costs ~0.3 ms), and resolves each FileSystem from that copy
+    * through Hadoop's FileSystem cache. Tasks never build one: they read
+    * the scan's or write's [[broadcastConf]]. */
+  private[graft] def sessionConf(): Configuration =
+    SparkSession.active.sessionState.newHadoopConf()
+
+  /** `conf` shipped to tasks as Spark's `FileScan` ships it: ONE
+    * broadcast per scan or write, kept in a `lazy val` of its owner
+    * (Spark may ask a scan for its reader factory more than once per
+    * query). A conf serialises to ~110 KB, so embedding it in a factory,
+    * partition or writer would cost every task a deserialisation; the
+    * broadcast is fetched once per executor. */
+  private[graft] def broadcastConf(conf: Configuration)
+      : Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext
+      .broadcast(new SerializableConfiguration(conf))
+
   /** Unsigned UTF-8 byte comparison — the ONE string order the engine
     * uses everywhere a pushdown must be semantically invisible (key
     * extremes u49, TopN u28, zone maps u57): Spark's StringType order. */
@@ -213,7 +237,7 @@ object PotV2Source {
     require(!isGlob(path),
       s"PotV2Source: timestampAsOf reads need ONE pot object, not a glob: $path")
     val p = new Path(path)
-    val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = p.getFileSystem(sessionConf())
     val commits = new Path(p.getParent, ".commits")
     val millis = parseTsMillis(ts)
     val gens = graft.kv.CommitMarker.committedGenerations(fs, commits)
@@ -496,7 +520,7 @@ object PotV2Source {
     if (PotChain.isSnap(PotChain.artifactOf(fs, commits, head))) return None
     val qid = s"compact-${java.util.UUID.randomUUID()}"
     val w = new PotV2Write(pot, Schema, qid, truncateFirst = false,
-      DefaultMaxObjectBytes)
+      DefaultMaxObjectBytes, conf = fs.getConf)
     // report the generation the fold ACTUALLY published — a head re-read
     // here could name a concurrent writer's (possibly delta-headed)
     // generation as the compaction result (r18 ADVICE)
@@ -1208,6 +1232,7 @@ private[sources] class PotV2Table(path: String,
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
   require(path != null && path.nonEmpty,
     "PotV2Source: .option(\"path\", <glob of data.json objects>) is required")
+  private lazy val conf = PotV2Source.sessionConf()
   override def name(): String = s"pot-json:$path"
   override def schema(): StructType = PotV2Source.schemaWith(shred)
 
@@ -1316,7 +1341,7 @@ private[sources] class PotV2Table(path: String,
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     import java.nio.charset.StandardCharsets.UTF_8
     val target = new Path(path)
-    val fs = target.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = target.getFileSystem(conf)
     val dir = target.getParent
     val commits = new Path(dir, ".commits")
     val mapper = new ObjectMapper()
@@ -1372,7 +1397,8 @@ private[sources] class PotV2Table(path: String,
         PotV2Filters.accepts(filters, "pot_file", path)
     }
     val w = new PotV2Write(path, PotV2Source.Schema,
-      java.util.UUID.randomUUID().toString, truncateFirst = true)
+      java.util.UUID.randomUUID().toString, truncateFirst = true,
+      conf = conf)
     val staging = new Path(w.stagingBase)
     fs.mkdirs(staging)
     val frag = new Path(staging, "delete-rewrite.jsonl")
@@ -1409,6 +1435,8 @@ private[graft] class PotV2ScanBuilder(
   private var pushedTopN: Option[(Boolean, Int)] = None
   private var pushedSample: Option[Long] = None
   private var pushedOffset: Option[Int] = None
+  /** The planning session's conf, shared with the scan this builds. */
+  protected lazy val conf: Configuration = PotV2Source.sessionConf()
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
@@ -1675,7 +1703,7 @@ private[graft] class PotV2ScanBuilder(
   protected def keyBucketGrain: Option[Int] = None
 
   override def build(): Scan =
-    new PotV2Scan(path, required, pushed, aggGroupedByFile, generation,
+    new PotV2Scan(conf, path, required, pushed, aggGroupedByFile, generation,
       pushedLimit, pushedTopN, capResolver, pushedSample, shred, aggKinds,
       maxGensPerTrigger, pushedOffset, keyBucketGrain, maxPotsPerTrigger)
 }
@@ -1816,8 +1844,12 @@ private[graft] object PotV2Filters {
   }
 }
 
+/** A pot scan. FileSystems resolve from `conf`, the Hadoop conf of the
+  * session that planned the query ([[PotV2Source.sessionConf]]); its
+  * tasks read the same conf from one broadcast made in
+  * [[createReaderFactory]]. */
 private[graft] class PotV2Scan(
-    path: String, required: StructType,
+    conf: Configuration, path: String, required: StructType,
     pushed: Array[org.apache.spark.sql.sources.Filter],
     aggGroupedByFile: Option[Boolean] = None,
     generation: Option[Long] = None,
@@ -2009,8 +2041,8 @@ private[graft] class PotV2Scan(
         "how many pots advance per batch); rate a single pot's chain " +
         "with maxGenerationsPerTrigger")
     if (path.exists(c => "*?[{".contains(c)))
-      new PotV2MultiPotStream(path, required, maxPotsPerTrigger)
-    else new PotV2MicroBatchStream(path, required, maxGensPerTrigger)
+      new PotV2MultiPotStream(path, required, maxPotsPerTrigger, conf)
+    else new PotV2MicroBatchStream(path, required, maxGensPerTrigger, conf)
   }
 
   /** Planning memo (r17): planInputPartitions is consulted several
@@ -2040,7 +2072,7 @@ private[graft] class PotV2Scan(
 
   private def planInputPartitionsUncached(): Array[InputPartition] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = p.getFileSystem(conf)
     // TIME TRAVEL: `.option("generation", n)` pins the read to commit n of
     // the write chain (the connector's VERSION AS OF, pairing with kv7's
     // PotTable time travel) — the reader scans that generation's immutable
@@ -2213,8 +2245,10 @@ private[graft] class PotV2Scan(
     else parts
   }
 
+  private lazy val taskConf = PotV2Source.broadcastConf(conf)
   override def createReaderFactory(): PartitionReaderFactory =
-    new PotV2ReaderFactory(required.fieldNames, pushed, aggGroupedByFile,
+    new PotV2ReaderFactory(taskConf,
+      required.fieldNames, pushed, aggGroupedByFile,
       pushedLimit, pushedTopN, pushedSample, shred, aggKinds, pushedOffset)
 
   /** Statistics reporting (r15) — the missing piece for DATA-DRIVEN join
@@ -2237,7 +2271,7 @@ private[graft] class PotV2Scan(
   override def estimateStatistics(): Statistics = {
     import java.util.OptionalLong
     val p = new Path(path)
-    val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = p.getFileSystem(conf)
     def len(f: String): Long =
       try fs.getFileStatus(new Path(f)).getLen
       catch { case _: java.io.FileNotFoundException => 0L }
@@ -2388,6 +2422,7 @@ private[sources] object PotV2ReaderFactory {
 }
 
 private[sources] class PotV2ReaderFactory(
+    conf: Broadcast[SerializableConfiguration],
     columns: Array[String],
     pushed: Array[org.apache.spark.sql.sources.Filter],
     aggGroupedByFile: Option[Boolean] = None,
@@ -2501,7 +2536,7 @@ private[sources] class PotV2ReaderFactory(
     // per entry here — correct, and honest about what a delta-headed
     // chain costs; the snapshot paths below never pay it.
     def foldedEntries(sp: PotStatePartition): Iterator[PotEntry] = {
-      val fs = new Path(sp.dir).getFileSystem(graft.kv.HadoopConf.get)
+      val fs = new Path(sp.dir).getFileSystem(conf.value.value)
       val mapper = new ObjectMapper()
       PotChain.stateAtWithGen(fs, new Path(sp.dir, ".commits"), sp.gen)
         .entrySet().asScala.iterator
@@ -2585,7 +2620,7 @@ private[sources] class PotV2ReaderFactory(
           if (fileGen <= 0L || !statsOnlyEligible) return false
           try {
             val p = new Path(file)
-            val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+            val fs = p.getFileSystem(conf.value.value)
             val commits = new Path(p.getParent, ".commits")
             val body = PotChain.artifactOf(fs, commits, fileGen)
             if (body == null || PotChain.isDgen(body)) return false
@@ -2607,7 +2642,7 @@ private[sources] class PotV2ReaderFactory(
           case _ if tryStatsOnly() => ()
           case _ =>
             val p = new Path(file)
-            val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+            val fs = p.getFileSystem(conf.value.value)
             val in = fs.open(p)
             val root = try new ObjectMapper().readTree(in)
               finally in.close()
@@ -2656,7 +2691,7 @@ private[sources] class PotV2ReaderFactory(
       // decides a row survives (stringification is the dominant cost).
       def streamedFields(p: Path)
           : Iterator[(String, com.fasterxml.jackson.databind.JsonNode)] = {
-        val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+        val fs = p.getFileSystem(conf.value.value)
         val mapper = new ObjectMapper()
         val parser = mapper.getFactory.createParser(
           fs.open(p): java.io.InputStream)
@@ -2707,7 +2742,7 @@ private[sources] class PotV2ReaderFactory(
               .flatMap(e => admit(e._1, e._2))
           case _ =>
             val p = new Path(file)
-            val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+            val fs = p.getFileSystem(conf.value.value)
             val in = fs.open(p)
             val root = try new ObjectMapper().readTree(in) finally in.close()
             require(root != null && root.isObject,
@@ -2864,12 +2899,17 @@ private[sources] class PotV2WriteBuilder(
 private[graft] case class PotFragmentMessage(
     partitionId: Int, fragment: String) extends WriterCommitMessage
 
+/** A write to one pot object. The driver-side commit resolves its
+  * FileSystems from `conf` (by default the conf of the session running
+  * the write, [[PotV2Source.sessionConf]]); the write's tasks read the
+  * same conf from the one broadcast its `writerFactory` carries. */
 private[graft] class PotV2Write(
     path: String, schema: StructType, queryId: String,
     private[graft] val truncateFirst: Boolean,
     maxObjectBytes: Long = PotV2Source.DefaultMaxObjectBytes,
     private[graft] val compactEvery: Int = 8,
-    private[graft] val compactBytesFactor: Double = 4.0)
+    private[graft] val compactBytesFactor: Double = 4.0,
+    private[graft] val conf: Configuration = PotV2Source.sessionConf())
     extends Write with BatchWrite {
   import java.nio.charset.StandardCharsets.UTF_8
 
@@ -2895,8 +2935,12 @@ private[graft] class PotV2Write(
 
   override def createBatchWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : DataWriterFactory =
-    new PotV2WriterFactory(stagingDir.toString, keyIdx, docIdx)
+      : DataWriterFactory = writerFactory
+
+  /** The fragment writer of this write's batch and streaming tasks. */
+  private[graft] lazy val writerFactory = new PotFragmentWriterFactory(
+    PotV2Source.broadcastConf(conf), stagingBase, nBuckets = 1,
+    keyIdx, docIdx)
 
   private[graft] def qid8: String =
     queryId.replace("-", "").take(8)
@@ -2964,7 +3008,7 @@ private[graft] class PotV2Write(
       snapTag: Option[String], retryOnConflict: Boolean,
       staging: Path, expectedHeadGen: Option[Long] = None): Long = {
     val target = new Path(path)
-    val fs = target.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = target.getFileSystem(conf)
     val dir = target.getParent
     val commits = new Path(dir, ".commits")
     val mapper = new ObjectMapper()
@@ -3203,7 +3247,7 @@ private[graft] class PotV2Write(
       staging: Path): Unit = {
     import java.nio.charset.StandardCharsets.UTF_8
     val target = new Path(path)
-    val fs = target.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = target.getFileSystem(conf)
     val dir = target.getParent
     val commits = new Path(dir, ".commits")
     val mapper = new ObjectMapper()
@@ -3327,13 +3371,11 @@ private[graft] class PotV2Write(
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    commitEntries(messages, truncateFirst, snapTag = None,
-      retryOnConflict = false, staging = stagingDir)
+    commitEntries(PotV2Write.fragments(messages), truncateFirst,
+      snapTag = None, retryOnConflict = false, staging = stagingDir)
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(graft.kv.HadoopConf.get)
-    fs.delete(stagingDir, true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    stagingDir.getFileSystem(conf).delete(stagingDir, true)
 }
 
 /** Streaming half of the connector: `writeStream.format(PotV2Source)` —
@@ -3360,10 +3402,9 @@ private[graft] class PotV2StreamingWrite(write: PotV2Write)
   override def createStreamingWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : StreamingDataWriterFactory =
-    // a concrete factory with only primitive fields: capturing the
-    // enclosing (non-serializable) Write here fails task serialization
-    new PotV2StreamingWriterFactory(
-      write.stagingBase, write.keyIdx, write.docIdx)
+    // the factory holds no reference to the (non-serializable) Write:
+    // capturing it here would fail task serialization
+    write.writerFactory
 
   override def commit(
       epochId: Long, messages: Array[WriterCommitMessage]): Unit =
@@ -3376,31 +3417,28 @@ private[graft] class PotV2StreamingWrite(write: PotV2Write)
     // epoch IS the whole object, so the snapshot path is its honest
     // cost; APPEND epochs go through the O(change-set) delta path.)
     if (write.truncateFirst)
-      write.commitEntries(messages, truncate = true,
+      write.commitEntries(PotV2Write.fragments(messages), truncate = true,
         snapTag = Some(tag(epochId)), retryOnConflict = true,
         staging = write.epochStagingDir(epochId))
     else
-      write.commitDeltaEpoch(messages, tag(epochId),
+      write.commitDeltaEpoch(PotV2Write.fragments(messages), tag(epochId),
         staging = write.epochStagingDir(epochId))
 
   override def abort(
       epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val staging = write.epochStagingDir(epochId)
-    staging.getFileSystem(graft.kv.HadoopConf.get).delete(staging, true)
+    staging.getFileSystem(write.conf).delete(staging, true)
   }
 }
 
-private[graft] class PotV2StreamingWriterFactory(
-    stagingBase: String, keyIdx: Int, docIdx: Int)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(
-      partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new PotV2WriterFactory(s"$stagingBase-e$epochId", keyIdx, docIdx)
-      .createWriter(partitionId, taskId)
-}
-
 private[graft] object PotV2Write {
+  /** The tasks' [[PotFragmentWriterFactory]] messages as one pot's
+    * fragments: a plain pot is the one-bucket store, all in bucket 0. */
+  def fragments(messages: Array[WriterCommitMessage])
+      : Array[WriterCommitMessage] =
+    BucketFragmentsMessage.perBucket(messages).getOrElse(0, Nil)
+      .toArray[WriterCommitMessage]
+
   /** Latest committed (gen, snapshot path) from the marker chain. */
   def latestSnapshot(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -3444,7 +3482,7 @@ private[graft] object PotV2Write {
       val copied =
         try {
           org.apache.hadoop.fs.FileUtil.copy(
-            fs, new Path(snap), fs, tmp, false, graft.kv.HadoopConf.get)
+            fs, new Path(snap), fs, tmp, false, fs.getConf)
           true
         } catch {
           case _: java.io.FileNotFoundException =>
@@ -3475,14 +3513,56 @@ private[graft] object PotV2Write {
   }
 }
 
-private[graft] class PotV2WriterFactory(
-    stagingDir: String, keyIdx: Int, docIdx: Int) extends DataWriterFactory {
-  override def createWriter(
-      partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
+/** The ONE task-side fragment writer: plain and bucketed pots, batch
+  * INSERT/overwrite, streaming epochs and row-level MERGE/UPDATE/DELETE
+  * all stage through it, and the driver commits what it names.
+  *
+  *   - Line format: one `{"k":<key>,"d":<doc>}` line per staged row,
+  *     `d` the Jackson rendering of `doc_json`, which must parse to a
+  *     JSON object (anything else fails the task, naming the key).
+  *   - Tombstones: a row-level delete stages `{"k":<key>,"d":null}`; an
+  *     UPDATE that reassigns `key` (`SET key = ...`) moves the document,
+  *     so it also stages a tombstone for the old key. The commits apply
+  *     every tombstone before any upsert.
+  *   - One create per fragment, at task commit: a fragment exists iff its
+  *     task committed, and the driver merges only the fragments the
+  *     commit messages name, so task retries and speculation never
+  *     double-apply.
+  *   - Routing: a row goes to the fragment of bucket
+  *     `BucketedPotV2Source.bucketOf(key, nBuckets)`; a plain pot is the
+  *     one-bucket case (`nBuckets = 1`). Commits take
+  *     [[BucketFragmentsMessage]]s, which
+  *     `BucketFragmentsMessage.perBucket` regroups per bucket.
+  *
+  * Batch writers stage under `stagingDir`, streaming epoch `e` under
+  * `stagingDir-e<e>`. `idKeyIdx` is the key's index in the row-id schema
+  * of a row-level operation (-1: an insert-only write). Fragments are
+  * written through the write's broadcast session conf.
+  */
+private[graft] class PotFragmentWriterFactory(
+    conf: Broadcast[SerializableConfiguration], stagingDir: String,
+    nBuckets: Int, keyIdx: Int, docIdx: Int, idKeyIdx: Int = -1)
+    extends DeltaWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long)
+      : DeltaWriter[InternalRow] = writer(stagingDir, partitionId, taskId)
+
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
+      : DataWriter[InternalRow] =
+    writer(s"$stagingDir-e$epochId", partitionId, taskId)
+
+  private def writer(dir: String, partitionId: Int, taskId: Long)
+      : DeltaWriter[InternalRow] =
+    new DeltaWriter[InternalRow] {
       private val mapper = new ObjectMapper()
-      private val buf = new scala.collection.mutable.ArrayBuffer[String]()
-      override def write(row: InternalRow): Unit = {
+      private val bufs = scala.collection.mutable.SortedMap
+        .empty[Int, StringBuilder]
+      private def stage(key: String, line: String): Unit =
+        bufs.getOrElseUpdate(BucketedPotV2Source.bucketOf(key, nBuckets),
+          new StringBuilder).append(line).append('\n')
+      private def tombstone(key: String): Unit =
+        stage(key, s"""{"k":${mapper.writeValueAsString(key)},"d":null}""")
+      override def insert(row: InternalRow): Unit = {
         val key = row.getUTF8String(keyIdx).toString
         val doc = row.getUTF8String(docIdx).toString
         val node = mapper.readTree(doc)
@@ -3491,19 +3571,27 @@ private[graft] class PotV2WriterFactory(
         val line = mapper.createObjectNode()
         line.put("k", key)
         line.set("d", node)
-        buf += mapper.writeValueAsString(line)
+        stage(key, mapper.writeValueAsString(line))
       }
+      override def update(
+          meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
+        val oldKey = id.getUTF8String(idKeyIdx).toString
+        if (oldKey != row.getUTF8String(keyIdx).toString) tombstone(oldKey)
+        insert(row)
+      }
+      override def delete(meta: InternalRow, id: InternalRow): Unit =
+        tombstone(id.getUTF8String(idKeyIdx).toString)
       override def commit(): WriterCommitMessage = {
-        // single create on commit: a fragment exists iff its task
-        // committed, and only message-named fragments are merged — task
-        // retries / speculation can never double-apply
-        val frag = new Path(stagingDir, f"part-$partitionId%05d-$taskId.jsonl")
-        val fs = frag.getFileSystem(graft.kv.HadoopConf.get)
-        val out = fs.create(frag, false)
-        try out.write((buf.mkString("\n") + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        PotFragmentMessage(partitionId, frag.toString)
+        val fs = new Path(dir).getFileSystem(conf.value.value)
+        BucketFragmentsMessage(partitionId, bufs.toSeq.map { case (b, buf) =>
+          val frag =
+            new Path(dir, f"part-b$b%04d-$partitionId%05d-$taskId.jsonl")
+          val out = fs.create(frag, false)
+          try out.write(buf.toString
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          finally out.close()
+          b -> frag.toString
+        })
       }
       override def abort(): Unit = ()
       override def close(): Unit = ()
@@ -3554,9 +3642,11 @@ private[graft] class PotChangesScan(
   override def description(): String =
     s"PotChangesScan(path=$path, changesFrom=" +
       vector.map(v => v.toSeq.sorted.toString).getOrElse(from.toString) + ")"
+  private lazy val conf = PotV2Source.sessionConf()
+  private lazy val taskConf = PotV2Source.broadcastConf(conf)
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = p.getFileSystem(conf)
     def headOf(pot: Path): Long =
       graft.kv.CommitMarker.head(fs, new Path(pot.getParent, ".commits"))
     vector match {
@@ -3602,7 +3692,7 @@ private[graft] class PotChangesScan(
     }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new PotV2DeltaReaderFactory(required.fieldNames)
+    new PotV2DeltaReaderFactory(taskConf, required.fieldNames)
 }
 
 // ============ row-level operations (MERGE / UPDATE / DELETE) ============
@@ -3643,9 +3733,10 @@ private[graft] class PotRowLevelOperation(
   // commit a loud CommitConflict, never a delta applied over state it
   // never saw (the u18 rewrite's discipline; a too-early capture can only
   // produce a FALSE conflict, which retries — never a lost update).
+  private val conf = PotV2Source.sessionConf()
   private val observedHeadGen: Long = {
     val p = new Path(path)
-    val fs = p.getFileSystem(graft.kv.HadoopConf.get)
+    val fs = p.getFileSystem(conf)
     PotV2Write.latestSnapshot(fs, new Path(p.getParent, ".commits"))
       .map(_._1).getOrElse(0L)
   }
@@ -3664,7 +3755,7 @@ private[graft] class PotRowLevelOperation(
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite =
-        new PotV2DeltaWrite(path, info, observedHeadGen)
+        new PotV2DeltaWrite(path, info, observedHeadGen, conf)
     }
   override def rowId()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -3674,7 +3765,7 @@ private[graft] class PotRowLevelOperation(
 private[graft] class PotV2DeltaWrite(
     path: String,
     info: org.apache.spark.sql.connector.write.LogicalWriteInfo,
-    observedHeadGen: Long)
+    observedHeadGen: Long, conf: Configuration = PotV2Source.sessionConf())
     extends org.apache.spark.sql.connector.write.DeltaWrite
     with org.apache.spark.sql.connector.write.DeltaBatchWrite {
   require(!PotV2Source.isGlob(path),
@@ -3688,7 +3779,7 @@ private[graft] class PotV2DeltaWrite(
   private val inner = new PotV2Write(
     path, PotV2Source.Schema, info.queryId(), truncateFirst = false,
     Option(info.options.get("maxObjectBytes")).map(_.toLong)
-      .getOrElse(PotV2Source.DefaultMaxObjectBytes))
+      .getOrElse(PotV2Source.DefaultMaxObjectBytes), conf = conf)
   // a pure DELETE rewrite carries an EMPTY row schema (only rowIds
   // flow); key/doc indices are then never consulted
   private val rowKeyIdx = info.schema().fieldNames.indexOf("key")
@@ -3706,67 +3797,19 @@ private[graft] class PotV2DeltaWrite(
   override def createBatchWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-    new PotV2DeltaWriterFactory(
-      inner.stagingBase, rowKeyIdx, rowDocIdx, idKeyIdx)
+    new PotFragmentWriterFactory(PotV2Source.broadcastConf(conf),
+      inner.stagingBase, nBuckets = 1, rowKeyIdx, rowDocIdx, idKeyIdx)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    inner.commitEntries(messages, truncate = false, snapTag = None,
-      retryOnConflict = false,
+    inner.commitEntries(PotV2Write.fragments(messages), truncate = false,
+      snapTag = None, retryOnConflict = false,
       staging = new Path(inner.stagingBase),
       expectedHeadGen = Some(observedHeadGen))
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(graft.kv.HadoopConf.get)
-    fs.delete(new Path(inner.stagingBase), true)
+    val staging = new Path(inner.stagingBase)
+    staging.getFileSystem(conf).delete(staging, true)
   }
-}
-
-private[graft] class PotV2DeltaWriterFactory(
-    stagingDir: String, rowKeyIdx: Int, rowDocIdx: Int, idKeyIdx: Int)
-    extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-      private val mapper = new ObjectMapper()
-      private val buf = new scala.collection.mutable.ArrayBuffer[String]()
-      private def upsert(row: InternalRow): Unit = {
-        val key = row.getUTF8String(rowKeyIdx).toString
-        val doc = row.getUTF8String(rowDocIdx).toString
-        val node = mapper.readTree(doc)
-        require(node != null && node.isObject,
-          s"doc_json for key '$key' must be a JSON object: $doc")
-        val line = mapper.createObjectNode()
-        line.put("k", key)
-        line.set("d", node)
-        buf += mapper.writeValueAsString(line)
-      }
-      override def insert(row: InternalRow): Unit = upsert(row)
-      override def update(
-          meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
-        // an UPDATE that reassigns the rowId (`SET key = ...`) MOVES the
-        // document: the old identity must die or the pot would keep both
-        // (key IS the row identity — a rename is delete + insert)
-        val oldKey = id.getUTF8String(idKeyIdx).toString
-        if (oldKey != row.getUTF8String(rowKeyIdx).toString)
-          buf += s"""{"k":${mapper.writeValueAsString(oldKey)},"d":null}"""
-        upsert(row)
-      }
-      override def delete(meta: InternalRow, id: InternalRow): Unit =
-        buf += s"""{"k":${mapper.writeValueAsString(
-          id.getUTF8String(idKeyIdx).toString)},"d":null}"""
-      override def commit(): WriterCommitMessage = {
-        val frag = new Path(
-          stagingDir, f"delta-$partitionId%05d-$taskId.jsonl")
-        val fs = frag.getFileSystem(graft.kv.HadoopConf.get)
-        val out = fs.create(frag, false)
-        try out.write((buf.mkString("\n") + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        PotFragmentMessage(partitionId, frag.toString)
-      }
-      override def abort(): Unit = ()
-      override def close(): Unit = ()
-    }
 }
 
 // ================== streaming read (MICRO_BATCH_READ) ===================
@@ -3829,12 +3872,14 @@ private[graft] case class PotDeltaPartition(
   * run, batches == ceil(backlog/n)). */
 private[graft] class PotV2MicroBatchStream(
     path: String, required: StructType,
-    maxGensPerTrigger: Option[Int] = None)
+    maxGensPerTrigger: Option[Int] = None,
+    conf: Configuration = PotV2Source.sessionConf())
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  private def fs = new Path(path).getFileSystem(graft.kv.HadoopConf.get)
+  private def fs = new Path(path).getFileSystem(conf)
+  private lazy val taskConf = PotV2Source.broadcastConf(conf)
   private def commits = new Path(new Path(path).getParent, ".commits")
 
   private def head: Long = graft.kv.CommitMarker.head(fs, commits)
@@ -3868,7 +3913,7 @@ private[graft] class PotV2MicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PotV2DeltaReaderFactory(required.fieldNames)
+    new PotV2DeltaReaderFactory(taskConf, required.fieldNames)
 }
 
 /** Multi-pot change feed (st18): one streaming source over a GLOB of pot
@@ -3883,8 +3928,10 @@ private[graft] class PotV2MicroBatchStream(
   * carry provenance in `pot_file` (`<dir>/data.json@<gen>`), so a
   * consumer can fan the merged feed back out per pot.
   */
-private[graft] class PotV2MultiPotStream(glob: String, required: StructType,
-    maxPotsPerTrigger: Option[Int] = None)
+private[graft] class PotV2MultiPotStream(
+    glob: String, required: StructType,
+    maxPotsPerTrigger: Option[Int] = None,
+    conf: Configuration = PotV2Source.sessionConf())
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
@@ -3921,7 +3968,8 @@ private[graft] class PotV2MultiPotStream(glob: String, required: StructType,
 
   override def reportLatestOffset(): Offset = latestOffset()
 
-  private def fs = new Path(glob).getFileSystem(graft.kv.HadoopConf.get)
+  private def fs = new Path(glob).getFileSystem(conf)
+  private lazy val taskConf = PotV2Source.broadcastConf(conf)
 
   private def pots(): Seq[Path] =
     Option(fs.globStatus(new Path(glob))).map(_.toSeq).getOrElse(Seq.empty)
@@ -3990,17 +4038,18 @@ private[graft] class PotV2MultiPotStream(glob: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PotV2DeltaReaderFactory(required.fieldNames)
+    new PotV2DeltaReaderFactory(taskConf, required.fieldNames)
 }
 
-private[graft] class PotV2DeltaReaderFactory(columns: Array[String])
+private[graft] class PotV2DeltaReaderFactory(
+    conf: Broadcast[SerializableConfiguration], columns: Array[String])
     extends PartitionReaderFactory {
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[PotDeltaPartition]
     new PartitionReader[InternalRow] {
       private val entries: Iterator[(String, String)] = {
-        val fs = new Path(p.dir).getFileSystem(graft.kv.HadoopConf.get)
+        val fs = new Path(p.dir).getFileSystem(conf.value.value)
         val commits = new Path(p.dir, ".commits")
         val mapper = new ObjectMapper()
         // O(delta) fast path: each commit writes a `.delta-<stem>.jsonl`

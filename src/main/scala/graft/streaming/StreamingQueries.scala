@@ -2050,7 +2050,7 @@ object StreamingQueries {
       // ---- the consumer (the BucketedStmtLog recipe) ----
       def appliedView(phase: String): DataFrame = {
         val fs = new org.apache.hadoop.fs.Path(store)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
+          .getFileSystem(s.sessionState.newHadoopConf())
         // statement-tag dimension: (bucket, generation) -> artifact stem
         // tag. Bounded metadata (buckets x generations markers).
         val TagRe = "^\\.(?:snap|dgen)-(q[0-9a-z]+)-".r

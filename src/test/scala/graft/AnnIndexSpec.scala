@@ -15,7 +15,7 @@ class AnnIndexSpec extends AnyFunSuite {
   import TestSpark._
 
   private def fsFor(p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    p.getFileSystem(spark.sessionState.newHadoopConf())
 
   private def writeTinyIndex(out: String): Unit = {
     import spark.implicits._

@@ -198,7 +198,7 @@ class BucketedPotSpec extends AnyFunSuite {
     intercept[Throwable] {
       // force b to attempt the same generation by replaying marker creation
       val m = new org.apache.hadoop.fs.Path(s"$root/t/_commits/$winner")
-      val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = m.getFileSystem(spark.sessionState.newHadoopConf())
       fs.create(m, false).close()
     }
   }
@@ -240,7 +240,7 @@ class BucketedPotSpec extends AnyFunSuite {
     // publisher commits 60 generations, and must never see length 0.
     val root = tmpRoot()
     val commits = new org.apache.hadoop.fs.Path(s"$root/t/_commits")
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = commits.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(commits)
     @volatile var huskSeen = false
     @volatile var done = false
@@ -336,7 +336,7 @@ class BucketedPotSpec extends AnyFunSuite {
     val pot = BucketedPotTable(spark, root, "t", nBuckets = 4)
     pot.upsert(Seq(("a", 1)).toDF("key", "v"))
     val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     fs.create(new org.apache.hadoop.fs.Path(s"$root/t/_commits/2"), false).close()
     assert(pot.generation === 1L)
     pot.upsert(Seq(("b", 2)).toDF("key", "v"))
@@ -416,7 +416,7 @@ class BucketedPotSpec extends AnyFunSuite {
     val src = s"$dir/src"; val dst = s"$dir/dst"; val dst2 = s"$dir/dst2"
     val fmt = classOf[BucketedPotV2Source].getName
     val fs = new org.apache.hadoop.fs.Path(src)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .getFileSystem(spark.sessionState.newHadoopConf())
     def write(rows: Seq[(String, Int)], root: String): Unit =
       rows.map { case (k, v) => ("", k, s"""{"v": $v}""") }
         .toDF("pot_file", "key", "doc_json")
@@ -538,7 +538,7 @@ class BucketedPotSpec extends AnyFunSuite {
     val root = s"$dir/store"
     val fmt = classOf[BucketedPotV2Source].getName
     val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .getFileSystem(spark.sessionState.newHadoopConf())
     def write(rows: Seq[(String, Int)]): Unit =
       rows.map { case (k, v) => ("", k, s"""{"v": $v}""") }
         .toDF("pot_file", "key", "doc_json")
@@ -606,7 +606,7 @@ class BucketedPotSpec extends AnyFunSuite {
     val src = s"$dir/src/data.json"; val dst = s"$dir/dst/data.json"
     val fmt = classOf[PotV2Source].getName
     val fs = new org.apache.hadoop.fs.Path(src)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .getFileSystem(spark.sessionState.newHadoopConf())
     def write(rows: Seq[(String, Int)]): Unit =
       rows.map { case (k, v) => ("", k, s"""{"v": $v}""") }
         .toDF("pot_file", "key", "doc_json")
@@ -643,7 +643,7 @@ class BucketedPotSpec extends AnyFunSuite {
       .write.format(classOf[graft.sources.BucketedPotV2Source].getName)
       .option("path", store).option("buckets", "4").mode("append").save()
     val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val buckets = graft.sources.BucketedPotV2Source
       .existingBuckets(store, 4)
     assert(buckets.nonEmpty)
@@ -671,7 +671,7 @@ class BucketedPotSpec extends AnyFunSuite {
   }
 
   private def fsOf(root: String) = new org.apache.hadoop.fs.Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    .getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Generation `g`'s manifest lines. */
   private def manifestLines(root: String, g: Long): Seq[String] =

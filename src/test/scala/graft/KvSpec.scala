@@ -99,7 +99,7 @@ class KvSpec extends AnyFunSuite {
     // writer crashed between create and close (husk at gen 2), AND the
     // reclaimer that found it crashed after winning the reclaim file
     val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     fs.create(new org.apache.hadoop.fs.Path(s"$root/t/_commits/2"), false).close()
     fs.create(new org.apache.hadoop.fs.Path(s"$root/t/_commits/2.reclaim"), false).close()
 
@@ -122,7 +122,7 @@ class KvSpec extends AnyFunSuite {
     // simulate a writer that died between fs.create(marker) and close():
     // a zero-length husk at the next generation
     val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     fs.create(new org.apache.hadoop.fs.Path(s"$root/t/_commits/2"), false).close()
 
     // the husk is not a commit: readers and generation() ignore it
@@ -358,7 +358,7 @@ class KvSpec extends AnyFunSuite {
       }
     }
     fs.initialize(new java.net.URI("file:///"),
-      spark.sparkContext.hadoopConfiguration)
+      spark.sessionState.newHadoopConf())
     // no other writer exists, so this failure is OURS: the old code
     // reported "already committed by another writer" here
     val e = intercept[PotTable.CommitIncomplete](
@@ -542,7 +542,7 @@ class KvSpec extends AnyFunSuite {
     // fully applied (upsert + applied marker), pb/pc untouched — the one
     // crash quadrant prepare-crash/rebase/idempotent-replay didn't cover.
     val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     PotTable(spark, root, "pa").upsert(Seq(("t1", 1)).toDF("key", "v"))
     val done = new org.apache.hadoop.fs.Path(s"$root/_txns/applied/$n/pa")
     fs.mkdirs(done.getParent)
@@ -678,7 +678,7 @@ class KvSpec extends AnyFunSuite {
   }
 
   private def fsOf(root: String) = new org.apache.hadoop.fs.Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    .getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Generation `g`'s marker body: the staged path, and the schema line if
     * there is one (`txn` lines, if any, follow it).

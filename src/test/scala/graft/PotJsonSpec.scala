@@ -324,7 +324,7 @@ class PotJsonSpec extends AnyFunSuite {
     // (range_1 holds k05-k09, matched by neither probe key) — it stops
     // pruning (partition count rises by one) but results stay correct
     val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val zmaps = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_1"))
       .map(_.getPath).filter(_.getName.startsWith(".zmap-"))
     assert(zmaps.length === 1, "expected exactly one zone-map sidecar")
@@ -477,7 +477,7 @@ class PotJsonSpec extends AnyFunSuite {
     // missing evidence: drop object 0's sidecar — it can't be skipped
     // and can't prove others skippable; object 1 still counts for 2+
     val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val zm0 = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_0"))
       .map(_.getPath).filter(_.getName.startsWith(".zmap-"))
     assert(zm0.length === 1)
@@ -543,7 +543,7 @@ class PotJsonSpec extends AnyFunSuite {
         .write.format(fmt).option("path", src).mode(mode).save()
     put("a", 1, "overwrite"); put("b", 2, "append"); put("c", 3, "append")
     val fs = new org.apache.hadoop.fs.Path(src)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .getFileSystem(spark.sessionState.newHadoopConf())
     // 1h window: everything young, nothing reclaimed; gen-1 pin serves
     assert(graft.sources.PotV2Source
       .vacuumSnapshots(fs, src, 3600000L).isEmpty)
@@ -777,7 +777,7 @@ class PotJsonSpec extends AnyFunSuite {
       "runtime In(key) must zone-map-prune to the two covering objects")
     // a sidecar-less pot admits under the same runtime filter
     val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .getFileSystem(spark.sessionState.newHadoopConf())
     fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_1"))
       .map(_.getPath).filter(_.getName.startsWith(".zmap-"))
       .foreach(z => fs.delete(z, false))
@@ -869,7 +869,7 @@ class PotJsonSpec extends AnyFunSuite {
     def snaps() = potDir.listFiles().count(_.getName.startsWith(".snap-"))
     assert(snaps() === 3)
     val fs = new org.apache.hadoop.fs.Path(pot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val deleted = graft.sources.PotV2Source.vacuumSnapshots(fs, pot)
     assert(deleted.size === 2 && snaps() === 1)
     // content untouched, and the chain accepts the next generation
@@ -885,7 +885,7 @@ class PotJsonSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("potv2fence").toString
     val pot = s"$dir/t/data.json"
     val fs = new org.apache.hadoop.fs.Path(pot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val nWriters = 4
     val perWriter = 5
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -899,9 +899,7 @@ class PotJsonSpec extends AnyFunSuite {
             val write = new graft.sources.PotV2Write(
               pot, graft.sources.PotV2Source.Schema, s"q-$w",
               truncateFirst = false)
-            val wr = new graft.sources.PotV2WriterFactory(
-              write.epochStagingDir(i.toLong).toString, 1, 2)
-              .createWriter(0, 0L)
+            val wr = write.writerFactory.createWriter(0, 0L, i.toLong)
             wr.write(InternalRow(UTF8String.fromString(""),
               UTF8String.fromString(s"k$w-$i"),
               UTF8String.fromString(s"""{"v": $i}""")))
@@ -983,14 +981,13 @@ class PotJsonSpec extends AnyFunSuite {
     val sw = write.toStreaming
     def stage(epoch: Long, key: String, v: Int)
         : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-      val w = new graft.sources.PotV2WriterFactory(
-        write.epochStagingDir(epoch).toString, 1, 2).createWriter(0, 0L)
+      val w = write.writerFactory.createWriter(0, 0L, epoch)
       w.write(InternalRow(UTF8String.fromString(""),
         UTF8String.fromString(key), UTF8String.fromString(s"""{"v": $v}""")))
       w.commit()
     }
     val fs = new org.apache.hadoop.fs.Path(pot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
     def gens() = graft.kv.CommitMarker.committedGenerations(fs, commits).sorted
     sw.commit(5L, Array(stage(5L, "k1", 1)))
@@ -1009,8 +1006,7 @@ class PotJsonSpec extends AnyFunSuite {
     val write2 = new graft.sources.PotV2Write(
       pot, graft.sources.PotV2Source.Schema, "q-other",
       truncateFirst = false)
-    val w2 = new graft.sources.PotV2WriterFactory(
-      write2.epochStagingDir(5L).toString, 1, 2).createWriter(0, 0L)
+    val w2 = write2.writerFactory.createWriter(0, 0L, 5L)
     w2.write(InternalRow(UTF8String.fromString(""),
       UTF8String.fromString("k3"), UTF8String.fromString("""{"v": 3}""")))
     write2.toStreaming.commit(5L, Array(w2.commit()))
@@ -1038,8 +1034,7 @@ class PotJsonSpec extends AnyFunSuite {
     val sw = write.toStreaming
     def stage(epoch: Long, key: String, v: Int)
         : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-      val w = new graft.sources.PotV2WriterFactory(
-        write.epochStagingDir(epoch).toString, 1, 2).createWriter(0, 0L)
+      val w = write.writerFactory.createWriter(0, 0L, epoch)
       w.write(InternalRow(UTF8String.fromString(""),
         UTF8String.fromString(key), UTF8String.fromString(s"""{"v": $v}""")))
       w.commit()
@@ -1063,7 +1058,7 @@ class PotJsonSpec extends AnyFunSuite {
     val pot = s"$dir/t/data.json"
     val fmt = classOf[graft.sources.PotV2Source].getName
     val fs = new org.apache.hadoop.fs.Path(pot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
     def artifact(g: Long) =
       graft.kv.CommitMarker.read(fs,
@@ -1083,8 +1078,7 @@ class PotJsonSpec extends AnyFunSuite {
     val sw = write.toStreaming
     def stage(epoch: Long, key: String, v: Int)
         : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-      val w = new graft.sources.PotV2WriterFactory(
-        write.epochStagingDir(epoch).toString, 1, 2).createWriter(0, 0L)
+      val w = write.writerFactory.createWriter(0, 0L, epoch)
       w.write(InternalRow(UTF8String.fromString(""),
         UTF8String.fromString(key), UTF8String.fromString(s"""{"v": $v}""")))
       w.commit()
@@ -1176,8 +1170,7 @@ class PotJsonSpec extends AnyFunSuite {
     val sw = write.toStreaming
     def stage(w: graft.sources.PotV2Write, epoch: Long, key: String)
         : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-      val dw = new graft.sources.PotV2WriterFactory(
-        w.epochStagingDir(epoch).toString, 1, 2).createWriter(0, 0L)
+      val dw = w.writerFactory.createWriter(0, 0L, epoch)
       dw.write(InternalRow(UTF8String.fromString(""),
         UTF8String.fromString(key), UTF8String.fromString("""{"v": 0}""")))
       dw.commit()
@@ -1203,7 +1196,7 @@ class PotJsonSpec extends AnyFunSuite {
     val pot = s"$dir/t/data.json"
     val fmt = classOf[graft.sources.PotV2Source].getName
     val fs = new org.apache.hadoop.fs.Path(pot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
     def artifact(g: Long) = graft.kv.CommitMarker.read(fs,
       new org.apache.hadoop.fs.Path(commits, g.toString))
@@ -1217,8 +1210,7 @@ class PotJsonSpec extends AnyFunSuite {
     val sw = write.toStreaming
     def stage(epoch: Long, rows: Seq[(String, String)])
         : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-      val w = new graft.sources.PotV2WriterFactory(
-        write.epochStagingDir(epoch).toString, 1, 2).createWriter(0, 0L)
+      val w = write.writerFactory.createWriter(0, 0L, epoch)
       rows.foreach { case (k, d) => w.write(InternalRow(
         UTF8String.fromString(""), UTF8String.fromString(k),
         UTF8String.fromString(d))) }
@@ -1253,8 +1245,7 @@ class PotJsonSpec extends AnyFunSuite {
     val sw2 = write2.toStreaming
     def stage2(epoch: Long, rows: Seq[(String, String)])
         : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-      val w = new graft.sources.PotV2WriterFactory(
-        write2.epochStagingDir(epoch).toString, 1, 2).createWriter(0, 0L)
+      val w = write2.writerFactory.createWriter(0, 0L, epoch)
       rows.foreach { case (k, d) => w.write(InternalRow(
         UTF8String.fromString(""), UTF8String.fromString(k),
         UTF8String.fromString(d))) }
@@ -1374,7 +1365,7 @@ class PotJsonSpec extends AnyFunSuite {
         .write.format(fmt).option("path", pot).mode(mode).save()
     put("a", 1, "overwrite"); put("a", 2, "append"); put("b", 3, "append")
     val fs = new org.apache.hadoop.fs.Path(pot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val deleted = graft.sources.PotV2Source.vacuumSnapshots(fs, pot)
     assert(deleted.nonEmpty, "vacuum should reclaim the superseded bodies")
     // the SQL path gets the PotTable.getAt contract: loud and NAMED
@@ -1452,7 +1443,7 @@ class PotJsonSpec extends AnyFunSuite {
     put(Seq("b" -> 9), "append")
     put(Seq("c" -> 3), "overwrite")
     val potDir = new org.apache.hadoop.fs.Path(s"$root/t")
-    val fs = potDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = potDir.getFileSystem(spark.sessionState.newHadoopConf())
     def ls(prefix: String) = fs.listStatus(potDir).map(_.getPath.getName)
       .filter(_.startsWith(prefix)).toSeq
     assert(ls(".delta-").size === 3, s"expected 3 sidecars, got ${ls(".delta-")}")
@@ -1606,7 +1597,7 @@ class PotJsonSpec extends AnyFunSuite {
     // the delete generation's sidecar carries the dropped keys as
     // tombstones — the change feed (and st19's mirror) sees the DELETE
     val potDir = new org.apache.hadoop.fs.Path(s"$root/t")
-    val fs = potDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = potDir.getFileSystem(spark.sessionState.newHadoopConf())
     val deltas = fs.listStatus(potDir).map(_.getPath)
       .filter(_.getName.startsWith(".delta-"))
     val bodies = deltas.map { p =>
@@ -1645,7 +1636,7 @@ class PotJsonSpec extends AnyFunSuite {
       === Seq("a1" -> """{"v":1}""", "a2" -> """{"v":9}"""))
     // the whole statement is ONE generation on the chain
     val commits = new org.apache.hadoop.fs.Path(s"$root/t/.commits")
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = commits.getFileSystem(spark.sessionState.newHadoopConf())
     assert(graft.kv.CommitMarker.committedGenerations(fs, commits).max === 2L)
     spark.sql(s"DROP TABLE $tbl")
   }
@@ -1872,7 +1863,7 @@ class PotJsonSpec extends AnyFunSuite {
     new graft.sources.PotV2DeltaWrite(pot,
       infoWith(java.util.Map.of()), 1L).commit(Array.empty)
     val commits = new org.apache.hadoop.fs.Path(s"$root/t/.commits")
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = commits.getFileSystem(spark.sessionState.newHadoopConf())
     assert(graft.kv.CommitMarker.committedGenerations(fs, commits).max === 2L)
   }
 
@@ -1893,7 +1884,7 @@ class PotJsonSpec extends AnyFunSuite {
     // here the chain stays corrupt, so the loop must end in the loud
     // re-run contract — never a raw FileNotFoundException)
     val dirP = new org.apache.hadoop.fs.Path(s"$root/t")
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = dirP.getFileSystem(spark.sessionState.newHadoopConf())
     fs.listStatus(dirP).map(_.getPath)
       .filter(_.getName.startsWith(".snap-")).foreach(fs.delete(_, false))
     val e = intercept[Exception] { spark.sql(s"DELETE FROM $tbl WHERE key = 'a'") }
@@ -1919,7 +1910,7 @@ class PotJsonSpec extends AnyFunSuite {
     seed.toDF("pot_file", "key", "doc_json").createOrReplaceTempView("bpot_seed")
     spark.sql(s"INSERT INTO $tbl SELECT * FROM bpot_seed")
     val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val bucketDirs = fs.listStatus(new org.apache.hadoop.fs.Path(root))
       .map(_.getPath.getName).filter(_.startsWith("_b=")).toSeq
     assert(bucketDirs.size > 1 && bucketDirs.size <= 8,
@@ -2052,6 +2043,8 @@ class PotJsonSpec extends AnyFunSuite {
   }
 
   test("PotV2 scan reports statistics (r15): a small pot dim auto-broadcasts in a join plan, a large one does not") {
+    // a session of its own: the conf set below reaches no other test
+    val spark = TestSpark.spark.newSession()
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("potv2stats").toString
     val fmt = classOf[graft.sources.PotV2Source].getName
@@ -2067,35 +2060,32 @@ class PotJsonSpec extends AnyFunSuite {
       s"k$i" -> s"""{"pad": "${"x" * 100}"}"""))
     val facts = (1 to 500).flatMap(i => (1 to 10).map(k => (s"k$k", i)))
       .toDF("key", "amt")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
-      def planOf(pot: String): String = {
-        val dim = spark.read.format(fmt)
-          .option("path", s"$root/$pot/data.json").load()
-        facts.join(dim, "key").queryExecution.executedPlan.toString
-      }
-      // the small pot's reported sizeInBytes is under the threshold: Spark
-      // PLANS the broadcast (no stats -> defaultSizeInBytes -> never)
-      assert(planOf("small").contains("BroadcastHashJoin"),
-        s"small pot did not auto-broadcast:\n${planOf("small")}")
-      // the large pot reports over-threshold bytes: a shuffle join,
-      // not an executor-memory-blowing forced broadcast
-      assert(!planOf("large").contains("BroadcastHashJoin"),
-        s"large pot wrongly auto-broadcast:\n${planOf("large")}")
-      // pushed pot_file pruning shrinks the report: the two-object glob is
-      // over threshold unfiltered, but an exact pot_file predicate prunes
-      // to the small object and the join broadcasts again
-      val glob = spark.read.format(fmt)
-        .option("path", s"$root/*/data.json").load()
-      val smallPath = glob.select($"pot_file").distinct().as[String]
-        .collect().find(_.contains("small")).get
-      val prunedPlan = facts
-        .join(glob.filter($"pot_file" === smallPath), "key")
-        .queryExecution.executedPlan.toString
-      assert(prunedPlan.contains("BroadcastHashJoin"),
-        s"pruned scan did not shrink the stats report:\n$prunedPlan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
+    def planOf(pot: String): String = {
+      val dim = spark.read.format(fmt)
+        .option("path", s"$root/$pot/data.json").load()
+      facts.join(dim, "key").queryExecution.executedPlan.toString
+    }
+    // the small pot's reported sizeInBytes is under the threshold: Spark
+    // PLANS the broadcast (no stats -> defaultSizeInBytes -> never)
+    assert(planOf("small").contains("BroadcastHashJoin"),
+      s"small pot did not auto-broadcast:\n${planOf("small")}")
+    // the large pot reports over-threshold bytes: a shuffle join,
+    // not an executor-memory-blowing forced broadcast
+    assert(!planOf("large").contains("BroadcastHashJoin"),
+      s"large pot wrongly auto-broadcast:\n${planOf("large")}")
+    // pushed pot_file pruning shrinks the report: the two-object glob is
+    // over threshold unfiltered, but an exact pot_file predicate prunes
+    // to the small object and the join broadcasts again
+    val glob = spark.read.format(fmt)
+      .option("path", s"$root/*/data.json").load()
+    val smallPath = glob.select($"pot_file").distinct().as[String]
+      .collect().find(_.contains("small")).get
+    val prunedPlan = facts
+      .join(glob.filter($"pot_file" === smallPath), "key")
+      .queryExecution.executedPlan.toString
+    assert(prunedPlan.contains("BroadcastHashJoin"),
+      s"pruned scan did not shrink the stats report:\n$prunedPlan")
   }
 
   test("PotV2 limit/TopN pushdown (r15): the reader stops parsing at k, top-k by key is k-bounded per object") {
@@ -2144,6 +2134,8 @@ class PotJsonSpec extends AnyFunSuite {
   }
 
   test("PotV2 numRows statistics (r16): commit-stamped counts reach the logical stats; key filters cap them; CBO reorders a 3-way join") {
+    // a session of its own: the conf set below reaches no other test
+    val spark = TestSpark.spark.newSession()
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("potv2rows").toString
     val fmt = classOf[graft.sources.PotV2Source].getName
@@ -2182,33 +2174,24 @@ class PotJsonSpec extends AnyFunSuite {
     // CBO join reorder: with rowCount flowing, the DP reorder joins the
     // two SMALL pots before touching the 1000-row one — declared order
     // deliberately puts the big pot first
-    val prevCbo = spark.conf.get("spark.sql.cbo.enabled")
-    val prevRe = spark.conf.get("spark.sql.cbo.joinReorder.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val a = pot("a").select($"key".as("k"), $"doc_json".as("da"))
-      val b = pot("b").select($"key".as("k"), $"doc_json".as("db"))
-      val c = pot("c").select($"key".as("k"), $"doc_json".as("dc"))
-      val opt = a.join(b, "k").join(c, "k")
-        .queryExecution.optimizedPlan
-      // the innermost (first-executed) join must NOT be the declared
-      // a-join-b pair: the DP reorder pulls the SMALLEST relation into
-      // it (observed plan: (a JOIN c) JOIN b — the 50-row mid moves out)
-      val leafRows = opt.collectLeaves().map(_.stats.rowCount)
-      info(s"leaf order after reorder: $leafRows")
-      assert(leafRows !== List(Some(BigInt(1000)), Some(BigInt(50)),
-        Some(BigInt(6))),
-        s"CBO kept the declared join order; leaves: $leafRows\n$opt")
-      assert(leafRows.take(2).flatten.exists(_ <= BigInt(6)),
-        s"smallest pot not in the innermost join; leaves: $leafRows\n$opt")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", prevCbo)
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", prevRe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
+    spark.conf.set("spark.sql.cbo.enabled", "true")
+    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val a = pot("a").select($"key".as("k"), $"doc_json".as("da"))
+    val b = pot("b").select($"key".as("k"), $"doc_json".as("db"))
+    val c = pot("c").select($"key".as("k"), $"doc_json".as("dc"))
+    val opt = a.join(b, "k").join(c, "k")
+      .queryExecution.optimizedPlan
+    // the innermost (first-executed) join must NOT be the declared
+    // a-join-b pair: the DP reorder pulls the SMALLEST relation into
+    // it (observed plan: (a JOIN c) JOIN b — the 50-row mid moves out)
+    val leafRows = opt.collectLeaves().map(_.stats.rowCount)
+    info(s"leaf order after reorder: $leafRows")
+    assert(leafRows !== List(Some(BigInt(1000)), Some(BigInt(50)),
+      Some(BigInt(6))),
+      s"CBO kept the declared join order; leaves: $leafRows\n$opt")
+    assert(leafRows.take(2).flatten.exists(_ <= BigInt(6)),
+      s"smallest pot not in the innermost join; leaves: $leafRows\n$opt")
   }
 
   test("PotV2 TopN pushdown (r16): UTF-8 byte order — supplementary-char keys never evicted by a BMP key >= U+E000") {
@@ -2624,8 +2607,7 @@ class PotJsonSpec extends AnyFunSuite {
     val sw = write.toStreaming
     def stage(epoch: Long, key: String)
         : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-      val w = new graft.sources.PotV2WriterFactory(
-        write.epochStagingDir(epoch).toString, 1, 2).createWriter(0, 0L)
+      val w = write.writerFactory.createWriter(0, 0L, epoch)
       w.write(InternalRow(UTF8String.fromString(""),
         UTF8String.fromString(key), UTF8String.fromString("""{"v": 0}""")))
       w.commit()
@@ -2657,6 +2639,8 @@ class PotJsonSpec extends AnyFunSuite {
 
   test("PotV2 TABLESAMPLE pushdown (u41): consistent key-hash sample " +
     "reaches the scan; replacement sampling declines to post-scan") {
+    // a session of its own: the conf set below reaches no other test
+    val spark = TestSpark.spark.newSession()
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("potv2sample").toString
     val pot = s"$dir/t/data.json"
@@ -2706,20 +2690,18 @@ class PotJsonSpec extends AnyFunSuite {
     // then genuinely differ (200 keys at 30%: identical draws are
     // ~impossible), where the default push makes them identical
     spark.conf.set("spark.graft.sample.pushConsistent", "false")
-    try {
-      def seeded(seed: Long) = spark.read.format(fmt)
-        .option("path", pot).load()
-        .sample(withReplacement = false, 0.3, seed = seed)
-      val splan = seeded(42L).queryExecution.executedPlan.toString
-      assert(!splan.contains("PushedSample") && splan.contains("Sample"),
-        s"pushConsistent=false did not decline the push:\n$splan")
-      val s1 = seeded(42L).select($"key").as[String].collect().toSet
-      val s2 = seeded(7L).select($"key").as[String].collect().toSet
-      assert(s1 !== s2,
-        "declined push should give Spark's seeded (seed-sensitive) sample")
-      assert(seeded(42L).select($"key").as[String].collect().toSet === s1,
-        "Spark's REPEATABLE contract broke under the declined push")
-    } finally spark.conf.unset("spark.graft.sample.pushConsistent")
+    def seeded(seed: Long) = spark.read.format(fmt)
+      .option("path", pot).load()
+      .sample(withReplacement = false, 0.3, seed = seed)
+    val splan = seeded(42L).queryExecution.executedPlan.toString
+    assert(!splan.contains("PushedSample") && splan.contains("Sample"),
+      s"pushConsistent=false did not decline the push:\n$splan")
+    val s1 = seeded(42L).select($"key").as[String].collect().toSet
+    val s2 = seeded(7L).select($"key").as[String].collect().toSet
+    assert(s1 !== s2,
+      "declined push should give Spark's seeded (seed-sensitive) sample")
+    assert(seeded(42L).select($"key").as[String].collect().toSet === s1,
+      "Spark's REPEATABLE contract broke under the declined push")
   }
 
   test("BucketedPotV2 inherits doc-field shredding (u45, r17): typed " +
@@ -2756,7 +2738,7 @@ class PotJsonSpec extends AnyFunSuite {
         .write.format(fmt).option("path", pot).mode(mode).save()
     write(Seq(("a", """{"v": 1}"""), ("b", """{"v": 1}""")), "overwrite")
     val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
-    val fs = commits.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = commits.getFileSystem(spark.sessionState.newHadoopConf())
     def mtime(g: Int): Long = fs.getFileStatus(
       new org.apache.hadoop.fs.Path(commits, g.toString)).getModificationTime
     val t1 = mtime(1)
@@ -2933,7 +2915,7 @@ class PotJsonSpec extends AnyFunSuite {
         .toDF("pot_file", "key", "doc_json")
         .write.format(fmt).option("path", pot).mode("overwrite").save()
       val fs = new org.apache.hadoop.fs.Path(pot)
-        .getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .getFileSystem(spark.sessionState.newHadoopConf())
       val staging = new org.apache.hadoop.fs.Path(s"$dir/c$p/.st")
       fs.mkdirs(staging)
       val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
@@ -2976,7 +2958,7 @@ class PotJsonSpec extends AnyFunSuite {
     // INCOMPLETE EVIDENCE: drop chain a's dgen sidecar — the chain
     // admits again (no pruning, never wrong)
     val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .getFileSystem(spark.sessionState.newHadoopConf())
     val dz = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/ca"))
       .map(_.getPath).filter(_.getName.startsWith(".dzmap-"))
     assert(dz.length === 1, "expected exactly one dgen sidecar")
@@ -3102,8 +3084,7 @@ class PotJsonSpec extends AnyFunSuite {
     val sw = write.toStreaming
     def stage(epoch: Long, key: String, v: Int)
         : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-      val w = new graft.sources.PotV2WriterFactory(
-        write.epochStagingDir(epoch).toString, 1, 2).createWriter(0, 0L)
+      val w = write.writerFactory.createWriter(0, 0L, epoch)
       w.write(org.apache.spark.sql.catalyst.InternalRow(
         org.apache.spark.unsafe.types.UTF8String.fromString(""),
         org.apache.spark.unsafe.types.UTF8String.fromString(key),

@@ -705,7 +705,7 @@ class PropertySpec extends AnyFunSuite {
         .createTempDirectory(s"prop-compact$trial").toString
       val pot = s"$dir/t/data.json"
       val fs = new org.apache.hadoop.fs.Path(pot)
-        .getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .getFileSystem(spark.sessionState.newHadoopConf())
       // base snapshot
       (0 to 9).map(i => ("", s"k$i", s"""{"v": $i}"""))
         .toDF("pot_file", "key", "doc_json")
@@ -974,7 +974,7 @@ class PropertySpec extends AnyFunSuite {
         .toDF("pot_file", "key", "doc_json")
         .write.format(fmt).option("path", pot).mode("overwrite").save()
       val fs = new org.apache.hadoop.fs.Path(pot)
-        .getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .getFileSystem(spark.sessionState.newHadoopConf())
       (1 to 1 + rnd.nextInt(3)).foreach { e =>
         // each epoch touches a random slice: upserts + some deletes
         val touched = ks.filter(_ => rnd.nextInt(3) == 0)

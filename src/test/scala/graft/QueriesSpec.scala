@@ -244,7 +244,7 @@ class QueriesSpec extends AnyFunSuite {
     base.setAccessible(true)
     val basePath = base.invoke(operators.TextAnalysis, d)
       .asInstanceOf[org.apache.hadoop.fs.Path]
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
     val rulesFile = new org.apache.hadoop.fs.Path(graft.kv.CommitMarker
       .read(fs, new org.apache.hadoop.fs.Path(basePath, "commits/1")))
     val sentinel =

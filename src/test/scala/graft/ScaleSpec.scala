@@ -223,6 +223,8 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("co-bucketed tables join without any shuffle exchange") {
+    // a session of its own: the conf set below reaches no other test
+    val spark = TestSpark.spark.newSession()
     import spark.implicits._
     // in-memory catalog forgets tables across sessions but their managed
     // locations persist — clean both before writing
@@ -240,21 +242,18 @@ class ScaleSpec extends AnyFunSuite {
     Scale.writeBucketed(l.withColumnRenamed("l_orderkey", "o_orderkey"),
       "lineitem_b", "o_orderkey", 4)
 
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("orders_b")
-        .join(spark.table("lineitem_b"), "o_orderkey")
-      val exec = joined.queryExecution.executedPlan
-      val shuffles = exec.collect { case e: ShuffleExchangeExec => e }
-      assert(shuffles.isEmpty,
-        s"expected shuffle-free co-located join, got:\n${exec.treeString}")
-      // and it still computes the right thing
-      val expected = Tables.orders(spark, sf).join(
-        Tables.lineitem(spark, sf),
-        col("o_orderkey") === col("l_orderkey")).count()
-      assert(joined.count() === expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val joined = spark.table("orders_b")
+      .join(spark.table("lineitem_b"), "o_orderkey")
+    val exec = joined.queryExecution.executedPlan
+    val shuffles = exec.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.isEmpty,
+      s"expected shuffle-free co-located join, got:\n${exec.treeString}")
+    // and it still computes the right thing
+    val expected = Tables.orders(spark, sf).join(
+      Tables.lineitem(spark, sf),
+      col("o_orderkey") === col("l_orderkey")).count()
+    assert(joined.count() === expected)
   }
 
   test("q63 degree-ordered orientation is row-identical to id-order at sf0.1") {
