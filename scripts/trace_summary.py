@@ -16,23 +16,25 @@ import argparse
 import json
 import statistics
 
-# (column heading, counter name); "wall_ms" is the span's own wall time
+# (column heading, counter name, scale); "wall_ms" is the span's own wall
+# time, and kb_w the bytes written in KiB
 COLUMNS = [
-    ("wall_ms", "wall_ms"),
-    ("jobs", "exec.jobs"),
-    ("stages", "exec.stages"),
-    ("tasks", "exec.tasks"),
-    ("job_ms", "exec.job_ms"),
-    ("gap_ms", "exec.driver_gap_ms"),
-    ("fs_r", "fs.read_ops"),
-    ("fs_w", "fs.write_ops"),
-    ("fs_l", "fs.list_ops"),
-    ("fs_s", "fs.stat_ops"),
+    ("wall_ms", "wall_ms", 1),
+    ("jobs", "exec.jobs", 1),
+    ("stages", "exec.stages", 1),
+    ("tasks", "exec.tasks", 1),
+    ("job_ms", "exec.job_ms", 1),
+    ("gap_ms", "exec.driver_gap_ms", 1),
+    ("fs_r", "fs.read_ops", 1),
+    ("fs_w", "fs.write_ops", 1),
+    ("kb_w", "fs.bytes_written", 1 / 1024),
+    ("fs_l", "fs.list_ops", 1),
+    ("fs_s", "fs.stat_ops", 1),
 ]
 
 
 def load(path):
-    """span name -> (span count, {counter: median})."""
+    """span name -> (span count, {column heading: median})."""
     by_name = {}
     with open(path) as f:
         for line in f:
@@ -40,8 +42,9 @@ def load(path):
                 span = json.loads(line)
                 values = dict(span["counters"], wall_ms=span["wall_ms"])
                 by_name.setdefault(span["name"], []).append(values)
-    return {name: (len(spans), {key: statistics.median(s.get(key, 0.0) for s in spans)
-                                for _, key in COLUMNS})
+    return {name: (len(spans), {col: statistics.median(s.get(key, 0.0) * scale
+                                                       for s in spans)
+                                for col, key, scale in COLUMNS})
             for name, spans in by_name.items()}
 
 
@@ -63,21 +66,21 @@ def main():
     a = ap.parse_args()
     if len(a.traces) > 2:
         ap.error("give one trace, or two (parent, change)")
-    head = ["span", "n"] + [c for c, _ in COLUMNS]
+    cols = [c for c, _, _ in COLUMNS]
     if len(a.traces) == 1:
         spans = load(a.traces[0])
-        table([[name, str(n)] + [fmt(med[k]) for _, k in COLUMNS]
-               for name, (n, med) in sorted(spans.items())], head)
+        table([[name, str(n)] + [fmt(med[c]) for c in cols]
+               for name, (n, med) in sorted(spans.items())], ["span", "n"] + cols)
         return
     parent, change = (load(p) for p in a.traces)
-    empty = (0, {k: 0.0 for _, k in COLUMNS})
+    empty = (0, {c: 0.0 for c in cols})
     rows = []
     for name in sorted(set(parent) | set(change)):
         (n0, m0), (n1, m1) = parent.get(name, empty), change.get(name, empty)
         ratio = f"{m1['wall_ms'] / m0['wall_ms']:.2f}x" if m0["wall_ms"] else "-"
         rows.append([name, f"{n0}->{n1}", ratio] +
-                    [f"{fmt(m0[k])}->{fmt(m1[k])}" for _, k in COLUMNS])
-    table(rows, ["span", "n", "wall"] + [c for c, _ in COLUMNS])
+                    [f"{fmt(m0[c])}->{fmt(m1[c])}" for c in cols])
+    table(rows, ["span", "n", "wall"] + cols)
 
 
 if __name__ == "__main__":

@@ -17,15 +17,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   - ENGINE layer (`pot_reads`/`pot_writes`): a QueryExecutionListener
   *     classifies each completed Spark query by plan shape (write command
   *     vs read) — every job the engine runs lands in exactly one.
-  *   - OPERATION layer (`pot_lists`/`pot_removes`): list is an FS-metadata
-  *     operation that never runs a Spark query, and a remove's engine job
-  *     is a write command — neither is distinguishable from plan shape, so
-  *     the KV layer records them at the call site ([[kv.PotTable]]), the
-  *     way the reference increments inside its route handlers. A remove
-  *     therefore increments BOTH pot_writes (the engine rewrite it runs)
-  *     and pot_removes (the operation) — the reference's DELETE route
-  *     likewise rewrites data.json beneath its single PotRemoves
-  *     increment; the split here just keeps both layers observable.
+  *   - OPERATION layer (`pot_lists`/`pot_removes`): list and remove are
+  *     commit-metadata operations — a list runs no Spark query, and a
+  *     remove publishes a tombstone marker without one — so the KV layer
+  *     records them at the call site ([[kv.PotTable]]), the way the
+  *     reference increments inside its route handlers. A remove that
+  *     passes the tombstone bound restages its data, and that rewrite
+  *     also counts as an engine write.
   *
   * The lock histogram mirrors `avg_local_lock_duration`: the duration of
   * the commit-marker publish protocol (our write-side mutual exclusion,
@@ -63,7 +61,7 @@ final class Metrics extends QueryExecutionListener {
   /** One list operation (FS/catalog listing — no Spark query runs). */
   def recordList(): Unit = lists.increment()
 
-  /** One remove operation (the engine rewrite it runs still counts as a
+  /** One remove operation (a restaging remove's rewrite also counts as a
     * write at the engine layer — see class doc).
     */
   def recordRemove(): Unit = removes.increment()

@@ -21,20 +21,33 @@ import org.apache.spark.sql.types.StructType
   *     all buckets of a large table still costs one job launch, not
   *     |buckets| serial jobs;
   *   - the commit marker `_commits/<N>` contains the manifest
-  *     `bucket:stagedPath` per line; a bucket emptied by a remove gets a
+  *     `bucket:stagedPath` per line; a bucket emptied by a restage gets a
   *     TOMBSTONE line `bucket:` so the overlay drops it. One more line,
   *     `schema:<json>`, holds the table schema after generation N (the
   *     previous one widened by what N staged, `_b` excluded, every field
   *     nullable as the parquet reader returns it);
+  *   - a [[remove]] restages nothing: its manifest holds one
+  *     `del:<bucket>:<JSON array of keys>` line per touched live bucket
+  *     (the bucket from the driver-side [[bucketOf]], so no Spark job runs)
+  *     and the schema line;
   *   - readers resolve bucket i at generation G by overlaying manifests
-  *     1..G in order — the latest entry per bucket wins, and the latest
+  *     1..G in order — the latest entry per bucket wins and clears the
+  *     bucket's pending keys, `del:` lines add to them, and the latest
   *     schema line is the table's — then open the bucket dirs with that
-  *     schema, so no schema-inference job runs and a bucket staged before
-  *     a column was added reads null there. Manifests without a schema
-  *     line (stores written before it was recorded) read with inference.
-  *     Marker committed (non-empty) => its staged dirs are complete; a
-  *     losing writer deletes only its own staging and can never clobber
-  *     published data.
+  *     schema, minus the union of pending keys (one `InSet`, see
+  *     [[PotTable.live]]), so no schema-inference job runs and a bucket
+  *     staged before a column was added reads null there. Manifests
+  *     without a schema line (stores written before it was recorded) read
+  *     with inference. Marker committed (non-empty) => its staged dirs are
+  *     complete; a losing writer deletes only its own staging and can
+  *     never clobber published data.
+  *
+  * Every restage ([[upsert]], [[removeWhere]], [[compact]]) reads its
+  * buckets through the pending-key filter, so the buckets it republishes
+  * carry no pending keys. A remove whose pending set (over all buckets)
+  * would pass [[PotTable.MaxTombstones]] keys restages its touched and
+  * pending buckets instead. A binary built before `del:` lines fails on
+  * them (a bucket id that is not a number), loudly.
   *
   * `compact()` rewrites every live bucket at one generation (the
   * Spark-for-compaction role the north star assigns); `vacuum()` deletes
@@ -79,43 +92,62 @@ final class BucketedPotTable(
   private def markerPath(gen: Long) = new Path(commits, gen.toString)
 
   private val SchemaTag = "schema:"
+  import PotTable.DelTag
 
-  /** Committed generation `gen`'s manifest (empty if absent or a husk):
-    * `bucket:stagedPath` lines, where an empty path is a tombstone, and
-    * the `schema:` line's JSON if there is one.
-    */
-  private def manifestAt(gen: Long): (Map[Int, String], Option[String]) = {
-    val (schema, entries) = CommitMarker.bodyAt(fs, commits, gen).toSeq
+  /** Committed generation `gen`'s manifest (empty if absent or a husk). */
+  private def manifestAt(gen: Long): BucketedPotTable.Manifest = {
+    val lines = CommitMarker.bodyAt(fs, commits, gen).toSeq
       .flatMap(_.split("\n")).filter(_.nonEmpty)
-      .partition(_.startsWith(SchemaTag))
-    (entries.map { line =>
+    val (schema, rest) = lines.partition(_.startsWith(SchemaTag))
+    val (dels, entries) = rest.partition(_.startsWith(DelTag))
+    def split(line: String): (Int, String) = {
       val i = line.indexOf(':')
       line.take(i).toInt -> line.drop(i + 1)
-    }.toMap, schema.lastOption.map(_.stripPrefix(SchemaTag)))
+    }
+    BucketedPotTable.Manifest(entries.map(split).toMap,
+      dels.map(l => split(l.stripPrefix(DelTag)))
+        .groupMapReduce(_._1)(e => PotTable.keysOf(e._2))(_ ++ _),
+      schema.lastOption.map(_.stripPrefix(SchemaTag)))
   }
 
-  /** The table as of generation `gen`: its live bucket dirs and schema. */
-  private final class View(val dirs: Map[Int, String], val schema: Option[StructType]) {
+  /** The table as of generation `gen`: its live bucket dirs, the keys
+    * tombstoned in each since its dir was staged, and its schema. */
+  private final class View(val dirs: Map[Int, String],
+      val pending: Map[Int, Set[String]], val schema: Option[StructType]) {
     def read(paths: Seq[String]): DataFrame = PotTable.scan(spark, schema, paths)
 
-    /** One multi-path scan over every live bucket dir. */
+    /** Every pending key of `buckets`. */
+    def pendingIn(buckets: Iterable[Int]): Set[String] =
+      buckets.flatMap(pending.getOrElse(_, Set.empty)).toSet
+
+    /** One multi-path scan over every live bucket dir, pending keys
+      * filtered out. */
     def all: DataFrame =
-      if (dirs.isEmpty) spark.emptyDataFrame else read(dirs.values.toSeq.sorted)
+      if (dirs.isEmpty) spark.emptyDataFrame
+      else PotTable.live(read(dirs.values.toSeq.sorted), pendingIn(pending.keys))
   }
 
   /** The view at `gen`: bucket -> staged path by manifest overlay (oldest
-    * first; tombstoned buckets dropped after the overlay so a later
-    * tombstone shadows an earlier write), and the latest recorded schema —
-    * both from the one walk over manifests 1..gen.
+    * first; emptied buckets dropped after the overlay so a later empty
+    * entry shadows an earlier write), the pending keys per live bucket (an
+    * entry clears them, `del:` lines add to them), and the latest recorded
+    * schema — all from the one walk over manifests 1..gen.
     */
   private def resolve(gen: Long): View = {
-    val (dirs, schema) = (1L to gen)
-      .foldLeft((Map.empty[Int, String], Option.empty[String])) {
-        case ((acc, s), g) =>
-          val (m, gs) = manifestAt(g)
-          (acc ++ m, gs.orElse(s))
-      }
-    new View(dirs.filter(_._2.nonEmpty), schema.map(PotTable.parseSchema))
+    val (dirs, pending, schema) = (1L to gen).foldLeft(
+        (Map.empty[Int, String], Map.empty[Int, Set[String]],
+          Option.empty[String])) {
+      case ((acc, dels, s), g) =>
+        val m = manifestAt(g)
+        val kept = dels -- m.entries.keys
+        (acc ++ m.entries,
+          m.dels.foldLeft(kept) { case (d, (b, ks)) =>
+            d.updated(b, d.getOrElse(b, Set.empty) ++ ks) },
+          m.schema.orElse(s))
+    }
+    val live = dirs.filter(_._2.nonEmpty)
+    new View(live, pending.filter(p => live.contains(p._1)),
+      schema.map(PotTable.parseSchema))
   }
 
   /** The view a writer extends. A store written before schemas were
@@ -125,7 +157,7 @@ final class BucketedPotTable(
   private def resolveForWrite(gen: Long): View = {
     val v = resolve(gen)
     if (v.schema.isDefined || v.dirs.isEmpty) v
-    else new View(v.dirs, Some(spark.read.option("mergeSchema", "true")
+    else new View(v.dirs, v.pending, Some(spark.read.option("mergeSchema", "true")
       .parquet(v.dirs.values.toSeq.sorted: _*).schema))
   }
 
@@ -155,16 +187,18 @@ final class BucketedPotTable(
     * bucket's current staged dir — the read-side payoff of bucketing.
     * The reference serves a get by reading the whole path object
     * (server.go:210-239); here a point lookup opens one bucket's files
-    * regardless of table size. An absent bucket yields an empty frame
-    * with the table's schema.
+    * regardless of table size. An absent bucket or a pending (removed)
+    * key yields an empty frame with the table's schema.
     */
   def get(key: String): DataFrame = {
     import spark.implicits.StringToColumn
     val v = resolve(generation)
     if (v.dirs.isEmpty) return spark.emptyDataFrame
-    v.dirs.get(bucketOf(key)) match {
-      case Some(dir) => v.read(Seq(dir)).filter($"key" === key)
-      case None      => v.all.filter(lit(false))
+    val b = bucketOf(key)
+    v.dirs.get(b) match {
+      case Some(dir) if !v.pendingIn(Seq(b)).contains(key) =>
+        v.read(Seq(dir)).filter($"key" === key)
+      case _ => v.all.filter(lit(false))
     }
   }
 
@@ -179,55 +213,73 @@ final class BucketedPotTable(
     (((h % buckets) + buckets) % buckets).toInt
   }
 
-  /** Stage `df` (it carries `_b` and every table column) under a
-    * writer-unique root, one `_b=<i>` child per touched bucket, and publish
-    * it as generation `expected`+1: manifest entries for every touched
-    * bucket, tombstones for touched buckets the staging job emptied
-    * (partitionBy writes no dir for them), and `df`'s schema as the table's.
+  /** Stage `df` (it carries `_b` and every table column, and is
+    * distributed by [[byBucket]]) under a writer-unique root, one `_b=<i>`
+    * child per touched bucket, and publish it as generation `expected`+1:
+    * manifest entries for every touched bucket, empty entries for touched
+    * buckets the staging job emptied (partitionBy writes no dir for them),
+    * and `df`'s schema as the table's.
     */
   private def commitStaged(
       df: DataFrame, touched: Seq[Int], expectedGen: Long): Long = {
-    val next = expectedGen + 1
-    val stagedRoot = s"$dir/data/g${next}_${java.util.UUID.randomUUID()}"
-    df.repartition(touched.length, $"_b")
-      .write.partitionBy("_b").mode("errorifexists").parquet(stagedRoot)
+    val stagedRoot = s"$dir/data/g${expectedGen + 1}_${java.util.UUID.randomUUID()}"
+    df.write.partitionBy("_b").mode("errorifexists").parquet(stagedRoot)
     val written = fs.listStatus(new Path(stagedRoot)).toSeq
       .map(_.getPath.getName)
       .filter(_.startsWith("_b="))
       .map(_.stripPrefix("_b=").toInt).toSet
     val schema = PotTable.readSchema(StructType(df.schema.filter(_.name != "_b")))
-    val body = (touched.sorted
+    publish(touched.sorted
       .map(b => if (written(b)) s"$b:$stagedRoot/_b=$b" else s"$b:") :+
-      s"$SchemaTag${schema.json}").mkString("\n")
+      s"$SchemaTag${schema.json}", expectedGen, Some(stagedRoot))
+  }
+
+  /** CAS-publish the manifest `lines` as generation `expectedGen`+1; on a
+    * lost race delete `ownStaging` (own staging only) and rethrow.
+    */
+  private def publish(lines: Seq[String], expectedGen: Long,
+      ownStaging: Option[String]): Long = {
+    val next = expectedGen + 1
     fs.mkdirs(markerPath(next).getParent)
-    // A12: time the publish CAS like PotTable.commit (lock-hold analogue)
+    // A12: time the publish CAS like PotTable's (lock-hold analogue)
     val t0 = System.nanoTime()
     try {
-      CommitMarker.publish(fs, markerPath(next), body)
+      CommitMarker.publish(fs, markerPath(next), lines.mkString("\n"))
       next
     } catch {
       case e: CommitConflict =>
-        fs.delete(new Path(stagedRoot), true) // own staging only
+        ownStaging.foreach(s => fs.delete(new Path(s), true))
         throw e
     } finally graft.Metrics.of(spark)
       .foreach(_.recordLockMs((System.nanoTime() - t0) / 1000000L))
   }
 
-  /** Read the content of `buckets` in view `v`, `_b` recomputed from the
-    * key (deterministic), as one multi-path scan; with no live bucket among
-    * them, an empty frame with the table's schema.
+  /** `df` hash-distributed into one partition per touched bucket: the one
+    * exchange of a staging plan. */
+  private def byBucket(df: DataFrame, touched: Seq[Int]): DataFrame =
+    df.repartition(touched.length, $"_b")
+
+  /** Read the content of `buckets` in view `v` minus their pending keys,
+    * `_b` recomputed from the key (deterministic), as one multi-path scan;
+    * with no live bucket among them, an empty frame with the table's
+    * schema.
     */
   private def readBuckets(v: View, buckets: Seq[Int]): DataFrame = {
     val paths = buckets.flatMap(v.dirs.get)
     if (paths.isEmpty) spark.createDataFrame(
       java.util.List.of[Row](), v.schema.getOrElse(new StructType()))
-    else v.read(paths).withColumn("_b", bucketCol)
+    else PotTable.live(v.read(paths), v.pendingIn(buckets))
+      .withColumn("_b", bucketCol)
   }
 
   /** Partition-scoped upsert: last-writer-wins merge, but ONLY the buckets
-    * containing incoming keys are staged (one job) and republished. Returns
-    * the new generation (unchanged generation for an empty batch). A batch
-    * adding a column widens the table: untouched buckets read null there.
+    * containing incoming keys are staged and republished. Three Spark
+    * jobs: one collects the touched buckets (a bucket set per partition),
+    * and the staging write shuffles once — the batch and the
+    * old buckets are distributed by `_b`, and last-writer-wins runs as a
+    * window over (`_b`, `key`) inside that distribution. Returns the new
+    * generation (unchanged generation for an empty batch). A batch adding
+    * a column widens the table: untouched buckets read null there.
     */
   def upsert(docs: DataFrame): Long = {
     stampMeta()
@@ -237,28 +289,41 @@ final class BucketedPotTable(
       .withColumn("_modified", current_timestamp())
       .withColumn("_b", bucketCol)
     // bucket IDs only — bounded by nBuckets, not by data size
-    val touched = stamped.select($"_b").distinct().as[Int].collect().sorted.toSeq
+    val touched = stamped.select($"_b").as[Int]
+      .mapPartitions(it => Iterator(it.toArray.distinct))
+      .collect().flatten.distinct.sorted.toSeq
     if (touched.isEmpty) return gen // empty batch: no-op, don't burn a generation
-    commitStaged(
-      PotTable.lastWriterWins(stamped, readBuckets(v, touched)), touched, gen)
+    commitStaged(PotTable.latest(
+      byBucket(PotTable.sourced(stamped, readBuckets(v, touched)), touched),
+      $"_b", $"key"), touched, gen)
   }
 
-  /** Multi-key delete — again only touched, existing buckets restage (one
-    * job); a bucket whose last row is deleted becomes a manifest tombstone.
+  /** Multi-key delete as tombstones: one `del:<bucket>:<keys>` manifest
+    * line per touched live bucket, no bucket restaged, no Spark job. No
+    * commit when no live bucket is touched. When the pending set would
+    * pass [[PotTable.MaxTombstones]], the touched and pending buckets are
+    * restaged through the filter instead; a bucket whose last row goes
+    * becomes an empty entry.
     */
   def remove(keys: Seq[String]): Long = {
     graft.Metrics.of(spark).foreach(_.recordRemove()) // A12 op counter
     stampMeta()
     val gen = generation
     if (gen == 0L) return 0L
-    val v = resolveForWrite(gen)
-    val keysDf = keys.toDF("key").withColumn("_b", bucketCol)
-    val touched = keysDf.select($"_b").distinct().as[Int].collect().sorted
-      .filter(v.dirs.contains).toSeq
-    if (touched.isEmpty) return gen // nothing to delete: no-op
-    commitStaged(readBuckets(v, touched)
-      .join(broadcast(keysDf.select($"key")), Seq("key"), "left_anti"),
-      touched, gen)
+    val v = resolve(gen)
+    val byB = keys.groupBy(bucketOf).filter(e => v.dirs.contains(e._1))
+    if (byB.isEmpty) return gen // nothing to delete: no-op
+    val pending = byB.foldLeft(v.pending) { case (p, (b, ks)) =>
+      p.updated(b, p.getOrElse(b, Set.empty) ++ ks) }
+    // a key hashes to one bucket, so the per-bucket sets are disjoint
+    if (pending.values.map(_.size).sum > PotTable.MaxTombstones) {
+      val w = resolveForWrite(gen)
+      val touched = pending.keys.toSeq.sorted
+      commitStaged(byBucket(readBuckets(new View(w.dirs, pending, w.schema),
+        touched), touched), touched, gen)
+    } else publish(byB.toSeq.sortBy(_._1).map { case (b, ks) =>
+        s"$DelTag$b:${PotTable.keysJson(ks.toSet)}" } ++
+      v.schema.map(s => s"$SchemaTag${s.json}"), gen, None)
   }
 
   /** Predicate remove (r14): delete every document matching `pred`,
@@ -283,14 +348,15 @@ final class BucketedPotTable(
     // then independent of bucket co-residency — a NULL-pred row in a touched
     // bucket survives the restage, matching the filter(pred) touch detection
     // (NULL = not matching) and SQL DELETE semantics.
-    commitStaged(readBuckets(v, touched).filter(!coalesce(pred, lit(false))),
+    commitStaged(byBucket(
+      readBuckets(v, touched).filter(!coalesce(pred, lit(false))), touched),
       touched, gen)
   }
 
   /** Compaction: restage every live bucket at one generation (one job),
-    * collapsing the manifest overlay a reader must walk. Old staged dirs
-    * stay on disk until [[vacuum]] — concurrent readers keep their pinned
-    * files.
+    * collapsing the manifest overlay a reader must walk and folding every
+    * pending key. Old staged dirs stay on disk until [[vacuum]] —
+    * concurrent readers keep their pinned files.
     */
   def compact(): Long = {
     stampMeta()
@@ -299,7 +365,7 @@ final class BucketedPotTable(
     val v = resolveForWrite(gen)
     if (v.dirs.isEmpty) return gen // fully-emptied table: nothing to compact
     val live = v.dirs.keys.toSeq.sorted
-    commitStaged(readBuckets(v, live), live, gen)
+    commitStaged(byBucket(readBuckets(v, live), live), live, gen)
   }
 
   /** Delete staged roots unreferenced by the manifests of the last
@@ -465,11 +531,12 @@ final class BucketedPotTable(
       .filter(col(dim).between(lo.toLong, hi.toLong))
   }
 
-  /** Buckets republished (or tombstoned) by generation `gen`'s commit —
-    * test hook for asserting partition-scoped (not whole-table) rewrite.
+  /** Buckets restaged (or emptied) by generation `gen`'s commit — test
+    * hook for asserting partition-scoped (not whole-table) rewrite. A
+    * remove's `del:` lines restage nothing.
     */
   def bucketsWrittenAt(gen: Long): Seq[Int] =
-    manifestAt(gen)._1.keys.toSeq.sorted
+    manifestAt(gen).entries.keys.toSeq.sorted
 
   /** Online reshard: rewrite the table's current state into a NEW bucketed
     * table (same root, `path` = this table's path + the suffix) with a
@@ -493,6 +560,13 @@ final class BucketedPotTable(
 }
 
 object BucketedPotTable {
+  /** One committed manifest: bucket -> staged path (empty = emptied
+    * bucket), bucket -> keys tombstoned by this generation, and the
+    * `schema:` line's JSON if there is one.
+    */
+  private[kv] final case class Manifest(entries: Map[Int, String],
+      dels: Map[Int, Set[String]], schema: Option[String])
+
   /** `nBuckets = 0` (the default) = self-describing open: the stamped
     * `_meta/buckets` modulus is used ([[BucketMeta.DefaultBuckets]] for a
     * brand-new store). A positive count on an existing store must match

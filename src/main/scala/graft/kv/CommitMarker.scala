@@ -23,7 +23,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     the husk is still empty, deletes it, and retries its own create;
   *   - success is reported ONLY after a read-back confirms the durable
   *     marker holds this writer's body (bodies embed a writer-unique staged
-  *     path, so they never collide). Any interleaving that loses our
+  *     path, so they never collide — except tombstone markers, where two
+  *     removes of the same keys from the same base write the same body and
+  *     the same state, so either read-back is a true success). Any
+  *     interleaving that loses our
   *     content — including the microsecond husk-vs-live-writer window where
   *     a reclaimer deletes a marker whose creator is between create and
   *     close — surfaces as [[PotTable.CommitConflict]], never as a false

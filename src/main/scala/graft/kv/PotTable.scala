@@ -42,6 +42,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * [[txnVersion]] — one marker read, no Spark job — and commits the data
   * and the new version in ONE generation, so no crash can separate them.
   *
+  * Removes are tombstones, not rewrites (Delta's deletion vectors in the
+  * log's own terms): [[remove]] publishes a marker that keeps the current
+  * staged path and schema and adds a `del:<JSON array of keys>` line — every
+  * key removed since that staged data was written. Every read of the
+  * generation filters those keys out with one `InSet` (a null key
+  * survives, as under a left-anti join), so a remove runs no Spark job.
+  * Every write that restages data ([[upsert]], [[conditionalUpsert]],
+  * [[replace]], [[removeWhere]]) reads through the same filtered view, so
+  * its generation carries no `del:` line: the fold costs nothing extra.
+  * A remove whose pending set would pass [[PotTable.MaxTombstones]] keys
+  * stages the filtered view instead (copy-on-write), which bounds the
+  * marker and the read filter. A binary built before tombstones ignores
+  * the `del:` line and would read the removed keys back.
+  *
   * Losing a commit race throws [[PotTable.CommitConflict]] — pot's 412/423.
   *
   * Scale: the fixture tables are single files, but every operation here is a
@@ -76,14 +90,18 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     if (gen == 0L) PotTable.Marker("", None, Map.empty)
     else PotTable.parseMarker(CommitMarker.read(fs, markerPath(gen)))
 
-  /** Committed generation `gen` (empty at 0), opened with the schema its
-    * marker records, and the `txn` versions that marker carries. With
+  /** The live documents `m` describes: its staged data, opened with the
+    * schema it records, minus its tombstoned keys. */
+  private def view(m: PotTable.Marker): DataFrame =
+    PotTable.live(PotTable.scan(spark, m.schema, Seq(m.staged)), m.dels)
+
+  /** Committed generation `gen` (empty at 0) and its marker. With
     * `retained`, a generation whose staged data was vacuumed fails with
     * [[PotTable.RetentionViolated]].
     */
   private def state(gen: Long, retained: Boolean = false)
-      : (DataFrame, Map[String, Long]) =
-    if (gen == 0L) (spark.emptyDataFrame, Map.empty)
+      : (DataFrame, PotTable.Marker) =
+    if (gen == 0L) (spark.emptyDataFrame, marker(0L))
     else {
       val m = marker(gen)
       if (retained && !fs.exists(new Path(m.staged)))
@@ -92,7 +110,7 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
             "retention window has passed this generation; pin vacuum's " +
             "retainGenerations above the oldest generation readers still " +
             s"need (current head is $generation)")
-      (PotTable.scan(spark, m.schema, Seq(m.staged)), m.txns)
+      (view(m), m)
     }
 
   private def read(gen: Long, retained: Boolean = false): DataFrame =
@@ -148,28 +166,35 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
   }
 
   /** Stage `df` under a unique path, then atomically publish it (path,
-    * schema and `txns`, the parent's carried forward) as generation
-    * `expectedGen`+1 iff no other writer got there first.
+    * schema and `txns`, the parent's carried forward; no tombstones) as
+    * generation `expectedGen`+1 iff no other writer got there first.
     */
   private def commit(df: DataFrame, expectedGen: Long,
       txns: Map[String, Long]): Long = {
-    val next = expectedGen + 1
-    val staged = s"$dir/data/g${next}_${java.util.UUID.randomUUID()}"
+    val staged = s"$dir/data/g${expectedGen + 1}_${java.util.UUID.randomUUID()}"
     df.write.mode("errorifexists").parquet(staged)
+    publish(PotTable.Marker(staged, Some(PotTable.readSchema(df.schema)), txns),
+      expectedGen, Some(staged))
+  }
+
+  /** CAS-publish `m` as generation `expectedGen`+1. On a lost race the
+    * writer deletes `ownStaging` (its own staged data, never published
+    * data) and rethrows the [[PotTable.CommitConflict]].
+    */
+  private def publish(m: PotTable.Marker, expectedGen: Long,
+      ownStaging: Option[String]): Long = {
+    val next = expectedGen + 1
     fs.mkdirs(markerPath(next).getParent)
     // A12: the publish CAS is our write-side mutual exclusion — time it as
     // the analogue of the reference's localLock hold (server.go:616-626
     // records elapsed ms unconditionally via defer, conflict or not)
     val t0 = System.nanoTime()
     try {
-      CommitMarker.publish(fs, markerPath(next),
-        (Seq(staged, PotTable.readSchema(df.schema).json) ++
-          txns.toSeq.sorted.map { case (app, v) => s"txn:$app:$v" })
-          .mkString("\n"))
+      CommitMarker.publish(fs, markerPath(next), PotTable.renderMarker(m))
       next
     } catch {
       case e: CommitConflict =>
-        fs.delete(new Path(staged), true) // only our own staging, never published data
+        ownStaging.foreach(s => fs.delete(new Path(s), true))
         throw e
     } finally graft.Metrics.of(spark)
       .foreach(_.recordLockMs((System.nanoTime() - t0) / 1000000L))
@@ -188,9 +213,9 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     * (LWW replaces the whole document, pot-style; it does not column-merge).
     */
   private def upsertAt(docs: DataFrame, gen: Long): Long = {
-    val (old, txns) = state(gen)
+    val (old, m) = state(gen)
     commit(PotTable.lastWriterWins(
-      docs.withColumn("_modified", current_timestamp()), old), gen, txns)
+      docs.withColumn("_modified", current_timestamp()), old), gen, m.txns)
   }
 
   /** Upsert (Create/batch-Create, server.go:272-423). */
@@ -246,18 +271,24 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     upsertAt(docs, gen)
   }
 
-  /** Remove (multi-key delete, server.go:494-548): left-anti join; deleting
-    * absent keys is a no-op, like the reference's `delete(content, key)`.
+  /** Remove (multi-key delete, server.go:494-548) as a tombstone commit:
+    * generation `gen`+1 keeps `gen`'s staged data, schema and `txn` lines
+    * and adds `keys` to its `del:` set — one marker create, no Spark job.
+    * Deleting absent keys is a no-op for readers, like the reference's
+    * `delete(content, key)`. When the pending set would pass
+    * [[PotTable.MaxTombstones]], the filtered view is staged instead.
     */
   def remove(keys: Seq[String]): Long = {
-    // A12: the operation-level counter (server_routes.go:155-157); the
-    // anti-join rewrite below still counts as an engine write — see Metrics
+    // A12: the operation-level counter (server_routes.go:155-157); a
+    // tombstone commit runs no engine query — see Metrics
     graft.Metrics.of(spark).foreach(_.recordRemove())
     val gen = generation
     if (gen == 0L) return 0L
-    val (old, txns) = state(gen)
-    commit(old.join(broadcast(keys.toDF("key")), Seq("key"), "left_anti"),
-      gen, txns)
+    val m = marker(gen)
+    val pending = m.copy(dels = m.dels ++ keys)
+    if (pending.dels.size > PotTable.MaxTombstones)
+      commit(view(pending), gen, m.txns)
+    else publish(pending, gen, None)
   }
 
   /** Predicate remove (r14 — the distributed sweep): delete every
@@ -274,8 +305,8 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     // SQL DELETE semantics: delete only rows where pred IS TRUE. A row whose
     // predicate evaluates to NULL must SURVIVE (`!pred` alone is NULL there,
     // which filter() drops — silent deletion).
-    val (old, txns) = state(gen)
-    commit(old.filter(!coalesce(pred, lit(false))), gen, txns)
+    val (old, m) = state(gen)
+    commit(old.filter(!coalesce(pred, lit(false))), gen, m.txns)
   }
 
   /** Admin recovery for a generation wedged by a crashed writer AND a
@@ -302,7 +333,9 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
   }
 
   /** Delete staged data directories no marker references (lost races,
-    * superseded generations older than `retainGenerations`). Readers pin a
+    * superseded generations older than `retainGenerations`). A tombstone
+    * marker names its base's staged path, so the keep set holds the base
+    * while any retained generation reads through it. Readers pin a
     * generation at scan start, so retention gives in-flight reads a grace
     * window instead of deleting under them. Staged names encode their
     * TARGET generation (`g<N>_<uuid>`): a dir with N > the committed
@@ -361,24 +394,70 @@ object PotTable {
   def apply(spark: SparkSession, root: String, path: String): PotTable =
     new PotTable(spark, root, path)
 
+  /** Most keys a [[PotTable.remove]] leaves as tombstones before it
+    * stages the filtered view instead. At ~10-20 bytes a key this keeps a
+    * marker near 10-20 KB and the read filter within noise of none.
+    */
+  val MaxTombstones = 1024
+
   /** A parsed marker body: the staged path, the recorded schema (None in
-    * stores written before it was), and the `txn` versions by appId.
+    * stores written before it was), the `txn` versions by appId, and the
+    * keys removed since the staged data was written.
     */
   private[kv] final case class Marker(staged: String,
-      schema: Option[StructType], txns: Map[String, Long])
+      schema: Option[StructType], txns: Map[String, Long],
+      dels: Set[String] = Set.empty)
+
+  /** Tag of a marker line that lists tombstoned keys. */
+  private[kv] val DelTag = "del:"
+  private lazy val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Keys as one JSON array: keys may hold `,`, `"` or a newline. */
+  private[kv] def keysJson(keys: Set[String]): String =
+    json.writeValueAsString(keys.toArray.sorted)
+
+  private[kv] def keysOf(text: String): Set[String] =
+    json.readValue(text, classOf[Array[String]]).toSet
 
   /** Line 1 is the staged path, every `txn:<appId>:<version>` line a txn,
-    * and the remaining line, if any, the schema.
+    * a `del:<JSON array>` line the tombstoned keys, and the remaining
+    * line, if any, the schema.
     */
   private[kv] def parseMarker(body: String): Marker = {
     val lines = body.trim.split("\n").map(_.trim)
     val (txnLines, rest) = lines.drop(1).partition(_.startsWith("txn:"))
+    val (delLines, schema) = rest.partition(_.startsWith(DelTag))
     val txns = txnLines.map { l =>
       val at = l.lastIndexOf(':')
       l.substring(4, at) -> l.substring(at + 1).toLong
     }.toMap
-    Marker(lines(0), rest.find(_.nonEmpty).map(parseSchema), txns)
+    Marker(lines(0), schema.find(_.nonEmpty).map(parseSchema), txns,
+      delLines.flatMap(l => keysOf(l.stripPrefix(DelTag))).toSet)
   }
+
+  /** The marker body [[parseMarker]] reads back as `m`. */
+  private[kv] def renderMarker(m: Marker): String =
+    (Seq(m.staged) ++ m.schema.map(_.json) ++
+      m.txns.toSeq.sorted.map { case (app, v) => s"txn:$app:$v" } ++
+      Option.when(m.dels.nonEmpty)(DelTag + keysJson(m.dels))).mkString("\n")
+
+  /** `df` without the rows whose key is in `dels`: `key IS NULL OR NOT
+    * InSet(key, dels)`, with the `InSet` built directly (an `isin` over
+    * literals costs planning time per key). A null key survives.
+    */
+  private[kv] def live(df: DataFrame, dels: Set[String]): DataFrame =
+    if (dels.isEmpty || !df.columns.contains("key")) df
+    else {
+      import org.apache.spark.sql.catalyst.expressions.InSet
+      import org.apache.spark.sql.graftbridge.ColumnBridge
+      import org.apache.spark.sql.types.StringType
+      import org.apache.spark.unsafe.types.UTF8String
+      val key = if (df.schema("key").dataType == StringType) col("key")
+        else col("key").cast(StringType)
+      val tombstoned = ColumnBridge.column(InSet(ColumnBridge.expression(key),
+        dels.map(k => UTF8String.fromString(k): Any)))
+      df.filter(col("key").isNull || !tombstoned)
+    }
 
   private[kv] def parseSchema(json: String): StructType =
     DataType.fromJson(json).asInstanceOf[StructType]
@@ -412,14 +491,21 @@ object PotTable {
     * (`allowMissingColumns`). Which of several `incoming` rows for one key
     * survives is unspecified.
     */
-  private[kv] def lastWriterWins(incoming: DataFrame, old: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("key")).orderBy(col("_src").desc)
+  private[kv] def lastWriterWins(incoming: DataFrame, old: DataFrame): DataFrame =
+    latest(sourced(incoming, old), col("key"))
+
+  /** `incoming` over `old`, each row tagged with its source in `_src`
+    * (1 incoming, 0 old); the union widens the schema. */
+  private[kv] def sourced(incoming: DataFrame, old: DataFrame): DataFrame =
     incoming.withColumn("_src", lit(1))
       .unionByName(old.withColumn("_src", lit(0)), allowMissingColumns = true)
-      .withColumn("_rn", row_number().over(w))
+
+  /** One row per `by` group of a [[sourced]] frame, incoming rows first. */
+  private[kv] def latest(df: DataFrame, by: org.apache.spark.sql.Column*): DataFrame =
+    df.withColumn("_rn",
+        row_number().over(Window.partitionBy(by: _*).orderBy(col("_src").desc)))
       .filter(col("_rn") === 1)
       .drop("_rn", "_src")
-  }
 
   /** Whole-warehouse snapshot (A7 parity — reference Zip archives the whole
     * bucket, server.go:550-614, re-triggered per write,

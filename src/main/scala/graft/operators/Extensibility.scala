@@ -608,8 +608,9 @@ object Extensibility {
           ks.map(k => s"""{"k":"$k","d":{"v":1}}""").mkString("", "\n", "\n"))
         b -> Seq((0, f.toString))
       }
-      val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
-      graft.sources.BucketedStmtLog.begin(root, "u59crash",
+      val fs = graft.sources.BucketedPotV2Source.fsOf(root)
+      val base = graft.sources.BucketedPotV2Source.headVector(fs, root, 4)
+      graft.sources.BucketedStmtLog.begin(fs, root, "u59crash",
         graft.sources.BucketedStmtLog.intentBody(
           "insert", "u59crash", truncate = false, Long.MaxValue,
           byBucket.keys.toSeq.sorted,
@@ -617,13 +618,13 @@ object Extensibility {
       graft.sources.BucketedPotV2Source.recoverStatements(root)
       // a conflict-DROPPED delta barrier (the live MERGE-conflict path):
       // intent up, then the barrier comes down without completing
-      graft.sources.BucketedStmtLog.begin(root, "u59conflict",
+      graft.sources.BucketedStmtLog.begin(fs, root, "u59conflict",
         graft.sources.BucketedStmtLog.intentBody(
           "delta", "u59conflict", truncate = false, Long.MaxValue,
           Seq(0), Map(0 -> 3L), Map.empty))
-      graft.sources.BucketedStmtLog.abort(root, "u59conflict", Seq.empty)
+      graft.sources.BucketedStmtLog.abort(fs, root, "u59conflict", Seq.empty)
       // a LIVE young statement — stays open
-      graft.sources.BucketedStmtLog.begin(root, "u59open",
+      graft.sources.BucketedStmtLog.begin(fs, root, "u59open",
         graft.sources.BucketedStmtLog.intentBody(
           "insert", "u59open", truncate = false, Long.MaxValue,
           Seq(0, 1), Map(0 -> 3L, 1 -> 3L), Map.empty))
@@ -933,7 +934,7 @@ object Extensibility {
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sessionState.newHadoopConf())
       def lastMtime: Long = graft.sources.BucketedPotV2Source
-        .existingBuckets(root, 4).map { b =>
+        .existingBuckets(fs, root, 4).map { b =>
           val commits = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs
             .Path(graft.sources.BucketedPotV2Source.bucketPot(root, b))
             .getParent, ".commits")
@@ -948,8 +949,8 @@ object Extensibility {
       write(nat, 0)                                               // wave 1
       // a statement window SPANNING a known instant: barrier up with the
       // wave-1 base vector, wave 2 lands inside it, then the window closes
-      val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
-      graft.sources.BucketedStmtLog.begin(root, "u62span",
+      val base = graft.sources.BucketedPotV2Source.headVector(fs, root, 4)
+      graft.sources.BucketedStmtLog.begin(fs, root, "u62span",
         graft.sources.BucketedStmtLog.intentBody(
           "insert", "u62span", truncate = false, Long.MaxValue,
           base.keys.toSeq.sorted, base, Map.empty))
@@ -958,7 +959,7 @@ object Extensibility {
       while (System.currentTimeMillis() <= w2 + 2) Thread.sleep(2)
       val tIn = System.currentTimeMillis()  // inside u62span's window
       Thread.sleep(3)
-      graft.sources.BucketedStmtLog.complete(root, "u62span", Seq.empty)
+      graft.sources.BucketedStmtLog.complete(fs, root, "u62span", Seq.empty)
       def probe(label: String) = s.read.format(fmt)
         .option("path", root).option("buckets", "4")
         .option("timestampAsOf", tIn.toString).load()
@@ -1046,7 +1047,7 @@ object Extensibility {
       rows(nat, 0).write.format(storeFmt).option("path", root)
         .option("buckets", "4").mode("append").save()
       val w1 = (chainMtimes(pot) ++ graft.sources.BucketedPotV2Source
-        .existingBuckets(root, 4)
+        .existingBuckets(fs, root, 4)
         .flatMap(b => chainMtimes(
           graft.sources.BucketedPotV2Source.bucketPot(root, b)))).max
       while (System.currentTimeMillis() <= w1 + 2) Thread.sleep(2)
@@ -1931,7 +1932,7 @@ object Extensibility {
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sessionState.newHadoopConf())
       def lastMtime: Long = graft.sources.BucketedPotV2Source
-        .existingBuckets(root, 4).map { b =>
+        .existingBuckets(fs, root, 4).map { b =>
           val commits = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs
             .Path(graft.sources.BucketedPotV2Source.bucketPot(root, b))
             .getParent, ".commits")

@@ -4,7 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -102,15 +102,15 @@ object BucketedPotV2Source {
 
   def bucketPot(root: String, b: Int): String = s"$root/_b=$b/data.json"
 
-  /** The store root's FileSystem under the running session's conf. */
-  private def fsOf(root: String): org.apache.hadoop.fs.FileSystem =
+  /** The store root's FileSystem under the running session's conf: one
+    * conf snapshot, so a statement or write takes it once and passes it
+    * to the helpers below and to [[BucketedStmtLog]]. */
+  private[graft] def fsOf(root: String): FileSystem =
     new Path(root).getFileSystem(PotV2Source.sessionConf())
 
   /** Buckets that currently exist on disk (have a data.json). */
-  def existingBuckets(root: String, n: Int): Seq[Int] = {
-    val fs = fsOf(root)
+  def existingBuckets(fs: FileSystem, root: String, n: Int): Seq[Int] =
     (0 until n).filter(b => fs.exists(new Path(bucketPot(root, b))))
-  }
 
   /** Resolve the routing modulus against the persisted `_meta/buckets`
     * marker — stored is authoritative, a differing supplied count is a
@@ -126,25 +126,22 @@ object BucketedPotV2Source {
   }
 
   /** Stamp the modulus at the write front door (idempotent CAS). */
-  def stampBuckets(root: String, n: Int): Unit = {
-    graft.kv.BucketMeta.stamp(fsOf(root), new Path(root), n)
-  }
+  def stampBuckets(fs: FileSystem, root: String, n: Int): Unit =
+    graft.kv.BucketMeta.stamp(fs, new Path(root), n)
 
   /** Crash recovery: roll every open multi-bucket statement forward from
     * its staged fragments and flip it visible (see [[BucketedStmtLog]]).
     * Returns the completed statement ids.
     */
   def recoverStatements(root: String): Seq[String] =
-    BucketedStmtLog.recover(root)
+    BucketedStmtLog.recover(fsOf(root), root)
 
   /** Head generation per existing bucket (the row-level ops' pin vector). */
-  def headVector(root: String, n: Int): Map[Int, Long] = {
-    val fs = fsOf(root)
-    existingBuckets(root, n).map { b =>
+  def headVector(fs: FileSystem, root: String, n: Int): Map[Int, Long] =
+    existingBuckets(fs, root, n).map { b =>
       val commits = new Path(new Path(bucketPot(root, b)).getParent, ".commits")
       b -> graft.kv.CommitMarker.head(fs, commits)
     }.toMap
-  }
 
   /** u55 (r18): TIMESTAMP AS OF over the whole BUCKETED store — the
     * wall-clock instant resolved to a PER-BUCKET generation vector:
@@ -162,7 +159,7 @@ object BucketedPotV2Source {
     */
   def asOfVector(root: String, n: Int, millis: Long): Map[Int, Long] = {
     val fs = fsOf(root)
-    val resolved = existingBuckets(root, n).map { b =>
+    val resolved = existingBuckets(fs, root, n).map { b =>
       val commits =
         new Path(new Path(bucketPot(root, b)).getParent, ".commits")
       val fit = graft.kv.CommitMarker.committedGenerations(fs, commits)
@@ -238,8 +235,8 @@ object BucketedPotV2Source {
     // statement-consistent frontier: roll crashed statements forward,
     // then refuse while any statement is still OPEN (a live writer's
     // intent window; cloning mid-statement would freeze a prefix)
-    recoverStatements(srcRoot)
-    val open = BucketedStmtLog.openStatements(srcRoot)
+    BucketedStmtLog.recover(fs, srcRoot)
+    val open = BucketedStmtLog.openStatements(fs, srcRoot)
     require(open.isEmpty,
       s"cloneBucketedPot: $srcRoot has ${open.size} open statement(s) " +
         s"(first: ${open.head._1}) — quiesce writers or CALL " +
@@ -250,7 +247,7 @@ object BucketedPotV2Source {
       s"cloneBucketedPot: target $dstRoot is stamped with " +
         s"${stamped.getOrElse(-1)} buckets, source has $n — refusing to " +
         "mix moduli")
-    existingBuckets(srcRoot, n).flatMap { b =>
+    existingBuckets(fs, srcRoot, n).flatMap { b =>
       PotV2Source.clonePot(fs, bucketPot(srcRoot, b), bucketPot(dstRoot, b))
         .map(g => (b, g))
     }
@@ -328,7 +325,8 @@ private[sources] class BucketedPotV2Table(root: String, nBuckets: Int,
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     import org.apache.spark.sql.sources.{EqualTo, In}
-    BucketedPotV2Source.stampBuckets(root, nBuckets)
+    val fs = BucketedPotV2Source.fsOf(root)
+    BucketedPotV2Source.stampBuckets(fs, root, nBuckets)
     // buckets named by exact key predicates; other deletable shapes
     // (prefix, pot_file) cannot be hashed — those touch every bucket
     val keyBuckets: Option[Set[Int]] = filters.collectFirst {
@@ -337,7 +335,7 @@ private[sources] class BucketedPotV2Table(root: String, nBuckets: Int,
       case In("key", vs) =>
         vs.map(v => BucketedPotV2Source.bucketOf(v.toString, nBuckets)).toSet
     }
-    val existing = BucketedPotV2Source.existingBuckets(root, nBuckets)
+    val existing = BucketedPotV2Source.existingBuckets(fs, root, nBuckets)
     val touched = keyBuckets.fold(existing)(bs => existing.filter(bs))
     // r15 statement barrier (filters serialized into the intent — the
     // roll-forward source for a crashed multi-bucket DELETE)
@@ -346,8 +344,8 @@ private[sources] class BucketedPotV2Table(root: String, nBuckets: Int,
     if (barrier) {
       // beginFresh: base re-read after the intent CAS (ADVICE r15 — a
       // commit landing in the read-then-publish window stays visible)
-      BucketedStmtLog.beginFresh(root, qid, touched,
-        () => BucketedPotV2Source.headVector(root, nBuckets),
+      BucketedStmtLog.beginFresh(fs, root, qid, touched,
+        () => BucketedPotV2Source.headVector(fs, root, nBuckets),
         base => BucketedStmtLog.intentBody(
           "delete", qid, truncate = false, 0L, touched, base,
           Map.empty, Some(filters)))
@@ -357,10 +355,10 @@ private[sources] class BucketedPotV2Table(root: String, nBuckets: Int,
         .deleteWhere(filters)
     } catch {
       case e: graft.kv.PotTable.CommitConflict if barrier =>
-        BucketedStmtLog.abort(root, qid, Seq.empty)
+        BucketedStmtLog.abort(fs, root, qid, Seq.empty)
         throw e
     }
-    if (barrier) BucketedStmtLog.complete(root, qid, Seq.empty)
+    if (barrier) BucketedStmtLog.complete(fs, root, qid, Seq.empty)
   }
 }
 
@@ -407,7 +405,8 @@ private[sources] class BucketedPotScanBuilder(root: String, nBuckets: Int,
         BucketedPotV2Source.asOfVector(root, nBuckets, t).map {
           case (b, g) => qualifiedPath(b) -> g
         })
-      case None => Some(() => BucketedStmtLog.caps(root).map { case (b, g) =>
+      case None => Some(() =>
+        BucketedStmtLog.caps(BucketedPotV2Source.fsOf(root), root).map { case (b, g) =>
         qualifiedPath(b) -> g
       })
     }
@@ -499,14 +498,14 @@ private[graft] class BucketedPotWrite(
 
   private[sources] def commitEpoch(
       epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    BucketedPotV2Source.stampBuckets(root, nBuckets)
     val fs = new Path(root).getFileSystem(conf)
+    BucketedPotV2Source.stampBuckets(fs, root, nBuckets)
     val perBucket = BucketFragmentsMessage.perBucket(messages)
     val tag = s"q${qid8}e$epochId"
     val buckets: Seq[Int] =
       if (truncateFirst)
         (perBucket.keySet ++
-          BucketedPotV2Source.existingBuckets(root, nBuckets)).toSeq.sorted
+          BucketedPotV2Source.existingBuckets(fs, root, nBuckets)).toSeq.sorted
       else perBucket.keySet.toSeq.sorted
     // r15 statement barrier at EPOCH granularity: a multi-bucket epoch
     // is none-or-all to readers exactly like a batch statement. A
@@ -518,8 +517,8 @@ private[graft] class BucketedPotWrite(
     if (barrier) {
       // beginFresh: base re-read after the intent CAS (ADVICE r15); a
       // checkpoint-replayed epoch adopts its original intent unchanged
-      BucketedStmtLog.beginFresh(root, stmtId, buckets,
-        () => BucketedPotV2Source.headVector(root, nBuckets),
+      BucketedStmtLog.beginFresh(fs, root, stmtId, buckets,
+        () => BucketedPotV2Source.headVector(fs, root, nBuckets),
         base => BucketedStmtLog.intentBody(
           "epoch", queryId, truncateFirst, maxObjectBytes, buckets, base,
           perBucket.view.mapValues(_.map(m =>
@@ -539,7 +538,7 @@ private[graft] class BucketedPotWrite(
         w.commitDeltaEpoch(msgs, tag, staging = staging)
     }
     if (barrier)
-      BucketedStmtLog.complete(root, stmtId,
+      BucketedStmtLog.complete(fs, root, stmtId,
         Seq(new Path(stagingBase + s"-e$epochId")))
     else fs.delete(new Path(stagingBase + s"-e$epochId"), true)
   }
@@ -548,15 +547,15 @@ private[graft] class BucketedPotWrite(
       info: PhysicalWriteInfo): DataWriterFactory = writerFactory
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    BucketedPotV2Source.stampBuckets(root, nBuckets)
     val fs = new Path(root).getFileSystem(conf)
+    BucketedPotV2Source.stampBuckets(fs, root, nBuckets)
     val perBucket = BucketFragmentsMessage.perBucket(messages)
     // overwrite rewrites EVERY existing bucket (untouched ones to empty);
     // append touches only the buckets with incoming rows
     val buckets: Seq[Int] =
       if (truncateFirst)
         (perBucket.keySet ++
-          BucketedPotV2Source.existingBuckets(root, nBuckets)).toSeq.sorted
+          BucketedPotV2Source.existingBuckets(fs, root, nBuckets)).toSeq.sorted
       else perBucket.keySet.toSeq.sorted
     // r15 statement barrier: multi-bucket statements publish an INTENT
     // (reader caps at the base vector — none-or-all visibility) before
@@ -565,8 +564,8 @@ private[graft] class BucketedPotWrite(
     val barrier = buckets.length > 1
     if (barrier) {
       // beginFresh: base re-read after the intent CAS (ADVICE r15)
-      BucketedStmtLog.beginFresh(root, queryId, buckets,
-        () => BucketedPotV2Source.headVector(root, nBuckets),
+      BucketedStmtLog.beginFresh(fs, root, queryId, buckets,
+        () => BucketedPotV2Source.headVector(fs, root, nBuckets),
         base => BucketedStmtLog.intentBody(
           "insert", queryId, truncateFirst, maxObjectBytes, buckets, base,
           perBucket.view.mapValues(_.map(m =>
@@ -585,7 +584,7 @@ private[graft] class BucketedPotWrite(
         retryOnConflict = true,
         staging = new Path(stagingDir, s"done-b$b"))
     }
-    if (barrier) BucketedStmtLog.complete(root, queryId, Seq(stagingDir))
+    if (barrier) BucketedStmtLog.complete(fs, root, queryId, Seq(stagingDir))
     else fs.delete(stagingDir, true)
   }
 
@@ -617,8 +616,8 @@ private[sources] class BucketedPotRowLevelOperation(
   // per-bucket head generations captured at BUILD: the scan pins to this
   // vector and every touched bucket's commit expects it — scan content
   // and conflict check are the same state on every shard
-  private val observed: Map[Int, Long] =
-    BucketedPotV2Source.headVector(root, nBuckets)
+  private val observed: Map[Int, Long] = BucketedPotV2Source.headVector(
+    BucketedPotV2Source.fsOf(root), root, nBuckets)
 
   override def command(): RowLevelOperation.Command = cmd
 
@@ -705,8 +704,8 @@ private[graft] class BucketedPotDeltaWrite(
       stagingDir.toString, nBuckets, rowKeyIdx, rowDocIdx, idKeyIdx)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    BucketedPotV2Source.stampBuckets(root, nBuckets)
     val fs = new Path(root).getFileSystem(conf)
+    BucketedPotV2Source.stampBuckets(fs, root, nBuckets)
     val perBucket = BucketFragmentsMessage.perBucket(messages)
     val buckets = perBucket.keys.toSeq.sorted
     val qid8 = info.queryId().replace("-", "").take(8)
@@ -715,7 +714,7 @@ private[graft] class BucketedPotDeltaWrite(
     // all the same state
     val barrier = buckets.length > 1
     if (barrier)
-      BucketedStmtLog.begin(root, info.queryId(),
+      BucketedStmtLog.begin(fs, root, info.queryId(),
         BucketedStmtLog.intentBody("delta", info.queryId(),
           truncate = false, ceiling, buckets,
           buckets.map(b => b -> observed.getOrElse(b, 0L)).toMap,
@@ -739,11 +738,11 @@ private[graft] class BucketedPotDeltaWrite(
       case e: graft.kv.PotTable.CommitConflict if barrier =>
         // conflict-failed statement: barrier down, prefix visible, loud
         // re-run signal — see BucketedStmtLog.abort
-        BucketedStmtLog.abort(root, info.queryId(), Seq(stagingDir))
+        BucketedStmtLog.abort(fs, root, info.queryId(), Seq(stagingDir))
         throw e
     }
     if (barrier)
-      BucketedStmtLog.complete(root, info.queryId(), Seq(stagingDir))
+      BucketedStmtLog.complete(fs, root, info.queryId(), Seq(stagingDir))
     else fs.delete(stagingDir, true)
   }
 

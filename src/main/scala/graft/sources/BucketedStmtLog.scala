@@ -84,9 +84,6 @@ private[graft] object BucketedStmtLog {
     new Path(closedDir(root), qid)
   private def ckptDir(root: String) = new Path(root, "_stmts/ckpt")
 
-  private def fsOf(root: String): FileSystem =
-    new Path(root).getFileSystem(PotV2Source.sessionConf())
-
   /** Build an intent body. `frags` maps bucket -> (partitionId, fragment
     * path); `base` is the touched buckets' head-generation vector at
     * statement start; `buckets` the exact commit set (for truncate it
@@ -170,10 +167,9 @@ private[graft] object BucketedStmtLog {
     * planning via [[caps]]); a crashed predecessor can therefore never
     * wedge the store against its successors.
     */
-  def begin(root: String, qid: String, body: String,
+  def begin(fs: FileSystem, root: String, qid: String, body: String,
       adoptExisting: Boolean = false): Boolean = {
-    val fs = fsOf(root)
-    recoverAged(root)
+    recoverAged(fs, root)
     fs.mkdirs(openDir(root))
     try { graft.kv.CommitMarker.publish(fs, openMarker(root, qid), body); true }
     catch {
@@ -199,16 +195,15 @@ private[graft] object BucketedStmtLog {
     * operation's PINNED vector (scan content = conflict check) and must
     * not be refreshed.
     */
-  def beginFresh(root: String, qid: String, buckets: Seq[Int],
-      heads: () => Map[Int, Long],
+  def beginFresh(fs: FileSystem, root: String, qid: String,
+      buckets: Seq[Int], heads: () => Map[Int, Long],
       mkBody: Map[Int, Long] => String,
       adoptExisting: Boolean = false): Unit = {
-    val fs = fsOf(root)
     var base = heads()
     var attempts = 0
     var settled = false
     while (!settled) {
-      val won = begin(root, qid,
+      val won = begin(fs, root, qid,
         mkBody(buckets.map(b => b -> base.getOrElse(b, 0L)).toMap),
         adoptExisting)
       if (!won) return // adopted a replay's intent: original base stands
@@ -237,8 +232,8 @@ private[graft] object BucketedStmtLog {
     * bodies are metadata-sized (the intent json) and CAS-published, so a
     * replayed epoch's re-complete adopts the first journal entry.
     */
-  private def journalClosed(root: String, qid: String, outcome: String): Unit = {
-    val fs = fsOf(root)
+  private def journalClosed(fs: FileSystem, root: String, qid: String,
+      outcome: String): Unit = {
     // r19 ADVICE: a zero-length or corrupt intent marker (a foreign-FS
     // crash husk) must never wedge completion — journaling is HISTORICAL
     // replay, not liveness; on any read/parse failure skip the journal
@@ -274,9 +269,9 @@ private[graft] object BucketedStmtLog {
     }
   }
 
-  def complete(root: String, qid: String, stagingDirs: Seq[Path]): Unit = {
-    val fs = fsOf(root)
-    journalClosed(root, qid, "complete")
+  def complete(fs: FileSystem, root: String, qid: String,
+      stagingDirs: Seq[Path]): Unit = {
+    journalClosed(fs, root, qid, "complete")
     fs.mkdirs(doneMarker(root, qid).getParent)
     try graft.kv.CommitMarker.publish(fs, doneMarker(root, qid), "done")
     catch { case _: graft.kv.PotTable.CommitConflict => () }
@@ -295,20 +290,19 @@ private[graft] object BucketedStmtLog {
     * converges. Crash failures do NOT take this path; they stay open for
     * [[recover]]'s roll-forward.
     */
-  def abort(root: String, qid: String, stagingDirs: Seq[Path]): Unit = {
-    val fs = fsOf(root)
+  def abort(fs: FileSystem, root: String, qid: String,
+      stagingDirs: Seq[Path]): Unit = {
     // journal the window even for the conflict-dropped barrier: until the
     // abort instant readers were capped, so a historical read inside the
     // window must replay that cap (after it, the committed prefix is the
     // documented visible reality — "outcome":"abort" records why)
-    journalClosed(root, qid, "abort")
+    journalClosed(fs, root, qid, "abort")
     stagingDirs.foreach(d => fs.delete(d, true))
     fs.delete(openMarker(root, qid), false)
   }
 
   /** Open statements: (qid, intent body), oldest-first by marker name. */
-  def openStatements(root: String): Seq[(String, String)] = {
-    val fs = fsOf(root)
+  def openStatements(fs: FileSystem, root: String): Seq[(String, String)] = {
     if (!fs.exists(openDir(root))) return Seq.empty
     fs.listStatus(openDir(root)).toSeq.sortBy(_.getPath.getName)
       .filter(_.getLen > 0) // zero-length = foreign crash husk, not open
@@ -328,10 +322,9 @@ private[graft] object BucketedStmtLog {
     * writer mid-statement — cap as before, but are WARNED by name so an
     * operator watching logs sees the lag, never wonders about it.
     */
-  def caps(root: String): Map[Int, Long] = {
-    if (openStatements(root).nonEmpty) recoverAged(root)
-    val fs = fsOf(root)
-    val open = openStatements(root)
+  def caps(fs: FileSystem, root: String): Map[Int, Long] = {
+    if (openStatements(fs, root).nonEmpty) recoverAged(fs, root)
+    val open = openStatements(fs, root)
     if (open.isEmpty) return Map.empty
     val m = scala.collection.mutable.Map.empty[Int, Long]
     open.foreach { case (qid, body) =>
@@ -411,8 +404,8 @@ private[graft] object BucketedStmtLog {
     * in the checkpoint) are harmless — [[capsAt]] folds by min and
     * [[history]] dedups by qid.
     */
-  private[graft] def closedWindows(root: String): (Seq[ClosedWindow], Long) = {
-    val fs = fsOf(root)
+  private[graft] def closedWindows(fs: FileSystem, root: String)
+      : (Seq[ClosedWindow], Long) = {
     var attempts = 0
     while (true) {
       val e1 = ckptEpoch(fs, root)
@@ -465,7 +458,7 @@ private[graft] object BucketedStmtLog {
     * Returns (epoch, retained, droppedTotal).
     */
   def checkpoint(root: String, retainMs: Long): (Long, Long, Long) = {
-    val fs = fsOf(root)
+    val fs = BucketedPotV2Source.fsOf(root)
     val horizon = System.currentTimeMillis() - math.max(retainMs, 0L)
     val e0 = ckptEpoch(fs, root)
     val (priorWs, priorDropped) = readCkpt(fs, root, e0)
@@ -539,15 +532,16 @@ private[graft] object BucketedStmtLog {
     * aborted.
     */
   def capsAt(root: String, millis: Long): Map[Int, Long] = {
+    val fs = BucketedPotV2Source.fsOf(root)
     val m = scala.collection.mutable.Map.empty[Int, Long]
     def foldBase(base: Map[Int, Long]): Unit = base.foreach { case (b, g) =>
       m(b) = math.min(m.getOrElse(b, Long.MaxValue), g)
     }
-    openStatements(root).foreach { case (_, body) =>
+    openStatements(fs, root).foreach { case (_, body) =>
       try foldBase(parseWindow("open", mapper.readTree(body)).base)
       catch { case scala.util.control.NonFatal(_) => () }
     }
-    closedWindows(root)._1.foreach { w =>
+    closedWindows(fs, root)._1.foreach { w =>
       val ts = w.ts.getOrElse(Long.MinValue)
       val done = w.doneTs.getOrElse(Long.MaxValue)
       if (ts <= millis && millis < done) foldBase(w.base)
@@ -562,10 +556,11 @@ private[graft] object BucketedStmtLog {
     * small marker per multi-bucket statement), the audit surface the
     * u55 wall-clock reads resolve against. */
   def history(root: String): Seq[(String, String, String, Int, Long, Long)] = {
-    val closed = closedWindows(root)._1.sortBy(_.qid).map(w =>
+    val fs = BucketedPotV2Source.fsOf(root)
+    val closed = closedWindows(fs, root)._1.sortBy(_.qid).map(w =>
       (w.qid, w.kind, w.outcome, w.nBuckets,
         w.ts.getOrElse(-1L), w.doneTs.getOrElse(-1L)))
-    val open = openStatements(root).map { case (qid, body) =>
+    val open = openStatements(fs, root).map { case (qid, body) =>
       val w = parseWindow(qid, mapper.readTree(body))
       (qid, w.kind, "open", w.nBuckets, w.ts.getOrElse(-1L), -1L)
     }
@@ -580,22 +575,22 @@ private[graft] object BucketedStmtLog {
     * live conflict path's exact behavior, minus the re-raise no caller
     * exists to catch. Returns recovered qids.
     */
-  def recoverAged(root: String): Seq[String] = {
+  def recoverAged(fs: FileSystem, root: String): Seq[String] = {
     val now = System.currentTimeMillis()
-    openStatements(root).flatMap { case (qid, body) =>
+    openStatements(fs, root).flatMap { case (qid, body) =>
       val ts = Option(mapper.readTree(body).get("ts")).map(_.asLong())
       if (ts.exists(now - _ < recoverAfterMs)) None
       else {
         log.warn(s"bucketed pot $root: statement $qid aged out " +
           s"(intent ts=$ts, lease ${recoverAfterMs} ms) — rolling forward")
-        try { recoverOne(root, qid, body); Some(qid) }
+        try { recoverOne(fs, root, qid, body); Some(qid) }
         catch {
           case e: graft.kv.PotTable.CommitConflict =>
             log.error(s"bucketed pot $root: crashed statement $qid cannot " +
               "roll forward (pinned base moved under a concurrent " +
               "writer) — dropping its barrier; the committed prefix " +
               s"becomes visible and the statement must be re-run: $e")
-            abort(root, qid, Seq.empty)
+            abort(fs, root, qid, Seq.empty)
             None
         }
       }
@@ -607,13 +602,14 @@ private[graft] object BucketedStmtLog {
     * MERGE whose pinned base moved under a concurrent writer re-raises
     * CommitConflict (re-run the statement). Returns completed qids.
     */
-  def recover(root: String): Seq[String] =
-    openStatements(root).map { case (qid, body) =>
-      recoverOne(root, qid, body)
+  def recover(fs: FileSystem, root: String): Seq[String] =
+    openStatements(fs, root).map { case (qid, body) =>
+      recoverOne(fs, root, qid, body)
       qid
     }
 
-  private def recoverOne(root: String, qid: String, body: String): Unit = {
+  private def recoverOne(fs: FileSystem, root: String, qid: String,
+      body: String): Unit = {
     {
       val j = mapper.readTree(body)
       val kind = j.get("kind").asText()
@@ -670,7 +666,7 @@ private[graft] object BucketedStmtLog {
             new PotV2Table(pot).deleteWhere(filters)
         }
       }
-      complete(root, qid, stagingRoots.toSeq)
+      complete(fs, root, qid, stagingRoots.toSeq)
     }
   }
 }

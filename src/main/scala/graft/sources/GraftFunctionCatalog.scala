@@ -368,7 +368,7 @@ object EnsureStatsProcedure extends GraftMaintenanceProcedure(
       graft.kv.BucketMeta.stored(fs, p).isDefined
     if (bucketed) {
       val n = graft.kv.BucketMeta.stored(fs, p).get
-      BucketedPotV2Source.existingBuckets(arg, n)
+      BucketedPotV2Source.existingBuckets(fs, arg, n)
         .map(BucketedPotV2Source.bucketPot(arg, _))
         .flatMap(pot => PotV2Source.ensureStats(fs, pot))
     } else PotV2Source.ensureStats(fs, arg)
@@ -393,7 +393,7 @@ object CheckPotProcedure extends GraftMaintenanceProcedure(
       graft.kv.BucketMeta.stored(fs, p).isDefined
     if (bucketed) {
       val n = graft.kv.BucketMeta.stored(fs, p).get
-      BucketedPotV2Source.existingBuckets(arg, n)
+      BucketedPotV2Source.existingBuckets(fs, arg, n)
         .map(BucketedPotV2Source.bucketPot(arg, _))
         .flatMap(pot => PotV2Source.checkPots(fs, pot))
     } else PotV2Source.checkPots(fs, arg)
@@ -582,7 +582,7 @@ object VacuumPotRetainProcedure extends GraftMaintenanceProcedure2(
     val pots: Seq[String] =
       if (bucketed) {
         val n = graft.kv.BucketMeta.stored(fs, p).get
-        BucketedPotV2Source.existingBuckets(path, n)
+        BucketedPotV2Source.existingBuckets(fs, path, n)
           .map(BucketedPotV2Source.bucketPot(path, _))
       } else Seq(path)
     // retainMs == 0 must still take the AGED path (<= now), not the
@@ -614,7 +614,7 @@ object CompactPotProcedure extends GraftMaintenanceProcedure(
       if (!PotV2Source.isGlob(path) &&
           graft.kv.BucketMeta.stored(fs, p).isDefined) {
         val n = graft.kv.BucketMeta.stored(fs, p).get
-        BucketedPotV2Source.existingBuckets(path, n)
+        BucketedPotV2Source.existingBuckets(fs, path, n)
           .map(BucketedPotV2Source.bucketPot(path, _))
       } else Seq(path)
     pots.flatMap(pot =>

@@ -2032,8 +2032,9 @@ object StreamingQueries {
             .mkString("", "\n", "\n"))
         b -> Seq((0, f.toString))
       }
-      val base = graft.sources.BucketedPotV2Source.headVector(store, 8)
-      graft.sources.BucketedStmtLog.begin(store, "st22-crashed",
+      val storeFs = graft.sources.BucketedPotV2Source.fsOf(store)
+      val base = graft.sources.BucketedPotV2Source.headVector(storeFs, store, 8)
+      graft.sources.BucketedStmtLog.begin(storeFs, store, "st22-crashed",
         graft.sources.BucketedStmtLog.intentBody("insert", "st22-crashed",
           truncate = false, Long.MaxValue, byBucket.keys.toSeq.sorted,
           byBucket.keys.map(b => b -> base.getOrElse(b, 0L)).toMap, frags))
@@ -2065,7 +2066,7 @@ object StreamingQueries {
           }
         }
         // HOLD set: tags of statements whose barrier is still up
-        val openTags = graft.sources.BucketedStmtLog.openStatements(store)
+        val openTags = graft.sources.BucketedStmtLog.openStatements(fs, store)
           .map { case (qid, _) => "q" + qid.replace("-", "").take(8) }
         val tags = tagRows.toDF("b", "gen", "tag")
           .withColumn("held",

@@ -72,15 +72,40 @@ class BucketedPotSpec extends AnyFunSuite {
     assert(pot.readClustered("b", 64, 127).count() === want.size.toLong)
   }
 
-  test("remove rewrites only touched buckets; absent keys are no-ops") {
+  test("remove restages no bucket; the next upsert folds its tombstones") {
     val root = tmpRoot()
     val pot = BucketedPotTable(spark, root, "t", nBuckets = 8)
-    pot.upsert((1 to 50).map(i => (s"k$i", i)).toDF("key", "v"))
-    val gen = pot.remove(Seq("k7", "nope"))
-    assert(pot.bucketsWrittenAt(gen).nonEmpty)
-    assert(pot.bucketsWrittenAt(gen).size <= 2)
+    pot.upsert((1 to 50).map(i => (s"k$i", i)).toDF("key", "v")) // every bucket live
+    val staged = new java.io.File(s"$root/t/data").list().toSet
+    val (gen, jobs) = jobsDuring(pot.remove(Seq("k7", "nope")))
+    assert((gen, jobs) === ((2L, 0)))
+    assert(pot.bucketsWrittenAt(gen).isEmpty)
+    assert(new java.io.File(s"$root/t/data").list().toSet === staged)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(manifestLines(root, gen).filter(_.startsWith("del:")).toSet ===
+      Seq("k7", "nope").groupBy(bucketOf(_, 8)).map { case (b, ks) =>
+        s"del:$b:${json.writeValueAsString(ks.sorted.toArray)}" }.toSet)
+    assert(recordedSchema(root, gen) === recordedSchema(root, 1L))
     val keys = pot.get().select("key").as[String].collect().toSet
     assert(!keys.contains("k7") && keys.size === 49)
+    assert(pot.get("k7").isEmpty)
+    // an upsert into k7's bucket restages it without k7: no pending key left
+    val b7 = bucketOf("k7", 8)
+    val mate = (51 to 500).map(i => s"k$i").find(bucketOf(_, 8) == b7).get
+    val g3 = pot.upsert(Seq((mate, 1)).toDF("key", "v"))
+    assert(pot.bucketsWrittenAt(g3) === Seq(b7))
+    val b7Dir = manifestLines(root, g3).find(_.startsWith(s"$b7:")).get
+      .stripPrefix(s"$b7:")
+    assert(spark.read.parquet(b7Dir).filter($"key" === "k7").isEmpty)
+    assert(pot.get().count() === 50L)
+    assert(pot.get("k7").isEmpty)
+    // a remove that touches no live bucket commits nothing
+    val one = BucketedPotTable(spark, root, "one", nBuckets = 8)
+    one.upsert(Seq(("k1", 1)).toDF("key", "v"))
+    val elsewhere = (2 to 500).map(i => s"k$i")
+      .find(bucketOf(_, 8) != bucketOf("k1", 8)).get
+    assert(one.remove(Seq(elsewhere)) === 1L)
+    assert(one.generation === 1L)
   }
 
   test("removeWhere: predicate sweep restages only matching buckets, no driver key list") {
@@ -504,9 +529,9 @@ class BucketedPotSpec extends AnyFunSuite {
     // CRASH: intent up, exactly one bucket committed, no complete — an
     // instant inside the window reads the pre-statement state, and must
     // KEEP reading it after recovery journals the window
-    val base = BucketedPotV2Source.headVector(root, 4)
+    val base = BucketedPotV2Source.headVector(storeFs(root), root, 4)
     val key = "crash-row"
-    BucketedStmtLog.begin(root, "asof-crash",
+    BucketedStmtLog.begin(storeFs(root), root, "asof-crash",
       BucketedStmtLog.intentBody("insert", "asof-crash", truncate = false,
         Long.MaxValue, Seq(0, 1, 2, 3),
         (0 to 3).map(b => b -> base.getOrElse(b, 0L)).toMap, Map.empty))
@@ -520,7 +545,7 @@ class BucketedPotSpec extends AnyFunSuite {
     assert(readAsOf(root, tMid) === preStatement,
       "mid-statement instant observed a prefix-applied statement")
     // roll forward (journals [intent, recovery) under _stmts/closed)
-    BucketedStmtLog.complete(root, "asof-crash", Seq.empty)
+    BucketedStmtLog.complete(storeFs(root), root, "asof-crash", Seq.empty)
     val tDone = pause(System.currentTimeMillis())
     assert(readAsOf(root, tMid) === preStatement,
       "recovery rewrote history: a mid-window instant saw the statement")
@@ -552,15 +577,15 @@ class BucketedPotSpec extends AnyFunSuite {
     write((1 to 8).map(i => (s"k$i", i * 10)))   // closed window 2
     write((9 to 16).map(i => (s"k$i", i * 10)))  // closed window 3
     // a window spanning a known instant (the capsAt probe)
-    val base = BucketedPotV2Source.headVector(root, 4)
-    BucketedStmtLog.begin(root, "ckpt-span",
+    val base = BucketedPotV2Source.headVector(storeFs(root), root, 4)
+    BucketedStmtLog.begin(storeFs(root), root, "ckpt-span",
       BucketedStmtLog.intentBody("insert", "ckpt-span", truncate = false,
         Long.MaxValue, Seq(0, 1, 2, 3),
         (0 to 3).map(b => b -> base.getOrElse(b, 0L)).toMap, Map.empty))
     Thread.sleep(3)
     val tMid = System.currentTimeMillis()
     Thread.sleep(3)
-    BucketedStmtLog.complete(root, "ckpt-span", Seq.empty)
+    BucketedStmtLog.complete(storeFs(root), root, "ckpt-span", Seq.empty)
     assert(tailCount === 4L)
     val capsBefore = BucketedStmtLog.capsAt(root, tMid)
     assert(capsBefore.nonEmpty, "the spanning window must cap at tMid")
@@ -591,7 +616,7 @@ class BucketedPotSpec extends AnyFunSuite {
     val husk = new org.apache.hadoop.fs.Path(root, "_stmts/open/husk-q")
     val out = fs.create(husk, false)
     out.write("not json".getBytes("UTF-8")); out.close()
-    BucketedStmtLog.complete(root, "husk-q", Seq.empty) // must not throw
+    BucketedStmtLog.complete(storeFs(root), root, "husk-q", Seq.empty) // must not throw
     assert(!fs.exists(husk), "completion must drop the corrupt barrier")
     assert(!BucketedStmtLog.history(root).exists(_._1 == "husk-q"))
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
@@ -645,7 +670,7 @@ class BucketedPotSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val buckets = graft.sources.BucketedPotV2Source
-      .existingBuckets(store, 4)
+      .existingBuckets(storeFs(store), store, 4)
     assert(buckets.nonEmpty)
     val b0dir = new org.apache.hadoop.fs.Path(
       graft.sources.BucketedPotV2Source.bucketPot(store, buckets.head))
@@ -677,6 +702,12 @@ class BucketedPotSpec extends AnyFunSuite {
   private def manifestLines(root: String, g: Long): Seq[String] =
     graft.kv.CommitMarker.bodyAt(fsOf(root),
       new org.apache.hadoop.fs.Path(s"$root/t/_commits"), g).get.split("\n").toSeq
+
+  /** A bucketed store's FileSystem, as its statements take it. */
+  private def storeFs(root: String) = graft.sources.BucketedPotV2Source.fsOf(root)
+
+  private def bucketOf(key: String, n: Int): Int =
+    graft.sources.BucketedPotV2Source.bucketOf(key, n)
 
   private def recordedSchema(root: String, g: Long)
       : Option[org.apache.spark.sql.types.StructType] =
@@ -737,8 +768,11 @@ class BucketedPotSpec extends AnyFunSuite {
     pot.removeWhere(col("key") === "k4")                                // gen 4
     pot.compact()                                                       // gen 5
     assert(pot.generation === 5L)
+    // the remove (gen 3) stages nothing: it keeps gen 2's data and schema
+    assert(pot.bucketsWrittenAt(3L).isEmpty)
     (1L to 5L).foreach { g =>
-      val staged = manifestLines(root, g).filterNot(_.startsWith("schema:"))
+      val staged = manifestLines(root, if (g == 3L) 2L else g)
+        .filterNot(_.startsWith("schema:"))
         .map(l => l.drop(l.indexOf(':') + 1)).find(_.nonEmpty).get
       val stagedRoot = new org.apache.hadoop.fs.Path(staged).getParent.toString
       val inferred = spark.read.parquet(stagedRoot).drop("_b").schema
@@ -798,5 +832,77 @@ class BucketedPotSpec extends AnyFunSuite {
       .collect().toMap
     assert(state("k1") === Some("x"))
     assert(state(other) === None)
+  }
+
+  test("a bucketed point get of a pending key returns an empty frame") {
+    val root = tmpRoot()
+    val pot = BucketedPotTable(spark, root, "t", nBuckets = 4)
+    pot.upsert((1 to 20).map(i => (s"k$i", i)).toDF("key", "v"))
+    pot.remove(Seq("k3"))
+    val (point, jobs) = jobsDuring(pot.get("k3"))
+    assert(jobs === 0)
+    assert(point.isEmpty)
+    assert(point.schema === pot.get().schema)
+    assert(pot.get("k4").select("v").as[Int].collect().toSeq === Seq(4))
+    assert(pot.getAt(1L).filter($"key" === "k3").count() === 1L)
+    assert(pot.getAt(2L).filter($"key" === "k3").isEmpty)
+  }
+
+  test("bucketed tombstones fold on removeWhere and compact; keys with a comma, quote and newline round-trip") {
+    val root = tmpRoot()
+    val pot = BucketedPotTable(spark, root, "t", nBuckets = 4)
+    val odd = Seq("a,b", "q\"x", "n\nl", "del:1:[]")
+    pot.upsert(((1 to 20).map(i => s"k$i") ++ odd).zipWithIndex.toDF("key", "v"))
+    pot.remove(odd)                                        // gen 2
+    pot.remove(Seq("k1", "k2"))                            // gen 3
+    def keys = pot.get().select("key").as[String].collect().toSet
+    assert(keys === (3 to 20).map(i => s"k$i").toSet)
+    assert(pot.getAt(2L).select("key").as[String].collect().toSet ===
+      (1 to 20).map(i => s"k$i").toSet)
+    pot.removeWhere($"key" === "k3")                       // gen 4
+    assert(keys === (4 to 20).map(i => s"k$i").toSet)
+    val g5 = pot.compact()
+    assert(!manifestLines(root, g5).exists(_.startsWith("del:")))
+    val dirs = manifestLines(root, g5).filterNot(_.startsWith("schema:"))
+      .map(l => l.drop(l.indexOf(':') + 1)).filter(_.nonEmpty)
+    assert(spark.read.parquet(dirs: _*).select("key").as[String].collect().toSet
+      === keys)
+    odd.foreach(k => assert(pot.get(k).isEmpty, k))
+  }
+
+  test("a bucketed remove past the tombstone bound restages its buckets and writes no del: line") {
+    val root = tmpRoot()
+    val pot = BucketedPotTable(spark, root, "t", nBuckets = 4)
+    val bound = graft.kv.PotTable.MaxTombstones
+    pot.upsert((0 until bound + 100).map(i => (s"k$i", i)).toDF("key", "v"))
+    pot.remove((0 until 10).map(i => s"k$i"))                  // gen 2: tombstones
+    assert(manifestLines(root, 2L).exists(_.startsWith("del:")))
+    val g3 = pot.remove((10 until bound + 20).map(i => s"k$i")) // gen 3: folds
+    assert(!manifestLines(root, g3).exists(_.startsWith("del:")))
+    assert(pot.bucketsWrittenAt(g3) === (0 until 4))
+    val want = (bound + 20 until bound + 100).map(i => s"k$i" -> i).toMap
+    assert(pot.get().select("key", "v").as[(String, Int)].collect().toMap === want)
+    assert(pot.get("k5").isEmpty)
+  }
+
+  test("bucketed upsert stages through one exchange in at most three Spark jobs") {
+    val root = tmpRoot()
+    val pot = BucketedPotTable(spark, root, "t", nBuckets = 8)
+    pot.upsert((1 to 200).map(i => (s"k$i", i)).toDF("key", "v"))
+    val batch = (150 to 260).map(i => (s"k$i", -i)).toDF("key", "v")
+    val (gen, plans) = plansDuring(pot.upsert(batch))
+    val staging = plans.filter(_.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(staging.size === 1, plans.mkString("\n---\n"))
+    // the tree line of every shuffle, not BroadcastExchange
+    assert("""\bExchange \(\d+\)""".r.findAllIn(staging.head).size === 1,
+      staging.head)
+    val (_, jobs) = jobsDuring(pot.upsert(batch.withColumn("v", $"v" - 1)))
+    assert(jobs <= 3, s"$jobs jobs")
+    val state = pot.get().select("key", "v").as[(String, Int)].collect().toMap
+    assert(state.size === 260)
+    assert(state("k149") === 149 && state("k150") === -151 && state("k260") === -261)
+    assert(gen === 2L && pot.generation === 3L)
+    // an empty batch touches no bucket and commits nothing
+    assert(pot.upsert(batch.filter($"v" > 0)) === 3L)
   }
 }

@@ -249,8 +249,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
         ks.map(k => s"""{"k":"$k","d":{"v":1}}""").mkString("", "\n", "\n"))
       b -> Seq((0, f.toString))
     }
-    val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
-    graft.sources.BucketedStmtLog.begin(root, "crashproc",
+    val fs = graft.sources.BucketedPotV2Source.fsOf(root)
+    val base = graft.sources.BucketedPotV2Source.headVector(fs, root, 4)
+    graft.sources.BucketedStmtLog.begin(fs, root, "crashproc",
       graft.sources.BucketedStmtLog.intentBody(
         "insert", "crashproc", truncate = false, Long.MaxValue,
         byBucket.keys.toSeq.sorted,

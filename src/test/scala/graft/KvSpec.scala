@@ -864,4 +864,135 @@ class KvSpec extends AnyFunSuite {
     assert(pot.get().select("key").as[String].collect().sorted.toSeq
       === Seq("j", "k", "z"))
   }
+
+  /** Generation `g`'s raw marker lines. */
+  private def markerLines(root: String, g: Long): Seq[String] =
+    graft.kv.CommitMarker.bodyAt(fsOf(root),
+      new org.apache.hadoop.fs.Path(s"$root/t/_commits"), g).get.split("\n").toSeq
+
+  /** Staged data dirs of pot `t`. */
+  private def stagedDirs(root: String): Set[String] =
+    new java.io.File(s"$root/t/data").listFiles().map(_.getName).toSet
+
+  private def state(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+    df.select("key", "v").as[(String, Int)].collect().toMap
+
+  test("remove is a tombstone commit: no Spark job, no data file, one del: line") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.upsert(Seq(("a", 1), ("b", 2), ("c", 3)).toDF("key", "v"))
+    val before = stagedDirs(root)
+    val (gen, jobs) = jobsDuring(pot.remove(Seq("a", "zzz")))
+    assert((gen, jobs) === ((2L, 0)))
+    assert(stagedDirs(root) === before)
+    assert(markerLines(root, 2L).head === markerLines(root, 1L).head)
+    assert(markerLines(root, 2L).filter(_.startsWith("del:")) ===
+      Seq("""del:["a","zzz"]"""))
+    val (_, jobs2) = jobsDuring(pot.remove(Seq("b")))
+    assert(jobs2 === 0)
+    assert(markerLines(root, 3L).filter(_.startsWith("del:")) ===
+      Seq("""del:["a","b","zzz"]"""))
+    assert(state(pot.get()) === Map("c" -> 3))
+  }
+
+  test("remove then upsert of the same key brings it back; getAt reads both sides of the tombstone") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.upsert(Seq(("a", 1), ("b", 2)).toDF("key", "v"))  // gen 1
+    pot.remove(Seq("a"))                                  // gen 2
+    pot.upsert(Seq(("a", 10)).toDF("key", "v"))           // gen 3 folds
+    assert(!markerLines(root, 3L).exists(_.startsWith("del:")))
+    assert(state(pot.get()) === Map("a" -> 10, "b" -> 2))
+    assert(state(pot.getAt(1L)) === Map("a" -> 1, "b" -> 2))
+    assert(state(pot.getAt(2L)) === Map("b" -> 2))
+    // the fold wrote the tombstone into the data: no `a` from gen 1 left
+    assert(spark.read.parquet(markerLines(root, 3L).head)
+      .filter($"key" === "a").select("v").as[Int].collect().toSeq === Seq(10))
+    // the same through replace, conditionalUpsert and removeWhere
+    pot.remove(Seq("b"))                                                     // gen 4
+    pot.conditionalUpsert(Seq(("b", 5)).toDF("key", "v"), 0L, pot.generation) // gen 5
+    assert(!markerLines(root, 5L).exists(_.startsWith("del:")))
+    pot.remove(Seq("a"))                                                     // gen 6
+    pot.removeWhere($"key" === "zzz")                                        // gen 7
+    assert(!markerLines(root, 7L).exists(_.startsWith("del:")))
+    assert(state(pot.get()) === Map("b" -> 5))
+    pot.remove(Seq("b"))                                                     // gen 8
+    pot.replace(Seq(("b", 6)).toDF("key", "v"), pot.generation)              // gen 9
+    assert(!markerLines(root, 9L).exists(_.startsWith("del:")))
+    assert(state(pot.get()) === Map("b" -> 6))
+  }
+
+  test("diff across a tombstone commit reports removed keys") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.upsert(Seq(("a", 1), ("b", 2), ("c", 3)).toDF("key", "v"))
+    pot.remove(Seq("a", "nope"))
+    pot.upsert(Seq(("b", 20)).toDF("key", "v"))
+    def changes(from: Long, to: Long) =
+      pot.diff(from, to).as[(String, String)].collect().toMap
+    assert(changes(1L, 2L) === Map("a" -> "removed"))
+    assert(changes(2L, 1L) === Map("a" -> "added"))
+    assert(changes(1L, 3L) === Map("a" -> "removed", "b" -> "changed"))
+  }
+
+  test("a null-key row survives a remove") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.replace(Seq((Some("a"), 1), (None, 2)).toDF("key", "v"), 0L)
+    pot.remove(Seq("a"))
+    val rows = pot.get().select("key", "v").as[(Option[String], Int)].collect()
+    assert(rows.toSeq === Seq((None, 2)))
+  }
+
+  test("keys holding a comma, a quote and a newline round-trip through the del: line") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    val odd = Seq("a,b", "q\"x", "n\nl", "del:[\"x\"]", " sp ")
+    pot.upsert((odd :+ "keep").zipWithIndex.toDF("key", "v"))
+    pot.remove(odd.take(3))
+    pot.remove(odd.drop(3))
+    assert(markerLines(root, 3L).count(_.startsWith("del:")) === 1)
+    val del = markerLines(root, 3L).find(_.startsWith("del:")).get
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(del.stripPrefix("del:"), classOf[Array[String]]).toSet === odd.toSet)
+    assert(pot.get().select("key").as[String].collect().toSeq === Seq("keep"))
+    assert(pot.getAt(2L).select("key").as[String].collect().toSet ===
+      Set("del:[\"x\"]", " sp ", "keep"))
+  }
+
+  test("a remove past the tombstone bound stages the filtered view and writes no del: line") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    val bound = graft.kv.PotTable.MaxTombstones
+    pot.upsert((0 until bound + 100).map(i => (s"k$i", i)).toDF("key", "v"))
+    pot.remove((0 until bound - 10).map(i => s"k$i"))   // gen 2: tombstones
+    assert(markerLines(root, 2L).exists(_.startsWith("del:")))
+    assert(markerLines(root, 2L).head === markerLines(root, 1L).head)
+    pot.remove((bound - 10 until bound + 20).map(i => s"k$i")) // gen 3: folds
+    assert(!markerLines(root, 3L).exists(_.startsWith("del:")))
+    assert(markerLines(root, 3L).head !== markerLines(root, 1L).head)
+    val want = (bound + 20 until bound + 100).map(i => s"k$i" -> i).toMap
+    assert(state(pot.get()) === want)
+    assert(spark.read.parquet(markerLines(root, 3L).head).count() === 80L)
+    // one remove over the bound on its own folds too
+    pot.remove(Seq("k0"))                                       // gen 4
+    pot.remove((0 until bound + 5).map(i => s"x$i"))            // gen 5
+    assert(!markerLines(root, 5L).exists(_.startsWith("del:")))
+    assert(state(pot.get()) === want)
+  }
+
+  test("vacuum after tombstone commits keeps their base; reads stay correct") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.upsert(Seq(("a", 1), ("b", 2), ("c", 3)).toDF("key", "v")) // gen 1
+    pot.upsert(Seq(("d", 4)).toDF("key", "v"))                     // gen 2
+    pot.remove(Seq("a"))                                           // gen 3
+    pot.remove(Seq("b"))                                           // gen 4
+    pot.vacuum(retainGenerations = 1)
+    assert(stagedDirs(root) ===
+      Set(new java.io.File(markerLines(root, 2L).head).getName))
+    assert(state(pot.get()) === Map("c" -> 3, "d" -> 4))
+    assert(state(pot.getAt(3L)) === Map("b" -> 2, "c" -> 3, "d" -> 4))
+    intercept[PotTable.RetentionViolated](pot.getAt(1L))
+  }
 }

@@ -30,8 +30,8 @@ class MetricsSpec extends AnyFunSuite {
     val m = Metrics.install(spark)
     val root = java.nio.file.Files.createTempDirectory("graft-m2").toString
 
-    // mixed workload: 2 writes, 1 remove (itself one engine rewrite),
-    // 1 read, 2 lists — the reference's four route classes
+    // mixed workload: 2 writes, 1 remove (a tombstone commit that runs no
+    // engine query), 1 read, 2 lists — the reference's four route classes
     val t = PotTable(spark, root, "inventory/items")
     t.upsert(Seq(("k1", "v1"), ("k2", "v2")).toDF("key", "doc"))
     t.upsert(Seq(("k3", "v3")).toDF("key", "doc"))
@@ -44,7 +44,7 @@ class MetricsSpec extends AnyFunSuite {
     // op-level counters are recorded synchronously at the call site
     assert(snap("pot_lists") === 2L, snap.toString)
     assert(snap("pot_removes") === 1L, snap.toString)
-    // every commit (2 upserts + the remove's rewrite) timed one publish CAS
+    // every commit (2 upserts + the remove's tombstone) timed one publish CAS
     assert(snap("lock_count") === 3L, snap.toString)
     assert(snap("lock_sum_ms") >= 0L, snap.toString)
     // histogram totals equal the count and land in real buckets
@@ -53,13 +53,13 @@ class MetricsSpec extends AnyFunSuite {
     assert(hist.keySet.contains("lock_ms_le_0") &&
       hist.keySet.contains("lock_ms_le_10000") &&
       hist.keySet.contains("lock_ms_gt_10000"), hist.toString)
-    // engine-level: listener classifies the remove's rewrite as a write;
-    // callbacks fire async, so poll like the first test — for the read as
-    // well, whose callback arrives after the remove's write
+    // engine-level: listener classifies the two upserts' staging as writes
+    // and the remove adds none; callbacks fire async and in order, so poll
+    // like the first test until the read's, which comes after the writes'
     val deadline = System.currentTimeMillis() + 10000
-    while ((m.writes.sum() < 3 || m.reads.sum() < 1) &&
+    while ((m.writes.sum() < 2 || m.reads.sum() < 1) &&
       System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(m.snapshot("pot_writes") >= 3L, m.snapshot.toString)
+    assert(m.snapshot("pot_writes") === 2L, m.snapshot.toString)
     assert(m.snapshot("pot_reads") >= 1L, m.snapshot.toString)
   }
 }

@@ -8,6 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixture shapes from the reference's own docs/tests (FIXTURES.md A1/A3).
   */
 class PotJsonSpec extends AnyFunSuite {
+  /** A bucketed store's FileSystem, as its statements take it. */
+  private def storeFs(root: String) = graft.sources.BucketedPotV2Source.fsOf(root)
+
   import TestSpark._
 
   private def writePot(dir: java.nio.file.Path, name: String, json: String): Unit = {
@@ -511,7 +514,7 @@ class PotJsonSpec extends AnyFunSuite {
     val zzBuckets = Set("zz:a", "zz:b")
       .map(graft.sources.BucketedPotV2Source.bucketOf(_, 8))
     val existing = graft.sources.BucketedPotV2Source
-      .existingBuckets(root, 8).length
+      .existingBuckets(storeFs(root), root, 8).length
     // the shared planner prunes bucket objects through their zmaps; the
     // glob scan sees exactly the bucketed layout
     val b = new graft.sources.PotV2ScanBuilder(s"$root/_b=*/data.json")
@@ -1948,9 +1951,9 @@ class PotJsonSpec extends AnyFunSuite {
       .as[String].head() === """{"v":1000}""")
     assert(spark.sql(s"SELECT count(*) FROM $tbl").as[Long].head() === 40L)
     // metadata DELETE rewrites only the touched buckets
-    val gensBefore = graft.sources.BucketedPotV2Source.headVector(root, 8)
+    val gensBefore = graft.sources.BucketedPotV2Source.headVector(storeFs(root), root, 8)
     spark.sql(s"DELETE FROM $tbl WHERE key IN ('c010', 'c011')")
-    val gensAfter = graft.sources.BucketedPotV2Source.headVector(root, 8)
+    val gensAfter = graft.sources.BucketedPotV2Source.headVector(storeFs(root), root, 8)
     val moved = gensAfter.count { case (b, g) => gensBefore.getOrElse(b, 0L) != g }
     val expectTouched = Set("c010", "c011")
       .map(graft.sources.BucketedPotV2Source.bucketOf(_, 8)).size
@@ -2290,8 +2293,8 @@ class PotJsonSpec extends AnyFunSuite {
     assert(readKeys() === (1 to 20).map(i => s"s$i").toSet)
     // simulate a statement caught MID-FLIGHT: intent up (base = current
     // heads), then exactly one bucket's chain commits (the prefix)
-    val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
-    graft.sources.BucketedStmtLog.begin(root, "test-stmt-1",
+    val base = graft.sources.BucketedPotV2Source.headVector(storeFs(root), root, 4)
+    graft.sources.BucketedStmtLog.begin(storeFs(root), root, "test-stmt-1",
       graft.sources.BucketedStmtLog.intentBody(
         "insert", "test-stmt-1", truncate = false,
         Long.MaxValue, Seq(0, 1, 2, 3),
@@ -2306,7 +2309,7 @@ class PotJsonSpec extends AnyFunSuite {
     assert(readKeys() === (1 to 20).map(i => s"s$i").toSet,
       "reader observed a prefix-applied statement")
     // ALL: completing the statement flips it visible atomically
-    graft.sources.BucketedStmtLog.complete(root, "test-stmt-1", Seq.empty)
+    graft.sources.BucketedStmtLog.complete(storeFs(root), root, "test-stmt-1", Seq.empty)
     assert(readKeys().contains("prefix-row"))
   }
 
@@ -2333,8 +2336,8 @@ class PotJsonSpec extends AnyFunSuite {
         ks.map(k => s"""{"k":"$k","d":{"v":1}}""").mkString("", "\n", "\n"))
       b -> Seq((0, f.toString))
     }
-    val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
-    graft.sources.BucketedStmtLog.begin(root, "crashq",
+    val base = graft.sources.BucketedPotV2Source.headVector(storeFs(root), root, 4)
+    graft.sources.BucketedStmtLog.begin(storeFs(root), root, "crashq",
       graft.sources.BucketedStmtLog.intentBody(
         "insert", "crashq", truncate = false, Long.MaxValue,
         byBucket.keys.toSeq.sorted,
@@ -2377,8 +2380,8 @@ class PotJsonSpec extends AnyFunSuite {
         ks.map(k => s"""{"k":"$k","d":{"v":7}}""").mkString("", "\n", "\n"))
       b -> Seq((0, f.toString))
     }
-    val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
-    graft.sources.BucketedStmtLog.begin(root, "epq-e7",
+    val base = graft.sources.BucketedPotV2Source.headVector(storeFs(root), root, 4)
+    graft.sources.BucketedStmtLog.begin(storeFs(root), root, "epq-e7",
       graft.sources.BucketedStmtLog.intentBody(
         "epoch", "epq", truncate = false, Long.MaxValue,
         byBucket.keys.toSeq.sorted,
@@ -2429,8 +2432,8 @@ class PotJsonSpec extends AnyFunSuite {
         ks.map(k => s"""{"k":"$k","d":{"v":1}}""").mkString("", "\n", "\n"))
       b -> Seq((0, f.toString))
     }
-    val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
-    graft.sources.BucketedStmtLog.begin(root, "agedq",
+    val base = graft.sources.BucketedPotV2Source.headVector(storeFs(root), root, 4)
+    graft.sources.BucketedStmtLog.begin(storeFs(root), root, "agedq",
       graft.sources.BucketedStmtLog.intentBody(
         "insert", "agedq", truncate = false, Long.MaxValue,
         byBucket.keys.toSeq.sorted,
@@ -2474,8 +2477,8 @@ class PotJsonSpec extends AnyFunSuite {
         ks.map(k => s"""{"k":"$k","d":{"v":1}}""").mkString("", "\n", "\n"))
       b -> Seq((0, f.toString))
     }
-    val base = graft.sources.BucketedPotV2Source.headVector(root, 4)
-    graft.sources.BucketedStmtLog.begin(root, "agedw",
+    val base = graft.sources.BucketedPotV2Source.headVector(storeFs(root), root, 4)
+    graft.sources.BucketedStmtLog.begin(storeFs(root), root, "agedw",
       graft.sources.BucketedStmtLog.intentBody(
         "insert", "agedw", truncate = false, Long.MaxValue,
         byBucket.keys.toSeq.sorted,
@@ -2510,17 +2513,17 @@ class PotJsonSpec extends AnyFunSuite {
     // vector; between it and the post-CAS re-read an independent commit
     // lands on bucket b0 (performed inside the closure's second call)
     var calls = 0
-    val stale = graft.sources.BucketedPotV2Source.headVector(root, 4)
+    val stale = graft.sources.BucketedPotV2Source.headVector(storeFs(root), root, 4)
     def heads(): Map[Int, Long] = {
       calls += 1
       if (calls == 1) stale
-      else graft.sources.BucketedPotV2Source.headVector(root, 4)
+      else graft.sources.BucketedPotV2Source.headVector(storeFs(root), root, 4)
     }
     // the independent commit (visible to readers BEFORE the barrier)
     Seq(("", "seed", """{"v": 9}""")).toDF("pot_file", "key", "doc_json")
       .write.format(fmt).option("path", root).option("buckets", "4")
       .mode("append").save()
-    graft.sources.BucketedStmtLog.beginFresh(root, "freshq", Seq(0, 1, 2, 3),
+    graft.sources.BucketedStmtLog.beginFresh(storeFs(root), root, "freshq", Seq(0, 1, 2, 3),
       () => heads(),
       base => graft.sources.BucketedStmtLog.intentBody(
         "insert", "freshq", truncate = false, Long.MaxValue,
@@ -2535,7 +2538,7 @@ class PotJsonSpec extends AnyFunSuite {
       .as[Int].head()
     assert(v === 9,
       "reader snapshot regressed below an independent pre-barrier commit")
-    graft.sources.BucketedStmtLog.abort(root, "freshq", Seq.empty)
+    graft.sources.BucketedStmtLog.abort(storeFs(root), root, "freshq", Seq.empty)
   }
 
   test("PotV2 glob changes with a per-pot vector equals the resumed multi-pot stream; out-of-range entries fail loudly") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.kv.{BucketedPotTable, PotTable}
+import graft.kv.{BucketedPotTable, CommitMarker, PotTable}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +10,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class FwdFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("fwd:///")
   override def getScheme: String = "fwd"
+}
+
+/** `fwd:` whose listings leave out the paths in [[LaggingFileSystem.hidden]]:
+  * a head lookup then misses the newest commit, as a reader that lists
+  * before a concurrent commit lands does. */
+class LaggingFileSystem extends FwdFileSystem {
+  override def listStatus(p: org.apache.hadoop.fs.Path)
+      : Array[org.apache.hadoop.fs.FileStatus] =
+    super.listStatus(p).filterNot(st =>
+      LaggingFileSystem.hidden.contains(st.getPath.toUri.getPath))
+}
+
+object LaggingFileSystem {
+  val hidden: java.util.Set[String] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }
 
 /** Every store path resolves its FileSystems from the conf of the session
@@ -30,9 +45,14 @@ class SessionFsSpec extends AnyFunSuite {
   /** Runs `body(session, root)` with `fwd:` registered on `session` only,
     * `session` active, and `root` a fresh `fwd:` directory. */
   private def onFwd(body: (SparkSession, String) => Unit): Unit =
+    onFwdWith(classOf[FwdFileSystem])(body)
+
+  /** [[onFwd]] with `impl` serving the `fwd:` scheme. */
+  private def onFwdWith(impl: Class[_ <: FwdFileSystem])(
+      body: (SparkSession, String) => Unit): Unit =
     Scratch.withDir("graft-fwd") { dir =>
       val s = spark.newSession()
-      s.conf.set("fs.fwd.impl", classOf[FwdFileSystem].getName)
+      s.conf.set("fs.fwd.impl", impl.getName)
       s.conf.set("fs.fwd.impl.disable.cache", "true")
       s.conf.set("spark.sql.catalog.graft_fns",
         classOf[graft.sources.GraftFunctionCatalog].getName)
@@ -58,6 +78,14 @@ class SessionFsSpec extends AnyFunSuite {
       val pot = PotTable(s, root, "t")
       pot.upsert(Seq(("a", 1), ("b", 2)).toDF("key", "v"))
       pot.remove(Seq("a"))
+      // the remove is a tombstone marker over generation 1's staged data
+      val marker = CommitMarker.read(
+        new org.apache.hadoop.fs.Path(root).getFileSystem(
+          s.sessionState.newHadoopConf()),
+        new org.apache.hadoop.fs.Path(s"$root/t/_commits/2"))
+      assert(marker.split("\n").last === """del:["a"]""")
+      assert(pot.get().select("key").as[String].collect().toSeq === Seq("b"))
+      assert(pot.getAt(1L).count() === 2L)
       pot.replace(Seq(("b", 3), ("c", 4)).toDF("key", "v"),
         pot.generation, Some("app" -> 7L))
       assert(pot.get().select("key", "v").as[(String, Int)].collect().toMap
@@ -75,6 +103,13 @@ class SessionFsSpec extends AnyFunSuite {
       pot.upsert(Seq(("k1", 100)).toDF("key", "v"))
       assert(pot.get().count() === 12L)
       assert(pot.get("k1").select("v").as[Int].collect().toSeq === Seq(100))
+      assert(pot.remove(Seq("k1", "k2")) === 3L)
+      assert(pot.bucketsWrittenAt(3L).isEmpty)
+      assert(pot.get("k1").isEmpty)
+      assert(pot.get().count() === 10L)
+      pot.upsert(Seq(("k1", 7)).toDF("key", "v"))
+      assert(pot.get("k1").select("v").as[Int].collect().toSeq === Seq(7))
+      assert(pot.get().count() === 11L)
     }
   }
 
@@ -159,6 +194,44 @@ class SessionFsSpec extends AnyFunSuite {
         deleted.toString)
       assert(keys(s.read.format(potFmt).option("path", pot).load())
         === Set("b"))
+    }
+  }
+
+  test("fwd: a remove that loses the CAS throws CommitConflict and leaves nothing on disk") {
+    onFwdWith(classOf[LaggingFileSystem]) { (s, root) =>
+      import s.implicits._
+      val dir = root.stripPrefix("fwd:")
+      def files: Set[String] = {
+        def walk(f: java.io.File): Seq[String] =
+          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f.getPath)
+        walk(new java.io.File(dir)).toSet
+      }
+      val pot = PotTable(s, root, "t")
+      val store = BucketedPotTable(s, root, "b", nBuckets = 4)
+      Seq(Seq(("a", 1), ("b", 2)), Seq(("c", 3))).foreach { batch =>
+        pot.upsert(batch.toDF("key", "v"))
+        store.upsert(batch.toDF("key", "v"))
+      }
+      // both tables' removers read generation 1 as the head
+      Seq("t", "b").foreach(t => LaggingFileSystem.hidden.add(s"$dir/$t/_commits/2"))
+      try {
+        assert((pot.generation, store.generation) === ((1L, 1L)))
+        val before = files
+        val many = (0 to PotTable.MaxTombstones).map(i => s"x$i")
+        val (_, jobs) = TestSpark.jobsDuring {
+          intercept[PotTable.CommitConflict](pot.remove(Seq("a")))
+          intercept[PotTable.CommitConflict](store.remove(Seq("a")))
+        }
+        assert(jobs === 0)
+        // the folding remove stages data first, then deletes it
+        intercept[PotTable.CommitConflict](pot.remove(many))
+        intercept[PotTable.CommitConflict](store.remove(Seq("a") ++ many))
+        assert(files === before)
+      } finally LaggingFileSystem.hidden.clear()
+      Seq(pot.get(), store.get()).foreach { df =>
+        assert(df.select("key").as[String].collect().toSet === Set("a", "b", "c"))
+      }
+      assert((pot.generation, store.generation) === ((2L, 2L)))
     }
   }
 }
