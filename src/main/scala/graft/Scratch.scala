@@ -3,11 +3,13 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+
 /** Run-scoped scratch directories for the entries that build throwaway
   * pots, sinks and checkpoints. The directory is deleted when `body`
-  * returns or throws, so a failing entry leaves nothing behind; a body
-  * that returns a DataFrame must materialize it (`localCheckpoint(true)`)
-  * before it ends, since the files under the dir are gone afterwards.
+  * returns or throws, so a failing entry leaves nothing behind. An entry
+  * whose result is a DataFrame over those files runs under [[pinned]],
+  * which materializes the frame before the files go.
   */
 object Scratch {
 
@@ -29,4 +31,12 @@ object Scratch {
     try body(dir.toString)
     finally new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
   }
+
+  /** [[withDir]] for a body that returns a DataFrame: the frame is pinned
+    * (`localCheckpoint(true)`, blocks cached and lineage cut) before the
+    * dir is deleted, since the files it reads are gone after the call.
+    */
+  def pinned(prefix: String, ram: Boolean = false)(
+      body: String => DataFrame): DataFrame =
+    withDir(prefix, ram)(dir => body(dir).localCheckpoint(true))
 }

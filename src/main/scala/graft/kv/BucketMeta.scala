@@ -39,6 +39,19 @@ object BucketMeta {
 
   val DefaultBuckets = 16
 
+  /** The bucket of `key` under modulus `n`, evaluated driver- or
+    * task-side without a job: xxhash64 (seed 42, Spark's default) pmod n
+    * on the UTF-8 key bytes — the `pmod(xxhash64(key), n)` column every
+    * bucketed writer routes rows by. 0 without hashing for the one-bucket
+    * plain pot.
+    */
+  def bucketOf(key: String, n: Int): Int = if (n == 1) 0 else {
+    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      org.apache.spark.unsafe.types.UTF8String.fromString(key),
+      org.apache.spark.sql.types.StringType, 42L)
+    (((h % n) + n) % n).toInt
+  }
+
   private def marker(storeDir: Path) = new Path(storeDir, "_meta/buckets")
 
   /** The stamped modulus, if the store is self-describing yet. */

@@ -28,7 +28,8 @@ import org.apache.spark.sql.types.StructType
   *     nullable as the parquet reader returns it);
   *   - a [[remove]] restages nothing: its manifest holds one
   *     `del:<bucket>:<JSON array of keys>` line per touched live bucket
-  *     (the bucket from the driver-side [[bucketOf]], so no Spark job runs)
+  *     (the bucket from the driver-side [[BucketMeta.bucketOf]], so no
+  *     Spark job runs)
   *     and the schema line;
   *   - readers resolve bucket i at generation G by overlaying manifests
   *     1..G in order — the latest entry per bucket wins and clears the
@@ -58,7 +59,6 @@ import org.apache.spark.sql.types.StructType
 final class BucketedPotTable(
     spark: SparkSession, root: String, path: String, nBuckets: Int) {
   import spark.implicits._
-  import PotTable.CommitConflict
 
   private def dir = s"$root/$path"
   /** The session's Hadoop conf, taken once per instance; each `fs` call
@@ -194,23 +194,12 @@ final class BucketedPotTable(
     import spark.implicits.StringToColumn
     val v = resolve(generation)
     if (v.dirs.isEmpty) return spark.emptyDataFrame
-    val b = bucketOf(key)
+    val b = BucketMeta.bucketOf(key, buckets)
     v.dirs.get(b) match {
       case Some(dir) if !v.pendingIn(Seq(b)).contains(key) =>
         v.read(Seq(dir)).filter($"key" === key)
       case _ => v.all.filter(lit(false))
     }
-  }
-
-  /** Driver-side twin of [[bucketCol]]: xxhash64 (seed 42, Spark's
-    * default) pmod nBuckets on the UTF-8 key bytes.
-    */
-  private def bucketOf(key: String): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val h = new XxHash64(Seq(Literal(
-      org.apache.spark.unsafe.types.UTF8String.fromString(key),
-      org.apache.spark.sql.types.StringType))).eval(null).asInstanceOf[Long]
-    (((h % buckets) + buckets) % buckets).toInt
   }
 
   /** Stage `df` (it carries `_b` and every table column, and is
@@ -234,24 +223,16 @@ final class BucketedPotTable(
       s"$SchemaTag${schema.json}", expectedGen, Some(stagedRoot))
   }
 
-  /** CAS-publish the manifest `lines` as generation `expectedGen`+1; on a
-    * lost race delete `ownStaging` (own staging only) and rethrow.
+  /** CAS-publish the manifest `lines` as generation `expectedGen`+1
+    * through [[CommitMarker.publishOwn]], timed as lock hold; a lost race
+    * deletes `ownStaging` and rethrows.
     */
   private def publish(lines: Seq[String], expectedGen: Long,
       ownStaging: Option[String]): Long = {
     val next = expectedGen + 1
-    fs.mkdirs(markerPath(next).getParent)
-    // A12: time the publish CAS like PotTable's (lock-hold analogue)
-    val t0 = System.nanoTime()
-    try {
-      CommitMarker.publish(fs, markerPath(next), lines.mkString("\n"))
-      next
-    } catch {
-      case e: CommitConflict =>
-        ownStaging.foreach(s => fs.delete(new Path(s), true))
-        throw e
-    } finally graft.Metrics.of(spark)
-      .foreach(_.recordLockMs((System.nanoTime() - t0) / 1000000L))
+    CommitMarker.publishOwn(fs, markerPath(next), lines.mkString("\n"),
+      ownStaging.map(new Path(_)), graft.Metrics.of(spark))
+    next
   }
 
   /** `df` hash-distributed into one partition per touched bucket: the one
@@ -311,7 +292,8 @@ final class BucketedPotTable(
     val gen = generation
     if (gen == 0L) return 0L
     val v = resolve(gen)
-    val byB = keys.groupBy(bucketOf).filter(e => v.dirs.contains(e._1))
+    val byB = keys.groupBy(BucketMeta.bucketOf(_, buckets))
+      .filter(e => v.dirs.contains(e._1))
     if (byB.isEmpty) return gen // nothing to delete: no-op
     val pending = byB.foldLeft(v.pending) { case (p, (b, ks)) =>
       p.updated(b, p.getOrElse(b, Set.empty) ++ ks) }
@@ -370,9 +352,8 @@ final class BucketedPotTable(
 
   /** Delete staged roots unreferenced by the manifests of the last
     * `retainGenerations` generations' views (lost races and superseded
-    * buckets older than the grace window). Roots whose encoded generation
-    * is ahead of the committed one are a concurrent writer's in-flight
-    * staging and are always kept — see the class note.
+    * buckets older than the grace window). A concurrent writer's in-flight
+    * staging is always kept — see [[CommitMarker.sweepStaged]].
     */
   def vacuum(retainGenerations: Int = 1): Unit = {
     val gen = generation
@@ -386,15 +367,8 @@ final class BucketedPotTable(
     val keep = (math.max(0L, gen - retainGenerations) to gen)
       .flatMap(g => resolve(g).dirs.values)
       .map(topSegment).toSet
-    val StagedGen = "^g(\\d+)_.*".r
-    fs.listStatus(dataRoot).foreach { st =>
-      val name = st.getPath.getName
-      val inFlight = name match {
-        case StagedGen(g) => g.toLong > gen
-        case _            => false
-      }
-      if (!inFlight && !keep.contains(name)) fs.delete(st.getPath, true)
-    }
+    CommitMarker.sweepStaged(fs, dataRoot, gen, keep)
+    ()
   }
 
   /** Admin recovery for a wedged generation — see [[PotTable.repair]]. */
@@ -443,14 +417,9 @@ final class BucketedPotTable(
     val body = s"$staged\n" +
       s"""{"srcGen":$srcGen,"bucketBits":$bucketBits,""" +
       s""""dims":[${dims.map(d => "\"" + d._1 + "\"").mkString(",")}]}"""
-    fs.mkdirs(zorderCommits)
-    try CommitMarker.publish(
-      fs, new Path(zorderCommits, layoutGen.toString), body)
-    catch {
-      case e: CommitConflict =>
-        fs.delete(new Path(staged), true) // own staging only
-        throw e
-    }
+    // no lock time: a layout publish is maintenance, not a kv write
+    CommitMarker.publishOwn(fs, new Path(zorderCommits, layoutGen.toString),
+      body, Some(new Path(staged)))
     layoutGen
   }
 
@@ -475,8 +444,9 @@ final class BucketedPotTable(
   /** Delete layout data dirs not referenced by the newest `retain`
     * layout generations ([[vacuum]]'s discipline applied to the derived
     * artifact — without it every re-cluster leaks a full table copy).
-    * Staged dirs whose encoded generation is ahead of the committed head
-    * are a concurrent clusterer's in-flight staging and are always kept.
+    * A concurrent clusterer's in-flight staging is always kept — see
+    * [[CommitMarker.sweepStaged]]. Returns only the paths whose delete
+    * succeeded.
     */
   def vacuumLayouts(retain: Int = 1): Seq[String] = {
     val dataRoot = new Path(s"$dir/_zorder/data")
@@ -489,20 +459,9 @@ final class BucketedPotTable(
       val body = CommitMarker.read(fs, new Path(zorderCommits, g.toString))
       new Path(body.split("\n", 2)(0)).getName
     }.toSet
-    val StagedGen = "^g(\\d+)_.*".r
-    fs.listStatus(dataRoot).toSeq.flatMap { st =>
-      val name = st.getPath.getName
-      val inFlight = name match {
-        case StagedGen(g) => g.toLong > head
-        case _            => false
-      }
-      // report a path as retired ONLY when the delete actually happened —
-      // a false return (permissions, concurrent access) must not read as
-      // a reclaimed layout in the vacuum_layouts CALL output (r18 ADVICE)
-      if (!inFlight && !keep.contains(name) && fs.delete(st.getPath, true))
-        Some(st.getPath.toString)
-      else None
-    }
+    // a false delete (permissions, concurrent access) must not read as a
+    // reclaimed layout in the vacuum_layouts CALL output (r18 ADVICE)
+    CommitMarker.sweepStaged(fs, dataRoot, head, keep).map(_.toString)
   }
 
   /** Pruned read over the PERSISTED layout for a range predicate on one

@@ -185,6 +185,45 @@ private[graft] object CommitMarker {
         else s"marker $marker already committed by another writer")
   }
 
+  /** [[publish]] `body` as `marker`, its parent dir made first: the one
+    * CAS every kv table commits through. On a lost race the writer deletes
+    * `ownStaging` (its own staged data, never published data) and the
+    * [[PotTable.CommitConflict]] rethrows. With `lockTimer`, the CAS's wall
+    * time is recorded as lock-hold time, conflict or not (A12: the publish
+    * CAS is the write-side mutual exclusion, the analogue of the
+    * reference's localLock hold, server.go:616-626).
+    */
+  def publishOwn(fs: FileSystem, marker: Path, body: String,
+      ownStaging: Option[Path], lockTimer: Option[graft.Metrics] = None): Unit = {
+    fs.mkdirs(marker.getParent)
+    val t0 = System.nanoTime()
+    try publish(fs, marker, body)
+    catch {
+      case e: CommitConflict =>
+        ownStaging.foreach(fs.delete(_, true))
+        throw e
+    } finally lockTimer.foreach(_.recordLockMs((System.nanoTime() - t0) / 1000000L))
+  }
+
+  private val StagedGen = "^g(\\d+)_.*".r
+
+  /** Delete every dir under `dataRoot` whose name `keep` lacks, and return
+    * the paths whose delete succeeded. Staged names encode their TARGET
+    * generation (`g<N>_<uuid>`): a dir with N above `head` belongs to a
+    * concurrent writer that staged but has not yet won the CAS, so it is
+    * always kept — deleting it would let that writer publish pointers to
+    * missing files.
+    */
+  def sweepStaged(fs: FileSystem, dataRoot: Path, head: Long,
+      keep: Set[String]): Seq[Path] =
+    fs.listStatus(dataRoot).toSeq.map(_.getPath).filter { p =>
+      val inFlight = p.getName match {
+        case StagedGen(g) => g.toLong > head
+        case _            => false
+      }
+      !inFlight && !keep.contains(p.getName) && fs.delete(p, true)
+    }
+
   /** Admin recovery for the double-crash wedge (see [[publish]]): delete
     * every zero-length marker husk and its reclaim file under `commits`.
     * PRECONDITION (caller-enforced, like any fsck): no writer is live —

@@ -153,16 +153,18 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
       df.select($"key",
         md5(to_json(struct(payload.map(col).toSeq: _*))).as("h"))
     }
-    val a = keyed(fromGen).withColumnRenamed("h", "h_from")
-    val b = keyed(toGen).withColumnRenamed("h", "h_to")
-    a.join(b, Seq("key"), "full_outer")
+    // null-safe: a pot may hold one null-key document, which must match
+    // itself rather than diff as removed and added
+    val a = keyed(fromGen).toDF("k_from", "h_from")
+    val b = keyed(toGen).toDF("k_to", "h_to")
+    a.join(b, $"k_from" <=> $"k_to", "full_outer")
       .withColumn("change",
         when($"h_from".isNull, lit("added"))
           .when($"h_to".isNull, lit("removed"))
           .when($"h_from" =!= $"h_to", lit("changed"))
           .otherwise(lit("unchanged")))
       .filter($"change" =!= "unchanged")
-      .select($"key", $"change")
+      .select(coalesce($"k_from", $"k_to").as("key"), $"change")
   }
 
   /** Stage `df` under a unique path, then atomically publish it (path,
@@ -177,27 +179,16 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
       expectedGen, Some(staged))
   }
 
-  /** CAS-publish `m` as generation `expectedGen`+1. On a lost race the
-    * writer deletes `ownStaging` (its own staged data, never published
-    * data) and rethrows the [[PotTable.CommitConflict]].
+  /** CAS-publish `m` as generation `expectedGen`+1 through
+    * [[CommitMarker.publishOwn]], timed as lock hold; a lost race deletes
+    * `ownStaging` and rethrows the [[PotTable.CommitConflict]].
     */
   private def publish(m: PotTable.Marker, expectedGen: Long,
       ownStaging: Option[String]): Long = {
     val next = expectedGen + 1
-    fs.mkdirs(markerPath(next).getParent)
-    // A12: the publish CAS is our write-side mutual exclusion — time it as
-    // the analogue of the reference's localLock hold (server.go:616-626
-    // records elapsed ms unconditionally via defer, conflict or not)
-    val t0 = System.nanoTime()
-    try {
-      CommitMarker.publish(fs, markerPath(next), PotTable.renderMarker(m))
-      next
-    } catch {
-      case e: CommitConflict =>
-        ownStaging.foreach(s => fs.delete(new Path(s), true))
-        throw e
-    } finally graft.Metrics.of(spark)
-      .foreach(_.recordLockMs((System.nanoTime() - t0) / 1000000L))
+    CommitMarker.publishOwn(fs, markerPath(next), PotTable.renderMarker(m),
+      ownStaging.map(new Path(_)), graft.Metrics.of(spark))
+    next
   }
 
   /** Last-writer-wins merge of `docs` into the map at the given base
@@ -337,11 +328,8 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     * marker names its base's staged path, so the keep set holds the base
     * while any retained generation reads through it. Readers pin a
     * generation at scan start, so retention gives in-flight reads a grace
-    * window instead of deleting under them. Staged names encode their
-    * TARGET generation (`g<N>_<uuid>`): a dir with N > the committed
-    * generation belongs to a concurrent writer that staged but has not yet
-    * won the CAS — deleting it would let that writer publish pointers to
-    * missing files, so vacuum always skips it.
+    * window instead of deleting under them. A concurrent writer's
+    * in-flight staging is always kept — see [[CommitMarker.sweepStaged]].
     */
   def vacuum(retainGenerations: Int = 1): Unit = {
     val gen = generation
@@ -352,15 +340,8 @@ final class PotTable(spark: SparkSession, root: String, path: String) {
     val keep = ((math.max(1L, gen - retainGenerations)) to gen)
       .flatMap(g => CommitMarker.bodyAt(fs, commits, g))
       .map(b => new Path(PotTable.parseMarker(b).staged).getName).toSet
-    val StagedGen = "^g(\\d+)_.*".r
-    fs.listStatus(dataRoot).foreach { st =>
-      val name = st.getPath.getName
-      val inFlight = name match {
-        case StagedGen(g) => g.toLong > gen
-        case _            => false
-      }
-      if (!inFlight && !keep.contains(name)) fs.delete(st.getPath, true)
-    }
+    CommitMarker.sweepStaged(fs, dataRoot, gen, keep)
+    ()
   }
 }
 

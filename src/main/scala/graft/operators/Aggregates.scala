@@ -1148,12 +1148,11 @@ object Aggregates {
 
   def zorderLayoutScan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-zorder") { root =>
+    Scratch.pinned("graft-zorder") { root =>
       zorderLayoutBuild(s, d, root).groupBy($"l_returnflag")
         .agg(count(lit(1)).as("n_rows"),
           sum($"l_orderkey").as("sum_okey"))
         .orderBy($"l_returnflag")
-        .localCheckpoint(true)
     }
   }
 

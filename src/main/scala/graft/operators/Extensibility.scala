@@ -295,7 +295,7 @@ object Extensibility {
     */
   def dsv2PotRead(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-potv2") { dir =>
+    Scratch.pinned("graft-potv2") { dir =>
       val rows = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name", $"n_regionkey")
         .collect() // 25-row dimension: building the migration INPUT artifact
@@ -307,7 +307,6 @@ object Extensibility {
           get_json_object($"doc_json", "$.name").as("name"),
           get_json_object($"doc_json", "$.region").cast("int").as("region"))
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -362,7 +361,7 @@ object Extensibility {
     */
   def dsv2AggPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-potv2agg") { dir =>
+    Scratch.pinned("graft-potv2agg") { dir =>
       val rows = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name", $"n_regionkey")
         .collect()
@@ -375,7 +374,6 @@ object Extensibility {
         .select(regexp_extract($"pot_file", "([^/]+)/data\\.json$", 1).as("pot"),
           $"n_docs")
         .orderBy($"pot")
-        .localCheckpoint(true)
     }
   }
 
@@ -401,7 +399,7 @@ object Extensibility {
     */
   def aggMinMaxPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u49") { dir =>
+    Scratch.pinned("graft-u49") { dir =>
       val rows = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name", $"n_regionkey").collect()
       writeParityPots(dir, rows, idNameRegionDoc)
@@ -417,7 +415,6 @@ object Extensibility {
         min($"key").as("min_key"), max($"key").as("max_key"))
         .select(lit("_all").as("pot"), $"n_docs", $"min_key", $"max_key")
       grouped.unionByName(global).orderBy($"pot")
-        .localCheckpoint(true)
     }
   }
 
@@ -450,7 +447,7 @@ object Extensibility {
     */
   def zoneMapPruning(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u57") { dir =>
+    Scratch.pinned("graft-u57") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name").collect().toSeq
@@ -467,7 +464,6 @@ object Extensibility {
         .filter($"key".isin("k03", "k17"))
         .select($"key", get_json_object($"doc_json", "$.name").as("name"))
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -495,7 +491,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u58") { dir =>
+    Scratch.pinned("graft-u58") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
@@ -529,7 +525,6 @@ object Extensibility {
       Seq((keptYoung, reclaimed))
         .toDF("kept_young_deletes", "reclaimed")
         .crossJoin(v1).crossJoin(head)
-        .localCheckpoint(true)
     }
   }
 
@@ -585,7 +580,7 @@ object Extensibility {
   def stmtHistory(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerStmtHistoryTvf(s)
-    Scratch.withDir("graft-u59") { root =>
+    Scratch.pinned("graft-u59") { root =>
       val fmt = classOf[graft.sources.BucketedPotV2Source].getName
       val nat = Tables.nation(s, d)
       def insert(upd: Int): Unit = nat.select(lit("").as("pot_file"),
@@ -599,7 +594,7 @@ object Extensibility {
       // rolled forward -> journals 'complete' with doneTs = recovery time
       val keys = Seq("ra", "rb", "rc", "rd")
       val byBucket = keys.groupBy(
-        graft.sources.BucketedPotV2Source.bucketOf(_, 4))
+        graft.kv.BucketMeta.bucketOf(_, 4))
       val staging = java.nio.file.Paths.get(root, ".staging-u59crash")
       java.nio.file.Files.createDirectories(staging)
       val frags = byBucket.map { case (b, ks) =>
@@ -635,7 +630,6 @@ object Extensibility {
            |FROM graft_stmt_history('$root')
            |GROUP BY kind, outcome
            |ORDER BY kind, outcome""".stripMargin)
-        .localCheckpoint(true)
     }
   }
 
@@ -663,7 +657,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u60") { root =>
+    Scratch.pinned("graft-u60") { root =>
       Tables.nation(s, d).createOrReplaceTempView("u60_nation")
       val tbl = s"graft_fns.store.`$root`"
       s.sql(
@@ -681,7 +675,6 @@ object Extensibility {
            |  CAST(get_json_object(doc_json, '$$.r') AS BIGINT) AS r
            |FROM $tbl
            |ORDER BY key""".stripMargin)
-        .localCheckpoint(true)
     }
   }
 
@@ -813,7 +806,7 @@ object Extensibility {
   def fieldStatsInventory(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerFieldStatsTvf(s)
-    Scratch.withDir("graft-u71") { dir =>
+    Scratch.pinned("graft-u71") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
       (0 to 4).foreach { g =>
@@ -834,7 +827,6 @@ object Extensibility {
            |  field, t, n, lmin, lmax, smin, smax
            |FROM graft_pot_fieldstats('$dir/*/data.json')
            |ORDER BY pot, field""".stripMargin)
-        .localCheckpoint(true)
     }
   }
 
@@ -861,7 +853,7 @@ object Extensibility {
   def zoneMapInventory(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerZoneMapTvf(s)
-    Scratch.withDir("graft-u61") { dir =>
+    Scratch.pinned("graft-u61") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name").collect().toSeq
@@ -880,7 +872,6 @@ object Extensibility {
            |    AND 'k03' <= kmax THEN 1 ELSE 0 END AS BIGINT) AS covers_k03
            |FROM graft_pot_zonemaps('$dir/*/data.json')
            |ORDER BY pot""".stripMargin)
-        .localCheckpoint(true)
     }
   }
 
@@ -921,7 +912,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u62") { root =>
+    Scratch.pinned("graft-u62") { root =>
       val fmt = classOf[graft.sources.BucketedPotV2Source].getName
       val nat = Tables.nation(s, d)
       def write(df: org.apache.spark.sql.DataFrame, upd: Int): Unit = df.select(
@@ -991,7 +982,6 @@ object Extensibility {
         .crossJoin(Seq((tailBefore, tailAfter, tailWave3, droppedNamed))
           .toDF("tail_before", "tail_after", "tail_wave3", "dropped_named"))
         .orderBy($"probe")
-        .localCheckpoint(true)
     }
   }
 
@@ -1021,7 +1011,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u63") { dir =>
+    Scratch.pinned("graft-u63") { dir =>
       val pot = s"$dir/t/data.json"
       val root = s"$dir/store"
       val potFmt = classOf[graft.sources.PotV2Source].getName
@@ -1093,7 +1083,6 @@ object Extensibility {
         .crossJoin(Seq((storeVerNamed, uncommittedNamed))
           .toDF("store_version_named", "uncommitted_named"))
         .orderBy($"probe")
-        .localCheckpoint(true)
     }
   }
 
@@ -1129,7 +1118,7 @@ object Extensibility {
     */
   def bucketedZmapPrune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u64") { root =>
+    Scratch.pinned("graft-u64") { root =>
       val fmt = classOf[graft.sources.BucketedPotV2Source].getName
       val nat = Tables.nation(s, d)
       nat.select(lit("").as("pot_file"),
@@ -1148,7 +1137,6 @@ object Extensibility {
         .filter($"key".startsWith("zz"))
         .select($"key", get_json_object($"doc_json", "$.name").as("name"))
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -1174,7 +1162,7 @@ object Extensibility {
     */
   def shredZmapPrune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u65") { dir =>
+    Scratch.pinned("graft-u65") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
       // five pots range-clustered on pop = nationkey*1000 (+region), pop
@@ -1200,7 +1188,6 @@ object Extensibility {
       rows
         .crossJoin(Seq(ghostRows).toDF("ghost_rows"))
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -1227,7 +1214,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u66") { dir =>
+    Scratch.pinned("graft-u66") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
       (0 to 4).foreach { g =>
@@ -1247,7 +1234,6 @@ object Extensibility {
         s"""SELECT key, name, pop FROM $tbl
            |WHERE pop < 6000
            |ORDER BY key""".stripMargin)
-        .localCheckpoint(true)
     }
   }
 
@@ -1276,7 +1262,7 @@ object Extensibility {
     */
   def topnObjectSkip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u67") { dir =>
+    Scratch.pinned("graft-u67") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
       (0 to 4).foreach { g =>
@@ -1295,7 +1281,6 @@ object Extensibility {
       probe(df.orderBy($"key".asc).limit(4), "asc")
         .unionAll(probe(df.orderBy($"key".desc).limit(4), "desc"))
         .orderBy($"dir", $"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -1335,7 +1320,7 @@ object Extensibility {
     */
   def statsOnlyAgg(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u68") { dir =>
+    Scratch.pinned("graft-u68") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
       (0 to 4).foreach { g =>
@@ -1390,7 +1375,6 @@ object Extensibility {
           "min_key", "max_key", "n_pop", "min_pop", "max_pop",
           "min_name", "max_name")
         .orderBy($"leg", $"pot")
-        .localCheckpoint(true)
     }
   }
 
@@ -1447,7 +1431,7 @@ object Extensibility {
     */
   def deltaChainZmapPrune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u69") { dir =>
+    Scratch.pinned("graft-u69") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name").collect().toSeq
@@ -1503,7 +1487,6 @@ object Extensibility {
         .unionByName(leg("prefix", probeParts(StringStartsWith("key", "b1")),
           df.filter($"key".startsWith("b1"))))
         .orderBy($"leg")
-        .localCheckpoint(true)
     }
   }
 
@@ -1545,7 +1528,7 @@ object Extensibility {
     */
   def runtimeKeyPrune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u72") { dir =>
+    Scratch.pinned("graft-u72") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
       (0 to 4).foreach { g =>
@@ -1575,7 +1558,6 @@ object Extensibility {
         .crossJoin(Seq((partsStatic, partsRuntime))
           .toDF("parts_static", "parts_runtime"))
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -1609,7 +1591,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u70") { dir =>
+    Scratch.pinned("graft-u70") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name").collect().toSeq
@@ -1674,7 +1656,6 @@ object Extensibility {
           k07.headOption.orNull))
           .toDF("parts_pre", "parts_post", "n_k07", "k07_name"))
         .orderBy($"pot")
-        .localCheckpoint(true)
     }
   }
 
@@ -1707,7 +1688,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u73") { dir =>
+    Scratch.pinned("graft-u73") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name").collect().toSeq
@@ -1778,7 +1759,6 @@ object Extensibility {
         .map { case (pot, st) => (pot, st, after(pot)) }
         .toDF("pot", "status_before", "status_after")
         .orderBy($"pot")
-        .localCheckpoint(true)
     }
   }
 
@@ -1819,7 +1799,7 @@ object Extensibility {
     val ss = s.newSession()
     ss.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    Scratch.withDir("graft-u51") { dir =>
+    Scratch.pinned("graft-u51") { dir =>
       val rows = Tables.nation(ss, d)
         .select($"n_nationkey", $"n_name").collect()
       writeParityPots(dir, rows, r => s"""{"name": "${r.getString(1)}"}""",
@@ -1834,7 +1814,6 @@ object Extensibility {
           regexp_extract($"pot_file", "([^/]+)/data\\.json$", 1).as("pot"),
           $"key", $"n_in_file")
         .orderBy($"pot", $"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -1873,7 +1852,7 @@ object Extensibility {
       classOf[graft.sources.GraftFunctionCatalog].getName)
     ss.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    Scratch.withDir("graft-u54") { dir =>
+    Scratch.pinned("graft-u54") { dir =>
       val fmt = classOf[graft.sources.BucketedPotV2Source].getName
       val rows = Tables.nation(ss, d)
         .select($"n_nationkey", $"n_name", $"n_regionkey").collect().toSeq
@@ -1894,7 +1873,6 @@ object Extensibility {
           get_json_object($"doc_json", "$.region").cast("long").as("region")),
           Seq("key"))
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -1920,7 +1898,7 @@ object Extensibility {
     */
   def bucketedTimestampAsOf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u55") { root =>
+    Scratch.pinned("graft-u55") { root =>
       val fmt = classOf[graft.sources.BucketedPotV2Source].getName
       val nat = Tables.nation(s, d)
       def write(df: org.apache.spark.sql.DataFrame): Unit = df.select(
@@ -1964,7 +1942,6 @@ object Extensibility {
         .select(lit(label).as("state"), $"n", $"n_upd")
       stateAt(t1, "v1").unionAll(stateAt(t2, "head"))
         .orderBy($"state")
-        .localCheckpoint(true)
     }
   }
 
@@ -1996,7 +1973,7 @@ object Extensibility {
     */
   def aggShredPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u56") { dir =>
+    Scratch.pinned("graft-u56") { dir =>
       val rows = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name", $"n_regionkey").collect()
       writeParityPots(dir, rows, { r =>
@@ -2017,7 +1994,6 @@ object Extensibility {
         min($"name").as("min_name"), max($"pop").as("max_pop"))
         .select(lit("_all").as("pot"), $"n_pop", $"min_name", $"max_pop")
       grouped.unionByName(global).orderBy($"pot")
-        .localCheckpoint(true)
     }
   }
 
@@ -2087,7 +2063,7 @@ object Extensibility {
   def chainInventory(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotChainTvf(s)
-    Scratch.withDir("graft-u52") { dir =>
+    Scratch.pinned("graft-u52") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name", $"n_regionkey").collect().toSeq
@@ -2130,7 +2106,6 @@ object Extensibility {
            |  head_gen, covering_gen, dgen_run, needs_compaction
            |FROM graft_pot_chain('$dir/*/data.json')
            |ORDER BY pot""".stripMargin)
-        .localCheckpoint(true)
     }
   }
 
@@ -2159,7 +2134,7 @@ object Extensibility {
     */
   def listPagination(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u53") { dir =>
+    Scratch.pinned("graft-u53") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       Tables.nation(s, d).select(
@@ -2176,7 +2151,6 @@ object Extensibility {
       pages.reduce(_ unionByName _)
         .select($"page", $"key")
         .orderBy($"page", $"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -2238,7 +2212,7 @@ object Extensibility {
   def sqlTvf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotTvf(s)
-    Scratch.withDir("graft-potv2tvf") { dir =>
+    Scratch.pinned("graft-potv2tvf") { dir =>
       val rows = Tables.nation(s, d)
         .select($"n_nationkey", $"n_name", $"n_regionkey").collect()
       writeParityPots(dir, rows, idNameRegionDoc)
@@ -2248,7 +2222,6 @@ object Extensibility {
            |  CAST(get_json_object(doc_json, '$$.region') AS INT) AS region
            |FROM graft_pot('$dir/*/data.json')
            |ORDER BY key""".stripMargin)
-        .localCheckpoint(true)
     }
   }
 
@@ -2268,7 +2241,7 @@ object Extensibility {
   def sqlTvfTimeTravel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotTvf(s)
-    Scratch.withDir("graft-potv2tvt") { dir =>
+    Scratch.pinned("graft-potv2tvt") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       def docs(df: org.apache.spark.sql.DataFrame) = df.select(
@@ -2291,7 +2264,6 @@ object Extensibility {
            |    AS BIGINT) AS n_upd
            |FROM graft_pot('$pot')
            |ORDER BY state""".stripMargin)
-        .localCheckpoint(true)
     }
   }
 
@@ -2327,7 +2299,7 @@ object Extensibility {
   def timestampAsOfRead(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotTvf(s)
-    Scratch.withDir("graft-u46") { dir =>
+    Scratch.pinned("graft-u46") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       def docs(df: org.apache.spark.sql.DataFrame) = df.select(
@@ -2361,7 +2333,6 @@ object Extensibility {
            |    AS BIGINT) AS n_upd
            |FROM graft_pot('$pot', '$t2')
            |ORDER BY state""".stripMargin)
-        .localCheckpoint(true)
     }
   }
 
@@ -2384,7 +2355,7 @@ object Extensibility {
     */
   def dsv2PotWrite(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-potv2w") { dir =>
+    Scratch.pinned("graft-potv2w") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       def docs(df: org.apache.spark.sql.DataFrame) = df.select(
@@ -2410,7 +2381,6 @@ object Extensibility {
             .as("bal_cents"),
           get_json_object($"doc_json", "$.upd").cast("long").as("upd"))
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -2493,7 +2463,7 @@ object Extensibility {
     */
   def potTimeTravel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-potv2tt") { dir =>
+    Scratch.pinned("graft-potv2tt") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       def docs(df: org.apache.spark.sql.DataFrame) = df.select(
@@ -2517,7 +2487,6 @@ object Extensibility {
       readState("head", None)
         .unionByName(readState("v1", Some(1L)))
         .orderBy($"state", $"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -2795,7 +2764,7 @@ object Extensibility {
   def sqlPotChanges(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotChangesTvf(s)
-    Scratch.withDir("graft-potv2chg") { dir =>
+    Scratch.pinned("graft-potv2chg") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       def docs(df: DataFrame, v: Int) = df.select(
@@ -2822,7 +2791,7 @@ object Extensibility {
            |  CAST(get_json_object(doc_json, '$$.v') AS INT) AS v,
            |  (doc_json = 'null') AS deleted
            |FROM graft_pot_changes('$pot', 1)
-           |ORDER BY gen, key""".stripMargin).localCheckpoint(true)
+           |ORDER BY gen, key""".stripMargin)
     }
   }
 
@@ -2952,7 +2921,7 @@ object Extensibility {
   def sqlBucketedPot(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerBucketedPotTvf(s)
-    Scratch.withDir("graft-bpot-tvf") { root =>
+    Scratch.pinned("graft-bpot-tvf") { root =>
       val t = new graft.kv.BucketedPotTable(s, root, "cust_tvf", 8)
       val base = Tables.customer(s, d)
         .filter($"c_custkey" <= 200)
@@ -2967,7 +2936,7 @@ object Extensibility {
            |  SUM(CAST(c_nationkey AS BIGINT)) AS sum_nation
            |FROM graft_bucketed_pot('$root', 'cust_tvf')
            |GROUP BY c_mktsegment
-           |ORDER BY c_mktsegment""".stripMargin).localCheckpoint(true)
+           |ORDER BY c_mktsegment""".stripMargin)
     }
   }
 
@@ -2997,7 +2966,7 @@ object Extensibility {
   def sqlBucketedTimeTravel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerBucketedPotTvf(s)
-    Scratch.withDir("graft-bpot-tt") { root =>
+    Scratch.pinned("graft-bpot-tt") { root =>
       val t = new graft.kv.BucketedPotTable(s, root, "cust_tt", 8)
       val base = Tables.customer(s, d)
         .filter($"c_custkey" <= 150)
@@ -3014,7 +2983,7 @@ object Extensibility {
            |FROM (${at(1, "g1")} UNION ALL ${at(2, "g2")}
            |      UNION ALL ${at(3, "head")}) u
            |GROUP BY state, c_mktsegment
-           |ORDER BY state, c_mktsegment""".stripMargin).localCheckpoint(true)
+           |ORDER BY state, c_mktsegment""".stripMargin)
     }
   }
 
@@ -3089,7 +3058,7 @@ object Extensibility {
 
   def sqlPotHistory(s: SparkSession, d: String): DataFrame = {
     registerPotHistoryTvf(s)
-    Scratch.withDir("graft-potv2hist") { dir =>
+    Scratch.pinned("graft-potv2hist") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       import s.implicits._
@@ -3109,7 +3078,7 @@ object Extensibility {
       s.sql(
         s"""SELECT gen, kind, upserts, deletes
            |FROM graft_pot_history('$pot')
-           |ORDER BY gen""".stripMargin).localCheckpoint(true)
+           |ORDER BY gen""".stripMargin)
     }
   }
 
@@ -3150,7 +3119,7 @@ object Extensibility {
   def sqlPotChangesVector(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotChangesTvf(s)
-    Scratch.withDir("graft-potv2vec") { dir =>
+    Scratch.pinned("graft-potv2vec") { dir =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       def docs(df: DataFrame, v: Int) = df.select(
         lit("").as("pot_file"),
@@ -3182,7 +3151,7 @@ object Extensibility {
            |  CAST(get_json_object(doc_json, '$$.v') AS INT) AS v,
            |  (doc_json = 'null') AS deleted
            |FROM graft_pot_changes('$dir/pots/*/data.json', '$vec')
-           |ORDER BY pot, gen, key""".stripMargin).localCheckpoint(true)
+           |ORDER BY pot, gen, key""".stripMargin)
     }
   }
 
@@ -3397,8 +3366,8 @@ object Extensibility {
   }
 
   def statsBroadcastJoin(s: SparkSession, d: String): DataFrame =
-    Scratch.withDir("graft-potstats") { dir =>
-      statsBroadcastBuild(s, d, dir).localCheckpoint(true)
+    Scratch.pinned("graft-potstats") { dir =>
+      statsBroadcastBuild(s, d, dir)
     }
 
   val statsBroadcastJoinSql: String =
@@ -3421,7 +3390,7 @@ object Extensibility {
   def sqlTopNPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     registerPotTvf(s)
-    Scratch.withDir("graft-pottopn") { dir =>
+    Scratch.pinned("graft-pottopn") { dir =>
       Tables.customer(s, d).filter($"c_custkey" <= 200)
         .select(lit("").as("pot_file"),
           concat(lit("c"), lpad($"c_custkey".cast("string"), 3, "0"))
@@ -3442,7 +3411,7 @@ object Extensibility {
            |  FROM graft_pot('$dir/cust/data.json')
            |  ORDER BY key DESC LIMIT 7
            |)
-           |ORDER BY dir, key""".stripMargin).localCheckpoint(true)
+           |ORDER BY dir, key""".stripMargin)
     }
   }
 
@@ -3704,7 +3673,7 @@ object Extensibility {
     */
   def sqlBucketedSample(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u43") { root =>
+    Scratch.pinned("graft-u43") { root =>
       val fmt = classOf[graft.sources.BucketedPotV2Source].getName
       Tables.nation(s, d).select(
         lit("").as("pot_file"),
@@ -3716,7 +3685,7 @@ object Extensibility {
         .option("buckets", "4").load()
         .sample(withReplacement = false, 0.4, seed = 3L)
         .select($"key", get_json_object($"doc_json", "$.name").as("name"))
-        .orderBy($"key").localCheckpoint(true)
+        .orderBy($"key")
     }
   }
 
@@ -3747,7 +3716,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u42") { dir =>
+    Scratch.pinned("graft-u42") { dir =>
       val src = s"$dir/src/data.json"
       val dst = s"$dir/dst/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
@@ -3790,7 +3759,6 @@ object Extensibility {
         .agg(count(lit(1)).as("n_vacuumed"))
       cloned.crossJoin(srcHead).crossJoin(dstHead)
         .crossJoin(dstV1).crossJoin(vacuumed)
-        .localCheckpoint(true)
     }
   }
 
@@ -3832,7 +3800,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u47") { dir =>
+    Scratch.pinned("graft-u47") { dir =>
       val srcRoot = s"$dir/src"
       val dstRoot = s"$dir/dst"
       val fmt = classOf[graft.sources.BucketedPotV2Source].getName
@@ -3871,7 +3839,6 @@ object Extensibility {
         .crossJoin(srcHead).crossJoin(dstHead)
         .select($"n_cloned_markers", $"src_n", $"src_upds",
           $"dst_n", $"dst_upds", $"n_vacuumed")
-        .localCheckpoint(true)
     }
   }
 
@@ -3907,7 +3874,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u48") { dir =>
+    Scratch.pinned("graft-u48") { dir =>
       val store = s"$dir/zstore"
       val t = graft.kv.BucketedPotTable(s, dir, "zstore", 4)
       val nat = Tables.nation(s, d)
@@ -3942,7 +3909,6 @@ object Extensibility {
         vacuumed.length.toLong))
         .toDF("clustered_v1", "fresh_noop", "pruned_a5_12",
           "reclustered_v2", "pruned_new", "n_layouts_vacuumed")
-        .localCheckpoint(true)
     }
   }
 
@@ -3979,7 +3945,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u50") { dir =>
+    Scratch.pinned("graft-u50") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
@@ -4047,7 +4013,6 @@ object Extensibility {
         .toDF("n_gens_before", "head_dgen_before", "n_folds")
         .crossJoin(pgenBefore).crossJoin(after).crossJoin(v3)
         .crossJoin(pgenAfter)
-        .localCheckpoint(true)
     }
   }
 
@@ -4140,7 +4105,7 @@ object Extensibility {
     */
   def docFieldPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-u45") { dir =>
+    Scratch.pinned("graft-u45") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       Tables.customer(s, d).select(
@@ -4154,7 +4119,6 @@ object Extensibility {
         .filter($"seg" === "BUILDING" && $"nat" >= 10)
         .select($"key", $"nat")
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -4329,7 +4293,7 @@ object Extensibility {
     import s.implicits._
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.sources.GraftFunctionCatalog].getName)
-    Scratch.withDir("graft-u36") { dir =>
+    Scratch.pinned("graft-u36") { dir =>
       val pot = s"$dir/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       val nat = Tables.nation(s, d)
@@ -4358,7 +4322,6 @@ object Extensibility {
       deleted.crossJoin(recovered).crossJoin(after)
         .select($"n_deleted", $"n_snap_bodies", $"n_recovered",
           $"n_rows_after", $"n_upd")
-        .localCheckpoint(true)
     }
   }
 

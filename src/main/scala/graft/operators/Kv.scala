@@ -196,12 +196,11 @@ object Kv {
         .withColumn("n_regionkey", $"n_regionkey" + 100)
       pot.upsert(upd) // generation 2 — the state the snapshot must carry
       PotTable.snapshotAll(s, root, s"$root/_export")
-      Scratch.withDir("graft-pot-sr2") { root2 =>
+      Scratch.pinned("graft-pot-sr2") { root2 =>
         PotTable.restore(s, s"$root/_export/bundle.tar.gz", root2)
         PotTable(s, root2, "nation_pot").get()
           .select($"key".cast("int").as("key"), $"n_name", $"n_regionkey")
           .orderBy($"key")
-          .localCheckpoint(true)
       }
     }
   }
@@ -227,7 +226,7 @@ object Kv {
     */
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-pot-evo") { root =>
+    Scratch.pinned("graft-pot-evo") { root =>
       val pot = PotTable(s, root, "nation_evo")
       val n = Tables.nation(s, d)
       pot.upsert(n.select($"n_nationkey".cast("string").as("key"), $"n_name"))
@@ -239,7 +238,6 @@ object Kv {
       pot.get()
         .select($"key".cast("int").as("key"), $"n_name", $"n_regionkey")
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -393,7 +391,7 @@ object Kv {
     */
   def reshard(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-bpot-rs") { root =>
+    Scratch.pinned("graft-bpot-rs") { root =>
       val t = new graft.kv.BucketedPotTable(s, root, "cust_rs", 4)
       val base = Tables.customer(s, d)
         .filter($"c_custkey" <= 300)
@@ -406,7 +404,6 @@ object Kv {
       wide.get()
         .select($"key".cast("bigint").as("key"), $"c_mktsegment", $"c_nationkey")
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -429,7 +426,7 @@ object Kv {
     */
   def storageReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-pot-report") { root =>
+    Scratch.pinned("graft-pot-report") { root =>
       val alpha = PotTable(s, root, "alpha")
       alpha.upsert(Tables.nation(s, d)
         .select($"n_nationkey".cast("string").as("key"), $"n_name"))
@@ -454,7 +451,7 @@ object Kv {
               lit(pot.generation).as("n_generations"), $"n_live")
         }
       rows.reduce(_ unionByName _)
-        .orderBy($"pot").localCheckpoint(true)
+        .orderBy($"pot")
     }
   }
 
@@ -552,7 +549,7 @@ object Kv {
     */
   def timeTravel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-pot-tt") { root =>
+    Scratch.pinned("graft-pot-tt") { root =>
       val pot = PotTable(s, root, "cust_pot")
       val base = Tables.customer(s, d)
         .select($"c_custkey".cast("string").as("key"),
@@ -566,14 +563,11 @@ object Kv {
         .select($"key", $"c_acctbal".as("bal_g1"))
       val cur = pot.get()
         .select($"key", $"c_acctbal".as("bal_g2"), $"c_mktsegment".as("seg_g2"))
-      // Materialize (lineage cut) before deleting the run's temp store:
-      // repeated invocations must not grow tmpdir (st1's pattern).
       g1.join(cur, Seq("key"))
         .filter($"bal_g1" =!= $"bal_g2")
         .select($"key".cast("bigint").as("key"),
           $"bal_g1", $"bal_g2", $"seg_g2")
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -596,7 +590,7 @@ object Kv {
     */
   def bucketedScan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-bpot-q") { root =>
+    Scratch.pinned("graft-bpot-q") { root =>
       val t = new graft.kv.BucketedPotTable(s, root, "cust_bpot", 16)
       val base = Tables.customer(s, d)
         .filter($"c_custkey" <= 300)
@@ -612,7 +606,6 @@ object Kv {
         .agg(count(lit(1)).as("n_keys"),
           sum($"c_nationkey".cast("bigint")).as("sum_nation"))
         .orderBy($"c_mktsegment")
-        .localCheckpoint(true)
     }
   }
 
@@ -643,7 +636,7 @@ object Kv {
     */
   def pointGet(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-bpot-pg") { root =>
+    Scratch.pinned("graft-bpot-pg") { root =>
       val t = new graft.kv.BucketedPotTable(s, root, "cust_pg", 16)
       val base = Tables.customer(s, d)
         .filter($"c_custkey" <= 300)
@@ -657,7 +650,6 @@ object Kv {
         .reduce(_ unionByName _)
         .select($"key", $"c_mktsegment", $"c_nationkey")
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -681,7 +673,7 @@ object Kv {
     */
   def secondaryIndex(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-ixpot") { root =>
+    Scratch.pinned("graft-ixpot") { root =>
       val ip = new graft.kv.IndexedPot(s, root, "cust")
       val base = Tables.customer(s, d)
         .filter($"c_custkey" <= 300)
@@ -694,7 +686,6 @@ object Kv {
         .reduce(_ unionByName _)
         .select($"fval", $"key", $"c_nationkey")
         .orderBy($"fval", $"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -727,7 +718,7 @@ object Kv {
     */
   def ttlExpiry(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-pot-ttl") { root =>
+    Scratch.pinned("graft-pot-ttl") { root =>
       val pot = PotTable(s, root, "cust_ttl")
       val docs = Tables.customer(s, d)
         .select($"c_custkey".cast("string").as("key"), $"c_name",
@@ -740,7 +731,7 @@ object Kv {
       // materialized on the driver; the predicate is the rewrite)
       pot.get()
         .select($"key".cast("long").as("key"), $"c_name", $"exp_day")
-        .orderBy($"key").localCheckpoint(true)
+        .orderBy($"key")
     }
   }
 
@@ -755,7 +746,7 @@ object Kv {
     */
   def bucketedTtl(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-bpot-ttl") { root =>
+    Scratch.pinned("graft-bpot-ttl") { root =>
       val pot = graft.kv.BucketedPotTable(s, root, "cust_bttl", 16)
       val docs = Tables.customer(s, d).select(
         $"c_custkey".cast("string").as("key"),
@@ -769,7 +760,7 @@ object Kv {
         .groupBy($"exp_day")
         .agg(count(lit(1)).as("n"),
           sum($"nat".cast("long")).as("sum_nat"))
-        .orderBy($"exp_day").localCheckpoint(true)
+        .orderBy($"exp_day")
     }
   }
 
@@ -913,7 +904,7 @@ object Kv {
     */
   def txnCommit(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-pot-txn") { root =>
+    Scratch.pinned("graft-pot-txn") { root =>
       val txn = new graft.kv.PotTxn(s, root)
       val nat = Tables.nation(s, d)
         .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey")
@@ -939,7 +930,6 @@ object Kv {
           $"r_name".as("payload"))
       natOut.unionByName(regOut)
         .orderBy($"pot", $"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -958,7 +948,7 @@ object Kv {
     */
   def txnSnapshotRead(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-pot-txnsnap") { root =>
+    Scratch.pinned("graft-pot-txnsnap") { root =>
       val txn = new graft.kv.PotTxn(s, root)
       val nat = Tables.nation(s, d)
         .select($"n_nationkey".cast("string").as("key"), $"n_name", $"n_regionkey")
@@ -989,7 +979,6 @@ object Kv {
       emit("f2", txn.snapshotAt(n2))
         .unionByName(emit("f3", txn.snapshotAt(n3)))
         .orderBy($"state", $"pot", $"key")
-        .localCheckpoint(true)
     }
   }
 

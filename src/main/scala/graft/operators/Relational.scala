@@ -207,7 +207,7 @@ object Relational {
     */
   def multiformatUnion(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-formats") { dir =>
+    Scratch.pinned("graft-formats") { dir =>
       val li = Tables.lineitem(s, d)
         .select($"l_orderkey", $"l_linenumber", $"l_quantity", $"l_returnflag")
       li.filter($"l_linenumber" % 3 === 0)
@@ -221,7 +221,6 @@ object Relational {
       back.groupBy($"l_returnflag")
         .agg(count(lit(1)).as("n"), Ora.dsum($"l_quantity").as("sum_qty"))
         .orderBy($"l_returnflag")
-        .localCheckpoint(true)
     }
   }
 

@@ -89,17 +89,6 @@ class BucketedPotV2Source extends TableProvider {
 }
 
 object BucketedPotV2Source {
-  /** Driver/task-side twin of BucketedPotTable's bucket function:
-    * xxhash64 (seed 42) pmod n on the UTF-8 key bytes (0 for the
-    * one-bucket plain pot, without hashing). */
-  def bucketOf(key: String, n: Int): Int = if (n == 1) 0 else {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val h = new XxHash64(Seq(Literal(
-      org.apache.spark.unsafe.types.UTF8String.fromString(key),
-      org.apache.spark.sql.types.StringType))).eval(null).asInstanceOf[Long]
-    (((h % n) + n) % n).toInt
-  }
-
   def bucketPot(root: String, b: Int): String = s"$root/_b=$b/data.json"
 
   /** The store root's FileSystem under the running session's conf: one
@@ -331,9 +320,9 @@ private[sources] class BucketedPotV2Table(root: String, nBuckets: Int,
     // (prefix, pot_file) cannot be hashed — those touch every bucket
     val keyBuckets: Option[Set[Int]] = filters.collectFirst {
       case EqualTo("key", k: String) =>
-        Set(BucketedPotV2Source.bucketOf(k, nBuckets))
+        Set(graft.kv.BucketMeta.bucketOf(k, nBuckets))
       case In("key", vs) =>
-        vs.map(v => BucketedPotV2Source.bucketOf(v.toString, nBuckets)).toSet
+        vs.map(v => graft.kv.BucketMeta.bucketOf(v.toString, nBuckets)).toSet
     }
     val existing = BucketedPotV2Source.existingBuckets(fs, root, nBuckets)
     val touched = keyBuckets.fold(existing)(bs => existing.filter(bs))
@@ -381,7 +370,7 @@ private[sources] class BucketedPotScanBuilder(root: String, nBuckets: Int,
   }
 
   private def qualifiedBucket(k: String): String =
-    qualifiedPath(BucketedPotV2Source.bucketOf(k, nBuckets))
+    qualifiedPath(graft.kv.BucketMeta.bucketOf(k, nBuckets))
 
   /** u54 (r18): key-grain `KeyGroupedPartitioning(bucket(nBuckets, key))`
     * — each partition is one bucket, its partition key the bucket id, so

@@ -624,7 +624,7 @@ object CompactPotProcedure extends GraftMaintenanceProcedure(
 
 /** u54: the bucketed store's key-routing as a catalog V2 function —
   * `bucket(n, key) = xxhash64(key, seed 42) pmod n`, bit-identical to
-  * [[BucketedPotV2Source.bucketOf]] (the write router) by construction.
+  * [[graft.kv.BucketMeta.bucketOf]] (the write router) by construction.
   * This is what makes the scan-reported `bucket(n, key)` TRANSFORM
   * resolvable: Spark binds it here and two scans' TransformExpressions
   * compare equal iff [[BucketFn.canonicalName]] and the modulus match —
@@ -660,7 +660,7 @@ object BucketFn extends ScalarFunction[Integer] {
 
   /** MAGIC method (codegen'd direct call — V2 functions invoke with
     * propagateNull=false, so the null key reaches us); the non-null path
-    * must stay bit-identical to [[BucketedPotV2Source.bucketOf]] — the
+    * must stay bit-identical to [[graft.kv.BucketMeta.bucketOf]] — the
     * router and the transform are the same function or co-partitioning
     * is silently wrong. */
   def invoke(n: Int, key: org.apache.spark.unsafe.types.UTF8String): Integer = {

@@ -3529,7 +3529,7 @@ private[graft] object PotV2Write {
   *     commit messages name, so task retries and speculation never
   *     double-apply.
   *   - Routing: a row goes to the fragment of bucket
-  *     `BucketedPotV2Source.bucketOf(key, nBuckets)`; a plain pot is the
+  *     `graft.kv.BucketMeta.bucketOf(key, nBuckets)`; a plain pot is the
   *     one-bucket case (`nBuckets = 1`). Commits take
   *     [[BucketFragmentsMessage]]s, which
   *     `BucketFragmentsMessage.perBucket` regroups per bucket.
@@ -3558,7 +3558,7 @@ private[graft] class PotFragmentWriterFactory(
       private val bufs = scala.collection.mutable.SortedMap
         .empty[Int, StringBuilder]
       private def stage(key: String, line: String): Unit =
-        bufs.getOrElseUpdate(BucketedPotV2Source.bucketOf(key, nBuckets),
+        bufs.getOrElseUpdate(graft.kv.BucketMeta.bucketOf(key, nBuckets),
           new StringBuilder).append(line).append('\n')
       private def tombstone(key: String): Unit =
         stage(key, s"""{"k":${mapper.writeValueAsString(key)},"d":null}""")

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.{Scratch, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** st5 custom-state types (top-level for implicit Encoders). Timestamps
   * travel as epoch-MICROSECOND longs (the events fixture is exact to the
@@ -137,7 +138,7 @@ object StreamingQueries {
     * stream-stream) — plus the watermark-advance no-data batch that
     * re-commits every store for zero output rows. So (a) size the state
     * partitioning to the run, the same advice as any shuffle (production
-    * sets it to the cluster, these fixtures to a handful), and (b) skip
+    * sets it to the cluster, these fixtures to 4), and (b) skip
     * no-data micro-batches wherever results don't depend on one: stateless
     * entries, complete-mode aggs (re-emit the same table), and append-mode
     * dedup/joins (rows emit eagerly; the extra batch only evicts state we
@@ -146,11 +147,11 @@ object StreamingQueries {
     * no-data batches on (`skipNoData = false`).
     */
   private def withStreamRunConf[T](
-      s: SparkSession, parts: Int = 4, skipNoData: Boolean = true)(body: => T): T = {
+      s: SparkSession, skipNoData: Boolean = true)(body: => T): T = {
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     val prevNoData = s.conf.getOption(
       "spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    s.conf.set("spark.sql.shuffle.partitions", "4")
     if (skipNoData)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try body finally {
@@ -162,6 +163,50 @@ object StreamingQueries {
           s.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
       }
     }
+  }
+
+  /** Run one bounded stream to its end under [[withStreamRunConf]]: start
+    * `writer` with its checkpoint at `chk`, process everything available,
+    * and stop the query, also when a batch throws (the failure rethrows).
+    * Returns the stopped query; its progress log stays readable.
+    */
+  private def drain(s: SparkSession, chk: String,
+      skipNoData: Boolean = true)(writer: => DataStreamWriter[_]): StreamingQuery =
+    withStreamRunConf(s, skipNoData) {
+      val q = writer.option("checkpointLocation", chk).start()
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+
+  /** [[drain]] `stream` through an append-mode parquet sink at
+    * `<dir>/data`, checkpointed at `<dir>/chk`, and read the sink back.
+    * Run under [[Scratch.pinned]], which pins the read before `dir` goes.
+    */
+  private def drainToParquet(s: SparkSession, dir: String,
+      skipNoData: Boolean = true)(stream: => Dataset[_]): DataFrame = {
+    drain(s, s"$dir/chk", skipNoData) {
+      stream.writeStream.format("parquet")
+        .option("path", s"$dir/data").outputMode("append")
+    }
+    s.read.parquet(s"$dir/data")
+  }
+
+  /** [[drain]] `stream` into a memory sink in output `mode` and return
+    * `read` of the sink's table, pinned. The table is a temp view named
+    * `<tag>_<uuid>`, the checkpoint a scratch dir; both are dropped when
+    * the call returns or throws, so no run leaves sink state in the driver
+    * or the session catalog.
+    */
+  private[graft] def drainToMemory(s: SparkSession, tag: String, mode: String,
+      skipNoData: Boolean = true)(stream: => Dataset[_])(
+      read: DataFrame => DataFrame): DataFrame = {
+    val table = tag + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    try Scratch.pinned(s"graft-$tag", ram = true) { chk =>
+      drain(s, s"$chk/chk", skipNoData) {
+        stream.writeStream.format("memory").queryName(table).outputMode(mode)
+      }
+      read(s.table(table))
+    } finally s.catalog.dropTempView(table)
   }
 
   /** Raw-schema streaming read of the events fixture. The `ts` physical type
@@ -185,13 +230,9 @@ object StreamingQueries {
     */
   def machineryProbe(s: SparkSession, d: String): Unit = {
     Scratch.withDir("graft-stprobe", ram = true) { root =>
-      withStreamRunConf(s) {
-        val q = eventsStream(s, d).writeStream
-          .option("checkpointLocation", s"$root/chk")
+      drain(s, s"$root/chk") {
+        eventsStream(s, d).writeStream
           .foreachBatch { (b: DataFrame, _: Long) => b.isEmpty; () }
-          .start()
-        q.processAllAvailable()
-        q.stop()
       }
     }
   }
@@ -203,27 +244,17 @@ object StreamingQueries {
     */
   def streamDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-st1", ram = true) { out =>
-      withStreamRunConf(s) {
-        val q = eventsStream(s, d)
+    // The result is pinned off the sink, then the run's sink + checkpoint
+    // dirs are deleted: repeated invocations must not grow tmpdir.
+    // Production keeps both, of course — the temp dirs exist only because
+    // this entry drives a bounded stream to completion.
+    Scratch.pinned("graft-st1", ram = true) { out =>
+      drainToParquet(s, out) {
+        eventsStream(s, d)
           .withWatermark("ts", "30 minutes")
           .dropDuplicatesWithinWatermark("user_id", "event_type")
           .select($"user_id", $"event_type")
-          .writeStream
-          .format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/chk")
-          .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      // Materialize off the sink (distributed blocks, lineage cut), then
-      // delete the run's sink + checkpoint dirs: repeated invocations must
-      // not grow tmpdir. Production keeps both, of course — the temp dirs
-      // exist only because this entry drives a bounded stream to completion.
-      s.read.parquet(s"$out/data")
-        .orderBy($"user_id", $"event_type").localCheckpoint(true)
+      }.orderBy($"user_id", $"event_type")
     }
   }
 
@@ -237,25 +268,10 @@ object StreamingQueries {
     */
   def streamTumbling(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val table = "st2_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    Scratch.withDir("graft-st2", ram = true) { chk =>
-      withStreamRunConf(s) {
-        val q = EventStreams.tumblingCounts(eventsStream(s, d))
-          .select(unix_timestamp($"w_start").as("w_start"), $"event_type", $"n")
-          .writeStream.format("memory").queryName(table)
-          .option("checkpointLocation", s"$chk/chk")
-          .outputMode("complete")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
-    // Materialize off the memory sink, then drop its temp view so repeated
-    // invocations don't accumulate sink state in the driver.
-    val result = s.table(table)
-      .orderBy($"w_start", $"event_type").localCheckpoint(true)
-    s.catalog.dropTempView(table)
-    result
+    drainToMemory(s, "st2", "complete") {
+      EventStreams.tumblingCounts(eventsStream(s, d))
+        .select(unix_timestamp($"w_start").as("w_start"), $"event_type", $"n")
+    }(_.orderBy($"w_start", $"event_type"))
   }
 
   val streamTumblingSql: String =
@@ -276,25 +292,12 @@ object StreamingQueries {
     import s.implicits._
     val cust = graft.Tables.customer(s, d)
       .select($"c_custkey", $"c_mktsegment")
-    val table = "st3_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    Scratch.withDir("graft-st3", ram = true) { chk =>
-      withStreamRunConf(s) {
-        val q = eventsStream(s, d)
-          .join(broadcast(cust), $"user_id" === $"c_custkey")
-          .groupBy($"c_mktsegment", $"event_type")
-          .agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName(table)
-          .option("checkpointLocation", s"$chk/chk")
-          .outputMode("complete")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
-    val result = s.table(table)
-      .orderBy($"c_mktsegment", $"event_type").localCheckpoint(true)
-    s.catalog.dropTempView(table)
-    result
+    drainToMemory(s, "st3", "complete") {
+      eventsStream(s, d)
+        .join(broadcast(cust), $"user_id" === $"c_custkey")
+        .groupBy($"c_mktsegment", $"event_type")
+        .agg(count(lit(1)).as("n"))
+    }(_.orderBy($"c_mktsegment", $"event_type"))
   }
 
   val streamEnrichedSql: String =
@@ -323,27 +326,17 @@ object StreamingQueries {
     val purchases = ev.filter($"event_type" === "purchase")
       .select($"event_id".as("purchase_id"), $"user_id".as("p_user"), $"ts".as("p_ts"))
       .withWatermark("p_ts", "2 hours")
-    Scratch.withDir("graft-st4", ram = true) { out =>
+    Scratch.pinned("graft-st4", ram = true) { out =>
       // Stream-stream join state cost is per partition PER JOIN SIDE (4x
       // stores per batch); inner-join matches emit eagerly, so the no-data
       // watermark-advance batch would only re-commit them for zero rows.
-      withStreamRunConf(s) {
-        val q = clicks.join(purchases,
+      drainToParquet(s, out) {
+        clicks.join(purchases,
             $"c_user" === $"p_user" &&
             $"p_ts" >= $"c_ts" &&
             $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"))
           .select($"click_id", $"purchase_id")
-          .writeStream
-          .format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/chk")
-          .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(s"$out/data")
-        .orderBy($"click_id", $"purchase_id").localCheckpoint(true)
+      }.orderBy($"click_id", $"purchase_id")
     }
   }
 
@@ -379,26 +372,15 @@ object StreamingQueries {
     val purchases = ev.filter($"event_type" === "purchase")
       .select($"event_id".as("purchase_id"), $"user_id".as("p_user"), $"ts".as("p_ts"))
       .withWatermark("p_ts", "2 hours")
-    Scratch.withDir("graft-st11", ram = true) { out =>
-      withStreamRunConf(s, skipNoData = false) {
-        val q = clicks.join(purchases,
+    Scratch.pinned("graft-st11", ram = true) { out =>
+      drainToParquet(s, out, skipNoData = false) {
+        clicks.join(purchases,
             $"c_user" === $"p_user" &&
             $"p_ts" >= $"c_ts" &&
             $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"),
             "left_outer")
           .select($"click_id", $"purchase_id")
-          .writeStream
-          .format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/chk")
-          .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(s"$out/data")
-        .orderBy($"click_id".asc, $"purchase_id".asc_nulls_first)
-        .localCheckpoint(true)
+      }.orderBy($"click_id".asc, $"purchase_id".asc_nulls_first)
     }
   }
 
@@ -498,23 +480,12 @@ object StreamingQueries {
     val ev = eventsStream(s, d)
       .withWatermark("ts", "0 seconds")
       .select($"user_id", $"ts", unix_micros($"ts").as("ts_us")).as[SessEvent]
-    Scratch.withDir("graft-st5", ram = true) { out =>
+    Scratch.pinned("graft-st5", ram = true) { out =>
       // skipNoData = false: the trailing sessions' event-time timeouts fire
       // in the (no-data) batch AFTER the watermark advances — disabling it
       // would silently drop every timeout-closed session
-      withStreamRunConf(s, skipNoData = false) {
-        val q = sessionize(ev)
-          .writeStream
-          .format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/chk")
-          .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(s"$out/data")
-        .orderBy($"user_id", $"sess_start").localCheckpoint(true)
+      drainToParquet(s, out, skipNoData = false)(sessionize(ev))
+        .orderBy($"user_id", $"sess_start")
     }
   }
 
@@ -617,24 +588,14 @@ object StreamingQueries {
       case (df, (bs, b)) =>
         df.join(broadcast(bs), col(s"sig$b") === col(s"csig$b"), "left")
     }
-    Scratch.withDir(tag, ram = true) { out =>
-      withStreamRunConf(s) {
-        val q = flagged
+    Scratch.pinned(tag, ram = true) { out =>
+      drainToParquet(s, out) {
+        flagged
           .select($"doc_id",
             coalesce($"e", lit(false)).as("exact_dup"),
             coalesce($"m0" || $"m1" || $"m2" || $"m3", lit(false)).as("near_dup"))
           .withColumn("keep", !$"exact_dup" && !$"near_dup")
-          .writeStream
-          .format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/chk")
-          .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(s"$out/data")
-        .orderBy($"doc_id").localCheckpoint(true)
+      }.orderBy($"doc_id")
     }
   }
 
@@ -702,23 +663,13 @@ object StreamingQueries {
       .select($"vec_id".as("q_id"), $"embedding",
         explode(array(bandCols(s): _*)).as("bs"))
       .select($"q_id", $"embedding", $"bs.band".as("band"), $"bs.sig".as("sig"))
-    Scratch.withDir("graft-st7", ram = true) { out =>
-      withStreamRunConf(s) {
-        val q = stream.join(broadcast(capped), Seq("band", "sig"))
+    Scratch.pinned("graft-st7", ram = true) { out =>
+      drainToParquet(s, out) {
+        stream.join(broadcast(capped), Seq("band", "sig"))
           .select($"q_id", $"m_id", $"band",
             graft.functions.VectorFunctions.dot($"embedding", $"m_emb").as("cos"))
           .filter($"cos" >= 0.45)
-          .writeStream
-          .format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/chk")
-          .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(s"$out/data")
-        .orderBy($"q_id", $"m_id", $"band").localCheckpoint(true)
+      }.orderBy($"q_id", $"m_id", $"band")
     }
   }
 
@@ -764,29 +715,16 @@ object StreamingQueries {
     */
   def streamLatest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val table = "st8_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    Scratch.withDir("graft-st8", ram = true) { chk =>
-      withStreamRunConf(s) {
-        val q = eventsStream(s, d)
-          .select($"user_id",
-            struct(unix_micros($"ts").as("ts_us"), $"event_id", $"event_type")
-              .as("rec"))
-          .groupBy($"user_id")
-          .agg(max($"rec").as("m"))
-          .select($"user_id", $"m.ts_us".as("last_ts_us"),
-            $"m.event_id".as("last_event_id"), $"m.event_type".as("last_type"))
-          .writeStream.format("memory").queryName(table)
-          .option("checkpointLocation", s"$chk/chk")
-          .outputMode("complete")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
-    val result = s.table(table)
-      .orderBy($"user_id").localCheckpoint(true)
-    s.catalog.dropTempView(table)
-    result
+    drainToMemory(s, "st8", "complete") {
+      eventsStream(s, d)
+        .select($"user_id",
+          struct(unix_micros($"ts").as("ts_us"), $"event_id", $"event_type")
+            .as("rec"))
+        .groupBy($"user_id")
+        .agg(max($"rec").as("m"))
+        .select($"user_id", $"m.ts_us".as("last_ts_us"),
+          $"m.event_id".as("last_event_id"), $"m.event_type".as("last_type"))
+    }(_.orderBy($"user_id"))
   }
 
   val streamLatestSql: String =
@@ -858,23 +796,19 @@ object StreamingQueries {
   def streamAdditiveCounts(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val stage = waveStageDir(s, d)
-    Scratch.withDir("graft-st12-pot") { potRoot =>
+    Scratch.pinned("graft-st12-pot") { potRoot =>
       val pot = graft.kv.PotTable(s, potRoot, "counts")
       def appliedUpTo(): Long = pot.txnVersion("st12").getOrElse(-1L)
       def applyBatch(batch: DataFrame, id: Long): Unit =
         applyCounts(pot, "st12")(batch, id)
       Scratch.withDir("graft-st12", ram = true) { chk =>
-        withStreamRunConf(s) {
-          val q = s.readStream
+        drain(s, s"$chk/chk") {
+          s.readStream
             .schema("event_id BIGINT, user_id BIGINT")
             .option("maxFilesPerTrigger", "1")
             .parquet(stage)
             .writeStream
-            .option("checkpointLocation", s"$chk/chk")
             .foreachBatch(applyBatch _)
-            .start()
-          q.processAllAvailable()
-          q.stop()
         }
       }
       // simulate a checkpoint-recovery redelivery of the final wave: the
@@ -887,7 +821,6 @@ object StreamingQueries {
         .select($"key".cast("bigint").as("user_id"), $"n",
           lit(pot.generation).as("n_generations"))
         .orderBy($"user_id")
-        .localCheckpoint(true)
     }
   }
 
@@ -929,16 +862,15 @@ object StreamingQueries {
   def streamPotIngest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val stage = waveStageDir(s, d)
-    Scratch.withDir("graft-st9-pot") { potRoot =>
+    Scratch.pinned("graft-st9-pot") { potRoot =>
       val pot = graft.kv.PotTable(s, potRoot, "ingest")
       Scratch.withDir("graft-st9", ram = true) { chk =>
-        withStreamRunConf(s) {
-          val q = s.readStream
+        drain(s, s"$chk/chk") {
+          s.readStream
             .schema("event_id BIGINT, user_id BIGINT")
             .option("maxFilesPerTrigger", "1")
             .parquet(stage)
             .writeStream
-            .option("checkpointLocation", s"$chk/chk")
             .foreachBatch { (batch: DataFrame, _: Long) =>
               val stats = batch
                 .groupBy($"user_id".cast("string").as("key"))
@@ -947,9 +879,6 @@ object StreamingQueries {
               // generation and shift the time-travel handle.
               if (!stats.isEmpty) { pot.upsert(stats); () }
             }
-            .start()
-          q.processAllAvailable()
-          q.stop()
         }
       }
       val g1 = pot.getAt(1L)
@@ -960,7 +889,6 @@ object StreamingQueries {
         .select($"key".cast("bigint").as("key"),
           $"n_g1", $"last_g1", $"n_cur", $"last_cur")
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -1005,32 +933,19 @@ object StreamingQueries {
     */
   def streamRollup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val table = "st13_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    Scratch.withDir("graft-st13", ram = true) { chk =>
-      // skipNoData = false: both layers emit in the no-data batch after the
-      // watermark jumps to the max event time (st5's timeout discipline).
-      withStreamRunConf(s, skipNoData = false) {
-        val sub = eventsStream(s, d)
-          .withWatermark("ts", "0 seconds")
-          .groupBy(window($"ts", "15 minutes").as("w15"), $"event_type")
-          .agg(count(lit(1)).as("n15"))
-        val q = sub
-          .groupBy(window(window_time($"w15"), "1 hour").as("wh"), $"event_type")
-          .agg(sum($"n15").as("n_events"), count(lit(1)).as("n_subwindows"))
-          .select(unix_timestamp($"wh.start").as("hour_s"), $"event_type",
-            $"n_events", $"n_subwindows")
-          .writeStream.format("memory").queryName(table)
-          .option("checkpointLocation", s"$chk/chk")
-          .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-    }
-    val result = s.table(table)
-      .orderBy($"hour_s", $"event_type").localCheckpoint(true)
-    s.catalog.dropTempView(table)
-    result
+    // skipNoData = false: both layers emit in the no-data batch after the
+    // watermark jumps to the max event time (st5's timeout discipline).
+    drainToMemory(s, "st13", "append", skipNoData = false) {
+      val sub = eventsStream(s, d)
+        .withWatermark("ts", "0 seconds")
+        .groupBy(window($"ts", "15 minutes").as("w15"), $"event_type")
+        .agg(count(lit(1)).as("n15"))
+      sub
+        .groupBy(window(window_time($"w15"), "1 hour").as("wh"), $"event_type")
+        .agg(sum($"n15").as("n_events"), count(lit(1)).as("n_subwindows"))
+        .select(unix_timestamp($"wh.start").as("hour_s"), $"event_type",
+          $"n_events", $"n_subwindows")
+    }(_.orderBy($"hour_s", $"event_type"))
   }
 
   val streamRollupSql: String =
@@ -1073,13 +988,12 @@ object StreamingQueries {
   def streamAnnIngest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = graft.Tables.embeddings(s, d)
-    Scratch.withDir("graft-st14", ram = true) { root =>
+    Scratch.pinned("graft-st14", ram = true) { root =>
       val base = new org.apache.hadoop.fs.Path(s"$root/idx")
-      withStreamRunConf(s) {
-        val q = s.readStream.schema(emb.schema)
+      drain(s, s"$root/chk") {
+        s.readStream.schema(emb.schema)
           .parquet(fixtureStreamDir(d, "embeddings"))
           .writeStream
-          .option("checkpointLocation", s"$root/chk")
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             if (!batch.isEmpty)
               // scope = hash of the checkpoint root: stable across restarts
@@ -1090,12 +1004,8 @@ object StreamingQueries {
                   scope = "q" + org.apache.commons.codec.digest.DigestUtils
                     .md5Hex(s"$root/chk").take(8))
           }
-          .start()
-        q.processAllAvailable()
-        q.stop()
       }
-      graft.operators.Similarity
-        .annLookupOverGenerations(s, d, base).localCheckpoint(true)
+      graft.operators.Similarity.annLookupOverGenerations(s, d, base)
     }
   }
 
@@ -1118,10 +1028,10 @@ object StreamingQueries {
   def streamDlqRouter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = graft.Tables.documents(s, d)
-    Scratch.withDir("graft-st15", ram = true) { root =>
+    Scratch.pinned("graft-st15", ram = true) { root =>
       val txn = new graft.kv.PotTxn(s, s"$root/wh")
-      withStreamRunConf(s) {
-        val q = s.readStream.schema(docs.schema)
+      drain(s, s"$root/chk") {
+        s.readStream.schema(docs.schema)
           .parquet(fixtureStreamDir(d, "documents"))
           .withColumn("n_words", size(split($"text", " ")))
           .withColumn("reason",
@@ -1129,7 +1039,6 @@ object StreamingQueries {
               .when($"n_words" > 4000, "too_long")
               .when(!$"text".rlike("[A-Za-z]"), "no_letters"))
           .writeStream
-          .option("checkpointLocation", s"$root/chk")
           .foreachBatch { (batch: DataFrame, _: Long) =>
             if (!batch.isEmpty) {
               val acc = batch.filter(col("reason").isNull)
@@ -1141,9 +1050,6 @@ object StreamingQueries {
               ()
             }
           }
-          .start()
-        q.processAllAvailable()
-        q.stop()
       }
       val acc = graft.kv.PotTable(s, s"$root/wh", "accepted").get()
         .agg(count(lit(1)).as("n"))
@@ -1151,8 +1057,7 @@ object StreamingQueries {
       val rej = graft.kv.PotTable(s, s"$root/wh", "rejected").get()
         .groupBy($"reason").agg(count(lit(1)).as("n"))
         .select(lit("rejected").as("route"), $"reason", $"n")
-      acc.unionByName(rej)
-        .orderBy($"route", $"reason").localCheckpoint(true)
+      acc.unionByName(rej).orderBy($"route", $"reason")
     }
   }
 
@@ -1192,10 +1097,10 @@ object StreamingQueries {
     */
   def streamPotSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-st16", ram = true) { root =>
+    Scratch.pinned("graft-st16", ram = true) { root =>
       val pot = s"$root/pot/t/data.json"
-      withStreamRunConf(s) {
-        val q = eventsStream(s, d)
+      drain(s, s"$root/chk") {
+        eventsStream(s, d)
           .filter(col("event_id") % 97 === 0)
           .select(lit("").as("pot_file"),
             concat(lit("e"), col("event_id").cast("string")).as("key"),
@@ -1204,11 +1109,7 @@ object StreamingQueries {
           .writeStream
           .format(classOf[graft.sources.PotV2Source].getName)
           .option("path", pot)
-          .option("checkpointLocation", s"$root/chk")
           .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
       }
       s.read
         .format(classOf[graft.sources.PotV2Source].getName)
@@ -1218,7 +1119,6 @@ object StreamingQueries {
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"), min($"v").as("vmin"), max($"v").as("vmax"))
         .orderBy($"event_type")
-        .localCheckpoint(true)
     }
   }
 
@@ -1246,7 +1146,7 @@ object StreamingQueries {
     */
   def streamPotSource(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-st17", ram = true) { root =>
+    Scratch.pinned("graft-st17", ram = true) { root =>
       val pot = s"$root/pot/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       def docs(df: DataFrame, v: Int) = df.select(
@@ -1262,20 +1162,14 @@ object StreamingQueries {
       docs(nat.filter($"n_regionkey" === 1), 2)
         .write.format(fmt).option("path", pot).mode("append").save()
       val feed = s"$root/feed"
-      withStreamRunConf(s) {
-        val q = s.readStream.format(fmt).option("path", pot).load()
-          .writeStream.format("parquet")
-          .option("path", feed)
-          .option("checkpointLocation", s"$root/chk")
-          .start()
-        q.processAllAvailable()
-        q.stop()
+      drain(s, s"$root/chk") {
+        s.readStream.format(fmt).option("path", pot).load()
+          .writeStream.format("parquet").option("path", feed)
       }
       s.read.parquet(feed)
         .select($"key",
           get_json_object($"doc_json", "$.v").cast("int").as("v"))
         .orderBy($"key", $"v")
-        .localCheckpoint(true)
     }
   }
 
@@ -1305,7 +1199,7 @@ object StreamingQueries {
     */
   def streamRateLimitedFeed(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-st27", ram = true) { root =>
+    Scratch.pinned("graft-st27", ram = true) { root =>
       val pot = s"$root/pot/t/data.json"
       val fmt = classOf[graft.sources.PotV2Source].getName
       def docs(df: DataFrame, v: Int) = df.select(
@@ -1321,25 +1215,17 @@ object StreamingQueries {
       docs(nat.filter($"n_regionkey" === 1), 2)
         .write.format(fmt).option("path", pot).mode("append").save()
       val feed = s"$root/feed"
-      var dataBatches = 0
-      withStreamRunConf(s) {
-        val q = s.readStream.format(fmt).option("path", pot)
+      val dataBatches = drain(s, s"$root/chk") {
+        s.readStream.format(fmt).option("path", pot)
           .option("maxGenerationsPerTrigger", "1").load()
-          .writeStream.format("parquet")
-          .option("path", feed)
-          .option("checkpointLocation", s"$root/chk")
-          .start()
-        q.processAllAvailable()
-        dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        q.stop()
-      }
+          .writeStream.format("parquet").option("path", feed)
+      }.recentProgress.count(_.numInputRows > 0)
       val rows = s.read.parquet(feed)
         .select($"key",
           get_json_object($"doc_json", "$.v").cast("int").as("v"))
       rows
         .unionByName(Seq(("_batches", dataBatches)).toDF("key", "v"))
         .orderBy($"key", $"v")
-        .localCheckpoint(true)
     }
   }
 
@@ -1373,7 +1259,7 @@ object StreamingQueries {
     */
   def streamPotRateLimitedFeed(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-st28", ram = true) { root =>
+    Scratch.pinned("graft-st28", ram = true) { root =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       def docs(df: DataFrame, v: Int) = df.select(
         lit("").as("pot_file"),
@@ -1392,26 +1278,18 @@ object StreamingQueries {
       docs(nat.filter($"n_regionkey" === 2), 3)
         .write.format(fmt).option("path", pot("c")).mode("overwrite").save()
       val feed = s"$root/feed"
-      var dataBatches = 0
-      withStreamRunConf(s) {
-        val q = s.readStream.format(fmt)
+      val dataBatches = drain(s, s"$root/chk") {
+        s.readStream.format(fmt)
           .option("path", s"$root/pots/*/data.json")
           .option("maxPotsPerTrigger", "1").load()
-          .writeStream.format("parquet")
-          .option("path", feed)
-          .option("checkpointLocation", s"$root/chk")
-          .start()
-        q.processAllAvailable()
-        dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        q.stop()
-      }
+          .writeStream.format("parquet").option("path", feed)
+      }.recentProgress.count(_.numInputRows > 0)
       val rows = s.read.parquet(feed)
         .select(regexp_extract($"pot_file", "pots/([^/]+)/", 1).as("pot"),
           $"key", get_json_object($"doc_json", "$.v").cast("int").as("v"))
       rows
         .unionByName(Seq(("_batches", "", dataBatches)).toDF("pot", "key", "v"))
         .orderBy($"pot", $"key", $"v")
-        .localCheckpoint(true)
     }
   }
 
@@ -1447,7 +1325,7 @@ object StreamingQueries {
     */
   def streamMultiPotSource(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-st18", ram = true) { root =>
+    Scratch.pinned("graft-st18", ram = true) { root =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       def docs(df: DataFrame, v: Int) = df.select(
         lit("").as("pot_file"),
@@ -1466,15 +1344,10 @@ object StreamingQueries {
       put("a", r0.filter($"n_nationkey" % 2 === 0), 1, "append")
       put("b", r1.filter($"n_nationkey" % 2 === 1), 1, "overwrite")
       val feed = s"$root/feed"
-      withStreamRunConf(s) {
-        val q = s.readStream.format(fmt)
+      drain(s, s"$root/chk") {
+        s.readStream.format(fmt)
           .option("path", s"$root/pots/*/data.json").load()
-          .writeStream.format("parquet")
-          .option("path", feed)
-          .option("checkpointLocation", s"$root/chk")
-          .start()
-        q.processAllAvailable()
-        q.stop()
+          .writeStream.format("parquet").option("path", feed)
       }
       s.read.parquet(feed)
         .select(
@@ -1484,7 +1357,6 @@ object StreamingQueries {
             .otherwise(get_json_object($"doc_json", "$.v").cast("int"))
             .as("v"))
         .orderBy($"pot", $"key", $"v")
-        .localCheckpoint(true)
     }
   }
 
@@ -1520,7 +1392,7 @@ object StreamingQueries {
     */
   def streamCdcMirror(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-st19", ram = true) { root =>
+    Scratch.pinned("graft-st19", ram = true) { root =>
       val fmt = classOf[graft.sources.PotV2Source].getName
       val potA = s"$root/a/data.json"
       val potB = s"$root/b/data.json"
@@ -1540,18 +1412,14 @@ object StreamingQueries {
       docs(nat.filter($"n_regionkey" === 1 ||
           ($"n_regionkey" === 0 && $"n_nationkey" % 2 === 0)), 2)
         .write.format(fmt).option("path", potA).mode("overwrite").save()
-      withStreamRunConf(s) {
-        val q = s.readStream.format(fmt).option("path", potA).load()
+      drain(s, s"$root/chk") {
+        s.readStream.format(fmt).option("path", potA).load()
           .select($"pot_file", $"key",
             when($"doc_json" === "null", lit("""{"__del__":true}"""))
               .otherwise($"doc_json").as("doc_json"))
           .writeStream.format(fmt)
           .option("path", potB)
-          .option("checkpointLocation", s"$root/chk")
           .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
       }
       s.read.format(fmt).option("path", potB).load()
         .filter(get_json_object($"doc_json", "$.__del__").isNull)
@@ -1559,7 +1427,6 @@ object StreamingQueries {
           get_json_object($"doc_json", "$.name").as("name"),
           get_json_object($"doc_json", "$.v").cast("int").as("v"))
         .orderBy($"key")
-        .localCheckpoint(true)
     }
   }
 
@@ -1585,11 +1452,11 @@ object StreamingQueries {
     */
   def streamBucketedSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-st20", ram = true) { root =>
+    Scratch.pinned("graft-st20", ram = true) { root =>
       val store = s"$root/store"
       val fmt = classOf[graft.sources.BucketedPotV2Source].getName
-      withStreamRunConf(s) {
-        val q = eventsStream(s, d)
+      drain(s, s"$root/chk") {
+        eventsStream(s, d)
           .filter(col("event_id") % 41 === 0)
           .select(lit("").as("pot_file"),
             concat(lit("e"), col("event_id").cast("string")).as("key"),
@@ -1599,11 +1466,7 @@ object StreamingQueries {
           .format(fmt)
           .option("path", store)
           .option("buckets", "8")
-          .option("checkpointLocation", s"$root/chk")
           .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
       }
       s.read.format(fmt)
         .option("path", store).option("buckets", "8").load()
@@ -1612,7 +1475,6 @@ object StreamingQueries {
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"), min($"v").as("vmin"), max($"v").as("vmax"))
         .orderBy($"event_type")
-        .localCheckpoint(true)
     }
   }
 
@@ -1660,13 +1522,10 @@ object StreamingQueries {
                |WHERE get_json_object(doc_json, '$$.region') = '2'"""
         .stripMargin)
       val feed = s"$root/feed"
-      withStreamRunConf(s) {
-        val q = s.readStream.format(pfmt)
+      drain(s, s"$root/chk") {
+        s.readStream.format(pfmt)
           .option("path", s"$store/_b=*/data.json").load()
           .writeStream.format("parquet").option("path", feed)
-          .option("checkpointLocation", s"$root/chk").start()
-        q.processAllAvailable()
-        q.stop()
       }
       val result = s.read.parquet(feed)
         .select($"key",
@@ -1752,10 +1611,9 @@ object StreamingQueries {
     */
   def streamTransformWithState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-st24", ram = true) { out =>
+    Scratch.pinned("graft-st24", ram = true) { out =>
       runMilestoneStream(s, d, out)
-      s.read.parquet(s"$out/data")
-        .orderBy($"user_id", $"milestone").localCheckpoint(true)
+      s.read.parquet(s"$out/data").orderBy($"user_id", $"milestone")
     }
   }
 
@@ -1770,22 +1628,18 @@ object StreamingQueries {
       "spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStreamRunConf(s) {
+    try drain(s, s"$out/chk") {
       val ev = eventsStream(s, d).select(
         $"user_id", unix_micros($"ts").as("ts_us"), $"event_id",
         get_json_object($"props", "$.k").cast("long").as("k")).as[TwsEvent]
-      val q = ev.groupByKey(_.user_id)
+      ev.groupByKey(_.user_id)
         .transformWithState(new MilestoneProcessor(25L),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Append())
         .writeStream
         .format("parquet")
         .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
         .outputMode("append")
-        .start()
-      q.processAllAvailable()
-      q.stop()
     } finally prevProvider match {
       case Some(v) =>
         s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
@@ -1826,41 +1680,43 @@ object StreamingQueries {
     val b1 = slice.filter(r => (r._1 / 50) % 7 != 0)
     val b2 = slice.filter(r => (r._1 / 50) % 7 == 0)
     val flushTus = slice.map(_._2).max + 2L * 24 * 3600 * 1000000
-    var dropped = 0L
-    Scratch.withDir("graft-st26", ram = true) { chk =>
-      // no-data batches ON (st5's exception rule): Spark filters late
-      // events with the PREVIOUS batch's watermark (the late/eviction
-      // split of SPARK-40925), so the wave-1 watermark reaches wave 2's
-      // late filter only through the intervening no-data batch — skipping
-      // them would admit every late row and the audit would read zero
-      withStreamRunConf(s, skipNoData = false) {
-        val mem = MemoryStream[(Long, Long)](
-          implicitly[org.apache.spark.sql.Encoder[(Long, Long)]], s.sqlContext)
-        val q = mem.toDF().toDF("event_id", "tus")
-          .select(timestamp_micros($"tus").as("ts"))
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window($"ts", "15 minutes"))
-          .agg(count(lit(1)).as("n"))
-          .select(unix_timestamp($"window.start").as("w_start"), $"n")
-          .writeStream.format("memory").queryName(table)
-          .option("checkpointLocation", s"$chk/chk")
-          .outputMode("append")
-          .start()
-        mem.addData(b1); q.processAllAvailable()
-        mem.addData(b2); q.processAllAvailable()
-        mem.addData(Seq((-1L, flushTus))); q.processAllAvailable()
-        dropped = q.recentProgress.toSeq
-          .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
-          .map(_.numRowsDroppedByWatermark).sum
-        q.stop()
+    // the multi-wave feed needs its own loop, not [[drain]]; the query
+    // stops and the sink's view drops also when a wave throws
+    try {
+      val dropped = Scratch.withDir("graft-st26", ram = true) { chk =>
+        // no-data batches ON (st5's exception rule): Spark filters late
+        // events with the PREVIOUS batch's watermark (the late/eviction
+        // split of SPARK-40925), so the wave-1 watermark reaches wave 2's
+        // late filter only through the intervening no-data batch — skipping
+        // them would admit every late row and the audit would read zero
+        withStreamRunConf(s, skipNoData = false) {
+          val mem = MemoryStream[(Long, Long)](
+            implicitly[org.apache.spark.sql.Encoder[(Long, Long)]], s.sqlContext)
+          val q = mem.toDF().toDF("event_id", "tus")
+            .select(timestamp_micros($"tus").as("ts"))
+            .withWatermark("ts", "10 minutes")
+            .groupBy(window($"ts", "15 minutes"))
+            .agg(count(lit(1)).as("n"))
+            .select(unix_timestamp($"window.start").as("w_start"), $"n")
+            .writeStream.format("memory").queryName(table)
+            .option("checkpointLocation", s"$chk/chk")
+            .outputMode("append")
+            .start()
+          try {
+            mem.addData(b1); q.processAllAvailable()
+            mem.addData(b2); q.processAllAvailable()
+            mem.addData(Seq((-1L, flushTus))); q.processAllAvailable()
+            q.recentProgress.toSeq
+              .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
+              .map(_.numRowsDroppedByWatermark).sum
+          } finally q.stop()
+        }
       }
-    }
-    val audit = Seq((-1L, dropped)).toDF("w_start", "n")
-    val result = s.table(table).select($"w_start", $"n")
-      .unionByName(audit)
-      .orderBy($"w_start").localCheckpoint(true)
-    s.catalog.dropTempView(table)
-    result
+      val audit = Seq((-1L, dropped)).toDF("w_start", "n")
+      s.table(table).select($"w_start", $"n")
+        .unionByName(audit)
+        .orderBy($"w_start").localCheckpoint(true)
+    } finally s.catalog.dropTempView(table)
   }
 
   val streamLateAuditSql: String =
@@ -1904,7 +1760,7 @@ object StreamingQueries {
     */
   def streamStateStoreReader(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Scratch.withDir("graft-st25", ram = true) { out =>
+    Scratch.pinned("graft-st25", ram = true) { out =>
       runMilestoneStream(s, d, out)
       val state = s.read.format("statestore")
         .option("path", s"$out/chk")
@@ -1913,7 +1769,7 @@ object StreamingQueries {
       state
         .select($"key.value".as("user_id"), $"value.cnt".as("n_events"),
           $"value.sumK".as("sum_k"))
-        .orderBy($"user_id").localCheckpoint(true)
+        .orderBy($"user_id")
     }
   }
 
@@ -1951,20 +1807,8 @@ object StreamingQueries {
         ($"doc_id" % graft.operators.TextAnalysis.PackShards).as("shard"),
         size(split($"text", " ")).as("n"))
       .as[PackDoc]
-    Scratch.withDir("graft-st23", ram = true) { out =>
-      withStreamRunConf(s) {
-        val q = packStream(docs)
-          .writeStream
-          .format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/chk")
-          .outputMode("append")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(s"$out/data")
-        .orderBy($"shard", $"bin").localCheckpoint(true)
+    Scratch.pinned("graft-st23", ram = true) { out =>
+      drainToParquet(s, out)(packStream(docs)).orderBy($"shard", $"bin")
     }
   }
 
@@ -2003,7 +1847,7 @@ object StreamingQueries {
   def streamStmtConsistentCdc(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    Scratch.withDir("graft-st22", ram = true) { root =>
+    Scratch.pinned("graft-st22", ram = true) { root =>
       val store = s"$root/store"
       val bfmt = classOf[graft.sources.BucketedPotV2Source].getName
       val pfmt = classOf[graft.sources.PotV2Source].getName
@@ -2022,7 +1866,7 @@ object StreamingQueries {
         .select(concat(lit("n"), $"n_nationkey").as("key"))
         .as[String].collect().sorted.toSeq
       val byBucket = bKeys.groupBy(
-        graft.sources.BucketedPotV2Source.bucketOf(_, 8))
+        graft.kv.BucketMeta.bucketOf(_, 8))
       val staging = new java.io.File(s"$store/.staging-st22b")
       staging.mkdirs()
       val frags = byBucket.map { case (b, ks) =>
@@ -2093,8 +1937,7 @@ object StreamingQueries {
       val held = appliedView("1_held").localCheckpoint(true)
       graft.sources.BucketedPotV2Source.recoverStatements(store)
       val released = appliedView("2_released").localCheckpoint(true)
-      held.unionByName(released)
-        .orderBy($"phase", $"key").localCheckpoint(true)
+      held.unionByName(released).orderBy($"phase", $"key")
     }
   }
 

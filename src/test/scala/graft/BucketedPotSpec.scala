@@ -1,6 +1,6 @@
 package graft
 
-import graft.kv.BucketedPotTable
+import graft.kv.{BucketMeta, BucketedPotTable}
 import org.scalatest.funsuite.AnyFunSuite
 
 class BucketedPotSpec extends AnyFunSuite {
@@ -9,6 +9,18 @@ class BucketedPotSpec extends AnyFunSuite {
 
   private def tmpRoot(): String =
     java.nio.file.Files.createTempDirectory("graft-bkv").toString
+
+  test("BucketMeta.bucketOf equals the pmod(xxhash64(key), n) column writers route by") {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val keys = Seq("k1", "k7", "", "naïve-ключ-鍵", "emoji-\uD83D\uDE42")
+    Seq(1, 4, 8, 16).foreach { n =>
+      val byColumn = keys.toDF("key")
+        .select(col("key"), pmod(xxhash64(col("key")), lit(n.toLong)).cast("int"))
+        .as[(String, Int)].collect().toMap
+      keys.foreach(k =>
+        assert(BucketMeta.bucketOf(k, n) === byColumn(k), s"key '$k', n = $n"))
+    }
+  }
 
   test("upsert rewrites only the buckets containing incoming keys") {
     val root = tmpRoot()
@@ -83,15 +95,15 @@ class BucketedPotSpec extends AnyFunSuite {
     assert(new java.io.File(s"$root/t/data").list().toSet === staged)
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
     assert(manifestLines(root, gen).filter(_.startsWith("del:")).toSet ===
-      Seq("k7", "nope").groupBy(bucketOf(_, 8)).map { case (b, ks) =>
+      Seq("k7", "nope").groupBy(BucketMeta.bucketOf(_, 8)).map { case (b, ks) =>
         s"del:$b:${json.writeValueAsString(ks.sorted.toArray)}" }.toSet)
     assert(recordedSchema(root, gen) === recordedSchema(root, 1L))
     val keys = pot.get().select("key").as[String].collect().toSet
     assert(!keys.contains("k7") && keys.size === 49)
     assert(pot.get("k7").isEmpty)
     // an upsert into k7's bucket restages it without k7: no pending key left
-    val b7 = bucketOf("k7", 8)
-    val mate = (51 to 500).map(i => s"k$i").find(bucketOf(_, 8) == b7).get
+    val b7 = BucketMeta.bucketOf("k7", 8)
+    val mate = (51 to 500).map(i => s"k$i").find(BucketMeta.bucketOf(_, 8) == b7).get
     val g3 = pot.upsert(Seq((mate, 1)).toDF("key", "v"))
     assert(pot.bucketsWrittenAt(g3) === Seq(b7))
     val b7Dir = manifestLines(root, g3).find(_.startsWith(s"$b7:")).get
@@ -103,7 +115,7 @@ class BucketedPotSpec extends AnyFunSuite {
     val one = BucketedPotTable(spark, root, "one", nBuckets = 8)
     one.upsert(Seq(("k1", 1)).toDF("key", "v"))
     val elsewhere = (2 to 500).map(i => s"k$i")
-      .find(bucketOf(_, 8) != bucketOf("k1", 8)).get
+      .find(BucketMeta.bucketOf(_, 8) != BucketMeta.bucketOf("k1", 8)).get
     assert(one.remove(Seq(elsewhere)) === 1L)
     assert(one.generation === 1L)
   }
@@ -538,7 +550,7 @@ class BucketedPotSpec extends AnyFunSuite {
     Seq(("", key, """{"v": 999}""")).toDF("pot_file", "key", "doc_json")
       .write.format(classOf[PotV2Source].getName)
       .option("path", BucketedPotV2Source.bucketPot(root,
-        BucketedPotV2Source.bucketOf(key, 4)))
+        BucketMeta.bucketOf(key, 4)))
       .mode("append").save()
     val tMid = pause(System.currentTimeMillis())
     val preStatement = readAsOf(root, tB)
@@ -705,9 +717,6 @@ class BucketedPotSpec extends AnyFunSuite {
 
   /** A bucketed store's FileSystem, as its statements take it. */
   private def storeFs(root: String) = graft.sources.BucketedPotV2Source.fsOf(root)
-
-  private def bucketOf(key: String, n: Int): Int =
-    graft.sources.BucketedPotV2Source.bucketOf(key, n)
 
   private def recordedSchema(root: String, g: Long)
       : Option[org.apache.spark.sql.types.StructType] =

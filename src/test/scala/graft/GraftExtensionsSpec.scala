@@ -240,7 +240,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // buckets committed) — the PotJsonSpec recovery fixture via CALL
     val keys = Seq("ra", "rb", "rc", "rd")
     val byBucket = keys.groupBy(
-      graft.sources.BucketedPotV2Source.bucketOf(_, 4))
+      graft.kv.BucketMeta.bucketOf(_, 4))
     val staging = java.nio.file.Paths.get(root, ".staging-crashproc")
     java.nio.file.Files.createDirectories(staging)
     val frags = byBucket.map { case (b, ks) =>

@@ -935,6 +935,15 @@ class KvSpec extends AnyFunSuite {
     assert(changes(1L, 3L) === Map("a" -> "removed", "b" -> "changed"))
   }
 
+  test("diff matches an unchanged null-key document to itself") {
+    val root = tmpRoot()
+    val pot = PotTable(spark, root, "t")
+    pot.upsert(Seq((Some("a"), 1), (None, 2)).toDF("key", "v"))
+    pot.upsert(Seq(("a", 5)).toDF("key", "v"))
+    val rows = pot.diff(1L, 2L).as[(Option[String], String)].collect()
+    assert(rows.toSeq === Seq((Some("a"), "changed")))
+  }
+
   test("a null-key row survives a remove") {
     val root = tmpRoot()
     val pot = PotTable(spark, root, "t")

@@ -512,7 +512,7 @@ class PotJsonSpec extends AnyFunSuite {
       .write.format(fmt).option("path", root).option("buckets", "8")
       .mode("append").save()
     val zzBuckets = Set("zz:a", "zz:b")
-      .map(graft.sources.BucketedPotV2Source.bucketOf(_, 8))
+      .map(graft.kv.BucketMeta.bucketOf(_, 8))
     val existing = graft.sources.BucketedPotV2Source
       .existingBuckets(storeFs(root), root, 8).length
     // the shared planner prunes bucket objects through their zmaps; the
@@ -715,7 +715,7 @@ class PotJsonSpec extends AnyFunSuite {
       .map(r => r.getString(1) -> r.getInt(0)).toMap
     (1 to 40).foreach { i =>
       assert(viaSql(s"k$i") ===
-        graft.sources.BucketedPotV2Source.bucketOf(s"k$i", 4))
+        graft.kv.BucketMeta.bucketOf(s"k$i", 4))
     }
     // r19 ADVICE: a NULL key returns NULL (SQL semantics), never an NPE —
     // covers both the literal and the nullable-column path
@@ -1956,7 +1956,7 @@ class PotJsonSpec extends AnyFunSuite {
     val gensAfter = graft.sources.BucketedPotV2Source.headVector(storeFs(root), root, 8)
     val moved = gensAfter.count { case (b, g) => gensBefore.getOrElse(b, 0L) != g }
     val expectTouched = Set("c010", "c011")
-      .map(graft.sources.BucketedPotV2Source.bucketOf(_, 8)).size
+      .map(graft.kv.BucketMeta.bucketOf(_, 8)).size
     assert(moved === expectTouched,
       s"DELETE rewrote $moved buckets, expected $expectTouched")
     assert(spark.sql(s"SELECT count(*) FROM $tbl").as[Long].head() === 38L)
@@ -2303,7 +2303,7 @@ class PotJsonSpec extends AnyFunSuite {
       .toDF("pot_file", "key", "doc_json")
       .write.format(classOf[graft.sources.PotV2Source].getName)
       .option("path", graft.sources.BucketedPotV2Source.bucketPot(root,
-        graft.sources.BucketedPotV2Source.bucketOf("prefix-row", 4)))
+        graft.kv.BucketMeta.bucketOf("prefix-row", 4)))
       .mode("append").save()
     // NONE: the committed prefix is invisible — readers hold the base
     assert(readKeys() === (1 to 20).map(i => s"s$i").toSet,
@@ -2327,7 +2327,7 @@ class PotJsonSpec extends AnyFunSuite {
     // zero buckets committed
     val keys = Seq("ra", "rb", "rc", "rd")
     val byBucket = keys.groupBy(
-      graft.sources.BucketedPotV2Source.bucketOf(_, 4))
+      graft.kv.BucketMeta.bucketOf(_, 4))
     val staging = java.nio.file.Paths.get(root, ".staging-crashq")
     java.nio.file.Files.createDirectories(staging)
     val frags = byBucket.map { case (b, ks) =>
@@ -2370,7 +2370,7 @@ class PotJsonSpec extends AnyFunSuite {
     // two buckets, exactly ONE bucket's delta committed
     val keys = Seq("ea", "eb", "ec", "ed")
     val byBucket = keys.groupBy(
-      graft.sources.BucketedPotV2Source.bucketOf(_, 4))
+      graft.kv.BucketMeta.bucketOf(_, 4))
     assert(byBucket.size > 1, s"fixture keys collapsed: $byBucket")
     val staging = java.nio.file.Paths.get(root, ".staging-epq-e7")
     java.nio.file.Files.createDirectories(staging)
@@ -2422,7 +2422,7 @@ class PotJsonSpec extends AnyFunSuite {
     // committed (the exact r15-verdict hazard — a barrier with no owner)
     val keys = Seq("xa", "xb", "xc", "xd")
     val byBucket = keys.groupBy(
-      graft.sources.BucketedPotV2Source.bucketOf(_, 4))
+      graft.kv.BucketMeta.bucketOf(_, 4))
     assert(byBucket.size > 1, s"fixture keys collapsed: $byBucket")
     val staging = java.nio.file.Paths.get(root, ".staging-agedq")
     java.nio.file.Files.createDirectories(staging)
@@ -2468,7 +2468,7 @@ class PotJsonSpec extends AnyFunSuite {
       .mode("append").save()
     val keys = Seq("wa", "wb", "wc", "wd")
     val byBucket = keys.groupBy(
-      graft.sources.BucketedPotV2Source.bucketOf(_, 4))
+      graft.kv.BucketMeta.bucketOf(_, 4))
     val staging = java.nio.file.Paths.get(root, ".staging-agedw")
     java.nio.file.Files.createDirectories(staging)
     val frags = byBucket.map { case (b, ks) =>
@@ -2508,7 +2508,7 @@ class PotJsonSpec extends AnyFunSuite {
     Seq(("", "seed", """{"v": 0}""")).toDF("pot_file", "key", "doc_json")
       .write.format(fmt).option("path", root).option("buckets", "4")
       .mode("append").save()
-    val b0 = graft.sources.BucketedPotV2Source.bucketOf("seed", 4)
+    val b0 = graft.kv.BucketMeta.bucketOf("seed", 4)
     // heads() that simulates the race: the FIRST read returns the stale
     // vector; between it and the post-CAS re-read an independent commit
     // lands on bucket b0 (performed inside the closure's second call)

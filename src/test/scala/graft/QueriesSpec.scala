@@ -136,6 +136,8 @@ class QueriesSpec extends AnyFunSuite {
           "DistRank or a bounded triangle join")
       val n = df.count()
       if (!mayBeEmpty(name)) assert(n > 0, s"$name returned no rows")
+      assert(spark.streams.active.isEmpty,
+        s"$name left a streaming query running")
     }
   }
 

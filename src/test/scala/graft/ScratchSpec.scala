@@ -42,6 +42,32 @@ class ScratchSpec extends AnyFunSuite {
     assert(seen != null && !new File(seen).exists(), s"$seen survived")
   }
 
+  test("a pinned frame counts and collects after its dir is gone") {
+    import spark.implicits._
+    var seen: String = null
+    val df = Scratch.pinned("graft-scratchspec") { dir =>
+      seen = dir
+      Seq(3, 1, 2).toDF("v").write.parquet(s"$dir/t")
+      spark.read.parquet(s"$dir/t").orderBy("v")
+    }
+    assert(seen != null && !new File(seen).exists(), s"$seen survived")
+    assert(df.count() === 3L)
+    assert(df.as[Int].collect().toSeq === Seq(1, 2, 3))
+  }
+
+  test("pinned deletes its dir when the body throws, and rethrows") {
+    var seen: String = null
+    val e = intercept[IllegalStateException] {
+      Scratch.pinned("graft-scratchspec", ram = true) { dir =>
+        seen = dir
+        Files.writeString(Paths.get(dir, "f"), "x")
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(e.getMessage === "boom")
+    assert(seen != null && !new File(seen).exists(), s"$seen survived")
+  }
+
   test("u49 over a missing data dir throws and leaves no graft-u49 dir") {
     assertNoNewDirs("graft-u49") {
       intercept[Exception] {

@@ -148,6 +148,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(st2Views === views0, "st2/st3 memory-sink temp views not dropped")
   }
 
+  test("a drained run whose batch throws rethrows, leaving no query, dir or view") {
+    import spark.implicits._
+    import graft.streaming.StreamingQueries
+    import org.apache.spark.sql.functions.udf
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    implicit val sqlCtx = spark.sqlContext
+    val boom = udf { (v: Long) =>
+      if (v == 2L) throw new IllegalStateException("batch boom")
+      v
+    }
+    def dirs = Seq("/dev/shm", System.getProperty("java.io.tmpdir"))
+      .flatMap(d => Option(new java.io.File(d).list()).toSeq.flatten)
+      .count(_.startsWith("graft-stspec"))
+    def views = spark.catalog.listTables().collect()
+      .count(_.name.startsWith("stspec_"))
+    val (dirs0, views0) = (dirs, views)
+    val mem = MemoryStream[Long]
+    mem.addData(1L, 2L, 3L)
+    intercept[StreamingQueryException] {
+      StreamingQueries.drainToMemory(spark, "stspec", "append") {
+        mem.toDF().select(boom($"value").as("v"))
+      }(identity)
+    }
+    assert(spark.streams.active.isEmpty, "the failed query is still active")
+    assert(dirs === dirs0, "the run's scratch checkpoint dir survived")
+    assert(views === views0, "the run's memory-sink view survived")
+  }
+
   test("st5 sessionize emits an in-batch-closed session immediately") {
     import spark.implicits._
     import graft.streaming.{SessEvent, SessionOut, StreamingQueries}
