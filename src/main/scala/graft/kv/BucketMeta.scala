@@ -45,12 +45,18 @@ object BucketMeta {
     * bucketed writer routes rows by. 0 without hashing for the one-bucket
     * plain pot.
     */
-  def bucketOf(key: String, n: Int): Int = if (n == 1) 0 else {
-    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-      org.apache.spark.unsafe.types.UTF8String.fromString(key),
-      org.apache.spark.sql.types.StringType, 42L)
-    (((h % n) + n) % n).toInt
-  }
+  def bucketOf(key: String, n: Int): Int =
+    if (n == 1) 0
+    else bucketOf(org.apache.spark.unsafe.types.UTF8String.fromString(key), n)
+
+  /** [[bucketOf]] on the key's UTF-8 bytes as Spark holds them: the SQL
+    * `bucket(n, key)` function calls this per row without a copy. */
+  def bucketOf(key: org.apache.spark.unsafe.types.UTF8String, n: Int): Int =
+    if (n == 1) 0 else {
+      val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
+        .hash(key, org.apache.spark.sql.types.StringType, 42L)
+      (((h % n) + n) % n).toInt
+    }
 
   private def marker(storeDir: Path) = new Path(storeDir, "_meta/buckets")
 

@@ -1448,23 +1448,9 @@ object Extensibility {
           .write.format(fmt).option("path", pot).mode("overwrite").save()
         // one delta epoch upserts the second half — the chain stays
         // delta-headed (run 1 << compactEvery)
-        val fs = new org.apache.hadoop.fs.Path(pot)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        val staging = new org.apache.hadoop.fs.Path(s"$dir/chain_$g/.stage")
-        fs.mkdirs(staging)
-        val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
-        val out = fs.create(frag, false)
-        try out.write(mine.filter(_.getInt(0) % 8 >= 4)
-          .map(r => s"""{"k": "${keyOf(r.getInt(0))}", """ +
-            s""""d": ${doc(r.getString(1))}}""")
-          .mkString("", "\n", "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        new graft.sources.PotV2Write(pot,
-          graft.sources.PotV2Source.Schema, s"u69e$g", truncateFirst = false)
-          .commitDeltaEpoch(
-            Array(graft.sources.PotFragmentMessage(0, frag.toString)),
-            s"u69e$g", staging)
+        graft.sources.PotV2Write.commitChanges(pot, s"u69e$g",
+          mine.filter(_.getInt(0) % 8 >= 4)
+            .map(r => keyOf(r.getInt(0)) -> doc(r.getString(1))))
       }
       def probeParts(filters: org.apache.spark.sql.sources.Filter*): Long = {
         val b = new graft.sources.PotV2ScanBuilder(s"$dir/*/data.json")
@@ -1613,21 +1599,9 @@ object Extensibility {
         .map(_.getPath).filter(_.getName.startsWith(".zmap-"))
         .foreach(z => fs.delete(z, false))
       val p2 = snap(2, 10 to 12)         // then a delta epoch -> delta head
-      val staging = new org.apache.hadoop.fs.Path(s"$dir/range_2/.st")
-      fs.mkdirs(staging)
-      val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
-      val out0 = fs.create(frag, false)
-      try out0.write(nat.filter(r => (13 to 14).contains(r.getInt(0)))
-        .map(r => s"""{"k": "${keyOf(r.getInt(0))}", """ +
-          s""""d": ${doc(r.getString(1))}}""")
-        .mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out0.close()
-      new graft.sources.PotV2Write(p2, graft.sources.PotV2Source.Schema,
-        "u70e", truncateFirst = false)
-        .commitDeltaEpoch(
-          Array(graft.sources.PotFragmentMessage(0, frag.toString)),
-          "u70e", staging)
+      graft.sources.PotV2Write.commitChanges(p2, "u70e",
+        nat.filter(r => (13 to 14).contains(r.getInt(0)))
+          .map(r => keyOf(r.getInt(0)) -> doc(r.getString(1))))
       def parts(k: String): Long = {
         val b = new graft.sources.PotV2ScanBuilder(s"$dir/*/data.json")
         b.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("key", k)))
@@ -1711,21 +1685,9 @@ object Extensibility {
       snap(1, 4 to 7)                       // sidecar stripped below
       sidecarsOf(1).foreach(z => fs.delete(z, false))
       val p2 = snap(2, 8 to 10)             // + delta epoch: healthy chain
-      val staging = new org.apache.hadoop.fs.Path(s"$dir/range_2/.st")
-      fs.mkdirs(staging)
-      val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
-      val o0 = fs.create(frag, false)
-      try o0.write(nat.filter(r => (11 to 12).contains(r.getInt(0)))
-        .map(r => s"""{"k": "${keyOf(r.getInt(0))}", """ +
-          s""""d": ${doc(r.getString(1))}}""")
-        .mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally o0.close()
-      new graft.sources.PotV2Write(p2, graft.sources.PotV2Source.Schema,
-        "u73e", truncateFirst = false)
-        .commitDeltaEpoch(
-          Array(graft.sources.PotFragmentMessage(0, frag.toString)),
-          "u73e", staging)
+      graft.sources.PotV2Write.commitChanges(p2, "u73e",
+        nat.filter(r => (11 to 12).contains(r.getInt(0)))
+          .map(r => keyOf(r.getInt(0)) -> doc(r.getString(1))))
       snap(3, 13 to 15)                     // head ARTIFACT deleted below
       fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/range_3"))
         .map(_.getPath).filter(_.getName.startsWith(".snap-"))
@@ -2077,27 +2039,11 @@ object Extensibility {
       }
       // pot A: snapshot + two delta epochs (u50's chain shape)
       val potA = write("a", nat)
-      val fsA = new org.apache.hadoop.fs.Path(potA)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      def epoch(tag: String, lines: Seq[String]): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(s"$dir/a/.staging-$tag")
-        fsA.mkdirs(staging)
-        val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
-        val out = fsA.create(frag, false)
-        try out.write(lines.mkString("", "\n", "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        val w = new graft.sources.PotV2Write(potA,
-          graft.sources.PotV2Source.Schema, tag, truncateFirst = false,
-          graft.sources.PotV2Source.DefaultMaxObjectBytes)
-        w.commitDeltaEpoch(
-          Array(graft.sources.PotFragmentMessage(0, frag.toString)),
-          tag, staging)
+      Seq(0 -> "u52e1", 1 -> "u52e2").foreach { case (rk, tag) =>
+        graft.sources.PotV2Write.commitChanges(potA, tag,
+          nat.filter(_.getInt(2) == rk)
+            .map(r => s"n${r.getInt(0)}" -> doc(r.getString(1))))
       }
-      epoch("u52e1", nat.filter(_.getInt(2) == 0).map(r =>
-        s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1))}}"""))
-      epoch("u52e2", nat.filter(_.getInt(2) == 1).map(r =>
-        s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1))}}"""))
       // pot B: one snapshot generation, already compact
       write("b", nat.filter(_.getInt(2) <= 1))
       s.sql(
@@ -3959,26 +3905,13 @@ object Extensibility {
       // path (dgen artifacts — the chain shape compaction exists for)
       val fs = new org.apache.hadoop.fs.Path(pot)
         .getFileSystem(s.sessionState.newHadoopConf())
-      def epoch(tag: String, lines: Seq[String]): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(s"$dir/t/.staging-$tag")
-        fs.mkdirs(staging)
-        val frag = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
-        val out = fs.create(frag, false)
-        try out.write(lines.mkString("", "\n", "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        val w = new graft.sources.PotV2Write(pot,
-          graft.sources.PotV2Source.Schema, tag, truncateFirst = false,
-          graft.sources.PotV2Source.DefaultMaxObjectBytes)
-        w.commitDeltaEpoch(
-          Array(graft.sources.PotFragmentMessage(0, frag.toString)),
-          tag, staging)
-      }
-      epoch("u50e1", nat.filter(_.getInt(2) == 0).map(r =>
-        s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1), 1)}}"""))
-      epoch("u50e2", nat.filter(_.getInt(2) == 1).map(r =>
-        s"""{"k": "n${r.getInt(0)}", "d": ${doc(r.getString(1), 2)}}""") :+
-        """{"k": "n7", "d": null}""")
+      graft.sources.PotV2Write.commitChanges(pot, "u50e1",
+        nat.filter(_.getInt(2) == 0)
+          .map(r => s"n${r.getInt(0)}" -> doc(r.getString(1), 1)))
+      graft.sources.PotV2Write.commitChanges(pot, "u50e2",
+        nat.filter(_.getInt(2) == 1)
+          .map(r => s"n${r.getInt(0)}" -> doc(r.getString(1), 2)) :+
+          ("n7" -> null))
       val commits = new org.apache.hadoop.fs.Path(s"$dir/t/.commits")
       // a fresh chain numbered 1, 2, 3: the head IS the generation count
       val headBefore = graft.kv.CommitMarker.head(fs, commits)

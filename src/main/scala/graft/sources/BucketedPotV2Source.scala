@@ -486,95 +486,70 @@ private[graft] class BucketedPotWrite(
     new BucketedPotStreamingWrite(this)
 
   private[sources] def commitEpoch(
-      epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(root).getFileSystem(conf)
-    BucketedPotV2Source.stampBuckets(fs, root, nBuckets)
-    val perBucket = BucketFragmentsMessage.perBucket(messages)
-    val tag = s"q${qid8}e$epochId"
-    val buckets: Seq[Int] =
-      if (truncateFirst)
-        (perBucket.keySet ++
-          BucketedPotV2Source.existingBuckets(fs, root, nBuckets)).toSeq.sorted
-      else perBucket.keySet.toSeq.sorted
-    // r15 statement barrier at EPOCH granularity: a multi-bucket epoch
-    // is none-or-all to readers exactly like a batch statement. A
-    // checkpoint-replayed epoch adopts its own existing intent (the
-    // original base vector is the correct cap) and its bucket commits
-    // adopt by (query, epoch) tag — exactly-once per bucket unchanged.
-    val barrier = buckets.length > 1
-    val stmtId = s"$queryId-e$epochId"
-    if (barrier) {
-      // beginFresh: base re-read after the intent CAS (ADVICE r15); a
-      // checkpoint-replayed epoch adopts its original intent unchanged
-      BucketedStmtLog.beginFresh(fs, root, stmtId, buckets,
-        () => BucketedPotV2Source.headVector(fs, root, nBuckets),
-        base => BucketedStmtLog.intentBody(
-          "epoch", queryId, truncateFirst, maxObjectBytes, buckets, base,
-          perBucket.view.mapValues(_.map(m =>
-            (m.partitionId, m.fragment))).toMap,
-          epoch = Some(epochId)), adoptExisting = true)
-    }
-    buckets.foreach { b =>
-      val pot = BucketedPotV2Source.bucketPot(root, b)
-      val w = new PotV2Write(pot, PotV2Source.Schema, s"$queryId-b$b",
-        truncateFirst, maxObjectBytes, conf = conf)
-      val msgs = perBucket.getOrElse(b, Nil).toArray[WriterCommitMessage]
-      val staging = new Path(stagingBase + s"-e$epochId", s"done-b$b")
-      if (truncateFirst)
-        w.commitEntries(msgs, truncate = true, snapTag = Some(tag),
-          retryOnConflict = true, staging = staging)
-      else
-        w.commitDeltaEpoch(msgs, tag, staging = staging)
-    }
-    if (barrier)
-      BucketedStmtLog.complete(fs, root, stmtId,
-        Seq(new Path(stagingBase + s"-e$epochId")))
-    else fs.delete(new Path(stagingBase + s"-e$epochId"), true)
-  }
+      epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    commitStatement(messages, Some(epochId))
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = writerFactory
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commitStatement(messages, None)
+
+  /** One statement over the buckets its rows touch: a batch INSERT
+    * (`epoch` None) or a streaming epoch. Overwrite rewrites EVERY
+    * existing bucket (untouched ones to empty); append touches only the
+    * buckets with incoming rows.
+    *
+    * r15 statement barrier: a multi-bucket statement publishes an INTENT
+    * (readers cap at the base vector — none-or-all visibility) before
+    * any bucket commits, and flips DONE after the last; beginFresh
+    * re-reads the base after the intent CAS (ADVICE r15). Single-bucket
+    * statements are already atomic in their one chain commit. A
+    * checkpoint-replayed epoch adopts its own existing intent (the
+    * original base vector is the correct cap).
+    *
+    * Each bucket commit is statement-tagged, so a re-run adopts the
+    * buckets it already committed (exactly-once per bucket), and retries
+    * on conflict, so concurrent writers serialize per bucket and both
+    * land. A batch statement commits each bucket as a snapshot; an epoch
+    * routes through [[PotV2Write.commitEpoch]] (per-shard delta
+    * generations with threshold compaction).
+    */
+  private def commitStatement(messages: Array[WriterCommitMessage],
+      epoch: Option[Long]): Unit = {
     val fs = new Path(root).getFileSystem(conf)
     BucketedPotV2Source.stampBuckets(fs, root, nBuckets)
     val perBucket = BucketFragmentsMessage.perBucket(messages)
-    // overwrite rewrites EVERY existing bucket (untouched ones to empty);
-    // append touches only the buckets with incoming rows
     val buckets: Seq[Int] =
       if (truncateFirst)
         (perBucket.keySet ++
           BucketedPotV2Source.existingBuckets(fs, root, nBuckets)).toSeq.sorted
       else perBucket.keySet.toSeq.sorted
-    // r15 statement barrier: multi-bucket statements publish an INTENT
-    // (reader caps at the base vector — none-or-all visibility) before
-    // any bucket commits, and flip DONE after the last. Single-bucket
-    // statements are already atomic in their one chain commit.
+    val stmtId = queryId + epoch.fold("")(e => s"-e$e")
+    val tag = s"q$qid8" + epoch.fold("")(e => s"e$e")
+    val staging = new Path(stagingBase + epoch.fold("")(e => s"-e$e"))
     val barrier = buckets.length > 1
-    if (barrier) {
-      // beginFresh: base re-read after the intent CAS (ADVICE r15)
-      BucketedStmtLog.beginFresh(fs, root, queryId, buckets,
+    if (barrier)
+      BucketedStmtLog.beginFresh(fs, root, stmtId, buckets,
         () => BucketedPotV2Source.headVector(fs, root, nBuckets),
         base => BucketedStmtLog.intentBody(
-          "insert", queryId, truncateFirst, maxObjectBytes, buckets, base,
+          if (epoch.isDefined) "epoch" else "insert", queryId,
+          truncateFirst, maxObjectBytes, buckets, base,
           perBucket.view.mapValues(_.map(m =>
-            (m.partitionId, m.fragment))).toMap))
-    }
+            (m.partitionId, m.fragment))).toMap, epoch = epoch),
+        adoptExisting = epoch.isDefined)
     buckets.foreach { b =>
-      val pot = BucketedPotV2Source.bucketPot(root, b)
-      val w = new PotV2Write(pot, PotV2Source.Schema, s"$queryId-b$b",
-        truncateFirst, maxObjectBytes, conf = conf)
-      // statement-tagged (adopt-on-rerun) + retry-on-conflict: concurrent
-      // SQL writers serialize per bucket, both land; a re-run statement
-      // adopts buckets it already committed
-      w.commitEntries(
-        perBucket.getOrElse(b, Nil).toArray[WriterCommitMessage],
-        truncate = truncateFirst, snapTag = Some(s"q${qid8}"),
-        retryOnConflict = true,
-        staging = new Path(stagingDir, s"done-b$b"))
+      val w = new PotV2Write(BucketedPotV2Source.bucketPot(root, b),
+        PotV2Source.Schema, s"$queryId-b$b", truncateFirst, maxObjectBytes,
+        conf = conf)
+      val msgs = perBucket.getOrElse(b, Nil).toArray[WriterCommitMessage]
+      val done = new Path(staging, s"done-b$b")
+      if (epoch.isDefined) w.commitEpoch(msgs, tag, done)
+      else w.commitEntries(msgs, truncate = truncateFirst, snapTag = Some(tag),
+        retryOnConflict = true, staging = done)
     }
-    if (barrier) BucketedStmtLog.complete(fs, root, queryId, Seq(stagingDir))
-    else fs.delete(stagingDir, true)
+    if (barrier) BucketedStmtLog.complete(fs, root, stmtId, Seq(staging))
+    else fs.delete(staging, true)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -68,11 +68,8 @@ private[graft] object BucketedStmtLog {
     * pinned base moved under a concurrent writer — only "delta" kind pins)
     * drops the barrier loudly by name instead: the committed prefix
     * becomes visible, exactly what the live conflict path does.
-    * Tunable for tests via -Dgraft.stmt.recoverAfterMs.
     */
-  private def recoverAfterMs: Long =
-    sys.props.get("graft.stmt.recoverAfterMs").map(_.toLong)
-      .getOrElse(600000L)
+  private val RecoverAfterMs: Long = 10 * 60 * 1000L
 
   private def openDir(root: String) = new Path(root, "_stmts/open")
   private def doneMarker(root: String, qid: String) =
@@ -100,7 +97,7 @@ private[graft] object BucketedStmtLog {
     o.put("qid", qid)
     o.put("truncate", truncate)
     o.put("ceiling", ceiling)
-    // publish wall-clock: the statement's lease stamp (see recoverAfterMs)
+    // publish wall-clock: the statement's lease stamp (see RecoverAfterMs)
     o.put("ts", System.currentTimeMillis())
     epoch.foreach(e => o.put("epoch", e))
     val ba = o.putObject("base")
@@ -315,7 +312,7 @@ private[graft] object BucketedStmtLog {
     * complete race to a benign pre-statement view).
     *
     * r16: meeting an open statement is no longer silent — AGED ones
-    * (older than [[recoverAfterMs]]) are rolled forward HERE, at read
+    * (older than [[RecoverAfterMs]]) are rolled forward HERE, at read
     * planning, before the caps are computed (a crashed writer's barrier
     * self-heals at the next read instead of pinning snapshot freshness
     * until a human calls `recoverStatements`); young ones — a live
@@ -333,7 +330,7 @@ private[graft] object BucketedStmtLog {
       if (stillOpen) {
         log.warn(s"bucketed pot $root: statement $qid is OPEN — readers " +
           "are capped at its base generations until it completes " +
-          s"(auto-recovery after ${recoverAfterMs} ms)")
+          s"(auto-recovery after $RecoverAfterMs ms)")
         val base = mapper.readTree(body).get("base")
         base.properties().asScala.foreach { e =>
           val b = e.getKey.toInt
@@ -568,7 +565,7 @@ private[graft] object BucketedStmtLog {
   }
 
   /** Roll forward every open statement whose lease expired (intent older
-    * than [[recoverAfterMs]]; a stamp-free legacy intent counts as aged).
+    * than [[RecoverAfterMs]]; a stamp-free legacy intent counts as aged).
     * Conflicted roll-forwards (a "delta" statement whose pinned base
     * moved — replaying would violate its conflict contract) drop their
     * barrier LOUDLY by name, making the committed prefix visible: the
@@ -579,10 +576,10 @@ private[graft] object BucketedStmtLog {
     val now = System.currentTimeMillis()
     openStatements(fs, root).flatMap { case (qid, body) =>
       val ts = Option(mapper.readTree(body).get("ts")).map(_.asLong())
-      if (ts.exists(now - _ < recoverAfterMs)) None
+      if (ts.exists(now - _ < RecoverAfterMs)) None
       else {
         log.warn(s"bucketed pot $root: statement $qid aged out " +
-          s"(intent ts=$ts, lease ${recoverAfterMs} ms) — rolling forward")
+          s"(intent ts=$ts, lease $RecoverAfterMs ms) — rolling forward")
         try { recoverOne(fs, root, qid, body); Some(qid) }
         catch {
           case e: graft.kv.PotTable.CommitConflict =>
@@ -645,14 +642,8 @@ private[graft] object BucketedStmtLog {
             // streaming epoch roll-forward: the per-(query, epoch) tag
             // makes replay exactly-once per bucket, through the same
             // delta/compaction routing the live epoch would have taken
-            val tag = s"q${qid8}e${j.get("epoch").asLong()}"
-            if (truncate)
-              w.commitEntries(msgs, truncate = true, snapTag = Some(tag),
-                retryOnConflict = true,
-                staging = new Path(root, s".recover-$qid-b$b"))
-            else
-              w.commitDeltaEpoch(msgs, tag,
-                staging = new Path(root, s".recover-$qid-b$b"))
+            w.commitEpoch(msgs, s"q${qid8}e${j.get("epoch").asLong()}",
+              new Path(root, s".recover-$qid-b$b"))
           case "delta" =>
             // adopt-or-apply at the ORIGINAL pinned base: a moved head is
             // the MERGE conflict contract, raised loudly

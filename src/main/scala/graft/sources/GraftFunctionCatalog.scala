@@ -659,16 +659,13 @@ object BucketFn extends ScalarFunction[Integer] {
   override def isResultNullable: Boolean = true
 
   /** MAGIC method (codegen'd direct call — V2 functions invoke with
-    * propagateNull=false, so the null key reaches us); the non-null path
-    * must stay bit-identical to [[graft.kv.BucketMeta.bucketOf]] — the
-    * router and the transform are the same function or co-partitioning
-    * is silently wrong. */
-  def invoke(n: Int, key: org.apache.spark.unsafe.types.UTF8String): Integer = {
-    if (key == null) return null
-    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      .hash(key, StringType, 42L)
-    Integer.valueOf((((h % n) + n) % n).toInt)
-  }
+    * propagateNull=false, so the null key reaches us). The non-null path
+    * IS the write router, [[graft.kv.BucketMeta.bucketOf]]: the router
+    * and the transform must be one function or co-partitioning is
+    * silently wrong. */
+  def invoke(n: Int, key: org.apache.spark.unsafe.types.UTF8String): Integer =
+    if (key == null) null
+    else Integer.valueOf(graft.kv.BucketMeta.bucketOf(key, n))
 
   override def produceResult(input: InternalRow): Integer =
     if (input.isNullAt(1)) null

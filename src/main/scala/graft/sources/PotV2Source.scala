@@ -20,8 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 connector for the reference's native pot storage — one
-  * `data.json` object per pot path holding a single JSON map
-  * `{"<key>": {<document>}, ...}` (server.go:212-214, 318-331).
+  * `data.json` pot object per pot path (server.go:212-214, 318-331), plus
+  * this engine's generation chain; [[PotChain]] states every format.
   *
   * [[PotJson]] is the dataflow form (wholetext + from_json); this is the
   * CONNECTOR form a Spark-native engine exposes so pot buckets are tables:
@@ -367,7 +367,7 @@ object PotV2Source {
       // succeeded (the r18 vacuumLayouts rule, mirrored) — and retire the
       // paired zone-map sidecar only then, so a failed body delete never
       // strips its snapshot's statistics
-      if (g < covering && owned && aged && p.getName.startsWith(".snap-") &&
+      if (g < covering && owned && aged && PotChain.isSnap(body) &&
           fs.exists(p) && fs.delete(p, false)) {
         // the paired zone-map sidecar (u57) retires with its snapshot
         PotChain.zmapOf(body).foreach(z => fs.delete(z, false))
@@ -395,8 +395,7 @@ object PotV2Source {
     * scaladoc states it so nobody expects otherwise.
     */
   def ensureStats(fs: org.apache.hadoop.fs.FileSystem, glob: String)
-      : Seq[String] = {
-    val mapper = new ObjectMapper()
+      : Seq[String] =
     Option(fs.globStatus(new Path(glob))).map(_.toSeq).getOrElse(Seq.empty)
       .filter(_.isFile).map(_.getPath).map { pot =>
         val commits = new Path(pot.getParent, ".commits")
@@ -408,31 +407,24 @@ object PotV2Source {
           else if (PotChain.isDgen(body)) s"$pot:delta_head"
           else PotChain.zmapOf(body) match {
             case Some(zp) if fs.exists(zp) => s"$pot:present"
-            case Some(zp) =>
-              val in = fs.open(new Path(body))
-              val root = try mapper.readTree(in) finally in.close()
-              if (root == null || !root.isObject) s"$pot:legacy"
-              else if (root.isEmpty) s"$pot:empty"
-              else {
-                val zo = PotChain.zmapJson(mapper,
-                  root.properties().asScala.iterator.map(f =>
-                    f.getKey -> Some(f.getValue)))
+            case Some(zp) => PotChain.objectAt(fs, new Path(body)) match {
+              case None => s"$pot:legacy"
+              case Some(root) if root.isEmpty => s"$pot:empty"
+              case Some(root) =>
                 try {
-                  val zOut = fs.create(zp, false)
-                  try zOut.write(mapper.writeValueAsString(zo)
-                    .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                  finally zOut.close()
+                  PotChain.writeSidecar(fs, zp, PotChain.zmapJson(
+                    root.properties().asScala.iterator.map(f =>
+                      f.getKey -> Some(f.getValue))))
                   s"$pot:written"
                 } catch {
                   // a concurrent backfill/commit won the create
                   case scala.util.control.NonFatal(_) => s"$pot:present"
                 }
-              }
+            }
             case None => s"$pot:legacy"
           }
         }
       }
-  }
 
   /** u73 (r19) — `check_pot`: fsck for the pot format. A store ages
     * through vacuums, clones, crashes, and foreign writers; before
@@ -654,569 +646,6 @@ object PotV2Source {
   }
 }
 
-/** Generation-chain state resolution: a pot's chain holds two artifact
-  * kinds — full snapshots (`.snap-*.json`, the whole object) and DELTA
-  * generations (`.dgen-*.jsonl`, one streaming epoch's change set:
-  * `{"k":<key>,"d":<doc|null>}` lines, null = tombstone). State at
-  * generation g = the nearest snapshot at or below g folded with the
-  * delta generations above it, LWW per key — the LSM discipline that
-  * makes a streaming epoch O(change-set) while batch commits stay full
-  * snapshots. Chains always START with a snapshot (the first epoch of a
-  * pot goes through the snapshot path, adopting any legacy data.json),
-  * so the fold always has a base.
-  */
-private[graft] object PotChain {
-  def isSnap(body: String): Boolean =
-    new Path(body).getName.startsWith(".snap-")
-  def isDgen(body: String): Boolean =
-    new Path(body).getName.startsWith(".dgen-")
-
-  /** u57: the zone-map sidecar paired with a `.snap-` artifact (same
-    * uuid stem, `.zmap-` prefix) — present for every r18+ snapshot
-    * commit, absent for legacy/delta artifacts. */
-  def zmapOf(body: String): Option[Path] = {
-    val p = new Path(body)
-    val name = p.getName
-    if (name.startsWith(".snap-") && name.endsWith(".json"))
-      Some(new Path(p.getParent,
-        ".zmap-" + name.stripPrefix(".snap-").stripSuffix(".json") + ".json"))
-    else None
-  }
-
-  /** The (kmin, kmax) a snapshot's zone map declares, if one exists and
-    * parses — any absence or tear reads None (no pruning, never wrong). */
-  def zmapRange(fs: org.apache.hadoop.fs.FileSystem, body: String)
-      : Option[(String, String)] =
-    zmapStats(fs, body).range
-
-  /** Build the zone-map sidecar JSON (u57 key range + u65/u68 field
-    * stats) from an entry stream — ONE implementation shared by the
-    * commit writer and the u70 `ensure_stats` backfill so the two can
-    * never diverge. `None` for a doc = unparseable: the key still
-    * counts toward the range, field stats go partial (`fcap`).
-    */
-  private[sources] def zmapJson(mapper: ObjectMapper,
-      entries: Iterator[(String,
-        Option[com.fasterxml.jackson.databind.JsonNode])])
-      : com.fasterxml.jackson.databind.node.ObjectNode = {
-    var mn: String = null
-    var mx: String = null
-    val fstats = new java.util.LinkedHashMap[String, ZFieldAcc]()
-    var fcap = false
-    def see(path: String, v: com.fasterxml.jackson.databind.JsonNode)
-        : Unit = {
-      if (v.isNull) return
-      var acc = fstats.get(path)
-      if (acc == null) {
-        if (fstats.size >= ZmapMaxFields) { fcap = true; return }
-        acc = new ZFieldAcc(); fstats.put(path, acc)
-      }
-      acc.see(v)
-    }
-    entries.foreach { case (k, docOpt) =>
-      if (mn == null || PotV2Source.utf8Cmp(k, mn) < 0) mn = k
-      if (mx == null || PotV2Source.utf8Cmp(k, mx) > 0) mx = k
-      docOpt match {
-        case Some(doc) if doc != null && doc.isObject =>
-          doc.properties().asScala.foreach { f =>
-            see(f.getKey, f.getValue)
-            if (f.getValue.isObject)
-              f.getValue.properties().asScala.foreach(g =>
-                see(f.getKey + "." + g.getKey, g.getValue))
-          }
-        case Some(_) => () // non-object doc: no typed fields, stats stay
-        case None => fcap = true // unparseable: stats partial
-      }
-    }
-    val zo = mapper.createObjectNode()
-    zo.put("kmin", mn); zo.put("kmax", mx)
-    zo.put("fcap", fcap)
-    val fo = zo.putObject("fields")
-    fstats.asScala.foreach { case (p, acc) =>
-      val n = fo.putObject(p)
-      n.put("t", acc.tag.toString)
-      n.put("n", acc.n)
-      acc.tag match {
-        case 'i' => n.put("lmin", acc.lmin); n.put("lmax", acc.lmax)
-        case 's' => n.put("smin", acc.smin); n.put("smax", acc.smax)
-        case _ => ()
-      }
-    }
-    zo
-  }
-
-  /** u69 (r19): a DELTA generation's TOUCHED-KEY range sidecar —
-    * deliberately a different artifact family from the snapshot's
-    * `.zmap-` (u57): a dgen records the range of keys the epoch TOUCHED
-    * (upserts and tombstones both), not the state's zone map, so the
-    * u61 inventory and every snapshot-stats consumer stay snapshot-only
-    * by construction. */
-  def dzmapOf(body: String): Option[Path] = {
-    val p = new Path(body)
-    val name = p.getName
-    if (name.startsWith(".dgen-") && name.endsWith(".jsonl"))
-      Some(new Path(p.getParent,
-        ".dzmap-" + name.stripPrefix(".dgen-").stripSuffix(".jsonl")
-          + ".json"))
-    else None
-  }
-
-  /** The (kmin, kmax) touched range a dgen's sidecar declares; absence
-    * or tear reads None (no pruning, never wrong). */
-  def dzmapRange(fs: org.apache.hadoop.fs.FileSystem, body: String)
-      : Option[(String, String)] =
-    try dzmapOf(body).filter(fs.exists).flatMap { p =>
-      val in = fs.open(p)
-      val n = try new ObjectMapper().readTree(in) finally in.close()
-      for {
-        mn <- Option(n.get("kmin")).filter(_.isTextual).map(_.asText)
-        mx <- Option(n.get("kmax")).filter(_.isTextual).map(_.asText)
-      } yield (mn, mx)
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** u69 (r19) — CHAIN-UNION zone-map pruning for DELTA-HEADED pots: a
-    * key can exist in the folded chain state only if SOME generation in
-    * the head run touched it (the covering snapshot holds it, or a dgen
-    * upserted it; tombstones only shrink state — counting them is
-    * conservative). So when a pushed exact/IN/prefix key predicate
-    * misses the UNION of the covering snapshot's zone map and every
-    * dgen's touched range, the whole chain drops at planning and the
-    * per-read fold never runs. Evidence must be COMPLETE: a chain with
-    * no covering snapshot, or any generation lacking a parseable
-    * sidecar, admits (no pruning, never wrong). Cost: O(head run)
-    * marker+sidecar reads, paid only when a prunable predicate is
-    * pushed — the same order the fold itself would pay.
-    */
-  def deltaChainAdmits(fs: org.apache.hadoop.fs.FileSystem, commits: Path,
-      head: Long, exactKeys: Option[Seq[String]],
-      prefixKey: Option[String]): Boolean = {
-    if (exactKeys.isEmpty && prefixKey.isEmpty) return true
-    val (snap, dgens) = chainRun(fs, commits, head)
-    if (snap.isEmpty) return true
-    val snapRange = zmapRange(fs, snap.get)
-    if (snapRange.isEmpty) return true
-    val dgenRanges = dgens.map(dzmapRange(fs, _))
-    if (dgenRanges.exists(_.isEmpty)) return true
-    val ranges = snapRange.toSeq ++ dgenRanges.flatten
-    def keyIn(k: String): Boolean = ranges.exists { case (mn, mx) =>
-      PotV2Source.utf8Cmp(k, mn) >= 0 && PotV2Source.utf8Cmp(k, mx) <= 0
-    }
-    exactKeys.forall(_.exists(keyIn)) &&
-      prefixKey.forall(pfx => ranges.exists { case (mn, mx) =>
-        PotV2Source.prefixMeetsRange(pfx, mn, mx)
-      })
-  }
-
-  /** u65: cap on recorded field paths per sidecar — past it `fcap` marks
-    * the stats partial and absence-of-path stops pruning. */
-  val ZmapMaxFields = 32
-
-  /** u65 write-side accumulator for one field path: integral-only values
-    * type 'i' (long min/max), textual-only 's' (string min/max in the
-    * engine's unsigned UTF-8 order), anything else or mixed 'x' —
-    * present but untyped, which the reader NEVER prunes on. */
-  private[sources] final class ZFieldAcc {
-    var tag: Char = 0
-    var n: Long = 0L
-    var lmin: Long = Long.MaxValue
-    var lmax: Long = Long.MinValue
-    var smin: String = null
-    var smax: String = null
-    def see(v: com.fasterxml.jackson.databind.JsonNode): Unit = {
-      n += 1 // non-null sightings; == typed-extraction count iff tag pure
-      val t =
-        if (v.isIntegralNumber && v.canConvertToLong) 'i'
-        else if (v.isTextual) 's'
-        else 'x'
-      if (tag == 0) tag = t else if (tag != t) tag = 'x'
-      if (tag == 'x') { smin = null; smax = null; return }
-      if (t == 'i') {
-        lmin = math.min(lmin, v.asLong); lmax = math.max(lmax, v.asLong)
-      } else {
-        val s = v.asText
-        if (smin == null || PotV2Source.utf8Cmp(s, smin) < 0) smin = s
-        if (smax == null || PotV2Source.utf8Cmp(s, smax) > 0) smax = s
-      }
-    }
-  }
-
-  /** One field path's persisted statistics. `n` = non-null sightings
-    * (-1 when the sidecar predates the u68 count), exact per-type only
-    * when `tag` is pure. */
-  private[sources] case class ZField(tag: Char,
-      lmin: Long, lmax: Long, smin: String, smax: String, n: Long)
-
-  /** Everything a snapshot's zone-map sidecar declares: the key range
-    * (u57) and the per-field stats (u65). `fields = None` = a pre-r19 or
-    * absent/torn sidecar — field pruning fully disabled; `fcap` = stats
-    * partial, so absence-of-path admits. */
-  private[sources] case class ZStats(range: Option[(String, String)],
-      fields: Option[Map[String, ZField]], fcap: Boolean)
-
-  def zmapStats(fs: org.apache.hadoop.fs.FileSystem, body: String): ZStats =
-    try zmapOf(body).filter(fs.exists).map { p =>
-      val in = fs.open(p)
-      val n = try new ObjectMapper().readTree(in) finally in.close()
-      val range = for {
-        mn <- Option(n.get("kmin")).filter(_.isTextual).map(_.asText)
-        mx <- Option(n.get("kmax")).filter(_.isTextual).map(_.asText)
-      } yield (mn, mx)
-      val fields = Option(n.get("fields")).filter(_.isObject).map { fo =>
-        fo.properties().asScala.map { e =>
-          val f = e.getValue
-          val tag = Option(f.get("t")).map(_.asText).filter(_.length == 1)
-            .map(_.charAt(0)).getOrElse('x')
-          e.getKey -> ZField(tag,
-            Option(f.get("lmin")).map(_.asLong).getOrElse(Long.MaxValue),
-            Option(f.get("lmax")).map(_.asLong).getOrElse(Long.MinValue),
-            Option(f.get("smin")).map(_.asText).orNull,
-            Option(f.get("smax")).map(_.asText).orNull,
-            Option(f.get("n")).map(_.asLong).getOrElse(-1L))
-        }.toMap
-      }
-      // a sidecar with no fields node is pre-r19: treat as capped (no
-      // absence-based pruning); fcap missing beside fields = conservative
-      ZStats(range, fields,
-        Option(n.get("fcap")).forall(_.asBoolean(true)))
-    }.getOrElse(ZStats(None, None, fcap = true))
-    catch {
-      case scala.util.control.NonFatal(_) => ZStats(None, None, fcap = true)
-    }
-
-  /** u65 planning-time admit: can this snapshot possibly satisfy pushed
-    * filter `f` on a shredded column? `shredMap` = alias -> (paths,
-    * declared type). Conservative in every ambiguous direction: no
-    * stats / depth > 2 / mixed-typed path / capped-absence => admit.
-    * The sharp edges, each exact by the [[PotV2Source.shredValue]]
-    * extraction contract (String only from textual, Long only from
-    * integral, null otherwise):
-    *   - path recorded with the MATCHING type: range/equality compare
-    *     against min/max;
-    *   - path recorded with a PURE OTHER type: every extraction is null
-    *     — nothing matches equality/range/IsNotNull;
-    *   - path ABSENT and stats not capped: the field never carried a
-    *     typed scalar anywhere in the object — same conclusion.
-    */
-  private[sources] def shredFilterAdmits(
-      f: org.apache.spark.sql.sources.Filter,
-      shredMap: Map[String, (Seq[String], org.apache.spark.sql.types.DataType)],
-      stats: ZStats): Boolean = {
-    import org.apache.spark.sql.sources._
-    val fieldsOpt = stats.fields
-    if (fieldsOpt.isEmpty) return true
-    val fields = fieldsOpt.get
-    def lookup(alias: String)
-        : Option[(Option[ZField], org.apache.spark.sql.types.DataType)] =
-      shredMap.get(alias).flatMap { case (paths, t) =>
-        if (paths.length > 2) None // stats cover depth <= 2 only
-        else Some((fields.get(paths.mkString(".")), t))
-      }
-    def tagOf(t: org.apache.spark.sql.types.DataType): Char = t match {
-      case org.apache.spark.sql.types.LongType => 'i'
-      case org.apache.spark.sql.types.StringType => 's'
-      case _ => 'x'
-    }
-    // could any row's extraction be NON-NULL at all?
-    def anyTyped(zf: Option[ZField], t: Char): Boolean = zf match {
-      case None => stats.fcap // absent + complete stats = never non-null
-      case Some(z) => z.tag == 'x' || z.tag == t
-    }
-    def longRangeMeets(zf: Option[ZField], lo: Long, hi: Long): Boolean =
-      zf match {
-        case Some(z) if z.tag == 'i' => z.lmin <= hi && lo <= z.lmax
-        case other => anyTyped(other, 'i')
-      }
-    def strInRange(zf: Option[ZField], v: String): Boolean = zf match {
-      case Some(z) if z.tag == 's' && z.smin != null && z.smax != null =>
-        PotV2Source.utf8Cmp(v, z.smin) >= 0 &&
-          PotV2Source.utf8Cmp(v, z.smax) <= 0
-      case other => anyTyped(other, 's')
-    }
-    def longLit(v: Any): Option[Long] = PotV2Filters.longLit(v)
-    f match {
-      case EqualTo(a, v) => lookup(a) match {
-        case Some((zf, t)) => tagOf(t) match {
-          case 'i' => longLit(v) match {
-            case Some(l) => longRangeMeets(zf, l, l)
-            case None => true
-          }
-          case 's' => v match {
-            case sv: String => strInRange(zf, sv)
-            case _ => true
-          }
-          case _ => true
-        }
-        case None => true
-      }
-      case In(a, vs) => lookup(a) match {
-        case Some((zf, t)) => tagOf(t) match {
-          case 'i' =>
-            val ls = vs.toSeq.flatMap(longLit)
-            ls.length != vs.length || ls.exists(l => longRangeMeets(zf, l, l))
-          case 's' =>
-            val ss = vs.toSeq.collect { case s: String => s }
-            ss.length != vs.length || ss.exists(strInRange(zf, _))
-          case _ => true
-        }
-        case None => true
-      }
-      case IsNotNull(a) => lookup(a) match {
-        case Some((zf, t)) if tagOf(t) != 'x' => anyTyped(zf, tagOf(t))
-        case _ => true
-      }
-      case GreaterThan(a, v) => lookup(a) match {
-        case Some((zf, t)) if tagOf(t) == 'i' => longLit(v) match {
-          case Some(l) if l < Long.MaxValue =>
-            longRangeMeets(zf, l + 1, Long.MaxValue)
-          case Some(_) => false // x > Long.MaxValue matches nothing
-          case None => true
-        }
-        case _ => true
-      }
-      case GreaterThanOrEqual(a, v) => lookup(a) match {
-        case Some((zf, t)) if tagOf(t) == 'i' => longLit(v) match {
-          case Some(l) => longRangeMeets(zf, l, Long.MaxValue)
-          case None => true
-        }
-        case _ => true
-      }
-      case LessThan(a, v) => lookup(a) match {
-        case Some((zf, t)) if tagOf(t) == 'i' => longLit(v) match {
-          case Some(l) if l > Long.MinValue =>
-            longRangeMeets(zf, Long.MinValue, l - 1)
-          case Some(_) => false
-          case None => true
-        }
-        case _ => true
-      }
-      case LessThanOrEqual(a, v) => lookup(a) match {
-        case Some((zf, t)) if tagOf(t) == 'i' => longLit(v) match {
-          case Some(l) => longRangeMeets(zf, Long.MinValue, l)
-          case None => true
-        }
-        case _ => true
-      }
-      case _ => true
-    }
-  }
-
-  /** u68 (r19) — STATS-ONLY AGGREGATE: can the sidecar stats plus the
-    * name-stamped exact row count answer a pushed aggregation outright,
-    * so the reader never opens the object? Returns the kind-parallel
-    * fold results (raw values: Long counts, String/Long extremes, null
-    * where SQL says null) when EVERY kind is answerable EXACTLY; None
-    * means open-and-fold. Exactness per kind, each by the write-side
-    * contract (sidecar written from the same entries map the fold would
-    * walk, key extremes in unsigned UTF-8 order, field stats typed by
-    * the [[PotV2Source.shredValue]] classification):
-    *   - COUNT(*) = the `-r<N>` name stamp;
-    *   - MIN/MAX(key) = the sidecar kmin/kmax;
-    *   - COUNT(field) = the field's `n` iff its tag is PURE and matches
-    *     the declared type (every sighting was a typed extraction);
-    *     a pure-OTHER-typed or provably-absent field counts 0;
-    *   - MIN/MAX(field) = the typed extremes under the same purity rule;
-    *     pure-other/absent = null (no non-null extraction exists).
-    * Anything ambiguous — mixed 'x' tag, capped stats with the path
-    * absent, pre-u68 sidecar without `n`, malformed extremes — returns
-    * None and the object is opened (never wrong, exactly the u65
-    * conservatism). Callers gate on row-dropping predicates themselves.
-    */
-  private[sources] def statsAnswer(
-      kinds: Seq[PotV2Source.PotAgg],
-      rows: Long,
-      stats: ZStats,
-      shredMap: Map[String, (Seq[String], org.apache.spark.sql.types.DataType)])
-      : Option[Seq[Any]] = {
-    import org.apache.spark.sql.types.{LongType, StringType}
-    if (rows == 0L) return Some(kinds.map {
-      case PotV2Source.AggCount => 0L
-      case PotV2Source.AggCountShred(_) => 0L
-      case _ => null
-    })
-    def tagOf(t: org.apache.spark.sql.types.DataType): Char = t match {
-      case LongType => 'i'
-      case StringType => 's'
-      case _ => 'x'
-    }
-    // Some(Some(z)) = recorded pure-and-matching (extremes sane);
-    // Some(None) = provably never a non-null typed extraction;
-    // None = unanswerable
-    def field(alias: String): Option[Option[ZField]] =
-      shredMap.get(alias).flatMap { case (paths, t) =>
-        if (paths.length > 2 || tagOf(t) == 'x') None
-        else stats.fields.flatMap { fm =>
-          fm.get(paths.mkString(".")) match {
-            case Some(z) if z.tag == tagOf(t) =>
-              val sane =
-                if (z.tag == 'i') z.lmin <= z.lmax
-                else z.smin != null && z.smax != null
-              if (sane) Some(Some(z)) else None
-            case Some(z) if z.tag != 'x' => Some(None) // pure other type
-            case Some(_) => None                       // mixed: open
-            case None => if (stats.fcap) None else Some(None)
-          }
-        }
-      }
-    val vals: Seq[Option[Any]] = kinds.map {
-      case PotV2Source.AggCount => Some(rows)
-      case PotV2Source.AggMinKey => stats.range.map(_._1)
-      case PotV2Source.AggMaxKey => stats.range.map(_._2)
-      case PotV2Source.AggCountShred(f) => field(f).flatMap {
-        case Some(z) => if (z.n >= 0L) Some(z.n) else None // pre-u68: open
-        case None => Some(0L)
-      }
-      case PotV2Source.AggMinShred(f, _) => field(f).map {
-        case Some(z) =>
-          if (z.tag == 'i') (z.lmin: java.lang.Long) else z.smin
-        case None => null
-      }
-      case PotV2Source.AggMaxShred(f, _) => field(f).map {
-        case Some(z) =>
-          if (z.tag == 'i') (z.lmax: java.lang.Long) else z.smax
-        case None => null
-      }
-    }
-    if (vals.exists(_.isEmpty)) None else Some(vals.map(_.get))
-  }
-
-  // r16: every commit embeds its row statistics in the artifact NAME —
-  // `.snap-<stem>-r<entries>.json` / `.dgen-<stem>-u<upserts>d<dels>.jsonl`
-  // — so marker bodies stay the bare paths every reader parses while
-  // estimateStatistics().numRows becomes answerable from the chain alone
-  // (no data read). The name is decided before the CAS, so the count is
-  // atomic with the commit; legacy artifacts simply report no count.
-  private val SnapRowsRe = "-r([0-9]+)\\.json$".r
-  private val DgenCountsRe = "-u([0-9]+)d([0-9]+)\\.jsonl$".r
-
-  /** Exact entry count a `.snap-` artifact carries in its name. */
-  def snapRows(body: String): Option[Long] =
-    SnapRowsRe.findFirstMatchIn(new Path(body).getName)
-      .map(_.group(1).toLong)
-
-  /** (upsert lines, tombstone lines) a `.dgen-` artifact carries. */
-  def dgenCounts(body: String): Option[(Long, Long)] =
-    DgenCountsRe.findFirstMatchIn(new Path(body).getName)
-      .map(m => (m.group(1).toLong, m.group(2).toLong))
-
-  /** BACKWARD chain walk to the covering snapshot (r16): the
-    * (snapshot body, dgen bodies above it oldest-first) pair every
-    * fold/stats consumer needs, at O(dgen run) marker reads instead of
-    * O(chain) — at 100 TB a long-lived pot's chain has thousands of
-    * generations but its head run is bounded by the compaction
-    * threshold, and planning-time stats must not read every marker
-    * ever committed. A chain headed by dgens with NO covering snapshot
-    * returns (None, run) — callers treat it as the legacy/invalid shape
-    * they already handle.
-    */
-  def chainRun(fs: org.apache.hadoop.fs.FileSystem, commits: Path,
-      g: Long): (Option[String], Seq[String]) = {
-    val (snap, dgens) = chainRunG(fs, commits, g)
-    (snap.map(_._1), dgens.map(_._1))
-  }
-
-  /** [[chainRun]] pairing each body with the GENERATION whose marker
-    * named it — the markers are read during the walk anyway, so
-    * provenance consumers ([[stateAtWithGen]], the `_pot_gen` metadata
-    * column) get generation numbers at zero extra marker reads.
-    */
-  def chainRunG(fs: org.apache.hadoop.fs.FileSystem, commits: Path,
-      g: Long): (Option[(String, Long)], Seq[(String, Long)]) = {
-    val gens = graft.kv.CommitMarker.committedGenerations(fs, commits)
-      .filter(_ <= g).sorted.reverse
-    val dgens = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    gens.foreach { gen =>
-      val body = artifactOf(fs, commits, gen)
-      if (isSnap(body)) return (Some((body, gen)), dgens.reverse.toSeq)
-      require(isDgen(body),
-        s"pot chain: generation artifact above the covering snapshot " +
-          s"must be a delta: $body")
-      dgens += ((body, gen))
-    }
-    (None, dgens.reverse.toSeq)
-  }
-
-  /** Row-count ESTIMATE of the state at generation g, from artifact
-    * names only: the covering snapshot's exact count folded with each
-    * dgen's `+upserts −tombstones`. Exact for snapshot heads; an
-    * UPPER-leaning estimate for delta heads (a dgen upsert of an
-    * existing key does not grow the state, a tombstone of an absent key
-    * does not shrink it) — the right bias for a planner statistic. None
-    * when any needed artifact predates the r16 stamp. O(dgen run)
-    * marker reads via [[chainRun]].
-    */
-  def rowsAt(fs: org.apache.hadoop.fs.FileSystem, commits: Path,
-      g: Long): Option[Long] = {
-    val (snap, dgens) = chainRun(fs, commits, g)
-    snap.flatMap(snapRows).flatMap { base =>
-      dgens.foldLeft(Option(base)) { (acc, b) =>
-        acc.flatMap(r => dgenCounts(b).map { case (u, d) =>
-          math.max(0L, r + u - d)
-        })
-      }
-    }
-  }
-
-  /** The artifact body of one committed generation. */
-  def artifactOf(fs: org.apache.hadoop.fs.FileSystem, commits: Path,
-      g: Long): String =
-    graft.kv.CommitMarker.read(fs, new Path(commits, g.toString))
-
-  /** Fold the chain into the full key→doc state at generation g.
-    * Cost: one snapshot load + the delta generations above it. Throws
-    * FileNotFoundException if a needed body was vacuumed mid-read
-    * (callers treat it as conflict-equivalent and retry, or fail loudly
-    * for pinned reads — the retention contract).
-    */
-  def stateAt(fs: org.apache.hadoop.fs.FileSystem, commits: Path, g: Long)
-      : java.util.LinkedHashMap[String, String] = {
-    val withGen = stateAtWithGen(fs, commits, g)
-    val state = new java.util.LinkedHashMap[String, String]()
-    withGen.entrySet().asScala.foreach(e =>
-      state.put(e.getKey, e.getValue._1))
-    state
-  }
-
-  /** [[stateAt]] carrying per-key GENERATION PROVENANCE: the generation
-    * whose committed artifact SUPPLIED the surviving row — the covering
-    * snapshot's generation for rows it folded (compaction forgets the
-    * original writer, exactly like Delta's `_commit_version` after
-    * OPTIMIZE), the dgen's generation for rows a delta wrote above it.
-    * Feeds the `_pot_gen` metadata column (u32); the generation number
-    * of each chainRun body is recovered from its commit marker position
-    * (markers are read anyway — zero extra IO).
-    */
-  def stateAtWithGen(fs: org.apache.hadoop.fs.FileSystem, commits: Path,
-      g: Long): java.util.LinkedHashMap[String, (String, Long)] = {
-    val mapper = new ObjectMapper()
-    // backward walk (r16): the fold reads the covering snapshot + the
-    // dgen run above it — O(run) marker reads, never O(chain); the
-    // generation of each body rides along from the walk's own marker
-    // reads (chainRunG), NOT a second full-chain marker scan
-    val (snap, dgens) = chainRunG(fs, commits, g)
-    val state = new java.util.LinkedHashMap[String, (String, Long)]()
-    snap.foreach { case (body, bodyGen) =>
-      val in = fs.open(new Path(body))
-      val root = try mapper.readTree(in) finally in.close()
-      require(root != null && root.isObject,
-        s"pot snapshot $body: top level must be a JSON map")
-      root.fields().asScala.foreach(e =>
-        state.put(e.getKey, (e.getValue.toString, bodyGen)))
-    }
-    dgens.foreach { case (body, bodyGen) =>
-      val in = fs.open(new Path(body))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).foreach { line =>
-          val n = mapper.readTree(line)
-          val d = n.get("d")
-          if (d == null || d.isNull) state.remove(n.get("k").asText())
-          else state.put(n.get("k").asText(), (d.toString, bodyGen))
-        }
-      finally in.close()
-    }
-    state
-  }
-}
-
 /** Thrown when a pot-object write would exceed its size ceiling: one pot
   * is a DRIVER-MEMORY unit (the reference's whole-object RMW), so growth
   * past the ceiling means the data has outgrown the single-object model —
@@ -1319,15 +748,15 @@ private[sources] class PotV2Table(path: String,
   /** SQL `DELETE FROM pot WHERE ...` (u18) — the reference's DELETE verb
     * (`server_routes.go` remove) as catalog DML, completing the SQL
     * surface: INSERT (u15) writes generations, DELETE removes keys. A
-    * delete is a truncate-REWRITE commit: survivors of the head object
-    * re-stage as one fragment and commit as generation head+1 through
-    * the same merge-snapshot-CAS core, so dropped keys become change-feed
+    * delete is one snapshot commit with no fragments: the commit drops
+    * the keys the filters match from the head state it loaded and
+    * publishes the rest as generation head+1 through the same
+    * merge-snapshot-CAS core, so dropped keys become change-feed
     * TOMBSTONES via the delta sidecar (a mirror, st19, propagates them)
-    * and vacuum/ceiling/retry semantics are u14's verbatim. The commit
-    * pins `expectedHeadGen`: survivors derive from generation G, so a
-    * concurrent writer landing G+1 first makes this a loud
-    * CommitConflict — never a silent resurrection of deleted state over
-    * the concurrent write. Shapes that cannot be evaluated exactly
+    * and vacuum/ceiling semantics are u14's verbatim. The pot is parsed
+    * once, and the keys dropped are exactly those of the state the CAS
+    * publishes over; a concurrent writer winning that generation makes
+    * this a loud CommitConflict. Shapes that cannot be evaluated exactly
     * against (pot_file, key) decline (`canDeleteWhere` false); the
     * analyzer then falls back to the row-level SupportsDelta rewrite
     * ([[PotRowLevelOperation]]) which deletes by scanned content —
@@ -1339,78 +768,13 @@ private[sources] class PotV2Table(path: String,
 
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    import java.nio.charset.StandardCharsets.UTF_8
-    val target = new Path(path)
-    val fs = target.getFileSystem(conf)
-    val dir = target.getParent
-    val commits = new Path(dir, ".commits")
-    val mapper = new ObjectMapper()
-    // head-snapshot load gets the SAME FileNotFound-as-conflict treatment
-    // as commitEntries/refreshMaterialization: if a concurrent commit
-    // supersedes the head and vacuum deletes its body mid-read, retry
-    // against the new head (survivors then derive from it and the pinned
-    // expectedHeadGen moves with it) — never a raw FileNotFoundException
-    // out of a SQL DELETE
-    var head: Option[(Long, String)] = None
-    val entries = new java.util.LinkedHashMap[String, String]()
-    var loaded = false
-    var loadAttempts = 0
-    while (!loaded) {
-      loadAttempts += 1
-      head = PotV2Write.latestSnapshot(fs, commits)
-      entries.clear()
-      try {
-        head match {
-          case Some((g, body)) =>
-            // fold when the head is a delta generation (streaming
-            // epochs since the last compaction); direct load otherwise
-            if (PotChain.isSnap(body)) {
-              val in = fs.open(new Path(body))
-              val root = try mapper.readTree(in) finally in.close()
-              require(root != null && root.isObject,
-                s"pot object $body: top level must be a JSON map")
-              root.fields().asScala.foreach(e =>
-                entries.put(e.getKey, e.getValue.toString))
-            } else entries.putAll(PotChain.stateAt(fs, commits, g))
-          case None if fs.exists(target) =>
-            val in = fs.open(target)
-            val root = try mapper.readTree(in) finally in.close()
-            require(root != null && root.isObject,
-              s"pot object $target: top level must be a JSON map")
-            root.fields().asScala.foreach(e =>
-              entries.put(e.getKey, e.getValue.toString))
-          case None => ()
-        }
-        loaded = true
-      } catch {
-        case e: java.io.FileNotFoundException if loadAttempts < 5 =>
-          // superseded + vacuumed mid-read: a newer head exists — retry
-          ()
-        case _: java.io.FileNotFoundException =>
-          throw new graft.kv.PotTable.CommitConflict(
-            s"pot object $path: head snapshot kept vanishing mid-read " +
-              "(concurrent commits + vacuum) — re-run the statement")
-      }
-    }
-    val survivors = entries.asScala.filterNot { case (k, _) =>
-      PotV2Filters.accepts(filters, "key", k) &&
-        PotV2Filters.accepts(filters, "pot_file", path)
-    }
     val w = new PotV2Write(path, PotV2Source.Schema,
-      java.util.UUID.randomUUID().toString, truncateFirst = true,
+      java.util.UUID.randomUUID().toString, truncateFirst = false,
       conf = conf)
-    val staging = new Path(w.stagingBase)
-    fs.mkdirs(staging)
-    val frag = new Path(staging, "delete-rewrite.jsonl")
-    val out = fs.create(frag, false)
-    try survivors.foreach { case (k, dj) =>
-      out.write(
-        s"""{"k":${mapper.writeValueAsString(k)},"d":$dj}""".getBytes(UTF_8))
-      out.write('\n')
-    } finally out.close()
-    w.commitEntries(Array(PotFragmentMessage(0, frag.toString)),
-      truncate = true, snapTag = None, retryOnConflict = false,
-      staging = staging, expectedHeadGen = Some(head.map(_._1).getOrElse(0L)))
+    w.commitEntries(Array.empty, truncate = false, snapTag = None,
+      retryOnConflict = false, staging = new Path(w.stagingBase),
+      drop = Some(k => PotV2Filters.accepts(filters, "key", k) &&
+        PotV2Filters.accepts(filters, "pot_file", path)))
   }
 }
 
@@ -2529,6 +1893,11 @@ private[sources] class PotV2ReaderFactory(
       val sv = svalsOf(node)
       if (docKeep(sv)) Some(sv) else { docSkipped += 1; None }
     }
+    // the partition's whole object, parsed as one tree
+    def readObject() = {
+      val p = new Path(file)
+      PotChain.readObject(p.getFileSystem(conf.value.value), p)
+    }
     // state partitions fold their chain executor-side; key predicates
     // still prune the emitted entries (the fold itself is whole-state by
     // definition — that is what a delta-headed chain costs to resolve).
@@ -2565,10 +1934,6 @@ private[sources] class PotV2ReaderFactory(
         // (count 0, min/max NULL — the u49 empty discipline, which for
         // shred aggs also covers the all-null-field case per SQL).
         private var emitted = false
-        private val utf8: java.util.Comparator[String] =
-          (x: String, y: String) => java.util.Arrays.compareUnsigned(
-            x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         // per-kind fold state, parallel to aggKinds (n doubles as the
         // grouped emit decision)
         private var n = 0L
@@ -2577,14 +1942,14 @@ private[sources] class PotV2ReaderFactory(
         private val shredState = new Array[Any](aggKinds.length)
         private val shredCount = new Array[Long](aggKinds.length)
         private def less(a: Any, b: Any): Boolean = (a, b) match {
-          case (x: String, y: String) => utf8.compare(x, y) < 0
+          case (x: String, y: String) => PotV2Source.utf8Cmp(x, y) < 0
           case (x: java.lang.Long, y: java.lang.Long) => x < y
           case _ => false
         }
         private def fold(key: String, sv: Array[Any]): Unit = {
           n += 1
-          if (mnKey == null || utf8.compare(key, mnKey) < 0) mnKey = key
-          if (mxKey == null || utf8.compare(key, mxKey) > 0) mxKey = key
+          if (mnKey == null || PotV2Source.utf8Cmp(key, mnKey) < 0) mnKey = key
+          if (mxKey == null || PotV2Source.utf8Cmp(key, mxKey) > 0) mxKey = key
           var i = 0
           while (i < aggKinds.length) {
             aggKinds(i) match {
@@ -2641,14 +2006,7 @@ private[sources] class PotV2ReaderFactory(
             foldedEntries(sp).foreach(e => fold(e.key, e.sv))
           case _ if tryStatsOnly() => ()
           case _ =>
-            val p = new Path(file)
-            val fs = p.getFileSystem(conf.value.value)
-            val in = fs.open(p)
-            val root = try new ObjectMapper().readTree(in)
-              finally in.close()
-            require(root != null && root.isObject,
-              s"pot object $file: top level must be a JSON map")
-            root.fields().asScala.foreach { e =>
+            readObject().fields().asScala.foreach { e =>
               if (keyKeep(e.getKey)) {
                 if (shred.isEmpty) fold(e.getKey, PotV2ReaderFactory.NoSvals)
                 else nodeAdmit(e.getValue).foreach(sv => fold(e.getKey, sv))
@@ -2682,46 +2040,12 @@ private[sources] class PotV2ReaderFactory(
       case None => // fall through to the row reader below
     }
     new PartitionReader[InternalRow] {
-      // open streaming parser, if any — closed on early stop via close()
-      private var openParser: com.fasterxml.jackson.core.JsonParser = null
-      // Streaming entry source for a snapshot object (r15, limit path):
-      // Jackson token parsing emits entries incrementally, so a pushed
-      // LIMIT stops PARSING after its k survivors instead of building the
-      // whole tree first. Documents are kept as JsonNode until selection
-      // decides a row survives (stringification is the dominant cost).
-      def streamedFields(p: Path)
-          : Iterator[(String, com.fasterxml.jackson.databind.JsonNode)] = {
-        val fs = p.getFileSystem(conf.value.value)
-        val mapper = new ObjectMapper()
-        val parser = mapper.getFactory.createParser(
-          fs.open(p): java.io.InputStream)
-        openParser = parser
-        require(parser.nextToken() ==
-            com.fasterxml.jackson.core.JsonToken.START_OBJECT,
-          s"pot object $file: top level must be a JSON map")
-        new Iterator[(String, com.fasterxml.jackson.databind.JsonNode)] {
-          private var nextKey: String = null
-          private var done = false
-          private def advance(): Unit = {
-            while (nextKey == null && !done) {
-              val t = parser.nextToken()
-              if (t == null ||
-                  t == com.fasterxml.jackson.core.JsonToken.END_OBJECT) {
-                done = true; parser.close()
-              } else nextKey = parser.currentName()
-            }
-          }
-          override def hasNext: Boolean = { advance(); nextKey != null }
-          override def next()
-              : (String, com.fasterxml.jackson.databind.JsonNode) = {
-            advance()
-            val k = nextKey
-            nextKey = null
-            parser.nextToken() // position on the value
-            k -> mapper.readTree[com.fasterxml.jackson.databind.JsonNode](
-              parser)
-          }
-        }
+      // the LIMIT/TopN path's open stream, if any — closed on early stop
+      private var openStream: PotChain.ObjectStream = null
+      private def streamed(): PotChain.ObjectStream = {
+        val p = new Path(file)
+        openStream = PotChain.streamObject(p.getFileSystem(conf.value.value), p)
+        openStream
       }
       // admit a (key, node): key predicates, then doc-field predicates on
       // extracted shred values (u45) — the body stringifies ONLY for
@@ -2738,18 +2062,11 @@ private[sources] class PotV2ReaderFactory(
           case _ if pushedLimit.isDefined && pushedTopN.isEmpty =>
             // limit path: stream + early stop (the take() below closes
             // the parse after k survivors — O(k) parse, not O(object))
-            streamedFields(new Path(file))
-              .flatMap(e => admit(e._1, e._2))
+            streamed().flatMap(e => admit(e._1, e._2))
           case _ =>
-            val p = new Path(file)
-            val fs = p.getFileSystem(conf.value.value)
-            val in = fs.open(p)
-            val root = try new ObjectMapper().readTree(in) finally in.close()
-            require(root != null && root.isObject,
-              s"pot object $file: top level must be a JSON map")
             // key predicates filter BEFORE toString — a point read of one
             // key in a 100k-entry pot never stringifies the other bodies
-            root.fields().asScala
+            readObject().fields().asScala
               .flatMap(e => admit(e.getKey, e.getValue))
         }
       private val entries: Iterator[PotEntry] = pushedTopN match {
@@ -2763,10 +2080,7 @@ private[sources] class PotV2ReaderFactory(
           // (UTF-16 code units) would rank supplementary characters
           // (surrogates 0xD800-0xDFFF) BELOW BMP chars >= U+E000 and a
           // partial top-k could evict a true global winner (ADVICE r15).
-          val utf8: java.util.Comparator[String] =
-            (x: String, y: String) => java.util.Arrays.compareUnsigned(
-              x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-              y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          val utf8: java.util.Comparator[String] = PotV2Source.utf8Cmp(_, _)
           val ord = if (asc) utf8 else utf8.reversed()
           val sel = new java.util.TreeMap[String, (String, Long, Array[Any])](ord)
           partition match {
@@ -2776,8 +2090,7 @@ private[sources] class PotV2ReaderFactory(
                 if (sel.size > k) sel.pollLastEntry()
               }
             case _ =>
-              streamedFields(new Path(file))
-                .filter(e => keyKeep(e._1))
+              streamed().filter(e => keyKeep(e._1))
                 .foreach { case (key, node) =>
                   // admit before stringify (key selection AND doc-field
                   // predicates); evict the current worst
@@ -2828,8 +2141,7 @@ private[sources] class PotV2ReaderFactory(
       }
       override def get(): InternalRow = row
       override def currentMetricsValues() = taskMetrics()
-      override def close(): Unit =
-        if (openParser != null && !openParser.isClosed) openParser.close()
+      override def close(): Unit = if (openStream != null) openStream.close()
     }
   }
 }
@@ -2982,7 +2294,10 @@ private[graft] class PotV2Write(
     new Path(s"$stagingBase-e$epochId")
 
   /** One merge-and-CAS attempt cycle, shared by the batch and streaming
-    * commit paths.
+    * commit paths: load the head state, fold this commit's fragments
+    * onto it ([[PotChain.foldChanges]]), write the merged snapshot with
+    * its `.delta-` and `.zmap-` sidecars, and CAS it as generation
+    * head+1. The artifacts' formats are [[PotChain]]'s.
     *
     * `snapTag`, when given, makes the commit IDEMPOTENT per tag (the
     * AnnIndex.append discipline): the tag is embedded in the snapshot
@@ -2998,20 +2313,26 @@ private[graft] class PotV2Write(
     * lost-update-free because the merge base is re-read every attempt,
     * and an epoch must not fail the whole stream just because an
     * external writer took a generation.
-    */
-  /** Returns the GENERATION this commit actually published (or, for a
+    *
+    * `expectedHeadGen` pins the head a caller's intent was computed
+    * against (a row-level op's scan): a head that moved is a conflict,
+    * never stale intent applied over a concurrent writer's generation.
+    * `drop` removes the keys it accepts from the merge base (SQL DELETE):
+    * the keys dropped are those of the head this attempt loaded.
+    *
+    * Returns the GENERATION this commit actually published (or, for a
     * replayed tagged epoch, the generation it adopted) — threaded out so
     * CALL verbs report their own fold's generation, never a head re-read
     * that a concurrent writer may have advanced past it (r18 ADVICE). */
   private[graft] def commitEntries(
       messages: Array[WriterCommitMessage], truncate: Boolean,
       snapTag: Option[String], retryOnConflict: Boolean,
-      staging: Path, expectedHeadGen: Option[Long] = None): Long = {
+      staging: Path, expectedHeadGen: Option[Long] = None,
+      drop: Option[String => Boolean] = None): Long = {
     val target = new Path(path)
     val fs = target.getFileSystem(conf)
     val dir = target.getParent
     val commits = new Path(dir, ".commits")
-    val mapper = new ObjectMapper()
 
     def attempt(): Option[Long] = {
       // replayed epoch: adopt the generation the earlier run committed
@@ -3019,102 +2340,24 @@ private[graft] class PotV2Write(
         val g = genOfTag(fs, commits, t)
         if (g.isDefined) return g
       }
-      // LinkedHashMap: first-seen key keeps its slot, later put = LWW value
-      def loadObject(p: Path,
-          into: java.util.LinkedHashMap[String, String]): Unit = {
-        val in = fs.open(p)
-        val root = try mapper.readTree(in) finally in.close()
-        require(root != null && root.isObject,
-          s"pot object $p: top level must be a JSON map")
-        root.fields().asScala.foreach(e =>
-          into.put(e.getKey, e.getValue.toString))
-      }
-      // The chain head is read ONCE per attempt and pins BOTH the merge
-      // base and the target generation (head+1): a concurrent commit
-      // landing in between makes our publish a CommitConflict, never a
-      // silent lost update.
-      val head = PotV2Write.latestSnapshot(fs, commits)
-      // a caller whose INTENT was computed against a specific head (the
-      // SQL DELETE rewrite: survivors derive from generation G, so the
-      // commit must land at exactly G+1) pins it here — a head that moved
-      // is a conflict, NEVER a silent apply of stale intent over a
-      // concurrent writer's generation
-      expectedHeadGen.foreach { e =>
-        if (head.map(_._1).getOrElse(0L) != e)
-          throw new graft.kv.PotTable.CommitConflict(
-            s"pot object $path: head moved to generation " +
-              s"${head.map(_._1).getOrElse(0L)} while a rewrite computed " +
-              s"against generation $e was in flight — re-run the statement")
-      }
-      // size ceiling, checked BEFORE the driver materializes the object:
-      // the COVERING SNAPSHOT's file length bounds the fold (delta
-      // generations above it are change-set sized), so a pot that has
-      // outgrown driver memory fails loudly with the migration path
-      // instead of OOMing mid-merge
-      head.foreach { case (g, body) =>
-        val snapPath =
-          if (PotChain.isSnap(body)) Some(body)
-          else PotChain.chainRun(fs, commits, g)._1
-        snapPath.foreach { snap =>
-          val len = fs.getFileStatus(new Path(snap)).getLen
-          if (len > maxObjectBytes)
-            throw new PotTooLarge(
-              s"pot object $path: merge base is $len bytes, over the " +
-                s"$maxObjectBytes ceiling — a pot is a driver-memory unit; " +
-                "migrate to graft.kv.BucketedPotTable (hash-bucketed keys, " +
-                "distributed merge) or split across more pot objects " +
-                "(raise with .option(\"maxObjectBytes\", n) only if the " +
-                "driver really has the headroom)")
-        }
-      }
-      // prevDelta = the head state's content — the change-feed BASE for
-      // this generation's delta sidecar. Distinct from the merge base:
-      // truncate merges from empty but still diffs against the head (so
-      // dropped keys become tombstones); the gen-1 legacy-adoption case
-      // merges from a pre-connector data.json but diffs against EMPTY
-      // (the feed's snapshot(0), so every adopted key is an upsert).
-      // A head that is a DELTA generation folds its chain (covering
-      // snapshot + dgens) — snapshot commits above a streaming epoch run
-      // therefore COMPACT the chain.
-      val prevDelta = new java.util.LinkedHashMap[String, String]()
-      try head.foreach { case (g, body) =>
-        if (PotChain.isSnap(body)) loadObject(new Path(body), prevDelta)
-        else prevDelta.putAll(PotChain.stateAt(fs, commits, g))
-      } catch {
-        // the head we pinned was superseded AND its body vacuumed while
-        // we were loading it (vacuumSnapshots only deletes below-head
-        // bodies, so a newer head exists) — a conflict-equivalent: retry
-        // the attempt against the new head; no CAS was lost
-        case _: java.io.FileNotFoundException => return None
-      }
+      val (head, state) = loadHead()
+      // the change-feed BASE is the head state; a first commit adopting a
+      // pre-connector data.json diffs against EMPTY (the feed's
+      // snapshot(0)), so every adopted key is an upsert. Truncate merges
+      // from empty but still diffs against the head, so dropped keys
+      // become tombstones.
+      val prev =
+        if (head.isDefined) state else new java.util.LinkedHashMap[String, String]()
       val entries = new java.util.LinkedHashMap[String, String]()
-      if (!truncate) {
-        if (head.isDefined) entries.putAll(prevDelta)
-        else if (fs.exists(target)) loadObject(target, entries)
+      if (!truncate) entries.putAll(state)
+      // a DELETE's survivors keep the order SQL DELETE has always written
+      // them in: a scala mutable.HashMap's, not the pot's layout order
+      drop.foreach { d =>
+        val kept = entries.asScala.filterNot { case (k, _) => d(k) }
+        entries.clear()
+        kept.foreach { case (k, v) => entries.put(k, v) }
       }
-      // Two-phase fold: ALL tombstones apply before ANY upsert. A null
-      // doc is a fragment-level TOMBSTONE (the delta write path's delete
-      // and rename rows — same convention as the change-feed sidecar);
-      // under MERGE semantics the only key touched by both a tombstone
-      // and an upsert in ONE statement is a rename target/source, and
-      // removals-first resolves every such collision (key swaps
-      // included) independent of partition interleaving. Upserts keep
-      // their partition-then-line order — the kv1 LWW contract.
-      val frags = messages.collect { case m: PotFragmentMessage => m }
-        .sortBy(_.partitionId)
-      val upserts = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      frags.foreach { m =>
-        val in = fs.open(new Path(m.fragment))
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).foreach { line =>
-            val n = mapper.readTree(line)
-            val dn = n.get("d")
-            if (dn == null || dn.isNull) entries.remove(n.get("k").asText())
-            else upserts += ((n.get("k").asText(), dn.toString))
-          }
-        finally in.close()
-      }
-      upserts.foreach { case (k, v) => entries.put(k, v) }
+      PotChain.foldChanges(fs, messages)(entries.remove(_), entries.put(_, _))
       // and the MERGED size (base + this write's fragments) before the
       // snapshot hits disk — the ceiling is on the object, not the base
       val mergedBytes = entries.entrySet().asScala.iterator
@@ -3125,80 +2368,20 @@ private[graft] class PotV2Write(
             s"over the $maxObjectBytes ceiling — a pot is a driver-memory " +
             "unit; migrate to graft.kv.BucketedPotTable or split across " +
             "more pot objects")
-      // exact entry count stamped into the artifact name (r16 — the
-      // commit-time statistic estimateStatistics().numRows reads back)
-      val stem = s"${snapTag.fold("")(_ + "-")}" +
-        s"${java.util.UUID.randomUUID()}-r${entries.size}"
-      val snap = new Path(dir, s".snap-$stem.json")
-      val out = fs.create(snap, false)
-      try {
-        out.write('{')
-        var first = true
-        entries.entrySet().asScala.foreach { e =>
-          if (!first) out.write(',')
-          first = false
-          out.write(mapper.writeValueAsString(e.getKey).getBytes(UTF_8))
-          out.write(':')
-          out.write(e.getValue.getBytes(UTF_8))
-        }
-        out.write('}')
-      } finally out.close()
-      // DELTA SIDECAR (written before the marker CAS; uuid-named with the
-      // snapshot, deleted with it on a lost race): the O(change-set)
-      // record the streaming change feed prefers over an O(pot) snapshot
-      // diff. Line format {"k":<key>,"d":<doc|null>} — d values are
-      // Jackson-rendered JSON (exactly what a snapshot reader re-renders),
-      // null = delete tombstone. Order is the feed's contract: upserts in
-      // current-snapshot layout, then tombstones in previous-snapshot
-      // layout — bit-identical rows to the fallback diff by construction.
-      val delta = new Path(dir, s".delta-$stem.jsonl")
-      val dOut = fs.create(delta, false)
-      try {
-        val sb = new StringBuilder
-        entries.entrySet().asScala.foreach { e =>
-          if (prevDelta.get(e.getKey) != e.getValue)
-            sb.append(mapper.writeValueAsString(e.getKey) match {
-              case kq => s"""{"k":$kq,"d":${e.getValue}}""" + "\n"
-            })
-        }
-        prevDelta.keySet().asScala.foreach { k =>
-          if (!entries.containsKey(k))
-            sb.append(s"""{"k":${mapper.writeValueAsString(k)},"d":null}""" + "\n")
-        }
-        dOut.write(sb.toString.getBytes(UTF_8))
-      } finally dOut.close()
-      // ZONE-MAP sidecar (u57, r18): per-commit key min/max in UNSIGNED
-      // UTF-8 byte order (the engine's one string order) — written with
-      // the snapshot, uuid-paired by stem, deleted with it on a lost
-      // race, so it is exactly as atomic as the commit it describes.
-      // planInputPartitions prunes WHOLE OBJECTS whose range excludes a
-      // pushed exact-key predicate (the parquet-footer-statistics
-      // discipline for the pot format); an absent/torn sidecar simply
-      // means no pruning, never wrong results. Empty commits write none.
-      val zmap = new Path(dir, s".zmap-$stem.json")
-      if (!entries.isEmpty) {
-        // u65 (r19): per-FIELD typed min/max + non-null counts next to
-        // the key range — the shred-predicate analogue of parquet column
-        // statistics (depth ≤ 2; 'i'/'s'/mixed-'x' tags; `fcap` marks
-        // partial stats past ZmapMaxFields so only complete sidecars let
-        // absence-of-path prune). One parse pass per entry at SNAPSHOT
-        // commit; the builder is shared with u70's ensure_stats backfill
-        // ([[PotChain.zmapJson]]) so write-side and backfill stats can
-        // never diverge.
-        val zo = PotChain.zmapJson(mapper,
-          entries.entrySet().asScala.iterator.map { e =>
-            e.getKey -> (try Some(mapper.readTree(e.getValue)) catch {
-              case scala.util.control.NonFatal(_) => None
-            })
-          })
-        val zOut = fs.create(zmap, false)
-        try zOut.write(mapper.writeValueAsString(zo).getBytes(UTF_8))
-        finally zOut.close()
-      }
-      def dropStaged(): Unit = {
-        fs.delete(snap, false); fs.delete(delta, false)
-        fs.delete(zmap, false)
-      }
+      // the snapshot, then its sidecars: the `.delta-` change record the
+      // feed prefers over an O(pot) snapshot diff, and the `.zmap-` zone
+      // map planning prunes whole objects by (u57/u65). Written before
+      // the CAS and deleted on a lost race, so each is exactly as atomic
+      // as the commit it describes; an absent or torn zone map means no
+      // pruning, never wrong results. Empty commits write no zone map.
+      val snap = PotChain.newSnap(dir, snapTag, entries.size)
+      val delta = PotChain.deltaOf(snap.toString).get
+      val zmap = PotChain.zmapOf(snap.toString).get
+      PotChain.writeObject(fs, snap, entries)
+      PotChain.writeChanges(fs, delta, PotChain.diff(prev, entries))
+      if (!entries.isEmpty)
+        PotChain.writeSidecar(fs, zmap, PotChain.zmapJson(entries))
+      def dropStaged(): Unit = Seq(snap, delta, zmap).foreach(fs.delete(_, false))
       val gen = head.map(_._1).getOrElse(0L) + 1
       try {
         graft.kv.CommitMarker.publish(
@@ -3211,6 +2394,65 @@ private[graft] class PotV2Write(
         case e: Throwable => dropStaged(); throw e
       }
     }
+
+    /** The chain head and its state (with no chain: the legacy data.json
+      * a non-truncating commit adopts), read ONCE per attempt: it pins both
+      * the merge base and the target generation (head+1), so a commit
+      * landing in between makes our publish a CommitConflict, never a
+      * silent lost update. A delta head folds its chain (covering
+      * snapshot + dgens), so a snapshot commit above a streaming epoch
+      * run COMPACTS the chain. The size ceiling is checked on the
+      * covering snapshot BEFORE the driver materializes it (the dgens
+      * above it are change-set sized), so a pot that has outgrown driver
+      * memory fails loudly with the migration path instead of OOMing.
+      *
+      * A body that vanishes mid-load (the head was superseded and
+      * vacuumed, see vacuumSnapshots) retries against the new head; after
+      * [[PotV2Write.HeadLoads]] loads the commit is a CommitConflict. */
+    @annotation.tailrec
+    def loadHead(loads: Int = 1)
+        : (Option[(Long, String)], java.util.LinkedHashMap[String, String]) = {
+      val head = PotV2Write.latestSnapshot(fs, commits)
+      expectedHeadGen.foreach { e =>
+        if (head.map(_._1).getOrElse(0L) != e)
+          throw new graft.kv.PotTable.CommitConflict(
+            s"pot object $path: head moved to generation " +
+              s"${head.map(_._1).getOrElse(0L)} while a rewrite computed " +
+              s"against generation $e was in flight — re-run the statement")
+      }
+      val state = try Some(head.fold(
+        if (!truncate && fs.exists(target)) PotChain.readState(fs, target)
+        else new java.util.LinkedHashMap[String, String]()) { case (g, body) =>
+        val snap = if (PotChain.isSnap(body)) Some(body)
+          else PotChain.chainRun(fs, commits, g)._1
+        snap.foreach { s =>
+          val len = fs.getFileStatus(new Path(s)).getLen
+          if (len > maxObjectBytes)
+            throw new PotTooLarge(
+              s"pot object $path: merge base is $len bytes, over the " +
+                s"$maxObjectBytes ceiling — a pot is a driver-memory unit; " +
+                "migrate to graft.kv.BucketedPotTable (hash-bucketed keys, " +
+                "distributed merge) or split across more pot objects " +
+                "(raise with .option(\"maxObjectBytes\", n) only if the " +
+                "driver really has the headroom)")
+        }
+        if (PotChain.isSnap(body)) PotChain.readState(fs, new Path(body))
+        else PotChain.stateAt(fs, commits, g)
+      }) catch {
+        case e: java.io.FileNotFoundException if loads >= PotV2Write.HeadLoads =>
+          throw new graft.kv.PotTable.CommitConflict(
+            s"pot object $path: the head's artifacts kept vanishing " +
+              s"mid-read ($loads loads; concurrent commits + vacuum, or a " +
+              s"chain missing an artifact: ${e.getMessage}) — re-run the " +
+              "statement")
+        case _: java.io.FileNotFoundException => None
+      }
+      state match {
+        case Some(st) => (head, st)
+        case None => loadHead(loads + 1)
+      }
+    }
+
     var committed: Option[Long] = None
     while ({ committed = attempt(); committed.isEmpty }) {}
     PotV2Write.refreshMaterialization(fs, dir, target, commits)
@@ -3245,12 +2487,10 @@ private[graft] class PotV2Write(
   private[graft] def commitDeltaEpoch(
       messages: Array[WriterCommitMessage], snapTag: String,
       staging: Path): Unit = {
-    import java.nio.charset.StandardCharsets.UTF_8
     val target = new Path(path)
     val fs = target.getFileSystem(conf)
     val dir = target.getParent
     val commits = new Path(dir, ".commits")
-    val mapper = new ObjectMapper()
 
     def tagCommitted(t: String): Boolean =
       committedTagExists(fs, commits, t)
@@ -3295,63 +2535,25 @@ private[graft] class PotV2Write(
           retryOnConflict = true, staging = staging)
         return true
       }
-      // delta epoch: two-phase per-key fold of the fragments (ALL
-      // tombstones before ANY upsert — commitEntries's discipline), then
-      // one CAS'd `.dgen-` artifact; the epoch never touches pot state
-      val frags = messages.collect { case m: PotFragmentMessage => m }
-        .sortBy(_.partitionId)
+      // delta epoch: the fragments' tombstones-first fold, kept as
+      // change lines (tombstones included), then one CAS'd `.dgen-` with
+      // its touched-key range `.dzmap-` (u69: upserts AND tombstones both
+      // count, so the planning-time chain-union prune, deltaChainAdmits,
+      // stays conservative). Both are written before the CAS: a committed
+      // generation has its sidecar or readers see absence = no pruning.
       val folded = new java.util.LinkedHashMap[String, String]()
-      val upserts = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      frags.foreach { m =>
-        val in = fs.open(new Path(m.fragment))
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).foreach { line =>
-            val n = mapper.readTree(line)
-            val dn = n.get("d")
-            if (dn == null || dn.isNull) folded.put(n.get("k").asText(), null)
-            else upserts += ((n.get("k").asText(), dn.toString))
-          }
-        finally in.close()
-      }
-      upserts.foreach { case (k, v) => folded.put(k, v) }
-      // upsert/tombstone counts stamped into the name (r16): the chain
-      // can estimate a delta head's row count without reading any data
+      PotChain.foldChanges(fs, messages)(folded.put(_, null), folded.put(_, _))
       val nDels = folded.values().asScala.count(_ == null)
-      val stem = s"$snapTag-${java.util.UUID.randomUUID()}" +
-        s"-u${folded.size - nDels}d$nDels"
-      val dgen = new Path(dir, s".dgen-$stem.jsonl")
-      val out = fs.create(dgen, false)
-      try folded.entrySet().asScala.foreach { e =>
-        val d = Option(e.getValue).getOrElse("null")
-        out.write(
-          s"""{"k":${mapper.writeValueAsString(e.getKey)},"d":$d}"""
-            .getBytes(UTF_8))
-        out.write('\n')
-      } finally out.close()
-      // u69 (r19): the epoch's TOUCHED-KEY range sidecar (.dzmap-) —
-      // upserts AND tombstones both count, so the planning-time
-      // chain-union prune (deltaChainAdmits) stays conservative.
-      // Written before the CAS: a committed generation either has its
-      // sidecar or readers see absence = no pruning.
+      val dgen = PotChain.newDgen(dir, snapTag, folded.size - nDels, nDels)
+      val dzmap = PotChain.dzmapOf(dgen.toString).get
+      PotChain.writeChanges(fs, dgen,
+        folded.entrySet().asScala.iterator.map(e => (e.getKey, e.getValue)))
       if (!folded.isEmpty) {
-        var mn: String = null
-        var mx: String = null
-        folded.keySet().asScala.foreach { k =>
-          if (mn == null || PotV2Source.utf8Cmp(k, mn) < 0) mn = k
-          if (mx == null || PotV2Source.utf8Cmp(k, mx) > 0) mx = k
-        }
-        PotChain.dzmapOf(dgen.toString).foreach { zp =>
-          val zo = mapper.createObjectNode()
-          zo.put("kmin", mn); zo.put("kmax", mx)
-          val zOut = fs.create(zp, false)
-          try zOut.write(mapper.writeValueAsString(zo).getBytes(UTF_8))
-          finally zOut.close()
-        }
+        val range = new PotChain.KeyRange
+        folded.keySet().asScala.foreach(range.see)
+        PotChain.writeSidecar(fs, dzmap, PotChain.rangeJson(range))
       }
-      def dropStaged(): Unit = {
-        fs.delete(dgen, false)
-        PotChain.dzmapOf(dgen.toString).foreach(fs.delete(_, false))
-      }
+      def dropStaged(): Unit = Seq(dgen, dzmap).foreach(fs.delete(_, false))
       val gen = gens.foldLeft(0L)(math.max) + 1
       try {
         graft.kv.CommitMarker.publish(
@@ -3369,6 +2571,19 @@ private[graft] class PotV2Write(
     // resolve a delta-headed chain by folding (PotStatePartition)
     fs.delete(staging, true)
   }
+
+  /** One streaming epoch tagged `tag`. truncateFirst
+    * (outputMode("complete") / an explicit truncate) REPLACES the pot
+    * each epoch through the snapshot path, whose retry loop merges from
+    * empty every attempt: a complete epoch IS the whole object, so a
+    * snapshot is its honest cost. APPEND epochs take the O(change-set)
+    * delta path. */
+  private[graft] def commitEpoch(messages: Array[WriterCommitMessage],
+      tag: String, staging: Path): Unit =
+    if (truncateFirst)
+      commitEntries(messages, truncate = true, snapTag = Some(tag),
+        retryOnConflict = true, staging = staging)
+    else commitDeltaEpoch(messages, tag, staging)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     commitEntries(PotV2Write.fragments(messages), truncateFirst,
@@ -3408,21 +2623,8 @@ private[graft] class PotV2StreamingWrite(write: PotV2Write)
 
   override def commit(
       epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    // truncateFirst (outputMode("complete") / an explicit truncate) must
-    // reach the streaming commit too: each epoch then REPLACES the pot
-    // instead of merge-appending — r12 hardcoded false here, so complete
-    // mode silently kept stale keys from earlier epochs. Safe under the
-    // retry loop: every attempt re-merges from scratch, and with
-    // truncate the merge base is simply empty every attempt. (A complete
-    // epoch IS the whole object, so the snapshot path is its honest
-    // cost; APPEND epochs go through the O(change-set) delta path.)
-    if (write.truncateFirst)
-      write.commitEntries(PotV2Write.fragments(messages), truncate = true,
-        snapTag = Some(tag(epochId)), retryOnConflict = true,
-        staging = write.epochStagingDir(epochId))
-    else
-      write.commitDeltaEpoch(PotV2Write.fragments(messages), tag(epochId),
-        staging = write.epochStagingDir(epochId))
+    write.commitEpoch(PotV2Write.fragments(messages), tag(epochId),
+      write.epochStagingDir(epochId))
 
   override def abort(
       epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -3432,6 +2634,26 @@ private[graft] class PotV2StreamingWrite(write: PotV2Write)
 }
 
 private[graft] object PotV2Write {
+  /** Head loads a commit attempt makes before a body that keeps
+    * vanishing (vacuumed under a moving head, or missing from the chain)
+    * ends it as a CommitConflict. */
+  val HeadLoads = 5
+
+  /** Commit (key, doc | null) pairs to `pot` as one streaming epoch
+    * tagged `tag` ([[PotV2Write.commitDeltaEpoch]]): the pairs stage as
+    * one fragment under the write's staging dir. */
+  def commitChanges(pot: String, tag: String,
+      changes: Seq[(String, String)]): Unit = {
+    val w = new PotV2Write(pot, PotV2Source.Schema, tag, truncateFirst = false)
+    val staging = new Path(w.stagingBase)
+    val fs = staging.getFileSystem(w.conf)
+    fs.mkdirs(staging)
+    val frag = new Path(staging, "f.jsonl")
+    PotChain.writeChanges(fs, frag, changes.iterator)
+    w.commitDeltaEpoch(Array(PotFragmentMessage(0, frag.toString)), tag,
+      staging)
+  }
+
   /** The tasks' [[PotFragmentWriterFactory]] messages as one pot's
     * fragments: a plain pot is the one-bucket store, all in bucket 0. */
   def fragments(messages: Array[WriterCommitMessage])
@@ -3517,13 +2739,13 @@ private[graft] object PotV2Write {
   * INSERT/overwrite, streaming epochs and row-level MERGE/UPDATE/DELETE
   * all stage through it, and the driver commits what it names.
   *
-  *   - Line format: one `{"k":<key>,"d":<doc>}` line per staged row,
-  *     `d` the Jackson rendering of `doc_json`, which must parse to a
-  *     JSON object (anything else fails the task, naming the key).
-  *   - Tombstones: a row-level delete stages `{"k":<key>,"d":null}`; an
-  *     UPDATE that reassigns `key` (`SET key = ...`) moves the document,
-  *     so it also stages a tombstone for the old key. The commits apply
-  *     every tombstone before any upsert.
+  *   - Fragments hold [[PotChain]] change lines, one per staged row;
+  *     `doc_json` must parse to a JSON object (anything else fails the
+  *     task, naming the key).
+  *   - Tombstones: a row-level delete stages one; an UPDATE that
+  *     reassigns `key` (`SET key = ...`) moves the document, so it also
+  *     stages a tombstone for the old key. The commits apply every
+  *     tombstone before any upsert ([[PotChain.foldChanges]]).
   *   - One create per fragment, at task commit: a fragment exists iff its
   *     task committed, and the driver merges only the fragments the
   *     commit messages name, so task retries and speculation never
@@ -3561,17 +2783,14 @@ private[graft] class PotFragmentWriterFactory(
         bufs.getOrElseUpdate(graft.kv.BucketMeta.bucketOf(key, nBuckets),
           new StringBuilder).append(line).append('\n')
       private def tombstone(key: String): Unit =
-        stage(key, s"""{"k":${mapper.writeValueAsString(key)},"d":null}""")
+        stage(key, PotChain.changeLine(key, null))
       override def insert(row: InternalRow): Unit = {
         val key = row.getUTF8String(keyIdx).toString
         val doc = row.getUTF8String(docIdx).toString
         val node = mapper.readTree(doc)
         require(node != null && node.isObject,
           s"doc_json for key '$key' must be a JSON object: $doc")
-        val line = mapper.createObjectNode()
-        line.put("k", key)
-        line.set("d", node)
-        stage(key, mapper.writeValueAsString(line))
+        stage(key, PotChain.changeLine(key, node.toString))
       }
       override def update(
           meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
@@ -4048,78 +3267,25 @@ private[graft] class PotV2DeltaReaderFactory(
       partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[PotDeltaPartition]
     new PartitionReader[InternalRow] {
+      // (key, doc | null): one generation's change lines, in the feed's
+      // contractual order
       private val entries: Iterator[(String, String)] = {
         val fs = new Path(p.dir).getFileSystem(conf.value.value)
         val commits = new Path(p.dir, ".commits")
-        val mapper = new ObjectMapper()
-        // O(delta) fast path: each commit writes a `.delta-<stem>.jsonl`
-        // sidecar next to its `.snap-<stem>.json` (same stem, same
-        // lifecycle) holding exactly this generation's upserts +
-        // tombstones in the feed's contractual order. Reading it costs
-        // the CHANGE SET, not two full pot snapshots; legacy chains
-        // without sidecars (or a sidecar lost to manual cleanup) fall
-        // back to the snapshot diff below — bit-identical rows either
-        // way (PotJsonSpec pins the equivalence on a truncate chain).
-        val curSnapPath = new Path(graft.kv.CommitMarker
-          .read(fs, new Path(commits, p.gen.toString)))
-        // a DELTA generation (streaming epoch) IS its own change record:
-        // its `.dgen-` lines are exactly the epoch's applied change set
-        // (upserts + tombstones) — no sidecar, no snapshot diff
-        if (PotChain.isDgen(curSnapPath.toString)) {
-          val in = fs.open(curSnapPath)
-          val lines = try scala.io.Source
-            .fromInputStream(in, "UTF-8").getLines()
-            .filter(_.nonEmpty).toVector
-          finally in.close()
-          lines.iterator.map { line =>
-            val n = mapper.readTree(line)
-            (n.get("k").asText(), n.get("d").toString)
-          }
-        } else {
-        val sidecar: Option[Iterator[(String, String)]] = {
-          val name = curSnapPath.getName
-          if (name.startsWith(".snap-") && name.endsWith(".json")) {
-            val stem = name.stripPrefix(".snap-").stripSuffix(".json")
-            val d = new Path(curSnapPath.getParent, s".delta-$stem.jsonl")
-            if (fs.exists(d)) {
-              val in = fs.open(d)
-              val lines = try scala.io.Source
-                .fromInputStream(in, "UTF-8").getLines()
-                .filter(_.nonEmpty).toVector
-              finally in.close()
-              Some(lines.iterator.map { line =>
-                val n = mapper.readTree(line)
-                (n.get("k").asText(), n.get("d").toString)
-              })
-            } else None
-          } else None
-        }
-        def snapshot(g: Long): Seq[(String, String)] =
-          if (g < 1) Seq.empty
-          else PotChain.stateAt(fs, commits, g).entrySet().asScala
-            .map(e => e.getKey -> e.getValue).toSeq
-        sidecar.getOrElse {
-          val prevSeq = snapshot(p.gen - 1)
-          val prev = prevSeq.toMap
-          val in = fs.open(curSnapPath)
-          val root = try new ObjectMapper().readTree(in) finally in.close()
-          require(root != null && root.isObject,
-            s"pot snapshot $curSnapPath: top level must be a JSON map")
-          // iterate the CURRENT snapshot in file order (deterministic: the
-          // writer's LinkedHashMap layout), keeping upserts; keys present
-          // before but absent now (a truncate-mode rewrite dropped them)
-          // follow as DELETE tombstones — doc_json = 'null', the Kafka-style
-          // null-body convention (valid JSON, never a valid pot document,
-          // so consumers distinguish it without a schema change). Tombstone
-          // order: previous snapshot's layout (deterministic).
-          val curKeys = root.fieldNames().asScala.toSet
-          val upserts = root.fields().asScala
-            .map(e => (e.getKey, e.getValue.toString))
-            .filter { case (k, v) => !prev.get(k).contains(v) }
-          val tombstones = prevSeq.iterator
-            .collect { case (k, _) if !curKeys(k) => (k, "null") }
-          upserts ++ tombstones
-        }
+        val body = PotChain.artifactOf(fs, commits, p.gen)
+        // a DELTA generation (streaming epoch) IS its own change record;
+        // a snapshot's `.delta-` sidecar (same stem, same lifecycle) holds
+        // its change lines at O(change-set) cost. A legacy chain without
+        // sidecars (or a sidecar lost to manual cleanup) falls back to
+        // diffing the snapshot against the previous generation's state
+        // through the same PotChain.diff the sidecar writer runs.
+        if (PotChain.isDgen(body)) PotChain.readChanges(fs, new Path(body)).iterator
+        else PotChain.deltaOf(body).filter(fs.exists) match {
+          case Some(d) => PotChain.readChanges(fs, d).iterator
+          case None => PotChain.diff(
+            if (p.gen < 2) new java.util.LinkedHashMap[String, String]()
+            else PotChain.stateAt(fs, commits, p.gen - 1),
+            PotChain.readState(fs, new Path(body)))
         }
       }
       private val file = s"${p.dir}/data.json@${p.gen}"
@@ -4130,7 +3296,9 @@ private[graft] class PotV2DeltaReaderFactory(
         row = InternalRow.fromSeq(columns.toSeq.map {
           case "pot_file" => UTF8String.fromString(file)
           case "key"      => UTF8String.fromString(k)
-          case "doc_json" => UTF8String.fromString(doc)
+          // a tombstone reads as doc_json 'null' — the Kafka-style
+          // null-body convention (valid JSON, never a valid pot document)
+          case "doc_json" => UTF8String.fromString(if (doc == null) "null" else doc)
           case other => throw new IllegalArgumentException(
             s"PotV2Source stream: unknown column $other")
         })

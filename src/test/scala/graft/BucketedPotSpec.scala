@@ -13,12 +13,23 @@ class BucketedPotSpec extends AnyFunSuite {
   test("BucketMeta.bucketOf equals the pmod(xxhash64(key), n) column writers route by") {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val keys = Seq("k1", "k7", "", "naïve-ключ-鍵", "emoji-\uD83D\uDE42")
+    // the SQL `bucket(n, key)` function resolves through the catalog
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.catalog.graft_fns",
+      classOf[graft.sources.GraftFunctionCatalog].getName)
     Seq(1, 4, 8, 16).foreach { n =>
       val byColumn = keys.toDF("key")
         .select(col("key"), pmod(xxhash64(col("key")), lit(n.toLong)).cast("int"))
         .as[(String, Int)].collect().toMap
-      keys.foreach(k =>
-        assert(BucketMeta.bucketOf(k, n) === byColumn(k), s"key '$k', n = $n"))
+      val bySql = ss.createDataFrame(keys.map(Tuple1(_))).toDF("key")
+        .selectExpr("key", s"graft_fns.ops.bucket($n, key)")
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      keys.foreach { k =>
+        assert(BucketMeta.bucketOf(k, n) === byColumn(k), s"key '$k', n = $n")
+        assert(bySql(k) === byColumn(k), s"SQL bucket: key '$k', n = $n")
+      }
+      assert(ss.sql(s"SELECT graft_fns.ops.bucket($n, CAST(NULL AS STRING))")
+        .collect().head.isNullAt(0), s"SQL bucket of a null key, n = $n")
     }
   }
 

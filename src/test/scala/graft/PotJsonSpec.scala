@@ -11,6 +11,19 @@ class PotJsonSpec extends AnyFunSuite {
   /** A bucketed store's FileSystem, as its statements take it. */
   private def storeFs(root: String) = graft.sources.BucketedPotV2Source.fsOf(root)
 
+  /** Age an open statement past its lease: re-publish its intent with
+    * the publish stamp `ts` at the epoch. */
+  private def ageIntent(root: String, qid: String): Unit = {
+    val fs = storeFs(root)
+    val open = new org.apache.hadoop.fs.Path(root, s"_stmts/open/$qid")
+    val intent = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(graft.kv.CommitMarker.read(fs, open))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    intent.put("ts", 0L)
+    fs.delete(open, false)
+    graft.kv.CommitMarker.publish(fs, open, intent.toString)
+  }
+
   import TestSpark._
 
   private def writePot(dir: java.nio.file.Path, name: String, json: String): Unit = {
@@ -2442,18 +2455,14 @@ class PotJsonSpec extends AnyFunSuite {
     assert(readKeys() === Set("seed"))
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(root, "_stmts/open/agedq")))
-    // lease expired (threshold 0): the NEXT ordinary read rolls the
-    // statement forward at planning — no explicit recoverStatements call
-    val prev = sys.props.put("graft.stmt.recoverAfterMs", "0")
-    try {
-      assert(readKeys() === Set("seed") ++ keys,
-        "aged crashed statement did not auto-recover at read planning")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, "_stmts/open/agedq")))
-    } finally prev match {
-      case Some(v) => sys.props.put("graft.stmt.recoverAfterMs", v)
-      case None => sys.props.remove("graft.stmt.recoverAfterMs")
-    }
+    // lease expired (the intent's stamp aged past it): the NEXT ordinary
+    // read rolls the statement forward at planning — no explicit
+    // recoverStatements call
+    ageIntent(root, "agedq")
+    assert(readKeys() === Set("seed") ++ keys,
+      "aged crashed statement did not auto-recover at read planning")
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(root, "_stmts/open/agedq")))
   }
 
   test("BucketedPotV2 AGED statement auto-recovery (r16): the next WRITE on the store rolls a crashed predecessor forward") {
@@ -2483,22 +2492,17 @@ class PotJsonSpec extends AnyFunSuite {
         "insert", "agedw", truncate = false, Long.MaxValue,
         byBucket.keys.toSeq.sorted,
         byBucket.keys.map(b => b -> base.getOrElse(b, 0L)).toMap, frags))
-    val prev = sys.props.put("graft.stmt.recoverAfterMs", "0")
-    try {
-      // an ordinary multi-bucket INSERT: its begin() meets the aged
-      // barrier and rolls it forward before publishing its own intent
-      Seq(("", "w-new-1", """{"v": 2}"""), ("", "w-new-2", """{"v": 2}"""))
-        .toDF("pot_file", "key", "doc_json")
-        .write.format(fmt).option("path", root).option("buckets", "4")
-        .mode("append").save()
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, "_stmts/open/agedw")),
-        "write path did not recover the aged crashed statement")
-      assert(readKeys() === Set("seed", "w-new-1", "w-new-2") ++ keys)
-    } finally prev match {
-      case Some(v) => sys.props.put("graft.stmt.recoverAfterMs", v)
-      case None => sys.props.remove("graft.stmt.recoverAfterMs")
-    }
+    ageIntent(root, "agedw")
+    // an ordinary multi-bucket INSERT: its begin() meets the aged
+    // barrier and rolls it forward before publishing its own intent
+    Seq(("", "w-new-1", """{"v": 2}"""), ("", "w-new-2", """{"v": 2}"""))
+      .toDF("pot_file", "key", "doc_json")
+      .write.format(fmt).option("path", root).option("buckets", "4")
+      .mode("append").save()
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(root, "_stmts/open/agedw")),
+      "write path did not recover the aged crashed statement")
+    assert(readKeys() === Set("seed", "w-new-1", "w-new-2") ++ keys)
   }
 
   test("BucketedPotV2 statement base vector (r16/ADVICE): a commit landing between head read and intent CAS stays reader-visible") {
@@ -3115,5 +3119,151 @@ class PotJsonSpec extends AnyFunSuite {
     assert(lrows.map(r => (r.getString(0), r.isNullAt(1))).toSeq
       === Seq("x" -> true))
     spark.sql(s"DROP TABLE $tbl")
+  }
+
+  test("PotV2 chain artifacts are byte-stable: overwrite, two delta epochs, SQL DELETE, an epoch, compactPot") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("potv2golden").toString
+    val pot = s"$root/t/data.json"
+    val fmt = classOf[graft.sources.PotV2Source].getName
+    val dirP = new org.apache.hadoop.fs.Path(s"$root/t")
+    val fs = dirP.getFileSystem(spark.sessionState.newHadoopConf())
+    Seq(("a", """{"v": 1, "s": "x"}"""), ("b", """{"v": 2}"""),
+        ("c", """{"n": {"m": 3, "t": "u"}}"""), ("é", """{"v": 5, "s": "y"}"""))
+      .map { case (k, d) => ("", k, d) }.toDF("pot_file", "key", "doc_json")
+      .write.format(fmt).option("path", pot).mode("overwrite").save()
+    // a streaming epoch staged by hand, its lines spaced as a person
+    // would write them (the dgen re-renders every doc)
+    def epoch(tag: String, lines: Seq[String]): Unit = {
+      val staging = new org.apache.hadoop.fs.Path(dirP, s".stage-$tag")
+      fs.mkdirs(staging)
+      val f = new org.apache.hadoop.fs.Path(staging, "f.jsonl")
+      val out = fs.create(f, false)
+      try out.write(lines.mkString("", "\n", "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      new graft.sources.PotV2Write(pot, graft.sources.PotV2Source.Schema,
+        tag, truncateFirst = false).commitDeltaEpoch(
+        Array(graft.sources.PotFragmentMessage(0, f.toString)), tag, staging)
+    }
+    epoch("ge1", Seq("""{"k": "d", "d": {"v": 4}}""",
+      """{"k": "a", "d": {"v": 10}}"""))
+    epoch("ge2", Seq("""{"k": "e", "d": {"v": 6, "s": "z"}}""",
+      """{"k": "b", "d": null}"""))
+    val tbl = "graft_spec_golden"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"CREATE TABLE $tbl (pot_file STRING, key STRING, " +
+      s"doc_json STRING) USING $fmt OPTIONS (path '$pot')")
+    spark.sql(s"DELETE FROM $tbl WHERE key = 'c'")
+    spark.sql(s"DROP TABLE $tbl")
+    // a delta head again, so compaction has a chain to fold
+    epoch("ge3", Seq("""{"k": "f", "d": {"v": 7}}""", """{"k": "d", "d": null}"""))
+    assert(graft.sources.PotV2Source.compactPot(fs, pot) === Some(6L))
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    def norm(name: String) = name.replaceAll(uuid, "U")
+    def bytes(p: org.apache.hadoop.fs.Path): String = {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
+    }
+    // every generation's body and the sidecars its stem names (derived
+    // here by hand, independent of the engine's own name functions)
+    val commits = new org.apache.hadoop.fs.Path(dirP, ".commits")
+    val artifacts = (1L to 6L).flatMap { g =>
+      val n = new org.apache.hadoop.fs.Path(graft.kv.CommitMarker.read(
+        fs, new org.apache.hadoop.fs.Path(commits, g.toString))).getName
+      val sidecars =
+        if (n.startsWith(".snap-")) Seq(
+          n.replaceFirst("^\\.snap-", ".delta-").replaceFirst("\\.json$", ".jsonl"),
+          n.replaceFirst("^\\.snap-", ".zmap-"))
+        else Seq(n.replaceFirst("^\\.dgen-", ".dzmap-")
+          .replaceFirst("\\.jsonl$", ".json"))
+      (n +: sidecars).map { a =>
+        s"$g ${norm(a)} ${bytes(new org.apache.hadoop.fs.Path(dirP, a))}"
+      }
+    }
+    val e = "é"
+    assert(artifacts === Seq(
+      s"""1 .snap-U-r4.json {"a":{"v":1,"s":"x"},"b":{"v":2},"c":{"n":{"m":3,"t":"u"}},"$e":{"v":5,"s":"y"}}""",
+      s"""1 .delta-U-r4.jsonl {"k":"a","d":{"v":1,"s":"x"}}""" + "\n" +
+        """{"k":"b","d":{"v":2}}""" + "\n" +
+        """{"k":"c","d":{"n":{"m":3,"t":"u"}}}""" + "\n" +
+        s"""{"k":"$e","d":{"v":5,"s":"y"}}""" + "\n",
+      s"""1 .zmap-U-r4.json {"kmin":"a","kmax":"$e","fcap":false,"fields":{"v":{"t":"i","n":3,"lmin":1,"lmax":5},"s":{"t":"s","n":2,"smin":"x","smax":"y"},"n":{"t":"x","n":1},"n.m":{"t":"i","n":1,"lmin":3,"lmax":3},"n.t":{"t":"s","n":1,"smin":"u","smax":"u"}}}""",
+      """2 .dgen-ge1-U-u2d0.jsonl {"k":"d","d":{"v":4}}""" + "\n" +
+        """{"k":"a","d":{"v":10}}""" + "\n",
+      """2 .dzmap-ge1-U-u2d0.json {"kmin":"a","kmax":"d"}""",
+      """3 .dgen-ge2-U-u1d1.jsonl {"k":"b","d":null}""" + "\n" +
+        """{"k":"e","d":{"v":6,"s":"z"}}""" + "\n",
+      """3 .dzmap-ge2-U-u1d1.json {"kmin":"b","kmax":"e"}""",
+      s"""4 .snap-U-r4.json {"a":{"v":10},"d":{"v":4},"e":{"v":6,"s":"z"},"$e":{"v":5,"s":"y"}}""",
+      """4 .delta-U-r4.jsonl {"k":"c","d":null}""" + "\n",
+      s"""4 .zmap-U-r4.json {"kmin":"a","kmax":"$e","fcap":false,"fields":{"v":{"t":"i","n":4,"lmin":4,"lmax":10},"s":{"t":"s","n":2,"smin":"y","smax":"z"}}}""",
+      """5 .dgen-ge3-U-u1d1.jsonl {"k":"d","d":null}""" + "\n" +
+        """{"k":"f","d":{"v":7}}""" + "\n",
+      """5 .dzmap-ge3-U-u1d1.json {"kmin":"d","kmax":"f"}""",
+      s"""6 .snap-U-r4.json {"a":{"v":10},"e":{"v":6,"s":"z"},"$e":{"v":5,"s":"y"},"f":{"v":7}}""",
+      "6 .delta-U-r4.jsonl ",
+      s"""6 .zmap-U-r4.json {"kmin":"a","kmax":"$e","fcap":false,"fields":{"v":{"t":"i","n":4,"lmin":5,"lmax":10},"s":{"t":"s","n":2,"smin":"y","smax":"z"}}}"""))
+    // no other artifact, and data.json is the last snapshot's copy
+    assert(fs.listStatus(dirP).map(_.getPath.getName)
+      .filterNot(n => n.endsWith(".crc") || n == ".commits").map(norm)
+      .sorted.toSeq === artifacts.map(_.split(" ")(1)).sorted :+ "data.json")
+    assert(bytes(new org.apache.hadoop.fs.Path(pot)) ===
+      s"""{"a":{"v":10},"e":{"v":6,"s":"z"},"$e":{"v":5,"s":"y"},"f":{"v":7}}""")
+  }
+
+  /** The exceptions of `t`'s cause chain, `t` first. */
+  private def causes(t: Throwable): Seq[Throwable] =
+    Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
+
+  test("PotV2 batch append over a vacuumed head snapshot is a clean conflict, not a raw FileNotFound") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("potv2appfnf").toString
+    val pot = s"$root/t/data.json"
+    val fmt = classOf[graft.sources.PotV2Source].getName
+    def put(k: String, mode: String): Unit =
+      Seq(("", k, """{"v": 1}""")).toDF("pot_file", "key", "doc_json")
+        .write.format(fmt).option("path", pot).mode(mode).save()
+    put("a", "overwrite")
+    // the head marker stands but its body is gone: the head load (its
+    // size-ceiling stat first) must end in the re-run contract
+    val dirP = new org.apache.hadoop.fs.Path(s"$root/t")
+    val fs = dirP.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.listStatus(dirP).map(_.getPath)
+      .filter(_.getName.startsWith(".snap-")).foreach(fs.delete(_, false))
+    val e = intercept[Exception] { put("b", "append") }
+    assert(causes(e).exists(_.isInstanceOf[graft.kv.PotTable.CommitConflict]),
+      s"expected CommitConflict, got: $e")
+    assert(!causes(e).exists(_.isInstanceOf[java.io.FileNotFoundException]),
+      "raw FileNotFoundException leaked out of a batch append")
+  }
+
+  test("PotV2 batch append over a delta head missing a dgen ends in a conflict, never a retry loop") {
+    import org.scalatest.concurrent.TimeLimits._
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: org.scalatest.concurrent.Signaler =
+      org.scalatest.concurrent.ThreadSignaler
+    val root = java.nio.file.Files.createTempDirectory("potv2dgenfnf").toString
+    val pot = s"$root/t/data.json"
+    val fmt = classOf[graft.sources.PotV2Source].getName
+    def put(k: String, mode: String): Unit =
+      spark.createDataFrame(Seq(("", k, """{"v": 1}""")))
+        .toDF("pot_file", "key", "doc_json")
+        .write.format(fmt).option("path", pot).mode(mode).save()
+    put("a", "overwrite")
+    graft.sources.PotV2Write.commitChanges(pot, "e1", Seq("b" -> """{"v": 2}"""))
+    // check_pot's missing_artifact shape: the delta head's dgen is gone
+    val dirP = new org.apache.hadoop.fs.Path(s"$root/t")
+    val fs = dirP.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.listStatus(dirP).map(_.getPath)
+      .filter(_.getName.startsWith(".dgen-")).foreach(fs.delete(_, false))
+    val e = failAfter(60.seconds) {
+      intercept[Exception] { put("c", "append") }
+    }
+    assert(causes(e).exists(_.isInstanceOf[graft.kv.PotTable.CommitConflict]),
+      s"expected CommitConflict, got: $e")
+    assert(!causes(e).exists(_.isInstanceOf[java.io.FileNotFoundException]),
+      "raw FileNotFoundException leaked out of a batch append")
   }
 }
